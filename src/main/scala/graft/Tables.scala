@@ -2,6 +2,10 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeSet, Expression, SubqueryExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{col, unix_micros, unix_timestamp}
 import org.apache.spark.sql.types.StructType
 
@@ -19,9 +23,13 @@ final case class TableMeta(name: String, location: String,
   * (`glue_rds_to_redshift.py:28,32,37`) rather than declaring schemas in
   * code; this object is the Spark-native analogue — name ->
   * (schema, location, bookmark key). Schemas are schema-on-read from
-  * parquet footers, resolved once per (sfDir, table) and cached (at
-  * cluster scale this is the metastore lookup that saves re-listing a
-  * 100 TB directory per query). All reads go through here so that column
+  * parquet footers, resolved once per (sfDir, table) and cached for the
+  * life of the JVM; every [[load]] reads through the cached schema, so
+  * only the first load of a location runs the footer-reading Spark job
+  * (at cluster scale this is the metastore lookup that saves re-reading
+  * a 100 TB directory's footers per query). A location therefore keeps
+  * ONE schema: rewriting a table in place with different columns needs
+  * a new location. All reads go through here so that column
   * pruning / predicate pushdown stay visible in one place, and so
   * incremental readers resolve bookmark keys from the catalog instead of
   * hard-coding them at call sites.
@@ -50,17 +58,20 @@ object Tables {
       throw new IllegalArgumentException(
         s"table '$name' has no bookmark key in the catalog"))
 
-  private def location(name: String): String =
-    meta.get(name).map(_.location).getOrElse(s"$name.parquet")
+  private def path(sfDir: String, name: String): String =
+    s"$sfDir/${meta.get(name).map(_.location).getOrElse(s"$name.parquet")}"
 
+  /** Scan of `name` under `sfDir` with the cached catalog schema: no
+    * footer read, hence no Spark job, after the location's first load.
+    */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/${location(name)}")
+    spark.read.schema(schema(spark, sfDir, name)).parquet(path(sfDir, name))
 
   private val schemaCache = new ConcurrentHashMap[(String, String), StructType]()
 
   /** Footer-resolved schema, cached per (sfDir, table). */
   def schema(spark: SparkSession, sfDir: String, name: String): StructType =
-    schemaCache.computeIfAbsent((sfDir, name), _ => load(spark, sfDir, name).schema)
+    schemaCache.computeIfAbsent((sfDir, name), _ => spark.read.parquet(path(sfDir, name)).schema)
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "orders")
@@ -85,21 +96,69 @@ object Tables {
     * its shared cache through one real task for ~1.8 s of a ~3.8 s
     * query).
     *
-    * Hash-repartitions on `key` ONLY when the plan's scan parallelism is
-    * below the session's: a production-scale input already split into
-    * >= cores partitions is returned untouched, so this never adds a
+    * Hash-repartitions on `key` ONLY when the scan's split count is below
+    * the session's parallelism: a production-scale input already split
+    * into >= cores partitions is returned untouched, so this never adds a
     * data-sized shuffle where the scan parallelizes by itself — the
     * guard is plan-derived (split count), never a row count or a box
-    * constant. HASH placement on a stable key, not round-robin:
+    * constant. The split count comes from [[scanPartitions]], i.e. from
+    * the scan's already-listed files, never from `df.rdd`: deciding plans
+    * nothing and starts no job (under AQE `df.rdd` would also run any
+    * upstream exchange). An input that is not a single file scan under
+    * filters and projections is returned unchanged. HASH placement on a
+    * stable key, not round-robin:
     * deterministic under task retries (guide §2.5's SPARK-38388 note)
     * and free of round-robin's local sort-before-repartition, which
     * would itself run inside the one hot task this helper exists to
     * relieve.
     */
   def spread(df: DataFrame, key: Column): DataFrame = {
-    val spark = df.sparkSession
-    val par = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par, key) else df
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    if (scanPartitions(df).exists(_ < par)) df.repartition(par, key) else df
+  }
+
+  /** Input partitions the physical scan of `df` will have, computed the
+    * way `FileSourceScanExec` splits a non-bucketed file scan — Spark's
+    * own `FilePartition.maxSplitBytes` / `getFilePartitions` over the
+    * relation's listed files, with partition filters of the scan applied
+    * as the planner would — so it equals `df.rdd.getNumPartitions`
+    * without building a physical plan. None when `df` is not exactly one
+    * file scan under filters and projections (joins, aggregates, unions,
+    * limits, local or bucketed relations).
+    */
+  private[graft] def scanPartitions(df: DataFrame): Option[Int] = {
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    def scan(p: LogicalPlan, filters: Seq[Expression])
+        : Option[(LogicalRelation, HadoopFsRelation, Seq[Expression])] = p match {
+      case f: Filter => scan(f.child, filters ++ conjuncts(f.condition))
+      case pr: Project => scan(pr.child, filters)
+      case a: SubqueryAlias => scan(a.child, filters)
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation if fs.bucketSpec.isEmpty => Some((l, fs, filters))
+        case _ => None
+      }
+      case _ => None
+    }
+    scan(df.queryExecution.analyzed, Nil).map { case (l, fs, filters) =>
+      val spark = fs.sparkSession
+      val partCols = AttributeSet(l.resolve(fs.partitionSchema, spark.sessionState.analyzer.resolver))
+      val pushable = filters.filter(f => f.deterministic && !SubqueryExpression.hasSubquery(f))
+      val (partFilters, dataFilters) =
+        pushable.partition(f => f.references.nonEmpty && f.references.subsetOf(partCols))
+      val selected = fs.location.listFiles(partFilters, dataFilters)
+      val maxSplit = FilePartition.maxSplitBytes(spark, selected)
+      val splits = selected.flatMap { dir =>
+        dir.files.flatMap { file =>
+          val p = file.getPath
+          PartitionedFileUtil.splitFiles(file, p,
+            fs.fileFormat.isSplitable(spark, fs.options, p), maxSplit, dir.values)
+        }
+      }.sortBy(_.length)(Ordering[Long].reverse)
+      FilePartition.getFilePartitions(spark, splits, maxSplit).size
+    }
   }
 
   /** Epoch-second event time from `events.ts` — the ONE place the engine

@@ -26,27 +26,39 @@ object ParallelReports {
   final case class ReportSpec(name: String, pool: String,
                               build: DataFrame => DataFrame)
 
+  /** One driver-thread branch of [[fanOut]]: `work` runs with its Spark
+    * jobs in FAIR pool `pool` (None: the default pool).
+    */
+  final case class Branch[+T](name: String, pool: Option[String], work: () => T)
+
   /** Run every report over `shared` concurrently; returns (name, result)
     * pairs in spec order. `action` is what "running" means (default: the
     * terminal action the caller wants, e.g. write or collect-to-rows);
     * it executes on the report's dedicated driver thread inside its pool.
     */
   def run[T](spark: SparkSession, shared: DataFrame, specs: Seq[ReportSpec])
-            (action: DataFrame => T): Seq[(String, T)] = {
-    val executor = Executors.newFixedThreadPool(math.max(specs.size, 1))
+            (action: DataFrame => T): Seq[(String, T)] =
+    fanOut(spark, specs.map(spec =>
+      Branch(spec.name, Some(spec.pool), () => spec.name -> action(spec.build(shared)))))
+
+  /** Run every branch on its own driver thread; returns their results in
+    * branch order. All branches share one cancellable job group: when any
+    * branch fails, the group's running AND not-yet-submitted jobs are
+    * cancelled and every sibling is awaited before the first failure is
+    * rethrown, so no branch's job outlives the call — none can race the
+    * caller's cleanup (e.g. an unpersist in the caller's finally).
+    */
+  def fanOut[T](spark: SparkSession, branches: Seq[Branch[T]]): Seq[T] = {
+    val executor = Executors.newFixedThreadPool(math.max(branches.size, 1))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(executor)
     val sc = spark.sparkContext
-    // one cancellable job group spans the whole fan-out: when any report
-    // fails, the siblings' in-flight Spark jobs are cancelled before run()
-    // rethrows, so they can't race the caller's cleanup (e.g. an unpersist
-    // in the caller's finally)
     val groupId = "graft-reports-" + java.util.UUID.randomUUID()
     try {
-      val futures = specs.map { spec =>
+      val futures = branches.map { b =>
         Future {
-          sc.setLocalProperty("spark.scheduler.pool", spec.pool)
-          sc.setJobGroup(groupId, s"graft report ${spec.name}", interruptOnCancel = true)
-          try spec.name -> action(spec.build(shared))
+          sc.setLocalProperty("spark.scheduler.pool", b.pool.orNull)
+          sc.setJobGroup(groupId, s"graft report ${b.name}", interruptOnCancel = true)
+          try b.work()
           finally {
             sc.clearJobGroup()
             sc.setLocalProperty("spark.scheduler.pool", null)
@@ -56,8 +68,8 @@ object ParallelReports {
       try Await.result(Future.sequence(futures), Duration.Inf)
       catch {
         case t: Throwable =>
-          sc.cancelJobGroup(groupId)
-          executor.shutdownNow()
+          sc.cancelJobGroupAndFutureJobs(groupId)
+          futures.foreach(Await.ready(_, Duration.Inf))
           throw t
       }
     } finally executor.shutdown()

@@ -186,15 +186,18 @@ final class IncrementalReader(spark: SparkSession, sfDir: String, store: Bookmar
     }
   }
 
-  /** Max key actually present in a (filtered) frame — the value to commit.
-    * Columnar max over the delta only; at scale this folds to parquet
-    * footer stats after pushdown.
+  /** Max key actually present in a (filtered) frame — the value to commit;
+    * the max-only view of [[stats]].
     */
-  def maxKey(df: DataFrame, keyCol: String): Option[Long] =
-    df.agg(max(col(keyCol)).cast("long")).collect()(0) match {
-      case r if r.isNullAt(0) => None
-      case r => Some(r.getLong(0))
-    }
+  def maxKey(df: DataFrame, keyCol: String): Option[Long] = stats(df, keyCol).maxKey
+
+  /** Row count and max key of a (filtered) frame in ONE aggregate pass —
+    * the bookmark stats of a run: what it read and what it may commit.
+    */
+  def stats(df: DataFrame, keyCol: String): IncrementalReader.DeltaStats = {
+    val r = df.agg(count(lit(1)), max(col(keyCol)).cast("long")).collect()(0)
+    IncrementalReader.DeltaStats(r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))
+  }
 
   /** One full incremental run with the catalog-resolved bookmark key. */
   def runIncremental(table: String, ctx: String)(sink: DataFrame => Unit): Unit =
@@ -209,4 +212,11 @@ final class IncrementalReader(spark: SparkSession, sfDir: String, store: Bookmar
     sink(delta)
     maxKey(delta, keyCol).foreach(store.commit(table, ctx, _))
   }
+}
+
+object IncrementalReader {
+  /** What one pass over a delta saw: its row count and its max key (None
+    * when the delta is empty).
+    */
+  final case class DeltaStats(rows: Long, maxKey: Option[Long])
 }

@@ -25,9 +25,13 @@ private[graft] object SweepFanout {
       // pool capped at the session's parallelism (r17 verdict #4): a
       // sweep grid wider than the core count gains nothing from more
       // in-flight jobs than cores — excess settings queue and overlap in
-      // waves. `active` is the session the settings' jobs run on.
-      val cap = math.min(items.size,
-        org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism)
+      // waves. The session is the one the settings' jobs run on; a
+      // caller thread with no active or default session gets one thread
+      // per item instead of an exception.
+      import org.apache.spark.sql.SparkSession
+      val cap = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+        .map(s => math.min(items.size, s.sparkContext.defaultParallelism))
+        .getOrElse(items.size)
       val executor =
         java.util.concurrent.Executors.newFixedThreadPool(cap.max(1))
       implicit val ec: scala.concurrent.ExecutionContext =

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.operators.Fleet
 import graft.sources.{InvertedIndex, IvfIndex, IvfPqIndex, LshBandIndex, PqIndex}
@@ -205,6 +206,21 @@ class FleetSpec extends SparkSuite {
     graft.sources.SweepFanout.foreach(1 to par + 2)(_ => { act(); () })
     assert(maxSeen.get >= 1 && maxSeen.get <= par,
       s"sweep fan-out ran ${maxSeen.get} settings concurrently on a $par-core session")
+  }
+
+  test("SweepFanout runs every item from a thread with no active or default session") {
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    var failure: Option[Throwable] = None
+    val caller = new Thread(() =>
+      try {
+        org.apache.spark.sql.SparkSession.clearActiveSession()
+        graft.sources.SweepFanout.foreach(1 to 3)(i => { ran.add(i); () })
+      } catch { case t: Throwable => failure = Some(t) })
+    org.apache.spark.sql.SparkSession.clearDefaultSession()
+    try { caller.start(); caller.join() }
+    finally org.apache.spark.sql.SparkSession.setDefaultSession(spark)
+    assert(failure.isEmpty, s"sessionless sweep threw $failure")
+    assert(ran.asScala.toSeq.sorted == Seq(1, 2, 3))
   }
 
   test("inverted/lsh fragment arithmetic matches the generational layout") {

@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.CountDownLatch
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 import graft.operators.{ParallelReports, StarPipeline}
 
 /** Parallelism semantics (SURVEY.md §2 S11, §5 item 3): concurrent ≡
@@ -45,6 +49,28 @@ class ParallelReportsSpec extends SparkSuite {
       ParallelReports.run(spark, shared,
         Seq(ParallelReports.ReportSpec("boom", "1",
           _ => throw new RuntimeException("report failed"))))(_.count())
+    }
+  }
+
+  test("a failing branch cancels its siblings' jobs and awaits them before rethrowing") {
+    val sc = spark.sparkContext
+    val siblingStarted = new CountDownLatch(1)
+    intercept[RuntimeException] {
+      ParallelReports.fanOut(spark, Seq(
+        ParallelReports.Branch("slow", Some("1"), () => {
+          siblingStarted.countDown()
+          sc.parallelize(1 to 4, 4).map { i => Thread.sleep(30000); i }.count()
+        }),
+        ParallelReports.Branch("boom", Some("2"), () => {
+          siblingStarted.await()
+          throw new RuntimeException("branch failed")
+        })))
+    }
+    // the slow sibling's tasks would run 30 s: an empty job list right
+    // after the rethrow means its job was cancelled, not left running
+    eventually(timeout(1.second)) {
+      ListenerBusDrain(sc)
+      assert(sc.statusTracker.getActiveJobIds.isEmpty)
     }
   }
 }
