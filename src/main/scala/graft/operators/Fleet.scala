@@ -118,55 +118,18 @@ object Fleet {
     // Due actions OVERLAP (r16 verdict #4): each store's maintenance is
     // a chain of small Spark jobs (drift pass, ground-truth scan, one
     // probe per swept setting) whose stage tails leave most of the
-    // session idle — running them serially on the driver thread
-    // serialized exactly the shape the engine's own FAIR fan-out (S11)
-    // exists for. Each due store gets its own driver thread pinned to
-    // its own FAIR pool (pool = store name under "fleet-", thread-local
-    // property, reset in finally — the ParallelReports discipline), so
-    // one store's stragglers back-fill with the next store's stages.
-    // Failures propagate after cancelling the siblings' in-flight jobs.
+    // session idle, so the due stores run through the engine's own FAIR
+    // fan-out (S11) — each on a driver thread pinned to FAIR pool
+    // "fleet-<store name>", so one store's stragglers back-fill with the
+    // next store's stages. The pool is capped at the driver's cores and
+    // a failure cancels and awaits the siblings ([[ParallelReports.fanOut]]).
     val due = entries.zipWithIndex.zip(befores).collect {
       case ((e, i), b) if b.due => (i, e)
     }
-    val served: Map[Int, MaintainedStore] =
-      if (due.isEmpty) Map.empty
-      else {
-        // pool capped at the session's parallelism (r17 verdict #4): a
-        // fleet-scale walk with hundreds of due stores must not spawn one
-        // driver thread + one concurrent job group per store — more
-        // in-flight jobs than cores only adds scheduler contention, the
-        // overlap benefit saturates at the core count. Excess due stores
-        // queue on the bounded pool and still overlap in waves.
-        val executor = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(due.size, spark.sparkContext.defaultParallelism).max(1))
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutor(executor)
-        val sc = spark.sparkContext
-        val groupId = "graft-fleet-" + java.util.UUID.randomUUID()
-        try {
-          val futures = due.map { case (i, e) =>
-            scala.concurrent.Future {
-              sc.setLocalProperty("spark.scheduler.pool", s"fleet-${e.name}")
-              sc.setJobGroup(groupId, s"fleet maintain ${e.name}",
-                interruptOnCancel = true)
-              try i -> e.act()
-              finally {
-                sc.clearJobGroup()
-                sc.setLocalProperty("spark.scheduler.pool", null)
-              }
-            }
-          }
-          try scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(futures),
-            scala.concurrent.duration.Duration.Inf).toMap
-          catch {
-            case t: Throwable =>
-              sc.cancelJobGroup(groupId)
-              executor.shutdownNow()
-              throw t
-          }
-        } finally executor.shutdown()
-      }
+    val served: Map[Int, MaintainedStore] = ParallelReports.fanOut(spark,
+      due.map { case (i, e) =>
+        ParallelReports.Branch(e.name, Some(s"fleet-${e.name}"), () => i -> e.act())
+      }).toMap
     entries.zipWithIndex.zip(befores).map { case ((e, i), before) =>
       val serving = served.getOrElse(i, e.store)
       val after = signals(serving, maxLag, maxFragments)

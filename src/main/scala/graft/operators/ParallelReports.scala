@@ -41,15 +41,31 @@ object ParallelReports {
     fanOut(spark, specs.map(spec =>
       Branch(spec.name, Some(spec.pool), () => spec.name -> action(spec.build(shared)))))
 
-  /** Run every branch on its own driver thread; returns their results in
+  /** Driver threads [[fanOut]] may use however few cores the JVM reports. */
+  private val MinDriverThreads = 8
+
+  /** Run every branch on a driver thread; returns their results in
     * branch order. All branches share one cancellable job group: when any
     * branch fails, the group's running AND not-yet-submitted jobs are
     * cancelled and every sibling is awaited before the first failure is
     * rethrown, so no branch's job outlives the call — none can race the
     * caller's cleanup (e.g. an unpersist in the caller's finally).
+    *
+    * The pool holds min(branches, session parallelism,
+    * max(driver cores, [[MinDriverThreads]])) threads: more in-flight jobs
+    * than cores only adds scheduler contention, and the threads and job
+    * groups are a DRIVER-side cost — a cluster's `defaultParallelism` (all
+    * executor cores, often hundreds) bounds nothing there. The floor keeps
+    * a small fan-out whole: a branch thread blocks on its jobs rather than
+    * computing, and a JVM under a container CPU quota reports fewer cores
+    * than the session runs (1 or 2), which would otherwise queue the star
+    * job's stats pass behind a report. Excess branches queue and run in
+    * waves.
     */
   def fanOut[T](spark: SparkSession, branches: Seq[Branch[T]]): Seq[T] = {
-    val executor = Executors.newFixedThreadPool(math.max(branches.size, 1))
+    val threads = Seq(branches.size, spark.sparkContext.defaultParallelism,
+      math.max(Runtime.getRuntime.availableProcessors, MinDriverThreads)).min
+    val executor = Executors.newFixedThreadPool(math.max(threads, 1))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(executor)
     val sc = spark.sparkContext
     val groupId = "graft-reports-" + java.util.UUID.randomUUID()

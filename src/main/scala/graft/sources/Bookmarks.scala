@@ -48,16 +48,8 @@ final class BookmarkStore(stateDir: String) {
     * (table, ctx) slots would silently drop one key (the atomic rename
     * prevents torn files, not lost updates).
     */
-  def commit(table: String, ctx: String, maxKey: Long): Unit = synchronized {
-    val p = load()
-    p.setProperty(slot(table, ctx), maxKey.toString)
-    Files.createDirectories(file.getParent)
-    val tmp = Files.createTempFile(file.getParent, "bookmarks", ".tmp")
-    val out = Files.newOutputStream(tmp)
-    try p.store(out, "graft bookmark state") finally out.close()
-    Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def commit(table: String, ctx: String, maxKey: Long): Unit =
+    commitAll(ctx, Map(table -> maxKey))
 
   /** Commit several (table, ctx) slots in ONE atomic rename — for callers
     * whose consistency story needs multiple markers to move together (e.g.

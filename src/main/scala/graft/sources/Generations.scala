@@ -2,32 +2,145 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared plumbing for the generational stores' compaction discipline
-  * ([[IvfIndex]], [[IvfPqIndex]], [[PqIndex]]; the streaming ledger sink
-  * reuses the same shapes with batch-keyed names). One implementation of
-  * the two pieces every store was repeating: the committed-view directory
-  * list BOUNDED TO A CAPTURED WATERMARK, and the listing-based retirement
-  * sweep.
+/** The generation-ledger protocol of the persisted stores
+  * ([[IvfIndex]], [[PqIndex]], [[IvfPqIndex]], [[InvertedIndex]],
+  * [[LshBandIndex]] and the [[graft.streaming.StreamSink]] parquet sink):
+  * the job bookmark (SURVEY §2 S1) applied to a store's own data.
   *
-  * The bounding matters for correctness, not just reuse: a compact that
-  * reads "the committed view" through an accessor which RE-READS the
-  * watermark races with a concurrent ingest — a generation committed
-  * between the fold's watermark capture and its scan would be folded into
-  * the base AND still listed as a tail generation, permanently
-  * double-reading its rows. Folds must scan exactly the dirs of the
-  * watermark they will stamp.
+  * One ledger owns a store root's [[BookmarkStore]] handle in one `ctx`,
+  * with two per-store slot names: the committed WATERMARK (the highest
+  * visible generation) and the compacted BASE (the generation the last
+  * compaction folded through). Data lives in `<tail>-<g>` generation dirs
+  * and `<base>-<g>` fold dirs under the root.
+  *
+  *   - APPEND ([[advance]]): write generation `g + 1` first, then commit
+  *     the watermark, the store's extra slots and the applied batch id in
+  *     ONE atomic rename. A crashed write leaves an uncommitted dir that
+  *     readers never list and the retry overwrites; a batch id at or
+  *     below the committed `last_batch` is a foreachBatch redelivery and
+  *     a no-op.
+  *   - READ ([[view]]): capture the base BEFORE the watermark. The two
+  *     slots are separate file reads; base-first can only yield a
+  *     stale-but-safe base, never one ahead of the captured watermark.
+  *   - COMPACT ([[compact]]): fold exactly the captured `(base, g]` view
+  *     (never the live one a concurrent ingest could advance — that would
+  *     fold a generation into the base while readers still list it), then
+  *     commit the base slot, then retire superseded dirs. A crashed fold
+  *     is an orphan dir readers never see.
+  *
+  * WRITER DISCIPLINE: every commit is a whole-file read-modify-write, so
+  * appends, compactions and maintenance commits are single-writer — run
+  * them from the process that owns the store's ingest, never from a
+  * second handle on the same root.
+  *
+  * A batch-keyed ledger (watermark slot `last_batch`, the parquet sink)
+  * names each generation by its batch id instead of `g + 1`: its
+  * generations are sparse, and it lists its tail rather than counting it.
   */
-private[sources] object Generations {
+final class GenerationLedger(spark: SparkSession, val dir: String, ctx: String,
+                             watermark: String, baseSlot: String,
+                             tailPrefix: String = "gen", basePrefix: String = "base") {
+  import GenerationLedger.LastBatch
 
-  /** The directories a reader at watermark `g` with compacted base
-    * `base` (-1 = none) must scan: the base dir plus generations
-    * strictly after it, nothing past `g`. `base > g` is REFUSED: a base
-    * ahead of the captured watermark can only mean the single-writer
-    * discipline was violated (a concurrent compact advanced the base
-    * between the caller's two slot reads), and serving `base-<base>`
-    * would silently return rows BEYOND the as-of watermark — a
-    * discipline violation must fail loudly, never degrade into reading
-    * future rows.
+  private val store = new BookmarkStore(dir)
+
+  def genDir(g: Long): String = s"$dir/$tailPrefix-$g"
+  def baseDir(g: Long): String = s"$dir/$basePrefix-$g"
+
+  /** A store-owned slot in this ledger's ctx (fit params, stats, points). */
+  def get(slot: String): Option[Long] = store.get(slot, ctx)
+
+  /** Commit store-owned slots in one atomic rename. */
+  def commit(entries: Map[String, Long]): Unit = store.commitAll(ctx, entries)
+
+  /** Fail at open if a stamped fit-time value disagrees ([[StoreParams]]). */
+  def validate(params: Map[String, Int]): Unit =
+    StoreParams.validate(store, ctx, dir, params)
+
+  /** Highest committed generation; -1 = empty store. */
+  def committedGen: Long = get(watermark).getOrElse(-1L)
+
+  /** Generation the last compaction folded through; -1 = never. */
+  def compactedThrough: Long = get(baseSlot).getOrElse(-1L)
+
+  /** `(base, g)`, base read first — the one consistent capture. */
+  def view: (Long, Long) = {
+    val base = compactedThrough
+    (base, committedGen)
+  }
+
+  /** Directories a committed-view reader must list right now: the base
+    * (if any) plus the generations after it. O(1) metadata arithmetic.
+    */
+  def fragmentCount: Long = {
+    val (base, g) = view
+    if (g < 0) 0L else if (base < 0) g + 1 else g - base + 1
+  }
+
+  /** More committed fragments than `maxFragments`: compaction is due. */
+  def compactionDue(maxFragments: Int): Boolean =
+    maxFragments >= 1 && fragmentCount > maxFragments
+
+  /** Exactly the committed view as of a captured `(base, g)`. */
+  def readAsOf(base: Long, g: Long): DataFrame =
+    spark.read.parquet(GenerationLedger.dirs(base, g, genDir, baseDir): _*)
+
+  /** Append one generation: a no-op when `batchId` was already applied;
+    * otherwise `write(next)`, then the watermark, `extra(next)` and
+    * `last_batch` commit in one rename. `extra` runs after the write and
+    * before the commit, so it still reads the previous watermark.
+    */
+  def advance(batchId: Option[Long], extra: Long => Map[String, Long] = _ => Map.empty)
+             (write: Long => Unit): Unit =
+    if (!batchId.exists(b => get(LastBatch).exists(_ >= b))) {
+      val next = if (watermark == LastBatch) batchId.get else committedGen + 1
+      write(next)
+      commit(extra(next) ++ Map(watermark -> next) ++ batchId.map(LastBatch -> _))
+    }
+
+  /** Compact: capture `(base, g)`; unless already folded through `g`, run
+    * `fold(base, g)` and commit the base slot with the slots it returns;
+    * then, if asked, [[retireThrough]] `g` — also after a no-op fold, so
+    * a prior compact's unretired dirs do not leak. `bestEffort` swallows
+    * retirement failures: the commit already happened.
+    */
+  def compact(retire: Boolean, bestEffort: Boolean = false)
+             (fold: (Long, Long) => Map[String, Long]): Unit = {
+    val (base, g) = view
+    require(g >= 0, s"nothing to compact: no committed generation under $dir")
+    if (g != base) commit(fold(base, g) + (baseSlot -> g))
+    if (retire) {
+      try retireThrough(g)
+      catch { case _: Exception if bestEffort => () }
+    }
+  }
+
+  /** Delete every directory a base at `g` supersedes: each `<tail>-<i>`
+    * with i <= g and each `<base>-<j>` with j < g. Listing-based, so it
+    * also sweeps dirs earlier compacts left behind; names are parsed in
+    * full, so a `gen-3-bak` or `regen-7` sibling is never touched.
+    */
+  def retireThrough(g: Long): Unit = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(root).map(_.getPath).foreach { p =>
+      val n = p.getName
+      if (GenerationLedger.idOf(tailPrefix, n).exists(_ <= g) ||
+          GenerationLedger.idOf(basePrefix, n).exists(_ < g)) fs.delete(p, true)
+    }
+  }
+}
+
+object GenerationLedger {
+  /** The applied-batch slot every batch-idempotent append commits. */
+  val LastBatch = "last_batch"
+
+  /** The directories a reader at watermark `g` with compacted base `base`
+    * (-1 = none) must scan: the base dir plus generations strictly after
+    * it, nothing past `g`. `base > g` is REFUSED: it can only mean the
+    * single-writer discipline was violated (a concurrent compact advanced
+    * the base between the caller's two slot reads), and serving the base
+    * would return rows beyond the as-of watermark.
     */
   def dirs(base: Long, g: Long,
            genDir: Long => String, baseDir: Long => String): Seq[String] = {
@@ -38,26 +151,76 @@ private[sources] object Generations {
       ((base + 1) to g).map(genDir)
   }
 
-  /** Read exactly the committed view AS OF the captured watermark `g`. */
-  def readAsOf(spark: SparkSession, base: Long, g: Long,
-               genDir: Long => String, baseDir: Long => String): DataFrame =
-    spark.read.parquet(dirs(base, g, genDir, baseDir): _*)
+  /** The id of a `<prefix>-<id>` directory name, parsed in full. */
+  def idOf(prefix: String, name: String): Option[Long] =
+    if (name.startsWith(prefix + "-")) name.stripPrefix(prefix + "-").toLongOption
+    else None
+}
 
-  /** Delete every directory a committed `base-<g>` supersedes: all
-    * `gen-<i>` with i <= g and every `base-<j>` with j < g — including
-    * dirs left by earlier compacts that did NOT retire (listing-based, a
-    * complete sweep rather than a diff against the last compact).
+/** The text stores' fold layout ([[InvertedIndex]], [[LshBandIndex]]): a
+  * compaction writes ONE catalog table at `compacted-<g>`, bucketed and
+  * sorted on the store's probe key, so the stored side of a key join
+  * reads co-located buckets with no exchange. The bucket count is a
+  * slot keyed BY GENERATION (`compacted_buckets_<g>`), committed with the
+  * base slot: a crashed later compact cannot pair an older compaction's
+  * files with a new count, which would silently mis-bucket the join.
+  */
+private[sources] final class BucketedBase(spark: SparkSession, ledger: GenerationLedger,
+                                          tablePrefix: String,
+                                          schema: org.apache.spark.sql.types.StructType,
+                                          keys: Seq[String]) {
+  /** Catalog identity, deterministic from the store root so a fresh
+    * session re-finds it.
     */
-  def retireThrough(spark: SparkSession, dir: String, g: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).map(_.getPath).foreach { p =>
-      val n = p.getName
-      val gen = if (n.startsWith("gen-")) n.stripPrefix("gen-").toLongOption
-        else None
-      val base = if (n.startsWith("base-")) n.stripPrefix("base-").toLongOption
-        else None
-      if (gen.exists(_ <= g) || base.exists(_ < g)) fs.delete(p, true)
+  val tableName: String = tablePrefix + java.lang.Integer.toHexString(ledger.dir.hashCode)
+
+  private def buckets(g: Long): Int =
+    ledger.get(s"compacted_buckets_$g").getOrElse(8L).toInt
+
+  /** The compaction at `g` as a catalog-backed frame, re-registering the
+    * external table if this session's catalog has not seen it (the
+    * bucket spec lives in the table metadata — a plain parquet read of
+    * the same files would lose the co-location).
+    */
+  def table(g: Long): DataFrame = {
+    if (!spark.catalog.tableExists(tableName)) {
+      val k = keys.mkString(", ")
+      val cols = schema.fields.map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
+      spark.sql(
+        s"""CREATE TABLE $tableName ($cols)
+           |USING parquet
+           |CLUSTERED BY ($k) SORTED BY ($k) INTO ${buckets(g)} BUCKETS
+           |LOCATION '${ledger.baseDir(g)}'""".stripMargin)
     }
+    spark.table(tableName)
+  }
+
+  /** Every row as of watermark `g` over compaction `c` (-1 = none): the
+    * table plus the parquet tail generations after it. No union when
+    * there is no tail: even a union with an EMPTY frame erases the
+    * scan's bucket spec and brings back the exchange compaction removes.
+    */
+  def asOf(c: Long, g: Long): DataFrame = {
+    def tail(from: Long) = spark.read.schema(schema).parquet((from to g).map(ledger.genDir): _*)
+    if (c < 0 && g < 0)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else if (c < 0) tail(0L)
+    else if (g <= c) table(c)
+    else table(c).unionByName(tail(c + 1))
+  }
+
+  /** The fold for [[GenerationLedger.compact]]: write `rows` as the
+    * bucketed table at `g`; returns the bucket-count slot to commit.
+    */
+  def fold(rows: DataFrame, g: Long, n: Int): Map[String, Long] = {
+    spark.sql(s"DROP TABLE IF EXISTS $tableName")
+    val target = new org.apache.hadoop.fs.Path(ledger.baseDir(g))
+    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(target)) fs.delete(target, true)
+    rows.write.mode("overwrite").format("parquet")
+      .option("path", ledger.baseDir(g))
+      .bucketBy(n, keys.head, keys.tail: _*).sortBy(keys.head, keys.tail: _*)
+      .saveAsTable(tableName)
+    Map(s"compacted_buckets_$g" -> n.toLong)
   }
 }

@@ -10,13 +10,12 @@ import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StringType,
   * each ingest tokenizes ONLY its delta and appends the delta's postings as
   * the next committed generation; queries read postings, never documents.
   *
-  * Layout and commit discipline mirror [[LshBandIndex]]: posting rows live
-  * in sequential generation directories `gen-0..gen-G` under one committed
-  * watermark advanced by an atomic properties-file rename ([[BookmarkStore]],
-  * the job-bookmark mechanism of SURVEY §2 S1 — cf.
-  * `reference/glue_rds_to_redshift.py:27-34`'s bookmark contract). A crashed
-  * append leaves an uncommitted `gen-(G+1)` readers never see. [[compact]]
-  * folds all generations into ONE bucketed table CLUSTERED AND SORTED BY
+  * Posting rows live in generation directories `gen-0..gen-G` under the
+  * store's [[GenerationLedger]] (watermark slot `postings`, base slot
+  * `compacted` — the job-bookmark mechanism of SURVEY §2 S1, cf.
+  * `reference/glue_rds_to_redshift.py:27-34`'s bookmark contract).
+  * [[compact]] folds all generations into ONE bucketed table
+  * ([[BucketedBase]]) CLUSTERED AND SORTED BY
   * `term`: sorted row groups give the parquet scan tight min/max `term`
   * statistics, so a k-term query's pushed `term IN (...)` predicate prunes
   * the scan to the row groups actually holding those terms — the
@@ -39,44 +38,9 @@ final class InvertedIndex(spark: SparkSession, dir: String)
   // text index has no probe operating point (query cost is posting-
   // length-shaped, not a recall knob), so it can never be point-stale
   def kind: String = "inverted"
-  def pointSemantics: Boolean = false
-  def pointGen: Option[Long] = None
-  def pointProbe: Option[Int] = None
 
-  private val store = new BookmarkStore(dir)
-  private val ctx = "inverted_index"
-  private def genDir(g: Long) = s"$dir/gen-$g"
-
-  /** Highest committed generation; -1 = empty index. */
-  def committedGen: Long = store.get("postings", ctx).getOrElse(-1L)
-
-  /** Highest generation folded into the bucketed compaction; -1 = none. */
-  def compactedThrough: Long = store.get("compacted", ctx).getOrElse(-1L)
-
-  /** Directories a committed-view reader must list/scan right now — the
-    * bucketed compaction (if one exists) plus the generations committed
-    * after it ([[IvfIndex.fragmentCount]]'s signal for the text index).
-    * O(1) metadata arithmetic; base slot read BEFORE the watermark, the
-    * uniform reader rule.
-    */
-  def fragmentCount: Long = {
-    val base = compactedThrough
-    val g = committedGen
-    if (g < 0) 0L else if (base < 0) g + 1 else (g - base) + 1
-  }
-
-  /** The compaction policy predicate ([[IvfIndex.compactionDue]]). */
-  def compactionDue(maxFragments: Int): Boolean =
-    maxFragments >= 1 && fragmentCount > maxFragments
-
-  // bucket count keyed BY GENERATION (see LshBandIndex.compactedBuckets:
-  // a crashed later compact() must not re-pair old files with a new count)
-  private def compactedBuckets(g: Long): Int =
-    store.get(s"compacted_buckets_$g", ctx).getOrElse(8L).toInt
-
-  private[graft] def tableName: String =
-    "graft_inv_idx_" + java.lang.Integer.toHexString(dir.hashCode)
-  private def compactDir(g: Long) = s"$dir/compacted-$g"
+  protected val ledger = new GenerationLedger(spark, dir, "inverted_index",
+    "postings", "compacted", basePrefix = "compacted")
 
   private val postingSchema = StructType(Seq(
     StructField("term", StringType), StructField("doc_id", LongType),
@@ -84,8 +48,8 @@ final class InvertedIndex(spark: SparkSession, dir: String)
     StructField("positions", ArrayType(IntegerType, containsNull = false)),
     StructField("doc_len", IntegerType)))
 
-  private def emptyPostings: DataFrame = spark.createDataFrame(
-    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], postingSchema)
+  private val layout = new BucketedBase(spark, ledger, "graft_inv_idx_", postingSchema, Seq("term"))
+  private[graft] def tableName: String = layout.tableName
 
   // ---- position-list codec -------------------------------------------
   // Positions are stored DELTA-ENCODED (first value absolute, then gaps):
@@ -135,18 +99,6 @@ final class InvertedIndex(spark: SparkSession, dir: String)
         sort_array(collect_list((col("pos") + 1).cast("int"))).as("positions"),
         first(col("doc_len")).cast("int").as("doc_len"))
 
-  private def compactedDf(g: Long): DataFrame = {
-    if (!spark.catalog.tableExists(tableName)) {
-      spark.sql(
-        s"""CREATE TABLE $tableName
-           |(term STRING, doc_id BIGINT, tf INT, positions ARRAY<INT>, doc_len INT)
-           |USING parquet
-           |CLUSTERED BY (term) SORTED BY (term) INTO ${compactedBuckets(g)} BUCKETS
-           |LOCATION '${compactDir(g)}'""".stripMargin)
-    }
-    spark.table(tableName)
-  }
-
   /** Every committed posting row: the bucketed compaction (if any) plus the
     * parquet tail generations appended since. Same no-spurious-union rule
     * as [[LshBandIndex.bandsDf]]: a union with an empty tail would erase
@@ -169,17 +121,11 @@ final class InvertedIndex(spark: SparkSession, dir: String)
     * folds and the generation unions move; only [[postingsAsOf]] decodes.
     */
   private def rawAsOf(g: Long): DataFrame = {
-    val committed = committedGen
-    val c = compactedThrough
+    val (c, committed) = ledger.view
     require(g <= committed, s"as-of generation $g is ahead of the committed watermark $committed")
     require(g >= c || g < 0, s"generation $g was folded into the compaction " +
       s"(compactedThrough=$c) and its snapshot no longer exists")
-    if (c < 0 && g < 0) emptyPostings
-    else if (c < 0)
-      spark.read.schema(postingSchema).parquet((0L to g).map(genDir): _*)
-    else if (g <= c) compactedDf(c)
-    else compactedDf(c).unionByName(
-      spark.read.schema(postingSchema).parquet(((c + 1) to g).map(genDir): _*))
+    layout.asOf(c, g)
   }
 
   private def writeGen(g: Long, rows: DataFrame): Unit =
@@ -187,14 +133,14 @@ final class InvertedIndex(spark: SparkSession, dir: String)
       rows.select(col("term").cast("string"), col("doc_id").cast("long"),
         col("tf").cast("int"), col("positions").cast("array<int>"),
         col("doc_len").cast("int")))
-      .write.mode("overwrite").parquet(genDir(g))
+      .write.mode("overwrite").parquet(ledger.genDir(g))
 
   // BM25 needs two corpus-wide scalars (doc count, total token count);
   // reading them from postings would make every ranked query corpus-
   // shaped. They are instead maintained as O(1) driver-side metadata in
   // generation-keyed slots (like compacted_buckets_g): each ingest
-  // commits the CUMULATIVE stats into its own generation's slot before
-  // the watermark advances, so readers key by committedGen and a crashed
+  // commits the CUMULATIVE stats into its own generation's slot in the
+  // watermark's rename, so readers key by committedGen and a crashed
   // append's slot is invisible — same crash-consistency as the postings.
   private def statsOf(docs: DataFrame): (Long, Long) = {
     // coalesce guards: NULL-text docs count 0 tokens; an empty delta's
@@ -209,67 +155,40 @@ final class InvertedIndex(spark: SparkSession, dir: String)
   /** Committed (n_docs, total token count) — O(1) metadata reads. */
   def corpusStats: (Long, Long) = {
     val g = committedGen
-    (store.get(s"n_docs_$g", ctx).getOrElse(0L),
-      store.get(s"total_len_$g", ctx).getOrElse(0L))
+    (ledger.get(s"n_docs_$g").getOrElse(0L), ledger.get(s"total_len_$g").getOrElse(0L))
   }
 
   /** First ingest: index `docs` and commit generation 0. Idempotent. */
-  def bootstrap(docs: DataFrame): Unit = if (committedGen < 0) {
-    writeGen(0L, postingsOf(docs))
-    val (n, len) = statsOf(docs)
-    store.commit("n_docs_0", ctx, n)
-    store.commit("total_len_0", ctx, len)
-    store.commit("postings", ctx, 0L)
-  }
+  def bootstrap(docs: DataFrame): Unit = if (committedGen < 0) ingest(docs, None)
 
   /** One incremental ingest: tokenize ONLY `delta` and append its postings
-    * as the next committed generation (write first, watermark after — a
-    * crash leaves an invisible orphan). Per-ingest cost is delta-shaped;
+    * as the next committed generation. Per-ingest cost is delta-shaped;
     * the committed corpus is never re-tokenized.
     */
-  def append(delta: DataFrame): Unit = {
-    val next = committedGen + 1
-    writeGen(next, postingsOf(delta))
-    val (n0, len0) = corpusStats
-    val (dn, dlen) = statsOf(delta)
-    store.commit(s"n_docs_$next", ctx, n0 + dn)
-    store.commit(s"total_len_$next", ctx, len0 + dlen)
-    store.commit("postings", ctx, next)
-  }
+  def append(delta: DataFrame): Unit = ingest(delta, None)
+
+  /** Postings, cumulative stats and watermark advance in one
+    * [[GenerationLedger.advance]].
+    */
+  private def ingest(docs: DataFrame, batchId: Option[Long]): Unit =
+    ledger.advance(batchId, next => {
+      val (n0, len0) = corpusStats
+      val (dn, dlen) = statsOf(docs)
+      Map(s"n_docs_$next" -> (n0 + dn), s"total_len_$next" -> (len0 + dlen))
+    })(writeGen(_, postingsOf(docs)))
 
   /** Fold every committed generation into ONE bucketed table sorted by
     * `term` (see class doc: sorted row-group stats make the query's term
     * filter a scan-pruning index seek; co-located buckets keep any
-    * term-keyed maintenance join exchange-free). Commit-ordering and
-    * superseded-storage cleanup mirror [[LshBandIndex.compact]].
+    * term-keyed maintenance join exchange-free). The superseded
+    * generations and compaction are always retired, best-effort.
     */
-  def compact(buckets: Int = 8): Unit = {
-    val g = committedGen
-    require(g >= 0, "nothing to compact: the index is empty")
-    if (compactedThrough == g) return
-    // fold the RAW stored rows: the position codec is a storage-boundary
-    // concern and compaction moves storage, so no decode/encode churn
-    val all = rawAsOf(g)
-    spark.sql(s"DROP TABLE IF EXISTS $tableName")
-    val target = new org.apache.hadoop.fs.Path(compactDir(g))
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(target)) fs.delete(target, true)
-    all.write.mode("overwrite").format("parquet")
-      .option("path", compactDir(g))
-      .bucketBy(buckets, "term").sortBy("term")
-      .saveAsTable(tableName)
-    val prevCompacted = compactedThrough
-    store.commit(s"compacted_buckets_$g", ctx, buckets.toLong)
-    store.commit("compacted", ctx, g)
-    (math.max(prevCompacted + 1, 0L) to g).foreach { i =>
-      val p = new org.apache.hadoop.fs.Path(genDir(i))
-      try { if (fs.exists(p)) fs.delete(p, true) } catch { case _: Throwable => () }
+  def compact(buckets: Int = 8): Unit =
+    ledger.compact(retire = true, bestEffort = true) { (c, g) =>
+      // fold the RAW stored rows: the position codec is a storage-boundary
+      // concern and compaction moves storage, so no decode/encode churn
+      layout.fold(layout.asOf(c, g), g, buckets)
     }
-    if (prevCompacted >= 0) {
-      val p = new org.apache.hadoop.fs.Path(compactDir(prevCompacted))
-      try { if (fs.exists(p)) fs.delete(p, true) } catch { case _: Throwable => () }
-    }
-  }
 
   /** Conjunctive (AND) query: documents containing ALL of `terms`, with
     * the summed term frequency as the rank signal. One pruned posting
@@ -328,27 +247,11 @@ final class InvertedIndex(spark: SparkSession, dir: String)
   }
 
   /** Exactly-once streaming ingest: apply one micro-batch as one committed
-    * generation, idempotent under foreachBatch's at-least-once redelivery.
-    * A replayed batch id (<= the committed marker) is a no-op; otherwise
-    * the generation parquet is written first (an orphan until committed —
-    * a crashed attempt is invisible and simply overwritten by the retry),
-    * then the generation watermark, the cumulative stats, and the applied
-    * batch id advance in ONE atomic properties-file rename
-    * ([[BookmarkStore.commitAll]]) — there is no crash point where a
-    * reader can see the batch half-applied or applied twice. This is the
-    * [[graft.streaming.StreamSink]] run-ledger discipline turned inward:
-    * the index's own watermark file IS the ledger.
+    * generation, idempotent under foreachBatch's at-least-once redelivery
+    * ([[GenerationLedger.advance]]: a replayed batch id is a no-op, and
+    * no crash point exposes the batch half-applied or applied twice).
     */
-  def appendBatch(delta: DataFrame, batchId: Long): Unit = {
-    if (store.get("last_batch", ctx).exists(_ >= batchId)) return
-    val next = committedGen + 1
-    writeGen(next, postingsOf(delta))
-    val (n0, len0) = corpusStats
-    val (dn, dlen) = statsOf(delta)
-    store.commitAll(ctx, Map(
-      s"n_docs_$next" -> (n0 + dn), s"total_len_$next" -> (len0 + dlen),
-      "postings" -> next, "last_batch" -> batchId))
-  }
+  def appendBatch(delta: DataFrame, batchId: Long): Unit = ingest(delta, Some(batchId))
 
   /** [[conjunctive]] with the classic lead-with-the-rarest-posting plan:
     * per-term df (a terms-sized aggregate of the pruned scan — O(terms)

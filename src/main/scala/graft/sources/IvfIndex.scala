@@ -20,13 +20,9 @@ import graft.operators.Similarity
   * centroids is a REBUILD — a new index directory — never an in-place
   * mutation, exactly like a new bookmark lineage.)
   *
-  * Layout and commit discipline mirror [[LshBandIndex]] / the job bookmark
-  * (SURVEY §2 S1): assignment rows live in sequential generation dirs
-  * `gen-0..gen-G` under a spark-visible root, and the committed watermark
-  * advances via the atomic properties-file rename only after the
-  * generation's parquet is fully written. A crashed append leaves an
-  * uncommitted `gen-(G+1)` that readers never see and the next append
-  * overwrites.
+  * Assignment rows live in generation dirs `gen-0..gen-G` committed,
+  * replayed and compacted by the store's [[GenerationLedger]] (watermark
+  * slot `assign`, base slot `base`).
   *
   * Compaction here serves a DIFFERENT axis than [[LshBandIndex]]'s: the
   * ANN probe side (queries × nprobe cells) is tiny and broadcast, so the
@@ -44,22 +40,16 @@ final class IvfIndex(spark: SparkSession, dir: String,
 
   // MaintainedStore — the O(1) ledger surface the fleet walk reads
   def kind: String = "ivf"
-  def pointSemantics: Boolean = true
-  def pointGen: Option[Long] = operatingPointGen
-  def pointProbe: Option[Int] = operatingPoint
+  override def pointSemantics: Boolean = true
+  override def pointGen: Option[Long] = operatingPointGen
+  override def pointProbe: Option[Int] = operatingPoint
 
-  private val store = new BookmarkStore(dir)
-  private val ctx = "ivf_index"
-  private def genDir(g: Long) = s"$dir/gen-$g"
-  private def baseDir(g: Long) = s"$dir/base-$g"
+  protected val ledger = new GenerationLedger(spark, dir, "ivf_index", "assign", "base")
   private def seedsDir = s"$dir/seeds"
   // stored cell assignments are a function of the frozen seed set;
   // reopening with a different nlist mis-probes — fail at open
   // (FAISS-header rule)
-  StoreParams.validate(store, ctx, dir, Map("nlist" -> nlist))
-
-  /** Highest committed assignment generation; -1 = empty index. */
-  def committedGen: Long = store.get("assign", ctx).getOrElse(-1L)
+  ledger.validate(Map("nlist" -> nlist))
 
   /** The frozen centroids, collected as O(nlist) driver metadata — the
     * same role as a bookmark read: never data-sized. MEMOIZED per index
@@ -96,7 +86,7 @@ final class IvfIndex(spark: SparkSession, dir: String,
   private def writeGen(g: Long, vectors: DataFrame, ss: Seq[(Long, Seq[Float])]): Unit =
     assign(vectors, ss)
       .select(col("vec_id").cast("long"), col("cell").cast("long"))
-      .write.mode("overwrite").parquet(genDir(g))
+      .write.mode("overwrite").parquet(ledger.genDir(g))
 
   /** First ingest: freeze the `nlist` lowest-vec_id vectors as centroids
     * (IVF-flat sampled seeds, [[Similarity.ivfTopK]]'s family), assign
@@ -106,9 +96,8 @@ final class IvfIndex(spark: SparkSession, dir: String,
     corpus.select(col("vec_id").as("cell_id"), col("embedding"))
       .orderBy(col("cell_id")).limit(nlist)
       .write.mode("overwrite").parquet(seedsDir)
-    writeGen(0L, corpus, seeds)
-    store.commitAll(ctx,
-      Map("assign" -> 0L) ++ StoreParams.stamp(Map("nlist" -> nlist)))
+    ledger.advance(None, _ => StoreParams.stamp(Map("nlist" -> nlist)))(
+      writeGen(_, corpus, seeds))
   }
 
   /** DRIFT GUARD — the maintenance policy for frozen centroids under
@@ -198,104 +187,43 @@ final class IvfIndex(spark: SparkSession, dir: String,
     * drift) and watch [[balanceReport]] (probe-cost skew) — see the
     * reseed rules there.
     */
-  def append(delta: DataFrame): Unit = {
-    val g = committedGen
-    require(g >= 0, "append before bootstrap: the index has no centroids")
-    writeGen(g + 1, delta, seeds)
-    store.commit("assign", ctx, g + 1)
+  def append(delta: DataFrame): Unit = appendGen(delta, None)
+
+  /** Exactly-once streaming ingest: one micro-batch = one committed
+    * generation; a replayed batch id is a no-op ([[GenerationLedger.advance]]).
+    */
+  def appendBatch(delta: DataFrame, batchId: Long): Unit = appendGen(delta, Some(batchId))
+
+  private def appendGen(delta: DataFrame, batchId: Option[Long]): Unit = {
+    require(committedGen >= 0, "append before bootstrap: the index has no centroids")
+    ledger.advance(batchId)(writeGen(_, delta, seeds))
   }
-
-  /** Exactly-once streaming ingest — [[InvertedIndex.appendBatch]]'s
-    * discipline for the vector index: one micro-batch = one committed
-    * generation against the frozen centroids, idempotent under
-    * foreachBatch redelivery (replayed batch ids no-op; watermark and
-    * applied-batch id advance in ONE atomic rename, so no crash point
-    * exposes a half-applied or twice-applied batch).
-    */
-  def appendBatch(delta: DataFrame, batchId: Long): Unit = {
-    if (store.get("last_batch", ctx).exists(_ >= batchId)) return
-    val g = committedGen
-    require(g >= 0, "append before bootstrap: the index has no centroids")
-    writeGen(g + 1, delta, seeds)
-    store.commitAll(ctx, Map("assign" -> (g + 1), "last_batch" -> batchId))
-  }
-
-  /** Generation the last [[compact]] folded through; -1 = never
-    * compacted.
-    */
-  def compactedThrough: Long = store.get("base", ctx).getOrElse(-1L)
-
-  /** Directories a committed-view reader must list/scan right now — the
-    * read-amplification signal [[compact]] exists to reset (r13 verdict
-    * #8: compact() existed but nothing DECIDED when; the rehearsal's
-    * files-per-probe rows are this number's downstream effect). O(1)
-    * metadata arithmetic, no filesystem listing.
-    */
-  def fragmentCount: Long = {
-    // base read BEFORE the watermark (the [[assignmentsDf]] rule): a
-    // concurrent compact between the two slot reads could otherwise hand
-    // Generations a base ahead of the captured g, which it refuses —
-    // turning a pure metadata read into a spurious crash
-    val base = compactedThrough
-    val g = committedGen
-    if (g < 0) 0L else Generations.dirs(base, g, genDir, baseDir).size.toLong
-  }
-
-  /** The compaction policy predicate: more committed fragment dirs than
-    * `maxFragments` means probes pay ingest-history listing + interleaved
-    * row groups and [[maintain]] (or any scheduler) should [[compact]].
-    */
-  def compactionDue(maxFragments: Int): Boolean =
-    maxFragments >= 1 && fragmentCount > maxFragments
 
   /** Every committed assignment row (vec_id, cell): the compacted base
     * (if one exists) plus the generations committed after it.
     */
   def assignmentsDf: DataFrame = {
-    // base read BEFORE the watermark ([[IvfPqIndex.rowsDf]]'s rule): a
-    // compact committing between the two slot reads could otherwise hand
-    // Generations a base ahead of the captured g (which it refuses)
-    val base = compactedThrough
-    val g = committedGen
+    val (base, g) = ledger.view
     require(g >= 0, "the index is empty")
-    Generations.readAsOf(spark, base, g, genDir, baseDir)
+    ledger.readAsOf(base, g)
   }
 
   /** COMPACTION — fold the committed per-batch generation dirs into one
     * `base-<g>` dir range-clustered on the cell id, so the probe join's
     * parquet scan prunes unprobed cells via row-group min/max stats and
-    * directory listing stays O(1) in ingest history. Identical commit,
-    * watermark-capture, and single-writer discipline as
-    * [[IvfPqIndex.compact]]: base fully written before the `base` slot
-    * renames in (a crashed compact is invisible), the fold scans exactly
-    * the captured watermark's dirs (never the live view a concurrent
-    * ingest could advance), values byte-identical (probes before/after
-    * hash-match), superseded dirs retired only on request — in-flight
-    * readers own the grace period.
+    * directory listing stays O(1) in ingest history. Values are
+    * byte-identical (probes before/after hash-match); commit order and
+    * crash safety are [[GenerationLedger.compact]]'s. Superseded dirs are
+    * retired only on request — in-flight readers own the grace period.
     */
-  def compact(retireSuperseded: Boolean = false): Unit = {
-    // base read BEFORE the watermark — the uniform reader rule
-    // ([[fragmentCount]]/[[assignmentsDf]]): base-first can only yield a
-    // stale-but-safe base, never one ahead of the captured watermark
-    // that Generations.dirs refuses
-    val prev = compactedThrough
-    val g = committedGen
-    require(g >= 0, "compact before bootstrap: the index has no rows")
-    if (g == prev) {
-      // the fold is a no-op, but a REQUESTED retirement sweep still runs:
-      // a prior compact without retirement (or one crashed between the
-      // base commit and its sweep) leaves superseded dirs that would
-      // otherwise leak forever despite the caller asking for the sweep
-      if (retireSuperseded) Generations.retireThrough(spark, dir, g)
-      return
+  def compact(retireSuperseded: Boolean = false): Unit =
+    ledger.compact(retireSuperseded) { (base, g) =>
+      ledger.readAsOf(base, g)
+        .repartitionByRange(col("cell"), col("vec_id"))
+        .sortWithinPartitions("cell", "vec_id")
+        .write.mode("overwrite").parquet(ledger.baseDir(g))
+      Map.empty
     }
-    Generations.readAsOf(spark, prev, g, genDir, baseDir)
-      .repartitionByRange(col("cell"), col("vec_id"))
-      .sortWithinPartitions("cell", "vec_id")
-      .write.mode("overwrite").parquet(baseDir(g))
-    store.commit("base", ctx, g)
-    if (retireSuperseded) Generations.retireThrough(spark, dir, g)
-  }
 
   /** Commit the probe operating point — [[IvfPqIndex.commitOperatingPoint]]'s
     * discipline for the flat-IVF store, whose ONLY recall knob is nprobe
@@ -305,7 +233,7 @@ final class IvfIndex(spark: SparkSession, dir: String,
   def commitOperatingPoint(nprobe: Int, recall: Double): Unit = {
     require(nprobe >= 1 && nprobe <= nlist,
       s"operating point nprobe=$nprobe out of range for nlist=$nlist")
-    store.commitAll(ctx, Map(
+    ledger.commit(Map(
       "op.nprobe" -> nprobe.toLong,
       "op.recall_bp" -> math.rint(recall * 10000).toLong,
       "op.gen" -> committedGen))
@@ -313,10 +241,10 @@ final class IvfIndex(spark: SparkSession, dir: String,
 
   /** The committed nprobe, if a maintenance run has stamped one. */
   def operatingPoint: Option[Int] =
-    store.get("op.nprobe", ctx).map(_.toInt)
+    ledger.get("op.nprobe").map(_.toInt)
 
   /** Generation the committed point was validated against. */
-  def operatingPointGen: Option[Long] = store.get("op.gen", ctx)
+  def operatingPointGen: Option[Long] = ledger.get("op.gen")
 
   /** Generations committed since the point was validated — the
     * staleness signal a maintenance scheduler acts on

@@ -26,8 +26,9 @@ import graft.operators.Similarity
   * (cell, codes) row is a pure function of the vector, so appends encode
   * and assign only their delta in ONE map-only pass and old rows stay
   * byte-stable forever. Retraining either structure is a REBUILD into a
-  * fresh root. Commit discipline is the shared bookmark-store atomic
-  * rename: a crashed append's generation is invisible to readers.
+  * fresh root. Rows live in generation dirs under the store's
+  * [[GenerationLedger]] (watermark slot `encode`, base slot `base`): a
+  * crashed append's generation is invisible to readers.
   */
 final class IvfPqIndex(spark: SparkSession, dir: String,
                        val nlist: Int = 16, m: Int = 8, codes: Int = 16)
@@ -35,24 +36,17 @@ final class IvfPqIndex(spark: SparkSession, dir: String,
 
   // MaintainedStore — the O(1) ledger surface the fleet walk reads
   def kind: String = "ivfpq"
-  def pointSemantics: Boolean = true
-  def pointGen: Option[Long] = operatingPointGen
-  def pointProbe: Option[Int] = operatingPoint.map(_._1)
+  override def pointSemantics: Boolean = true
+  override def pointGen: Option[Long] = operatingPointGen
+  override def pointProbe: Option[Int] = operatingPoint.map(_._1)
 
-  private val store = new BookmarkStore(dir)
-  private val ctx = "ivfpq_index"
-  private def genDir(g: Long) = s"$dir/gen-$g"
-  private def baseDir(g: Long) = s"$dir/base-$g"
+  protected val ledger = new GenerationLedger(spark, dir, "ivfpq_index", "encode", "base")
   private def seedsDir = s"$dir/seeds"
   private def booksDir = s"$dir/books"
   // all three tunables shape the stored rows (cell ids and codes):
   // reopening with drifted values mis-probes or reads untrained codebook
   // entries — fail at open, never mis-score (FAISS-header rule)
-  StoreParams.validate(store, ctx, dir,
-    Map("nlist" -> nlist, "m" -> m, "codes" -> codes))
-
-  /** Highest committed generation; -1 = empty index. */
-  def committedGen: Long = store.get("encode", ctx).getOrElse(-1L)
+  ledger.validate(Map("nlist" -> nlist, "m" -> m, "codes" -> codes))
 
   /** The fit-time hyperparameters STAMPED at bootstrap (FAISS-header
     * rule) — the authoritative record of what the stored rows were
@@ -63,7 +57,7 @@ final class IvfPqIndex(spark: SparkSession, dir: String,
     */
   def fittedParams: Map[String, Long] =
     Seq("nlist", "m", "codes")
-      .flatMap(k => store.get(s"param.$k", ctx).map(k -> _)).toMap
+      .flatMap(k => ledger.get(s"param.$k").map(k -> _)).toMap
 
   // Both frozen structures are MEMOIZED per index handle (r17): seeds and
   // codebooks never change for a committed dir (retraining is a rebuild
@@ -107,7 +101,7 @@ final class IvfPqIndex(spark: SparkSession, dir: String,
           greatest(scored(ss)(col("embedding")): _*).getField("cell").as("cell")),
         bks, m, Similarity.Dim / m, codes)
       .select(col("vec_id").cast("long"), col("cell").cast("long"), col("codes"))
-      .write.mode("overwrite").parquet(genDir(g))
+      .write.mode("overwrite").parquet(ledger.genDir(g))
 
   /** First ingest: freeze the `nlist` lowest-vec_id vectors as coarse
     * centroids and train+freeze the PQ codebooks (both on the bootstrap
@@ -126,69 +120,33 @@ final class IvfPqIndex(spark: SparkSession, dir: String,
       trained.toSeq.map { case ((s, c), w) => (s, c, w) }
         .toDF("sub", "code", "w")
         .coalesce(1).write.mode("overwrite").parquet(booksDir)
-      writeGen(0L, corpus, seeds, trained)
-      store.commitAll(ctx, Map("encode" -> 0L) ++
-        StoreParams.stamp(Map("nlist" -> nlist, "m" -> m, "codes" -> codes)))
+      ledger.advance(None,
+          _ => StoreParams.stamp(Map("nlist" -> nlist, "m" -> m, "codes" -> codes)))(
+        writeGen(_, corpus, seeds, trained))
     }
 
   /** One incremental ingest: assign+encode ONLY `delta` against the
     * frozen seeds and codebooks — delta-sized, map-only.
     */
-  def append(delta: DataFrame): Unit = {
-    val g = committedGen
-    require(g >= 0, "append before bootstrap: the index has no centroids")
-    writeGen(g + 1, delta, seeds, books)
-    store.commit("encode", ctx, g + 1)
-  }
+  def append(delta: DataFrame): Unit = appendGen(delta, None)
 
-  /** Streaming ingest: one generation per micro-batch, idempotent on
-    * redelivery via the batch-id ledger slot (the [[IvfIndex]]/
-    * [[PqIndex]] discipline — a replayed foreachBatch after a crash is
-    * a metadata no-op; the generation watermark and the ledger advance
-    * in ONE atomic properties-file rename).
+  /** Streaming ingest: one generation per micro-batch; a replayed batch
+    * id after a crash is a metadata no-op ([[GenerationLedger.advance]]).
     */
-  def appendBatch(delta: DataFrame, batchId: Long): Unit = {
-    if (store.get("last_batch", ctx).exists(_ >= batchId)) return
-    val g = committedGen
-    require(g >= 0, "append before bootstrap: the index has no centroids")
-    writeGen(g + 1, delta, seeds, books)
-    store.commitAll(ctx, Map("encode" -> (g + 1), "last_batch" -> batchId))
+  def appendBatch(delta: DataFrame, batchId: Long): Unit = appendGen(delta, Some(batchId))
+
+  private def appendGen(delta: DataFrame, batchId: Option[Long]): Unit = {
+    require(committedGen >= 0, "append before bootstrap: the index has no centroids")
+    ledger.advance(batchId)(writeGen(_, delta, seeds, books))
   }
-
-  /** Generation the last [[compact]] folded through; -1 = never
-    * compacted (readers list every generation directory).
-    */
-  def compactedThrough: Long = store.get("base", ctx).getOrElse(-1L)
-
-  /** Directories a committed-view reader must list/scan right now — the
-    * read-amplification signal [[compact]] resets ([[IvfIndex.fragmentCount]]).
-    * O(1) metadata arithmetic, no filesystem listing.
-    */
-  def fragmentCount: Long = {
-    // base read BEFORE the watermark (the [[rowsDf]] rule): a concurrent
-    // compact between the two slot reads must degrade to a stale-but-safe
-    // base, never a refused base-ahead-of-watermark crash
-    val base = compactedThrough
-    val g = committedGen
-    if (g < 0) 0L else Generations.dirs(base, g, genDir, baseDir).size.toLong
-  }
-
-  /** The compaction policy predicate ([[IvfIndex.compactionDue]]). */
-  def compactionDue(maxFragments: Int): Boolean =
-    maxFragments >= 1 && fragmentCount > maxFragments
 
   /** Every committed row (vec_id, cell, codes): the compacted base (if
     * one exists) plus the generations committed after it.
     */
   def rowsDf: DataFrame = {
-    // base read BEFORE the watermark: the two slots are separate reads,
-    // and a compact committing in between could otherwise hand
-    // Generations a base ahead of the captured g (which it refuses).
-    // Base-first can only yield a stale-but-safe base.
-    val base = compactedThrough
-    val g = committedGen
+    val (base, g) = ledger.view
     require(g >= 0, "the index is empty")
-    Generations.readAsOf(spark, base, g, genDir, baseDir)
+    ledger.readAsOf(base, g)
   }
 
   /** COMPACTION — the read-amplification half of index maintenance
@@ -202,50 +160,23 @@ final class IvfPqIndex(spark: SparkSession, dir: String,
     * cells at the parquet scan, and listing cost returns to O(1) in
     * ingest history.
     *
-    * Same commit discipline as everything else in the store: the base is
-    * fully written BEFORE the `base` slot renames in, so a crashed
-    * compact is invisible and a re-run overwrites the orphan staging
-    * dir. The fold scans exactly the dirs of the watermark it captured —
-    * NOT the live committed view, which a concurrent ingest could
-    * advance between capture and scan, folding an extra generation into
-    * the base while readers still list it separately (double-read).
     * Values are byte-identical to the folded generations (rows are
     * (vec_id, cell, codes) — a pure reshuffle), so probes before and
     * after must hash-match — the oracle-gate for the declared query.
-    * Superseded dirs are retired only on request: an in-flight reader
-    * that planned its scan before the cutover may still be reading them,
-    * so the caller owns the grace period.
-    *
-    * WRITER DISCIPLINE: like every [[BookmarkStore]] commit, compaction
-    * and the maintenance commits are single-writer — run them from the
-    * same process that owns the store's ingest (e.g. between
-    * micro-batches of the foreachBatch that appends), never concurrently
-    * from a second store handle: the properties-file commit is a whole-
-    * file read-modify-write, so racing writers can erase each other's
-    * slots (the lost-update hazard `Bookmarks.scala` documents).
+    * Commit order, crash safety and the single-writer rule are
+    * [[GenerationLedger.compact]]'s. Superseded dirs are retired only on
+    * request: an in-flight reader that planned its scan before the
+    * cutover may still be reading them, so the caller owns the grace
+    * period.
     */
-  def compact(retireSuperseded: Boolean = false): Unit = {
-    // base read BEFORE the watermark — the uniform reader rule
-    // ([[fragmentCount]]/[[rowsDf]]): base-first can only yield a
-    // stale-but-safe base, never one ahead of the captured watermark
-    val prev = compactedThrough
-    val g = committedGen
-    require(g >= 0, "compact before bootstrap: the index has no rows")
-    if (g == prev) {
-      // already folded through the committed head — but a REQUESTED
-      // retirement sweep still runs: a prior compact without retirement
-      // (or one crashed between base commit and sweep) leaves superseded
-      // dirs that would otherwise leak forever despite the caller asking
-      if (retireSuperseded) Generations.retireThrough(spark, dir, g)
-      return
+  def compact(retireSuperseded: Boolean = false): Unit =
+    ledger.compact(retireSuperseded) { (base, g) =>
+      ledger.readAsOf(base, g)
+        .repartitionByRange(col("cell"), col("vec_id"))
+        .sortWithinPartitions("cell", "vec_id")
+        .write.mode("overwrite").parquet(ledger.baseDir(g))
+      Map.empty
     }
-    Generations.readAsOf(spark, prev, g, genDir, baseDir)
-      .repartitionByRange(col("cell"), col("vec_id"))
-      .sortWithinPartitions("cell", "vec_id")
-      .write.mode("overwrite").parquet(baseDir(g))
-    store.commit("base", ctx, g)
-    if (retireSuperseded) Generations.retireThrough(spark, dir, g)
-  }
 
   /** DRIFT GUARD — [[IvfIndex.driftReport]]'s policy ported to the
     * composition (r11 verdict #5). Drift is a property of the COARSE
@@ -393,7 +324,7 @@ final class IvfPqIndex(spark: SparkSession, dir: String,
   def commitOperatingPoint(nprobe: Int, shortlist: Int, recall: Double): Unit = {
     require(nprobe >= 1 && nprobe <= nlist && shortlist >= 1,
       s"operating point (nprobe=$nprobe, shortlist=$shortlist) out of range")
-    store.commitAll(ctx, Map(
+    ledger.commit(Map(
       "op.nprobe" -> nprobe.toLong,
       "op.shortlist" -> shortlist.toLong,
       "op.recall_bp" -> math.rint(recall * 10000).toLong,
@@ -404,13 +335,13 @@ final class IvfPqIndex(spark: SparkSession, dir: String,
     * one — what a query-time default reads instead of constants.
     */
   def operatingPoint: Option[(Int, Int)] =
-    for { p <- store.get("op.nprobe", ctx); s <- store.get("op.shortlist", ctx) }
+    for { p <- ledger.get("op.nprobe"); s <- ledger.get("op.shortlist") }
       yield (p.toInt, s.toInt)
 
   /** Generation the committed point was validated against — a point whose
     * gen lags [[committedGen]] by many appends is due for revalidation.
     */
-  def operatingPointGen: Option[Long] = store.get("op.gen", ctx)
+  def operatingPointGen: Option[Long] = ledger.get("op.gen")
 
   /** Generations committed SINCE the operating point was validated — the
     * staleness signal a maintenance scheduler acts on: 0 means the point

@@ -15,14 +15,12 @@ import graft.operators.Dedup
   * each ingest bands ONLY its delta, probes the stored index, and appends
   * its own bands for the next run.
   *
-  * Layout and commit discipline mirror the job bookmark (SURVEY §2 S1,
-  * [[BookmarkStore]]): band rows live in sequential generation directories
-  * `gen-0..gen-G`, and the single committed watermark G advances — via the
-  * same atomic properties-file rename — ONLY after the caller's sink has
-  * consumed the sweep result (commit-after-sink, the reference's D4/D6
-  * defect fixed). A crashed run leaves an uncommitted `gen-(G+1)` that
-  * readers never see and the next run overwrites; a failed sink appends
-  * nothing, so the next run re-sweeps the same delta. The index is thus
+  * Band rows live in generation directories `gen-0..gen-G` under the
+  * store's [[GenerationLedger]] (watermark slot `bands`, base slot
+  * `compacted`), and a sweep's generation is appended ONLY after the
+  * caller's sink has consumed the sweep result (commit-after-sink, the
+  * reference's D4/D6 defect fixed): a failed sink appends nothing, so the
+  * next run re-sweeps the same delta. The index is thus
   * append-only and exactly-once; the sink keeps the same at-least-once
   * window as [[graft.operators.IncrementalStarJob]], closed by idempotent
   * sinks.
@@ -31,7 +29,8 @@ import graft.operators.Dedup
   * cost is band(delta) + probe + verify(matched docs) — nothing is
   * proportional to the corpus, and the r7 rehearsal row
   * (`incr_lsh_indexed`) measures exactly that claim. [[compact]] folds the
-  * generations into ONE bucketed+sorted table on the probe key, after
+  * generations into ONE bucketed+sorted table on the probe key
+  * ([[BucketedBase]]), after
   * which the stored side joins with NO exchange at all (spec-asserted) —
   * only delta-sized data ever crosses the network, the co-located-join
   * discipline of [[Bucketing]] applied to index maintenance.
@@ -44,93 +43,28 @@ final class LshBandIndex(spark: SparkSession, dir: String,
   // band index has no probe operating point (its recall is the fixed
   // (n, k, bands) banding family stamped at open), so never point-stale
   def kind: String = "lsh"
-  def pointSemantics: Boolean = false
-  def pointGen: Option[Long] = None
-  def pointProbe: Option[Int] = None
 
-  private val store = new BookmarkStore(dir)
-  private val ctx = "lsh_band_index"
-  private def genDir(g: Long) = s"$dir/gen-$g"
+  protected val ledger = new GenerationLedger(spark, dir, "lsh_band_index",
+    "bands", "compacted", basePrefix = "compacted")
   // stored band keys are a pure function of (n, k, bands): probing with
   // drifted values finds no (or wrong) collisions — fail at open
   // (FAISS-header rule)
-  StoreParams.validate(store, ctx, dir,
-    Map("n" -> n, "k" -> k, "bands" -> bands))
-
-  /** Highest committed generation; -1 = empty index. */
-  def committedGen: Long = store.get("bands", ctx).getOrElse(-1L)
-
-  /** Highest generation folded into the bucketed compaction; -1 = none. */
-  def compactedThrough: Long = store.get("compacted", ctx).getOrElse(-1L)
-
-  /** Directories a committed-view reader must list/scan right now — the
-    * bucketed compaction (if one exists) plus the generations committed
-    * after it ([[IvfIndex.fragmentCount]]'s signal for the band index).
-    * O(1) metadata arithmetic; base slot read BEFORE the watermark, the
-    * uniform reader rule.
-    */
-  def fragmentCount: Long = {
-    val base = compactedThrough
-    val g = committedGen
-    if (g < 0) 0L else if (base < 0) g + 1 else (g - base) + 1
-  }
-
-  /** The compaction policy predicate ([[IvfIndex.compactionDue]]). */
-  def compactionDue(maxFragments: Int): Boolean =
-    maxFragments >= 1 && fragmentCount > maxFragments
-
-  // bucket count is keyed BY GENERATION: a crashed later compact() must
-  // not leave a bucket count that pairs with an older compaction's files —
-  // re-registering old files under a new bucket count would silently
-  // mis-bucket the join (each watermark reads only its own slot)
-  private def compactedBuckets(g: Long): Int =
-    store.get(s"compacted_buckets_$g", ctx).getOrElse(8L).toInt
-
-  // catalog identity for the compacted bucketed table — deterministic from
-  // the index location so a fresh session re-finds it
-  private[graft] def tableName: String =
-    "graft_lsh_idx_" + java.lang.Integer.toHexString(dir.hashCode)
-  private def compactDir(g: Long) = s"$dir/compacted-$g"
+  ledger.validate(Map("n" -> n, "k" -> k, "bands" -> bands))
 
   private val bandSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("band", IntegerType),
     StructField("band_key", LongType)))
 
-  private def emptyBands: DataFrame = spark.createDataFrame(
-    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], bandSchema)
-
-  /** The compacted bucketed table as a catalog-backed frame, re-registering
-    * the external table if this session's catalog has not seen it (the
-    * bucket spec lives in the table metadata — a plain parquet read of the
-    * same files would lose the co-location and re-shuffle the stored side).
-    */
-  private def compactedDf(g: Long): DataFrame = {
-    if (!spark.catalog.tableExists(tableName)) {
-      spark.sql(
-        s"""CREATE TABLE $tableName (doc_id BIGINT, band INT, band_key BIGINT)
-           |USING parquet
-           |CLUSTERED BY (band, band_key) SORTED BY (band, band_key)
-           |INTO ${compactedBuckets(g)} BUCKETS
-           |LOCATION '${compactDir(g)}'""".stripMargin)
-    }
-    spark.table(tableName)
-  }
+  private val layout =
+    new BucketedBase(spark, ledger, "graft_lsh_idx_", bandSchema, Seq("band", "band_key"))
+  private[graft] def tableName: String = layout.tableName
 
   /** Every committed band row (doc_id, band, band_key): the bucketed
     * compaction (if any) plus the parquet tail generations appended since.
     */
   def bandsDf: DataFrame = {
-    val g = committedGen
-    val c = compactedThrough
-    if (c < 0 && g < 0) emptyBands
-    else if (c < 0)
-      spark.read.schema(bandSchema).parquet((0L to g).map(genDir): _*)
-    // no union when there is no tail: even a union with an EMPTY frame
-    // erases the scan's bucket spec and reintroduces the stored-side
-    // exchange the compaction exists to remove (spec-pinned)
-    else if (g <= c) compactedDf(c)
-    else compactedDf(c).unionByName(
-      spark.read.schema(bandSchema).parquet(((c + 1) to g).map(genDir): _*))
+    val (c, g) = ledger.view
+    layout.asOf(c, g)
   }
 
   /** Index-maintenance telemetry (the [[InvertedIndex.termStats]] /
@@ -175,8 +109,8 @@ final class LshBandIndex(spark: SparkSession, dir: String,
     * is O(#mega-buckets) — broadcast-sized by construction.
     */
   def stopBands(cap: Int): DataFrame = {
-    val src = if (compactedThrough >= 0) compactedDf(compactedThrough)
-              else bandsDf
+    val c = compactedThrough
+    val src = if (c >= 0) layout.table(c) else bandsDf
     src.groupBy(col("band"), col("band_key"))
       .agg(count(lit(1)).as("n")).filter(col("n") > cap)
       .select(col("band"), col("band_key"))
@@ -188,50 +122,26 @@ final class LshBandIndex(spark: SparkSession, dir: String,
     * the delta moves (the [[Bucketing]] discipline applied to the index).
     * At 100 TB this is the maintenance operation that keeps per-ingest
     * probe cost delta-shaped forever: run it when the parquet tail has
-    * grown past a few generations. Commit-ordering mirrors the appends —
-    * table written first, watermark advanced after, so a crash mid-compact
-    * leaves an invisible orphan and readers keep the generation view; the
-    * superseded generation dirs are removed only after the commit.
+    * grown past a few generations. Protocol: [[GenerationLedger.compact]];
+    * the superseded generations and compaction are always retired,
+    * best-effort, after the commit.
     */
-  def compact(buckets: Int = 8): Unit = {
-    val g = committedGen
-    require(g >= 0, "nothing to compact: the index is empty")
-    if (compactedThrough == g) return // already fully compacted — no-op
-    val all = bandsDf
-    spark.sql(s"DROP TABLE IF EXISTS $tableName")
-    val target = new org.apache.hadoop.fs.Path(compactDir(g))
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(target)) fs.delete(target, true)
-    all.write.mode("overwrite").format("parquet")
-      .option("path", compactDir(g))
-      .bucketBy(buckets, "band", "band_key").sortBy("band", "band_key")
-      .saveAsTable(tableName)
-    val prevCompacted = compactedThrough
-    store.commit(s"compacted_buckets_$g", ctx, buckets.toLong)
-    store.commit("compacted", ctx, g)
-    // best-effort cleanup of superseded storage (never read again)
-    (math.max(prevCompacted + 1, 0L) to g).foreach { i =>
-      val p = new org.apache.hadoop.fs.Path(genDir(i))
-      try { if (fs.exists(p)) fs.delete(p, true) } catch { case _: Throwable => () }
+  def compact(buckets: Int = 8): Unit =
+    ledger.compact(retire = true, bestEffort = true) { (c, g) =>
+      layout.fold(layout.asOf(c, g), g, buckets)
     }
-    if (prevCompacted >= 0) {
-      val p = new org.apache.hadoop.fs.Path(compactDir(prevCompacted))
-      try { if (fs.exists(p)) fs.delete(p, true) } catch { case _: Throwable => () }
-    }
-  }
 
   private def writeGen(g: Long, rows: DataFrame): Unit =
     rows.select(col("doc_id").cast("long"), col("band").cast("int"),
       col("band_key").cast("long"))
-      .write.mode("overwrite").parquet(genDir(g))
+      .write.mode("overwrite").parquet(ledger.genDir(g))
 
   /** First ingest: band `docs` and commit generation 0. Idempotent — a
     * bootstrap over an already-bootstrapped index is a no-op.
     */
   def bootstrap(docs: DataFrame): Unit = if (committedGen < 0) {
-    writeGen(0L, Dedup.minhashBands(docs, n, k, bands))
-    store.commitAll(ctx, Map("bands" -> 0L) ++
-      StoreParams.stamp(Map("n" -> n, "k" -> k, "bands" -> bands)))
+    ledger.advance(None, _ => StoreParams.stamp(Map("n" -> n, "k" -> k, "bands" -> bands)))(
+      writeGen(_, Dedup.minhashBands(docs, n, k, bands)))
   }
 
   /** One incremental ingest: sweep `delta` against the committed index
@@ -315,12 +225,9 @@ final class LshBandIndex(spark: SparkSession, dir: String,
     // already happened and re-appending would duplicate the generation)
     val runSlot = if (runKey.isEmpty) "" else
       "run_" + java.lang.Integer.toHexString(runKey.hashCode)
-    val replayed = runKey.nonEmpty && store.get(runSlot, ctx).isDefined
-    if (!replayed) {
-      val next = committedGen + 1
-      writeGen(next, dBandsAll)
-      if (runKey.isEmpty) store.commit("bands", ctx, next)
-      else store.commitAll(ctx, Map("bands" -> next, runSlot -> 1L))
-    }
+    val replayed = runKey.nonEmpty && ledger.get(runSlot).isDefined
+    if (!replayed)
+      ledger.advance(None, _ => if (runKey.isEmpty) Map.empty else Map(runSlot -> 1L))(
+        writeGen(_, dBandsAll))
   }
 }

@@ -20,21 +20,18 @@ import graft.operators.Similarity
   * are delta-sized. Retraining codebooks is a REBUILD — a new index root,
   * never an in-place mutation.
   *
-  * Layout and commit discipline mirror [[IvfIndex]]: codebooks live at
-  * `dir/books` (m × codes rows of Dim/m floats — driver metadata, the
-  * seed-table pattern), code rows in sequential generation dirs
-  * `gen-0..gen-G`, and the committed watermark advances via the bookmark
-  * store's atomic properties-file rename only after the generation's
-  * parquet is fully written. A crashed append leaves an uncommitted
-  * generation readers never see.
+  * Codebooks live at `dir/books` (m × codes rows of Dim/m floats —
+  * driver metadata, the seed-table pattern); code rows live in
+  * generation dirs `gen-0..gen-G` under the store's [[GenerationLedger]]
+  * (watermark slot `encode`, base slot `base`).
   *
   * Query time is ADC ([[Similarity.pqAdcTopK]]): per query an m×codes
   * lookup table of subspace partial dots (codebook-sized work on the
   * broadcast query side), so the stored-code scan does m `element_at`
   * lookups per pair — the arithmetic matches the narrow representation.
-  * No compaction operation exists, for the [[IvfIndex]] reason: the probe
-  * consumes the stored codes via a broadcast join that never shuffles the
-  * stored side, however many generations it spans.
+  * The probe consumes the stored codes via a broadcast join that never
+  * shuffles the stored side, however many generations it spans, so
+  * [[compact]] only bounds listing cost and fragment count.
   */
 final class PqIndex(spark: SparkSession, dir: String,
                     m: Int = 8, codes: Int = 16) extends MaintainedStore {
@@ -43,28 +40,19 @@ final class PqIndex(spark: SparkSession, dir: String,
   // flat code store's only query knob (shortlist) is per-call, so no
   // committed operating point to go stale
   def kind: String = "pq"
-  def pointSemantics: Boolean = false
-  def pointGen: Option[Long] = None
-  def pointProbe: Option[Int] = None
 
-  private val store = new BookmarkStore(dir)
-  private val ctx = "pq_index"
-  private def genDir(g: Long) = s"$dir/gen-$g"
-  private def baseDir(g: Long) = s"$dir/base-$g"
+  protected val ledger = new GenerationLedger(spark, dir, "pq_index", "encode", "base")
   private def booksDir = s"$dir/books"
   // m/codes shape the stored code rows and the ADC tables: reopening with
   // different values makes every lookup read codebook entries that were
   // never trained — fail at open, never mis-score (FAISS-header rule)
-  StoreParams.validate(store, ctx, dir, Map("m" -> m, "codes" -> codes))
-
-  /** Highest committed code generation; -1 = empty index. */
-  def committedGen: Long = store.get("encode", ctx).getOrElse(-1L)
+  ledger.validate(Map("m" -> m, "codes" -> codes))
 
   /** The fit-time hyperparameters STAMPED at bootstrap — see
     * [[IvfPqIndex.fittedParams]]. Empty for pre-stamp artifacts.
     */
   def fittedParams: Map[String, Long] =
-    Seq("m", "codes").flatMap(k => store.get(s"param.$k", ctx).map(k -> _)).toMap
+    Seq("m", "codes").flatMap(k => ledger.get(s"param.$k").map(k -> _)).toMap
 
   /** The frozen codebooks, collected as O(m·codes·Dim/m) driver
     * metadata — the seed-table read, never data-sized. MEMOIZED per
@@ -84,7 +72,7 @@ final class PqIndex(spark: SparkSession, dir: String,
                        bks: Map[(Int, Int), Seq[Float]]): Unit =
     Similarity.pqEncode(vectors, bks, m, codes)
       .select(col("vec_id").cast("long"), col("codes"))
-      .write.mode("overwrite").parquet(genDir(g))
+      .write.mode("overwrite").parquet(ledger.genDir(g))
 
   /** First ingest: train codebooks on the bootstrap corpus (the
     * deterministic Lloyd discipline of [[Similarity.pqTrain]] — seeds =
@@ -102,9 +90,8 @@ final class PqIndex(spark: SparkSession, dir: String,
       trained.toSeq.map { case ((s, c), w) => (s, c, w) }
         .toDF("sub", "code", "w")
         .coalesce(1).write.mode("overwrite").parquet(booksDir)
-      writeGen(0L, corpus, trained)
-      store.commitAll(ctx,
-        Map("encode" -> 0L) ++ StoreParams.stamp(Map("m" -> m, "codes" -> codes)))
+      ledger.advance(None, _ => StoreParams.stamp(Map("m" -> m, "codes" -> codes)))(
+        writeGen(_, corpus, trained))
     }
 
   /** One incremental ingest: encode ONLY `delta` against the frozen
@@ -112,89 +99,42 @@ final class PqIndex(spark: SparkSession, dir: String,
     * delta × (m·codes) sub-dot argmins — nothing touches the stored
     * corpus.
     */
-  def append(delta: DataFrame): Unit = {
-    val g = committedGen
-    require(g >= 0, "append before bootstrap: the index has no codebooks")
-    writeGen(g + 1, delta, books)
-    store.commit("encode", ctx, g + 1)
-  }
+  def append(delta: DataFrame): Unit = appendGen(delta, None)
 
-  /** Exactly-once streaming ingest — [[IvfIndex.appendBatch]]'s
-    * discipline for the code store: one micro-batch = one committed
-    * generation, idempotent under foreachBatch redelivery.
+  /** Exactly-once streaming ingest: one micro-batch = one committed
+    * generation; a replayed batch id is a no-op ([[GenerationLedger.advance]]).
     */
-  def appendBatch(delta: DataFrame, batchId: Long): Unit = {
-    if (store.get("last_batch", ctx).exists(_ >= batchId)) return
-    val g = committedGen
-    require(g >= 0, "append before bootstrap: the index has no codebooks")
-    writeGen(g + 1, delta, books)
-    store.commitAll(ctx, Map("encode" -> (g + 1), "last_batch" -> batchId))
+  def appendBatch(delta: DataFrame, batchId: Long): Unit = appendGen(delta, Some(batchId))
+
+  private def appendGen(delta: DataFrame, batchId: Option[Long]): Unit = {
+    require(committedGen >= 0, "append before bootstrap: the index has no codebooks")
+    ledger.advance(batchId)(writeGen(_, delta, books))
   }
-
-  /** Generation the last [[compact]] folded through; -1 = never
-    * compacted.
-    */
-  def compactedThrough: Long = store.get("base", ctx).getOrElse(-1L)
-
-  /** Directories a committed-view reader must list/scan right now
-    * ([[IvfIndex.fragmentCount]]) — O(1) metadata arithmetic.
-    */
-  def fragmentCount: Long = {
-    // base read BEFORE the watermark (the [[codesDf]] rule): a concurrent
-    // compact between the two slot reads must degrade to a stale-but-safe
-    // base, never a refused base-ahead-of-watermark crash
-    val base = compactedThrough
-    val g = committedGen
-    if (g < 0) 0L else Generations.dirs(base, g, genDir, baseDir).size.toLong
-  }
-
-  /** The compaction policy predicate ([[IvfIndex.compactionDue]]). */
-  def compactionDue(maxFragments: Int): Boolean =
-    maxFragments >= 1 && fragmentCount > maxFragments
 
   /** Every committed code row (vec_id, codes): the compacted base (if
     * one exists) plus the generations committed after it.
     */
   def codesDf: DataFrame = {
-    // base read BEFORE the watermark ([[IvfPqIndex.rowsDf]]'s rule): a
-    // compact committing between the two slot reads could otherwise hand
-    // Generations a base ahead of the captured g (which it refuses)
-    val base = compactedThrough
-    val g = committedGen
+    val (base, g) = ledger.view
     require(g >= 0, "the index is empty")
-    Generations.readAsOf(spark, base, g, genDir, baseDir)
+    ledger.readAsOf(base, g)
   }
 
-  /** COMPACTION — [[IvfPqIndex.compact]]'s discipline for the flat code
-    * store. The ADC scan reads every code row by design (no coarse
-    * structure to prune on), so the win here is listing cost O(1) in
-    * ingest history and full row groups instead of per-micro-batch
-    * fragments; rows are clustered by vec_id for the shortlist re-rank
-    * join. Same crash-safety (base written before the slot renames in),
-    * watermark-capture (the fold scans exactly the captured watermark's
-    * dirs, never the live view), single-writer discipline, and opt-in
-    * listing-based retirement.
+  /** COMPACTION for the flat code store. The ADC scan reads every code
+    * row by design (no coarse structure to prune on), so the win here is
+    * listing cost O(1) in ingest history and full row groups instead of
+    * per-micro-batch fragments; rows are clustered by vec_id for the
+    * shortlist re-rank join. Protocol: [[GenerationLedger.compact]];
+    * retirement is opt-in.
     */
-  def compact(retireSuperseded: Boolean = false): Unit = {
-    // base read BEFORE the watermark — the uniform reader rule
-    // ([[fragmentCount]]/[[codesDf]]): base-first can only yield a
-    // stale-but-safe base, never one ahead of the captured watermark
-    val prev = compactedThrough
-    val g = committedGen
-    require(g >= 0, "compact before bootstrap: the index has no rows")
-    if (g == prev) {
-      // honor a requested retirement sweep even when the fold is a no-op
-      // (a prior no-retire compact's superseded dirs would leak forever)
-      if (retireSuperseded) Generations.retireThrough(spark, dir, g)
-      return
+  def compact(retireSuperseded: Boolean = false): Unit =
+    ledger.compact(retireSuperseded) { (base, g) =>
+      ledger.readAsOf(base, g)
+        .repartitionByRange(col("vec_id"))
+        .sortWithinPartitions("vec_id")
+        .write.mode("overwrite").parquet(ledger.baseDir(g))
+      Map.empty
     }
-    Generations.readAsOf(spark, prev, g, genDir, baseDir)
-      .repartitionByRange(col("vec_id"))
-      .sortWithinPartitions("vec_id")
-      .write.mode("overwrite").parquet(baseDir(g))
-    store.commit("base", ctx, g)
-    if (retireSuperseded) Generations.retireThrough(spark, dir, g)
-  }
 
   /** ADC top-k against the stored codes: identical output to
     * [[Similarity.pqTopK]] with the same training corpus — minus the

@@ -82,16 +82,13 @@ object StreamSink {
 
   /** Exactly-once parquet delivery for a `foreachBatch` sink: each
     * micro-batch lands in a batchId-keyed subdirectory
-    * (`outDir/batch-<id>`) and the committed watermark advances via the
-    * bookmark store's atomic properties-file rename ONLY after the
-    * parquet is fully written — the [[graft.sources.IvfPqIndex.appendBatch]]
-    * discipline for a plain output table. Crash-redelivery is therefore
-    * a no-op for committed batches (watermark check) and an overwrite
-    * for a batch whose write crashed mid-flight (its watermark never
-    * advanced, so the partial directory is invisible to readers and the
-    * redelivered write replaces it). A plain `mode("append")` parquet
-    * sink, by contrast, DUPLICATES every redelivered row (r11 verdict
-    * #3: `stream_lm_gate` shipped exactly that).
+    * (`outDir/batch-<id>`) appended through a batch-keyed
+    * [[graft.sources.GenerationLedger]] (watermark slot `last_batch`):
+    * crash-redelivery is a no-op for committed batches and an overwrite
+    * for a batch whose write crashed mid-flight (its partial directory is
+    * invisible to readers). A plain `mode("append")` parquet sink, by
+    * contrast, DUPLICATES every redelivered row (r11 verdict #3:
+    * `stream_lm_gate` shipped exactly that).
     *
     * `lineage` names the CHECKPOINT LIFETIME feeding this sink (use the
     * checkpoint location; stable across restarts of the same query, new
@@ -113,23 +110,24 @@ object StreamSink {
   def exactlyOnceParquet(outDir: String, batch: DataFrame, batchId: Long,
                          lineage: String): Unit = {
     require(lineage.nonEmpty, "lineage must name the checkpoint lifetime")
-    val store = new graft.sources.BookmarkStore(outDir)
+    val ledger = sinkLedger(batch.sparkSession, outDir)
     val h = lineageHash(lineage)
     // foreach, not get: pre-stamp artifacts stay writable and are stamped
     // on their next commit (the StoreParams validation discipline)
-    store.get("lineage", ParquetSinkCtx).foreach { prev =>
+    ledger.get("lineage").foreach { prev =>
       require(prev == h,
         s"parquet sink at $outDir was written by a different checkpoint " +
           s"lineage (stamp $prev, caller ${h}); its batch-id watermark is " +
           "meaningless for a new checkpoint — new batches below it would be " +
           "silently dropped as redeliveries. Deliver into a fresh outDir.")
     }
-    if (!store.get("last_batch", ParquetSinkCtx).exists(_ >= batchId)) {
-      batch.write.mode("overwrite").parquet(s"$outDir/batch-$batchId")
-      store.commitAll(ParquetSinkCtx,
-        Map("last_batch" -> batchId, "lineage" -> h))
-    }
+    ledger.advance(Some(batchId), _ => Map("lineage" -> h))(id =>
+      batch.write.mode("overwrite").parquet(ledger.genDir(id)))
   }
+
+  private def sinkLedger(spark: org.apache.spark.sql.SparkSession, outDir: String) =
+    new graft.sources.GenerationLedger(spark, outDir, "parquet_sink",
+      graft.sources.GenerationLedger.LastBatch, "base", tailPrefix = "batch")
 
   /** 64-bit FNV-1a of the lineage string — [[graft.sources.BookmarkStore]]
     * slots hold longs, so the identity is stamped as a hash; a collision
@@ -152,16 +150,9 @@ object StreamSink {
     */
   def committedParquet(spark: org.apache.spark.sql.SparkSession,
                        outDir: String): DataFrame = {
-    val store = new graft.sources.BookmarkStore(outDir)
-    // read order matters (r13 ADVICE): `base` BEFORE `last_batch`. The two
-    // gets are separate file reads; a concurrent compact committing
-    // between them could otherwise surface base > watermark (rows beyond
-    // the captured view). Any committed base is <= some already-committed
-    // last_batch, so base-first can only yield a stale-but-safe base.
-    val base = store.get("base", ParquetSinkCtx).getOrElse(-1L)
-    val last = store.get("last_batch", ParquetSinkCtx)
-    require(last.isDefined, s"no committed batches under $outDir")
-    committedUpTo(spark, outDir, base, last.get)
+    val (base, last) = sinkLedger(spark, outDir).view
+    require(last >= 0, s"no committed batches under $outDir")
+    committedUpTo(spark, outDir, base, last)
   }
 
   /** The committed view bounded to CAPTURED watermarks — what
@@ -178,81 +169,31 @@ object StreamSink {
       (if (base >= 0) Seq(new org.apache.hadoop.fs.Path(outDir, s"base-$base"))
        else Seq.empty) ++
         fs.listStatus(path).toSeq.map(_.getPath)
-          // FULL-NAME parse ([[graft.sources.Generations.retireThrough]]'s
-          // rule): an unanchored findFirstMatchIn would read a stray
+          // FULL-NAME parse: an unanchored match would read a stray
           // `batch-3-bak` or `rebatch-7` dir as committed data
-          .filter(p => batchIdOf(p.getName).exists(b => b > base && b <= w))
+          .filter(p => graft.sources.GenerationLedger.idOf("batch", p.getName)
+            .exists(b => b > base && b <= w))
     spark.read.parquet(dirs.map(_.toString): _*)
   }
 
-  /** COMPACTION for the parquet ledger sink — the
-    * [[graft.sources.IvfPqIndex.compact]] discipline applied to the
-    * OUTPUT table: one directory per micro-batch is what buys
-    * exactly-once (the batch boundary IS the commit unit), but a
-    * long-lived query accumulates thousands of them and every reader
-    * pays listing + per-fragment footers forever. Fold the committed
-    * view into `base-<watermark>`; readers then touch one consolidated
-    * dir plus only the batches committed since. The base is fully
-    * written BEFORE the `base` slot renames in (a crashed compact leaves
-    * an orphan dir readers never list), the fold scans exactly the
-    * captured `(base, watermark]` view (never the live one a running
-    * query could advance mid-fold), redelivery semantics are untouched
-    * (the `last_batch` watermark still governs), and retirement of
-    * superseded dirs is opt-in — in-flight readers own the grace period.
-    *
-    * WRITER DISCIPLINE ([[graft.sources.IvfPqIndex.compact]]'s rule):
-    * the properties-file commit is a whole-file read-modify-write, so
-    * run compaction from the delivering query's own process between
-    * micro-batches — a second concurrent writer handle can erase the
-    * sink's `last_batch`/`lineage` commit (lost update).
+  /** COMPACTION for the parquet ledger sink: one directory per
+    * micro-batch is what buys exactly-once (the batch boundary IS the
+    * commit unit), but a long-lived query accumulates thousands of them
+    * and every reader pays listing + per-fragment footers forever. Fold
+    * the committed view into `base-<watermark>`; readers then touch one
+    * consolidated dir plus only the batches committed since. Commit
+    * order, crash safety and the single-writer rule (run it from the
+    * delivering query's own process between micro-batches) are
+    * [[graft.sources.GenerationLedger.compact]]'s; redelivery semantics
+    * are untouched, and retirement of superseded dirs is opt-in —
+    * in-flight readers own the grace period.
     */
   def compactParquet(spark: org.apache.spark.sql.SparkSession,
                      outDir: String, retireSuperseded: Boolean = false): Unit = {
-    val store = new graft.sources.BookmarkStore(outDir)
-    // base read BEFORE the watermark — the uniform reader rule (the
-    // index stores' fragmentCount/compact order): base-first can only
-    // yield a stale-but-safe base, never one ahead of the captured
-    // watermark that committedUpTo would mis-handle
-    val base = store.get("base", ParquetSinkCtx).getOrElse(-1L)
-    val last = store.get("last_batch", ParquetSinkCtx)
-    require(last.isDefined, s"no committed batches under $outDir")
-    val w = last.get
-    if (base == w) {
-      // fold is a no-op but a REQUESTED retirement sweep still runs — a
-      // prior no-retire compact's superseded dirs must not leak forever
-      if (retireSuperseded) retireParquetThrough(spark, outDir, w)
-      return
-    }
-    // fold EXACTLY the captured (base, w] view — never the live one
-    committedUpTo(spark, outDir, base, w)
-      .write.mode("overwrite").parquet(s"$outDir/base-$w")
-    store.commit("base", ParquetSinkCtx, w)
-    if (retireSuperseded) retireParquetThrough(spark, outDir, w)
-  }
-
-  /** Full-name directory-id parse — anchored, never a substring match: an
-    * unanchored regex made the retire sweep DELETE any dir whose name
-    * merely contained `batch-<n>` (a `batch-3-bak` backup, a `rebatch-7`
-    * sibling) and the reader treat it as committed data.
-    */
-  private def batchIdOf(name: String): Option[Long] =
-    if (name.startsWith("batch-")) name.stripPrefix("batch-").toLongOption
-    else None
-
-  private def baseIdOf(name: String): Option[Long] =
-    if (name.startsWith("base-")) name.stripPrefix("base-").toLongOption
-    else None
-
-  private def retireParquetThrough(spark: org.apache.spark.sql.SparkSession,
-                                   outDir: String, w: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(outDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).map(_.getPath).foreach { p =>
-      val superseded = batchIdOf(p.getName).exists(_ <= w) ||
-        baseIdOf(p.getName).exists(_ < w)
-      if (superseded) fs.delete(p, true)
+    val ledger = sinkLedger(spark, outDir)
+    ledger.compact(retireSuperseded) { (base, w) =>
+      committedUpTo(spark, outDir, base, w).write.mode("overwrite").parquet(ledger.baseDir(w))
+      Map.empty
     }
   }
-
-  private val ParquetSinkCtx = "parquet_sink"
 }

@@ -11,17 +11,17 @@ class GenerationsSpec extends AnyFunSuite {
   private def base(g: Long) = s"base-$g"
 
   test("no base: generations 0..g") {
-    assert(Generations.dirs(-1L, 2L, gen, base) ===
+    assert(GenerationLedger.dirs(-1L, 2L, gen, base) ===
       Seq("gen-0", "gen-1", "gen-2"))
   }
 
   test("base plus strictly-later generations") {
-    assert(Generations.dirs(1L, 3L, gen, base) ===
+    assert(GenerationLedger.dirs(1L, 3L, gen, base) ===
       Seq("base-1", "gen-2", "gen-3"))
   }
 
   test("base at the watermark: the base alone") {
-    assert(Generations.dirs(3L, 3L, gen, base) === Seq("base-3"))
+    assert(GenerationLedger.dirs(3L, 3L, gen, base) === Seq("base-3"))
   }
 
   test("base AHEAD of a captured watermark is REFUSED, never silently read") {
@@ -30,6 +30,6 @@ class GenerationsSpec extends AnyFunSuite {
     // ahead of g can only mean the single-writer discipline was violated
     // (a concurrent compact advanced the base between the caller's two
     // slot reads) — that must fail loudly, not degrade into future rows.
-    intercept[IllegalArgumentException] { Generations.dirs(5L, 3L, gen, base) }
+    intercept[IllegalArgumentException] { GenerationLedger.dirs(5L, 3L, gen, base) }
   }
 }
