@@ -10,15 +10,13 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = if (args.length > 1) args(1) else "/tmp/plans"
+    // comma-separated query filter, same contract as Verify
+    val toExplain =
+      SparkEntry.selected(SparkEntry.queryFilter(sys.env.getOrElse("SPARK_GRAFT_ONLY", "")))
     val spark = GraftSession.builder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
-    // comma-separated query filter, same contract as Verify
-    val only = sys.env.get("SPARK_GRAFT_ONLY").filter(_.nonEmpty)
-      .map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    toExplain.foreach { case (name, fn) =>
       try {
         val plan = fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

@@ -1,27 +1,33 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
-import graft.functions.GraftFunctions
-import graft.operators.{AsOfJoin, Cdc, Dedup, Graph, IncrementalAgg, Intervals, KMeans, Merge, Multimodal, Packing, ParallelReports, Quantize, RangeJoin, Resample, Sampling, Sessionize, Similarity, SkewAgg, StarPipeline, TextAnalysis, Transitions}
-import graft.sources.{BookmarkStore, IncrementalReader}
-import graft.streaming.Streaming
+import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract: one registry of [[QueryDef]]s, each query declared
+  * once, next to its DuckDB oracle, in the file of its family under
+  * `graft.queries`. [[queries]] and [[oracleSql]] are the registry's two
+  * name-keyed views that Bench, Verify, Explain and StageProfile read.
   *
-  * Every operator from SURVEY.md §2 (plus the large-scale pipeline
-  * extensions) gets one entry in [[queries]]; anything expressible in ANSI
-  * SQL also gets a DuckDB oracle in [[oracleSql]] with IDENTICAL column
-  * aliases and a deterministic ORDER BY on both sides. Float aggregates are
-  * round(x, 2) on both sides (Spark and DuckDB disagree in low bits on
-  * double-sum order).
+  * Every oracle uses IDENTICAL column aliases and a deterministic ORDER BY
+  * on both sides. Float aggregates are round(x, 2) on both sides (Spark
+  * and DuckDB disagree in low bits on double-sum order).
   */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
+
+  /** Version token of the fixture BUILD RECIPE itself — bump whenever any
+    * persistent fixture's build script changes (the %50 history split,
+    * the sweep grids, the per-source append loop). Folded into the
+    * on-disk root name next to the data fingerprint (r16 ADVICE): a
+    * recipe change must re-key the fixture, or the new code silently
+    * reopens the previous commit's on-disk build and engine output
+    * diverges from the updated oracle until target/ is wiped by hand —
+    * StoreParams only catches constructor-param drift like nlist.
+    */
+  private[graft] val FixtureRecipeVersion = 1
 
   /** CROSS-SESSION persisted fixture root (r15 verdict #6): the fleet
     * queries read PRE-EXISTING read-only stores — production's cost
@@ -42,17 +48,6 @@ object SparkEntry {
     * store a query mutates must stay query-private in a fresh scratch
     * root per execution (the r15 `ivfpq_maintain` lesson).
     */
-  /** Version token of the fixture BUILD RECIPE itself — bump whenever any
-    * persistent fixture's build script changes (the %50 history split,
-    * the sweep grids, the per-source append loop). Folded into the
-    * on-disk root name next to the data fingerprint (r16 ADVICE): a
-    * recipe change must re-key the fixture, or the new code silently
-    * reopens the previous commit's on-disk build and engine output
-    * diverges from the updated oracle until target/ is wiped by hand —
-    * StoreParams only catches constructor-param drift like nlist.
-    */
-  private[graft] val FixtureRecipeVersion = 1
-
   private[graft] def persistentFixtureDir(s: SparkSession, name: String,
                                           dataDir: String)(build: String => Unit): String =
     // memoized through the VERSIONED lookup (r16 ADVICE): the key
@@ -103,8183 +98,41 @@ object SparkEntry {
       root.getAbsolutePath
     }
 
-  /** The era-drift IVF fixture shared by `index_staleness_gate` and
-    * `fleet_report`'s stale row: bootstrap on the history slice, maintain
-    * (validates + stamps the operating point at generation 0), then one
-    * more ingest lands — the point is now one generation stale and both
-    * consumers must surface it. Read-only after the build, so it
-    * persists across sessions ([[persistentFixtureDir]]).
+  /** Every declared query, family by family. Names are distinct and every
+    * oracle is non-empty: a copy-pasted duplicate fails here instead of
+    * silently replacing its twin the way a `Map` literal would.
     */
-  private def staleIvfStore(s: SparkSession, dir: String): graft.sources.IvfIndex = {
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val hist = emb.filter(col("vec_id") % 50 =!= 0)
-    val root = persistentFixtureDir(s, "stale-ivf", dir) { p =>
-      val i = new graft.sources.IvfIndex(s, p, nlist = 16)
-      i.bootstrap(hist)
-      // era boundary: validate + stamp against the bootstrap view
-      i.maintain(hist, hist.limit(0), emb.filter(col("vec_id") < 8),
-        k = 5, recallFloor = 0.9, cosineFloor = 0.22, maxFracBelow = 1.0,
-        nprobes = Seq(1, 2, 4, 8, 16))
-      // one ingest past the stamp: the staleness the gates surface
-      i.append(emb.filter(col("vec_id") % 50 === 0))
-    }
-    new graft.sources.IvfIndex(s, root, nlist = 16)
+  lazy val registry: Seq[QueryDef] = {
+    val defs = StarQueries.defs ++ DedupQueries.defs ++ VectorQueries.defs ++
+      IvfQueries.defs ++ SearchQueries.defs ++ CorpusQueries.defs ++
+      StreamQueries.defs ++ FleetQueries.defs ++ LayoutQueries.defs ++
+      RelationalQueries.defs
+    val twice = defs.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    require(twice.isEmpty, s"query declared more than once: ${twice.toSeq.sorted.mkString(", ")}")
+    val blank = defs.filter(_.oracle.trim.isEmpty).map(_.name)
+    require(blank.isEmpty, s"query with an empty oracle: ${blank.mkString(", ")}")
+    defs
   }
 
-  /** `fleet_report`'s HEALTHY row (and `fleet_maintain`'s skipped one):
-    * the same bootstrap + maintain as [[staleIvfStore]] but with no
-    * ingest after the stamp — the point is validated against the current
-    * committed view (lag 0), one fragment. Never mutated (the fleet loop
-    * only acts on DUE stores, and this one never is), so it persists
-    * across sessions too.
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(d => d.name -> d.build).toMap
+
+  lazy val oracleSql: Map[String, String] =
+    registry.map(d => d.name -> d.oracle).toMap
+
+  /** The query-name filter every main takes (`SPARK_GRAFT_ONLY`):
+    * comma-separated names, blank = no filter. A name no query declares
+    * fails fast, named, instead of quietly selecting nothing.
     */
-  private def freshIvfStore(s: SparkSession, dir: String): graft.sources.IvfIndex = {
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val hist = emb.filter(col("vec_id") % 50 =!= 0)
-    val root = persistentFixtureDir(s, "fleet-ivf-fresh", dir) { p =>
-      val i = new graft.sources.IvfIndex(s, p, nlist = 16)
-      i.bootstrap(hist)
-      i.maintain(hist, hist.limit(0), emb.filter(col("vec_id") < 8),
-        k = 5, recallFloor = 0.9, cosineFloor = 0.22, maxFracBelow = 1.0,
-        nprobes = Seq(1, 2, 4, 8, 16))
-    }
-    new graft.sources.IvfIndex(s, root, nlist = 16)
-  }
-
-  /** `fleet_report`'s FRAGMENTED row: an inverted index that committed
-    * one generation per distinct `source` family of the documents sample
-    * (bootstrap on the first source, one append per remaining one) and
-    * never compacted — so its fragment count is a DATA-DERIVED number
-    * the oracle re-computes from count(DISTINCT source), not a constant.
-    * The source list is driver metadata (tens of values). Read-only
-    * after the build (`fleet_maintain` compacts a query-PRIVATE copy,
-    * never this one), so it persists across sessions.
-    */
-  private def fleetInvStore(s: SparkSession, dir: String): graft.sources.InvertedIndex = {
-    val root = persistentFixtureDir(s, "fleet-inv", dir) { p =>
-      val i = new graft.sources.InvertedIndex(s, p)
-      fleetInvBuild(s, dir, i)
-    }
-    new graft.sources.InvertedIndex(s, root)
-  }
-
-  /** The fragmented-inverted-index build script, shared between the
-    * persisted read-only fixture and `fleet_maintain`'s query-private
-    * acted-on copy: bootstrap on the first source family, one committed
-    * generation per remaining one, never compacted.
-    */
-  private def fleetInvBuild(s: SparkSession, dir: String,
-                            i: graft.sources.InvertedIndex): Unit = {
-    val docs = Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
-      .select(col("doc_id"), col("text"), col("source"))
-    val sources = docs.select(col("source")).distinct()
-      .collect().map(_.getString(0)).sorted
-    i.bootstrap(docs.filter(col("source") === sources.head)
-      .select(col("doc_id"), col("text")))
-    sources.tail.foreach(src => i.append(
-      docs.filter(col("source") === src).select(col("doc_id"), col("text"))))
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // S7 hash aggregation, TPC-H Q1 flavor: partial+final HashAggregate.
-    "q1_agg" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    // S2+S3+S4: rename -> chained broadcast inner equi-join -> projection.
-    "star_denorm" -> ((s, dir) =>
-      StarPipeline.denormalized(s, dir)
-        .orderBy(col("l_orderkey"), col("l_linenumber"))),
-
-    // S7 report A over the denormalized frame (users-report semantics).
-    "report_supplier" -> ((s, dir) =>
-      StarPipeline.supplierReport(StarPipeline.denormalized(s, dir))
-        .orderBy(col("s_suppkey"), col("register_date"))),
-
-    // S7+S8 report B, collapsed to one output partition like the reference.
-    "report_part_brand" -> ((s, dir) =>
-      StarPipeline.partBrandReport(StarPipeline.denormalized(s, dir))
-        .repartition(1)
-        .orderBy(col("p_brand"), col("register_date"))),
-
-    // S6+S11: both reports run concurrently from driver threads over one
-    // cached frame, each pinned to its FAIR pool; results union'd.
-    "parallel_reports" -> ((s, dir) => {
-      val shared = StarPipeline.denormalized(s, dir).cache()
-      // materialize once before the fan-out: two threads racing a cold
-      // cache would each compute the full join (SURVEY.md §7.3)
-      shared.count()
-      val specs = Seq(
-        ParallelReports.ReportSpec("supplier", "1", df =>
-          StarPipeline.supplierReport(df)
-            .select(concat(col("s_suppkey"), lit("|"), col("s_name")).as("report_key"),
-              col("register_date"), col("total"))
-            .withColumn("report", lit("supplier"))),
-        ParallelReports.ReportSpec("part_brand", "2", df =>
-          StarPipeline.partBrandReport(df)
-            .select(col("p_brand").as("report_key"), col("register_date"), col("total"))
-            .withColumn("report", lit("part_brand"))))
-      // each report materializes exactly once on its pool thread by
-      // writing to its (scratch parquet) sink — the reference's shape:
-      // every report lands in a store (S10). Unlike a localCheckpoint,
-      // this leaves NO block-manager residue: checkpoint blocks have no
-      // public unpersist and accumulate across runs (r5: warm runs
-      // degraded 4.4s -> 8s -> 11.6s from exactly that), while the
-      // read-back union is a dimension-sized scan independent of `shared`.
-      // Sinks live under the spark-visible Scratch root (r6 ADVICE: a
-      // java.io.tmpdir sink is driver-local and leaks across runs) and are
-      // deleted at JVM exit — the returned frame still reads them lazily,
-      // so eager deletion inside the query would be wrong
-      val results = ParallelReports.run(s, shared, specs) { df =>
-        val sink = Scratch.create(s, "graft-report")
-        df.write.mode("overwrite").parquet(sink)
-        s.read.parquet(sink)
-      }
-      val out = results.map(_._2).reduce(_ union _)
-        .orderBy(col("report"), col("report_key"), col("register_date"))
-      // synchronous: an async unpersist races the next run's cache() of
-      // the same plan and forces eviction churn mid-query
-      shared.unpersist(blocking = true)
-      out
-    }),
-
-    // The reference's WHOLE job end-to-end (SURVEY.md §3): bookmark state
-    // says half the fact table was already ingested (its partial report
-    // sits in the warehouse dir); one incremental run reads ONLY the
-    // delta, fans out both reports under FAIR pools, appends, and commits
-    // the bookmark after both sinks succeed. The consumer view re-
-    // aggregates the appended partials — equal to a full recompute.
-    "incr_star_e2e" -> ((s, dir) => {
-      val stateDir = graft.TempDirs.create("graft-isj")
-      val outDir = graft.TempDirs.create("graft-isj-out")
-      val store = new BookmarkStore(stateDir)
-      val reader = new IncrementalReader(s, dir, store)
-      val keyCol = Tables.bookmarkKey("lineitem")
-      val mid = reader.maxKey(Tables.lineitem(s, dir), keyCol).getOrElse(0L) / 2
-      store.commit("lineitem", "star_job", mid)
-      StarPipeline.supplierReport(StarPipeline.denormalizedFrom(
-          Tables.lineitem(s, dir).filter(col(keyCol) <= mid),
-          Tables.supplier(s, dir), Tables.part(s, dir)))
-        .write.mode("append").parquet(s"$outDir/supplier_report")
-      graft.operators.IncrementalStarJob.run(s, dir, store) { (name, df) =>
-        df.write.mode("append").parquet(s"$outDir/$name")
-      }
-      s.read.parquet(s"$outDir/supplier_report")
-        .groupBy(col("s_suppkey"), col("s_name"), col("register_date"))
-        .agg(round(sum(col("total")), 2).as("total"))
-        .orderBy(col("s_suppkey"), col("register_date"))
-    }),
-
-    // S10 staged warehouse load, proven exactly-once END TO END: the
-    // reference's signature failure mode is a re-run duplicating every
-    // target row (medium/transaction_by_subscription_report_messed.jpeg).
-    // Here the same report is delivered TWICE through
-    // JdbcSink.stagedBulkLoadExactlyOnce under one run id (a simulated
-    // redelivery); the run-ledger transaction makes the second load a
-    // metadata no-op, and the oracle checks the FINAL warehouse state —
-    // any duplicate reload would double `n`/`total` and fail the hash.
-    "jdbc_staged_load" -> ((s, dir) => {
-      val tmp = graft.TempDirs.create("graft-jdbc")
-      val url = s"jdbc:derby:$tmp/db;create=true"
-      val report = Tables.orders(s, dir)
-        .groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("total"))
-      // warehouse-specific COPY verb (Derby's bulk import; Redshift would
-      // be `COPY ... FROM 's3://...'`) — caller-owned per the sink contract
-      def derbyCopy(table: String, path: String): String =
-        s"CALL SYSCS_UTIL.SYSCS_IMPORT_TABLE(null, '${table.toUpperCase}', '$path', null, null, null, 0)"
-      val ddl = Seq(
-        "CREATE TABLE rpt (o_orderpriority VARCHAR(20), n BIGINT, total DOUBLE)",
-        graft.sources.JdbcSink.loadLedgerDdl("load_ledger"))
-      val loaded = graft.sources.JdbcSink.stagedBulkLoadExactlyOnce(
-        report, url, "rpt", s"$tmp/stage1", derbyCopy,
-        runId = "run-1", preactions = ddl)
-      // require, not assert: the redelivery check IS the exactly-once
-      // proof, and JVM assertions vanish under -Xdisable-assertions while
-      // the oracle would still pass on final state alone
-      require(loaded > 0, "first delivery must load")
-      // redelivery: same runId, fresh staging dir, no preactions (Derby
-      // lacks IF NOT EXISTS; on Redshift the same DDL would rerun) —
-      // must be a no-op
-      val redelivered = graft.sources.JdbcSink.stagedBulkLoadExactlyOnce(
-        report, url, "rpt", s"$tmp/stage2", derbyCopy, runId = "run-1")
-      require(redelivered == 0, "redelivery must be deduplicated by the ledger")
-      s.read.format("jdbc").option("url", url).option("dbtable", "rpt").load()
-        .select(col("o_orderpriority").as("o_orderpriority"),
-          col("n").cast("long").as("n"), col("total").as("total"))
-        .orderBy(col("o_orderpriority"))
-    }),
-
-    // Streaming twin of jdbc_staged_load: a real writeStream.foreachBatch
-    // query delivers per-batch PARTIAL aggregates into Derby through
-    // StreamSink.exactlyOnceJdbc, and every batch is delivered TWICE (a
-    // forced crash-redelivery) — the (query, batchId) ledger makes the
-    // second delivery a no-op inside one warehouse transaction. The
-    // consumer view re-aggregates the partials; the oracle checks that
-    // final state equals the aggregate computed once from parquet, so any
-    // duplicated batch would double counts and fail the hash.
-    "stream_ledger_sink" -> ((s, dir) => {
-      val tmp = graft.TempDirs.create("graft-ledger")
-      val url = s"jdbc:derby:$tmp/db;create=true"
-      def exec(sql: String): Unit = {
-        val c = java.sql.DriverManager.getConnection(url)
-        try { val st = c.createStatement(); try st.execute(sql) finally st.close() }
-        finally c.close()
-      }
-      exec("CREATE TABLE stream_rpt (event_type VARCHAR(20), n BIGINT, total DOUBLE)")
-      exec(graft.streaming.StreamSink.ledgerDdl("stream_ledger"))
-      val sink = graft.streaming.StreamSink.exactlyOnceJdbc(url,
-        "INSERT INTO stream_rpt VALUES (?, ?, ?)", "stream_ledger", "ledger_q") {
-        (ps, r) =>
-          ps.setString(1, r.getString(0)); ps.setLong(2, r.getLong(1))
-          ps.setDouble(3, r.getDouble(2))
-      }
-      val q = Streaming.events(s, dir)
-        .select(col("event_type"), col("value"))
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // bounded per-batch partial aggregate (unrounded: the consumer
-          // re-aggregates, rounding once at the end)
-          val partial = batch.groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-          sink(partial, id)
-          sink(partial, id) // forced duplicate delivery of every batch
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .start()
-      q.awaitTermination()
-      s.read.format("jdbc").option("url", url).option("dbtable", "stream_rpt").load()
-        .groupBy(col("event_type").as("event_type"))
-        .agg(sum(col("n")).cast("long").as("n"),
-          round(sum(col("total")), 2).as("total"))
-        .orderBy(col("event_type"))
-    }),
-
-    // S1 incremental scan: bookmark = floor(max(event_id)/2) committed to a
-    // real BookmarkStore, then a second "run" reads strictly beyond it with
-    // the predicate pushed into the parquet scan.
-    "incremental_scan" -> ((s, dir) => {
-      val stateDir = graft.TempDirs.create("graft-bm")
-      val store = new BookmarkStore(stateDir)
-      val reader = new IncrementalReader(s, dir, store)
-      val firstRunMax =
-        reader.maxKey(Tables.events(s, dir), Tables.bookmarkKey("events")).getOrElse(0L)
-      store.commit("events", "incr_scan", firstRunMax / 2)
-      reader.read("events", "incr_scan")
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        .orderBy(col("event_id"))
-    }),
-
-    // S1's JDBC half (the reference's actual source is RDS over JDBC,
-    // glue_rds_to_redshift.py:28-40): events loaded into an embedded Derby
-    // warehouse, bookmark committed at max/2, then an incremental JDBC
-    // read — the bookmark predicate compiles into the remote WHERE clause
-    // (pushdown pinned in BookmarkSpec) and the delta is range-partitioned
-    // on the key across 4 parallel queries (Glue's hashpartitions).
-    "incremental_scan_jdbc" -> ((s, dir) => {
-      val tmp = graft.TempDirs.create("graft-jdbc-src")
-      val url = s"jdbc:derby:$tmp/db;create=true"
-      val events = Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      events.write.jdbc(url, "events_src", new java.util.Properties())
-      val store = new BookmarkStore(graft.TempDirs.create("graft-bm-jdbc"))
-      val reader = new IncrementalReader(s, dir, store)
-      val firstRunMax = reader.maxKey(events, "event_id").getOrElse(0L)
-      store.commit("events_src", "incr_jdbc", firstRunMax / 2)
-      reader.readJdbc(url, "events_src", "event_id", "incr_jdbc", numPartitions = 4)
-        .orderBy(col("event_id"))
-    }),
-
-    // ===== Training-data pipeline extensions (SURVEY.md §7.2 step 5) =====
-
-    // Exact dedup: corpus unioned with a re-ingested copy (the reference's
-    // duplicate-reload failure mode, medium/..._messed.jpeg) — one hash
-    // aggregation keeps min doc_id per distinct text.
-    // Incremental dedup across discrete runs: the delta (new docs + a
-    // re-ingested slice of history + a doubled slice of itself) anti-joins
-    // the historical FINGERPRINT store — O(delta + store), history text
-    // never re-read. The bookmark story applied to dedup.
-    "dedup_incremental" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val mid = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      val history = docs.filter(col("doc_id") <= mid)
-      val hfp = history.select(GraftFunctions.poly_hash(col("text")).as("fingerprint"))
-        .distinct()
-      val delta = docs.filter(col("doc_id") > mid)
-        .union(history.filter(col("doc_id") % 7 === 0)
-          .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-        .union(docs.filter(col("doc_id") > mid && col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-      Dedup.incrementalExact(hfp, delta).orderBy(col("keep_id"))
-    }),
-
-    "dedup_exact" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val corpus = docs.union(docs.withColumn("doc_id", col("doc_id") + lit(1000000L)))
-      Dedup.exact(corpus).orderBy(col("keep_id"))
-    }),
-
-    // C4-style sub-document dedup: 8-token chunk instances survive only as
-    // their global first occurrence; per-doc kept/total + kept fraction.
-    "dedup_lines" -> ((s, dir) =>
-      Dedup.chunkDedup(
-        Tables.documents(s, dir).select(col("doc_id"), col("text")), 8)
-        .orderBy(col("doc_id"))),
-
-    // Near-dup by 3-gram Jaccard >= 0.6 via shingle-key join (no cross join).
-    "dedup_ngram_jaccard" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(
-        Tables.documents(s, dir).filter(col("doc_id") % 10 === 0), 3, 0.6)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // Skew-safe variant: candidate pairs only from shingles with document
-    // frequency <= 40 (stop-shingle pruning bounds every join key's
-    // fan-out), exact verification on candidates.
-    "dedup_ngram_pruned" -> ((s, dir) =>
-      Dedup.ngramJaccardPairsPruned(
-        Tables.documents(s, dir).filter(col("doc_id") % 10 === 0), 3, 0.6, maxDf = 40)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // Directed containment |A∩B|/|A| >= 0.5 over the same df-pruned
-    // shingle join — catches a short doc quoted inside a long one, which
-    // Jaccard's union-sized denominator hides. 5-gram shingles: the
-    // 3-gram space saturates on this corpus (80% of pairs over the gate
-    // — measured), 5-grams discriminate (3%).
-    "dedup_containment" -> ((s, dir) =>
-      // NOT spread (r18): A/B measured flat (3.0 -> 3.1 s) with HIGHER
-      // task-summed GC — the gram join's heavy work already runs
-      // post-exchange, so the extra text shuffle only allocates
-      Dedup.containmentPairs(
-        Tables.documents(s, dir).filter(col("doc_id") % 10 === 0),
-        n = 5, threshold = 0.5, maxDf = 40)
-        .orderBy(col("src_id"), col("dst_id"))),
-
-    // MinHash(16) banded into 4 LSH buckets -> candidates -> exact Jaccard.
-    "dedup_minhash_lsh" -> ((s, dir) =>
-      // scale-adaptive input spread (r18, guide §2.5): the single-row-group
-      // corpus file scans as ONE real task, so the shingle+minhash kernel —
-      // the engine's most expensive per-row map work — ran single-threaded
-      // until the band exchange (~0.9 s of a ~2.3 s query on 32 cores;
-      // warm median 2.23 -> 0.84 s spread). Applied at THIS call site, not
-      // inside the operator: the fixpoint consumers of the same pairs
-      // (dedup_clusters/keep_best/kfold/leakage) are stage-count-bound and
-      // MEASURABLY regress under the extra exchange (clusters ~2.8 ->
-      // ~3.4 s), and the incremental variant is delta-sized — the spread
-      // pays only where the kernel dominates the wall.
-      Dedup.minhashLshPairs(
-        Tables.spread(Tables.documents(s, dir).filter(col("doc_id") % 10 === 0),
-          col("doc_id")),
-        n = 3, k = 16, bands = 4, threshold = 0.6)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // Incremental near-dup sweep: ONLY the delta (doc_id % 50 == 0) is
-    // banded; it probes the existing corpus's band index. Emits exactly
-    // the full sweep's pairs that involve a delta doc — the invariant the
-    // oracle hashes (full mh_pairs filtered to delta-involved rows).
-    "dedup_incr_lsh" -> ((s, dir) => {
-      val universe = Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
-      Dedup.minhashLshPairsIncremental(
-        universe.filter(col("doc_id") % 50 =!= 0),
-        universe.filter(col("doc_id") % 50 === 0),
-        n = 3, k = 16, bands = 4, threshold = 0.6)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // The PERSISTED-index production shape of the same sweep: run 0
-    // bootstraps the corpus band index as a stored parquet table, run 1
-    // bands ONLY the delta, probes the stored index (the old corpus is
-    // never re-shingled), sinks the verified pairs, then appends the
-    // delta's bands commit-after-sink (bookmark discipline). Same output
-    // contract — the oracle is identical to dedup_incr_lsh.
-    "dedup_incr_lsh_indexed" -> ((s, dir) => {
-      val universe = Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), col("text"))
-      // index storage under the spark-visible scratch root (executors
-      // write/read it; the watermark properties file is driver-side O(1)
-      // state on shared storage, same contract as the job bookmark)
-      val idx = new graft.sources.LshBandIndex(
-        s, Scratch.create(s, "graft-lsh-idx"), n = 3, k = 16, bands = 4)
-      idx.bootstrap(universe.filter(col("doc_id") % 50 =!= 0))
-      // compacted = the steady-state production layout: the stored side of
-      // the probe is a bucketed scan with NO exchange (LshBandIndexSpec);
-      // output is spec-identical to the generation layout
-      idx.compact(buckets = 8)
-      val out = Scratch.create(s, "graft-lsh-sweep")
-      idx.sweepAndAppend(universe, universe.filter(col("doc_id") % 50 === 0),
-        threshold = 0.6) { pairs =>
-        pairs.write.mode("overwrite").parquet(out)
-      }
-      s.read.parquet(out).orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // The capped production sweep: same persisted index, but the delta's
-    // band rows at STOPPED keys (bucket occupancy > 4 in the compacted
-    // history — the mega-buckets lsh_band_stats surfaces) are excluded
-    // from candidate generation via a broadcast anti-join. At 100 TB this
-    // is what keeps a boilerplate-heavy ingest from enumerating a
-    // million-doc bucket's O(n^2) pairs; recall loss is bounded by the
-    // banding theorem (a pair is lost only if stopped buckets were its
-    // ONLY agreeing bands) and the oracle replays the exclusion exactly.
-    // Index build + stop list are session-cached; the warm runs time the
-    // capped delta sweep alone. runKey makes the replayed append a no-op.
-    "dedup_lsh_capped" -> ((s, dir) => {
-      val universe = Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
-        .select(col("doc_id"), col("text"))
-      val idx = IndexCache.getOrBuildVersioned(s, s"lsh-cap|$dir", dir) {
-        val i = new graft.sources.LshBandIndex(
-          s, Scratch.create(s, "graft-lsh-cap"), n = 3, k = 16, bands = 4)
-        i.bootstrap(universe.filter(col("doc_id") % 50 =!= 0))
-        i.compact(buckets = 8)
-        i
-      }
-      val out = Scratch.create(s, "graft-lsh-cap-sweep")
-      idx.sweepAndAppend(universe, universe.filter(col("doc_id") % 50 === 0),
-        threshold = 0.6, runKey = s"cap|$dir",
-        stopBands = Some(idx.stopBands(cap = 4))) { pairs =>
-        pairs.write.mode("overwrite").parquet(out)
-      }
-      s.read.parquet(out).orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // Band-index maintenance telemetry: per band, bucket count / rows /
-    // largest bucket / exact candidate-pair bound sum n*(n-1)/2 — the
-    // probe join's worst-case output, i.e. where an operator sees a
-    // template-heavy corpus's candidate blow-up BEFORE an ingest sweep
-    // goes quadratic (the termStats / ivf_balance analogue for bands).
-    // One aggregation grouped on the index's own storage key.
-    "lsh_band_stats" -> ((s, dir) => {
-      val idx = IndexCache.getOrBuildVersioned(s, s"lsh-stats|$dir", dir) {
-        val i = new graft.sources.LshBandIndex(
-          s, Scratch.create(s, "graft-lsh-stats"), n = 3, k = 16, bands = 4)
-        i.bootstrap(Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
-          .select(col("doc_id"), col("text")))
-        i.compact(buckets = 8)
-        i
-      }
-      idx.bandStats.orderBy(col("band"))
-    }),
-
-    // Near-dup connected components over the LSH pairs: cluster_id = the
-    // representative each dedup cluster keeps (min-label propagation).
-    "dedup_clusters" -> ((s, dir) =>
-      Dedup.nearDupClusters(
-        Dedup.minhashLshPairs(
-          Tables.documents(s, dir).filter(col("doc_id") % 10 === 0),
-          n = 3, k = 16, bands = 4, threshold = 0.6))
-        .orderBy(col("doc_id"))),
-
-    // Quality-aware retention: in each LSH near-dup cluster keep the
-    // longest member (ties to smallest doc_id) — the retention policy a
-    // production pipeline ships, as a partial-aggregating argmax, never a
-    // per-cluster sort.
-    "dedup_keep_best" -> ((s, dir) => {
-      val sub = Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
-      Dedup.keepBestPerCluster(
-        Dedup.nearDupClusters(Dedup.minhashLshPairs(
-          sub.select(col("doc_id"), col("text")), n = 3, k = 16, bands = 4,
-          threshold = 0.6)),
-        sub, col("n_chars"))
-        .orderBy(col("cluster_id"))
-    }),
-
-    // 16-bit SimHash, hamming <= 3 via the chunk-key candidate trick.
-    "dedup_simhash" -> ((s, dir) =>
-      Dedup.simhashPairs(
-        Tables.documents(s, dir).filter(col("doc_id") % 10 === 0),
-        bits = 16, maxHamming = 3)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // Embedding near-dup pairs via the LSH-bucketed scale path: candidates
-    // from 8x8-bit random-hyperplane buckets, exact cosine >= 0.3 only on
-    // candidates. The brute-force all-pairs variant survives solely as the
-    // spec-level recall/equality check (DedupSpec).
-    "dedup_embedding" -> ((s, dir) =>
-      Dedup.embeddingPairs(Tables.embeddings(s, dir), 0.3, bucketed = true)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // The Sizing-derived LSH family AS a declared query (the LSH twin of
-    // sim_ivf_auto): bits = clamp(ceil(log2 n), 8, 30) and tables =
-    // min(8, 64/bits) come from one corpus count — and the ORACLE replays
-    // the derivation in SQL, so the bits~log2(n) operating rule is itself
-    // oracle-checked. perBucket=1 lands off the clamp floor (9 bits, 7
-    // tables at sf0.01) so the derivation demonstrably gates the keys.
-    "dedup_embedding_auto" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val bits = Similarity.Sizing.lshBits(emb.count(), perBucket = 1)
-      val tables = Similarity.Sizing.lshTables(bits)
-      Dedup.embeddingPairs(emb, 0.3, bucketed = true, tables = tables, bits = bits)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // SemDeDup-style semantic near-dup pairs: k-means clusters as the
-    // candidate prefilter (same deterministic 2-round/8-centroid family as
-    // kmeans_assign), exact cosine only within a cluster — the published
-    // alternative to dedup_embedding's LSH buckets. One shuffle on the
-    // cluster id; quadratic work bounded per-cluster.
-    "dedup_semantic" -> ((s, dir) =>
-      Dedup.semanticPairs(Tables.embeddings(s, dir), 0.3, k = 8, iters = 2)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // Window-hash exact-substring dedup signal (Lee et al. 2022): per-doc
-    // fraction of tokens inside an 8-token window whose rolling hash occurs
-    // in >= 2 distinct docs. Codegen'd O(n) span hashing, one span-hash
-    // shuffle, interval-merged coverage (never explodes span positions).
-    "dedup_spans" -> ((s, dir) =>
-      Dedup.duplicatedSpanCoverage(Tables.documents(s, dir), spanLen = 8)
-        .orderBy(col("doc_id"))),
-
-    // Winnowing fingerprints (MOSS, Schleimer et al. 2003): min-of-window
-    // selection over the same span-hash kernel as dedup_spans keeps
-    // ~2/(window+1) of spans; df-pruned fingerprint equi-join; overlap =
-    // shared / min(|fp_a|, |fp_b|) over the pruned sets.
-    "dedup_winnow" -> ((s, dir) =>
-      Dedup.winnowPairs(Tables.documents(s, dir), spanLen = 8, window = 4,
-        minShared = 2, maxDf = 50)
-        .orderBy(col("id_a"), col("id_b"))),
-
-    // Deterministic Lloyd k-means (2 rounds, 8 seed centroids): map-only
-    // argmax assignment against driver-literal centroids; the mean update
-    // shuffles k×d partial sums per partition, never vectors.
-    "kmeans_assign" -> ((s, dir) =>
-      KMeans.assign(Tables.embeddings(s, dir), 8, 2)
-        .orderBy(col("vec_id"))),
-
-    // Exact cosine top-5 for 8 query vectors: broadcast queries, one corpus
-    // scan, window top-k.
-    "sim_topk" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8), 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // Int8-quantized retrieval: whole-corpus scan on int8 codes (one
-    // integer dot product per pair + four per-vector scalars), top-20
-    // shortlist, exact float re-rank to top-5. The 100 TB lever is scan
-    // WIDTH — d code bytes + 4 scalars instead of 4d float bytes on the
-    // linear-scan path.
-    "sim_topk_int8" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.int8TopK(emb, emb.filter(col("vec_id") < 8),
-          k = 5, shortlist = 20)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // Product-quantization ANN: 8 subspaces x 256 codewords trained by
-    // the deterministic Lloyd discipline (seeds = first-256 slices, two
-    // argmin rounds) — the r12 declared operating point (m=8, codes=256,
-    // shortlist=200; measured recall 1.0 at 1x, BASELINE.md r12) —
-    // corpus stored as 8 codes/vector (32x narrower than
-    // the float embedding — at 100 TB the linear ANN pass is scan-bound,
-    // so representation width IS the cost), scored as the EXACT cosine
-    // of the reconstruction, shortlisted, exact-re-ranked. The oracle
-    // replays the whole thing, training included.
-    "sim_pq_topk" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.pqTopK(emb, emb.filter(col("vec_id") < 8),
-          k = 5, shortlist = 200, m = 8, codes = 256)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // The PERSISTED-index production shape of PQ ANN (the sim_ivf_indexed
-    // discipline for codebooks): run 0 trains codebooks on the bootstrap
-    // corpus and freezes them, encodes the bootstrap vectors, commits
-    // generation 0; run 1 encodes ONLY the delta (vec_id % 50 == 0)
-    // against the frozen codebooks and appends a generation. Queries
-    // ADC-score the stored codes (m element_at lookups per pair) — the
-    // corpus-wide train+encode is never recomputed. The oracle trains on
-    // the bootstrap slice and encodes the full corpus: codes are a pure
-    // function of the vector under frozen codebooks, which is the
-    // invariant this query pins.
-    "sim_pq_indexed" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.getOrBuildVersioned(s, s"pq-idx|$dir", dir) {
-        val i = new graft.sources.PqIndex(
-          s, Scratch.create(s, "graft-pq-idx"), m = 8, codes = 256)
-        i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-        i.append(emb.filter(col("vec_id") % 50 === 0))
-        i
-      }
-      idx.topK(emb, emb.filter(col("vec_id") < 8), k = 5, shortlist = 200)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // Sample-bounded PQ training (the BPE bound-the-corpus rule applied
-    // to Lloyd): codebooks fit on a deterministic ~half hash-sample of
-    // the corpus — at 100 TB nobody iterates the full corpus per Lloyd
-    // round; a bounded sample fixes training cost while encoding still
-    // covers everything. The oracle replays the SAME sample derivation
-    // (portable-hash bucket < 500 of 1000), then training, encoding, and
-    // ADC scoring end to end.
-    "sim_pq_sampled" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val train = emb.filter(Sampling.hashBucket(
-        concat(lit("pqs:"), col("vec_id").cast("string")), 1000) < 500)
-      val books = Similarity.pqTrain(train, m = 8, codes = 256, iters = 2)
-      Similarity.pqAdcTopK(
-          Similarity.pqEncode(emb, books, 8, 256), emb,
-          emb.filter(col("vec_id") < 8), books, 8, 256, k = 5, shortlist = 200)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // The IVF-PQ COMPOSITION — the production 100 TB ANN architecture:
-    // coarse cells bound the candidate SET (nprobe/nlist of the corpus),
-    // PQ codes bound the per-candidate COST (ADC: m lookups per pair).
-    // One persisted store of (vec_id, cell, codes) rows — the FAISS
-    // posting layout as a table — with both structures frozen at
-    // bootstrap; queries probe 8 of 16 cells and ADC-score members only,
-    // then exact-re-rank the shortlist. Operating point (r12): m=8,
-    // codes=256, shortlist=200, nprobe=8 — the measured recall-1.0 point
-    // (rehearsal recall rows; BASELINE.md r12). The oracle replays seeds,
-    // codebook training, assignment, and ADC arithmetic end to end.
-    "sim_ivfpq_topk" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.getOrBuildVersioned(s, s"ivfpq-idx|$dir", dir) {
-        val i = new graft.sources.IvfPqIndex(
-          s, Scratch.create(s, "graft-ivfpq-idx"), nlist = 16, m = 8, codes = 256)
-        i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-        i.append(emb.filter(col("vec_id") % 50 === 0))
-        i
-      }
-      idx.topK(emb, emb.filter(col("vec_id") < 8),
-          k = 5, shortlist = 200, nprobe = 8)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // COMPACTION — the read-amplification half of index maintenance
-    // (r13; reseed retrains, revalidate retunes, compact reorganizes).
-    // Streaming ingest commits one dir per micro-batch: after 10k
-    // batches every probe lists 10k fragment dirs whose row groups
-    // interleave all cells. compact() folds the committed view into one
-    // base dir RANGE-CLUSTERED ON THE CELL ID — parquet min/max stats
-    // then prune unprobed cells at the scan, and listing is O(1) in
-    // ingest history. The fixture takes two appendBatch generations,
-    // compacts with the superseded dirs RETIRED (so the probe provably
-    // reads only the base), and probes at the declared operating point;
-    // the corpus equals sim_ivfpq_topk's, so the oracle is the same
-    // end-to-end replay — compaction must be invisible to results.
-    "ivfpq_compact" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.getOrBuildVersioned(s, s"ivfpq-cmp|$dir", dir) {
-        val i = new graft.sources.IvfPqIndex(
-          s, Scratch.create(s, "graft-ivfpq-cmp"), nlist = 16, m = 8, codes = 256)
-        i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-        i.appendBatch(emb.filter(col("vec_id") % 100 === 0), batchId = 0L)
-        i.appendBatch(emb.filter(col("vec_id") % 100 === 50), batchId = 1L)
-        i.compact(retireSuperseded = true)
-        i
-      }
-      idx.topK(emb, emb.filter(col("vec_id") < 8),
-          k = 5, shortlist = 200, nprobe = 8)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // Streaming ingest into the PERSISTED IVF-PQ composition (the
-    // stream_ivf_ingest twin for the 100 TB ANN shape): bootstrap
-    // freezes seeds + codebooks on the history, each arriving
-    // micro-batch is assigned + ADC-encoded against the FROZEN
-    // structures (delta-sized, map-only) and committed as one
-    // generation with a batch-id ledger slot — crash redelivery is a
-    // metadata no-op. The post-ingest probe must equal the batch-built
-    // index's: assignment and codes are pure functions of the vector
-    // against frozen state, so batch boundaries cannot change a row.
-    "stream_ivfpq_ingest" -> ((s, dir) => {
-      import org.apache.spark.sql.{Dataset, Row}
-      val emb = Tables.embeddings(s, dir)
-      val idx = new graft.sources.IvfPqIndex(
-        s, Scratch.create(s, "graft-ivfpq-stream"), nlist = 16, m = 8, codes = 256)
-      idx.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-      val q = graft.streaming.Streaming.embeddings(s, dir)
-        .filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id"), col("embedding"))
-        .writeStream
-        .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-          idx.appendBatch(batch.toDF(), batchId))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", graft.TempDirs.create("graft-ivfpq-ingest-ckpt"))
-        .start()
-      q.awaitTermination()
-      idx.topK(emb, emb.filter(col("vec_id") < 8),
-          k = 5, shortlist = 200, nprobe = 8)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // The composition's MAINTENANCE POLICY as a declared query (r11
-    // verdict #5, the ivf_reseed twin): drift guard + reseed cutover for
-    // the IVF-PQ index, where the rebuild retrains BOTH frozen
-    // structures — seeds AND codebooks — into a fresh root (reseedInto;
-    // the old lineage stays readable until cutover). The report itself
-    // is coarse-quantizer drift (best-seed cosine below floor), which is
-    // the shared degradation signal: the same shift that mis-assigns
-    // cells grows PQ residuals. Phases: the old index (bootstrapped
-    // without the delta family) vs the fresh lineage (re-seeded +
-    // re-trained on the combined corpus), one row each. The seeds-only
-    // arithmetic makes the oracle the ivf_reseed replay verbatim;
-    // codebook retraining is spec-pinned (IvfPqIndexSpec) and its
-    // recall recovery measured in the rehearsal.
-    "ivfpq_reseed" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val delta = emb.filter(col("vec_id") % 50 === 0)
-      val old = IndexCache.getOrBuildVersioned(s, s"ivfpq-rs-old|$dir", dir) {
-        val i = new graft.sources.IvfPqIndex(
-          s, Scratch.create(s, "graft-ivfpq-rs-old"), nlist = 16, m = 8, codes = 256)
-        i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-        i
-      }
-      val fresh = IndexCache.getOrBuildVersioned(s, s"ivfpq-rs-new|$dir", dir) {
-        old.reseedInto(Scratch.create(s, "graft-ivfpq-rs-new"), emb)
-      }
-      old.driftReport(delta, cosineFloor = 0.22, maxFracBelow = 0.25)
-        .select(lit("old").as("phase"), col("n_vectors"), col("n_below"),
-          col("frac_below"), col("reseed_recommended"))
-        .unionByName(
-          fresh.driftReport(delta, cosineFloor = 0.22, maxFracBelow = 0.25)
-            .select(lit("new").as("phase"), col("n_vectors"), col("n_below"),
-              col("frac_below"), col("reseed_recommended")))
-        .orderBy(col("phase"))
-    }),
-
-    // The OTHER half of the composition's maintenance policy (r12
-    // verdict #2): the probe operating point re-derived as an executable
-    // sweep instead of BASELINE.md's manual rule. Two phases on the
-    // REPORTED 4-digit recall vs the exact scan: smallest nprobe clearing
-    // the 0.9 floor at the widest shortlist, then the smallest shortlist
-    // that still clears at that nprobe — chosen rows marked, a
-    // floor_cleared=false choice is the reseed signal, never a silent
-    // pick. Ground truth costs one corpus pass with the 8 queries
-    // broadcast (era-boundary cadence, the driftReport discipline); each
-    // swept setting is one code-sized store probe. The oracle replays
-    // the full recall grid (train/assign/encode/probe/ADC/re-rank per
-    // setting) AND the two-phase choice logic.
-    "ivfpq_revalidate" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.getOrBuildVersioned(s, s"ivfpq-idx|$dir", dir) {
-        val i = new graft.sources.IvfPqIndex(
-          s, Scratch.create(s, "graft-ivfpq-idx"), nlist = 16, m = 8, codes = 256)
-        i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-        i.append(emb.filter(col("vec_id") % 50 === 0))
-        i
-      }
-      idx.revalidateOperatingPoint(emb, emb.filter(col("vec_id") < 8),
-          k = 5, recallFloor = 0.9, nprobes = Seq(2, 8), shortlists = Seq(20, 200))
-        .orderBy(col("phase"), col("nprobe"), col("shortlist"))
-    }),
-
-    // r12 made the sweep executable; this closes the LOOP (r13): the
-    // whole era-boundary lifecycle — drift guard on the delta,
-    // conditional rebuild of both frozen structures, operating-point
-    // sweep on whichever lineage will serve, and a COMMIT of the chosen
-    // point into the store — as ONE scheduled operator run returning a
-    // one-row decision report. A point is committed only when it clears
-    // the recall floor; a failed sweep leaves the old point standing
-    // with floor_cleared=false (never silently ship a bad point). The
-    // fixture delta is in-distribution at maxFracBelow=0.7 (measured
-    // frac_below: 0.6/0.4/0.375 at the three SFs) so the declared path
-    // is the revalidate branch; the reseed branch (shifted delta → fresh
-    // lineage serves) is pinned by IvfPqIndexSpec. r14 closes the two
-    // remaining lifecycle halves in the SAME scheduled run: CAPACITY
-    // (cellBudget=256 — the oracle re-derives the corpus-tracking nlist
-    // from count(*) and replays the grow/keep decision; at these corpus
-    // sizes the derived nlist stays below the constructed 16, so the
-    // decision is "keep", and since r15 the oracle replays the grow arm
-    // in full too — the grow-TAKEN fixtures are ivf_maintain_grow /
-    // ivfpq_maintain_grow) and COMPACTION (compactAbove=1 — the
-    // fixture's committed view spans 2 fragment dirs (bootstrap +
-    // append), so the run folds it into a cell-clustered base and
-    // reports compacted). r15, r14 ADVICE #3: the store is
-    // QUERY-PRIVATE and rebuilt per execution — maintain() is stateful
-    // (the fold, the stamp), so the previously shared/cached store made
-    // the `compacted` column a function of run ORDER (a second
-    // execution found the store already folded). A fresh store per run
-    // makes every report column a pure function of the inputs, and warm
-    // bench runs now time the real era work (bootstrap + append + sweep
-    // + fold), closing r14's stateful-measurement caveat for this row.
-    // (A second maintain() on the SAME store reporting compacted=false
-    // remains correct operator behavior — spec-pinned in
-    // IvfIndexSpec/IvfPqIndexSpec.)
-    "ivfpq_maintain" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idx = {
-        val i = new graft.sources.IvfPqIndex(
-          s, Scratch.create(s, "graft-ivfpq-maint"), nlist = 16, m = 8, codes = 256)
-        i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-        i.append(emb.filter(col("vec_id") % 50 === 0))
-        i
-      }
-      idx.maintain(emb, emb.filter(col("vec_id") % 50 === 0),
-        emb.filter(col("vec_id") < 8), k = 5, recallFloor = 0.9,
-        cosineFloor = 0.22, maxFracBelow = 0.7,
-        nprobes = Seq(2, 8), shortlists = Seq(20, 200),
-        reseedDir = Some(Scratch.create(s, "graft-ivfpq-maint-rs")),
-        cellBudget = 256, compactAbove = 1).report
-    }),
-
-    // Query-time consumption of the committed point: maintain() stamps
-    // (nprobe, shortlist) into the store and the no-knobs topK overload
-    // reads it back — no call-site constant can drift from the last
-    // validated sweep (the r12 failure class where a sweep's choice
-    // changed nothing queries actually ran). The oracle derives the
-    // SAME point from the replayed grid as scalar CTEs and probes at it,
-    // so a store that committed a different point than the sweep chose
-    // hash-mismatches here.
-    "sim_ivfpq_committed" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.getOrBuildVersioned(s, s"ivfpq-idx|$dir", dir) {
-        val i = new graft.sources.IvfPqIndex(
-          s, Scratch.create(s, "graft-ivfpq-idx"), nlist = 16, m = 8, codes = 256)
-        i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-        i.append(emb.filter(col("vec_id") % 50 === 0))
-        i
-      }
-      // era-boundary cadence: the sweep runs once per store lifetime
-      // (the committed stamp persists); every later call is probe-only —
-      // the warm cost of this query IS the production query cost
-      val served = if (idx.operatingPoint.isDefined) idx
-        else idx.maintain(emb, emb.filter(col("vec_id") % 50 === 0),
-          emb.filter(col("vec_id") < 8), k = 5, recallFloor = 0.9,
-          cosineFloor = 0.22, maxFracBelow = 0.5,
-          nprobes = Seq(2, 8), shortlists = Seq(20, 200)).serving
-      served.topK(emb, emb.filter(col("vec_id") < 8), 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // ANN top-5 via 4x8-bit random-hyperplane LSH, exact re-rank of
-    // candidates only.
-    // IVF-style ANN: deterministic seed centroids, map-only argmax-cosine
-    // cell assignment, nprobe-cell probing, exact re-rank of candidates.
-    "sim_ivf_topk" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 8), 5, nlist = 16, nprobe = 4)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // The Sizing-derived variant AS a declared query (r6 verdict item 7):
-    // nlist comes from corpus.count()/cellBudget — and the ORACLE replays
-    // the same derivation in SQL (count -> clamp -> seed limit), so the
-    // 100 TB operating rule itself is oracle-checked, not just the fixed-
-    // knob replay.
-    "sim_ivf_auto" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.ivfTopKAuto(emb, emb.filter(col("vec_id") < 8), 5,
-        nprobe = 4, cellBudget = 64)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // The PERSISTED-index production shape of IVF ANN: run 0 bootstraps
-    // frozen centroids + corpus cell assignments as a stored parquet
-    // table, run 1 assigns ONLY the delta (vec_id % 50 == 0) against the
-    // frozen centroids and appends a generation; queries probe the stored
-    // assignments (the corpus-wide argmax is never recomputed). Seeds =
-    // the 16 lowest vec_ids of the BOOTSTRAP corpus, which the oracle
-    // replays.
-    "sim_ivf_indexed" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idx = new graft.sources.IvfIndex(
-        s, Scratch.create(s, "graft-ivf-idx"), nlist = 16)
-      idx.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-      idx.append(emb.filter(col("vec_id") % 50 === 0))
-      idx.topK(emb, emb.filter(col("vec_id") < 8), 5, nprobe = 4)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // The committed-operating-point discipline for the FLAT IVF store
-    // (r13): the production hybrid's vector arm probes this index, and
-    // its nprobe was a call-site constant — the same drift class the
-    // IVF-PQ loop closed. maintain() sweeps the one knob the flat store
-    // has (in-cell scoring is exact, so recall is monotone in nprobe and
-    // one ascending phase suffices), commits the smallest clearing
-    // nprobe, and the no-knobs topK reads the stamp back. Era cadence:
-    // the sweep runs once per store lifetime; warm cost is the pure
-    // committed-point probe. The oracle replays the sweep grid + choice
-    // as scalar CTEs and probes at the derived nprobe — a constant in
-    // neither the operator nor the oracle.
-    "sim_ivf_committed" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.getOrBuildVersioned(s, s"ivf-cm|$dir", dir) {
-        val i = new graft.sources.IvfIndex(
-          s, Scratch.create(s, "graft-ivf-cm"), nlist = 16)
-        i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-        i.append(emb.filter(col("vec_id") % 50 === 0))
-        i
-      }
-      val served = if (idx.operatingPoint.isDefined) idx
-        else idx.maintain(emb, emb.filter(col("vec_id") % 50 === 0),
-          emb.filter(col("vec_id") < 8), k = 5, recallFloor = 0.9,
-          cosineFloor = 0.22, maxFracBelow = 0.5,
-          nprobes = Seq(1, 2, 4, 8)).serving
-      served.topK(emb, emb.filter(col("vec_id") < 8), 5)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // BATCH-SCALE ANN PROBE (r15, the r14 verdict's top item): the same
-    // persisted flat-IVF store serving a >=10^4-query batch through the
-    // DISTRIBUTED probe path. Above IndexProbes.BroadcastRowLimit the
-    // driver never sees a query embedding — only the O(nlist) distinct
-    // probed cell ids for the scan's IN pushdown — and candidate
-    // generation is a cell-key shuffle join against the one-evaluation
-    // cached probe frame (no-collect + plan shape spec-pinned in
-    // IvfIndexSpec/IvfPqIndexSpec). The batch replicates the corpus 21x
-    // into a disjoint query-id space (500 base rows -> 10,500 queries at
-    // the verify SF; 42k probe rows >> the 4096-row broadcast limit).
-    // Value-identical replicas exercise exactly the batch-scale plumbing
-    // under test, and let the oracle replay the per-base-vector IVF
-    // arithmetic ONCE and expand — any per-replica divergence in the
-    // operator (a dropped candidate, a probe/filter disagreement) is a
-    // hash mismatch.
-    "sim_ivf_batch" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.getOrBuildVersioned(s, s"ivf-batch|$dir", dir) {
-        val i = new graft.sources.IvfIndex(
-          s, Scratch.create(s, "graft-ivf-batch"), nlist = 16)
-        i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-        i.append(emb.filter(col("vec_id") % 50 === 0))
-        i
-      }
-      // replication via explode(sequence), not a cross join: the batch
-      // construction itself stays a narrow map stage (no
-      // nested-loop/cartesian anywhere — the global QueryPlanSpec sweep
-      // holds for this query too)
-      val queries = emb
-        .select(col("vec_id"), col("embedding"),
-          explode(sequence(lit(0L), lit(20L))).as("rep"))
-        .select((lit(1000000L) + col("vec_id") * 21 + col("rep")).as("vec_id"),
-          col("embedding"))
-      idx.topK(emb, queries, 5, nprobe = 4)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // BATCH-SCALE ANN PROBE, IVF-PQ COMPOSITION (r16, r15 verdict #2):
-    // sim_ivf_batch's twin through the store whose probe rows carry the
-    // heaviest payload in the engine — the m×codes ADC lookup table
-    // (~16 KB/row at codes=256), the case that actually OOM'd the first
-    // distributed cut (a 2.6 GB sort at the 10x rehearsal) and that the
-    // payload-aware broadcast threshold now caps at ~2k rows instead of
-    // 4096. Same 21x-replica construction into a disjoint query-id
-    // space (10,500 queries -> 42,000 probe rows at the verify SF, far
-    // above both thresholds): the cell join moves narrow (query_id,
-    // cell) rows, the per-query ADC table attaches post-candidates via
-    // the shuffle-hash join on the shortlist window's own partitioning,
-    // and the driver only ever sees O(nlist) distinct cell ids
-    // (spec-pinned in IvfPqIndexSpec). The oracle replays the per-base
-    // train/assign/encode/ADC/shortlist/re-rank arithmetic ONCE and
-    // expands — any per-replica divergence in the distributed ADC path
-    // is a hash mismatch.
-    "sim_ivfpq_batch" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.getOrBuildVersioned(s, s"ivfpq-batch|$dir", dir) {
-        val i = new graft.sources.IvfPqIndex(
-          s, Scratch.create(s, "graft-ivfpq-batch"), nlist = 16, m = 8, codes = 256)
-        i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-        i.append(emb.filter(col("vec_id") % 50 === 0))
-        i
-      }
-      // replication via explode(sequence), never a cross join (the
-      // global QueryPlanSpec no-cartesian sweep covers this query too)
-      val queries = emb
-        .select(col("vec_id"), col("embedding"),
-          explode(sequence(lit(0L), lit(20L))).as("rep"))
-        .select((lit(1000000L) + col("vec_id") * 21 + col("rep")).as("vec_id"),
-          col("embedding"))
-      idx.topK(emb, queries, 5, shortlist = 50, nprobe = 4)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // CAPACITY-ADAPTIVE MAINTENANCE (r14, closing r13 verdict #2): a
-    // frozen nlist makes candidate volume ∝ n/nlist, so once the corpus
-    // outgrows its cells the sweep's only clearing setting is
-    // nprobe == nlist — a full coarse scan committed as the "validated"
-    // operating point (exactly what the r13 10× rehearsal shipped:
-    // p16/nlist16). maintain() now reads that shape — the floor clearing
-    // only at the full scan, or never — as a CAPACITY signal and forces
-    // the reseed branch at the corpus-tracking nlist
-    // (Sizing.ivfNlist(count, cellBudget), the rule sim_ivf_auto
-    // oracle-checks) even though the drift guard is quiet, then
-    // re-sweeps on the grown lineage and commits a point that prunes
-    // again. The fixture: a 2-cell index (nprobe=1 recall 0.6-0.825 <
-    // 0.9 at every SF; nprobe=2 IS the full scan) grows to
-    // clamp(n/64, 2, 4096) cells and the post-grow sweep chooses
-    // nprobe < nlist with recall >= 0.9. The oracle replays BOTH sweep
-    // grids, the capacity signal, the derived nlist, and the chosen
-    // point — no constant anywhere.
-    "ivf_maintain_grow" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.getOrBuildVersioned(s, s"ivf-grow|$dir", dir) {
-        val i = new graft.sources.IvfIndex(
-          s, Scratch.create(s, "graft-ivf-grow"), nlist = 2)
-        i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-        i.append(emb.filter(col("vec_id") % 50 === 0))
-        i
-      }
-      // maxFracBelow = 1.0 structurally disables the drift guard: the
-      // declared path is capacity-without-drift (the r13 blind spot)
-      idx.maintain(emb, emb.filter(col("vec_id") % 50 === 0),
-        emb.filter(col("vec_id") < 8), k = 5, recallFloor = 0.9,
-        cosineFloor = 0.22, maxFracBelow = 1.0,
-        nprobes = Seq(1, 2, 4, 8, 16),
-        reseedDir = Some(Scratch.create(s, "graft-ivf-grow-new")),
-        cellBudget = 64).report
-    }),
-
-    // The IVF-PQ twin of ivf_maintain_grow (r15, r14 verdict #2's done
-    // criterion: the composition's maintain oracle green at a fixture
-    // where the grow arm is actually TAKEN). A deliberately undersized
-    // 2-cell composition: the sweep can only clear the floor at the full
-    // coarse scan (nprobe == nlist == 2) or not at all — the capacity
-    // signal — so maintain() grows BOTH frozen structures (seeds at the
-    // count-derived Sizing.ivfNlist(n, 64); codebooks re-trained on the
-    // full corpus, reseedInto's rule) into a fresh lineage and re-sweeps
-    // there. The oracle replays BOTH grids through the shared
-    // ivfPqGridArm generator — pre-grow AND grown, codebook training and
-    // ADC arithmetic included — plus the capacity signal, the derived
-    // nlist, and the chosen post-grow point: a constant in neither side.
-    // Grow is taken at EVERY SF (derived = clamp(n/64, 2, 4096) = 7 at
-    // 500 rows, 31 at 2000 — all > 2). maxFracBelow = 1.0 structurally
-    // disables the drift guard: the declared path is capacity WITHOUT
-    // drift, the r13 blind spot. The base store never mutates (the point
-    // commits on the grown lineage, rebuilt into a fresh scratch root
-    // each execution), so the report is execution-order-free.
-    "ivfpq_maintain_grow" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.getOrBuildVersioned(s, s"ivfpq-grow|$dir", dir) {
-        val i = new graft.sources.IvfPqIndex(
-          s, Scratch.create(s, "graft-ivfpq-grow"), nlist = 2, m = 8, codes = 16)
-        i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-        i.append(emb.filter(col("vec_id") % 50 === 0))
-        i
-      }
-      idx.maintain(emb, emb.filter(col("vec_id") % 50 === 0),
-        emb.filter(col("vec_id") < 8), k = 5, recallFloor = 0.9,
-        cosineFloor = 0.22, maxFracBelow = 1.0,
-        nprobes = Seq(1, 2, 4, 8), shortlists = Seq(20, 200),
-        reseedDir = Some(Scratch.create(s, "graft-ivfpq-grow-new")),
-        cellBudget = 64).report
-    }),
-
-    // Continuous vector-index maintenance: the delta arrives as an
-    // embedding STREAM; each micro-batch lands as one committed
-    // generation against the frozen centroids via the exactly-once
-    // appendBatch. The post-stream probe must hash-match the batch-built
-    // sim_ivf_indexed oracle: streaming and batch ingest are
-    // indistinguishable to a reader.
-    "stream_ivf_ingest" -> ((s, dir) => {
-      import org.apache.spark.sql.{Dataset, Row}
-      val emb = Tables.embeddings(s, dir)
-      val idx = new graft.sources.IvfIndex(
-        s, Scratch.create(s, "graft-ivf-stream"), nlist = 16)
-      idx.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-      val q = graft.streaming.Streaming.embeddings(s, dir)
-        .filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id"), col("embedding"))
-        .writeStream
-        .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-          idx.appendBatch(batch.toDF(), batchId))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", graft.TempDirs.create("graft-ivf-ingest-ckpt"))
-        .start()
-      q.awaitTermination()
-      idx.topK(emb, emb.filter(col("vec_id") < 8), 5, nprobe = 4)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // The IVF index's MAINTENANCE POLICY as a declared query: the drift
-    // guard that gates every ingest of a frozen-centroid index. Best-cell
-    // cosine of each delta vector against the bootstrap centroids, one
-    // report row out (n, n_below floor, fraction, reseed recommendation).
-    // The floor/threshold (0.22 / 0.25) sit inside the fixture's observed
-    // best-cosine range so both branches of the comparison are exercised.
-    // The reseed CUTOVER the drift guard's policy prescribes, as a
-    // declared query: the old lineage (bootstrapped without the drifted
-    // family) and the fresh lineage (re-seeded from the combined corpus
-    // via reseedInto — a new root, never an in-place centroid mutation)
-    // each report the delta's assignment quality, long-form one row per
-    // phase. What's pinned is the cutover MECHANICS (fresh lineage,
-    // before/after report, decision rule) — the synthetic delta is a
-    // random slice, not genuinely drifted mass, so the quality numbers
-    // move only marginally between phases. Both indexes session-cached;
-    // each report is a map-only pass over the delta + one aggregate.
-    "ivf_reseed" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val delta = emb.filter(col("vec_id") % 50 === 0)
-      val old = IndexCache.getOrBuildVersioned(s, s"ivf-rs-old|$dir", dir) {
-        val i = new graft.sources.IvfIndex(
-          s, Scratch.create(s, "graft-ivf-rs-old"), nlist = 16)
-        i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-        i
-      }
-      val fresh = IndexCache.getOrBuildVersioned(s, s"ivf-rs-new|$dir", dir) {
-        old.reseedInto(Scratch.create(s, "graft-ivf-rs-new"), emb)
-      }
-      old.driftReport(delta, cosineFloor = 0.22, maxFracBelow = 0.25)
-        .select(lit("old").as("phase"), col("n_vectors"), col("n_below"),
-          col("frac_below"), col("reseed_recommended"))
-        .unionByName(
-          fresh.driftReport(delta, cosineFloor = 0.22, maxFracBelow = 0.25)
-            .select(lit("new").as("phase"), col("n_vectors"), col("n_below"),
-              col("frac_below"), col("reseed_recommended")))
-        .orderBy(col("phase"))
-    }),
-
-    "ivf_drift" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idx = new graft.sources.IvfIndex(
-        s, Scratch.create(s, "graft-ivf-drift"), nlist = 16)
-      idx.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-      idx.driftReport(emb.filter(col("vec_id") % 50 === 0),
-        cosineFloor = 0.22, maxFracBelow = 0.25)
-    }),
-
-    // The index's probe-cost telemetry: occupied-cell count, stored rows,
-    // hottest cell, and skew (max/mean occupied cell) over the SAME
-    // bootstrap+append lineage as sim_ivf_indexed — one aggregate over the
-    // stored (vec_id, cell) rows, embeddings never read. Skew is the
-    // probe's tail latency; the reseed rule lives on
-    // IvfIndex.balanceReport.
-    "ivf_balance" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idx = new graft.sources.IvfIndex(
-        s, Scratch.create(s, "graft-ivf-bal"), nlist = 16)
-      idx.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-      idx.append(emb.filter(col("vec_id") % 50 === 0))
-      idx.balanceReport
-    }),
-
-    "sim_ann_topk" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      // 8 tables (recall ≈ 1-(1-p)^T doubles vs 4 at linear cost — the
-      // ScaleRehearsal measurement that picked this default)
-      Similarity.hyperplaneTopK(emb, emb.filter(col("vec_id") < 8), 5,
-        tables = 8, bits = 8)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // Multi-probe ANN: 1-bit-flip probes buy recall on the QUERY side only
-    // (9 probes/table here) — half the tables of sim_ann_topk with corpus
-    // state halved, the production trade for 100 TB corpora.
-    "sim_ann_multiprobe" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.hyperplaneTopKMultiProbe(emb, emb.filter(col("vec_id") < 8), 5,
-        tables = 4, bits = 8)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // JL sign random projection to 8 dims: the map-only codegen'd kernel
-    // that shrinks every downstream candidate scan/shuffle 8x. Raw sums
-    // (no 1/sqrt(d) scale) so each double is exactly oracle-replayable.
-    "embed_project" -> ((s, dir) => {
-      val pr = Similarity.randomProject(Tables.embeddings(s, dir), 8)
-      pr.select(col("vec_id") +:
-        (0 until 8).map(j => round(element_at(col("proj"), j + 1), 6).as(s"p$j")): _*)
-        .orderBy(col("vec_id"))
-    }),
-
-    // ANN top-5 via the JL projection: whole-corpus scoring in 16-dim
-    // projected space (narrow rows; the 64-float embedding never enters a
-    // shuffle), top-30 candidates per query, exact re-rank re-fetches full
-    // vectors for candidates only. The index-free one-shot ANN path.
-    "sim_ann_projected" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Similarity.projectedTopK(emb, emb.filter(col("vec_id") < 8), 5,
-        projDims = 16, candFactor = 6)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // Sparse TF-IDF cosine top-5 over word-bigram terms: df-pruned
-    // inverted-index join, integer-quantized weights (exact dot products
-    // under any shuffle order), cosine defined over the pruned space.
-    // Bigrams come from the codegen'd token_ngrams kernel — the composed
-    // slice/zip_with chain is CodegenFallback and re-tokenizes per use.
-    "sim_sparse_topk" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      // corpus size from the persisted index's O(1) committed stats slot
-      // (r11 verdict #6) — the session-cached index covers the full
-      // corpus, so this equals docs.count() without a per-run corpus job
-      val n = fullInvIndex(s, dir).corpusStats._1
-      Similarity.sparseTopK(docs, n, col("doc_id") % 97 === 0, 5,
-        maxDf = n / 10,
-        terms = graft.functions.GraftFunctions.tokenNgrams(lower(col("text")), 2))
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // Language-ID + quality scoring + token counting + fingerprint in one
-    // map-only pass over the corpus.
-    "text_stats" -> ((s, dir) =>
-      TextAnalysis.stats(Tables.documents(s, dir).select(col("doc_id"), col("text")))
-        .drop("text")
-        .orderBy(col("doc_id"))),
-
-    // End-to-end corpus cleaning — the composition a training-data
-    // pipeline actually runs: one map-only stats pass -> quality/lang/
-    // length gate -> exact dedup (keep lowest doc_id per fingerprint,
-    // partial-aggregating struct-min) -> near-dup removal (stop-shingle-
-    // pruned Jaccard >= 0.8, drop the higher id of each pair) -> per
-    // (lang, source) report.
-    "corpus_clean" -> ((s, dir) => {
-      val stats = TextAnalysis.stats(Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"), col("source")))
-      val kept = stats.where(col("quality_score") >= 0.55 &&
-        col("lang_pred") =!= "und" && col("n_tokens").between(5, 5000))
-      // the near-dup stage consumes its input several times (grams, stop
-      // set, both verify sides) and the anti-join reads it again — the
-      // tracked pin materializes the expensive stats+dedup pipeline ONCE
-      // instead of re-deriving it per consumer (5 scans otherwise), and is
-      // freed at the end-of-query drain
-      val sole = Residue.pin(kept.groupBy(col("fingerprint"))
-        .agg(min(struct(col("doc_id"), col("text"), col("source"),
-          col("n_tokens"), col("quality_score"), col("lang_pred"))).as("_r"))
-        .select(col("_r.doc_id").as("doc_id"), col("_r.text").as("text"),
-          col("_r.source").as("source"), col("_r.n_tokens").as("n_tokens"),
-          col("_r.quality_score").as("quality_score"),
-          col("_r.lang_pred").as("lang_pred")))
-      val dupIds = Dedup.ngramJaccardPairsPruned(
-          sole.select(col("doc_id"), col("text")), 3, 0.8, maxDf = 40)
-        .select(col("id_b").as("doc_id")).distinct()
-      sole.join(dupIds, Seq("doc_id"), "left_anti")
-        .groupBy(col("lang_pred"), col("source"))
-        // quality_score is already a 4-decimal value, so summing it as a
-        // x10000 integer is exact AND order-independent — a plain
-        // avg(double) sums in shuffle order and can land either side of a
-        // 0.00005 rounding boundary vs the oracle (bit-level flake seen at
-        // sf0.001); the single division afterwards is the same IEEE op on
-        // identical inputs in both engines
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("tok_total"),
-          round(sum(round(col("quality_score") * 10000, 0).cast("long"))
-            .cast("double") / count(lit(1)) / 10000.0, 4).as("avg_quality"))
-        .orderBy(col("lang_pred"), col("source"))
-    }),
-
-    // corpus_clean in bookmark-delta form — the cleaning pass a
-    // discrete-run ingestion pipeline executes PER RUN: stats + quality
-    // gate over the DELTA only (map-only), exact dedup against the
-    // cleaned history's fingerprint store (anti-join on the 8-byte key,
-    // never history text), near-dup via the incremental LSH probe
-    // (delta-shaped — the history contributes its band index and the
-    // text of candidate partners only), then the same (lang, source)
-    // report over the ADMITTED delta. History ids sit below the
-    // bookmark cutoff, so every near-dup pair's greatest id is the
-    // delta doc to drop (history always wins). The %5 sample keeps the
-    // declared query's history-side minhash REBUILD (an oracle-
-    // replayability compromise — production probes the persisted
-    // LshBandIndex and never re-signs the history) proportionate — the
-    // template corpus's near-dup density makes LSH candidate volume
-    // quadratic in sample size — and the contiguous bookmark delta
-    // lands in the corpus's FRESHEST template clusters, so its match
-    // set is denser than a scattered sample's (verifying that match
-    // set IS the irreducible per-ingest work); the delta is the top 50
-    // sampled ids.
-    "corpus_clean_incr" -> ((s, dir) => {
-      val (hist, deltaSole) = corpusCleanIncrSides(s, dir)
-      val dropIds = Dedup.minhashLshPairsIncremental(
-          hist.select(col("doc_id"), col("text")),
-          deltaSole.select(col("doc_id"), col("text")),
-          n = 3, k = 16, bands = 4, threshold = 0.8)
-        .select(greatest(col("id_a"), col("id_b")).as("doc_id")).distinct()
-      corpusCleanIncrReport(deltaSole, dropIds)
-    }),
-
-    // The PRODUCTION shape of corpus_clean_incr's near-dup stage (r7
-    // verdict #4): the same cleaning gates and exact-dedup anti-join, but
-    // the LSH sweep probes a PERSISTED, compacted LshBandIndex through
-    // sweepAndAppend — band(delta) + bucketed probe + verify + sink +
-    // commit-after-sink, the composition a discrete-run ingestion
-    // pipeline actually executes. The index build is IndexCache'd (r9
-    // verdict #1): the session's first run — and Verify, which runs each
-    // query once — bootstraps + compacts from the history, so the oracle
-    // still replays the full construction; later (warm bench) runs reuse
-    // the committed index and time the per-ingest work — band(delta),
-    // probe, verify, sink, report — which is what production pays per
-    // run (the incr_lsh_indexed rehearsal family measures that probe
-    // staying corpus-independent). The runKey makes the replayed ingest's
-    // append a no-op, so warm runs don't grow the index; the oracle is
-    // byte-identical to corpus_clean_incr's, which IS the claim: the
-    // indexed composition is indistinguishable from the re-signing one.
-    "corpus_clean_incr_indexed" -> ((s, dir) => {
-      val (hist, deltaSole) = corpusCleanSidesStored(s, dir)
-      val idx = IndexCache.getOrBuildVersioned(s, s"cci-idx|$dir", dir) {
-        val i = new graft.sources.LshBandIndex(
-          s, Scratch.create(s, "graft-cci-idx"), n = 3, k = 16, bands = 4)
-        i.bootstrap(hist.select(col("doc_id"), col("text")))
-        i.compact(buckets = 8)
-        i
-      }
-      val out = Scratch.create(s, "graft-cci-sweep")
-      idx.sweepAndAppend(
-        hist.select(col("doc_id"), col("text"))
-          .unionByName(deltaSole.select(col("doc_id"), col("text"))),
-        deltaSole.select(col("doc_id"), col("text")),
-        threshold = 0.8, runKey = s"cci|$dir") { pairs =>
-        pairs.write.mode("overwrite").parquet(out)
-      }
-      val dropIds = s.read.parquet(out)
-        .select(greatest(col("id_a"), col("id_b")).as("doc_id")).distinct()
-      corpusCleanIncrReport(deltaSole, dropIds)
-    }),
-
-    // THE NORTH-STAR COMPOSITION (r8 verdict #9): one bookmark delta
-    // through the ENTIRE training-data pipeline — quality/lang gates,
-    // exact dedup vs the history fingerprints, near-dup drop via the
-    // persisted LSH band index, banned-term policy probe via the
-    // persisted inverted index (the admitted delta's postings are
-    // appended exactly-once first: per-ingest index maintenance), eval
-    // decontamination (bloom-prefiltered exact 8-gram overlap), semantic
-    // near-dup drop via the persisted IVF index (delta embeddings probe
-    // the frozen reference cells, nprobe 2, cosine >= 0.3), temperature
-    // mixing (alpha 0.5) and token-budgeted shard packing (128-token shards). Every stage's
-    // per-ingest cost is DELTA-shaped: history state (fingerprints, band
-    // index, postings, cell assignments) is persisted and probed, never
-    // recomputed — the indexes are session-cached (IndexCache) exactly as
-    // production holds them open, and all appends are replay-idempotent
-    // (runKey / batch ledger). Output = the packed shard manifest, whose
-    // hash pins the whole chain end-to-end against the DuckDB replay.
-    "pipeline_e2e_incr" -> ((s, dir) => {
-      val (hist, deltaSole) = corpusCleanSidesStored(s, dir)
-
-      // near-dup vs history + delta-delta via the persisted band index
-      // (same cached index + ingest runKey as corpus_clean_incr_indexed:
-      // it IS the same ingest, so whichever query runs first appends)
-      val lsh = IndexCache.getOrBuildVersioned(s, s"cci-idx|$dir", dir) {
-        val i = new graft.sources.LshBandIndex(
-          s, Scratch.create(s, "graft-cci-idx"), n = 3, k = 16, bands = 4)
-        i.bootstrap(hist.select(col("doc_id"), col("text")))
-        i.compact(buckets = 8)
-        i
-      }
-      val out = Scratch.create(s, "graft-pipe-sweep")
-      lsh.sweepAndAppend(
-        hist.select(col("doc_id"), col("text"))
-          .unionByName(deltaSole.select(col("doc_id"), col("text"))),
-        deltaSole.select(col("doc_id"), col("text")),
-        threshold = 0.8, runKey = s"cci|$dir") { pairs =>
-        pairs.write.mode("overwrite").parquet(out)
-      }
-      val nearDrop = s.read.parquet(out)
-        .select(greatest(col("id_a"), col("id_b")).as("doc_id")).distinct()
-      val admitted = deltaSole.join(nearDrop, Seq("doc_id"), "left_anti")
-
-      // banned-term policy via the persisted inverted index: append the
-      // admitted delta's postings (exactly-once batch ledger), then the
-      // probe reads ONLY the banned term's posting — never document text
-      val inv = IndexCache.getOrBuildVersioned(s, s"pipe-inv|$dir", dir) {
-        val i = new graft.sources.InvertedIndex(s, Scratch.create(s, "graft-pipe-inv"))
-        i.bootstrap(hist.select(col("doc_id"), col("text")))
-        i.compact(buckets = 8)
-        i
-      }
-      inv.appendBatch(admitted.select(col("doc_id"), col("text")), batchId = 0L)
-      val banned = inv.conjunctive(Seq("dup")).select(col("doc_id"))
-      val policed = admitted.join(banned, Seq("doc_id"), "left_anti")
-
-      // eval-suite decontamination: bloom-prefiltered EXACT 8-gram
-      // overlap vs the doc_id % 50 eval set. The threshold (>= 100 shared
-      // gram INSTANCES with some single eval doc) is calibrated to the
-      // template corpus: casual template overlap peaks ~80, near-verbatim
-      // eval copies run 400+ — the filter drops the plagiarized tail
-      // without emptying the delta (a >= 5 threshold drops EVERYTHING
-      // here; real corpora tune this against their own overlap curve)
-      val evalDocs = Tables.documents(s, dir)
-        .filter(col("doc_id") % 50 === 0).select(col("doc_id"), col("text"))
-      val evalBloom = IndexCache.getOrBuildVersioned(s, s"pipe-bloom|$dir", dir) {
-        Dedup.gramBloom(evalDocs, n = 8)
-      }
-      val contaminated = Dedup.crossOverlapPairsBloomWith(
-          policed.select(col("doc_id"), col("text")), evalDocs,
-          n = 8, minShared = 100L, bloom = evalBloom)
-        .select(col("train_id").as("doc_id")).distinct()
-      // delta-sized pin: decont feeds BOTH the IVF probe's query set and
-      // the final survivor join — unpinned, each action downstream
-      // re-runs the whole admitted -> policed -> decontaminated chain
-      // (pairs read, posting probe, bloom verify) once per reference
-      val decont = Residue.pin(
-        policed.join(contaminated, Seq("doc_id"), "left_anti"))
-
-      // semantic near-dup vs the reference embedding corpus via the
-      // persisted IVF index (frozen centroids, delta-only probe). r14
-      // (r13 verdict #3/#4): the probe width was the pipeline's last
-      // call-site constant — the store now commits its operating point
-      // at build time (the era boundary) and the pipeline consumes it
-      // through the FRESHNESS-GATED topKFresh: a point validated before
-      // generations the probe would read is refused, not served — the
-      // operatingPointLag signal finally has a production consumer.
-      val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val refEmb = emb.filter(col("vec_id") % 10 =!= 0)
-      val ivf = IndexCache.getOrBuildVersioned(s, s"pipe-ivf|$dir", dir) {
-        val i = new graft.sources.IvfIndex(
-          s, Scratch.create(s, "graft-pipe-ivf"), nlist = 16)
-        i.bootstrap(refEmb)
-        i.maintain(refEmb, refEmb.limit(0), emb.filter(col("vec_id") < 8),
-          k = 5, recallFloor = 0.9, cosineFloor = 0.22, maxFracBelow = 1.0,
-          nprobes = Seq(1, 2, 4, 8, 16))
-        i
-      }
-      val deltaEmb = emb.join(decont.select(col("doc_id").as("vec_id")), Seq("vec_id"))
-      val semDrop = ivf.topKFresh(refEmb, deltaEmb, k = 1, maxLag = 0L)
-        .filter(col("cosine") >= 0.3)
-        .select(col("query_id").as("doc_id")).distinct()
-      // the survivor set is read by THREE actions (mix stratum counts,
-      // shard prefix offsets, the final manifest agg) — pin once,
-      // delta-sized, freed by the end-of-query drain
-      val surviving = Residue.pin(
-        decont.join(semDrop, Seq("doc_id"), "left_anti")
-          .select(col("doc_id"), col("source"), col("n_tokens")))
-
-      // temperature mix (alpha 0.5) + token-budgeted shard packing
-      val mixed = Sampling.temperatureMix(
-        surviving, "source", col("doc_id"), alpha = 0.5)
-      Packing.tokenShards(
-          mixed.select(col("doc_id"), col("n_tokens").as("n_tok")),
-          "doc_id", "n_tok", 128L)
-        .groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"),
-          min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
-        .orderBy(col("shard_id"))
-    }),
-
-    // INDEX-STALENESS DQ GATE (r14, the r13 verdict's #4): the
-    // operatingPointLag signal as a scheduled data-quality row. The
-    // fixture replays a real era drift: the store commits its operating
-    // point at the bootstrap generation (the maintain sweep), then one
-    // more ingest lands — the point is now validated against data one
-    // generation old, and the gate must say `maintenance_due` instead of
-    // silently letting consumers serve on it (topKFresh refuses for the
-    // same reason, spec-pinned). The oracle re-derives the committed
-    // nprobe from the replayed sweep grid AND the lag from the declared
-    // ledger history (stamp at gen 0, watermark at gen 1) — the gate's
-    // whole row is decision replay, not reporting.
-    "index_staleness_gate" -> ((s, dir) => {
-      val idx = staleIvfStore(s, dir)
-      import s.implicits._
-      Seq((idx.operatingPoint.get, idx.operatingPointGen.get, idx.committedGen,
-          idx.operatingPointLag.get, idx.operatingPointLag.exists(_ > 0L)))
-        .toDF("nprobe", "op_gen", "committed_gen", "lag", "maintenance_due")
-    }),
-
-    // FLEET MAINTENANCE REPORT (r15, r14 verdict next-round #5): one row
-    // per persisted store of a deployment manifest, each row pure O(1)
-    // ledger metadata — committed watermark, compaction base, fragment
-    // count, operating-point stamp and its lag — plus the three decision
-    // flags a scheduler acts on (point_stale / compaction_due /
-    // maintenance_due). Zero Spark jobs per store: the walk is
-    // properties-file reads, so it can run every scheduler tick over
-    // hundreds of stores; the data-sized health work (drift guards,
-    // recall sweeps) stays in each store's own maintain(), which this
-    // report decides WHERE to spend. The fixture covers the three states:
-    // a HEALTHY flat-IVF store (maintained at its committed head — lag 0,
-    // one fragment), the STALE store index_staleness_gate reads (shared
-    // builder: point stamped at gen 0, one ingest after), and a
-    // FRAGMENTED inverted index that committed one generation per
-    // distinct source family and never compacted. The oracle re-derives
-    // the committed nprobe of both IVF rows from the replayed sweep
-    // grid, every lag from the declared ledger history, and the text
-    // store's fragment count from count(DISTINCT source) — data, not a
-    // constant.
-    "fleet_report" -> ((s, dir) => {
-      graft.operators.Fleet.report(s,
-        Seq(("sem-ivf-fresh", freshIvfStore(s, dir)),
-            ("sem-ivf-stale", staleIvfStore(s, dir)),
-            ("text-postings", fleetInvStore(s, dir))),
-        maxLag = 0L, maxFragments = 1)
-        .orderBy(col("store"))
-    }),
-
-    // FLEET LOOP CLOSED (r16, r15 verdict #3): `fleet_report` decides
-    // WHERE maintenance is due; this query CONSUMES the decision —
-    // Fleet.maintainAll walks the same O(1) ledger signals, runs each
-    // DUE store's own maintenance composition (the flat-IVF store's
-    // maintain() with sweep + compaction; the text store's compact()),
-    // skips healthy stores, and emits one before/after row per store.
-    // The fixture has one skipped store (the shared healthy IVF — never
-    // acted on, so sharing the persisted fixture is safe) and two acted
-    // stores, which are query-PRIVATE (their actions mutate the ledger;
-    // a shared fixture would make the row depend on execution order —
-    // the r15 ivfpq_maintain lesson): a stale+fragmented IVF whose
-    // maintain revalidates on the grown corpus, commits the swept point,
-    // and compacts (lag 1→0, fragments 2→1, nprobe = the replayed
-    // full-corpus grid choice), and a per-source-fragmented inverted
-    // index whose compact folds nsrc generations to one. The oracle
-    // replays every number: both sweep grids (the healthy store's
-    // standing stamp AND the stale store's post-action choice), the
-    // cleared/committed decision branch, the ledger-history lags, and
-    // the data-derived fragment counts — a constant in neither side.
-    "fleet_maintain" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-      val hist = emb.filter(col("vec_id") % 50 =!= 0)
-      val delta = emb.filter(col("vec_id") % 50 === 0)
-      val queries = emb.filter(col("vec_id") < 8)
-      val stale = new graft.sources.IvfIndex(
-        s, Scratch.create(s, "graft-fleet-mt-ivf"), nlist = 16)
-      stale.bootstrap(hist)
-      // cheap gen-0 stamp: the one-setting full-coarse-scan sweep
-      // (nprobe == nlist reads every cell → recall 1.0 clears any
-      // floor). Its VALUE never reaches the output — only its
-      // GENERATION does (lag_before = 1 after the append below) — so
-      // the declared sweep is the post-action one, which the oracle
-      // replays; the stamp value appears in the oracle only as the
-      // not-cleared fallback branch (max of the same declared list)
-      stale.maintain(hist, hist.limit(0), queries, k = 5, recallFloor = 0.9,
-        cosineFloor = 0.22, maxFracBelow = 1.0, nprobes = Seq(16))
-      stale.append(delta)
-      val inv = new graft.sources.InvertedIndex(
-        s, Scratch.create(s, "graft-fleet-mt-inv"))
-      fleetInvBuild(s, dir, inv)
-      val fresh = freshIvfStore(s, dir)
-      graft.operators.Fleet.maintainAll(s,
-        Seq(
-          graft.operators.Fleet.Entry("sem-ivf-fresh", fresh, () =>
-            // never invoked (the store is healthy: lag 0, one fragment)
-            // and idempotent even if it were — the identical sweep
-            // re-commits the identical stamp at the identical generation
-            fresh.maintain(hist, hist.limit(0), queries, k = 5,
-              recallFloor = 0.9, cosineFloor = 0.22, maxFracBelow = 1.0,
-              nprobes = Seq(1, 2, 4, 8, 16), compactAbove = 1).serving),
-          graft.operators.Fleet.Entry("sem-ivf-stale", stale, () =>
-            stale.maintain(emb, delta, queries, k = 5, recallFloor = 0.9,
-              cosineFloor = 0.22, maxFracBelow = 1.0,
-              nprobes = Seq(1, 2, 4, 8, 16), compactAbove = 1).serving),
-          graft.operators.Fleet.Entry("text-postings", inv, () => {
-            inv.compact(); inv })),
-        maxLag = 0L, maxFragments = 1)
-        .orderBy(col("store"))
-    }),
-
-    // Token-budgeted training shards via the two-level prefix sum —
-    // per-range offsets are O(ranges) driver metadata and each range
-    // runs its local window in parallel; never a single-partition
-    // global window (plan-asserted in PackingSpec).
-    "token_shards" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          GraftFunctions.textStats(col("text"))
-            .getField("n_tokens").cast("long").as("n_tok"))
-      Packing.tokenShards(docs, "doc_id", "n_tok", 4096L)
-        .groupBy(col("shard_id"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"),
-          min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
-        .orderBy(col("shard_id"))
-    }),
-
-    // Concat-and-chunk sequence packing: cut the corpus token stream
-    // into 512-token training sequences, documents split at boundaries —
-    // one piece row per (doc, overlapped seq), two-level prefix sum,
-    // never a single-partition global window, never per-token rows.
-    "pack_sequences" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          GraftFunctions.textStats(col("text"))
-            .getField("n_tokens").cast("long").as("n_tok"))
-      Packing.packSequences(docs, "doc_id", "n_tok", 512L)
-        .orderBy(col("doc_id"), col("seq_id"))
-    }),
-
-    // Bookmark-incremental packing: pack ONLY the last-50-doc delta,
-    // continuing from the prior corpus's total token count (an O(1)
-    // watermark) — output must equal the full repack filtered to the
-    // delta docs, which is exactly what the oracle replays.
-    "pack_incremental" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          GraftFunctions.textStats(col("text"))
-            .getField("n_tokens").cast("long").as("n_tok"))
-      val cutoff = docs.agg(max(col("doc_id"))).head().getLong(0) - 49L
-      val prior = docs.filter(col("doc_id") < cutoff)
-        .agg(coalesce(sum(col("n_tok")), lit(0L))).head().getLong(0)
-      Packing.packSequencesIncremental(docs.filter(col("doc_id") >= cutoff),
-        "doc_id", "n_tok", 512L, priorTokens = prior)
-        .orderBy(col("doc_id"), col("seq_id"))
-    }),
-
-    // Length-bucketed batch assembly for PADDED training: 16-token-wide
-    // length classes, 8-doc batches in id order within each class,
-    // padding waste accounted to the batch max. Within-bucket row
-    // numbering is the two-level prefix trick — a plain
-    // Window.partitionBy(bucket) would funnel the dominant length class
-    // through one task (single-partition window in disguise).
-    "batch_padding" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          GraftFunctions.textStats(col("text"))
-            .getField("n_tokens").cast("long").as("n_tok"))
-      Packing.lengthBucketBatches(docs, "doc_id", "n_tok",
-          bucketWidth = 16, batchSize = 8)
-        .orderBy(col("bucket"))
-    }),
-
-    // The per-document (doc -> batch) map behind batch_padding — what a
-    // trainer actually consumes (r7 verdict #8): each doc's length
-    // bucket and its 8-doc batch within the bucket, id-ordered. Same
-    // two-level prefix numbering as the report, exposed instead of
-    // re-aggregated.
-    "batch_assign" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          GraftFunctions.textStats(col("text"))
-            .getField("n_tokens").cast("long").as("n_tok"))
-      Packing.lengthBucketAssignments(docs, "doc_id", "n_tok",
-          bucketWidth = 16, batchSize = 8)
-        .select(col("doc_id"), col("n_tok"), col("bucket"),
-          col("batch_in_bucket"))
-        .orderBy(col("bucket"), col("batch_in_bucket"), col("doc_id"))
-    }),
-
-    // Conjunctive search through the PERSISTED inverted index
-    // (sources/InvertedIndex): the corpus is tokenized once into term
-    // postings, compacted into ONE bucketed table SORTED BY term — the
-    // query's pushed `term IN (...)` filter prunes the scan to the row
-    // groups holding those terms (a distributed index seek), and the AND
-    // is a doc_id aggregation over posting-sized data. Documents are
-    // never read at query time.
-    "text_search" -> ((s, dir) =>
-      fullInvIndex(s, dir).conjunctive(Seq("dup", "vector")).orderBy(col("doc_id"))),
-
-    // Adjacency phrase search ("key order") from the SAME index: position
-    // lists make the phrase an |shift(pos_a) ∩ pos_b| intersection of two
-    // pruned posting scans joined on doc_id — a pure index operation, no
-    // document text touched.
-    "text_phrase" -> ((s, dir) =>
-      fullInvIndex(s, dir).phrase("key", "order").orderBy(col("doc_id"))),
-
-    // The incremental ingest path: bootstrap the first half, append the
-    // second half as a delta generation (ONLY the delta is tokenized —
-    // per-ingest cost is delta-shaped, the committed corpus is never
-    // re-read), query across compaction + tail. Result is identical to
-    // text_search over the full corpus — the generation union is exact.
-    "text_search_incr" -> ((s, dir) => {
-      val idx = IndexCache.getOrBuildVersioned(s, s"inv-incr|$dir", dir) {
-        val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        val cut = 250L
-        val i = new graft.sources.InvertedIndex(s, Scratch.create(s, "graft-inv-idx-incr"))
-        i.bootstrap(docs.filter(col("doc_id") < cut))
-        i.compact(buckets = 8)
-        i.append(docs.filter(col("doc_id") >= cut))
-        i
-      }
-      idx.conjunctive(Seq("dup", "vector")).orderBy(col("doc_id"))
-    }),
-
-    // Continuous index maintenance: the second half of the corpus arrives
-    // as a document STREAM; each micro-batch lands as one committed index
-    // generation via the exactly-once appendBatch (generation watermark +
-    // stats + applied-batch id move in one atomic rename — foreachBatch
-    // redelivery is a no-op). The post-stream search must hash-match the
-    // batch-built full-corpus text_search oracle: streaming ingest and
-    // batch ingest are indistinguishable to a reader.
-    "stream_index_ingest" -> ((s, dir) => {
-      import org.apache.spark.sql.{Dataset, Row}
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val mid = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      val idx = new graft.sources.InvertedIndex(s, Scratch.create(s, "graft-inv-stream"))
-      idx.bootstrap(docs.filter(col("doc_id") <= mid))
-      idx.compact(buckets = 8)
-      val q = graft.streaming.Streaming.documents(s, dir)
-        .filter(col("doc_id") > mid).select(col("doc_id"), col("text"))
-        .writeStream
-        .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-          idx.appendBatch(batch.toDF(), batchId))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", graft.TempDirs.create("graft-inv-ingest-ckpt"))
-        .start()
-      q.awaitTermination()
-      idx.conjunctive(Seq("dup", "vector")).orderBy(col("doc_id"))
-    }),
-
-    // Streaming quality gate over the PERSISTED bigram LM: the model is
-    // fitted once on the history era (session-cached LmStore —
-    // production holds it deployed before the stream exists); each
-    // micro-batch of the arriving delta is scored under the FROZEN
-    // table (perplexityUnder: delta-sized joins, Laplace backoff for
-    // genuinely novel bigrams) and admitted iff its pseudo-perplexity
-    // clears the gate — the per-ingest quality filter a training
-    // pipeline runs, with per-batch cost tracking the batch, never the
-    // fitted corpus. The oracle replays fit-then-score-then-filter in
-    // one pass: batch boundaries cannot change a per-document score, so
-    // streamed admission ≡ batch admission row-for-row. Admitted rows
-    // land through the ledger-gated parquet sink (batchId-keyed subdir +
-    // atomic watermark — StreamSink.exactlyOnceParquet), so a
-    // crash-redelivered micro-batch overwrites instead of double-
-    // admitting (r11 verdict #3: the bare mode("append") shipped here
-    // contradicted the engine's own exactly-once discipline).
-    "stream_lm_gate" -> ((s, dir) => {
-      import org.apache.spark.sql.{Dataset, Row}
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val store = IndexCache.getOrBuildVersioned(s, s"lm-gate|$dir", dir) {
-        val st = new graft.sources.LmStore(s, Scratch.create(s, "graft-lm-gate"))
-        st.fit(docs.filter(col("doc_id") % 50 =!= 0))
-        st
-      }
-      val outDir = graft.TempDirs.create("graft-lm-gate-out")
-      val ckpt = graft.TempDirs.create("graft-lm-gate-ckpt")
-      val q = graft.streaming.Streaming.documents(s, dir)
-        .filter(col("doc_id") % 50 === 0).select(col("doc_id"), col("text"))
-        .writeStream
-        .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-          graft.streaming.StreamSink.exactlyOnceParquet(outDir,
-            store.scoreDelta(batch.toDF()).filter(col("ppl") <= 31.0), batchId,
-            lineage = ckpt)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt)
-        .start()
-      q.awaitTermination()
-      // fold the per-batch dirs and RETIRE them before the read (r13):
-      // the declared result must be identical whether the reader sees
-      // fragments or the compacted base — compaction rides this query's
-      // existing oracle, no new replay needed
-      graft.streaming.StreamSink.compactParquet(s, outDir, retireSuperseded = true)
-      graft.streaming.StreamSink.committedParquet(s, outDir).orderBy(col("doc_id"))
-    }),
-
-    // Proximity (NEAR) search from the same index: "key" followed by
-    // "order" within 3 tokens — the adjacency kernel with the gap
-    // widened; still two pruned posting scans joined on doc_id.
-    "text_near" -> ((s, dir) =>
-      fullInvIndex(s, dir).near("key", "order", maxGap = 3).orderBy(col("doc_id"))),
-
-    // Snapshot (time-travel) read: search AS OF generation 0 after a
-    // later append — the snapshot is a PREFIX of the generation sequence,
-    // so pinned readers are isolated from concurrent ingests for free.
-    // Must equal the search over only the bootstrap half.
-    "text_search_asof" -> ((s, dir) => {
-      val idx = IndexCache.getOrBuildVersioned(s, s"inv-asof|$dir", dir) {
-        val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        val cut = 250L
-        val i = new graft.sources.InvertedIndex(s, Scratch.create(s, "graft-inv-idx-ao"))
-        i.bootstrap(docs.filter(col("doc_id") < cut))
-        i.append(docs.filter(col("doc_id") >= cut))
-        i
-      }
-      idx.conjunctive(Seq("dup", "vector"), asOf = Some(0L)).orderBy(col("doc_id"))
-    }),
-
-    // Prefix term browse ('s*'): StartsWith pushes into the parquet scan,
-    // and the term-sorted compaction makes a prefix a CONTIGUOUS
-    // row-group range — index-seek pruning for wildcard queries.
-    "text_prefix" -> ((s, dir) =>
-      fullInvIndex(s, dir).prefix("s").orderBy(col("term"))),
-
-    // Index maintenance telemetry: per-term posting length / tf mass —
-    // posting skew is probe tail latency, and this is where the stop set
-    // for lead-rarest planning comes from. Positions are pruned from the
-    // scan; the report is one index-sized aggregation (a maintenance op,
-    // not a query-path op — same class as ivf_balance).
-    "inverted_stats" -> ((s, dir) => {
-      val idx = IndexCache.getOrBuildVersioned(s, s"inv-uncompacted|$dir", dir) {
-        val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        val i = new graft.sources.InvertedIndex(s, Scratch.create(s, "graft-inv-idx-st"))
-        i.bootstrap(docs)
-        i
-      }
-      idx.termStats.orderBy(col("df").desc, col("term"))
-    }),
-
-    // The lead-with-the-rarest-posting AND plan: term dfs (O(terms)
-    // driver metadata) order the intersection rarest-first and each hot
-    // posting is a LEFT SEMI join against the rare doc set — shuffled
-    // volume tracks the RAREST posting, not the largest. Must hash-match
-    // the aggregation-plan text_search oracle exactly.
-    "text_search_lead" -> ((s, dir) =>
-      fullInvIndex(s, dir).conjunctiveLeadRarest(Seq("dup", "vector"))
-        .orderBy(col("doc_id"))),
-
-    // BM25 ranked retrieval from the persisted index: reads ONLY the two
-    // query terms' postings (pruned scan) plus the O(1) committed corpus
-    // stats (n_docs / total_len live in generation-keyed bookmark slots —
-    // a ranked query never scans the corpus to learn its size). df comes
-    // from the pruned postings via a terms-sized broadcast join.
-    "text_bm25" -> ((s, dir) =>
-      fullInvIndex(s, dir).bm25(Seq("dup", "vector"), 15).orderBy(col("doc_id"))),
-
-    // Disjunctive (OR) retrieval from the same persisted index: any of
-    // three terms, matched-count + tf mass as rank signals — the same
-    // pruned posting scan and single aggregation as the AND, filter
-    // dropped.
-    "text_search_or" -> ((s, dir) =>
-      fullInvIndex(s, dir).disjunctive(Seq("dup", "vector", "merge"))
-        .orderBy(col("doc_id"))),
-
-    // Minimum-should-match (Lucene mm): docs matching >= 2 of 3 terms —
-    // the recall/precision middle ground between AND and OR; identical
-    // plan to the OR query plus a post-aggregate threshold.
-    "text_search_msm" -> ((s, dir) =>
-      fullInvIndex(s, dir).minShouldMatch(Seq("dup", "vector", "merge"), 2)
-        .orderBy(col("doc_id"))),
-
-    // Boolean AND NOT: docs with both include terms and NEITHER exclude
-    // term — the exclusion is a doc-set anti-join on pruned postings,
-    // never a corpus scan.
-    "text_search_not" -> ((s, dir) =>
-      fullInvIndex(s, dir).conjunctiveNot(Seq("dup", "vector"), Seq("merge"))
-        .orderBy(col("doc_id"))),
-
-    // BM25 at FOUR query terms (r8 verdict #5): exercises the
-    // order-independent integer micro-unit sum — with >= 3 terms the old
-    // double aggregation's low bits depended on partial-merge order, so
-    // multi-term ranking was oracle-ungateable. Two of the terms are
-    // stopword-grade (df ~78%), so the score blends hot and rare
-    // postings; still one pruned posting scan + one posting-sized
-    // aggregation.
-    "text_bm25_multi" -> ((s, dir) =>
-      fullInvIndex(s, dir).bm25(Seq("dup", "vector", "table", "merge"), 20)
-        .orderBy(col("doc_id"))),
-
-    // Hybrid retrieval: Reciprocal Rank Fusion of the BM25 arm (persisted
-    // inverted index, pruned posting scan) and the exact-cosine vector
-    // arm (query = embedding 0) — the RAG first-stage retriever. Both
-    // arms are top-30 lists, so the fusion is a k×k equi-join over
-    // driver-scale metadata; all data-sized work happens inside the arms,
-    // where the indexes bound it. Rank-only fusion needs no score
-    // calibration across the two incomparable scales.
-    "hybrid_search_rrf" -> ((s, dir) => {
-      val textArm = graft.operators.HybridSearch.rankArm(
-        fullInvIndex(s, dir).bm25(Seq("dup", "vector"), 30),
-        col("score"), "r_text")
-      val emb = Tables.embeddings(s, dir)
-      val vecArm = Similarity
-        .bruteForceTopK(emb, emb.filter(col("vec_id") === 0), 30)
-        .select(col("neighbor_id").as("doc_id"), col("rank").as("r_vec"))
-      graft.operators.HybridSearch.rrf2(textArm, vecArm, k = 20)
-    }),
-
-    // The PRODUCTION hybrid (r11 verdict #2): BOTH arms ride persisted
-    // indexes — BM25 over the inverted index (pruned posting scan + O(1)
-    // corpus stats) fused with the persisted IVF probe (nprobe of nlist
-    // frozen cells; candidates ∝ nprobe·cellBudget, independent of corpus
-    // growth). hybrid_search_rrf keeps the exact-scan vector arm as the
-    // declared recall baseline; THIS is the shape that survives 100 TB,
-    // because neither arm's cost is corpus-shaped at query time. The
-    // fusion itself is unchanged: two top-30 lists, a k×k full-outer
-    // join, rank-only scoring. r14 (r13 verdict #3): the vector arm's
-    // probe width was the last call-site constant on a production path —
-    // the exact drift class that shipped recall 0.45 for two rounds.
-    // The arm's store now carries a COMMITTED operating point (maintained
-    // once per store lifetime, at the arm's own k=30 against the
-    // 8-query sample) and the no-knobs topK reads the stamp; the oracle
-    // re-derives the same nprobe from the replayed sweep grid as a
-    // scalar CTE — a constant in neither the operator nor the SQL.
-    "hybrid_search_rrf_indexed" -> ((s, dir) => {
-      val textArm = graft.operators.HybridSearch.rankArm(
-        fullInvIndex(s, dir).bm25(Seq("dup", "vector"), 30),
-        col("score"), "r_text")
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.getOrBuildVersioned(s, s"ivf-full|$dir", dir) {
-        val i = new graft.sources.IvfIndex(
-          s, Scratch.create(s, "graft-ivf-full"), nlist = 16)
-        i.bootstrap(emb)
-        i
-      }
-      // era cadence: the sweep runs once per store lifetime (the stamp
-      // persists); warm cost is the pure committed-point probe
-      val served = if (idx.operatingPoint.isDefined) idx
-        else idx.maintain(emb, emb.filter(col("vec_id") % 50 === 0),
-          emb.filter(col("vec_id") < 8), k = 30, recallFloor = 0.85,
-          cosineFloor = 0.22, maxFracBelow = 1.0,
-          nprobes = Seq(1, 2, 4, 8, 16)).serving
-      val vecArm = served.topK(emb, emb.filter(col("vec_id") === 0), 30)
-        .select(col("neighbor_id").as("doc_id"), col("rank").as("r_vec"))
-      graft.operators.HybridSearch.rrf2(textArm, vecArm, k = 20)
-    }),
-
-    // The 100 TB refinement of the production hybrid (r12 verdict #5):
-    // the vector arm rides the IVF-PQ COMPOSITION instead of flat IVF.
-    // The flat-IVF arm re-reads full-width float embeddings for every
-    // in-cell candidate — at 100 TB the probe's scan width is the cost —
-    // while the ADC arm scores m smallint codes per candidate and
-    // touches floats only for the shortlist re-rank. Same BM25 arm,
-    // identical rank-only fusion. r14 (r13 verdict #3): the arm's
-    // (nprobe, shortlist) were call-site constants; the arm now owns its
-    // OWN maintained store (a serving surface owns its maintenance —
-    // sharing sim_ivfpq_committed's store would make the committed point
-    // depend on which query's k-5 sweep ran first) swept at the arm's
-    // k=30, and the no-knobs topK reads the committed stamp. The oracle
-    // re-derives the same (nprobe, shortlist) from the replayed
-    // two-phase grid as scalar CTEs — constants in neither side.
-    "hybrid_search_rrf_ivfpq" -> ((s, dir) => {
-      val textArm = graft.operators.HybridSearch.rankArm(
-        fullInvIndex(s, dir).bm25(Seq("dup", "vector"), 30),
-        col("score"), "r_text")
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.getOrBuildVersioned(s, s"ivfpq-hy|$dir", dir) {
-        val i = new graft.sources.IvfPqIndex(
-          s, Scratch.create(s, "graft-ivfpq-hy"), nlist = 16, m = 8, codes = 256)
-        i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-        i.append(emb.filter(col("vec_id") % 50 === 0))
-        i
-      }
-      val served = if (idx.operatingPoint.isDefined) idx
-        else idx.maintain(emb, emb.filter(col("vec_id") % 50 === 0),
-          emb.filter(col("vec_id") < 8), k = 30, recallFloor = 0.8,
-          cosineFloor = 0.22, maxFracBelow = 1.0,
-          nprobes = Seq(2, 4, 8, 16), shortlists = Seq(50, 200)).serving
-      val vecArm = served.topK(emb, emb.filter(col("vec_id") === 0), 30)
-        .select(col("neighbor_id").as("doc_id"), col("rank").as("r_vec"))
-      graft.operators.HybridSearch.rrf2(textArm, vecArm, k = 20)
-    }),
-
-    // BATCH-SCALE HYBRID (r16, r15 verdict #7): the production hybrid's
-    // remaining single-query assumptions removed — a 5x-replicated
-    // multi-thousand-query batch (2,500 at the verify SF, 10,000 at
-    // bench SF) runs BOTH arms and the fusion batch-shaped. The vector
-    // arm rides the persisted flat-IVF batch store through the
-    // distributed probe (10k+ probe rows >> the broadcast threshold:
-    // the driver sees only O(nlist) cell ids); the lexical arm is the
-    // new per-query BM25 (5k+ (query_id, term) rows >> its broadcast
-    // tier: the query frame is never collected, the distinct TERM set
-    // alone reaches the driver for the posting scan's IN pushdown, and
-    // the term join is SALTED — term keys are low-cardinality, so the
-    // unsalted join concentrated the whole batch on two partitions);
-    // the fusion is a per-query (query_id, doc_id) join + window —
-    // nothing global-sorts and nothing funnels the driver at any batch
-    // size. Every replica carries its base's OWN embedding (the vector
-    // lists differ per base) AND its base's own keyword query — even
-    // bases ask (dup, vector), odd bases (dup, stream) — so the
-    // (query_id, term) join is semantically load-bearing, not a
-    // replicated constant. The oracle replays each text variant once,
-    // the vector arm once per base, fuses per base by parity, and
-    // expands — any per-replica divergence in either batch arm is a
-    // hash mismatch. Replication is 5x (not sim_ivf_batch's 21x): the
-    // high-df fixture terms make text-arm work = |queries| × df, and
-    // 5x already puts every frame above every threshold at every SF.
-    "hybrid_batch_rrf" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      val idx = IndexCache.getOrBuildVersioned(s, s"ivf-batch|$dir", dir) {
-        val i = new graft.sources.IvfIndex(
-          s, Scratch.create(s, "graft-ivf-batch"), nlist = 16)
-        i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-        i.append(emb.filter(col("vec_id") % 50 === 0))
-        i
-      }
-      val queries = emb
-        .select(col("vec_id"), col("embedding"),
-          explode(sequence(lit(0L), lit(4L))).as("rep"))
-        .select((lit(1000000L) + col("vec_id") * 5 + col("rep")).as("vec_id"),
-          col("embedding"))
-      val vecArm = idx.topK(emb, queries, 30, nprobe = 4)
-        .select(col("query_id"), col("neighbor_id").as("doc_id"),
-          col("rank").as("r_vec"))
-      // per-base term sets: base = (query_id - 1e6) / 5, replicas of one
-      // base share their base's query (the expansion identity the oracle
-      // relies on), different bases genuinely differ
-      val qt = queries.select(col("vec_id").as("query_id"))
-        .withColumn("term", explode(
-          when(pmod(floor((col("query_id") - 1000000L) / 5), lit(2)) === 0,
-            array(lit("dup"), lit("vector")))
-          .otherwise(array(lit("dup"), lit("stream")))))
-      val textArm = graft.operators.HybridSearch.rankArmBatch(
-        fullInvIndex(s, dir).bm25Batch(qt, 30), col("score"), "r_text")
-      graft.operators.HybridSearch.rrf2Batch(textArm, vecArm, k = 20)
-        .orderBy(col("query_id"), col("rank"))
-    }),
-
-    // Windowed co-occurrence + PMI (skip-gram statistics for embedding
-    // training): pair generation is MAP-ONLY — each doc's token list
-    // zip_with its own g-shifted self per gap, never a positions
-    // self-join; the only shuffles are the two count aggregations and
-    // the unigram side re-joins as a vocab-sized broadcast.
-    "cooccurrence_pmi" -> ((s, dir) =>
-      TextAnalysis.cooccurrencePmi(
-          Tables.documents(s, dir).select(col("doc_id"), col("text")),
-          window = 2, minCount = 2L)
-        .orderBy(col("term_a"), col("term_b"))),
-
-    // Top TF-IDF terms per document: map-side-combined (doc, term)
-    // counts, broadcast vocabulary join, per-doc top-k window. nDocs
-    // comes from the persisted index's O(1) committed stats slot (the
-    // same value a corpus count would produce — the index bootstraps
-    // from this exact table), not a per-run count(): at 100 TB a ranked
-    // query never scans the corpus just to learn its size (r12 verdict
-    // #7 — this was the last corpus-count-per-run in a declared query).
-    "tfidf_terms" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      TextAnalysis.tfIdfTopTerms(docs, fullInvIndex(s, dir).corpusStats._1, 3)
-        .orderBy(col("doc_id"), col("rank"))
-    }),
-
-    // The per-ingest production shape (r11 verdict #6): score ONLY the
-    // delta's terms against the PERSISTED index's df and O(1) corpus
-    // stats — tfidf_terms re-aggregates the corpus and counts it per
-    // run; this twin's warm cost is the delta's tokens plus the delta
-    // terms' posting lengths. Output equals the batch operator over the
-    // same corpus restricted to the delta's doc_ids (the index's
-    // postings derive from the same token kernel), so the oracle is the
-    // tfidf_terms replay with the delta filter on the final projection.
-    "tfidf_terms_incr" -> ((s, dir) => {
-      val delta = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        .filter(col("doc_id") % 50 === 0)
-      fullInvIndex(s, dir).tfIdfTopTermsDelta(delta, 3)
-        .orderBy(col("doc_id"), col("rank"))
-    }),
-
-    // The native kernels through the SQL front door — GraftExtensions
-    // registers them via SparkSessionExtensions.injectFunction, so a pure
-    // spark.sql user gets the same codegen'd primitives as the Column API.
-    "sql_kernels" -> ((s, dir) => {
-      Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        .createOrReplaceTempView("documents_v")
-      s.sql("""SELECT doc_id,
-               |  poly_hash(text) AS fp,
-               |  simhash64(text, 16) AS sh,
-               |  size(token_hashes(text)) AS n_tok,
-               |  size(shingle_hashes(text, 3)) AS n_shingles
-               |FROM documents_v ORDER BY doc_id""".stripMargin)
-    }),
-
-    // Custom DataSource V2 generator source with real column pruning and
-    // id-range filter pushdown (the range narrows inside the source, so
-    // the predicate skips whole input partitions like row-group pruning).
-    "seq_source" -> ((s, _) =>
-      s.read.format("graft.sources.SeqSource")
-        .option("rows", "100000").option("partitions", "16").load()
-        .filter(col("id") >= 25000 && col("id") < 75000)
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n"), round(sum(col("val")), 2).as("total"),
-          min(col("id")).as("min_id"), max(col("id")).as("max_id"))
-        .orderBy(col("bucket"))),
-
-    // Corpus vocabulary (top-500 terms) + per-document OOV rate: the gate
-    // before committing to a tokenizer vocab.
-    "vocab_oov" -> ((s, dir) =>
-      TextAnalysis.vocabOov(
-          Tables.documents(s, dir).select(col("doc_id"), col("text")), 500)
-        .orderBy(col("doc_id"))),
-
-    // Repetition / compressibility signals: distinct-vs-total ratios of
-    // char 5-grams and tokens, map-only.
-    "doc_repetition" -> ((s, dir) =>
-      TextAnalysis.repetition(
-          Tables.documents(s, dir).select(col("doc_id"), col("text")), 5)
-        .orderBy(col("doc_id"))),
-
-    // Decontamination sweep: train docs sharing >= 5 distinct 8-char
-    // grams with the (simulated, doc_id % 50 == 0) eval set.
-    "decontam_overlap" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      Dedup.crossOverlapPairs(
-          docs.filter(col("doc_id") % 50 =!= 0),
-          docs.filter(col("doc_id") % 50 === 0), n = 8, minShared = 5L)
-        .orderBy(col("train_id"), col("bench_id"))
-    }),
-
-    // Sliding-window token chunking (32-token chunks every 24 tokens,
-    // 8-token overlap): map-only explode — the unit a tokenizer/packer
-    // consumes downstream.
-    "doc_chunks" -> ((s, dir) =>
-      TextAnalysis.chunks(
-          Tables.documents(s, dir).select(col("doc_id"), col("text")), 32, 24)
-        .orderBy(col("doc_id"), col("chunk_idx"))),
-
-    // PII redaction over the corpus: deterministic synthetic emails/phones
-    // injected (the stock corpus has none), scrub+count per pattern in one
-    // map-only pass, then per-source counts plus an exact checksum of the
-    // scrubbed text (sum of poly_hash — integer, order-insensitive).
-    "pii_scrub" -> ((s, dir) => {
-      val aug = Tables.documents(s, dir).select(col("doc_id"), col("source"),
-        concat(col("text"),
-          when(col("doc_id") % 7 === 0,
-            concat(lit(" contact"), col("doc_id"), lit("@example.com")))
-            .otherwise(lit("")),
-          when(col("doc_id") % 11 === 0, lit(" call 555-123-4567"))
-            .otherwise(lit(""))).as("text"))
-      TextAnalysis.piiScrub(aug)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_email")).as("emails"),
-          sum(col("n_phone")).as("phones"),
-          sum(col("n_ip")).as("ips"),
-          sum(GraftFunctions.poly_hash(col("clean_text"))).as("scrub_checksum"))
-        .orderBy(col("source"))
-    }),
-
-    // Per-vector int8 scalar quantization of the embedding corpus: rowwise
-    // (lo, scale), mean reconstruction error, and a codes checksum.
-    "embed_quantize" -> ((s, dir) =>
-      Quantize.int8(Tables.embeddings(s, dir))
-        .select(col("vec_id"),
-          // + 0.0 collapses IEEE -0.0 (DuckDB float round keeps the sign
-          // of a tiny negative; Spark's BigDecimal round does not)
-          (round(col("q_lo"), 6) + lit(0.0)).as("q_lo"),
-          (round(col("q_hi"), 6) + lit(0.0)).as("q_hi"),
-          col("q_err"),
-          Quantize.codesHash(col("codes")).as("codes_hash"))
-        .orderBy(col("vec_id"))),
-
-    // 3-iteration PageRank over the bipartite part<->supplier graph from
-    // lineitem (ids namespaced even/odd); per-round rounding keeps the
-    // carried state bit-identical between engines.
-    "pagerank" -> ((s, dir) => {
-      val pairs = Tables.lineitem(s, dir)
-        .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
-      val edges = pairs
-        .select((col("p") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
-        .union(pairs.select((col("sk") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
-      Graph.pagerank(edges, iters = 3).orderBy(col("node"))
-    }),
-
-    // Deterministic random walks (node2vec/DeepWalk sampling with the
-    // randomness replaced by the portable hash — reproducible across
-    // runs, repartitioning, and engines): one walk per node over the
-    // part-supplier bipartite graph, 3 steps, each step one
-    // frontier-vs-adjacency join on the same key.
-    "graph_walks" -> ((s, dir) => {
-      val pairs = Tables.lineitem(s, dir)
-        .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
-      val edges = pairs
-        .select((col("p") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
-        .union(pairs.select((col("sk") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
-      Graph.deterministicWalks(edges, steps = 3)
-        .orderBy(col("start"), col("step"))
-    }),
-
-    // Walks over a DIRECTED acyclic graph with real dead ends (r8 verdict
-    // #7): nodes 0..200, edges hop forward by 1..37 capped at 200, so the
-    // top of the key space has shrinking out-degree and node 200 is a
-    // pure sink. A walk reaching a dead end ENDS there — the left-join
-    // freeze keeps the steps already taken (the old inner-join step
-    // dropped the whole walker). Same one-join-per-hop plan as
-    // graph_walks; the oracle replays every hop including the early
-    // terminations.
-    "graph_walks_directed" -> ((s, dir) => {
-      val edges = Tables.lineitem(s, dir)
-        .select((col("l_partkey") % 200).as("src"),
-          ((col("l_partkey") % 200) + (col("l_suppkey") % 37) + 1).as("dst"))
-        .filter(col("dst") <= 200).distinct()
-      Graph.deterministicWalks(edges, steps = 3)
-        .orderBy(col("start"), col("step"))
-    }),
-
-    // Triangle participation per node over the near-dup candidate graph
-    // (density signal for dedup clusters): two vertex-key equi-joins,
-    // never a cross product.
-    "graph_triangles" -> ((s, dir) =>
-      Graph.triangleCounts(
-        Dedup.minhashLshPairs(
-          Tables.documents(s, dir).filter(col("doc_id") % 10 === 0),
-          n = 3, k = 16, bands = 4, threshold = 0.6)
-          .select(col("id_a"), col("id_b")))
-        .orderBy(col("node"))),
-
-    // ===== Structured Streaming (bounded run via Trigger.AvailableNow) ====
-    // All bounded runs pin 8 state partitions: state-store parallelism is
-    // a stream-volume knob (see Streaming.runToCompletion) and the verify/
-    // bench streams are small; results are partition-count-invariant.
-
-    // Watermarked tumbling-window aggregation; complete mode emits every
-    // window on a bounded input.
-    "stream_window_agg" -> ((s, dir) =>
-      Streaming.runToCompletion(
-        Streaming.dailyTypeCounts(Streaming.events(s, dir)), OutputMode.Complete(),
-        statePartitions = Some(8))
-        .orderBy(col("day_start"), col("event_type"))),
-
-    // Built-in session_window aggregation (30-min gap) per user.
-    "stream_sessions" -> ((s, dir) =>
-      Streaming.runToCompletion(
-        Streaming.userSessions(Streaming.events(s, dir)), OutputMode.Complete(),
-        statePartitions = Some(8))
-        .orderBy(col("user_id"), col("session_start"))),
-
-    // Streaming exact dedup of a doubled stream — each event exactly once.
-    "stream_dedup" -> ((s, dir) => {
-      val doubled = Streaming.events(s, dir).union(Streaming.events(s, dir))
-      Streaming.runToCompletion(Streaming.dedupEvents(doubled), OutputMode.Append(),
-        statePartitions = Some(8))
-        .orderBy(col("event_id"))
-    }),
-
-    // Streaming incremental dedup: the bookmark-delta dedup as a
-    // continuous pipeline — arriving docs check a STORED fingerprint
-    // store (stream-static join, store parquet written then re-read) and
-    // dedupe within the stream via fingerprint state. Emits each novel
-    // fingerprint exactly once; oracle = batch set algebra.
-    "stream_incr_dedup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val mid = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      val storeDir = graft.TempDirs.create("graft-fpstore")
-      docs.filter(col("doc_id") <= mid)
-        .select(GraftFunctions.poly_hash(col("text")).as("fingerprint"))
-        .distinct()
-        .write.mode("overwrite").parquet(storeDir)
-      Streaming.runToCompletion(
-        Streaming.incrementalDedup(
-          Streaming.documents(s, dir).filter(col("doc_id") > mid),
-          s.read.parquet(storeDir)),
-        OutputMode.Append(), statePartitions = Some(8))
-        .orderBy(col("fingerprint"))
-    }),
-
-    // Stream-static enrichment: stateless broadcast join to the customer
-    // dimension, per-segment aggregate in complete mode.
-    "stream_enrich" -> ((s, dir) =>
-      Streaming.runToCompletion(
-        Streaming.enrichedSegments(Streaming.events(s, dir), Tables.customer(s, dir)),
-        OutputMode.Complete(), statePartitions = Some(8))
-        .orderBy(col("segment"))),
-
-    // Bounded-state streaming dedup: dropDuplicatesWithinWatermark — the
-    // unbounded-stream-safe variant of stream_dedup (state expires after
-    // the disorder bound; the doubled stream's duplicates are identical
-    // timestamps, so all are caught).
-    "stream_dedup_wm" -> ((s, dir) => {
-      val doubled = Streaming.events(s, dir).union(Streaming.events(s, dir))
-      Streaming.runToCompletion(
-        Streaming.dedupEventsWithinWatermark(doubled), OutputMode.Append(),
-        statePartitions = Some(8))
-        .orderBy(col("event_id"))
-    }),
-
-    // Streaming windowed top-k through the custom k-bounded-heap
-    // aggregate: O(k) streaming state per day, not a day's event buffer.
-    "stream_topk" -> ((s, dir) =>
-      Streaming.runToCompletion(
-        Streaming.dailyTopK(Streaming.events(s, dir), 3), OutputMode.Complete(),
-        statePartitions = Some(8))
-        .orderBy(col("day_start"), col("rank"))),
-
-    // Stream-stream interval join with state bounded by watermarks +
-    // the join's event-time range.
-    "stream_join" -> ((s, dir) =>
-      Streaming.runToCompletion(
-        Streaming.clickToPurchase(Streaming.events(s, dir)), OutputMode.Append(),
-        statePartitions = Some(8))
-        .orderBy(col("click_id"), col("purchase_id"))),
-
-    // Streaming CEP: same tightest-chain pattern semantics as
-    // pattern_funnel, as k-1 longs of per-user flatMapGroupsWithState
-    // state; matches materialize in Append mode, then batch-aggregate.
-    "stream_pattern" -> ((s, dir) => {
-      import s.implicits._
-      val ev = Streaming.events(s, dir)
-        .select(col("user_id"), col("event_id"), col("event_type"),
-          Tables.eventSeconds.as("tss"))
-        .as[Streaming.PatternEvent]
-      Streaming.runToCompletion(
-        Streaming.matchPattern(ev, Seq("click", "view", "purchase"), 86400).toDF(),
-        OutputMode.Append(), statePartitions = Some(8))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_matches"),
-          min(struct(col("end_sec"), col("end_event"), col("span"))).as("_f"))
-        .select(col("user_id"), col("n_matches"),
-          col("_f.end_sec").as("first_end_sec"), col("_f.span").as("first_span_sec"))
-        .orderBy(col("user_id"))
-    }),
-
-    // ===== Multimodal columns (binary payload + typed metadata) ==========
-
-    // Batched stub decode over binary payloads via mapPartitions
-    // (deterministic fake features the oracle replays; see Multimodal).
-    "multimodal_features" -> ((s, dir) =>
-      Multimodal.decodeFeatures(Multimodal.asRecords(Multimodal.media(s, dir)))
-        .toDF().orderBy(col("doc_id"))),
-
-    // Batched stub resize of image payloads (stride subsampling to ~256
-    // bytes): binary->binary mapPartitions, partitioning preserved.
-    "multimodal_resize" -> ((s, dir) =>
-      Multimodal.resize(Multimodal.asRecords(
-          Multimodal.media(s, dir).filter(col("media_type") === "image")))
-        .toDF().orderBy(col("doc_id"))),
-
-    // Perceptual-style near-dup over media payloads: the stub resize is
-    // the "thumbnail" (a real pHash replaces Decode.resizeOne's body; the
-    // Spark shape is identical) — batched binary->binary mapPartitions,
-    // then ONE (type, thumb, len) aggregation over 16-byte signatures.
-    // At 100 TB the shuffle carries ~24 bytes/doc, never the payloads;
-    // out_len rides in the key as the cross-length collision guard.
-    "multimodal_dedup" -> ((s, dir) => {
-      Multimodal.resize(Multimodal.asRecords(Multimodal.media(s, dir)),
-          targetBytes = 16)
-        .toDF()
-        .groupBy(col("media_type"), col("out_checksum").as("thumb_checksum"),
-          col("out_len"))
-        .agg(count(lit(1)).cast("long").as("n_docs"),
-          min(col("doc_id")).as("keep_doc"), max(col("doc_id")).as("max_doc"))
-        .filter(col("n_docs") > 1)
-        .orderBy(col("media_type"), col("thumb_checksum"))
-    }),
-
-    // Metadata-driven frame sampling for video payloads — map-only, the
-    // binary column is pruned from the scan entirely.
-    "multimodal_frames" -> ((s, dir) =>
-      Multimodal.sampleFrames(Multimodal.media(s, dir))
-        .orderBy(col("doc_id"), col("frame_idx"))),
-
-    // ===== Relational operator breadth =====================================
-
-    // Batch sessionization (gaps-and-islands): session-size distribution
-    // with average duration. One shuffle on the user key serves windows
-    // and aggregation; same session semantics as stream_sessions.
-    "session_stats" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), col("event_id"), Tables.eventSeconds.as("tss"))
-      Sessionize.batch(ev, 1800)
-        .groupBy(col("n_events"))
-        .agg(count(lit(1)).as("n_sessions"),
-          round(avg(col("session_end") - col("session_start")), 2).as("avg_duration"))
-        .orderBy(col("n_events"))
-    }),
-
-    // CDC upsert compaction: current state per user from the event
-    // changelog, 'error' acting as the delete marker. max(struct) keeps
-    // the shuffle at one row per key per partition (map-side combine) —
-    // no window sort over the full log.
-    "cdc_latest" -> ((s, dir) => {
-      val ch = Tables.events(s, dir)
-        .select(col("user_id"), Tables.eventSeconds.as("tss"),
-          col("event_id"), col("event_type"), col("value"))
-      Cdc.latest(ch, Seq("user_id"), Seq("tss", "event_id"),
-          isDelete = Some(col("event_type") === "error"))
-        .select(col("user_id"), col("tss").as("last_ts"),
-          col("event_id").as("last_event"), col("event_type").as("last_type"),
-          round(col("value"), 2).as("last_value"))
-        .orderBy(col("user_id"))
-    }),
-
-    // Type-2 SCD build: validity intervals of each user's event_type,
-    // consecutive duplicates collapsed; one shuffle on the key.
-    "scd2_build" -> ((s, dir) => {
-      val ch = Tables.events(s, dir)
-        .select(col("user_id"), Tables.eventSeconds.as("tss"),
-          col("event_id"), col("event_type"))
-      Cdc.scd2(ch, Seq("user_id"), "tss", "event_id", Seq("event_type"))
-        .orderBy(col("user_id"), col("valid_from"))
-    }),
-
-    // Incremental SCD2: the dimension is built from the first ~90% of the
-    // changelog (one discrete run), then the bookmark-delta tail is MERGED
-    // — closed versions pass through a map-only broadcast-anti scan, the
-    // window re-runs only over open-rows-of-touched-keys + delta. The
-    // oracle is the full-recompute SQL: merge(old→dim, delta) must be
-    // row-identical to scd2(everything).
-    "scd2_merge" -> ((s, dir) => {
-      val ch = Tables.events(s, dir)
-        .select(col("user_id"), Tables.eventSeconds.as("tss"),
-          col("event_id"), col("event_type"))
-      val r = ch.agg(min(col("tss")), max(col("tss"))).head()
-      val cut = r.getLong(0) + (r.getLong(1) - r.getLong(0)) * 9 / 10
-      // the dimension is a STORED table between runs (that is the whole
-      // point of the merge) — materialize it, so the merge's three
-      // pass-through branches are cheap parquet scans, not three
-      // recomputations of the historical window
-      val dimDir = graft.TempDirs.create("graft-scd2dim")
-      Cdc.scd2(ch.filter(col("tss") <= cut), Seq("user_id"),
-          "tss", "event_id", Seq("event_type"), keepTie = true)
-        .write.mode("overwrite").parquet(dimDir)
-      Cdc.scd2Merge(s.read.parquet(dimDir), ch.filter(col("tss") > cut),
-        Seq("user_id"), "tss", "event_id", Seq("event_type"))
-        .orderBy(col("user_id"), col("valid_from"))
-    }),
-
-    // Time-series resample: daily per-user activity with quiet days
-    // emitted and forward-filled. The raw stream crosses one shuffle;
-    // the grid is executor-generated (sequence+explode), never a
-    // driver calendar loop.
-    "gap_fill" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), Tables.eventSeconds.as("tss"), col("value"))
-      Resample.gapFill(ev, "user_id", "tss", "value", 86400L)
-        .orderBy(col("user_id"), col("bucket"))
-    }),
-
-    // Deterministic train/test split: membership is a pure function of
-    // poly_hash(event_id), stable under repartitioning/re-ingestion (a
-    // seeded df.sample() is neither) — map-only, no shuffle.
-    "sample_split" -> ((s, dir) =>
-      Sampling.trainTestSplit(Tables.events(s, dir), col("event_id"), 0.8)
-        .groupBy(col("event_type"), col("split"))
-        .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"))
-        .orderBy(col("event_type"), col("split"))),
-
-    // Leakage-safe split: the split key is the near-dup cluster
-    // representative (min-label propagation over the LSH pairs), so a
-    // test doc's near-duplicates can never land in train — cross-split
-    // near-dup pairs are zero by construction, not by luck.
-    "leakage_split" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
-      Sampling.leakageSafeSplit(docs,
-        Dedup.minhashLshPairs(docs, n = 3, k = 16, bands = 4, threshold = 0.6),
-        trainPct = 0.8)
-        .orderBy(col("doc_id"))
-    }),
-
-    // Leakage-safe K-FOLD: the same cluster-representative key hashed
-    // into 5 folds — no fold's held-out set has a near-dup in another
-    // fold, by construction (spec-asserted cluster-fold functional
-    // dependency).
-    "kfold_split" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
-      Sampling.kFoldSplit(docs,
-        Dedup.minhashLshPairs(docs, n = 3, k = 16, bands = 4, threshold = 0.6),
-        k = 5)
-        .orderBy(col("doc_id"))
-    }),
-
-    // Quality-weighted sampling: each document survives with probability
-    // proportional to a per-row score (length-normalized here) off the
-    // same portable hash — importance resampling as a map-only filter,
-    // monotone under re-scoring.
-    "weighted_sample" -> ((s, dir) =>
-      Sampling.weightedSample(Tables.documents(s, dir), col("doc_id"),
-        col("n_chars") / lit(600.0))
-        .groupBy(col("lang"), col("source"))
-        .agg(count(lit(1)).as("n_kept"),
-          min(col("doc_id")).as("min_id"), max(col("doc_id")).as("max_id"))
-        .orderBy(col("lang"), col("source"))),
-
-    // Stratified sampling: per-class keep rates off the same portable
-    // hash (downsample dominant classes, keep rare ones whole).
-    "sample_stratified" -> ((s, dir) =>
-      Sampling.stratifiedSample(Tables.events(s, dir), col("event_id"),
-        col("event_type"),
-        Map("click" -> 0.5, "view" -> 0.1, "purchase" -> 1.0,
-          "signup" -> 1.0, "error" -> 0.25))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
-        .orderBy(col("event_type"))),
-
-    // Range join: events inside incident windows (top-50 events by value,
-    // +/- 30 min each) via fixed-width bin keys — an equi-join on the bin,
-    // never a nested-loop; exact containment post-filter; per-incident agg.
-    "range_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), Tables.eventSeconds.as("sec"), col("value"))
-      val incidents = ev
-        .orderBy(col("value").desc, col("event_id"))
-        .limit(50)
-        .select(col("event_id").as("incident_id"),
-          (col("sec") - 1800).as("start_sec"), (col("sec") + 1800).as("end_sec"))
-      RangeJoin.binned(ev, "sec", incidents, "start_sec", "end_sec", 3600)
-        .groupBy(col("incident_id"))
-        .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
-        .orderBy(col("incident_id"))
-    }),
-
-    // As-of join: each event gets the user's most recent signup at or
-    // before it (union-tag + running-last window; one shuffle, no range
-    // cross-join).
-    "asof_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          // join at the full stored precision (micros), matching the
-          // oracle's epoch_us(ts)
-          Tables.eventMicros.as("ts_us"))
-      val signups = ev.filter(col("event_type") === "signup")
-      AsOfJoin.asOf(ev, signups, "user_id", "ts_us", "ts_us",
-        payload = Seq("event_id", "ts_us"), prefix = "signup_")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("signup_event_id"), col("signup_ts_us"))
-        .orderBy(col("event_id"))
-    }),
-
-    // Window top-k: 3 highest-revenue parts per brand (rank over rounded
-    // revenue, partkey tie-break).
-    "topk_per_group" -> ((s, dir) => {
-      val rev = Tables.lineitem(s, dir)
-        .join(broadcast(Tables.part(s, dir)), col("l_partkey") === col("p_partkey"))
-        .groupBy(col("p_brand"), col("l_partkey"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("revenue"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("p_brand")).orderBy(col("revenue").desc, col("l_partkey"))
-      rev.withColumn("rank", row_number().over(w)).filter(col("rank") <= 3)
-        .orderBy(col("p_brand"), col("rank"))
-    }),
-
-    // Rollup (grouping sets): revenue by (year, returnflag), per-year, and
-    // grand total in one pass.
-    "rollup_revenue" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .withColumn("ship_year", year(col("l_shipdate")))
-        .rollup(col("ship_year"), col("l_returnflag"))
-        .agg(round(sum(col("l_quantity")), 2).as("sum_qty"), count(lit(1)).as("n"))
-        .orderBy(col("ship_year"), col("l_returnflag"), col("n"))),
-
-    // CUBE with grouping_id: every (returnflag × linestatus) margin in
-    // one pass — Spark expands grouping sets before the single hash agg.
-    "cube_agg" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(round(sum(col("l_extendedprice")), 2).as("sum_price"),
-          count(lit(1)).as("n"), grouping_id().as("gid"))
-        .orderBy(col("gid"), col("l_returnflag"), col("l_linestatus"))),
-
-    // Arbitrary GROUPING SETS (neither rollup nor cube): three unrelated
-    // margins in ONE expand + hash agg pass, not three scans unioned.
-    "grouping_sets_agg" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .withColumn("ship_year", year(col("l_shipdate")))
-        .groupingSets(
-          Seq(Seq(col("ship_year"), col("l_returnflag")),
-            Seq(col("l_linestatus")), Seq()),
-          col("ship_year"), col("l_returnflag"), col("l_linestatus"))
-        .agg(round(sum(col("l_quantity")), 2).as("sum_qty"),
-          count(lit(1)).as("n"), grouping_id().as("gid"))
-        .orderBy(col("gid"), col("ship_year"), col("l_returnflag"),
-          col("l_linestatus"))),
-
-    // Unpivot (wide measures -> long): per-measure totals over lineitem.
-    // The melt is map-only; one hash agg on the 4-row measure key.
-    "unpivot_measures" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"),
-          col("l_discount"), col("l_tax"))
-        .unpivot(Array(col("l_orderkey")),
-          Array(col("l_quantity"), col("l_extendedprice"), col("l_discount"), col("l_tax")),
-          "measure", "val")
-        .groupBy(col("measure"))
-        .agg(count(lit(1)).as("n"), round(sum(col("val")), 2).as("total"),
-          round(avg(col("val")), 4).as("mean"))
-        .orderBy(col("measure"))),
-
-    // Moment statistics per group: stddev/variance/correlation/covariance
-    // — single partial-aggregating pass, no second scan for the means.
-    "stats_summary" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"))
-        .agg(count(lit(1)).as("n"),
-          round(avg(col("l_quantity")), 4).as("avg_qty"),
-          round(stddev_samp(col("l_quantity")), 4).as("sd_qty"),
-          round(var_samp(col("l_quantity")), 4).as("var_qty"),
-          // `+ 0.0` collapses IEEE -0.0 to +0.0: DuckDB's float round keeps
-          // the sign of a tiny negative (round(-2e-7, 6) = -0.0) while
-          // Spark's BigDecimal round yields +0.0 — same value, different
-          // bits, and the driver's hash compare is bit-exact.
-          (round(corr(col("l_quantity"), col("l_extendedprice")), 4) + lit(0.0)).as("corr_qty_price"),
-          (round(covar_samp(col("l_discount"), col("l_tax")), 6) + lit(0.0)).as("cov_disc_tax"))
-        .orderBy(col("l_returnflag"))),
-
-    // Set operations: customers ordering in both 1995 and 1996 but not 1997.
-    "setop_customers" -> ((s, dir) => {
-      def custsIn(y: Int) = Tables.orders(s, dir)
-        .filter(year(col("o_orderdate")) === y).select(col("o_custkey"))
-      custsIn(1995).intersect(custsIn(1996)).except(custsIn(1997))
-        .orderBy(col("o_custkey"))
-    }),
-
-    // Semi/anti joins: per-segment counts of customers with and without
-    // orders.
-    "semi_anti_join" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-      val o = Tables.orders(s, dir)
-      val withOrders = c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-        .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"))
-        .withColumn("kind", lit("with_orders"))
-      val withoutOrders = c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"))
-        .withColumn("kind", lit("without_orders"))
-      withOrders.unionByName(withoutOrders).orderBy(col("kind"), col("c_mktsegment"))
-    }),
-
-    // Distinct aggregation: exact distinct users + event count per type.
-    "distinct_agg" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(countDistinct(col("user_id")).as("n_users"),
-          count(lit(1)).as("n_events"),
-          round(sum(col("value")), 2).as("total_value"))
-        .orderBy(col("event_type"))),
-
-    // Ordered-firsts funnel (view -> click -> purchase): one conditional
-    // aggregation per user, then a global rollup — two shuffles total,
-    // the second over one row per user.
-    // CEP-style ordered sequence match click->view->purchase within 24h:
-    // tightest-chain semantics, one exchange + one sort + k windows.
-    "pattern_funnel" -> ((s, dir) =>
-      graft.operators.Patterns.sequenceMatches(
-        Tables.events(s, dir).select(col("user_id"), col("event_id"),
-          col("event_type"), Tables.eventSeconds.as("tss")),
-        pattern = Seq("click", "view", "purchase"), withinSec = 86400)
-        .orderBy(col("user_id"))),
-
-    "funnel_steps" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), col("event_type"), Tables.eventSeconds.as("tss"))
-      ev.groupBy(col("user_id"))
-        .agg(min(when(col("event_type") === "view", col("tss"))).as("t_view"),
-          min(when(col("event_type") === "click", col("tss"))).as("t_click"),
-          min(when(col("event_type") === "purchase", col("tss"))).as("t_buy"))
-        .agg(count(lit(1)).as("n_users"),
-          count(col("t_view")).as("n_view"),
-          sum(when(col("t_view") < col("t_click"), 1L).otherwise(0L)).as("n_view_click"),
-          sum(when(col("t_view") < col("t_click") && col("t_click") < col("t_buy"), 1L)
-            .otherwise(0L)).as("n_full"))
-    }),
-
-    // Fixed-bound histogram: width_bucket is map-only; one partial-
-    // aggregating shuffle on the 26-ary bucket key.
-    "value_histogram" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .select(width_bucket(col("value"), lit(0.0), lit(600.0), lit(24)).as("bucket"),
-          col("value"))
-        .groupBy(col("bucket"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-        .orderBy(col("bucket"))),
-
-    // Z-score anomaly counts: per-type moments, broadcast join-back,
-    // map-only scoring pass — the two-pass pattern that avoids a window
-    // over the full stream.
-    "anomaly_zscore" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(col("event_type"), col("value"))
-      val stats = ev.groupBy(col("event_type"))
-        .agg(avg(col("value")).as("mu"), stddev_samp(col("value")).as("sd"))
-      ev.join(broadcast(stats), "event_type")
-        .withColumn("z", round((col("value") - col("mu")) / col("sd"), 6))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(abs(col("z")) >= 3.0, 1L).otherwise(0L)).as("n_anomalies"),
-          round(max(abs(col("z"))), 4).as("max_z"))
-        .orderBy(col("event_type"))
-    }),
-
-    // Retention cohorts: users grouped by first-signup week, counted as
-    // active in each later week. Cohort table is user-keyed (one row per
-    // user) and joins the distinct (user, week) activity on the user key.
-    "retention_cohorts" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), col("event_type"),
-          floor(Tables.eventSeconds / 604800L).cast("long").as("week"))
-      val cohort = ev.where(col("event_type") === "signup")
-        .groupBy(col("user_id")).agg(min(col("week")).as("cohort_week"))
-      val active = ev.select(col("user_id"), col("week")).distinct()
-      cohort.join(active, "user_id")
-        .where(col("week") >= col("cohort_week"))
-        .groupBy(col("cohort_week"), (col("week") - col("cohort_week")).as("week_offset"))
-        .agg(countDistinct(col("user_id")).as("n_active"))
-        .orderBy(col("cohort_week"), col("week_offset"))
-    }),
-
-    // Misra-Gries heavy hitters: bounded sketch state (<= 8 counters per
-    // partial) instead of an unbounded per-group frequency map. Exact
-    // here because the item cardinality fits the sketch; the eviction /
-    // error-bound regime is spec-pinned on skewed synthetic data.
-    "heavy_hitters" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .agg(GraftFunctions.heavy_hitters(col("event_type"), 8).as("hh"))
-        .select(explode(col("hh")).as("e"))
-        .select(col("e.item").as("event_type"), col("e.est_count").as("n"))
-        .orderBy(col("n").desc, col("event_type"))),
-
-    // Skew-safe exact distinct count: the distinct set sharded 16 ways by
-    // a hash of the distinct column, so a hot key's per-task state is
-    // 1/16th — phase 2 plain-sums the disjoint shard counts.
-    "skew_distinct" -> ((s, dir) =>
-      SkewAgg.distinctCountSalted(Tables.events(s, dir), Seq("event_type"),
-          "user_id", 16)
-        .orderBy(col("event_type"))),
-
-    // Incremental aggregate maintenance: aggregate only the delta, fold
-    // it into the prior state, derive read-time values from the merged
-    // state. Equal to a full recompute (oracle) at O(delta) cost per run.
-    "incr_agg_merge" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("event_type"), col("value"))
-      val history = ev.where(pmod(col("event_id"), lit(2)) === 0)
-      val delta = ev.where(pmod(col("event_id"), lit(2)) === 1)
-      val state = IncrementalAgg.merge(
-        IncrementalAgg.aggregate(history, Seq("event_type"), "value"),
-        IncrementalAgg.aggregate(delta, Seq("event_type"), "value"),
-        Seq("event_type"))
-      IncrementalAgg.finish(state).orderBy(col("event_type"))
-    }),
-
-    // JSON extraction over the props column, aggregated by extracted key.
-    // from_json with a declared schema parses each props value ONCE into a
-    // struct (get_json_object re-runs a full Jackson parse per extracted
-    // path — ~20x slower on wide extraction at scale).
-    "json_extract" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .withColumn("k",
-          from_json(col("props"), org.apache.spark.sql.types.StructType.fromDDL("k INT"))
-            .getField("k"))
-        .groupBy((col("k") % 10).as("k_bucket"))
-        .agg(count(lit(1)).as("n"), min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        .orderBy(col("k_bucket"))),
-
-    // The same extraction through Spark 4's VARIANT type: parse once into
-    // the binary semi-structured encoding, path-extract with variant_get
-    // — schema-on-read without a DDL schema, the modern engine's answer
-    // to evolving JSON payloads (vs json_extract's fixed-struct parse).
-    // try_parse_json + try_variant_get, not the strict forms: extraction
-    // must stay total on malformed payloads AND on well-formed payloads
-    // whose $.k is non-numeric — parse_json is FAILFAST (one bad record
-    // kills the job) and strict variant_get throws at the int cast on
-    // {"k":"x"}, unlike json_extract's permissive from_json which yields
-    // null. Both failure classes degrade to NULL here.
-    "json_variant" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .withColumn("k", expr("try_variant_get(try_parse_json(props), '$.k', 'int')"))
-        .groupBy((col("k") % 10).as("k_bucket"))
-        .agg(count(lit(1)).as("n"), min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        .orderBy(col("k_bucket"))),
-
-    // Bad-record routing: parse with a schema, aggregate the valid rows,
-    // quarantine the rest with a count (k_bucket = -1) — corrupt input
-    // never kills the job and never silently drops. Corruption is
-    // synthesized deterministically (event_id % 13) so the oracle replays
-    // the same routing.
-    "json_quarantine" -> ((s, dir) => {
-      val parsed = Tables.events(s, dir).select(col("event_id"), col("props"))
-        .withColumn("raw", when(col("event_id") % 13 === 0,
-          concat(lit("{bad"), col("props"))).otherwise(col("props")))
-        .withColumn("k",
-          from_json(col("raw"), org.apache.spark.sql.types.StructType.fromDDL("k INT"))
-            .getField("k"))
-      // single pass (r6 verdict item 4): the quarantine rows ARE a group —
-      // bucket NULL parses to -1 and min/max over an all-NULL k yield NULL
-      // for free, so one scan + one from_json + one hash agg replaces the
-      // former two-aggregation union that parsed the corpus twice
-      parsed.groupBy(when(col("k").isNull, lit(-1))
-          .otherwise(col("k") % 10).as("k_bucket"))
-        .agg(count(lit(1)).as("n"), min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        .orderBy(col("k_bucket"))
-    }),
-
-    // Salted skew join: per-user totals joined back to events with the hot
-    // key spread over 8 salt buckets — result identical to a plain join.
-    "skew_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"), col("value"))
-      val userTotals = ev.groupBy(col("user_id"))
-        .agg(round(sum(col("value")), 2).as("user_total"))
-      graft.operators.SkewJoin.salted(ev, userTotals, "user_id",
-        buckets = 8, bigSalt = col("event_id"))
-        .select(col("event_id"), col("user_id"), col("user_total"))
-        .orderBy(col("event_id"))
-    }),
-
-    // CSV source roundtrip: events written as CSV, read back with an
-    // explicit schema, aggregated — exercises the text-format reader path.
-    "csv_roundtrip" -> ((s, dir) => {
-      val tmp = graft.TempDirs.create("graft-csv")
-      Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        .write.mode("overwrite").option("header", "true").csv(tmp)
-      s.read.option("header", "true")
-        .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE")
-        .csv(tmp)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-        .orderBy(col("event_type"))
-    }),
-
-    // Spark 4's built-in XML source, same lossless-roundtrip contract as
-    // the CSV/JSON/ORC twins: write with a rowTag, read back with an
-    // explicit schema, aggregate — the oracle sees only the original
-    // parquet, so any row or value lost in the XML hop fails the hash.
-    "xml_roundtrip" -> ((s, dir) => {
-      val tmp = graft.TempDirs.create("graft-xml")
-      Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        .write.mode("overwrite").option("rowTag", "event").format("xml").save(tmp)
-      s.read.option("rowTag", "event")
-        .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE")
-        .format("xml").load(tmp)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-        .orderBy(col("event_type"))
-    }),
-
-    // Small-file compaction: 64 trickle-ingested shards rewritten into 2
-    // range-clustered, size-targeted files; row count and value checksum
-    // prove the rewrite is lossless. The summary is O(1) driver metadata
-    // (file counts + two aggregates), never data through the driver.
-    "compact_files" -> ((s, dir) => {
-      import s.implicits._
-      val tmp = graft.TempDirs.create("graft-compact")
-      val ev = Tables.events(s, dir).select(col("event_id"), col("user_id"), col("value"))
-      ev.repartition(64).write.mode("overwrite").parquet(s"$tmp/small")
-      val small = s.read.parquet(s"$tmp/small")
-      graft.sources.Layout.clusteredWrite(small, s"$tmp/compact", 2,
-        maxRecordsPerFile = 10000000L, col("event_id"))
-      val compacted = s.read.parquet(s"$tmp/compact")
-      def files(p: String): Long = {
-        val s = java.nio.file.Files.list(java.nio.file.Paths.get(p))
-        try s.filter(f => f.getFileName.toString.startsWith("part-")).count()
-        finally s.close()
-      }
-      def summary(df: DataFrame): (Long, Double) = {
-        val r = df.agg(count(lit(1)), round(sum(col("value")), 2)).head()
-        (r.getLong(0), r.getDouble(1))
-      }
-      val (nb, tb) = summary(small)
-      val (na, ta) = summary(compacted)
-      val out = Seq(("after", files(s"$tmp/compact"), na, ta),
-        ("before", files(s"$tmp/small"), nb, tb))
-        .toDF("phase", "n_files", "n_rows", "total")
-        .orderBy(col("phase"))
-      // the result is driver-side literals — the scratch dir is dead here
-      graft.TempDirs.delete(tmp)
-      out
-    }),
-
-    // Partition-level restatement via DYNAMIC partition overwrite — the
-    // pattern for correcting a slice of a 100 TB day-partitioned table:
-    // the initial load lands the corpus partitioned by event day
-    // (repartitioned BY the partition key first, so each day is one
-    // task's files, not cpus × days small files); the correction run
-    // re-derives ONLY the last two days (a late data-quality fix dropping
-    // 'error' rows) and rewrites exactly those two partitions — untouched
-    // days keep their original files byte-for-byte. Static overwrite here
-    // is the scale-killer (truncates the whole table to restate 2 days);
-    // the other gotcha is documented below: a restatement that EMPTIES a
-    // partition leaves the old files standing (dynamic mode only replaces
-    // partitions present in the write) and needs an explicit delete.
-    // The restated-day list is a 2-row collect of partition keys —
-    // O(partitions) driver metadata, like a bookmark read.
-    "partition_overwrite" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-      val out = Scratch.create(s, "graft-dynpart")
-      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      try {
-        s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        ev.repartition(col("day"))
-          .write.mode("overwrite").partitionBy("day").parquet(out)
-        val last2 = ev.select(col("day")).distinct()
-          .orderBy(col("day").desc).limit(2).collect().map(_.getString(0)).toSeq
-        ev.filter(col("day").isin(last2: _*) && col("event_type") =!= "error")
-          .repartition(col("day"))
-          .write.mode("overwrite").partitionBy("day").parquet(out)
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-      }
-      // partition-column type inference would read `day` back as DATE;
-      // cast pins the declared schema to the oracle's VARCHAR
-      s.read.parquet(out)
-        .groupBy(col("day").cast("string").as("day"))
-        .agg(count(lit(1)).as("n_events"),
-          countDistinct(col("event_type")).as("n_types"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
-        .orderBy(col("day"))
-    }),
-
-    // Schema evolution: two parquet snapshots with different schemas
-    // (v2 adds o_orderstatus) merged by one mergeSchema read; old rows
-    // surface NULL for the added column and both generations aggregate
-    // in a single scan.
-    "schema_evolution" -> ((s, dir) => {
-      val tmp = graft.TempDirs.create("graft-evo")
-      val orders = Tables.orders(s, dir)
-      orders.where(col("o_orderkey") % 2 === 0)
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .write.mode("overwrite").parquet(s"$tmp/v1")
-      orders.where(col("o_orderkey") % 2 === 1)
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-        .write.mode("overwrite").parquet(s"$tmp/v2")
-      s.read.option("mergeSchema", "true").parquet(s"$tmp/v1", s"$tmp/v2")
-        .groupBy(col("o_orderstatus").isNotNull.as("has_status"))
-        .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("total"))
-        .orderBy(col("has_status"))
-    }),
-
-    // JSON-lines source roundtrip: events written as JSON, read back with
-    // an explicit schema, aggregated.
-    "json_roundtrip" -> ((s, dir) => {
-      val tmp = graft.TempDirs.create("graft-json")
-      Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        .write.mode("overwrite").json(tmp)
-      s.read.schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE")
-        .json(tmp)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-        .orderBy(col("event_type"))
-    }),
-
-    // Time-RANGE window frame: each event's trailing-7-day sum/count for
-    // its user — a range frame over event-time seconds, not a row frame
-    // (duplicate timestamps share one frame; deterministic by value set).
-    "window_range" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"),
-          Tables.eventSeconds.as("tss"), col("value"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("user_id")).orderBy(col("tss"))
-        .rangeBetween(-604800L, 0L)
-      ev.withColumn("trailing_7d_sum", round(sum(col("value")).over(w), 2))
-        .withColumn("trailing_7d_n", count(lit(1)).over(w))
-        .select(col("event_id"), col("user_id"), col("tss"),
-          round(col("value"), 2).as("value"),
-          col("trailing_7d_sum"), col("trailing_7d_n"))
-        .orderBy(col("event_id"))
-    }),
-
-    // Per-customer order-value quartiles (ntile) rolled up globally —
-    // ntile partitions are per-customer, so no global single-partition
-    // sort exists anywhere in the plan.
-    "ntile_quartiles" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice"), col("o_orderkey"))
-      Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-        .withColumn("quartile", ntile(4).over(w))
-        .groupBy(col("quartile"))
-        .agg(count(lit(1)).as("n"),
-          round(avg(col("o_totalprice")), 2).as("avg_price"),
-          round(sum(col("o_totalprice")), 2).as("sum_price"))
-        .orderBy(col("quartile"))
-    }),
-
-    // Data mixing: rebalance the corpus to target source proportions by
-    // deterministic downsampling (no upsampling); per-source achieved
-    // counts + token totals.
-    "train_mix" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"),
-          size(GraftFunctions.tokens(col("text"))).cast("long").as("n_tok"))
-      Sampling.rebalanceMix(docs, "source", col("doc_id"),
-          Map("src0" -> 0.4, "src1" -> 0.3, "src2" -> 0.2,
-            "src3" -> 0.08, "src4" -> 0.02))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_kept"), sum(col("n_tok")).as("tok_total"))
-        .orderBy(col("source"))
-    }),
-
-    // MAP-type breadth: per-user event_type→count map built with
-    // map_from_entries (deterministic entry order from sorted entries),
-    // then map_keys/element_at/map_filter/aggregate over it; map outputs
-    // canonicalize to sorted k=v strings for the cross-engine compare.
-    "map_functions" -> ((s, dir) => {
-      val counts = Tables.events(s, dir)
-        // a NULL event_type is a legal input row but an illegal map key
-        // (Spark throws NULL_MAP_KEY): canonicalize to '' BEFORE grouping
-        // so the row keeps counting toward n_types/total instead of either
-        // crashing the query or silently vanishing; the oracle applies the
-        // identical coalesce
-        .groupBy(col("user_id"), coalesce(col("event_type"), lit("")).as("event_type"))
-        .agg(count(lit(1)).as("n"))
-      counts.groupBy(col("user_id"))
-        .agg(map_from_entries(
-          array_sort(collect_list(struct(col("event_type"), col("n"))))).as("m"))
-        .select(col("user_id"),
-          size(map_keys(col("m"))).as("n_types"),
-          // try_element_at: NULL on a missing key (a user with zero
-          // clicks) — plain element_at throws under ANSI mode where the
-          // DuckDB oracle yields NULL
-          try_element_at(col("m"), lit("click")).as("n_click"),
-          aggregate(map_values(col("m")), lit(0L), (a, x) => a + x).as("total"),
-          nullif(concat_ws(",",
-            transform(map_entries(map_filter(col("m"), (_, v) => v >= 5)),
-              e => concat(e.getField("key"), lit("="), e.getField("value")))),
-            lit("")).as("frequent"))
-        .orderBy(col("user_id"))
-    }),
-
-    // Full-outer reconciliation across tables: per-nation counts of
-    // customers with/without orders and orphan order keys (none by FK).
-    "outer_join_recon" -> ((s, dir) => {
-      val custOrders = Tables.orders(s, dir)
-        .groupBy(col("o_custkey")).agg(count(lit(1)).as("n_orders"))
-      Tables.customer(s, dir)
-        .join(custOrders, col("c_custkey") === col("o_custkey"), "full_outer")
-        .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n_keys"),
-          sum(when(col("o_custkey").isNull, 1L).otherwise(0L)).as("n_without_orders"),
-          sum(when(col("c_custkey").isNull, 1L).otherwise(0L)).as("n_orphan_orders"),
-          coalesce(sum(col("n_orders")), lit(0L)).as("orders_total"))
-        .orderBy(col("c_nationkey"))
-    }),
-
-    // Hopping (sliding) windows in batch: 1h windows every 30min via a
-    // map-only explode of the window starts each event falls into.
-    "hopping_windows" -> ((s, dir) => {
-      val winSec = 3600L
-      val hopSec = 1800L
-      Tables.events(s, dir)
-        .select(col("event_type"), col("value"),
-          Tables.eventSeconds.as("tss"))
-        .withColumn("w_start", explode(sequence(
-          (col("tss") - (winSec - hopSec)).cast("long") -
-            pmod(col("tss") - (winSec - hopSec), lit(hopSec)),
-          col("tss") - pmod(col("tss"), lit(hopSec)),
-          lit(hopSec))))
-        .groupBy(col("w_start"), col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-        .orderBy(col("w_start"), col("event_type"))
-    }),
-
-    // BPE merge-rule learning: 3 rounds of most-frequent-pair merges
-    // with the corpus rewritten between rounds; output is the learned
-    // merge table plus corpus size after each round.
-    "bpe_merges" -> ((s, dir) =>
-      TextAnalysis.bpeMergeRounds(
-        Tables.documents(s, dir).select(col("doc_id"), col("text")), rounds = 3)
-        .orderBy(col("round"))),
-
-    // Tokenizer APPLICATION: the corpus re-encoded under the learned
-    // merges (train emits the merge table, encode the encoded stream).
-    // The rewrite is the same codegen'd map-only kernel per round; the
-    // oracle replays training AND re-encoding, gated by an
-    // order-sensitive content hash ('|'-joined — merged tokens contain
-    // spaces, so ' ' would be ambiguous).
-    "bpe_encode" -> ((s, dir) =>
-      TextAnalysis.bpeEncode(
-        Tables.documents(s, dir).select(col("doc_id"), col("text")), rounds = 3)
-        .select(col("doc_id"), size(col("toks")).as("n_tokens"),
-          GraftFunctions.poly_hash(array_join(col("toks"), "|")).as("enc_hash"))
-        .orderBy(col("doc_id"))),
-
-    // Tokenizer application under a PERSISTED vocabulary (the
-    // dsir_select_incr discipline for the merge table): fit once
-    // (session-cached store — warm runs time what production pays per
-    // ingest), then encode ONLY the delta by folding the frozen merges —
-    // one codegen'd map-only pass per rule, zero training shuffles, cost
-    // tracks the delta. The oracle replays full training + encoding
-    // restricted to the delta's documents: that equality IS the claim
-    // (per-doc rewriting under a fixed merge list is independent across
-    // documents, so frozen-vocab encode ≡ full-corpus encode row-wise).
-    "bpe_encode_incr" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val store = IndexCache.getOrBuildVersioned(s, s"bpe-vocab|$dir", dir) {
-        val st = new graft.sources.BpeVocabStore(
-          s, Scratch.create(s, "graft-bpe-vocab"), rounds = 3)
-        st.fit(docs)
-        st
-      }
-      store.encode(docs.filter(col("doc_id") % 50 === 0))
-        .select(col("doc_id"), size(col("toks")).as("n_tokens"),
-          GraftFunctions.poly_hash(array_join(col("toks"), "|")).as("enc_hash"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Temperature-flattened source mixing (targets ∝ n^0.5): the head
-    // downsamples toward the tail, deterministic hash membership.
-    "temperature_mix" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"),
-          size(GraftFunctions.tokens(col("text"))).cast("long").as("n_tok"))
-      Sampling.temperatureMix(docs, "source", col("doc_id"), alpha = 0.5)
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_kept"), sum(col("n_tok")).as("tok_total"))
-        .orderBy(col("source"))
-    }),
-
-    // DSIR importance weights (Xie et al. 2023): every document scored
-    // by how target-like (target = the English sub-corpus) its hashed
-    // unigram+bigram profile is under two smoothed multinomials. The
-    // per-doc sum is exact integer micro-nats; the B-row ratio model
-    // broadcasts; totals are O(1) driver scalars.
-    "dsir_weights" -> ((s, dir) =>
-      Sampling.dsirLogWeights(
-          Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("text")),
-          isTarget = col("lang") === "en", buckets = 2048)
-        .orderBy(col("doc_id"))),
-
-    // Gumbel-top-k resampling over the DSIR weights — a weighted sample
-    // without replacement, reproducible across engines because the
-    // Gumbel noise derives from the portable hash.
-    "dsir_select" -> ((s, dir) =>
-      Sampling.dsirSelect(
-          Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("text")),
-          isTarget = col("lang") === "en", buckets = 2048, k = 50)),
-
-    // The per-ingest DSIR path over the PERSISTED model (the
-    // dsir_select_incr / corpus_clean_incr_indexed discipline): fit the
-    // B-row model once into the session-cached store — cold runs and
-    // Verify pay the fit; warm runs time what production pays per
-    // ingest: a map-only feature pass over the delta + a broadcast join
-    // against the frozen B rows. The oracle is the full-corpus weight
-    // table restricted to the delta: that equality IS the claim
-    // (apply ≡ fit-and-score, bit-for-bit — the store's model is
-    // complete over all B buckets, so nothing depends on which run
-    // fitted it).
-    "dsir_apply_incr" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("text"))
-      val store = IndexCache.getOrBuildVersioned(s, s"dsir-model|$dir", dir) {
-        val st = new graft.sources.DsirModelStore(
-          s, Scratch.create(s, "graft-dsir-model"), buckets = 2048)
-        st.fit(docs, col("lang") === "en")
-        st
-      }
-      store.applyTo(docs.filter(col("doc_id") % 50 === 0))
-        .orderBy(col("doc_id"))
-    }),
-
-    // The per-ingest DSIR SAMPLER over a PERSISTED model: fit once
-    // (session-cached store, the IndexCache discipline — warm runs time
-    // what production pays per ingest: score the delta, draw top-k),
-    // then Gumbel-top-k over ONLY the delta's scores. The oracle is
-    // fit-then-select restricted to the delta: that equality IS the
-    // claim — per-document Gumbel noise is a pure function of doc_id, so
-    // a persisted model selects the identical sample.
-    "dsir_select_incr" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("text"))
-      val store = IndexCache.getOrBuildVersioned(s, s"dsir-model|$dir", dir) {
-        val st = new graft.sources.DsirModelStore(
-          s, Scratch.create(s, "graft-dsir-model"), buckets = 2048)
-        st.fit(docs, col("lang") === "en")
-        st
-      }
-      store.selectFrom(docs.filter(col("doc_id") % 50 === 0), k = 20)
-    }),
-
-    // Running windows: per-customer cumulative order value + previous
-    // order's value (lag) over the order sequence.
-    "window_running" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("o_custkey")).orderBy(col("o_orderkey"))
-      Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        .withColumn("running_total",
-          round(sum(col("o_totalprice")).over(
-            w.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)), 2))
-        .withColumn("prev_price", lag(col("o_totalprice"), 1).over(w))
-        .withColumn("order_rank", row_number().over(w))
-        .select(col("o_orderkey"), col("o_custkey"),
-          round(col("o_totalprice"), 2).as("price"),
-          col("running_total"), round(col("prev_price"), 2).as("prev_price"),
-          col("order_rank"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // Exact interpolated percentiles per group (sort-based aggregate).
-    "percentile_stats" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag"))
-        .agg(
-          round(expr("percentile(l_quantity, 0.25)"), 2).as("p25"),
-          round(expr("percentile(l_quantity, 0.5)"), 2).as("p50"),
-          round(expr("percentile(l_quantity, 0.75)"), 2).as("p75"),
-          round(avg(col("l_quantity")), 2).as("mean_qty"))
-        .orderBy(col("l_returnflag"))),
-
-    // Pivot: per-user event counts spread across event-type columns.
-    "pivot_events" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .filter(col("user_id") < 20)
-        .groupBy(col("user_id"))
-        .pivot("event_type", Seq("click", "view", "purchase", "signup", "error"))
-        .agg(count(lit(1)))
-        .na.fill(0L)
-        .orderBy(col("user_id"))),
-
-    // Array aggregation: sorted distinct users per event type, emitted as a
-    // canonical comma-joined string (deterministic via sort_array, and a
-    // scalar the driver's pandas gate can hash — a raw array column is not).
-    "array_agg" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .filter(col("user_id") < 25)
-        .groupBy(col("event_type"))
-        .agg(concat_ws(",", sort_array(collect_set(col("user_id")))).as("users"),
-          count(lit(1)).as("n"))
-        .orderBy(col("event_type"))),
-
-    // Approximate sketches (HLL distinct + approx quantiles), driver-checkable:
-    // approximation algorithms differ across engines by design, so the approx
-    // values feed only tolerance BOOLEANS computed against exact aggregates
-    // that both engines replay identically. The oracle emits the same exact
-    // values with the booleans as TRUE constants — sketch drift beyond
-    // tolerance flips Spark's boolean and fails the hash gate, which is
-    // exactly the regression this query guards (FunctionsSpec pins the same
-    // bounds at spec level). hll_ok uses 3× the default HLL rsd (0.05);
-    // median_ok brackets approx_percentile(0.5) by the exact 0.45/0.55
-    // quantiles.
-    // Plan note: the exact distinct-count runs as its OWN codegen'd
-    // hash aggregate and broadcast-joins the 5-row sketch aggregate —
-    // putting countDistinct in the same agg forces Catalyst's
-    // distinct-rewrite to carry the HLL + percentile OBJECT buffers per
-    // (event_type, user_id) group through three ObjectHashAggregate
-    // passes and two exchanges (measured 4.2 s warm; this shape ~1 s).
-    "approx_sketches" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val sketches = ev.groupBy(col("event_type"))
-        .agg(
-          approx_count_distinct(col("user_id")).as("au"),
-          expr("approx_percentile(value, 0.5)").as("am"),
-          expr("percentile(value, 0.45)").as("q45"),
-          expr("percentile(value, 0.55)").as("q55"))
-      val exact = ev.select(col("event_type"), col("user_id")).distinct()
-        .groupBy(col("event_type")).agg(count(lit(1)).as("exact_users"))
-      exact.join(broadcast(sketches), Seq("event_type"))
-        .select(col("event_type"), col("exact_users"),
-          (abs(col("au") - col("exact_users")) <= col("exact_users") * 3 * 0.05)
-            .as("hll_ok"),
-          (col("am") >= col("q45") && col("am") <= col("q55")).as("median_ok"))
-        .orderBy(col("event_type"))
-    }),
-
-    // Custom native aggregate: exact mergeable top-k with k-bounded heap
-    // partial state (never collects a group's full value set). The
-    // TypedImperativeAggregate path — O(log k) in-place updates, buffer
-    // serialized only at shuffle boundaries; the typed Aggregator variant
-    // survives as the spec-level equality pin (FunctionsSpec).
-    "agg_topk" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(graft.functions.GraftFunctions.top_k(col("event_id"), col("value"), 3).as("topk"))
-        .select(col("event_type"), posexplode(col("topk")))
-        .select(col("event_type"), (col("pos") + 1).cast("int").as("rank"),
-          col("col.id").as("event_id"), col("col.value").as("value"))
-        .orderBy(col("event_type"), col("rank"))),
-
-    // Pareto frontier of users on (total value, event count): sort-based
-    // skyline — local prefilter per partition, exact pass over survivors
-    // only; dominance compares pre-rounded doubles so both engines rank
-    // identical values.
-    "skyline_users" -> ((s, dir) => {
-      val u = Tables.events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(round(sum(col("value")), 2).as("total"), count(lit(1)).as("n"))
-      graft.operators.Skyline.pareto2D(u, "total", "n")
-        .orderBy(col("total").desc, col("n").desc, col("user_id"))
-    }),
-
-    // Bucketed co-located join: both sides written bucketed+sorted on the
-    // join key, so the fact-fact join reads co-located buckets (the
-    // zero-exchange property is asserted in BucketingSpec).
-    "bucketed_join" -> ((s, dir) => {
-      val l = Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-      val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderdate"))
-      graft.sources.Bucketing.writeBucketed(l, "bt_lineitem", "l_orderkey", 8)
-      graft.sources.Bucketing.writeBucketed(o, "bt_orders", "o_orderkey", 8)
-      graft.sources.Bucketing.table(s, "bt_lineitem")
-        .join(graft.sources.Bucketing.table(s, "bt_orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy(year(col("o_orderdate")).as("order_year"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("revenue"))
-        .orderBy(col("order_year"))
-    }),
-
-    // Z-order layout: events written clustered on the Morton interleave
-    // of (user_id, value), read back with a 2-D range predicate — both
-    // dimensions prune row groups, not just a leading key.
-    "zorder_prune" -> ((s, dir) => {
-      val tmp = graft.TempDirs.create("graft-z")
-      graft.sources.Layout.zorderWrite(
-        Tables.events(s, dir)
-          .select(col("event_id"), col("user_id"), col("value"), col("event_type")),
-        tmp, 8, 500000L, 4, col("user_id"), col("value"))
-      s.read.parquet(tmp)
-        .where(col("user_id").between(10, 30) && col("value").between(50.0, 150.0))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
-        .orderBy(col("event_type"))
-    }),
-
-    // Deep multi-join (TPC-H Q5 flavor): 6-table snowflake with the
-    // local-supplier correlation (s_nationkey = c_nationkey) — Catalyst
-    // orders the joins and broadcasts the small dims; the fact table
-    // never shuffles more than once per join key.
-    "q5_region_revenue" -> ((s, dir) =>
-      Tables.customer(s, dir)
-        .join(Tables.orders(s, dir), col("c_custkey") === col("o_custkey"))
-        .filter(year(col("o_orderdate")) === 1995)
-        .join(Tables.lineitem(s, dir), col("o_orderkey") === col("l_orderkey"))
-        .join(Tables.supplier(s, dir),
-          col("l_suppkey") === col("s_suppkey") &&
-            col("s_nationkey") === col("c_nationkey"))
-        .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, dir)), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"), col("n_name"))
-        .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("revenue"),
-          count(lit(1)).as("n_items"))
-        .orderBy(col("r_name"), col("n_name"))),
-
-    // Correlated subqueries through the SQL front door: EXISTS and NOT
-    // EXISTS decorrelate to semi/anti joins in the optimized plan.
-    "exists_subquery" -> ((s, dir) => {
-      Tables.customer(s, dir).createOrReplaceTempView("customer_v")
-      Tables.orders(s, dir).createOrReplaceTempView("orders_v")
-      s.sql("""SELECT c_mktsegment, count(*) AS n_custs
-              |FROM customer_v c
-              |WHERE EXISTS (SELECT 1 FROM orders_v o
-              |              WHERE o.o_custkey = c.c_custkey
-              |                AND year(o.o_orderdate) = 1995)
-              |  AND NOT EXISTS (SELECT 1 FROM orders_v o2
-              |                  WHERE o2.o_custkey = c.c_custkey
-              |                    AND year(o2.o_orderdate) = 1997)
-              |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
-    }),
-
-    // Rank-family windows in one pass: rank / dense_rank / percent_rank /
-    // cume_dist over the same deterministic per-type ordering.
-    "window_ranks" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("event_type"))
-        .orderBy(col("value").desc, col("event_id"))
-      Tables.events(s, dir)
-        .filter(col("user_id") < 5)
-        .select(col("event_type"), col("event_id"), round(col("value"), 2).as("value"))
-        .withColumn("rnk", rank().over(w))
-        .withColumn("drnk", dense_rank().over(w))
-        .withColumn("prnk", round(percent_rank().over(w), 6))
-        .withColumn("cdist", round(cume_dist().over(w), 6))
-        .orderBy(col("event_type"), col("rnk"), col("event_id"))
-    }),
-
-    // Array higher-order functions over the embedding corpus: filter /
-    // exists / strict-fold aggregate / array_max in one map-only pass.
-    "array_analytics" -> ((s, dir) =>
-      Tables.embeddings(s, dir)
-        .select(col("vec_id"),
-          size(filter(col("embedding"), x => x > 0)).as("n_pos"),
-          round(aggregate(col("embedding"), lit(0.0),
-            (a, x) => a + abs(x.cast("double"))), 6).as("l1_norm"),
-          round(array_max(col("embedding")).cast("double"), 6).as("max_val"),
-          exists(col("embedding"), x => x > 0.2).as("has_big"))
-        .orderBy(col("vec_id"))),
-
-    // regexp_extract_all over the JSON props: every digit run, exploded
-    // and aggregated per event type.
-    "regex_numbers" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .select(col("event_type"),
-          explode(regexp_extract_all(col("props"), lit("[0-9]+"), lit(0))).as("num"))
-        .select(col("event_type"), col("num").cast("long").as("v"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("total"),
-          min(col("v")).as("min_v"), max(col("v")).as("max_v"))
-        .orderBy(col("event_type"))),
-
-    // MERGE upsert: apply a change batch (updates + CDC delete markers +
-    // inserts) to a snapshot in one full-outer shuffle join on the key.
-    "merge_upsert" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      val target = ev.where(col("event_id") % 3 =!= 0)
-      val source = ev.where(col("event_id") % 2 === 0)
-        .withColumn("value", col("value") + 100)
-      Merge.upsert(target, source, Seq("event_id"),
-          deleteWhen = Some(col("event_type") === "error"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          round(col("value"), 2).as("value"), col("op"))
-        .orderBy(col("event_id"))
-    }),
-
-    // Text normalization pipeline: lowercase -> strip non-alphanumerics ->
-    // collapse whitespace, with before/after length and token deltas and a
-    // normalized fingerprint — the canonicalization step ahead of exact
-    // dedup. Map-only.
-    "text_normalize" -> ((s, dir) => {
-      val norm = trim(regexp_replace(
-        regexp_replace(lower(col("text")), "[^a-z0-9 ]", " "), " +", " "))
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          length(col("text")).as("raw_len"),
-          length(norm).as("norm_len"),
-          size(GraftFunctions.tokens(norm)).as("norm_tokens"),
-          GraftFunctions.poly_hash(norm).as("norm_fp"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Nested-JSON roundtrip: per-order line items packed into a JSON
-    // document (sorted array of structs), parsed back with a declared
-    // nested schema, array exploded, re-aggregated — equals computing
-    // directly from the source (the oracle does exactly that).
-    "json_nested" -> ((s, dir) => {
-      val packed = Tables.lineitem(s, dir)
-        .groupBy(col("l_orderkey"))
-        .agg(to_json(struct(col("l_orderkey").as("order_id"),
-          array_sort(collect_list(struct(col("l_linenumber").as("line"),
-            col("l_quantity").as("qty")))).as("items"))).as("doc"))
-      val schema = org.apache.spark.sql.types.StructType.fromDDL(
-        "order_id LONG, items ARRAY<STRUCT<line: INT, qty: DOUBLE>>")
-      packed
-        .select(from_json(col("doc"), schema).as("o"))
-        .select(col("o.order_id").as("order_id"), explode(col("o.items")).as("it"))
-        .groupBy(col("order_id"))
-        .agg(count(lit(1)).as("n_items"), round(sum(col("it.qty")), 2).as("sum_qty"),
-          max(col("it.line")).as("max_line"))
-        .orderBy(col("order_id"))
-    }),
-
-    // Three-valued-logic breadth: injected nulls handled with coalesce /
-    // nullif / null-safe equality / na.fill, and null-aware aggregates.
-    "null_handling" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("event_type"),
-          when(col("event_id") % 5 === 0, lit(null)).otherwise(col("value"))
-            .cast("double").as("v"))
-      ev.withColumn("v_filled", coalesce(col("v"), lit(-1.0)))
-        .withColumn("v_nz", nullif(col("v_filled"), lit(-1.0)))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_rows"), count(col("v")).as("n_nonnull"),
-          sum(when(col("v").isNull, 1L).otherwise(0L)).as("n_null"),
-          round(sum(col("v_filled")), 2).as("sum_filled"),
-          round(avg(col("v_nz")), 4).as("avg_nonnull"),
-          sum(when(col("v") <=> lit(null), 1L).otherwise(0L)).as("n_nullsafe_eq"))
-        .orderBy(col("event_type"))
-    }),
-
-    // Date/time function breadth: truncation, month arithmetic, day
-    // deltas, end-of-month, and cross-engine-aligned day-of-week.
-    "date_functions" -> ((s, dir) =>
-      Tables.orders(s, dir)
-        .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
-        .withColumn("order_month", date_format(date_trunc("month", col("o_orderdate")), "yyyy-MM-dd"))
-        .withColumn("plus_quarter", date_format(add_months(col("o_orderdate"), 3), "yyyy-MM-dd"))
-        .withColumn("month_end", date_format(last_day(col("o_orderdate")), "yyyy-MM-dd"))
-        .withColumn("days_to_1997", datediff(lit("1997-01-01").cast("date"), col("o_orderdate")))
-        .withColumn("dow", dayofweek(col("o_orderdate")))
-        .groupBy(col("order_month"))
-        .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("total"),
-          min(col("plus_quarter")).as("first_plus_q"),
-          max(col("month_end")).as("month_end"),
-          min(col("days_to_1997")).as("min_days_to_1997"),
-          countDistinct(col("dow")).as("n_dows"))
-        .orderBy(col("order_month"))),
-
-    // Aggregate-function breadth: deterministic arg-max/arg-min via
-    // struct ordering (ties break on id), count_if / bool_or / bool_and,
-    // and the exact interpolated median — one hash agg pass.
-    "agg_misc" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(
-          max(struct(col("value"), col("event_id"))).getField("event_id").as("max_event"),
-          min(struct(col("value"), col("event_id"))).getField("event_id").as("min_event"),
-          count_if(col("value") > 300).as("n_big"),
-          bool_or(col("value") > 590).as("any_huge"),
-          bool_and(col("value") >= 0).as("all_nonneg"),
-          round(median(col("value")), 2).as("med"))
-        .orderBy(col("event_type"))),
-
-    // Snapshot diff: v2 drops error events, bumps every 7th value, and
-    // adds synthetic rows — the diff reports exactly those keys, change-
-    // sized output from one full-outer key join.
-    "table_diff" -> ((s, dir) => {
-      val v1 = Tables.events(s, dir)
-        .select(col("event_id"), col("event_type"), col("value"))
-      val v2 = Tables.events(s, dir)
-        .where(col("event_type") =!= "error")
-        .select(col("event_id"), col("event_type"),
-          (col("value") + when(col("event_id") % 7 === 0, 10.0).otherwise(0.0)).as("value"))
-        .union(Tables.events(s, dir).where(col("event_id") % 1000 === 0)
-          .select((col("event_id") + 1000000L).as("event_id"),
-            lit("synthetic").as("event_type"), lit(1.0).as("value")))
-      graft.operators.Diff.byKey(v1, v2, Seq("event_id"))
-        .orderBy(col("event_id"))
-    }),
-
-    // Interval coalescing: each user's ±30-min activity spans merged into
-    // maximal disjoint busy intervals (gaps-and-islands, one shuffle).
-    "interval_merge" -> ((s, dir) => {
-      val iv = Tables.events(s, dir)
-        .select(col("user_id"), Tables.eventSeconds.as("start_sec"))
-        .withColumn("end_sec", col("start_sec") + 1800)
-      Intervals.coalesce(iv, "user_id", "start_sec", "end_sec")
-        .orderBy(col("user_id"), col("start_sec"))
-    }),
-
-    // First-order Markov transition matrix of event types per user:
-    // the sequence shuffles once; the normalizer runs over the |states|²
-    // aggregated pairs.
-    "markov_transitions" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), col("event_type"),
-          Tables.eventSeconds.as("tss"), col("event_id"))
-      Transitions.matrix(ev, "user_id", Seq("tss", "event_id"), "event_type")
-        .orderBy(col("state"), col("next_state"))
-    }),
-
-    // Token bigram language model (count >= 5): map-only bigram explode,
-    // map-side-combined pair counts, vocab²-bounded normalizer window.
-    "bigram_lm" -> ((s, dir) =>
-      TextAnalysis.bigramLm(
-          Tables.documents(s, dir).select(col("doc_id"), col("text")), 5L)
-        .orderBy(col("w1"), col("w2"))),
-
-    // Per-document pseudo-perplexity under the corpus's own bigram LM —
-    // the statistical quality filter before data mixing.
-    "lm_perplexity" -> ((s, dir) =>
-      TextAnalysis.perplexity(
-          Tables.documents(s, dir).select(col("doc_id"), col("text")))
-        .orderBy(col("doc_id"))),
-
-    // The quality filter's per-ingest path: the bigram LM fitted once on
-    // the reference corpus (session-cached LmStore — the persisted-index
-    // discipline; warm runs time what production pays per ingest), the
-    // DELTA scored under the frozen table — one map-only bigram explode,
-    // one (w1, w2)-keyed shuffle join against the LM, one context-total
-    // join for the unseen-bigram backoff (never fires here: the delta is
-    // a corpus subset), one per-doc reduction. The oracle is the
-    // fit-then-score table restricted to the delta: that equality IS the
-    // claim (a doc's score depends only on its own bigrams and the LM).
-    "lm_perplexity_incr" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      val store = IndexCache.getOrBuildVersioned(s, s"bigram-lm|$dir", dir) {
-        val st = new graft.sources.LmStore(s, Scratch.create(s, "graft-lm"))
-        st.fit(docs)
-        st
-      }
-      store.scoreDelta(docs.filter(col("doc_id") % 50 === 0))
-        .orderBy(col("doc_id"))
-    }),
-
-    // Blocked fuzzy entity matching over document titles (first 24
-    // chars — a sparse name space, unlike the 64-value part vocabulary):
-    // originals vs a perturbed copy (char 12 replaced) of every 5th
-    // title. (length, first-3, last-3) blocking join, banded
-    // levenshtein <= 2 verify on candidates only.
-    "fuzzy_match" -> ((s, dir) => {
-      val titles = Tables.documents(s, dir)
-        .select(col("doc_id").as("id"), substring(col("text"), 1, 24).as("name"))
-        .where(length(col("name")) >= 16)
-      val perturbed = titles.where(col("id") % 5 === 0)
-        .select((col("id") + 1000000L).as("id"),
-          concat(substring(col("name"), 1, 11), lit("x"),
-            expr("substring(name, 13)")).as("name"))
-      graft.operators.FuzzyMatch.blocked(titles, perturbed, "id", "name",
-          prefixLen = 3, suffixLen = 3, maxDist = 2)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    // One-pass multi-column table profile (ANALYZE-style catalog stats):
-    // count/nulls/exact-ndv/min/max/avg per measure, melted long-form.
-    "column_profile" -> ((s, dir) =>
-      graft.operators.Profile.numeric(Tables.lineitem(s, dir),
-          Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
-        .orderBy(col("column_name"))),
-
-    // k-anonymity risk gate: QI equivalence classes smaller than k
-    // re-identify their members by linkage — the privacy audit a
-    // user-derived training-data release runs. One map-side-combined
-    // aggregation on the QI key; total rows from a classes-sized
-    // re-aggregation, never a second input scan.
-    "kanon_risk" -> ((s, dir) =>
-      graft.operators.Profile.kAnonymityRisk(
-          Tables.customer(s, dir), Seq("c_nationkey", "c_mktsegment"), k = 8)
-        .orderBy(col("c_nationkey"), col("c_mktsegment"))),
-
-    // Declarative data-quality gate: all row checks + uniqueness fold
-    // into ONE aggregation pass; the FK check is one anti-join.
-    "dq_checks" -> ((s, dir) => {
-      import graft.operators.DqChecks._
-      checks(Tables.orders(s, dir),
-        rowChecks = Seq(
-          RowCheck("not_null", "o_custkey", col("o_custkey").isNull),
-          RowCheck("in_range", "o_totalprice",
-            col("o_totalprice") < 0 || col("o_totalprice") > 1000000),
-          RowCheck("accepted_values", "o_orderstatus",
-            !col("o_orderstatus").isin("O", "F", "P"))),
-        uniqueCols = Seq("o_orderkey"),
-        fks = Seq(FkCheck("fk_customer", "o_custkey",
-          Tables.customer(s, dir), "c_custkey")))
-        .orderBy(col("check_name"), col("column_name"))
-    }),
-
-    // Hard-negative mining: per query vector, top-3 most-similar vectors
-    // from a DIFFERENT k-means cluster (same deterministic k-means as
-    // kmeans_assign; map-only cluster column, broadcast query side).
-    "hard_negatives" -> ((s, dir) =>
-      Similarity.hardNegatives(Tables.embeddings(s, dir),
-          isQuery = col("vec_id") < 8, k = 3, nClusters = 8, iters = 2)
-        .orderBy(col("query_id"), col("rank"))),
-
-    // Deterministic per-group reservoir: 3 events per type, ranked by the
-    // portable mixed hash — reproducible under repartition/re-ingestion.
-    "reservoir_group" -> ((s, dir) =>
-      Sampling.reservoirByGroup(
-          Tables.events(s, dir)
-            .select(col("event_id"), col("user_id"), col("event_type"), col("value")),
-          Seq("event_type"), col("event_id"), 3)
-        .select(col("event_type"), col("sample_rank"), col("event_id"),
-          col("user_id"), round(col("value"), 2).as("value"))
-        .orderBy(col("event_type"), col("sample_rank"))),
-
-    // ORC source/sink roundtrip: the third columnar/text format next to
-    // csv_roundtrip and json_roundtrip.
-    "orc_roundtrip" -> ((s, dir) => {
-      val tmp = graft.TempDirs.create("graft-orc")
-      Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        .write.mode("overwrite").orc(tmp)
-      s.read.orc(tmp)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-        .orderBy(col("event_type"))
-    }),
-
-    // Bloom-prefiltered decontamination: bench grams sketched into a
-    // Bloom filter (codegen'd might_contain prefilter, map-only), exact
-    // verify join over survivors only — result identical to the exact
-    // path, never approximate. Different params than decontam_overlap
-    // (6-char grams, >= 3 shared) so both paths stay independently gated.
-    "bloom_decontam" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-      // the eval-suite sketch is fixed state a production pipeline holds
-      // deployed (the pipe-bloom discipline): built once per session —
-      // cold runs and Verify still pay the build; warm runs time the
-      // corpus prefilter scan + exact verify, which IS the operator.
-      // The cache key folds the table dir's version fingerprint
-      // (getOrBuildVersioned), so a mutated/appended eval slice under
-      // the same dir rebuilds the sketch instead of silently
-      // false-negative-pruning real contamination (a bloom only
-      // guarantees no false negatives for items actually inserted).
-      val bloom = IndexCache.getOrBuildVersioned(s, s"decontam-bloom|$dir", dir) {
-        Dedup.gramBloom(docs.filter(col("doc_id") % 50 === 0), n = 6)
-      }
-      // train-side input spread at the call site (r18, the
-      // dedup_minhash_lsh rule): the 6-gram explode + bloom probe is the
-      // query's dominant stage and otherwise runs on the scan's one real
-      // task; pipeline_e2e_incr's delta-sized decontamination stage is
-      // deliberately NOT spread (the corpus_clean_incr lesson)
-      Dedup.crossOverlapPairsBloomWith(
-          Tables.spread(docs.filter(col("doc_id") % 50 =!= 0), col("doc_id")),
-          docs.filter(col("doc_id") % 50 === 0), n = 6, minShared = 3L,
-          bloom = bloom)
-        .orderBy(col("train_id"), col("bench_id"))
-    }),
-
-    // Hive-style partitioned layout: write events partitioned by type,
-    // read back two partitions — the filter prunes directories, so the
-    // scan never opens the other partitions' files (PartitionPruningSpec
-    // asserts selectedPartitions on this layout).
-    "partitioned_scan" -> ((s, dir) => {
-      val tmp = graft.TempDirs.create("graft-part")
-      Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        .write.mode("overwrite").partitionBy("event_type").parquet(tmp)
-      s.read.parquet(tmp)
-        .where(col("event_type").isin("click", "purchase"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"),
-          countDistinct(col("user_id")).as("n_users"))
-        .orderBy(col("event_type"))
-    })
-  )
-
-  /** Shared CTE chain replaying the deterministic 2-round k-means of
-    * [[graft.operators.KMeans]] and ending in `a2` = (vec_id, v, c, cs):
-    * each vector with its final cluster and cosine. Consumed by the
-    * kmeans_assign and hard_negatives oracles.
-    */
-  /** The session's full-corpus compacted inverted index, built ONCE per
-    * session (IndexCache, r9 verdict #1) and shared by every read-only
-    * text query (text_search / text_phrase / text_near / text_prefix /
-    * text_search_lead / text_bm25*): the first run — and Verify, which
-    * runs each query once — pays bootstrap + compact, so the oracle still
-    * replays the full construction; warm bench runs reuse the committed
-    * index and time the PROBE, which is what a production query pays.
-    * Queries whose construction IS the measured semantics (the
-    * incremental append of text_search_incr, the snapshot isolation of
-    * text_search_asof, the uncompacted tail of inverted_stats, the
-    * streaming ingest of stream_index_ingest) keep their own builds.
-    */
-  private def fullInvIndex(s: SparkSession, dir: String): graft.sources.InvertedIndex =
-    IndexCache.getOrBuildVersioned(s, s"inv-full|$dir", dir) {
-      val idx = new graft.sources.InvertedIndex(s, Scratch.create(s, "graft-inv-idx"))
-      idx.bootstrap(Tables.documents(s, dir).select(col("doc_id"), col("text")))
-      idx.compact(buckets = 8)
-      idx
+  def queryFilter(spec: String): Option[Set[String]] =
+    Option(spec).filter(_.trim.nonEmpty).map { raw =>
+      val names = raw.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- queries.keySet
+      require(unknown.isEmpty, s"no declared query named ${unknown.toSeq.sorted.mkString(", ")}")
+      names
     }
 
-  /** Shared construction for corpus_clean_incr and its persisted-index
-    * twin: (history fingerprint-sole frame, gated exact-deduped delta),
-    * both pinned — the delta era is the top 50 sampled ids, history
-    * everything below the cutoff (scaladoc on the declared queries).
-    */
-  private def corpusCleanGated(s: SparkSession, dir: String): (DataFrame, Long) = {
-    val all = Tables.documents(s, dir)
-      .filter(col("doc_id") % 10 === 0)
-      .select(col("doc_id"), col("text"), col("source"))
-    val cutoff = all.agg(max(col("doc_id"))).head().getLong(0) - 499L
-    (all, cutoff)
-  }
-
-  private def corpusCleanGate(df: DataFrame): DataFrame =
-    TextAnalysis.stats(df)
-      .where(col("quality_score") >= 0.55 && col("lang_pred") =!= "und" &&
-        col("n_tokens").between(5, 5000))
-
-  private def corpusCleanHist(s: SparkSession, dir: String): DataFrame = {
-    val (all, cutoff) = corpusCleanGated(s, dir)
-    corpusCleanGate(all.filter(col("doc_id") < cutoff))
-      .groupBy(col("fingerprint"))
-      .agg(min(struct(col("doc_id"), col("text"))).as("_r"))
-      .select(col("fingerprint"), col("_r.doc_id").as("doc_id"),
-        col("_r.text").as("text"))
-  }
-
-  private def corpusCleanDelta(s: SparkSession, dir: String,
-                               hist: DataFrame): DataFrame = {
-    val (all, cutoff) = corpusCleanGated(s, dir)
-    Residue.pin(corpusCleanGate(all.filter(col("doc_id") >= cutoff))
-      .join(hist.select(col("fingerprint")), Seq("fingerprint"), "left_anti")
-      .groupBy(col("fingerprint"))
-      .agg(min(struct(col("doc_id"), col("text"), col("source"),
-        col("n_tokens"), col("quality_score"), col("lang_pred"))).as("_r"))
-      .select(col("_r.doc_id").as("doc_id"), col("_r.text").as("text"),
-        col("_r.source").as("source"), col("_r.n_tokens").as("n_tokens"),
-        col("_r.quality_score").as("quality_score"),
-        col("_r.lang_pred").as("lang_pred")))
-  }
-
-  /** Recompute variant: gate + exact-dedup BOTH eras from the raw table
-    * every run — the oracle-replay shape `corpus_clean_incr` declares
-    * (its whole point is measuring the no-persisted-state baseline).
-    */
-  private def corpusCleanIncrSides(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val hist = Residue.pin(corpusCleanHist(s, dir))
-    (hist, corpusCleanDelta(s, dir, hist))
-  }
-
-  /** Stored-history variant for the persisted-index queries: the cleaned
-    * history (fingerprint, doc_id, text) is written ONCE per session to
-    * scratch parquet — the production shape, where the clean corpus IS a
-    * stored table that later ingests read, never re-derive. Warm runs
-    * gate ONLY the delta; the fingerprint anti-join and the sweep's
-    * verify-text fetch read the stored table column-pruned. History
-    * content is deterministic from the raw table, so results (and the
-    * DuckDB oracle, which replays the derivation) are unchanged.
-    */
-  private def corpusCleanSidesStored(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val path = IndexCache.getOrBuildVersioned(s, s"cci-hist|$dir", dir) {
-      val p = Scratch.create(s, "graft-cci-hist")
-      corpusCleanHist(s, dir).write.mode("overwrite").parquet(p)
-      p
-    }
-    val hist = s.read.parquet(path)
-    (hist, corpusCleanDelta(s, dir, hist))
-  }
-
-  /** The (lang, source) report over the admitted delta — shared tail of
-    * corpus_clean_incr{,_indexed}. Exact-integer quality sum: see the
-    * corpus_clean scaladoc for the rounding-order rationale.
-    */
-  private def corpusCleanIncrReport(deltaSole: DataFrame, dropIds: DataFrame): DataFrame =
-    deltaSole.join(dropIds, Seq("doc_id"), "left_anti")
-      .groupBy(col("lang_pred"), col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("tok_total"),
-        round(sum(round(col("quality_score") * 10000, 0).cast("long"))
-          .cast("double") / count(lit(1)) / 10000.0, 4).as("avg_quality"))
-      .orderBy(col("lang_pred"), col("source"))
-
-  /** Incremental corpus-clean oracle, shared verbatim by the re-signing
-    * and persisted-index declared queries: gate both eras, dedup the
-    * delta against the history fingerprints, near-dup = the full
-    * MinHash-LSH sweep over (history ∪ delta) restricted to
-    * delta-involved pairs (id_b is the greatest id, so delta-involved ==
-    * id_b above the cutoff — the same equality dedup_incr_lsh's oracle
-    * rests on).
-    */
-  private def corpusCleanIncrOracle: String =
-    s"""WITH ${cleanGateCtes("WHERE doc_id % 10 = 0")},
-       |cut AS (SELECT max(doc_id) - 499 AS c FROM documents WHERE doc_id % 10 = 0),
-       |hist AS (
-       |  SELECT doc_id, text, fingerprint FROM (
-       |    SELECT doc_id, text, fingerprint,
-       |      row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
-       |    FROM kept WHERE doc_id < (SELECT c FROM cut)) WHERE rn = 1),
-       |dsole AS (
-       |  SELECT doc_id, text, source, n_tokens, quality_score, lang_pred FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
-       |    FROM kept
-       |    WHERE doc_id >= (SELECT c FROM cut)
-       |      AND fingerprint NOT IN (SELECT fingerprint FROM hist)) WHERE rn = 1),
-       |u AS (SELECT doc_id, text FROM hist UNION ALL SELECT doc_id, text FROM dsole),
-       |${minhashPairsCtesOver("u", 0.8)},
-       |dropped AS (
-       |  SELECT DISTINCT id_b AS doc_id FROM mh_pairs
-       |  WHERE id_b >= (SELECT c FROM cut))
-       |SELECT lang_pred, source, count(*) AS n_docs,
-       |  CAST(sum(n_tokens) AS BIGINT) AS tok_total,
-       |  round(CAST(sum(CAST(round(quality_score * 10000) AS BIGINT)) AS DOUBLE)
-       |    / count(*) / 10000.0, 4) AS avg_quality
-       |FROM dsole WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
-       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-
-  /** End-to-end pipeline oracle: corpusCleanIncrOracle's gate/dedup/LSH
-    * chain, then banned-term policy (token membership == the inverted
-    * index probe), exact 8-gram eval overlap (== the bloom path, which is
-    * exact by construction), the IVF probe replay (frozen seeds = 16
-    * lowest reference vec_ids, nprobe 2, cosine >= 0.3 on the 6-rounded
-    * value), the temperature-mix replay (alpha 0.5) and the
-    * prefix-sum shard packing (budget 128).
-    */
-  private def pipelineE2eOracle: String = {
-    val bucket = Oracles.sampleBucket("CAST(doc_id AS VARCHAR)", 1000)
-    s"""WITH ${cleanGateCtes("WHERE doc_id % 10 = 0")},
-       |cut AS (SELECT max(doc_id) - 499 AS c FROM documents WHERE doc_id % 10 = 0),
-       |hist AS (
-       |  SELECT doc_id, text, fingerprint FROM (
-       |    SELECT doc_id, text, fingerprint,
-       |      row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
-       |    FROM kept WHERE doc_id < (SELECT c FROM cut)) WHERE rn = 1),
-       |dsole AS (
-       |  SELECT doc_id, text, source, n_tokens, quality_score, lang_pred FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
-       |    FROM kept
-       |    WHERE doc_id >= (SELECT c FROM cut)
-       |      AND fingerprint NOT IN (SELECT fingerprint FROM hist)) WHERE rn = 1),
-       |u AS (SELECT doc_id, text FROM hist UNION ALL SELECT doc_id, text FROM dsole),
-       |${minhashPairsCtesOver("u", 0.8)},
-       |dropped AS (
-       |  SELECT DISTINCT id_b AS doc_id FROM mh_pairs
-       |  WHERE id_b >= (SELECT c FROM cut)),
-       |admitted AS (
-       |  SELECT * FROM dsole WHERE doc_id NOT IN (SELECT doc_id FROM dropped)),
-       |pol AS (
-       |  SELECT doc_id FROM admitted
-       |  WHERE list_contains(${Oracles.tokens("lower(text)")}, 'dup')),
-       |policed AS (
-       |  SELECT * FROM admitted WHERE doc_id NOT IN (SELECT doc_id FROM pol)),
-       |tg AS (
-       |  SELECT doc_id AS train_id, unnest(${Oracles.shingleHashes("text", 8)}) AS g
-       |  FROM policed),
-       |bg AS (
-       |  SELECT doc_id AS bench_id, unnest(${Oracles.shingleHashes("text", 8)}) AS g
-       |  FROM documents WHERE doc_id % 50 = 0),
-       |cont AS (
-       |  SELECT DISTINCT train_id FROM (
-       |    SELECT tg.train_id, bg.bench_id
-       |    FROM tg JOIN bg ON tg.g = bg.g
-       |    GROUP BY 1, 2 HAVING count(*) >= 100)),
-       |decont AS (
-       |  SELECT * FROM policed WHERE doc_id NOT IN (SELECT train_id FROM cont)),
-       |ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM ev
-       |  WHERE vec_id % 10 != 0 ORDER BY vec_id LIMIT 16),
-       |ref AS (SELECT vec_id, v FROM ev WHERE vec_id % 10 != 0),
-       |rscored AS (
-       |  SELECT r.vec_id, r.v, s.cell_id, ${Oracles.cosine("r.v", "s.cv", 64)} AS cs
-       |  FROM ref r CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, v, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM rscored) WHERE rnk = 1),
-       |-- the semantic stage's probe width is the store's COMMITTED
-       |-- operating point (r13 verdict #3/#4), re-derived here as the
-       |-- replayed k=5 nprobe sweep over the reference corpus: recall@5
-       |-- per width vs the exact scan for the 8-query sample, smallest
-       |-- width clearing 0.9 — a constant in neither the pipeline nor
-       |-- this SQL
-       |gq AS (SELECT vec_id, v FROM ev WHERE vec_id < 8),
-       |gqs AS (
-       |  SELECT q.vec_id, q.v, s.cell_id, ${Oracles.cosine("q.v", "s.cv", 64)} AS cs
-       |  FROM gq q CROSS JOIN seeds s),
-       |gprobes AS (
-       |  SELECT vec_id AS query_id, v AS qv, cell_id, rnk AS prnk FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM gqs) WHERE rnk <= 16),
-       |gst AS (SELECT * FROM (VALUES (1), (2), (4), (8), (16)) AS t(np)),
-       |gcand AS (
-       |  SELECT gst.np, p.query_id, a.vec_id AS neighbor_id,
-       |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-       |  FROM gst JOIN gprobes p ON p.prnk <= gst.np
-       |  JOIN assign a ON a.cell_id = p.cell_id AND p.query_id != a.vec_id),
-       |gannk AS (
-       |  SELECT np, query_id, neighbor_id FROM (
-       |    SELECT np, query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY np, query_id
-       |        ORDER BY cosine DESC, neighbor_id) AS rank
-       |    FROM gcand) WHERE rank <= 5),
-       |gexact AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC,
-       |          c.vec_id) AS rank
-       |    FROM ref c JOIN gq q ON q.vec_id != c.vec_id) WHERE rank <= 5),
-       |ghits AS (
-       |  SELECT gst.np, ex.query_id, count(a.neighbor_id) AS nhit
-       |  FROM gst CROSS JOIN gexact ex
-       |  LEFT JOIN gannk a ON a.np = gst.np
-       |    AND a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-       |  GROUP BY 1, 2),
-       |ggrid AS (
-       |  SELECT np, round(avg(nhit / CAST(5 AS DOUBLE)), 4) AS recall
-       |  FROM ghits GROUP BY 1),
-       |gcnp AS (SELECT coalesce((SELECT min(np) FROM ggrid WHERE recall >= 0.9),
-       |  (SELECT max(np) FROM ggrid)) AS npv),
-       |qv AS (SELECT d.doc_id, e.v FROM decont d JOIN ev e ON e.vec_id = d.doc_id),
-       |qscored AS (
-       |  SELECT q.doc_id, q.v, s.cell_id, ${Oracles.cosine("q.v", "s.cv", 64)} AS cs
-       |  FROM qv q CROSS JOIN seeds s),
-       |probes AS (
-       |  SELECT doc_id, v, cell_id FROM (
-       |    SELECT doc_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY doc_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM qscored) WHERE rnk <= (SELECT npv FROM gcnp)),
-       |semdrop AS (
-       |  SELECT DISTINCT p.doc_id
-       |  FROM probes p JOIN assign a ON a.cell_id = p.cell_id
-       |  WHERE round(${Oracles.cosine("p.v", "a.v", 64)}, 6) >= 0.3),
-       |surv AS (
-       |  SELECT * FROM decont WHERE doc_id NOT IN (SELECT doc_id FROM semdrop)),
-       |mc AS (SELECT source, count(*) AS n FROM surv GROUP BY source),
-       |mz AS (SELECT sum(pow(n, 0.5)) AS z FROM mc),
-       |mt AS (
-       |  SELECT source, round(pow(n, 0.5) / (SELECT z FROM mz), 6) AS tgt FROM mc),
-       |msc AS (SELECT min(c.n / t.tgt) AS scale
-       |        FROM mc c JOIN mt t USING (source) WHERE t.tgt > 0),
-       |mf AS (SELECT c.source,
-       |         least(1.0, (SELECT scale FROM msc) * t.tgt / c.n) AS frac
-       |       FROM mc c JOIN mt t USING (source)),
-       |kept2 AS (
-       |  SELECT s.doc_id, CAST(s.n_tokens AS BIGINT) AS n_tok
-       |  FROM surv s JOIN mf USING (source)
-       |  WHERE $bucket < floor(mf.frac * 1000)),
-       |pc AS (
-       |  SELECT doc_id, n_tok, CAST(coalesce(sum(n_tok) OVER (
-       |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS pre
-       |  FROM kept2)
-       |SELECT pre // 128 AS shard_id, count(*) AS n_docs,
-       |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
-       |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-       |FROM pc GROUP BY 1 ORDER BY 1""".stripMargin
-  }
-
-  /** CTE chain replaying [[graft.operators.Similarity.pqTopK]]'s
-    * codebook training (per-subspace Lloyd: first-16-slice seeds, one
-    * rounded-mean update), encoding, reconstruction, ADC-style exact
-    * cosine scan, shortlist, and exact re-rank — PQ end to end in SQL,
-    * training included. Yields `rer` (query_id, neighbor_id, cosine).
-    */
-  /** PQ replay CTEs ending in `rer` (ranked exact-re-ranked rows).
-    * Training (seeds + one Lloyd mean update + final codebooks cf_s)
-    * runs over `et` = e filtered by `trainWhere` (empty = the whole
-    * corpus — sim_pq_topk); ENCODING (a2_s) always covers the whole
-    * corpus — a vector's codes are a pure function of the vector under
-    * frozen codebooks, which is exactly the PqIndex bootstrap/append
-    * invariant sim_pq_indexed pins. Scoring replays ADC: the approximate
-    * score is sum over subspaces of dot(q_slice_s, codeword_s), divided
-    * by qnorm * sqrt(sum of codeword squared norms) — partial sums added
-    * in subspace order, left-associated, matching Similarity.pqAdcTopK's
-    * reduce fold bit for bit.
-    */
-  /** Per-subspace PQ train+encode CTEs (consume `e` = whole corpus and
-    * `et` = training corpus; end in final codebooks cf_s and whole-corpus
-    * assignments a2_s) — shared by the flat-PQ and IVF-PQ replays.
-    */
-  /** PQ train+encode CTE chain. `pre` prefixes every generated CTE name
-    * so a second, independently-trained chain can coexist in one WITH
-    * list (the grow-arm replay trains its codebooks on the FULL corpus
-    * at the era boundary, exactly as `reseedInto` does); `trainCte`
-    * names the training-corpus CTE (`et` = the bootstrap slice for the
-    * frozen-at-bootstrap chain, `e` for a full-corpus retrain). Default
-    * arguments reproduce the historical unprefixed chain byte-for-byte.
-    */
-  private def pqTrainEncodeCtes(m: Int, codes: Int, pre: String = "",
-                                trainCte: String = "et"): String = {
-    val subDim = 64 / m
-    (0 until m).map { s =>
-      val lo = s * subDim + 1
-      val hi = (s + 1) * subDim
-      val d = subDim
-      s"""${pre}es_$s AS (SELECT vec_id, list_slice(v, $lo, $hi) AS x FROM e),
-         |${pre}ts_$s AS (SELECT vec_id, list_slice(v, $lo, $hi) AS x FROM $trainCte),
-         |${pre}seeds_$s AS (
-         |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c,
-         |    list_slice(v, $lo, $hi) AS w
-         |  FROM (SELECT vec_id, v FROM $trainCte ORDER BY vec_id LIMIT $codes)),
-         |${pre}s1_$s AS (
-         |  SELECT es.vec_id, es.x, s.c,
-         |    (${Oracles.dot("s.w", "s.w", d)} - 2 * ${Oracles.dot("es.x", "s.w", d)}) AS dist
-         |  FROM ${pre}ts_$s es CROSS JOIN ${pre}seeds_$s s),
-         |${pre}a1_$s AS (
-         |  SELECT vec_id, x, c FROM (
-         |    SELECT vec_id, x, c,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY dist, c) AS rn
-         |    FROM ${pre}s1_$s) WHERE rn = 1),
-         |${pre}x1_$s AS (
-         |  SELECT c, unnest(x) AS val, generate_subscripts(x, 1) AS idx FROM ${pre}a1_$s),
-         |${pre}m1_$s AS (
-         |  SELECT c, idx, CAST(CAST(round(avg(val), 6) AS REAL) AS DOUBLE) AS mv
-         |  FROM ${pre}x1_$s GROUP BY c, idx),
-         |${pre}c1_$s AS (SELECT c, list(mv ORDER BY idx) AS w FROM ${pre}m1_$s GROUP BY c),
-         |${pre}cf_$s AS (
-         |  SELECT s.c, coalesce(c1.w, s.w) AS w
-         |  FROM ${pre}seeds_$s s LEFT JOIN ${pre}c1_$s c1 ON s.c = c1.c),
-         |${pre}s2_$s AS (
-         |  SELECT es.vec_id, s.c,
-         |    (${Oracles.dot("s.w", "s.w", d)} - 2 * ${Oracles.dot("es.x", "s.w", d)}) AS dist
-         |  FROM ${pre}es_$s es CROSS JOIN ${pre}cf_$s s),
-         |${pre}a2_$s AS (
-         |  SELECT vec_id, c FROM (
-         |    SELECT vec_id, c,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY dist, c) AS rn
-         |    FROM ${pre}s2_$s) WHERE rn = 1)""".stripMargin
-    }.mkString(",\n")
-  }
-
-  /** `encj` CTE: every corpus row with its m codeword lists (w0..w[m-1])
-    * and the ADC reconstructed norm — sqrt of per-subspace codeword
-    * squared norms added in subspace order (Similarity.pqRnorm's fold).
-    * `pre` selects which [[pqTrainEncodeCtes]] chain it reads.
-    */
-  private def pqEncjCte(m: Int, pre: String = ""): String = {
-    val subDim = 64 / m
-    val reconJoin = (0 until m).map(s =>
-      s"JOIN ${pre}a2_$s a$s ON a$s.vec_id = e.vec_id " +
-        s"JOIN ${pre}cf_$s w$s ON w$s.c = a$s.c").mkString(" ")
-    val rnormSum = (0 until m)
-      .map(s => Oracles.dot(s"w$s.w", s"w$s.w", subDim)).mkString(" + ")
-    val wCols = (0 until m).map(s => s"w$s.w AS w$s").mkString(", ")
-    s"""${pre}encj AS (
-       |  SELECT e.vec_id, $wCols, sqrt($rnormSum) AS rnorm FROM e $reconJoin)""".stripMargin
-  }
-
-  /** dot(query, x̂) as per-subspace partial dots added in subspace order
-    * — Similarity.pqQdot's fold; `qv` is the query vector expression,
-    * codeword lists come from `encj` alias `r`.
-    */
-  private def pqAdcSum(m: Int, qv: String): String = {
-    val subDim = 64 / m
-    (0 until m).map { s =>
-      Oracles.dot(s"list_slice($qv, ${s * subDim + 1}, ${(s + 1) * subDim})",
-        s"r.w$s", subDim)
-    }.mkString("(", " + ", ")")
-  }
-
-  private def pqCtes(m: Int, codes: Int, shortlist: Int,
-                     trainWhere: String = ""): String = {
-    val adcSum = pqAdcSum(m, "q.v")
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |et AS (SELECT vec_id, v FROM e $trainWhere),
-       |${pqTrainEncodeCtes(m, codes)},
-       |${pqEncjCte(m)},
-       |q AS (SELECT vec_id, v, ${Oracles.l2("v", 64)} AS qnorm FROM e WHERE vec_id < 8),
-       |sc AS (
-       |  SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
-       |    CASE WHEN q.qnorm * r.rnorm = 0 THEN 0.0
-       |         ELSE $adcSum / (q.qnorm * r.rnorm) END AS qcos
-       |  FROM encj r CROSS JOIN q WHERE r.vec_id != q.vec_id),
-       |sl AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY query_id
-       |        ORDER BY qcos DESC, neighbor_id) AS srank
-       |    FROM sc) WHERE srank <= $shortlist),
-       |rer AS (
-       |  SELECT query_id, neighbor_id, cosine,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM (
-       |    SELECT sl.query_id, sl.neighbor_id,
-       |      round(${Oracles.cosine("qe.v", "ne.v", 64)}, 6) AS cosine
-       |    FROM sl JOIN e ne ON ne.vec_id = sl.neighbor_id
-       |    JOIN e qe ON qe.vec_id = sl.query_id))""".stripMargin
-  }
-
-  /** The IVF-PQ replay: coarse cells + PQ codes both trained/seeded on
-    * the bootstrap slice (vec_id % 50 != 0), whole corpus assigned and
-    * encoded (frozen-state purity, the sim_ivf_indexed/sim_pq_indexed
-    * invariant), candidates = probed cells' members only, ADC-scored,
-    * shortlisted, exact-re-ranked.
-    */
-  private def ivfPqOracle(nlist: Int, nprobe: Int, m: Int, codes: Int,
-                          shortlist: Int, k: Int): String = {
-    val adcSum = pqAdcSum(m, "p.qv")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |et AS (SELECT vec_id, v FROM e WHERE vec_id % 50 != 0),
-       |${pqTrainEncodeCtes(m, codes)},
-       |${pqEncjCte(m)},
-       |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-       |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT $nlist),
-       |cscored AS (
-       |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-       |  FROM e CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, cell_id FROM (
-       |    SELECT vec_id, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM cscored) WHERE rnk = 1),
-       |probes AS (
-       |  SELECT vec_id AS query_id, v AS qv, ${Oracles.l2("v", 64)} AS qnorm,
-       |    cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM cscored WHERE vec_id < 8) WHERE rnk <= $nprobe),
-       |sc AS (
-       |  SELECT p.query_id, r.vec_id AS neighbor_id,
-       |    CASE WHEN p.qnorm * r.rnorm = 0 THEN 0.0
-       |         ELSE $adcSum / (p.qnorm * r.rnorm) END AS qcos
-       |  FROM assign a
-       |  JOIN probes p ON a.cell_id = p.cell_id AND p.query_id != a.vec_id
-       |  JOIN encj r ON r.vec_id = a.vec_id),
-       |sl AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY query_id
-       |        ORDER BY qcos DESC, neighbor_id) AS srank
-       |    FROM sc) WHERE srank <= $shortlist),
-       |rer AS (
-       |  SELECT query_id, neighbor_id, cosine,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM (
-       |    SELECT sl.query_id, sl.neighbor_id,
-       |      round(${Oracles.cosine("qe.v", "ne.v", 64)}, 6) AS cosine
-       |    FROM sl JOIN e ne ON ne.vec_id = sl.neighbor_id
-       |    JOIN e qe ON qe.vec_id = sl.query_id))
-       |SELECT query_id, rank, neighbor_id, cosine
-       |FROM rer WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** Replays [[graft.sources.IvfPqIndex.revalidateOperatingPoint]]: the
-    * full (nprobe × shortlist) recall grid over the IVF-PQ replay
-    * arithmetic (train/assign/encode once, probe per setting), recall@k
-    * vs the exact scan averaged over the 8 queries and rounded to the
-    * REPORTED 4 digits, then the two-phase smallest-clearing choice —
-    * all decisions made on the reported numbers, exactly as the
-    * operator does.
-    */
-  /** The CTE chain shared by every oracle that replays the operating-
-    * point sweep ([[ivfPqRevalidateOracle]], the maintain decision, the
-    * committed-point probe): the recall GRID over the IVF-PQ replay
-    * arithmetic (train/assign/encode once, probe per setting), then the
-    * two-phase smallest-clearing choice as scalar CTEs `cnp`/`csl` —
-    * everything after `WITH ` and before the consumer's final SELECT.
-    */
-  private def ivfPqGridCtes(nlist: Int, m: Int, codes: Int, k: Int,
-                            floor: Double, nps: Seq[Int],
-                            sls: Seq[Int]): String =
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |et AS (SELECT vec_id, v FROM e WHERE vec_id % 50 != 0),
-       |exact AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC,
-       |          c.vec_id) AS rank
-       |    FROM e c JOIN (SELECT * FROM e WHERE vec_id < 8) q
-       |      ON q.vec_id != c.vec_id) WHERE rank <= $k),
-       |${ivfPqGridArm(m, codes, k, floor, nps, sls, pre = "",
-           seedsSql = s"SELECT vec_id AS cell_id, v AS cv FROM e" +
-             s" WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT $nlist",
-           trainCte = "et", npClamp = None)}""".stripMargin
-
-  /** One complete IVF-PQ sweep-grid ARM — seeds → assign → probe → ADC →
-    * shortlist → exact re-rank → recall grid → two-phase smallest-
-    * clearing choice — with every generated CTE name prefixed by `pre`,
-    * so the maintain oracle can replay TWO independently seeded/trained
-    * grids (the serving index's and the grown lineage's, r14 verdict #2)
-    * in one statement. `seedsSql` supplies the coarse seed rows (the
-    * bootstrap-slice LIMIT for the frozen chain; a count-derived dynamic
-    * top-N for the grown one), `trainCte` the codebook training corpus
-    * (`reseedInto` retrains on the FULL corpus), and `npClamp` an
-    * optional CTE name carrying a one-row `nl` column the swept nprobes
-    * fold onto — the operator clamps sweep settings to the frozen seed
-    * count, and the grown arm's capacity is count-derived so its clamp
-    * must be too. Requires `e` and `exact` from the shared block.
-    */
-  private def ivfPqGridArm(m: Int, codes: Int, k: Int, floor: Double,
-                           nps: Seq[Int], sls: Seq[Int], pre: String,
-                           seedsSql: String, trainCte: String,
-                           npClamp: Option[String]): String = {
-    // pqAdcSum addresses codeword lists through the join alias `r`, so
-    // it is prefix-independent
-    val adcSum = pqAdcSum(m, "p.qv")
-    val maxNp = nps.max
-    val maxSl = sls.max
-    val settings = (for { p <- nps; s <- sls } yield s"($p, $s)").mkString(", ")
-    val stCte = npClamp match {
-      case Some(c) =>
-        s"""${pre}st AS (SELECT DISTINCT least(t.np, $c.nl) AS np, t.slim
-           |  FROM (VALUES $settings) AS t(np, slim), $c)""".stripMargin
-      case None => s"${pre}st AS (SELECT * FROM (VALUES $settings) AS t(np, slim))"
-    }
-    s"""${pqTrainEncodeCtes(m, codes, pre, trainCte)},
-       |${pqEncjCte(m, pre)},
-       |${pre}seeds AS ($seedsSql),
-       |${pre}cscored AS (
-       |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-       |  FROM e CROSS JOIN ${pre}seeds s),
-       |${pre}assign AS (
-       |  SELECT vec_id, cell_id FROM (
-       |    SELECT vec_id, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM ${pre}cscored) WHERE rnk = 1),
-       |${pre}probes AS (
-       |  SELECT vec_id AS query_id, v AS qv, ${Oracles.l2("v", 64)} AS qnorm,
-       |    cell_id, rnk AS prnk FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM ${pre}cscored WHERE vec_id < 8) WHERE rnk <= $maxNp),
-       |${pre}sc AS (
-       |  SELECT p.query_id, p.prnk, r.vec_id AS neighbor_id,
-       |    CASE WHEN p.qnorm * r.rnorm = 0 THEN 0.0
-       |         ELSE $adcSum / (p.qnorm * r.rnorm) END AS qcos
-       |  FROM ${pre}assign a
-       |  JOIN ${pre}probes p ON a.cell_id = p.cell_id AND p.query_id != a.vec_id
-       |  JOIN ${pre}encj r ON r.vec_id = a.vec_id),
-       |$stCte,
-       |${pre}scs AS (
-       |  SELECT st.np, st.slim, s.query_id, s.neighbor_id,
-       |    row_number() OVER (PARTITION BY st.np, st.slim, s.query_id
-       |      ORDER BY s.qcos DESC, s.neighbor_id) AS srank
-       |  FROM ${pre}st st JOIN ${pre}sc s ON s.prnk <= st.np),
-       |${pre}shl AS (SELECT np, slim, query_id, neighbor_id FROM ${pre}scs
-       |  WHERE srank <= slim),
-       |${pre}rer AS (
-       |  SELECT np, slim, query_id, neighbor_id,
-       |    row_number() OVER (PARTITION BY np, slim, query_id
-       |      ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM (
-       |    SELECT x.np, x.slim, x.query_id, x.neighbor_id,
-       |      round(${Oracles.cosine("qe.v", "ne.v", 64)}, 6) AS cosine
-       |    FROM ${pre}shl x JOIN e ne ON ne.vec_id = x.neighbor_id
-       |    JOIN e qe ON qe.vec_id = x.query_id)),
-       |${pre}ann AS (SELECT np, slim, query_id, neighbor_id FROM ${pre}rer
-       |  WHERE rank <= $k),
-       |${pre}hits AS (
-       |  SELECT st.np, st.slim, ex.query_id, count(a.neighbor_id) AS nhit
-       |  FROM ${pre}st st CROSS JOIN exact ex
-       |  LEFT JOIN ${pre}ann a ON a.np = st.np AND a.slim = st.slim
-       |    AND a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-       |  GROUP BY 1, 2, 3),
-       |${pre}grid AS (
-       |  SELECT np, slim, round(avg(nhit / CAST($k AS DOUBLE)), 4) AS recall
-       |  FROM ${pre}hits GROUP BY 1, 2),
-       |${pre}p1 AS (SELECT np, recall FROM ${pre}grid WHERE slim = $maxSl),
-       |${pre}cnp AS (SELECT coalesce(
-       |  (SELECT min(np) FROM ${pre}p1 WHERE recall >= $floor),
-       |  (SELECT max(np) FROM ${pre}p1)) AS v),
-       |${pre}p2 AS (SELECT slim, recall FROM ${pre}grid, ${pre}cnp cnp
-       |  WHERE np = cnp.v),
-       |${pre}csl AS (SELECT coalesce(
-       |  (SELECT min(slim) FROM ${pre}p2 WHERE recall >= $floor),
-       |  (SELECT max(slim) FROM ${pre}p2)) AS v),
-       |${pre}p1ok AS (SELECT CAST(max(CASE WHEN recall >= $floor THEN 1 ELSE 0 END)
-       |  AS INTEGER) AS ok FROM ${pre}p1)""".stripMargin
-  }
-
-  /** Replays [[graft.sources.IvfPqIndex.revalidateOperatingPoint]] — the
-    * full grid ([[ivfPqGridCtes]]) emitted as the operator's sweep rows.
-    */
-  private def ivfPqRevalidateOracle(nlist: Int, m: Int, codes: Int, k: Int,
-                                    floor: Double, nps: Seq[Int],
-                                    sls: Seq[Int]): String = {
-    val maxSl = sls.max
-    s"""WITH ${ivfPqGridCtes(nlist, m, codes, k, floor, nps, sls)}
-       |SELECT phase, nprobe, shortlist, recall, chosen, floor_cleared FROM (
-       |  SELECT 'nprobe' AS phase, CAST(np AS INTEGER) AS nprobe,
-       |    CAST($maxSl AS INTEGER) AS shortlist, recall,
-       |    np = cnp.v AS chosen, recall >= $floor AS floor_cleared
-       |  FROM p1, cnp
-       |  UNION ALL
-       |  -- the operator skips narrower-shortlist probes when phase 1
-       |  -- never cleared (they cannot clear either): only the widest
-       |  -- phase-2 row exists in that case
-       |  SELECT 'shortlist', CAST(cnp.v AS INTEGER), CAST(slim AS INTEGER), recall,
-       |    slim = csl.v, recall >= $floor
-       |  FROM p2, cnp, csl, p1ok WHERE p1ok.ok = 1 OR slim = $maxSl)
-       |ORDER BY phase, nprobe, shortlist""".stripMargin
-  }
-
-  /** Replays [[graft.sources.IvfPqIndex.maintain]]'s one-row decision:
-    * the drift fraction of the delta against the frozen bootstrap seeds
-    * (the guard's arithmetic — [[ivfReseedOracle]]'s `old` phase), the
-    * action it implies at `maxFracBelow`, the serving grid's two-phase
-    * choice from [[ivfPqGridCtes]] — and (r15, closing r14 verdict #2)
-    * the FULL GROW ARM: a second grid ([[ivfPqGridArm]] prefix `n`)
-    * re-seeded at the count-derived nlist and re-trained on the FULL
-    * corpus replays the post-grow sweep (ADC included), so the replay is
-    * exact on BOTH capacity branches at any corpus size. The r14 version
-    * emitted the pre-grow grid unconditionally and was exact only under
-    * cellBudget·nlist vectors — past that a CORRECT grow decision
-    * flipped the hard gate red. The drift-reseed branch stays
-    * spec-pinned (IvfPqIndexSpec, shifted delta); a fixture drifting
-    * past the threshold — or declared without a reseedDir (`grow_due`)
-    * — mismatches loudly on the action column, the safe direction.
-    */
-  private def ivfPqMaintainOracle(nlist: Int, m: Int, codes: Int, k: Int,
-                                  floor: Double, cosFloor: Double,
-                                  maxFracBelow: Double, nps: Seq[Int],
-                                  sls: Seq[Int], cellBudget: Int,
-                                  fragments: Int, compactAbove: Int): String = {
-    // the operator clamps sweep settings to the frozen seed count — the
-    // base arm's capacity is the static nlist, so clamp in Scala; the
-    // grown arm's is count-derived, so it clamps in SQL (npClamp)
-    val baseNps = nps.map(math.min(_, nlist)).distinct.sorted
-    s"""WITH ${ivfPqGridCtes(nlist, m, codes, k, floor, baseNps, sls)},
-       |delta AS (SELECT vec_id, v FROM e WHERE vec_id % 50 = 0),
-       |drift AS (
-       |  SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-       |    CAST(sum(CASE WHEN best_cos < $cosFloor THEN 1 ELSE 0 END) AS BIGINT)
-       |      AS n_below,
-       |    round(CAST(sum(CASE WHEN best_cos < $cosFloor THEN 1 ELSE 0 END)
-       |      AS DOUBLE) / count(*), 6) + 0 AS frac_below
-       |  FROM (
-       |    SELECT d.vec_id, max(${Oracles.cosine("d.v", "s.cv", 64)}) AS best_cos
-       |    FROM delta d CROSS JOIN seeds s GROUP BY d.vec_id)),
-       |chosen AS (
-       |  SELECT cnp.v AS np, csl.v AS slim, g.recall
-       |  FROM cnp CROSS JOIN csl CROSS JOIN grid g
-       |  WHERE g.np = cnp.v AND g.slim = csl.v),
-       |-- the corpus-tracking nlist (Sizing.ivfNlist replayed from the
-       |-- corpus count: clamp(n / cellBudget, 2, 4096)) and the CAPACITY
-       |-- signal (the sweep cleared only at the full coarse scan, or not
-       |-- at all)
-       |nlg AS (SELECT CAST(greatest(2, least(4096, count(*) // $cellBudget))
-       |  AS INTEGER) AS nl FROM e),
-       |cap AS (SELECT (p1ok.ok = 0 OR cnp.v >= $nlist) AS x FROM p1ok, cnp),
-       |dec AS (SELECT (cap.x AND nlg.nl > $nlist) AS grow FROM cap, nlg),
-       |-- the GROW ARM: seeds = the derived number of lowest vec_ids of
-       |-- the FULL corpus (reseedInto/bootstrap's rule), codebooks
-       |-- re-trained on the full corpus, sweep settings clamped to the
-       |-- count-derived capacity — identical arithmetic to the serving
-       |-- arm via the shared generator, only the lineage differs
-       |${ivfPqGridArm(m, codes, k, floor, nps, sls, pre = "n",
-           seedsSql = "SELECT vec_id AS cell_id, v AS cv FROM" +
-             " (SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn" +
-             " FROM e), nlg WHERE rn <= nlg.nl",
-           trainCte = "e", npClamp = Some("nlg"))},
-       |nchosen AS (
-       |  SELECT cnp.v AS np, csl.v AS slim, g.recall
-       |  FROM ncnp cnp CROSS JOIN ncsl csl CROSS JOIN ngrid g
-       |  WHERE g.np = cnp.v AND g.slim = csl.v)
-       |SELECT
-       |  CASE WHEN d.n_below > $maxFracBelow * d.n_vectors THEN 'reseed'
-       |       WHEN dec.grow THEN 'grow'
-       |       WHEN cap.x AND nlg.nl <= $nlist THEN 'capacity_exhausted'
-       |       ELSE 'revalidate' END AS action,
-       |  d.n_vectors, d.n_below, d.frac_below,
-       |  CAST(CASE WHEN d.n_below > $maxFracBelow * d.n_vectors
-       |            THEN greatest($nlist, nlg.nl)
-       |       WHEN dec.grow THEN nlg.nl
-       |       ELSE $nlist END AS INTEGER) AS nlist,
-       |  CAST(CASE WHEN dec.grow THEN nc.np ELSE c.np END AS INTEGER) AS nprobe,
-       |  CAST(CASE WHEN dec.grow THEN nc.slim ELSE c.slim END AS INTEGER)
-       |    AS shortlist,
-       |  CASE WHEN dec.grow THEN nc.recall ELSE c.recall END AS recall,
-       |  CASE WHEN dec.grow THEN nc.recall ELSE c.recall END >= $floor
-       |    AS floor_cleared,
-       |  CASE WHEN dec.grow THEN nc.recall ELSE c.recall END >= $floor
-       |    AS committed,
-       |  -- compaction decision replay: the query-private fixture store is
-       |  -- rebuilt per execution (r14 ADVICE #3), so its committed view
-       |  -- spans exactly $fragments dirs (bootstrap + appends) every run
-       |  -- — due iff compaction is enabled and over threshold, a pure
-       |  -- function of the fixture now
-       |  CAST(($compactAbove > 0) AND ($fragments > $compactAbove)
-       |    AS BOOLEAN) AS compacted
-       |FROM drift d, chosen c, nchosen nc, nlg, cap, dec""".stripMargin
-  }
-
-  /** Replays a probe of [[graft.sources.IvfPqIndex.topK]] at the
-    * COMMITTED operating point: the grid choice CTEs derive (cnp, csl)
-    * and the probe consumes them as scalar subqueries — the oracle never
-    * hardcodes the point, exactly as the operator no longer does.
-    */
-  private def ivfPqCommittedProbeOracle(nlist: Int, m: Int, codes: Int,
-                                        k: Int, floor: Double, nps: Seq[Int],
-                                        sls: Seq[Int]): String =
-    s"""WITH ${ivfPqGridCtes(nlist, m, codes, k, floor, nps, sls)},
-       |pf AS (
-       |  SELECT s.query_id, s.neighbor_id, s.qcos
-       |  FROM sc s, cnp WHERE s.prnk <= cnp.v),
-       |slc AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY query_id
-       |        ORDER BY qcos DESC, neighbor_id) AS srank
-       |    FROM pf), csl WHERE srank <= csl.v),
-       |rerc AS (
-       |  SELECT query_id, neighbor_id, cosine,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM (
-       |    SELECT x.query_id, x.neighbor_id,
-       |      round(${Oracles.cosine("qe.v", "ne.v", 64)}, 6) AS cosine
-       |    FROM slc x JOIN e ne ON ne.vec_id = x.neighbor_id
-       |    JOIN e qe ON qe.vec_id = x.query_id))
-       |SELECT query_id, rank, neighbor_id, cosine
-       |FROM rerc WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
-
-  private def kmeansCtes: String =
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |seeds AS (
-       |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, v
-       |  FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)),
-       |s1 AS (
-       |  SELECT e.vec_id, e.v, s.c, ${Oracles.cosine("e.v", "s.v", 64)} AS cs
-       |  FROM e CROSS JOIN seeds s),
-       |a1 AS (
-       |  SELECT vec_id, v, c FROM (
-       |    SELECT vec_id, v, c,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, c) AS rn
-       |    FROM s1) WHERE rn = 1),
-       |x1 AS (
-       |  SELECT c, unnest(v) AS val, generate_subscripts(v, 1) AS idx FROM a1),
-       |m1 AS (
-       |  SELECT c, idx, CAST(CAST(round(avg(val), 6) AS REAL) AS DOUBLE) AS m
-       |  FROM x1 GROUP BY c, idx),
-       |c1 AS (SELECT c, list(m ORDER BY idx) AS v FROM m1 GROUP BY c),
-       |cf AS (
-       |  SELECT s.c, coalesce(c1.v, s.v) AS v
-       |  FROM seeds s LEFT JOIN c1 ON s.c = c1.c),
-       |s2 AS (
-       |  SELECT e.vec_id, e.v, s.c, ${Oracles.cosine("e.v", "s.v", 64)} AS cs
-       |  FROM e CROSS JOIN cf s),
-       |a2 AS (
-       |  SELECT vec_id, v, c, cs FROM (
-       |    SELECT vec_id, v, c, cs,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, c) AS rn
-       |    FROM s2) WHERE rn = 1)""".stripMargin
-
-  /** Shared CTE chain producing `mh_pairs` — the MinHash-LSH near-dup
-    * pairs the dedup_minhash_lsh and dedup_clusters oracles both consume.
-    */
-  /** CTE chain t → f → g → kept replaying TextAnalysis.stats plus the
-    * cleaning quality gate over `documents` (optionally filtered) —
-    * shared by the corpus_clean and corpus_clean_incr oracles.
-    */
-  private def cleanGateCtes(where: String = ""): String = {
-    val markers = graft.operators.TextAnalysis.langMarkers
-    def inList(words: Seq[String]) = words.map(w => s"'$w'").mkString("[", ", ", "]")
-    val counts = markers.map { case (lang, ms) =>
-      s"len(list_filter(ltoks, x -> list_contains(${inList(ms)}, x))) AS c_$lang"
-    }.mkString(",\n    ")
-    val best = s"greatest(${markers.map("c_" + _._1).mkString(", ")})"
-    val langCase = markers.map { case (lang, _) =>
-      s"WHEN c_$lang = $best THEN '$lang'"
-    }.mkString(" ")
-    s"""t AS (
-       |  SELECT doc_id, text, source,
-       |    ${Oracles.tokens("text")} AS toks,
-       |    ${Oracles.tokens("lower(text)")} AS ltoks,
-       |    length(text) AS nc
-       |  FROM documents $where),
-       |f AS (
-       |  SELECT doc_id, text, source, nc,
-       |    len(toks) AS n_tokens,
-       |    nc - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS punct,
-       |    len(list_filter(ltoks, x -> list_contains(${inList(markers.flatMap(_._2))}, x))) AS stop,
-       |    $counts,
-       |    ${Oracles.polyHash("text")} AS fingerprint
-       |  FROM t),
-       |g AS (
-       |  SELECT doc_id, text, source, n_tokens, fingerprint,
-       |    round(least(1.0, CASE WHEN n_tokens > 0 THEN 0.5 + CAST(stop AS DOUBLE) / n_tokens - CAST(punct AS DOUBLE) / greatest(nc, 1) ELSE 0.0 END), 4) AS quality_score,
-       |    CASE WHEN $best <= 0 THEN 'und' $langCase ELSE 'und' END AS lang_pred
-       |  FROM f),
-       |kept AS (
-       |  SELECT * FROM g WHERE quality_score >= 0.55 AND lang_pred <> 'und'
-       |    AND n_tokens BETWEEN 5 AND 5000)""".stripMargin
-  }
-
-  /** MinHash(16)/4-band LSH pair CTEs over an arbitrary (doc_id, text)
-    * CTE `src`, verified at `threshold` — the parametrized sibling of
-    * [[minhashPairsCtes]] (which stays fixed to the %10 documents sample
-    * its eight consumers replay). Emits sh/sigs/bnd/cand/mh_pairs.
-    */
-  /** The IVF indexed-probe replay, shared by `sim_ivf_indexed` (batch
-    * append) and `stream_ivf_ingest` (exactly-once streaming append):
-    * assignment is a pure function of the vector against the frozen
-    * bootstrap seeds, so both ingest paths must produce this result.
-    */
-  /** Shared replay for ivf_reseed and ivfpq_reseed: drift report over
-    * the old (bootstrap-only) seeds vs the re-seeded (full-corpus)
-    * seeds — the report never touches codes, so one SQL serves both
-    * index families.
-    */
-  private lazy val ivfReseedOracle: String = {
-    def report(seedCte: String, phase: String) =
-      s"""SELECT '$phase' AS phase, CAST(count(*) AS BIGINT) AS n_vectors,
-         |  CAST(sum(CASE WHEN best_cos < 0.22 THEN 1 ELSE 0 END) AS BIGINT) AS n_below,
-         |  round(CAST(sum(CASE WHEN best_cos < 0.22 THEN 1 ELSE 0 END) AS DOUBLE)
-         |    / count(*), 6) + 0 AS frac_below,
-         |  CAST(sum(CASE WHEN best_cos < 0.22 THEN 1 ELSE 0 END) AS DOUBLE)
-         |    > 0.25 * count(*) AS reseed_recommended
-         |FROM (
-         |  SELECT d.vec_id, max(${Oracles.cosine("d.v", "s.cv", 64)}) AS best_cos
-         |  FROM d CROSS JOIN $seedCte s GROUP BY d.vec_id)""".stripMargin
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |oseeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-       |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT 16),
-       |nseeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-       |  ORDER BY vec_id LIMIT 16),
-       |d AS (SELECT vec_id, v FROM e WHERE vec_id % 50 = 0)
-       |${report("oseeds", "old")}
-       |UNION ALL
-       |${report("nseeds", "new")}
-       |ORDER BY phase""".stripMargin
-  }
-
-  private lazy val ivfIndexedOracle: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-       |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT 16),
-       |scored AS (
-       |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-       |  FROM e CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, v, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM scored) WHERE rnk = 1),
-       |probes AS (
-       |  SELECT vec_id AS query_id, v AS qv, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM scored WHERE vec_id < 8) WHERE rnk <= 4),
-       |cand AS (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id,
-       |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-       |  FROM assign a JOIN probes p ON a.cell_id = p.cell_id AND p.query_id != a.vec_id)
-       |SELECT * FROM (
-       |  SELECT query_id, neighbor_id, cosine,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM cand)
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  /** The stale-IVF fixture's sweep replay — seeds from the bootstrap
-    * history, flat-IVF recall grid over nprobes {1,2,4,8,16} at k=5 vs
-    * the exact scan, smallest-clearing choice at floor 0.9 as the scalar
-    * CTE `gcnp(npv)` — shared by the `index_staleness_gate` and
-    * `fleet_report` oracles (both fixtures stamp the identical sweep on
-    * the identical history corpus, so one grid serves every committed-
-    * nprobe column).
-    */
-  private lazy val ivfStaleGridCtes: String =
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |hist AS (SELECT vec_id, v FROM e WHERE vec_id % 50 != 0),
-       |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM hist
-       |  ORDER BY vec_id LIMIT 16),
-       |scored AS (
-       |  SELECT h.vec_id, h.v, s.cell_id, ${Oracles.cosine("h.v", "s.cv", 64)} AS cs
-       |  FROM hist h CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, v, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM scored) WHERE rnk = 1),
-       |gq AS (SELECT vec_id, v FROM e WHERE vec_id < 8),
-       |gqs AS (
-       |  SELECT q.vec_id, q.v, s.cell_id, ${Oracles.cosine("q.v", "s.cv", 64)} AS cs
-       |  FROM gq q CROSS JOIN seeds s),
-       |gprobes AS (
-       |  SELECT vec_id AS query_id, v AS qv, cell_id, rnk AS prnk FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM gqs) WHERE rnk <= 16),
-       |gst AS (SELECT * FROM (VALUES (1), (2), (4), (8), (16)) AS t(np)),
-       |gcand AS (
-       |  SELECT gst.np, p.query_id, a.vec_id AS neighbor_id,
-       |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-       |  FROM gst JOIN gprobes p ON p.prnk <= gst.np
-       |  JOIN assign a ON a.cell_id = p.cell_id AND p.query_id != a.vec_id),
-       |gannk AS (
-       |  SELECT np, query_id, neighbor_id FROM (
-       |    SELECT np, query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY np, query_id
-       |        ORDER BY cosine DESC, neighbor_id) AS rank
-       |    FROM gcand) WHERE rank <= 5),
-       |gexact AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC,
-       |          c.vec_id) AS rank
-       |    FROM hist c JOIN gq q ON q.vec_id != c.vec_id) WHERE rank <= 5),
-       |ghits AS (
-       |  SELECT gst.np, ex.query_id, count(a.neighbor_id) AS nhit
-       |  FROM gst CROSS JOIN gexact ex
-       |  LEFT JOIN gannk a ON a.np = gst.np
-       |    AND a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-       |  GROUP BY 1, 2),
-       |ggrid AS (
-       |  SELECT np, round(avg(nhit / CAST(5 AS DOUBLE)), 4) AS recall
-       |  FROM ghits GROUP BY 1),
-       |gcnp AS (SELECT coalesce((SELECT min(np) FROM ggrid WHERE recall >= 0.9),
-       |  (SELECT max(np) FROM ggrid)) AS npv)""".stripMargin
-
-  /** Replays `sim_ivf_batch`: [[ivfIndexedOracle]]'s persisted-IVF probe
-    * arithmetic computed ONCE per base corpus vector, then expanded to
-    * the replicated query-id space. Replicas of the same embedding MUST
-    * rank identically — the property that makes the expansion valid, and
-    * that turns any per-replica divergence in the operator's distributed
-    * probe path (a dropped candidate, a probe/IN-filter disagreement)
-    * into a hash mismatch. Query ids live in a disjoint space
-    * (1,000,000 + base*21 + rep), so no self-exclusion applies on either
-    * side.
-    */
-  private lazy val ivfBatchOracle: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-       |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT 16),
-       |scored AS (
-       |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-       |  FROM e CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, v, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM scored) WHERE rnk = 1),
-       |probes AS (
-       |  SELECT vec_id AS qbase, v AS qv, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM scored) WHERE rnk <= 4),
-       |based AS (
-       |  SELECT qbase, neighbor_id, cosine,
-       |    row_number() OVER (PARTITION BY qbase
-       |      ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM (
-       |    SELECT p.qbase, a.vec_id AS neighbor_id,
-       |      round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-       |    FROM assign a JOIN probes p ON a.cell_id = p.cell_id)),
-       |reps AS (SELECT unnest(range(0, 21)) AS r)
-       |SELECT 1000000 + b.qbase * 21 + t.r AS query_id, b.rank, b.neighbor_id,
-       |  b.cosine
-       |FROM based b CROSS JOIN reps t WHERE b.rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
-
-  /** Replays `sim_ivfpq_batch`: [[ivfPqOracle]]'s persisted-composition
-    * arithmetic — coarse seeds + PQ codebooks trained on the bootstrap
-    * slice, whole corpus assigned and encoded, probed cells' members
-    * ADC-scored, shortlisted, exact-re-ranked — computed ONCE per base
-    * corpus vector, then expanded to the replicated query-id space
-    * ([[ivfBatchOracle]]'s construction). No self-exclusion on either
-    * side: query ids live at 1,000,000 + base·21 + rep, disjoint from
-    * every corpus vec_id, so the operator's query_id != vec_id filter is
-    * a no-op by construction and the base vector may rank itself.
-    */
-  private def ivfPqBatchOracle(nlist: Int, nprobe: Int, m: Int, codes: Int,
-                               shortlist: Int, k: Int): String = {
-    val adcSum = pqAdcSum(m, "p.qv")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |et AS (SELECT vec_id, v FROM e WHERE vec_id % 50 != 0),
-       |${pqTrainEncodeCtes(m, codes)},
-       |${pqEncjCte(m)},
-       |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-       |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT $nlist),
-       |cscored AS (
-       |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-       |  FROM e CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, cell_id FROM (
-       |    SELECT vec_id, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM cscored) WHERE rnk = 1),
-       |probes AS (
-       |  SELECT vec_id AS qbase, v AS qv, ${Oracles.l2("v", 64)} AS qnorm,
-       |    cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM cscored) WHERE rnk <= $nprobe),
-       |sc AS (
-       |  SELECT p.qbase, r.vec_id AS neighbor_id,
-       |    CASE WHEN p.qnorm * r.rnorm = 0 THEN 0.0
-       |         ELSE $adcSum / (p.qnorm * r.rnorm) END AS qcos
-       |  FROM assign a
-       |  JOIN probes p ON a.cell_id = p.cell_id
-       |  JOIN encj r ON r.vec_id = a.vec_id),
-       |sl AS (
-       |  SELECT qbase, neighbor_id FROM (
-       |    SELECT qbase, neighbor_id,
-       |      row_number() OVER (PARTITION BY qbase
-       |        ORDER BY qcos DESC, neighbor_id) AS srank
-       |    FROM sc) WHERE srank <= $shortlist),
-       |based AS (
-       |  SELECT qbase, neighbor_id, cosine,
-       |    row_number() OVER (PARTITION BY qbase
-       |      ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM (
-       |    SELECT sl.qbase, sl.neighbor_id,
-       |      round(${Oracles.cosine("qe.v", "ne.v", 64)}, 6) AS cosine
-       |    FROM sl JOIN e ne ON ne.vec_id = sl.neighbor_id
-       |    JOIN e qe ON qe.vec_id = sl.qbase)),
-       |reps AS (SELECT unnest(range(0, 21)) AS r)
-       |SELECT 1000000 + b.qbase * 21 + t.r AS query_id, b.rank, b.neighbor_id,
-       |  b.cosine
-       |FROM based b CROSS JOIN reps t WHERE b.rank <= $k
-       |ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** Replays `sim_ivf_committed`: the flat-IVF sweep grid (recall@k per
-    * nprobe vs the exact scan, reported 4 digits), the smallest-clearing
-    * choice as the scalar CTE `cnp`, and the probe AT that derived
-    * nprobe — [[ivfIndexedOracle]]'s arithmetic with the probe width
-    * coming from the replayed sweep instead of a constant.
-    */
-  private def ivfCommittedProbeOracle(nlist: Int, k: Int, floor: Double,
-                                      nps: Seq[Int]): String = {
-    val maxNp = nps.max
-    val settings = nps.map(p => s"($p)").mkString(", ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-       |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT $nlist),
-       |scored AS (
-       |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-       |  FROM e CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, v, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM scored) WHERE rnk = 1),
-       |probes AS (
-       |  SELECT vec_id AS query_id, v AS qv, cell_id, rnk AS prnk FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM scored WHERE vec_id < 8) WHERE rnk <= $maxNp),
-       |st AS (SELECT * FROM (VALUES $settings) AS t(np)),
-       |cand AS (
-       |  SELECT st.np, p.query_id, a.vec_id AS neighbor_id,
-       |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-       |  FROM st JOIN probes p ON p.prnk <= st.np
-       |  JOIN assign a ON a.cell_id = p.cell_id AND p.query_id != a.vec_id),
-       |annk AS (
-       |  SELECT np, query_id, neighbor_id, cosine, rank FROM (
-       |    SELECT np, query_id, neighbor_id, cosine,
-       |      row_number() OVER (PARTITION BY np, query_id
-       |        ORDER BY cosine DESC, neighbor_id) AS rank
-       |    FROM cand) WHERE rank <= $k),
-       |exact AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC,
-       |          c.vec_id) AS rank
-       |    FROM e c JOIN (SELECT * FROM e WHERE vec_id < 8) q
-       |      ON q.vec_id != c.vec_id) WHERE rank <= $k),
-       |hits AS (
-       |  SELECT st.np, ex.query_id, count(a.neighbor_id) AS nhit
-       |  FROM st CROSS JOIN exact ex
-       |  LEFT JOIN annk a ON a.np = st.np
-       |    AND a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-       |  GROUP BY 1, 2),
-       |grid AS (
-       |  SELECT np, round(avg(nhit / CAST($k AS DOUBLE)), 4) AS recall
-       |  FROM hits GROUP BY 1),
-       |cnp AS (SELECT coalesce((SELECT min(np) FROM grid WHERE recall >= $floor),
-       |  (SELECT max(np) FROM grid)) AS v)
-       |SELECT query_id, rank, neighbor_id, cosine
-       |FROM annk, cnp WHERE annk.np = cnp.v ORDER BY query_id, rank""".stripMargin
-  }
-
-  /** Replays `ivf_maintain_grow` — the CAPACITY-adaptive maintenance run
-    * (r13 verdict #2) end to end, every decision re-derived in SQL:
-    * (1) the drift report over the undersized index's frozen seeds (the
-    * guard stays quiet at maxFracBelow=1.0 — the point is that capacity
-    * fires WITHOUT drift); (2) the nprobe sweep grid on the OLD
-    * `oldNlist`-cell index and the capacity signal — the floor clears
-    * only at nprobe == nlist (a full coarse scan) or not at all; (3) the
-    * corpus-tracking target nlist, Sizing.ivfNlist replayed as
-    * clamp(count / cellBudget, 2, 4096) — a CONSTANT in neither the
-    * operator nor this SQL; (4) the re-sweep on the GROWN index (seeds =
-    * the derived number of lowest vec_ids of the full corpus, the
-    * reseedInto/bootstrap rule) with the same sweep list clamped to the
-    * new capacity; (5) the one-row report with the grown nlist, the
-    * post-grow chosen nprobe (< nlist — the committed point is a real
-    * pruned probe again, not the institutionalized full scan the r13 10×
-    * rehearsal shipped) and its recall. Both grids are emitted through
-    * identical arithmetic so a store that grew to a different capacity,
-    * swept a different grid, or committed a different point than its own
-    * decision rule hash-mismatches here.
-    */
-  private def ivfGrowMaintainOracle(oldNlist: Int, k: Int, floor: Double,
-                                    cosFloor: Double, maxFracBelow: Double,
-                                    nps: Seq[Int], cellBudget: Int): String = {
-    val oldSettings = nps.map(math.min(_, oldNlist)).distinct.sorted
-      .map(p => s"($p)").mkString(", ")
-    val rawSettings = nps.map(p => s"($p)").mkString(", ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |boot AS (SELECT vec_id, v FROM e WHERE vec_id % 50 != 0),
-       |delta AS (SELECT vec_id, v FROM e WHERE vec_id % 50 = 0),
-       |oseeds AS (SELECT vec_id AS cell_id, v AS cv FROM boot
-       |  ORDER BY vec_id LIMIT $oldNlist),
-       |drift AS (
-       |  SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-       |    CAST(sum(CASE WHEN best_cos < $cosFloor THEN 1 ELSE 0 END) AS BIGINT)
-       |      AS n_below,
-       |    round(CAST(sum(CASE WHEN best_cos < $cosFloor THEN 1 ELSE 0 END)
-       |      AS DOUBLE) / count(*), 6) + 0 AS frac_below
-       |  FROM (
-       |    SELECT d.vec_id, max(${Oracles.cosine("d.v", "s.cv", 64)}) AS best_cos
-       |    FROM delta d CROSS JOIN oseeds s GROUP BY d.vec_id)),
-       |exact AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC,
-       |          c.vec_id) AS rank
-       |    FROM e c JOIN (SELECT * FROM e WHERE vec_id < 8) q
-       |      ON q.vec_id != c.vec_id) WHERE rank <= $k),
-       |oscored AS (
-       |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-       |  FROM e CROSS JOIN oseeds s),
-       |oassign AS (
-       |  SELECT vec_id, v, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM oscored) WHERE rnk = 1),
-       |oprobes AS (
-       |  SELECT vec_id AS query_id, v AS qv, cell_id, rnk AS prnk FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM oscored WHERE vec_id < 8) WHERE rnk <= $oldNlist),
-       |ost AS (SELECT * FROM (VALUES $oldSettings) AS t(np)),
-       |ocand AS (
-       |  SELECT ost.np, p.query_id, a.vec_id AS neighbor_id,
-       |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-       |  FROM ost JOIN oprobes p ON p.prnk <= ost.np
-       |  JOIN oassign a ON a.cell_id = p.cell_id AND p.query_id != a.vec_id),
-       |oannk AS (
-       |  SELECT np, query_id, neighbor_id FROM (
-       |    SELECT np, query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY np, query_id
-       |        ORDER BY cosine DESC, neighbor_id) AS rank
-       |    FROM ocand) WHERE rank <= $k),
-       |ohits AS (
-       |  SELECT ost.np, ex.query_id, count(a.neighbor_id) AS nhit
-       |  FROM ost CROSS JOIN exact ex
-       |  LEFT JOIN oannk a ON a.np = ost.np
-       |    AND a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-       |  GROUP BY 1, 2),
-       |ogrid AS (
-       |  SELECT np, round(avg(nhit / CAST($k AS DOUBLE)), 4) AS recall
-       |  FROM ohits GROUP BY 1),
-       |ocnp AS (SELECT coalesce((SELECT min(np) FROM ogrid WHERE recall >= $floor),
-       |  (SELECT max(np) FROM ogrid)) AS v),
-       |ook AS (SELECT CAST(max(CASE WHEN recall >= $floor THEN 1 ELSE 0 END)
-       |  AS INTEGER) AS ok FROM ogrid),
-       |nlg AS (SELECT CAST(greatest(2, least(4096, count(*) // $cellBudget))
-       |  AS INTEGER) AS nl FROM e),
-       |cap AS (SELECT (ook.ok = 0 OR ocnp.v >= $oldNlist) AS x FROM ook, ocnp),
-       |dec AS (SELECT (cap.x AND nlg.nl > $oldNlist) AS grow FROM cap, nlg),
-       |nseeds AS (
-       |  SELECT vec_id AS cell_id, v AS cv FROM (
-       |    SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM e), nlg
-       |  WHERE rn <= nlg.nl),
-       |nscored AS (
-       |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-       |  FROM e CROSS JOIN nseeds s),
-       |nassign AS (
-       |  SELECT vec_id, v, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM nscored) WHERE rnk = 1),
-       |nst AS (SELECT DISTINCT least(t.np, nlg.nl) AS np
-       |  FROM (VALUES $rawSettings) AS t(np), nlg),
-       |npro AS (
-       |  SELECT vec_id AS query_id, v AS qv, cell_id, rnk AS prnk FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM nscored WHERE vec_id < 8)
-       |  WHERE rnk <= (SELECT max(np) FROM nst)),
-       |ncand AS (
-       |  SELECT nst.np, p.query_id, a.vec_id AS neighbor_id,
-       |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-       |  FROM nst JOIN npro p ON p.prnk <= nst.np
-       |  JOIN nassign a ON a.cell_id = p.cell_id AND p.query_id != a.vec_id),
-       |nannk AS (
-       |  SELECT np, query_id, neighbor_id FROM (
-       |    SELECT np, query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY np, query_id
-       |        ORDER BY cosine DESC, neighbor_id) AS rank
-       |    FROM ncand) WHERE rank <= $k),
-       |nhits AS (
-       |  SELECT nst.np, ex.query_id, count(a.neighbor_id) AS nhit
-       |  FROM nst CROSS JOIN exact ex
-       |  LEFT JOIN nannk a ON a.np = nst.np
-       |    AND a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-       |  GROUP BY 1, 2),
-       |ngrid AS (
-       |  SELECT np, round(avg(nhit / CAST($k AS DOUBLE)), 4) AS recall
-       |  FROM nhits GROUP BY 1),
-       |ncnp AS (SELECT coalesce((SELECT min(np) FROM ngrid WHERE recall >= $floor),
-       |  (SELECT max(np) FROM ngrid)) AS v)
-       |SELECT
-       |  CASE WHEN d.n_below > $maxFracBelow * d.n_vectors THEN 'reseed'
-       |       WHEN dec.grow THEN 'grow' ELSE 'revalidate' END AS action,
-       |  d.n_vectors, d.n_below, d.frac_below,
-       |  CAST(CASE WHEN dec.grow THEN nlg.nl ELSE $oldNlist END AS INTEGER) AS nlist,
-       |  CAST(CASE WHEN dec.grow THEN ncnp.v ELSE ocnp.v END AS INTEGER) AS nprobe,
-       |  CASE WHEN dec.grow THEN (SELECT recall FROM ngrid, ncnp WHERE np = ncnp.v)
-       |       ELSE (SELECT recall FROM ogrid, ocnp WHERE np = ocnp.v)
-       |  END AS recall,
-       |  CASE WHEN dec.grow THEN (SELECT recall FROM ngrid, ncnp WHERE np = ncnp.v)
-       |       ELSE (SELECT recall FROM ogrid, ocnp WHERE np = ocnp.v)
-       |  END >= $floor AS floor_cleared,
-       |  CASE WHEN dec.grow THEN (SELECT recall FROM ngrid, ncnp WHERE np = ncnp.v)
-       |       ELSE (SELECT recall FROM ogrid, ocnp WHERE np = ocnp.v)
-       |  END >= $floor AS committed,
-       |  CAST(false AS BOOLEAN) AS compacted
-       |FROM drift d, dec, nlg, ocnp, ncnp""".stripMargin
-  }
-
-  private def minhashPairsCtesOver(src: String, threshold: Double): String = {
-    val bkeys = (0 until 4).map(bi => Oracles.bandKey("sig", bi, 4)).mkString("[", ", ", "]")
-    s"""sh AS (
-       |  SELECT doc_id, ${Oracles.shingleHashes("text", 3)} AS gs FROM $src),
-       |sigs AS (SELECT doc_id, ${Oracles.minhashSignature("gs", 16)} AS sig FROM sh),
-       |bnd AS (
-       |  SELECT doc_id, t.band AS band, $bkeys[t.band + 1] AS band_key
-       |  FROM sigs CROSS JOIN (SELECT unnest(range(0, 4)) AS band) t),
-       |cand AS (
-       |  SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-       |  FROM bnd x JOIN bnd y
-       |    ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
-       |mh_pairs AS (
-       |  SELECT * FROM (
-       |    SELECT c.id_a, c.id_b,
-       |      round(CAST(len(list_intersect(ga.gs, gb.gs)) AS DOUBLE)
-       |        / len(list_distinct(ga.gs || gb.gs)), 6) AS jaccard
-       |    FROM cand c
-       |    JOIN sh ga ON c.id_a = ga.doc_id
-       |    JOIN sh gb ON c.id_b = gb.doc_id)
-       |  WHERE jaccard >= $threshold)""".stripMargin
-  }
-
-  private def minhashPairsCtes: String = {
-    val bkeys = (0 until 4).map(bi => Oracles.bandKey("sig", bi, 4)).mkString("[", ", ", "]")
-    s"""sh AS (
-       |  SELECT doc_id, ${Oracles.shingleHashes("text", 3)} AS gs
-       |  FROM documents WHERE doc_id % 10 = 0),
-       |sigs AS (SELECT doc_id, ${Oracles.minhashSignature("gs", 16)} AS sig FROM sh),
-       |bnd AS (
-       |  SELECT doc_id, t.band AS band, $bkeys[t.band + 1] AS band_key
-       |  FROM sigs CROSS JOIN (SELECT unnest(range(0, 4)) AS band) t),
-       |cand AS (
-       |  SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-       |  FROM bnd x JOIN bnd y
-       |    ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
-       |mh_pairs AS (
-       |  SELECT * FROM (
-       |    SELECT c.id_a, c.id_b,
-       |      round(CAST(len(list_intersect(ga.gs, gb.gs)) AS DOUBLE)
-       |        / len(list_distinct(ga.gs || gb.gs)), 6) AS jaccard
-       |    FROM cand c
-       |    JOIN sh ga ON c.id_a = ga.doc_id
-       |    JOIN sh gb ON c.id_b = gb.doc_id)
-       |  WHERE jaccard >= 0.6)""".stripMargin
-  }
-
-  private val patternChainSql: String =
-    """WITH e AS (
-        |  SELECT user_id, event_id, event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) AS tss
-        |  FROM events),
-        |s0 AS (
-        |  SELECT *, CASE WHEN event_type = 'click' THEN tss END AS c0 FROM e),
-        |s1 AS (
-        |  SELECT *, CASE WHEN event_type = 'view' THEN
-        |    last_value(CASE WHEN event_type = 'click' THEN c0 END IGNORE NULLS) OVER (
-        |      PARTITION BY user_id ORDER BY tss, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) END AS c1
-        |  FROM s0),
-        |s2 AS (
-        |  SELECT *, CASE WHEN event_type = 'purchase' THEN
-        |    last_value(CASE WHEN event_type = 'view' THEN c1 END IGNORE NULLS) OVER (
-        |      PARTITION BY user_id ORDER BY tss, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) END AS c2
-        |  FROM s1),
-        |m AS (
-        |  SELECT user_id, tss, event_id, tss - c2 AS span FROM s2
-        |  WHERE event_type = 'purchase' AND c2 IS NOT NULL AND tss - c2 <= 86400),
-        |r AS (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY user_id ORDER BY tss, event_id) AS rn FROM m),
-        |agg AS (SELECT user_id, count(*) AS n_matches FROM m GROUP BY user_id)
-        |SELECT a.user_id, a.n_matches,
-        |  r.tss AS first_end_sec, r.span AS first_span_sec
-        |FROM agg a JOIN r ON a.user_id = r.user_id AND r.rn = 1
-        |ORDER BY a.user_id""".stripMargin
-
-  /** Shared CTE chain for the BPE oracles: tokenize (tk1), then per round
-    * r pick the winner (top$r: max count, ties (a, b) ascending) and
-    * rewrite leftmost-non-overlapping via gaps-and-islands (tk${r+1}) —
-    * the same semantics the Spark side's codegen'd greedy scan produces
-    * ([[graft.functions.BpeMergePairExpr]]). `bpe_merges` reads the
-    * top$r winners; `bpe_encode` reads the final tk${rounds+1}.
-    */
-  private def bpeOracleCtes(rounds: Int): String = {
-    def roundCtes(r: Int): String =
-      s"""top$r AS (
-         |  SELECT a, b, count(*) AS n FROM (
-         |    SELECT tok AS a,
-         |      lead(tok) OVER (PARTITION BY doc_id ORDER BY p) AS b
-         |    FROM tk$r)
-         |  WHERE b IS NOT NULL GROUP BY a, b
-         |  ORDER BY n DESC, a, b LIMIT 1),
-         |d$r AS (
-         |  SELECT *, (m AND off % 2 = 0) AS do_merge,
-         |    coalesce(lag(m AND off % 2 = 0) OVER (
-         |      PARTITION BY doc_id ORDER BY p), false) AS prev_merged
-         |  FROM (
-         |    SELECT *, CASE WHEN m THEN p - min(p) OVER (
-         |        PARTITION BY doc_id, island ORDER BY p) END AS off
-         |    FROM (
-         |      SELECT *, CASE WHEN m THEN p - count(CASE WHEN m THEN 1 END) OVER (
-         |          PARTITION BY doc_id ORDER BY p ROWS UNBOUNDED PRECEDING) END AS island
-         |      FROM (
-         |        SELECT doc_id, p, tok,
-         |          (lead(tok) OVER (PARTITION BY doc_id ORDER BY p) IS NOT NULL
-         |           AND tok = (SELECT a FROM top$r)
-         |           AND lead(tok) OVER (PARTITION BY doc_id ORDER BY p) =
-         |               (SELECT b FROM top$r)) AS m
-         |        FROM tk$r)))),
-         |tk${r + 1} AS (
-         |  SELECT doc_id,
-         |    row_number() OVER (PARTITION BY doc_id ORDER BY p) - 1 AS p,
-         |    CASE WHEN do_merge THEN (SELECT a || ' ' || b FROM top$r)
-         |         ELSE tok END AS tok
-         |  FROM d$r WHERE NOT prev_merged)""".stripMargin
-    s"""toks0 AS (
-       |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS t FROM documents),
-       |tk1 AS (
-       |  SELECT doc_id, unnest(t) AS tok, generate_subscripts(t, 1) - 1 AS p
-       |  FROM toks0 WHERE len(t) >= 2),
-       |${(1 to rounds).map(roundCtes).mkString(",\n")}""".stripMargin
-  }
-
-  /** BM25 oracle (k1=1.2, b=0.75) over `documents` for `terms`, top `k`.
-    * The per-(term, doc) score replays InvertedIndex.bm25's expression
-    * tree verbatim and is snapped to integer micro-units before the
-    * per-doc sum, so the compare is bit-exact at any term count.
-    */
-  private def bm25OracleSql(terms: Seq[String], k: Int): String = {
-    val inList = terms.map(t => s"'$t'").mkString(", ")
-    s"""WITH tok AS (
-       |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS tk FROM documents),
-       |meta AS (
-       |  SELECT count(*) AS n, CAST(sum(length(tk)) AS DOUBLE) / count(*) AS avgdl
-       |  FROM tok),
-       |toks AS (
-       |  SELECT doc_id, length(tk) AS doc_len, unnest(tk) AS term FROM tok),
-       |tf AS (
-       |  SELECT doc_id, term, count(*) AS tf, any_value(doc_len) AS doc_len
-       |  FROM toks WHERE term IN ($inList) GROUP BY 1, 2),
-       |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-       |scored AS (
-       |  SELECT tf.doc_id,
-       |    sum(CAST(floor(ln(1.0 + (meta.n - dfreq.df + 0.5) / (dfreq.df + 0.5)) *
-       |        ((tf.tf * 2.2) /
-       |         (tf.tf + 1.2 * (0.25 + 0.75 * (tf.doc_len / meta.avgdl)))) *
-       |        1000000.0 + 0.5) AS BIGINT)) AS su
-       |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN meta
-       |  GROUP BY 1),
-       |top AS (
-       |  SELECT doc_id, su FROM scored ORDER BY su DESC, doc_id LIMIT $k)
-       |SELECT doc_id, round(su / 1000000.0, 4) AS score FROM top
-       |ORDER BY doc_id""".stripMargin
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "q1_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 2) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_base_price,
-        |  round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS sum_disc_price,
-        |  count(*) AS count_order
-        |FROM lineitem
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "star_denorm" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  l_partkey AS trn_partkey, l_suppkey AS trn_suppkey,
-        |  l_extendedprice AS paid_amount, CAST(l_shipdate AS DATE) AS register_date,
-        |  s_name, s_nationkey, p_brand, p_type, p_size
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN part ON l_partkey = p_partkey
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "report_supplier" ->
-      """SELECT l_suppkey AS s_suppkey, s_name,
-        |  CAST(l_shipdate AS DATE) AS register_date,
-        |  round(sum(l_extendedprice), 2) AS total
-        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |GROUP BY 1, 2, 3
-        |ORDER BY s_suppkey, register_date""".stripMargin,
-
-    "report_part_brand" ->
-      """SELECT p_brand, CAST(l_shipdate AS DATE) AS register_date,
-        |  round(sum(l_extendedprice), 2) AS total
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY 1, 2
-        |ORDER BY p_brand, register_date""".stripMargin,
-
-    "parallel_reports" ->
-      """SELECT * FROM (
-        |  SELECT CAST(l_suppkey AS VARCHAR) || '|' || s_name AS report_key,
-        |    CAST(l_shipdate AS DATE) AS register_date,
-        |    round(sum(l_extendedprice), 2) AS total, 'supplier' AS report
-        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN part ON l_partkey = p_partkey
-        |  GROUP BY 1, 2
-        |  UNION ALL
-        |  SELECT p_brand AS report_key, CAST(l_shipdate AS DATE) AS register_date,
-        |    round(sum(l_extendedprice), 2) AS total, 'part_brand' AS report
-        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN part ON l_partkey = p_partkey
-        |  GROUP BY 1, 2
-        |) ORDER BY report, report_key, register_date""".stripMargin,
-
-    "incremental_scan" ->
-      """SELECT event_id, user_id, event_type, value
-        |FROM events
-        |WHERE event_id > (SELECT CAST(floor(max(event_id) / 2) AS BIGINT) FROM events)
-        |ORDER BY event_id""".stripMargin,
-
-    // same delta as incremental_scan: the JDBC round trip (parquet -> Derby
-    // -> incremental JDBC read) must be value-transparent
-    "incremental_scan_jdbc" ->
-      """SELECT event_id, user_id, event_type, value
-        |FROM events
-        |WHERE event_id > (SELECT CAST(floor(max(event_id) / 2) AS BIGINT) FROM events)
-        |ORDER BY event_id""".stripMargin,
-
-    // mirrors the two-stage rounding of appended partial aggregates:
-    // each half's report rounds its sum to 2, the consumer re-aggregates
-    "incr_star_e2e" ->
-      """WITH mid AS (SELECT max(l_orderkey) // 2 AS m FROM lineitem),
-        |p AS (
-        |  SELECT l_suppkey AS s_suppkey, s_name,
-        |    CAST(l_shipdate AS DATE) AS register_date,
-        |    CASE WHEN l_orderkey <= (SELECT m FROM mid) THEN 0 ELSE 1 END AS half,
-        |    round(sum(l_extendedprice), 2) AS total
-        |  FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-        |  GROUP BY 1, 2, 3, 4)
-        |SELECT s_suppkey, s_name, register_date, round(sum(total), 2) AS total
-        |FROM p GROUP BY 1, 2, 3
-        |ORDER BY s_suppkey, register_date""".stripMargin,
-
-    // warehouse state after every batch was delivered twice through the
-    // ledger sink == the aggregate computed once from parquet
-    "stream_ledger_sink" ->
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total
-        |FROM events GROUP BY event_type
-        |ORDER BY event_type""".stripMargin,
-
-    // final warehouse state after load + deduplicated redelivery == the
-    // report computed once straight from parquet
-    "jdbc_staged_load" ->
-      """SELECT o_orderpriority, count(*) AS n,
-        |  round(sum(o_totalprice), 2) AS total
-        |FROM orders GROUP BY o_orderpriority
-        |ORDER BY o_orderpriority""".stripMargin,
-
-    "dedup_exact" ->
-      """WITH corpus AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 1000000, text FROM documents)
-        |SELECT min(doc_id) AS keep_id, count(*) AS n_dupes
-        |FROM corpus GROUP BY text ORDER BY keep_id""".stripMargin,
-
-    "dedup_lines" -> {
-      val W = 8 // chunkWords — must match the queries() call
-      s"""WITH toks AS (
-         |  SELECT doc_id, ${Oracles.tokens("text")} AS tk FROM documents),
-         |c0 AS (
-         |  SELECT doc_id, tk,
-         |    unnest(range(0, CAST(ceil(len(tk) / $W.0) AS BIGINT))) AS cpos
-         |  FROM toks),
-         |c AS (
-         |  SELECT doc_id, cpos,
-         |    array_to_string(list_slice(tk, cpos*$W + 1, cpos*$W + $W), ' ') AS chunk
-         |  FROM c0),
-         |r AS (
-         |  SELECT doc_id, cpos,
-         |    row_number() OVER (PARTITION BY chunk ORDER BY doc_id, cpos) AS rn
-         |  FROM c),
-         |own AS (
-         |  SELECT doc_id, count(*) AS kept_chunks FROM r WHERE rn = 1
-         |  GROUP BY doc_id),
-         |tot AS (
-         |  SELECT doc_id, CAST(ceil(len(tk) / $W.0) AS BIGINT) AS total_chunks
-         |  FROM toks)
-         |SELECT t.doc_id, t.total_chunks,
-         |  coalesce(o.kept_chunks, 0) AS kept_chunks,
-         |  CASE WHEN t.total_chunks = 0 THEN 0.0
-         |    ELSE round(CAST(coalesce(o.kept_chunks, 0) AS DOUBLE)
-         |      / t.total_chunks, 6) END AS kept_frac
-         |FROM tot t LEFT JOIN own o USING (doc_id)
-         |ORDER BY t.doc_id""".stripMargin
-    },
-
-    "dedup_incremental" ->
-      s"""WITH mx AS (SELECT max(doc_id) // 2 AS mid FROM documents),
-         |hist AS (
-         |  SELECT doc_id, text FROM documents WHERE doc_id <= (SELECT mid FROM mx)),
-         |hfp AS (SELECT DISTINCT ${Oracles.polyHash("text")} AS fingerprint FROM hist),
-         |delta AS (
-         |  SELECT doc_id, text FROM documents WHERE doc_id > (SELECT mid FROM mx)
-         |  UNION ALL
-         |  SELECT doc_id + 1000000, text FROM hist WHERE doc_id % 7 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 2000000, text FROM documents
-         |  WHERE doc_id > (SELECT mid FROM mx) AND doc_id % 5 = 0),
-         |fp AS (
-         |  SELECT ${Oracles.polyHash("text")} AS fingerprint, doc_id FROM delta),
-         |fresh AS (
-         |  SELECT * FROM fp
-         |  WHERE fingerprint NOT IN (SELECT fingerprint FROM hfp))
-         |SELECT fingerprint, min(doc_id) AS keep_id, count(*) AS n_dupes
-         |FROM fresh GROUP BY fingerprint ORDER BY keep_id""".stripMargin,
-
-    "dedup_ngram_jaccard" -> {
-      val inter = "len(list_intersect(a.gs, b.gs))"
-      s"""WITH sh AS (
-         |  SELECT doc_id, ${Oracles.shingleHashes("text", 3)} AS gs
-         |  FROM documents WHERE doc_id % 10 = 0)
-         |SELECT * FROM (
-         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-         |    round(CAST($inter AS DOUBLE) / (len(a.gs) + len(b.gs) - $inter), 6) AS jaccard
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id)
-         |WHERE jaccard >= 0.6 ORDER BY id_a, id_b""".stripMargin
-    },
-
-    "dedup_ngram_pruned" ->
-      s"""WITH sh AS (
-         |  SELECT doc_id, ${Oracles.shingleHashes("text", 3)} AS gs
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |g AS (SELECT doc_id, unnest(gs) AS g FROM sh),
-         |rare AS (SELECT g FROM g GROUP BY g HAVING count(*) <= 40),
-         |rg AS (SELECT doc_id, g.g FROM g JOIN rare USING (g)),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM rg a JOIN rg b ON a.g = b.g AND a.doc_id < b.doc_id)
-         |SELECT * FROM (
-         |  SELECT c.id_a, c.id_b,
-         |    round(CAST(len(list_intersect(ga.gs, gb.gs)) AS DOUBLE)
-         |      / len(list_distinct(ga.gs || gb.gs)), 6) AS jaccard
-         |  FROM cand c
-         |  JOIN sh ga ON c.id_a = ga.doc_id
-         |  JOIN sh gb ON c.id_b = gb.doc_id)
-         |WHERE jaccard >= 0.6 ORDER BY id_a, id_b""".stripMargin,
-
-    "dedup_containment" ->
-      s"""WITH sh AS (
-         |  SELECT doc_id, ${Oracles.shingleHashes("text", 5)} AS gs
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |g AS (SELECT doc_id, unnest(gs) AS g FROM sh),
-         |rare AS (SELECT g FROM g GROUP BY g HAVING count(*) <= 40),
-         |rg AS (SELECT doc_id, g.g FROM g JOIN rare USING (g)),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM rg a JOIN rg b ON a.g = b.g AND a.doc_id < b.doc_id),
-         |scored AS (
-         |  SELECT c.id_a, c.id_b,
-         |    CAST(len(list_intersect(ga.gs, gb.gs)) AS DOUBLE) AS inter,
-         |    CAST(len(ga.gs) AS DOUBLE) AS na, CAST(len(gb.gs) AS DOUBLE) AS nb
-         |  FROM cand c
-         |  JOIN sh ga ON c.id_a = ga.doc_id
-         |  JOIN sh gb ON c.id_b = gb.doc_id),
-         |directed AS (
-         |  SELECT id_a AS src_id, id_b AS dst_id, round(inter / na, 6) AS containment
-         |  FROM scored
-         |  UNION ALL
-         |  SELECT id_b AS src_id, id_a AS dst_id, round(inter / nb, 6) AS containment
-         |  FROM scored)
-         |SELECT * FROM directed WHERE containment >= 0.5
-         |ORDER BY src_id, dst_id""".stripMargin,
-
-    "dedup_minhash_lsh" ->
-      s"""WITH $minhashPairsCtes
-         |SELECT * FROM mh_pairs ORDER BY id_a, id_b""".stripMargin,
-
-    // the incremental sweep's contract IS this filter: banding only the
-    // delta and probing the corpus index must emit exactly the full
-    // sweep's delta-involved pairs
-    "dedup_incr_lsh" ->
-      s"""WITH $minhashPairsCtes
-         |SELECT * FROM mh_pairs WHERE id_a % 50 = 0 OR id_b % 50 = 0
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // the persisted-index path must emit the SAME delta-involved pairs as
-    // the recompute path — one oracle pins both implementations
-    "dedup_incr_lsh_indexed" ->
-      s"""WITH $minhashPairsCtes
-         |SELECT * FROM mh_pairs WHERE id_a % 50 = 0 OR id_b % 50 = 0
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // the capped sweep's exclusion, replayed literally: stop = history
-    // buckets (the compacted content) with occupancy > 4; the delta's
-    // band rows at stopped keys are anti-joined away BEFORE candidate
-    // generation, then the usual delta-probe + jaccard verify. Filtering
-    // the delta side alone is exact: a row at a stopped key can only
-    // pair with a delta row at the same (now absent) key.
-    "dedup_lsh_capped" -> {
-      val bkeys = (0 until 4).map(bi => Oracles.bandKey("sig", bi, 4)).mkString("[", ", ", "]")
-      s"""WITH sh AS (
-         |  SELECT doc_id, ${Oracles.shingleHashes("text", 3)} AS gs
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |sigs AS (SELECT doc_id, ${Oracles.minhashSignature("gs", 16)} AS sig FROM sh),
-         |bnd AS (
-         |  SELECT doc_id, t.band AS band, $bkeys[t.band + 1] AS band_key
-         |  FROM sigs CROSS JOIN (SELECT unnest(range(0, 4)) AS band) t),
-         |stop AS (
-         |  SELECT band, band_key FROM bnd WHERE doc_id % 50 != 0
-         |  GROUP BY 1, 2 HAVING count(*) > 4),
-         |dbnd AS (
-         |  SELECT d.* FROM bnd d ANTI JOIN stop s
-         |    ON d.band = s.band AND d.band_key = s.band_key
-         |  WHERE d.doc_id % 50 = 0),
-         |cand AS (
-         |  SELECT DISTINCT least(x.doc_id, y.doc_id) AS id_a,
-         |    greatest(x.doc_id, y.doc_id) AS id_b
-         |  FROM dbnd x JOIN bnd y
-         |    ON x.band = y.band AND x.band_key = y.band_key
-         |      AND x.doc_id != y.doc_id)
-         |SELECT * FROM (
-         |  SELECT c.id_a, c.id_b,
-         |    round(CAST(len(list_intersect(ga.gs, gb.gs)) AS DOUBLE)
-         |      / len(list_distinct(ga.gs || gb.gs)), 6) AS jaccard
-         |  FROM cand c
-         |  JOIN sh ga ON c.id_a = ga.doc_id
-         |  JOIN sh gb ON c.id_b = gb.doc_id)
-         |WHERE jaccard >= 0.6 ORDER BY id_a, id_b""".stripMargin
-    },
-
-    // walk replay: unrolled steps, each choosing
-    // nbrs[poly_hash(start:t:cur) % degree] over the sorted neighbor list
-    "graph_walks" -> {
-      def hop(t: Int) =
-        s"""SELECT w${t - 1}.start,
-           |    a.nbrs[CAST(${Oracles.polyHash(s"(w${t - 1}.start || ':' || $t || ':' || w${t - 1}.cur)")} % length(a.nbrs) AS INT) + 1] AS cur
-           |  FROM w${t - 1} JOIN adj a ON w${t - 1}.cur = a.node""".stripMargin
-      s"""WITH p AS (
-         |  SELECT DISTINCT l_partkey AS pk, l_suppkey AS sk FROM lineitem),
-         |e AS (
-         |  SELECT pk * 2 AS src, sk * 2 + 1 AS dst FROM p
-         |  UNION ALL SELECT sk * 2 + 1, pk * 2 FROM p),
-         |ed AS (SELECT DISTINCT src, dst FROM e),
-         |adj AS (SELECT src AS node, list(dst ORDER BY dst) AS nbrs FROM ed GROUP BY 1),
-         |w0 AS (SELECT node AS start, node AS cur FROM adj),
-         |w1 AS (${hop(1)}),
-         |w2 AS (${hop(2)}),
-         |w3 AS (${hop(3)})
-         |SELECT start, CAST(0 AS INT) AS step, cur AS node FROM w0
-         |UNION ALL SELECT start, 1, cur FROM w1
-         |UNION ALL SELECT start, 2, cur FROM w2
-         |UNION ALL SELECT start, 3, cur FROM w3
-         |ORDER BY start, step""".stripMargin
-    },
-
-    // directed-walk replay with dead ends: each hop CTE inner-joins the
-    // adjacency, so a walker at a sink simply stops contributing rows —
-    // exactly the left-join-freeze semantics of deterministicWalks
-    // (frozen walkers emit no further steps)
-    "graph_walks_directed" -> {
-      def hop(t: Int) =
-        s"""SELECT w${t - 1}.start,
-           |    a.nbrs[CAST(${Oracles.polyHash(s"(w${t - 1}.start || ':' || $t || ':' || w${t - 1}.cur)")} % length(a.nbrs) AS INT) + 1] AS cur
-           |  FROM w${t - 1} JOIN adj a ON w${t - 1}.cur = a.node""".stripMargin
-      s"""WITH e AS (
-         |  SELECT DISTINCT l_partkey % 200 AS src,
-         |    (l_partkey % 200) + (l_suppkey % 37) + 1 AS dst
-         |  FROM lineitem
-         |  WHERE (l_partkey % 200) + (l_suppkey % 37) + 1 <= 200),
-         |adj AS (SELECT src AS node, list(dst ORDER BY dst) AS nbrs FROM e GROUP BY 1),
-         |w0 AS (SELECT node AS start, node AS cur FROM adj),
-         |w1 AS (${hop(1)}),
-         |w2 AS (${hop(2)}),
-         |w3 AS (${hop(3)})
-         |SELECT start, CAST(0 AS INT) AS step, cur AS node FROM w0
-         |UNION ALL SELECT start, 1, cur FROM w1
-         |UNION ALL SELECT start, 2, cur FROM w2
-         |UNION ALL SELECT start, 3, cur FROM w3
-         |ORDER BY start, step""".stripMargin
-    },
-
-    "graph_triangles" ->
-      s"""WITH $minhashPairsCtes,
-         |e AS (SELECT DISTINCT id_a AS a, id_b AS b FROM mh_pairs),
-         |w AS (
-         |  SELECT e1.a AS a, e1.b AS b, e2.b AS c
-         |  FROM e e1 JOIN e e2 ON e1.a = e2.a AND e1.b < e2.b),
-         |tri AS (
-         |  SELECT w.a, w.b, w.c FROM w JOIN e e3 ON w.b = e3.a AND w.c = e3.b),
-         |corners AS (
-         |  SELECT a AS node FROM tri
-         |  UNION ALL SELECT b FROM tri
-         |  UNION ALL SELECT c FROM tri)
-         |SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
-         |FROM corners GROUP BY node ORDER BY node""".stripMargin,
-
-    "dedup_clusters" ->
-      s"""WITH RECURSIVE $minhashPairsCtes,
-         |edges AS (
-         |  SELECT id_a AS a, id_b AS b FROM mh_pairs
-         |  UNION SELECT id_b, id_a FROM mh_pairs
-         |  UNION SELECT id_a, id_a FROM mh_pairs
-         |  UNION SELECT id_b, id_b FROM mh_pairs),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
-         |SELECT a AS doc_id, min(b) AS cluster_id
-         |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
-
-    // replays the cluster CTE, then keep-best = row_number over
-    // (n_chars DESC, doc_id) per cluster
-    "dedup_keep_best" ->
-      s"""WITH RECURSIVE $minhashPairsCtes,
-         |edges AS (
-         |  SELECT id_a AS a, id_b AS b FROM mh_pairs
-         |  UNION SELECT id_b, id_a FROM mh_pairs
-         |  UNION SELECT id_a, id_a FROM mh_pairs
-         |  UNION SELECT id_b, id_b FROM mh_pairs),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         |clu AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a),
-         |j AS (
-         |  SELECT c.cluster_id, c.doc_id, d.n_chars
-         |  FROM clu c JOIN documents d USING (doc_id)),
-         |r AS (
-         |  SELECT cluster_id, doc_id, n_chars,
-         |    row_number() OVER (
-         |      PARTITION BY cluster_id ORDER BY n_chars DESC, doc_id) AS rn,
-         |    count(*) OVER (PARTITION BY cluster_id) AS n_docs
-         |  FROM j)
-         |SELECT cluster_id, doc_id AS keep_id, n_chars AS keep_quality, n_docs
-         |FROM r WHERE rn = 1 AND n_docs >= 2 ORDER BY cluster_id""".stripMargin,
-
-    // replays leakageSafeSplit: the dedup_clusters representative as the
-    // split key (singletons are their own rep), then the sample_split
-    // hash-threshold — hash-comparing every (doc_id, cluster_id, split)
-    // row checks the zero-cross-split-leakage invariant by construction,
-    // since any near-dup pair shares cluster_id and therefore split
-    "leakage_split" ->
-      s"""WITH RECURSIVE $minhashPairsCtes,
-         |edges AS (
-         |  SELECT id_a AS a, id_b AS b FROM mh_pairs
-         |  UNION SELECT id_b, id_a FROM mh_pairs
-         |  UNION SELECT id_a, id_a FROM mh_pairs
-         |  UNION SELECT id_b, id_b FROM mh_pairs),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         |cl AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a),
-         |d AS (
-         |  SELECT d0.doc_id, coalesce(cl.cluster_id, d0.doc_id) AS cluster_id
-         |  FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 0) d0
-         |  LEFT JOIN cl ON cl.doc_id = d0.doc_id)
-         |SELECT doc_id, cluster_id,
-         |  CASE WHEN ${Oracles.sampleBucket("CAST(cluster_id AS VARCHAR)", 1000)} < 800
-         |    THEN 'train' ELSE 'test' END AS split
-         |FROM d ORDER BY doc_id""".stripMargin,
-
-    // Same recursive-component chain as leakage_split; the fold is the
-    // cluster representative hashed mod 5.
-    "kfold_split" ->
-      s"""WITH RECURSIVE $minhashPairsCtes,
-         |edges AS (
-         |  SELECT id_a AS a, id_b AS b FROM mh_pairs
-         |  UNION SELECT id_b, id_a FROM mh_pairs
-         |  UNION SELECT id_a, id_a FROM mh_pairs
-         |  UNION SELECT id_b, id_b FROM mh_pairs),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         |cl AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a),
-         |d AS (
-         |  SELECT d0.doc_id, coalesce(cl.cluster_id, d0.doc_id) AS cluster_id
-         |  FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 0) d0
-         |  LEFT JOIN cl ON cl.doc_id = d0.doc_id)
-         |SELECT doc_id, cluster_id,
-         |  ${Oracles.sampleBucket("CAST(cluster_id AS VARCHAR)", 5)} AS fold
-         |FROM d ORDER BY doc_id""".stripMargin,
-
-    "dedup_simhash" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, list_transform(${Oracles.tokens("text")}, w -> ${Oracles.polyHash("w")}) AS th
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |shs AS (SELECT doc_id, ${Oracles.simhash("th", 16)} AS sh FROM toks),
-         |keyed AS (
-         |  SELECT doc_id, sh, t.chunk AS chunk, (sh >> (t.chunk * 4)) & 15 AS chunk_key
-         |  FROM shs CROSS JOIN (SELECT unnest(range(0, 4)) AS chunk) t)
-         |SELECT * FROM (
-         |  SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b,
-         |    CAST(bit_count(xor(x.sh, y.sh)) AS INTEGER) AS hamming
-         |  FROM keyed x JOIN keyed y
-         |    ON x.chunk = y.chunk AND x.chunk_key = y.chunk_key AND x.doc_id < y.doc_id)
-         |WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin,
-
-    "kmeans_assign" ->
-      s"""WITH $kmeansCtes
-         |SELECT vec_id, c AS cluster, round(cs, 6) AS cosine FROM a2
-         |ORDER BY vec_id""".stripMargin,
-
-    "sim_pq_topk" ->
-      s"""WITH ${pqCtes(m = 8, codes = 256, shortlist = 200)}
-         |SELECT query_id, rank, neighbor_id, cosine
-         |FROM rer WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // trains on the bootstrap slice, encodes the whole corpus — the
-    // frozen-codebook purity invariant sim_pq_indexed pins
-    "sim_pq_indexed" ->
-      s"""WITH ${pqCtes(m = 8, codes = 256, shortlist = 200,
-             trainWhere = "WHERE vec_id % 50 != 0")}
-         |SELECT query_id, rank, neighbor_id, cosine
-         |FROM rer WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    "sim_ivfpq_topk" -> ivfPqOracle(nlist = 16, nprobe = 8, m = 8,
-      codes = 256, shortlist = 200, k = 5),
-
-    // compaction folds dirs, never rows: the probe over the compacted
-    // (and retired-source) store must replay identically to the
-    // fragment-dir store — same corpus, same oracle
-    "ivfpq_compact" -> ivfPqOracle(nlist = 16, nprobe = 8, m = 8,
-      codes = 256, shortlist = 200, k = 5),
-
-    // streamed appendBatch ≡ batch append: assignment and ADC codes are
-    // pure functions of the vector against the frozen seeds/codebooks,
-    // so the oracle is the identical end-to-end replay
-    "stream_ivfpq_ingest" -> ivfPqOracle(nlist = 16, nprobe = 8, m = 8,
-      codes = 256, shortlist = 200, k = 5),
-
-    "ivfpq_revalidate" -> ivfPqRevalidateOracle(nlist = 16, m = 8,
-      codes = 256, k = 5, floor = 0.9, nps = Seq(2, 8), sls = Seq(20, 200)),
-
-    // drift arithmetic + grid choice + commit decision in one row; the
-    // replay covers the revalidate branch (see the query's scaladoc)
-    "ivfpq_maintain" -> ivfPqMaintainOracle(nlist = 16, m = 8, codes = 256,
-      k = 5, floor = 0.9, cosFloor = 0.22, maxFracBelow = 0.7,
-      nps = Seq(2, 8), sls = Seq(20, 200), cellBudget = 256,
-      fragments = 2, compactAbove = 1),
-
-    // the probe point comes from the replayed grid's scalar CTEs, never
-    // a hardcoded constant — mirroring the operator's committed default
-    "sim_ivfpq_committed" -> ivfPqCommittedProbeOracle(nlist = 16, m = 8,
-      codes = 256, k = 5, floor = 0.9, nps = Seq(2, 8), sls = Seq(20, 200)),
-
-    // the training corpus is the hash-sampled half; encoding and scoring
-    // cover the whole corpus — the sample derivation itself is replayed
-    "sim_pq_sampled" ->
-      s"""WITH ${pqCtes(m = 8, codes = 256, shortlist = 200,
-             trainWhere = "WHERE " + Oracles.sampleBucket(
-               "'pqs:' || CAST(vec_id AS VARCHAR)", 1000) + " < 500")}
-         |SELECT query_id, rank, neighbor_id, cosine
-         |FROM rer WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    "dedup_semantic" ->
-      s"""WITH $kmeansCtes
-         |SELECT * FROM (
-         |  SELECT x.vec_id AS id_a, y.vec_id AS id_b,
-         |    round(${Oracles.cosine("x.v", "y.v", 64)}, 6) AS cosine
-         |  FROM a2 x JOIN a2 y ON x.c = y.c AND x.vec_id < y.vec_id)
-         |WHERE cosine >= 0.3 ORDER BY id_a, id_b""".stripMargin,
-
-    "dedup_spans" -> {
-      val L = 8
-      s"""WITH toks AS (
-         |  SELECT doc_id, list_transform(${Oracles.tokens("text")}, w -> ${Oracles.polyHash("w")}) AS th
-         |  FROM documents),
-         |sp0 AS (
-         |  SELECT doc_id, len(th) AS n_tokens, th,
-         |    unnest(range(1, len(th) - ${L - 2})) AS i
-         |  FROM toks),
-         |sp AS (
-         |  SELECT doc_id, n_tokens, i,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(th, i, i + ${L - 1})),
-         |      (acc, h) -> (acc*31 + h) % ${Oracles.P}) AS span_hash
-         |  FROM sp0),
-         |dup AS (SELECT span_hash FROM sp GROUP BY span_hash HAVING count(DISTINCT doc_id) >= 2),
-         |ds AS (SELECT sp.doc_id, sp.n_tokens, sp.i AS s, sp.i + ${L - 1} AS e
-         |       FROM sp JOIN dup USING (span_hash)),
-         |m AS (SELECT doc_id, n_tokens, s, e,
-         |        max(e) OVER (PARTITION BY doc_id ORDER BY s
-         |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_e
-         |      FROM ds),
-         |cov AS (SELECT doc_id, n_tokens,
-         |          sum(greatest(0, e - greatest(s - 1, coalesce(prev_e, 0)))) AS dup_tokens
-         |        FROM m GROUP BY doc_id, n_tokens)
-         |SELECT doc_id, n_tokens, CAST(dup_tokens AS BIGINT) AS dup_tokens,
-         |  round(CAST(dup_tokens AS DOUBLE) / n_tokens, 6) AS dup_frac
-         |FROM cov ORDER BY doc_id""".stripMargin
-    },
-
-    // replays winnowPairs end-to-end: the dedup_spans span-hash kernel,
-    // min-of-4-window fingerprint selection (full windows only), distinct
-    // per-doc fps, df <= 50 pruning, pair join with shared >= 2, overlap
-    // over the PRUNED per-doc fingerprint counts
-    "dedup_winnow" -> {
-      val L = 8  // spanLen — must match the queries() call
-      val W = 4  // window
-      s"""WITH toks AS (
-         |  SELECT doc_id, list_transform(${Oracles.tokens("text")}, w -> ${Oracles.polyHash("w")}) AS th
-         |  FROM documents),
-         |sp0 AS (
-         |  SELECT doc_id, th,
-         |    unnest(range(1, len(th) - ${L - 2})) AS i
-         |  FROM toks),
-         |sp AS (
-         |  SELECT doc_id, i, count(*) OVER (PARTITION BY doc_id) AS n_spans,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT), list_slice(th, i, i + ${L - 1})),
-         |      (acc, h) -> (acc*31 + h) % ${Oracles.P}) AS span_hash
-         |  FROM sp0),
-         |fp0 AS (
-         |  SELECT doc_id, i, n_spans,
-         |    min(span_hash) OVER (PARTITION BY doc_id ORDER BY i
-         |      ROWS BETWEEN CURRENT ROW AND ${W - 1} FOLLOWING) AS fp
-         |  FROM sp),
-         |fps AS (SELECT DISTINCT doc_id, fp FROM fp0 WHERE i <= n_spans - ${W - 1}),
-         |dffp AS (SELECT fp FROM fps GROUP BY fp HAVING count(*) <= 50),
-         |kept AS (SELECT f.doc_id, f.fp FROM fps f JOIN dffp USING (fp)),
-         |nfp AS (SELECT doc_id, count(*) AS n_fp FROM kept GROUP BY doc_id),
-         |pairs AS (
-         |  SELECT x.doc_id AS id_a, y.doc_id AS id_b, count(*) AS shared_fps
-         |  FROM kept x JOIN kept y ON x.fp = y.fp AND x.doc_id < y.doc_id
-         |  GROUP BY 1, 2 HAVING count(*) >= 2)
-         |SELECT p.id_a, p.id_b, CAST(p.shared_fps AS BIGINT) AS shared_fps,
-         |  round(CAST(p.shared_fps AS DOUBLE) / least(a.n_fp, b.n_fp), 6) AS overlap
-         |FROM pairs p
-         |JOIN nfp a ON a.doc_id = p.id_a
-         |JOIN nfp b ON b.doc_id = p.id_b
-         |ORDER BY id_a, id_b""".stripMargin
-    },
-
-    "hard_negatives" ->
-      s"""WITH $kmeansCtes,
-         |q AS (SELECT vec_id, v, c FROM a2 WHERE vec_id < 8),
-         |pairs AS (
-         |  SELECT q.vec_id AS query_id, q.c AS query_cluster,
-         |    a2.vec_id AS neighbor_id, a2.c AS neighbor_cluster,
-         |    round(${Oracles.cosine("q.v", "a2.v", 64)}, 6) AS cosine
-         |  FROM q JOIN a2 ON a2.vec_id != q.vec_id AND a2.c != q.c)
-         |SELECT query_id, query_cluster, rank, neighbor_id, neighbor_cluster, cosine
-         |FROM (
-         |  SELECT *, row_number() OVER (
-         |    PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-         |  FROM pairs)
-         |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin,
-
-    "dedup_embedding" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |bk AS (SELECT vec_id, v, ${Oracles.hyperplaneBits("v", 64, 64)} AS bits FROM e),
-         |keyed AS (
-         |  SELECT vec_id, v, t.tbl AS tbl, ${Oracles.bucketFromBits("bits", "t.tbl", 8)} AS bucket
-         |  FROM bk CROSS JOIN (SELECT unnest(range(0, 8)) AS tbl) t),
-         |cand AS (
-         |  SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b, x.v AS va, y.v AS vb
-         |  FROM keyed x JOIN keyed y
-         |    ON x.tbl = y.tbl AND x.bucket = y.bucket AND x.vec_id < y.vec_id)
-         |SELECT * FROM (
-         |  SELECT id_a, id_b, round(${Oracles.cosine("va", "vb", 64)}, 6) AS cosine
-         |  FROM cand)
-         |WHERE cosine >= 0.3 ORDER BY id_a, id_b""".stripMargin,
-
-    // bits and tables are DERIVED inside the oracle from count(*) —
-    // mirrors Sizing.lshBits(n, perBucket=1) / lshTables exactly, then
-    // gates the plane count, the key width, and the table fan-out, so a
-    // drifted derivation breaks the hash
-    "dedup_embedding_auto" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |nl AS (SELECT GREATEST(8, LEAST(30,
-         |  CAST(ceil(log2(CAST(count(*) AS DOUBLE))) AS BIGINT))) AS bits FROM e),
-         |tb AS (SELECT bits, GREATEST(1, LEAST(8, 64 // bits)) AS tables FROM nl),
-         |bk AS (SELECT vec_id, v, bits,
-         |  ${Oracles.hyperplaneBitsDyn("v", "bits*tables", 64)} AS bl
-         |  FROM e CROSS JOIN tb),
-         |ke AS (SELECT vec_id, v, bits, bl,
-         |  unnest(range(0, (SELECT tables FROM tb))) AS tbl FROM bk),
-         |keyed AS (
-         |  SELECT vec_id, v, tbl,
-         |    ${Oracles.bucketFromBitsDyn("bl", "tbl", "bits")} AS bucket
-         |  FROM ke),
-         |cand AS (
-         |  SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b, x.v AS va, y.v AS vb
-         |  FROM keyed x JOIN keyed y
-         |    ON x.tbl = y.tbl AND x.bucket = y.bucket AND x.vec_id < y.vec_id)
-         |SELECT * FROM (
-         |  SELECT id_a, id_b, round(${Oracles.cosine("va", "vb", 64)}, 6) AS cosine
-         |  FROM cand)
-         |WHERE cosine >= 0.3 ORDER BY id_a, id_b""".stripMargin,
-
-    "sim_topk" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |q AS (SELECT * FROM e WHERE vec_id < 8)
-         |SELECT * FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    round(${Oracles.cosine("q.v", "c.v", 64)}, 6) AS cosine,
-         |    row_number() OVER (PARTITION BY q.vec_id
-         |      ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC, c.vec_id) AS rank
-         |  FROM e c JOIN q ON q.vec_id != c.vec_id)
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // Replays Quantize.int8 (same CASE scale=0 guard as embed_quantize),
-    // the per-vector integer stats, the fixed-shape double score in the
-    // IDENTICAL operation order as the Spark expression tree, the
-    // shortlist window, and the exact re-rank.
-    "sim_topk_int8" -> {
-      val dotCodes = "list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-        "list_transform(range(0, 64), i -> q.codes[i+1] * c.codes[i+1]))," +
-        " (a, v) -> a + v)"
-      def norm(p: String) =
-        s"sqrt($p.scale * $p.scale * $p.csq + 2.0 * $p.scale * $p.lo * $p.csum" +
-          s" + $p.d * $p.lo * $p.lo)"
-      val num = s"q.scale * c.scale * CAST($dotCodes AS DOUBLE) + " +
-        "q.scale * c.lo * q.csum + c.scale * q.lo * c.csum + q.d * q.lo * c.lo"
-      val denom = s"${norm("q")} * ${norm("c")}"
-      s"""WITH b AS (
-         |  SELECT vec_id, embedding,
-         |    CAST(list_aggregate(embedding, 'min') AS DOUBLE) AS lo,
-         |    (CAST(list_aggregate(embedding, 'max') AS DOUBLE)
-         |      - CAST(list_aggregate(embedding, 'min') AS DOUBLE)) / 255.0 AS scale
-         |  FROM embeddings),
-         |cd AS (
-         |  SELECT vec_id, embedding, lo, scale,
-         |    CASE WHEN scale = 0 THEN list_transform(embedding, v -> CAST(0 AS BIGINT))
-         |         ELSE list_transform(embedding, v ->
-         |           CAST(round((CAST(v AS DOUBLE) - lo) / scale) AS BIGINT)) END AS codes
-         |  FROM b),
-         |st AS (
-         |  SELECT vec_id, lo, scale, codes,
-         |    CAST(len(codes) AS DOUBLE) AS d,
-         |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT), codes),
-         |      (a, c) -> a + c) AS DOUBLE) AS csum,
-         |    CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(codes, c -> c * c)), (a, c) -> a + c) AS DOUBLE) AS csq
-         |  FROM cd),
-         |sl AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-         |        (CASE WHEN $denom = 0 THEN 0.0 ELSE ($num) / ($denom) END) DESC,
-         |        c.vec_id) AS srank
-         |    FROM st c JOIN st q ON q.vec_id < 8 AND q.vec_id != c.vec_id)
-         |  WHERE srank <= 20),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-         |SELECT * FROM (
-         |  SELECT sl.query_id, sl.neighbor_id,
-         |    round(${Oracles.cosine("qe.v", "ce.v", 64)}, 6) AS cosine,
-         |    row_number() OVER (PARTITION BY sl.query_id
-         |      ORDER BY round(${Oracles.cosine("qe.v", "ce.v", 64)}, 6) DESC,
-         |        sl.neighbor_id) AS rank
-         |  FROM sl
-         |  JOIN e ce ON ce.vec_id = sl.neighbor_id
-         |  JOIN e qe ON qe.vec_id = sl.query_id)
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-    },
-
-    "sim_ivf_topk" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e ORDER BY vec_id LIMIT 16),
-         |scored AS (
-         |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-         |  FROM e CROSS JOIN seeds s),
-         |assign AS (
-         |  SELECT vec_id, v, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM scored) WHERE rnk = 1),
-         |probes AS (
-         |  SELECT vec_id AS query_id, v AS qv, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM scored WHERE vec_id < 8) WHERE rnk <= 4),
-         |cand AS (
-         |  SELECT p.query_id, a.vec_id AS neighbor_id,
-         |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-         |  FROM assign a JOIN probes p ON a.cell_id = p.cell_id AND p.query_id != a.vec_id)
-         |SELECT * FROM (
-         |  SELECT query_id, neighbor_id, cosine,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-         |  FROM cand)
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // nlist is DERIVED inside the oracle — greatest(2, least(4096,
-    // count/64)) mirrors Sizing.ivfNlist exactly, then gates the seed set
-    // and probe fan-out, so a drifted derivation breaks the hash
-    "sim_ivf_auto" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |nl AS (SELECT GREATEST(2, LEAST(4096, CAST(count(*) AS BIGINT) // 64)) AS nlist FROM e),
-         |seeds AS (
-         |  SELECT cell_id, cv FROM (
-         |    SELECT vec_id AS cell_id, v AS cv,
-         |      row_number() OVER (ORDER BY vec_id) AS rn FROM e)
-         |  WHERE rn <= (SELECT nlist FROM nl)),
-         |scored AS (
-         |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-         |  FROM e CROSS JOIN seeds s),
-         |assign AS (
-         |  SELECT vec_id, v, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM scored) WHERE rnk = 1),
-         |probes AS (
-         |  SELECT vec_id AS query_id, v AS qv, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM scored WHERE vec_id < 8)
-         |  WHERE rnk <= LEAST(4, (SELECT nlist FROM nl))),
-         |cand AS (
-         |  SELECT p.query_id, a.vec_id AS neighbor_id,
-         |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-         |  FROM assign a JOIN probes p ON a.cell_id = p.cell_id AND p.query_id != a.vec_id)
-         |SELECT * FROM (
-         |  SELECT query_id, neighbor_id, cosine,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-         |  FROM cand)
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // identical to sim_ivf_topk except the seed set: centroids come from
-    // the BOOTSTRAP corpus (vec_id % 50 != 0) and are frozen across the
-    // delta append — the assignment formula itself is unchanged, which is
-    // exactly the frozen-centroid invariant the oracle pins
-    "sim_ivf_indexed" -> ivfIndexedOracle,
-
-    // the batch probe replays the SAME persisted-IVF arithmetic once per
-    // base vector and expands to the replicated query-id space — the
-    // distributed probe path must be row-identical to the broadcast one
-    "sim_ivf_batch" -> ivfBatchOracle,
-
-    // the IVF-PQ twin (r15 verdict #2): per-base ADC arithmetic replayed
-    // once and expanded — the distributed probe's narrow-cell-join +
-    // shuffle-hash ADC attach must be row-identical to the broadcast path
-    "sim_ivfpq_batch" -> ivfPqBatchOracle(nlist = 16, nprobe = 4, m = 8,
-      codes = 256, shortlist = 50, k = 5),
-
-    // the flat store's probe width comes from the replayed sweep's
-    // scalar CTE, not a constant — mirroring the committed default
-    "sim_ivf_committed" -> ivfCommittedProbeOracle(nlist = 16, k = 5,
-      floor = 0.9, nps = Seq(1, 2, 4, 8)),
-
-    // the capacity decision end to end: both sweep grids, the capacity
-    // signal, the count-derived target nlist, and the post-grow chosen
-    // point are all re-derived in SQL — a constant in neither side
-    "ivf_maintain_grow" -> ivfGrowMaintainOracle(oldNlist = 2, k = 5,
-      floor = 0.9, cosFloor = 0.22, maxFracBelow = 1.0,
-      nps = Seq(1, 2, 4, 8, 16), cellBudget = 64),
-
-    // the composition's grow-taken replay: both sweep grids (pre-grow
-    // and grown — seeds AND codebooks re-derived per arm), the capacity
-    // signal, the count-derived nlist, and the post-grow chosen point,
-    // all through the same generator the keep-branch oracle uses.
-    // fragments = 1: when grow is taken the SERVING lineage is the fresh
-    // bootstrap-only root; compactAbove = 0 = compaction off this run
-    "ivfpq_maintain_grow" -> ivfPqMaintainOracle(nlist = 2, m = 8,
-      codes = 16, k = 5, floor = 0.9, cosFloor = 0.22, maxFracBelow = 1.0,
-      nps = Seq(1, 2, 4, 8), sls = Seq(20, 200), cellBudget = 64,
-      fragments = 1, compactAbove = 0),
-
-    // the streaming ingest must be indistinguishable from the batch
-    // append — one oracle pins both
-    "stream_ivf_ingest" -> ivfIndexedOracle,
-
-    // balance replay: assignment is a pure function of the vector against
-    // the frozen bootstrap seeds (the invariant sim_ivf_indexed pins), so
-    // the oracle assigns the WHOLE corpus in one pass and aggregates
-    // per-cell occupancy; integer counts cast to BIGINT for the dtype gate
-    "ivf_balance" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-         |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT 16),
-         |scored AS (
-         |  SELECT e.vec_id, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-         |  FROM e CROSS JOIN seeds s),
-         |assign AS (
-         |  SELECT vec_id, cell_id FROM (
-         |    SELECT vec_id, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM scored) WHERE rnk = 1),
-         |per AS (SELECT cell_id, count(*) AS sz FROM assign GROUP BY cell_id)
-         |SELECT CAST(count(*) AS BIGINT) AS n_cells,
-         |  CAST(sum(sz) AS BIGINT) AS n_rows,
-         |  CAST(max(sz) AS BIGINT) AS max_cell,
-         |  round(CAST(max(sz) AS DOUBLE) * count(*) / sum(sz), 6) + 0 AS skew
-         |FROM per""".stripMargin,
-
-    // drift guard replay: same frozen bootstrap seeds as sim_ivf_indexed,
-    // best-cell cosine via the shared left-fold arithmetic (identical
-    // doubles, so the `< floor` comparison matches bit-for-bit), integer
-    // counts cast to BIGINT for the pandas-hash dtype gate
-    "ivf_reseed" -> ivfReseedOracle,
-
-    // the IVF-PQ reseed's REPORT is coarse-seed arithmetic only (same
-    // seed selection, same best-cosine fold), so the replay is identical
-    // — PQ codebook retraining has no footprint in this projection and
-    // is pinned by IvfPqIndexSpec + the rehearsal instead
-    "ivfpq_reseed" -> ivfReseedOracle,
-
-    "ivf_drift" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-         |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT 16),
-         |best AS (
-         |  SELECT d.vec_id, max(${Oracles.cosine("d.v", "s.cv", 64)}) AS best_cos
-         |  FROM (SELECT vec_id, v FROM e WHERE vec_id % 50 = 0) d
-         |  CROSS JOIN seeds s GROUP BY d.vec_id)
-         |SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-         |  CAST(sum(CASE WHEN best_cos < 0.22 THEN 1 ELSE 0 END) AS BIGINT) AS n_below,
-         |  round(CAST(sum(CASE WHEN best_cos < 0.22 THEN 1 ELSE 0 END) AS DOUBLE)
-         |    / count(*), 6) + 0 AS frac_below,
-         |  CAST(sum(CASE WHEN best_cos < 0.22 THEN 1 ELSE 0 END) AS DOUBLE)
-         |    > 0.25 * count(*) AS reseed_recommended
-         |FROM best""".stripMargin,
-
-    "embed_project" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |pr AS (SELECT vec_id, ${Oracles.projections("v", 8, 64)} AS pv FROM e)
-         |SELECT vec_id, ${(0 until 8).map(j => s"round(pv[${j + 1}], 6) AS p$j").mkString(", ")}
-         |FROM pr ORDER BY vec_id""".stripMargin,
-
-    // two-stage replay: projected-space candidate rank (crank <= 30 with
-    // the engine's exact tie-break), then full-space exact re-rank —
-    // identical doubles at both stages by the shared left-fold arithmetic
-    "sim_ann_projected" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |pr AS (SELECT vec_id, ${Oracles.projections("v", 16, 64)} AS pv FROM e),
-         |cand AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY ${Oracles.cosine("q.pv", "c.pv", 16)} DESC, c.vec_id) AS crank
-         |    FROM pr q JOIN pr c ON q.vec_id < 8 AND c.vec_id != q.vec_id)
-         |  WHERE crank <= 30),
-         |rer AS (
-         |  SELECT cand.query_id, cand.neighbor_id,
-         |    round(${Oracles.cosine("qe.v", "ne.v", 64)}, 6) AS cosine
-         |  FROM cand
-         |  JOIN e qe ON qe.vec_id = cand.query_id
-         |  JOIN e ne ON ne.vec_id = cand.neighbor_id)
-         |SELECT query_id, neighbor_id, cosine, rank FROM (
-         |  SELECT query_id, neighbor_id, cosine,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-         |  FROM rer)
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    "sim_ann_topk" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |bk AS (SELECT vec_id, v, ${Oracles.hyperplaneBits("v", 64, 64)} AS bits FROM e),
-         |keyed AS (
-         |  SELECT vec_id, v, t.tbl AS tbl, ${Oracles.bucketFromBits("bits", "t.tbl", 8)} AS bucket
-         |  FROM bk CROSS JOIN (SELECT unnest(range(0, 8)) AS tbl) t),
-         |cand AS (
-         |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    q.v AS qv, c.v AS cv
-         |  FROM keyed c JOIN keyed q
-         |    ON c.tbl = q.tbl AND c.bucket = q.bucket
-         |    AND q.vec_id < 8 AND q.vec_id != c.vec_id)
-         |SELECT * FROM (
-         |  SELECT query_id, neighbor_id,
-         |    round(${Oracles.cosine("qv", "cv", 64)}, 6) AS cosine,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY round(${Oracles.cosine("qv", "cv", 64)}, 6) DESC, neighbor_id) AS rank
-         |  FROM cand)
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // same hyperplane family, 4 tables; query buckets additionally probe
-    // every 1-bit flip (xor with 0 and each power of two)
-    "sim_ann_multiprobe" ->
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |bk AS (SELECT vec_id, v, ${Oracles.hyperplaneBits("v", 32, 64)} AS bits FROM e),
-         |keyed AS (
-         |  SELECT vec_id, v, t.tbl AS tbl, ${Oracles.bucketFromBits("bits", "t.tbl", 8)} AS bucket
-         |  FROM bk CROSS JOIN (SELECT unnest(range(0, 4)) AS tbl) t),
-         |qprobe AS (
-         |  SELECT vec_id, v, tbl, xor(bucket, m.m) AS bucket
-         |  FROM keyed CROSS JOIN (SELECT unnest([0, 1, 2, 4, 8, 16, 32, 64, 128]) AS m) m
-         |  WHERE vec_id < 8),
-         |cand AS (
-         |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    q.v AS qv, c.v AS cv
-         |  FROM keyed c JOIN qprobe q
-         |    ON c.tbl = q.tbl AND c.bucket = q.bucket
-         |    AND q.vec_id != c.vec_id)
-         |SELECT * FROM (
-         |  SELECT query_id, neighbor_id,
-         |    round(${Oracles.cosine("qv", "cv", 64)}, 6) AS cosine,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY round(${Oracles.cosine("qv", "cv", 64)}, 6) DESC, neighbor_id) AS rank
-         |  FROM cand)
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    // Integer-quantized weights make every dot product / squared norm
-    // exact 64-bit arithmetic — identical on both engines regardless of
-    // aggregation order; floats only in the final sqrt/divide.
-    "sim_sparse_topk" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS t FROM documents),
-         |bg AS (
-         |  SELECT doc_id,
-         |    unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS term
-         |  FROM toks WHERE len(t) >= 2),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM bg GROUP BY 1, 2),
-         |dfreq AS (
-         |  SELECT term, count(*) AS df FROM tf GROUP BY 1
-         |  HAVING count(*) <= (SELECT count(*) // 10 FROM documents)),
-         |post AS (
-         |  SELECT tf.doc_id, tf.term,
-         |    CAST(round(tf.tf * ln(CAST((SELECT count(*) FROM documents) AS DOUBLE)
-         |      / dfreq.df) * 1000) AS BIGINT) AS w
-         |  FROM tf JOIN dfreq ON tf.term = dfreq.term),
-         |norms AS (SELECT doc_id, CAST(sum(w * w) AS BIGINT) AS nsq FROM post GROUP BY 1),
-         |dots AS (
-         |  SELECT q.doc_id AS query_id, p.doc_id AS neighbor_id,
-         |    CAST(sum(q.w * p.w) AS BIGINT) AS dot
-         |  FROM post p JOIN post q ON p.term = q.term
-         |  WHERE q.doc_id % 97 = 0 AND p.doc_id != q.doc_id
-         |  GROUP BY 1, 2),
-         |scored AS (
-         |  SELECT d.query_id, d.neighbor_id,
-         |    round(d.dot / (sqrt(n.nsq) * sqrt(qn.nsq)), 6) AS cosine
-         |  FROM dots d
-         |  JOIN norms n ON n.doc_id = d.neighbor_id
-         |  JOIN norms qn ON qn.doc_id = d.query_id),
-         |r AS (SELECT *, row_number() OVER (
-         |  PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank FROM scored)
-         |SELECT query_id, rank, neighbor_id, cosine
-         |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    "text_stats" -> {
-      val markers = graft.operators.TextAnalysis.langMarkers
-      def inList(words: Seq[String]) = words.map(w => s"'$w'").mkString("[", ", ", "]")
-      val counts = markers.map { case (lang, ms) =>
-        s"len(list_filter(ltoks, x -> list_contains(${inList(ms)}, x))) AS c_$lang"
-      }.mkString(",\n    ")
-      val best = s"greatest(${markers.map("c_" + _._1).mkString(", ")})"
-      val langCase = markers.map { case (lang, _) =>
-        s"WHEN c_$lang = $best THEN '$lang'"
-      }.mkString(" ")
-      s"""WITH t AS (
-         |  SELECT doc_id, text,
-         |    ${Oracles.tokens("text")} AS toks,
-         |    ${Oracles.tokens("lower(text)")} AS ltoks,
-         |    length(text) AS nc
-         |  FROM documents),
-         |f AS (
-         |  SELECT doc_id,
-         |    len(toks) AS n_tokens, nc AS n_chars_measured,
-         |    nc - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS punct,
-         |    len(list_filter(ltoks, x -> list_contains(${inList(markers.flatMap(_._2))}, x))) AS stop,
-         |    $counts,
-         |    len(list_filter(string_split_regex(text, '[^A-Za-z0-9]+'), x -> x != '')) AS bpe_tokens,
-         |    ${Oracles.polyHash("text")} AS fingerprint
-         |  FROM t)
-         |SELECT doc_id, n_tokens, n_chars_measured,
-         |  round(CASE WHEN n_tokens > 0 THEN CAST(n_chars_measured - (n_tokens - 1) AS DOUBLE) / n_tokens ELSE 0.0 END, 4) AS avg_token_len,
-         |  round(CASE WHEN n_chars_measured > 0 THEN CAST(punct AS DOUBLE) / n_chars_measured ELSE 0.0 END, 4) AS punct_ratio,
-         |  round(CASE WHEN n_tokens > 0 THEN CAST(stop AS DOUBLE) / n_tokens ELSE 0.0 END, 4) AS stopword_ratio,
-         |  round(least(1.0, CASE WHEN n_tokens > 0 THEN 0.5 + CAST(stop AS DOUBLE) / n_tokens - CAST(punct AS DOUBLE) / greatest(n_chars_measured, 1) ELSE 0.0 END), 4) AS quality_score,
-         |  CASE WHEN $best <= 0 THEN 'und' $langCase ELSE 'und' END AS lang_pred,
-         |  bpe_tokens, fingerprint
-         |FROM f ORDER BY doc_id""".stripMargin
-    },
-
-    "corpus_clean" -> {
-      s"""WITH ${cleanGateCtes()},
-         |sole AS (
-         |  SELECT * FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
-         |    FROM kept) WHERE rn = 1),
-         |sh AS (SELECT doc_id, ${Oracles.shingleHashes("text", 3)} AS gs FROM sole),
-         |gr AS (SELECT doc_id, unnest(gs) AS g FROM sh),
-         |stop_g AS (SELECT g FROM gr GROUP BY g HAVING count(*) > 40),
-         |rg AS (SELECT doc_id, g FROM gr WHERE g NOT IN (SELECT g FROM stop_g)),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM rg a JOIN rg b ON a.g = b.g AND a.doc_id < b.doc_id),
-         |pairs AS (
-         |  SELECT id_a, id_b FROM (
-         |    SELECT c.id_a, c.id_b,
-         |      len(list_intersect(x.gs, y.gs)) AS inter, len(x.gs) AS la, len(y.gs) AS lb
-         |    FROM cand c JOIN sh x ON c.id_a = x.doc_id JOIN sh y ON c.id_b = y.doc_id)
-         |  WHERE round(CAST(inter AS DOUBLE) / (la + lb - inter), 6) >= 0.8),
-         |final AS (SELECT * FROM sole WHERE doc_id NOT IN (SELECT id_b FROM pairs))
-         |SELECT lang_pred, source, count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS tok_total,
-         |  round(CAST(sum(CAST(round(quality_score * 10000) AS BIGINT)) AS DOUBLE)
-         |    / count(*) / 10000.0, 4) AS avg_quality
-         |FROM final GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    },
-
-    // Incremental twin: gate both eras, dedup the delta against the
-    // history fingerprints, near-dup = the full MinHash-LSH sweep over
-    // (history ∪ delta) restricted to delta-involved pairs (id_b is the
-    // greatest id, so delta-involved == id_b above the cutoff — the same
-    // equality dedup_incr_lsh's oracle rests on).
-    "corpus_clean_incr" -> corpusCleanIncrOracle,
-
-    // The persisted-index composition must be INDISTINGUISHABLE from the
-    // re-signing one — same oracle, by construction.
-    "corpus_clean_incr_indexed" -> corpusCleanIncrOracle,
-
-    // the full-chain replay: gates -> exact dedup -> LSH -> policy ->
-    // decontam -> IVF semantic -> temperature mix -> shard packing
-    "pipeline_e2e_incr" -> pipelineE2eOracle,
-
-    // the gate's committed nprobe comes from the replayed sweep grid
-    // (bootstrap-view corpus, k=5, floor 0.9); the lag columns replay the
-    // declared ledger history — bootstrap commits gen 0, the maintain
-    // stamp records op.gen = 0, the later append advances the watermark
-    // to gen 1, so lag = 1 - 0 and the gate fires
-    "index_staleness_gate" ->
-      s"""WITH $ivfStaleGridCtes
-         |SELECT CAST(gcnp.npv AS INTEGER) AS nprobe,
-         |  CAST(0 AS BIGINT) AS op_gen, CAST(1 AS BIGINT) AS committed_gen,
-         |  CAST(1 - 0 AS BIGINT) AS lag, (1 - 0) > 0 AS maintenance_due
-         |FROM gcnp""".stripMargin,
-
-    // the fleet walk's replay: the two IVF rows' committed nprobe comes
-    // from the SAME replayed sweep grid the staleness gate uses (both
-    // stores stamp the identical sweep on the history corpus); the lag /
-    // gen columns replay each store's declared ledger history (fresh:
-    // stamp at gen 0, watermark 0; stale: stamp at gen 0, watermark 1);
-    // and the text store's fragment count is re-derived from the DATA —
-    // one committed generation per distinct source family of the sample,
-    // so fragments = count(DISTINCT source) and the compaction decision
-    // compares that count against the declared maxFragments = 1
-    "fleet_report" ->
-      s"""WITH $ivfStaleGridCtes,
-         |src AS (SELECT CAST(count(DISTINCT source) AS BIGINT) AS nsrc
-         |  FROM documents WHERE doc_id % 10 = 0)
-         |SELECT * FROM (
-         |  SELECT 'sem-ivf-fresh' AS store, 'ivf' AS kind,
-         |    CAST(0 AS BIGINT) AS committed_gen,
-         |    CAST(-1 AS BIGINT) AS compacted_through,
-         |    CAST(1 AS BIGINT) AS fragments, CAST(0 AS BIGINT) AS op_gen,
-         |    CAST(0 AS BIGINT) AS lag, CAST(gcnp.npv AS INTEGER) AS nprobe,
-         |    0 > 0 AS point_stale, 1 > 1 AS compaction_due,
-         |    (0 > 0) OR (1 > 1) AS maintenance_due
-         |  FROM gcnp
-         |  UNION ALL
-         |  SELECT 'sem-ivf-stale', 'ivf', CAST(1 AS BIGINT),
-         |    CAST(-1 AS BIGINT), CAST(2 AS BIGINT), CAST(0 AS BIGINT),
-         |    CAST(1 - 0 AS BIGINT), CAST(gcnp.npv AS INTEGER),
-         |    (1 - 0) > 0, 2 > 1, ((1 - 0) > 0) OR (2 > 1)
-         |  FROM gcnp
-         |  UNION ALL
-         |  SELECT 'text-postings', 'inverted', src.nsrc - 1,
-         |    CAST(-1 AS BIGINT), src.nsrc, CAST(NULL AS BIGINT),
-         |    CAST(NULL AS BIGINT), CAST(NULL AS INTEGER),
-         |    false, src.nsrc > 1, src.nsrc > 1
-         |  FROM src)
-         |ORDER BY store""".stripMargin,
-
-    // the closed fleet loop's replay: the skipped healthy row carries
-    // its STANDING stamp (the same history-corpus grid gcnp the
-    // fleet_report oracle derives); the acted IVF row replays the
-    // POST-ACTION sweep — the full-corpus grid f* below, the identical
-    // arithmetic the sim_ivf_committed oracle uses — including the
-    // cleared/committed decision branch (an uncleared sweep leaves the
-    // gen-0 stamp standing, lag stays 1, and due_after must stay true:
-    // never silent health), with the gen-0 stamp's fallback value being
-    // the max of the same declared sweep list, not a free constant; the
-    // text row's fragment fold is re-derived from count(DISTINCT source)
-    "fleet_maintain" ->
-      s"""WITH $ivfStaleGridCtes,
-         |fscored AS (
-         |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-         |  FROM e CROSS JOIN seeds s),
-         |fassign AS (
-         |  SELECT vec_id, v, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM fscored) WHERE rnk = 1),
-         |fprobes AS (
-         |  SELECT vec_id AS query_id, v AS qv, cell_id, rnk AS prnk FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM fscored WHERE vec_id < 8) WHERE rnk <= 16),
-         |fst AS (SELECT * FROM (VALUES (1), (2), (4), (8), (16)) AS t(np)),
-         |fcand AS (
-         |  SELECT fst.np, p.query_id, a.vec_id AS neighbor_id,
-         |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-         |  FROM fst JOIN fprobes p ON p.prnk <= fst.np
-         |  JOIN fassign a ON a.cell_id = p.cell_id AND p.query_id != a.vec_id),
-         |fannk AS (
-         |  SELECT np, query_id, neighbor_id FROM (
-         |    SELECT np, query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY np, query_id
-         |        ORDER BY cosine DESC, neighbor_id) AS rank
-         |    FROM fcand) WHERE rank <= 5),
-         |fexact AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC,
-         |          c.vec_id) AS rank
-         |    FROM e c JOIN (SELECT * FROM e WHERE vec_id < 8) q
-         |      ON q.vec_id != c.vec_id) WHERE rank <= 5),
-         |fhits AS (
-         |  SELECT fst.np, ex.query_id, count(a.neighbor_id) AS nhit
-         |  FROM fst CROSS JOIN fexact ex
-         |  LEFT JOIN fannk a ON a.np = fst.np
-         |    AND a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-         |  GROUP BY 1, 2),
-         |fgrid AS (
-         |  SELECT np, round(avg(nhit / CAST(5 AS DOUBLE)), 4) AS recall
-         |  FROM fhits GROUP BY 1),
-         |fcl AS (SELECT EXISTS(SELECT 1 FROM fgrid WHERE recall >= 0.9) AS ok),
-         |fcnp AS (SELECT coalesce((SELECT min(np) FROM fgrid WHERE recall >= 0.9),
-         |  (SELECT max(np) FROM fgrid)) AS fnp),
-         |src AS (SELECT CAST(count(DISTINCT source) AS BIGINT) AS nsrc
-         |  FROM documents WHERE doc_id % 10 = 0)
-         |SELECT * FROM (
-         |  SELECT 'sem-ivf-fresh' AS store, 'ivf' AS kind,
-         |    false AS maintenance_due,
-         |    CAST(0 AS BIGINT) AS lag_before, CAST(0 AS BIGINT) AS lag_after,
-         |    CAST(1 AS BIGINT) AS fragments_before,
-         |    CAST(1 AS BIGINT) AS fragments_after,
-         |    CAST(gcnp.npv AS INTEGER) AS nprobe, false AS due_after
-         |  FROM gcnp
-         |  UNION ALL
-         |  SELECT 'sem-ivf-stale', 'ivf', true,
-         |    CAST(1 AS BIGINT),
-         |    CASE WHEN fcl.ok THEN CAST(0 AS BIGINT) ELSE CAST(1 AS BIGINT) END,
-         |    CAST(2 AS BIGINT), CAST(1 AS BIGINT),
-         |    CAST(CASE WHEN fcl.ok THEN fcnp.fnp
-         |         ELSE (SELECT max(np) FROM fst) END AS INTEGER),
-         |    NOT fcl.ok
-         |  FROM fcl, fcnp
-         |  UNION ALL
-         |  SELECT 'text-postings', 'inverted', true,
-         |    CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-         |    src.nsrc, CAST(1 AS BIGINT), CAST(NULL AS INTEGER), false
-         |  FROM src)
-         |ORDER BY store""".stripMargin,
-
-    "token_shards" ->
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    CAST(len(${Oracles.tokens("lower(text)")}) AS BIGINT) AS n_tok
-         |  FROM documents),
-         |c AS (
-         |  SELECT doc_id, n_tok, CAST(coalesce(sum(n_tok) OVER (
-         |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS pre
-         |  FROM d)
-         |SELECT pre // 4096 AS shard_id, count(*) AS n_docs,
-         |  CAST(sum(n_tok) AS BIGINT) AS n_tokens, min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         |FROM c GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "pack_sequences" ->
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    CAST(len(${Oracles.tokens("lower(text)")}) AS BIGINT) AS n_tok
-         |  FROM documents),
-         |c AS (
-         |  SELECT doc_id, n_tok, CAST(coalesce(sum(n_tok) OVER (
-         |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS s
-         |  FROM d),
-         |p AS (
-         |  SELECT doc_id, n_tok, s,
-         |    unnest(generate_series(s // 512, (s + n_tok - 1) // 512)) AS seq_id
-         |  FROM c WHERE n_tok > 0)
-         |SELECT doc_id, seq_id,
-         |  GREATEST(s, seq_id * 512) - seq_id * 512 AS off_in_seq,
-         |  LEAST((seq_id + 1) * 512, s + n_tok) - GREATEST(s, seq_id * 512) AS piece_len
-         |FROM p ORDER BY doc_id, seq_id""".stripMargin,
-
-    // the oracle is the FULL repack filtered to the delta docs — the
-    // incremental path must be indistinguishable from it
-    "pack_incremental" ->
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    CAST(len(${Oracles.tokens("lower(text)")}) AS BIGINT) AS n_tok
-         |  FROM documents),
-         |c AS (
-         |  SELECT doc_id, n_tok, CAST(coalesce(sum(n_tok) OVER (
-         |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS s
-         |  FROM d),
-         |p AS (
-         |  SELECT doc_id, n_tok, s,
-         |    unnest(generate_series(s // 512, (s + n_tok - 1) // 512)) AS seq_id
-         |  FROM c WHERE n_tok > 0)
-         |SELECT doc_id, seq_id,
-         |  GREATEST(s, seq_id * 512) - seq_id * 512 AS off_in_seq,
-         |  LEAST((seq_id + 1) * 512, s + n_tok) - GREATEST(s, seq_id * 512) AS piece_len
-         |FROM p
-         |WHERE doc_id >= (SELECT max(doc_id) - 49 FROM documents)
-         |ORDER BY doc_id, seq_id""".stripMargin,
-
-    // Length-bucketed batches: rn is the bucket-local row number in id
-    // order (the two-level prefix's single-window equivalent), batches
-    // of 8, waste = per-batch padding to the batch max.
-    "batch_padding" ->
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    CAST(len(${Oracles.tokens("lower(text)")}) AS BIGINT) AS n_tok
-         |  FROM documents),
-         |b AS (
-         |  SELECT doc_id, n_tok, n_tok // 16 AS bucket,
-         |    row_number() OVER (PARTITION BY n_tok // 16 ORDER BY doc_id) - 1 AS rn
-         |  FROM d),
-         |bt AS (
-         |  SELECT bucket, rn // 8 AS batch, count(*) AS n,
-         |    max(n_tok) AS mx, CAST(sum(n_tok) AS BIGINT) AS s
-         |  FROM b GROUP BY 1, 2)
-         |SELECT bucket, CAST(sum(n) AS BIGINT) AS n_docs,
-         |  count(*) AS n_batches, CAST(sum(s) AS BIGINT) AS tok_total,
-         |  CAST(sum(mx * n - s) AS BIGINT) AS pad_total,
-         |  round(CAST(sum(s) AS DOUBLE) / nullif(sum(s) + sum(mx * n - s), 0), 4)
-         |    AS fill_ratio
-         |FROM bt GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    // The assignment frame: bucket-local row number in id order, batch =
-    // rn // 8 — the single-window equivalent of the two-level prefix.
-    "batch_assign" ->
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    CAST(len(${Oracles.tokens("lower(text)")}) AS BIGINT) AS n_tok
-         |  FROM documents)
-         |SELECT doc_id, n_tok, n_tok // 16 AS bucket,
-         |  (row_number() OVER (PARTITION BY n_tok // 16 ORDER BY doc_id) - 1) // 8
-         |    AS batch_in_bucket
-         |FROM d
-         |ORDER BY bucket, batch_in_bucket, doc_id""".stripMargin,
-
-    "sql_kernels" -> {
-      val th = s"list_transform(${Oracles.tokens("text")}, t -> ${Oracles.polyHash("t")})"
-      s"""SELECT doc_id,
-         |  ${Oracles.polyHash("text")} AS fp,
-         |  ${Oracles.simhash(th, 16)} AS sh,
-         |  len(${Oracles.tokens("text")}) AS n_tok,
-         |  len(${Oracles.shingleHashes("text", 3)}) AS n_shingles
-         |FROM documents ORDER BY doc_id""".stripMargin
-    },
-
-    "seq_source" ->
-      s"""WITH s AS (
-         |  SELECT i AS id, CAST(i % 97 AS INT) AS bucket,
-         |    CAST((i*1103515245 + 12345) % 2147483648 AS DOUBLE)
-         |      / CAST(2147483648 AS DOUBLE) AS val
-         |  FROM generate_series(25000, 74999) t(i))
-         |SELECT bucket, count(*) AS n, round(sum(val), 2) AS total,
-         |  min(id) AS min_id, max(id) AS max_id
-         |FROM s GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    "vocab_oov" ->
-      s"""WITH tk AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (SELECT term, count(*) AS tf FROM tk GROUP BY term),
-         |vocab AS (SELECT term FROM tf ORDER BY tf DESC, term LIMIT 500),
-         |j AS (
-         |  SELECT t.doc_id, CASE WHEN v.term IS NULL THEN 1 ELSE 0 END AS oov
-         |  FROM tk t LEFT JOIN vocab v ON t.term = v.term)
-         |SELECT doc_id, count(*) AS n_tok, CAST(sum(oov) AS BIGINT) AS n_oov,
-         |  round(CAST(sum(oov) AS DOUBLE) / count(*), 4) AS oov_rate
-         |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "doc_repetition" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, text,
-         |    greatest(length(text) - 4, 0) AS n_grams,
-         |    len(${Oracles.shingleHashes("text", 5)}) AS n_distinct_grams,
-         |    len(${Oracles.tokens("text")}) AS n_tok,
-         |    len(list_distinct(${Oracles.tokens("text")})) AS n_distinct_tok
-         |  FROM documents)
-         |SELECT doc_id, n_grams, n_distinct_grams,
-         |  round(CASE WHEN n_grams > 0
-         |    THEN CAST(1.0 AS DOUBLE) - CAST(n_distinct_grams AS DOUBLE) / n_grams
-         |    ELSE 0.0 END, 4) AS gram_rep_ratio,
-         |  n_tok, n_distinct_tok,
-         |  round(CASE WHEN n_tok > 0
-         |    THEN CAST(1.0 AS DOUBLE) - CAST(n_distinct_tok AS DOUBLE) / n_tok
-         |    ELSE 0.0 END, 4) AS tok_rep_ratio
-         |FROM t ORDER BY doc_id""".stripMargin,
-
-    "decontam_overlap" ->
-      s"""WITH b AS (
-         |  SELECT doc_id AS bench_id, unnest(${Oracles.shingleHashes("text", 8)}) AS g
-         |  FROM documents WHERE doc_id % 50 = 0),
-         |t AS (
-         |  SELECT doc_id AS train_id, unnest(${Oracles.shingleHashes("text", 8)}) AS g
-         |  FROM documents WHERE doc_id % 50 <> 0)
-         |SELECT t.train_id, b.bench_id, count(*) AS n_shared
-         |FROM t JOIN b ON t.g = b.g
-         |GROUP BY t.train_id, b.bench_id HAVING count(*) >= 5
-         |ORDER BY t.train_id, b.bench_id""".stripMargin,
-
-    "doc_chunks" ->
-      s"""WITH t AS (SELECT doc_id, ${Oracles.tokens("text")} AS toks FROM documents),
-         |n AS (SELECT doc_id, toks, len(toks) AS n_tok FROM t WHERE len(toks) > 0),
-         |c AS (SELECT doc_id, toks, unnest(range(0, n_tok, 24)) AS chunk_start FROM n),
-         |sl AS (SELECT doc_id, chunk_start // 24 AS chunk_idx, chunk_start,
-         |         list_slice(toks, chunk_start + 1, chunk_start + 32) AS chunk FROM c)
-         |SELECT doc_id, chunk_idx, chunk_start, len(chunk) AS chunk_len,
-         |  ${Oracles.polyHash("array_to_string(chunk, ' ')")} AS chunk_hash
-         |FROM sl ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    "pii_scrub" -> {
-      // one source of truth: the SQL stages replay TextAnalysis.piiPatterns
-      // in order (duckdb needs the explicit 'g' flag Spark implies)
-      val stages = graft.operators.TextAnalysis.piiPatterns.zipWithIndex.map {
-        case ((name, re, repl), i) =>
-          val keep = (Seq("doc_id", "source") ++
-            graft.operators.TextAnalysis.piiPatterns.take(i).map("n_" + _._1))
-            .mkString(", ")
-          s"""s${i + 1} AS (SELECT $keep,
-             |  len(regexp_extract_all(t$i, '$re')) AS n_$name,
-             |  regexp_replace(t$i, '$re', '$repl', 'g') AS t${i + 1} FROM s$i)"""
-            .stripMargin
-      }.mkString(",\n")
-      val last = graft.operators.TextAnalysis.piiPatterns.size
-      s"""WITH s0 AS (
-         |  SELECT doc_id, source, text ||
-         |    CASE WHEN doc_id % 7 = 0
-         |      THEN ' contact' || CAST(doc_id AS VARCHAR) || '@example.com'
-         |      ELSE '' END ||
-         |    CASE WHEN doc_id % 11 = 0 THEN ' call 555-123-4567' ELSE '' END AS t0
-         |  FROM documents),
-         |$stages
-         |SELECT source, count(*) AS n_docs,
-         |  CAST(sum(n_email) AS BIGINT) AS emails,
-         |  CAST(sum(n_phone) AS BIGINT) AS phones,
-         |  CAST(sum(n_ip) AS BIGINT) AS ips,
-         |  CAST(sum(${Oracles.polyHash(s"t$last")}) AS BIGINT) AS scrub_checksum
-         |FROM s$last GROUP BY source ORDER BY source""".stripMargin
-    },
-
-    "embed_quantize" ->
-      s"""WITH b AS (
-         |  SELECT vec_id, embedding,
-         |    CAST(list_aggregate(embedding, 'min') AS DOUBLE) AS lo,
-         |    CAST(list_aggregate(embedding, 'max') AS DOUBLE) AS hi
-         |  FROM embeddings),
-         |sc AS (SELECT vec_id, embedding, lo, hi, (hi - lo) / 255.0 AS scale FROM b),
-         |cd AS (SELECT vec_id, embedding, lo, hi, scale,
-         |  CASE WHEN scale = 0 THEN list_transform(embedding, v -> CAST(0 AS BIGINT))
-         |       ELSE list_transform(embedding, v ->
-         |         CAST(round((CAST(v AS DOUBLE) - lo) / scale) AS BIGINT)) END AS codes
-         |  FROM sc)
-         |SELECT vec_id,
-         |  round(lo, 6) + 0 AS q_lo,
-         |  round(hi, 6) + 0 AS q_hi,
-         |  round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |    list_transform(range(0, len(embedding)), i ->
-         |      abs(CAST(codes[i+1] AS DOUBLE) * scale + lo
-         |        - CAST(embedding[i+1] AS DOUBLE)))),
-         |    (a, x) -> a + x) / len(embedding), 6) AS q_err,
-         |  ${Oracles.polyHash("array_to_string(codes, ',')")} AS codes_hash
-         |FROM cd ORDER BY vec_id""".stripMargin,
-
-    "pagerank" -> {
-      val iters = 3
-      val rounds = (1 to iters).map { i =>
-        s"""r$i AS (
-           |  SELECT e.dst AS node, round(CAST(0.15 AS DOUBLE) / (SELECT n FROM nn) +
-           |    0.85 * sum(r.score / d.out_deg), 9) AS score
-           |  FROM edges e JOIN r${i - 1} r ON e.src = r.node
-           |  JOIN deg d ON e.src = d.src
-           |  GROUP BY e.dst)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH pairs AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem),
-         |edges AS (SELECT p*2 AS src, sk*2+1 AS dst FROM pairs
-         |          UNION ALL SELECT sk*2+1, p*2 FROM pairs),
-         |deg AS (SELECT src, count(*) AS out_deg FROM edges GROUP BY src),
-         |nn AS (SELECT count(*) AS n FROM deg),
-         |r0 AS (SELECT src AS node, CAST(1.0 AS DOUBLE) / (SELECT n FROM nn) AS score
-         |       FROM deg),
-         |$rounds
-         |SELECT d.src AS node, d.out_deg, r$iters.score
-         |FROM deg d JOIN r$iters ON d.src = r$iters.node ORDER BY node""".stripMargin
-    },
-
-    // conjunctive index search replay: tf per (doc, query term), AND =
-    // both terms present, rank = summed tf
-    "text_search" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks
-         |  WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
-         |hit AS (
-         |  SELECT doc_id, count(DISTINCT term) AS m, sum(tf) AS s
-         |  FROM tf GROUP BY 1)
-         |SELECT doc_id, CAST(s AS BIGINT) AS tf_sum FROM hit
-         |WHERE m = 2 ORDER BY doc_id""".stripMargin,
-
-    // adjacency phrase replay: 1-based token positions via range() over
-    // the token list, adjacency = a.pos + 1 = b.pos
-    "text_phrase" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS tk FROM documents),
-         |px AS (
-         |  SELECT doc_id, tk, unnest(range(1, length(tk) + 1)) AS pos FROM tok),
-         |terms AS (
-         |  SELECT doc_id, CAST(pos AS INT) AS pos, tk[CAST(pos AS INT)] AS term
-         |  FROM px)
-         |SELECT a.doc_id, CAST(count(*) AS INT) AS n_occurrences
-         |FROM terms a JOIN terms b
-         |  ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-         |WHERE a.term = 'key' AND b.term = 'order'
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // incremental ingest must be exactly the full-corpus search result
-    "text_search_incr" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks
-         |  WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
-         |hit AS (
-         |  SELECT doc_id, count(DISTINCT term) AS m, sum(tf) AS s
-         |  FROM tf GROUP BY 1)
-         |SELECT doc_id, CAST(s AS BIGINT) AS tf_sum FROM hit
-         |WHERE m = 2 ORDER BY doc_id""".stripMargin,
-
-    // streaming ingest must be indistinguishable from the batch build
-    "stream_index_ingest" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks
-         |  WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
-         |hit AS (
-         |  SELECT doc_id, count(DISTINCT term) AS m, sum(tf) AS s
-         |  FROM tf GROUP BY 1)
-         |SELECT doc_id, CAST(s AS BIGINT) AS tf_sum FROM hit
-         |WHERE m = 2 ORDER BY doc_id""".stripMargin,
-
-    // proximity replay: each 'key' occurrence counted once when some
-    // 'order' follows within 3 tokens
-    "text_near" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS tk FROM documents),
-         |px AS (
-         |  SELECT doc_id, tk, unnest(range(1, length(tk) + 1)) AS pos FROM tok),
-         |terms AS (
-         |  SELECT doc_id, CAST(pos AS INT) AS pos, tk[CAST(pos AS INT)] AS term
-         |  FROM px),
-         |hits AS (
-         |  SELECT DISTINCT a.doc_id, a.pos
-         |  FROM terms a JOIN terms b
-         |    ON a.doc_id = b.doc_id AND b.pos > a.pos AND b.pos <= a.pos + 3
-         |  WHERE a.term = 'key' AND b.term = 'order')
-         |SELECT doc_id, CAST(count(*) AS INT) AS n_occurrences
-         |FROM hits GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // the generation-0 snapshot is exactly the bootstrap half
-    "text_search_asof" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents WHERE doc_id < 250),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks
-         |  WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
-         |hit AS (
-         |  SELECT doc_id, count(DISTINCT term) AS m, sum(tf) AS s
-         |  FROM tf GROUP BY 1)
-         |SELECT doc_id, CAST(s AS BIGINT) AS tf_sum FROM hit
-         |WHERE m = 2 ORDER BY doc_id""".stripMargin,
-
-    "text_prefix" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2)
-         |SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS total_tf
-         |FROM tf WHERE term LIKE 's%' GROUP BY 1 ORDER BY term""".stripMargin,
-
-    "inverted_stats" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2)
-         |SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS total_tf,
-         |  CAST(max(tf) AS INT) AS max_tf
-         |FROM tf GROUP BY 1 ORDER BY df DESC, term""".stripMargin,
-
-    // same replay as text_search: the lead-rarest plan must be
-    // result-identical to the aggregation plan
-    "text_search_lead" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks
-         |  WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
-         |hit AS (
-         |  SELECT doc_id, count(DISTINCT term) AS m, sum(tf) AS s
-         |  FROM tf GROUP BY 1)
-         |SELECT doc_id, CAST(s AS BIGINT) AS tf_sum FROM hit
-         |WHERE m = 2 ORDER BY doc_id""".stripMargin,
-
-    // co-occurrence replay: ordered pairs within gap 1..2 via a
-    // positions self-join (the oracle may be corpus-shaped; the engine
-    // plan may not), PMI in the same association order
-    "cooccurrence_pmi" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS tk FROM documents),
-         |n AS (SELECT CAST(sum(length(tk)) AS BIGINT) AS n_tokens FROM tok),
-         |px AS (
-         |  SELECT doc_id, tk, unnest(range(1, length(tk) + 1)) AS pos FROM tok),
-         |terms AS (
-         |  SELECT doc_id, CAST(pos AS INT) AS pos, tk[CAST(pos AS INT)] AS term
-         |  FROM px),
-         |uni AS (SELECT term, count(*) AS c FROM terms GROUP BY 1),
-         |pairs AS (
-         |  SELECT a.term AS term_a, b.term AS term_b, count(*) AS c_ab
-         |  FROM terms a JOIN terms b
-         |    ON a.doc_id = b.doc_id AND b.pos > a.pos AND b.pos <= a.pos + 2
-         |  GROUP BY 1, 2 HAVING count(*) >= 2)
-         |SELECT term_a, term_b, CAST(c_ab AS BIGINT) AS c_ab,
-         |  round(ln(CAST(c_ab * (SELECT n_tokens FROM n) AS DOUBLE) /
-         |    (ua.c * ub.c)), 4) AS pmi
-         |FROM pairs
-         |JOIN uni ua ON pairs.term_a = ua.term
-         |JOIN uni ub ON pairs.term_b = ub.term
-         |ORDER BY term_a, term_b""".stripMargin,
-
-    // BM25 replay (k1=1.2, b=0.75): the per-(term, doc) partial score is
-    // the same double expression tree as InvertedIndex.bm25, snapped to
-    // integer micro-units BEFORE the per-doc sum — long addition is
-    // order-independent, so the oracle is bit-exact at ANY term count
-    // (the old double sum was only pinned up to two terms)
-    "text_bm25" -> bm25OracleSql(Seq("dup", "vector"), 15),
-
-    // RRF fusion: replay the BM25 arm (same CTEs as text_bm25, top-30,
-    // ranked by the 4-digit presentation score — the engine ranks the
-    // returned list the same way), the exact-cosine arm (sim_topk's
-    // arithmetic, query = vec 0, top-30), then the rank-only fusion with
-    // the reciprocal terms added in the engine's fixed order.
-    "hybrid_search_rrf" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS tk FROM documents),
-         |meta AS (
-         |  SELECT count(*) AS n, CAST(sum(length(tk)) AS DOUBLE) / count(*) AS avgdl
-         |  FROM tok),
-         |toks AS (
-         |  SELECT doc_id, length(tk) AS doc_len, unnest(tk) AS term FROM tok),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf, any_value(doc_len) AS doc_len
-         |  FROM toks WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
-         |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |scored AS (
-         |  SELECT tf.doc_id,
-         |    sum(CAST(floor(ln(1.0 + (meta.n - dfreq.df + 0.5) / (dfreq.df + 0.5)) *
-         |        ((tf.tf * 2.2) /
-         |         (tf.tf + 1.2 * (0.25 + 0.75 * (tf.doc_len / meta.avgdl)))) *
-         |        1000000.0 + 0.5) AS BIGINT)) AS su
-         |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN meta
-         |  GROUP BY 1),
-         |ttop AS (SELECT doc_id, su FROM scored ORDER BY su DESC, doc_id LIMIT 30),
-         |tarm AS (
-         |  SELECT doc_id, CAST(row_number() OVER (
-         |    ORDER BY round(su / 1000000.0, 4) DESC, doc_id) AS INT) AS r_text
-         |  FROM ttop),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |q AS (SELECT * FROM e WHERE vec_id = 0),
-         |varm AS (
-         |  SELECT doc_id, r_vec FROM (
-         |    SELECT c.vec_id AS doc_id, CAST(row_number() OVER (
-         |      ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC,
-         |        c.vec_id) AS INT) AS r_vec
-         |    FROM e c JOIN q ON q.vec_id != c.vec_id)
-         |  WHERE r_vec <= 30),
-         |f AS (
-         |  SELECT coalesce(t.doc_id, v.doc_id) AS doc_id, t.r_text, v.r_vec,
-         |    round(coalesce(CAST(1.0 AS DOUBLE) / (60 + t.r_text), 0.0) +
-         |          coalesce(CAST(1.0 AS DOUBLE) / (60 + v.r_vec), 0.0), 6) AS rrf
-         |  FROM tarm t FULL OUTER JOIN varm v ON t.doc_id = v.doc_id)
-         |SELECT doc_id, r_text, r_vec, rrf FROM f
-         |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin,
-
-    // the production hybrid: same BM25-arm replay, but the vector arm is
-    // the persisted IVF probe — full-corpus seeds (lowest-16 vec_ids),
-    // argmax-cosine assignment, probe for query 0 AT THE COMMITTED
-    // OPERATING POINT (the nprobe sweep at k=30 over the 8-query sample
-    // replayed as a grid, the smallest width clearing 0.85 as scalar CTE
-    // `cnp` — r13 verdict #3: no probe-width constant in either side),
-    // top-30 of the probed cells' members, then identical rank-only fusion
-    "hybrid_search_rrf_indexed" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS tk FROM documents),
-         |meta AS (
-         |  SELECT count(*) AS n, CAST(sum(length(tk)) AS DOUBLE) / count(*) AS avgdl
-         |  FROM tok),
-         |toks AS (
-         |  SELECT doc_id, length(tk) AS doc_len, unnest(tk) AS term FROM tok),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf, any_value(doc_len) AS doc_len
-         |  FROM toks WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
-         |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |tscored AS (
-         |  SELECT tf.doc_id,
-         |    sum(CAST(floor(ln(1.0 + (meta.n - dfreq.df + 0.5) / (dfreq.df + 0.5)) *
-         |        ((tf.tf * 2.2) /
-         |         (tf.tf + 1.2 * (0.25 + 0.75 * (tf.doc_len / meta.avgdl)))) *
-         |        1000000.0 + 0.5) AS BIGINT)) AS su
-         |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN meta
-         |  GROUP BY 1),
-         |ttop AS (SELECT doc_id, su FROM tscored ORDER BY su DESC, doc_id LIMIT 30),
-         |tarm AS (
-         |  SELECT doc_id, CAST(row_number() OVER (
-         |    ORDER BY round(su / 1000000.0, 4) DESC, doc_id) AS INT) AS r_text
-         |  FROM ttop),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e ORDER BY vec_id LIMIT 16),
-         |cscored AS (
-         |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-         |  FROM e CROSS JOIN seeds s),
-         |assign AS (
-         |  SELECT vec_id, v, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM cscored) WHERE rnk = 1),
-         |sprobes AS (
-         |  SELECT vec_id AS query_id, v AS qv, cell_id, rnk AS prnk FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM cscored WHERE vec_id < 8) WHERE rnk <= 16),
-         |st AS (SELECT * FROM (VALUES (1), (2), (4), (8), (16)) AS t(np)),
-         |scand AS (
-         |  SELECT st.np, p.query_id, a.vec_id AS neighbor_id,
-         |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-         |  FROM st JOIN sprobes p ON p.prnk <= st.np
-         |  JOIN assign a ON a.cell_id = p.cell_id AND p.query_id != a.vec_id),
-         |sannk AS (
-         |  SELECT np, query_id, neighbor_id FROM (
-         |    SELECT np, query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY np, query_id
-         |        ORDER BY cosine DESC, neighbor_id) AS rank
-         |    FROM scand) WHERE rank <= 30),
-         |exact AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC,
-         |          c.vec_id) AS rank
-         |    FROM e c JOIN (SELECT * FROM e WHERE vec_id < 8) q
-         |      ON q.vec_id != c.vec_id) WHERE rank <= 30),
-         |hits AS (
-         |  SELECT st.np, ex.query_id, count(a.neighbor_id) AS nhit
-         |  FROM st CROSS JOIN exact ex
-         |  LEFT JOIN sannk a ON a.np = st.np
-         |    AND a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-         |  GROUP BY 1, 2),
-         |grid AS (
-         |  SELECT np, round(avg(nhit / CAST(30 AS DOUBLE)), 4) AS recall
-         |  FROM hits GROUP BY 1),
-         |cnp AS (SELECT coalesce((SELECT min(np) FROM grid WHERE recall >= 0.85),
-         |  (SELECT max(np) FROM grid)) AS npv),
-         |probes AS (
-         |  SELECT vec_id AS query_id, v AS qv, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM cscored WHERE vec_id = 0), cnp WHERE rnk <= cnp.npv),
-         |cand AS (
-         |  SELECT p.query_id, a.vec_id AS neighbor_id,
-         |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-         |  FROM assign a JOIN probes p ON a.cell_id = p.cell_id AND p.query_id != a.vec_id),
-         |varm AS (
-         |  SELECT neighbor_id AS doc_id, r_vec FROM (
-         |    SELECT neighbor_id, CAST(row_number() OVER (
-         |      ORDER BY cosine DESC, neighbor_id) AS INT) AS r_vec
-         |    FROM cand) WHERE r_vec <= 30),
-         |f AS (
-         |  SELECT coalesce(t.doc_id, v.doc_id) AS doc_id, t.r_text, v.r_vec,
-         |    round(coalesce(CAST(1.0 AS DOUBLE) / (60 + t.r_text), 0.0) +
-         |          coalesce(CAST(1.0 AS DOUBLE) / (60 + v.r_vec), 0.0), 6) AS rrf
-         |  FROM tarm t FULL OUTER JOIN varm v ON t.doc_id = v.doc_id)
-         |SELECT doc_id, r_text, r_vec, rrf FROM f
-         |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin,
-
-    // the BATCH hybrid's replay (r15 verdict #7): each text-arm VARIANT
-    // once — even bases declare (dup, vector), odd bases (dup, stream),
-    // same integer-micro-unit BM25 CTEs as text_bm25/hybrid_search_rrf,
-    // duplicated per term set — the vector arm once per BASE vector
-    // (the persisted ivf-batch store's probe arithmetic, rank <= 30, NO
-    // self-exclusion — query ids live in the disjoint replicated
-    // space), the rank-only fusion per base joined to its parity's text
-    // list with the engine's fixed text+vector addition order, then the
-    // 5x expansion to the replicated query-id space. Any per-replica
-    // divergence in either batch arm or the fusion is a hash mismatch.
-    "hybrid_batch_rrf" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS tk FROM documents),
-         |meta AS (
-         |  SELECT count(*) AS n, CAST(sum(length(tk)) AS DOUBLE) / count(*) AS avgdl
-         |  FROM tok),
-         |toks AS (
-         |  SELECT doc_id, length(tk) AS doc_len, unnest(tk) AS term FROM tok),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf, any_value(doc_len) AS doc_len
-         |  FROM toks WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
-         |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |tscored AS (
-         |  SELECT tf.doc_id,
-         |    sum(CAST(floor(ln(1.0 + (meta.n - dfreq.df + 0.5) / (dfreq.df + 0.5)) *
-         |        ((tf.tf * 2.2) /
-         |         (tf.tf + 1.2 * (0.25 + 0.75 * (tf.doc_len / meta.avgdl)))) *
-         |        1000000.0 + 0.5) AS BIGINT)) AS su
-         |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN meta
-         |  GROUP BY 1),
-         |ttop AS (SELECT doc_id, su FROM tscored ORDER BY su DESC, doc_id LIMIT 30),
-         |tarm AS (
-         |  SELECT doc_id, CAST(row_number() OVER (
-         |    ORDER BY round(su / 1000000.0, 4) DESC, doc_id) AS INT) AS r_text
-         |  FROM ttop),
-         |tfB AS (
-         |  SELECT doc_id, term, count(*) AS tf, any_value(doc_len) AS doc_len
-         |  FROM toks WHERE term IN ('dup', 'stream') GROUP BY 1, 2),
-         |dfreqB AS (SELECT term, count(*) AS df FROM tfB GROUP BY 1),
-         |tscoredB AS (
-         |  SELECT tfB.doc_id,
-         |    sum(CAST(floor(ln(1.0 + (meta.n - dfreqB.df + 0.5) / (dfreqB.df + 0.5)) *
-         |        ((tfB.tf * 2.2) /
-         |         (tfB.tf + 1.2 * (0.25 + 0.75 * (tfB.doc_len / meta.avgdl)))) *
-         |        1000000.0 + 0.5) AS BIGINT)) AS su
-         |  FROM tfB JOIN dfreqB ON tfB.term = dfreqB.term CROSS JOIN meta
-         |  GROUP BY 1),
-         |ttopB AS (SELECT doc_id, su FROM tscoredB ORDER BY su DESC, doc_id LIMIT 30),
-         |tarmB AS (
-         |  SELECT doc_id, CAST(row_number() OVER (
-         |    ORDER BY round(su / 1000000.0, 4) DESC, doc_id) AS INT) AS r_text
-         |  FROM ttopB),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |vseeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-         |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT 16),
-         |vscored AS (
-         |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-         |  FROM e CROSS JOIN vseeds s),
-         |vassign AS (
-         |  SELECT vec_id, v, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM vscored) WHERE rnk = 1),
-         |vprobes AS (
-         |  SELECT vec_id AS qbase, v AS qv, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM vscored) WHERE rnk <= 4),
-         |varm AS (
-         |  SELECT qbase, neighbor_id AS doc_id, r_vec FROM (
-         |    SELECT p.qbase, a.vec_id AS neighbor_id,
-         |      CAST(row_number() OVER (PARTITION BY p.qbase
-         |        ORDER BY round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) DESC,
-         |          a.vec_id) AS INT) AS r_vec
-         |    FROM vassign a JOIN vprobes p ON a.cell_id = p.cell_id)
-         |  WHERE r_vec <= 30),
-         |bases AS (SELECT DISTINCT vec_id AS qbase FROM e),
-         |texp AS (
-         |  SELECT b.qbase, t.doc_id, t.r_text
-         |  FROM bases b JOIN tarm t ON b.qbase % 2 = 0
-         |  UNION ALL
-         |  SELECT b.qbase, t.doc_id, t.r_text
-         |  FROM bases b JOIN tarmB t ON b.qbase % 2 = 1),
-         |f AS (
-         |  SELECT coalesce(tx.qbase, v.qbase) AS qbase,
-         |    coalesce(tx.doc_id, v.doc_id) AS doc_id, tx.r_text, v.r_vec,
-         |    round(coalesce(CAST(1.0 AS DOUBLE) / (60 + tx.r_text), 0.0) +
-         |          coalesce(CAST(1.0 AS DOUBLE) / (60 + v.r_vec), 0.0), 6) AS rrf
-         |  FROM texp tx FULL OUTER JOIN varm v
-         |    ON tx.qbase = v.qbase AND tx.doc_id = v.doc_id),
-         |rk AS (
-         |  SELECT qbase, doc_id, r_text, r_vec, rrf,
-         |    CAST(row_number() OVER (PARTITION BY qbase
-         |      ORDER BY rrf DESC, doc_id) AS INT) AS rank
-         |  FROM f),
-         |reps AS (SELECT unnest(range(0, 5)) AS r)
-         |SELECT 1000000 + rk.qbase * 5 + t.r AS query_id, rk.doc_id,
-         |  rk.r_text, rk.r_vec, rk.rrf, rk.rank
-         |FROM rk CROSS JOIN reps t WHERE rk.rank <= 20
-         |ORDER BY query_id, rank""".stripMargin,
-
-    // the IVF-PQ hybrid: same BM25-arm replay, vector arm = the full
-    // IVF-PQ composition for query 0 (train slice vec_id % 50 != 0,
-    // frozen seeds + codebooks, coarse probe + ADC + exact re-rank,
-    // top-30) AT THE COMMITTED OPERATING POINT: the k=30 two-phase sweep
-    // is replayed as the grid chain and the probe consumes (cnp, csl) as
-    // scalar CTEs — r13 verdict #3: no (nprobe, shortlist) constant in
-    // either the operator or this SQL. Identical rank-only fusion.
-    "hybrid_search_rrf_ivfpq" ->
-      s"""WITH tok AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS tk FROM documents),
-         |meta AS (
-         |  SELECT count(*) AS n, CAST(sum(length(tk)) AS DOUBLE) / count(*) AS avgdl
-         |  FROM tok),
-         |toks AS (
-         |  SELECT doc_id, length(tk) AS doc_len, unnest(tk) AS term FROM tok),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf, any_value(doc_len) AS doc_len
-         |  FROM toks WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
-         |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |tscored AS (
-         |  SELECT tf.doc_id,
-         |    sum(CAST(floor(ln(1.0 + (meta.n - dfreq.df + 0.5) / (dfreq.df + 0.5)) *
-         |        ((tf.tf * 2.2) /
-         |         (tf.tf + 1.2 * (0.25 + 0.75 * (tf.doc_len / meta.avgdl)))) *
-         |        1000000.0 + 0.5) AS BIGINT)) AS su
-         |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN meta
-         |  GROUP BY 1),
-         |ttop AS (SELECT doc_id, su FROM tscored ORDER BY su DESC, doc_id LIMIT 30),
-         |tarm AS (
-         |  SELECT doc_id, CAST(row_number() OVER (
-         |    ORDER BY round(su / 1000000.0, 4) DESC, doc_id) AS INT) AS r_text
-         |  FROM ttop),
-         |${ivfPqGridCtes(16, 8, 256, 30, 0.8, Seq(2, 4, 8, 16), Seq(50, 200))},
-         |pf AS (
-         |  SELECT s.query_id, s.neighbor_id, s.qcos
-         |  FROM sc s, cnp WHERE s.prnk <= cnp.v),
-         |slc AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY qcos DESC, neighbor_id) AS srank
-         |    FROM pf), csl WHERE srank <= csl.v),
-         |rerc AS (
-         |  SELECT query_id, neighbor_id, cosine,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cosine DESC, neighbor_id) AS rank
-         |  FROM (
-         |    SELECT x.query_id, x.neighbor_id,
-         |      round(${Oracles.cosine("qe.v", "ne.v", 64)}, 6) AS cosine
-         |    FROM slc x JOIN e ne ON ne.vec_id = x.neighbor_id
-         |    JOIN e qe ON qe.vec_id = x.query_id)),
-         |varm AS (
-         |  SELECT neighbor_id AS doc_id, CAST(rank AS INT) AS r_vec
-         |  FROM rerc WHERE query_id = 0 AND rank <= 30),
-         |f AS (
-         |  SELECT coalesce(t.doc_id, v.doc_id) AS doc_id, t.r_text, v.r_vec,
-         |    round(coalesce(CAST(1.0 AS DOUBLE) / (60 + t.r_text), 0.0) +
-         |          coalesce(CAST(1.0 AS DOUBLE) / (60 + v.r_vec), 0.0), 6) AS rrf
-         |  FROM tarm t FULL OUTER JOIN varm v ON t.doc_id = v.doc_id)
-         |SELECT doc_id, r_text, r_vec, rrf FROM f
-         |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin,
-
-    "text_bm25_multi" -> bm25OracleSql(Seq("dup", "vector", "table", "merge"), 20),
-
-    "lsh_band_stats" -> {
-      val bkeys = (0 until 4).map(bi => Oracles.bandKey("sig", bi, 4)).mkString("[", ", ", "]")
-      s"""WITH sh AS (
-         |  SELECT doc_id, ${Oracles.shingleHashes("text", 3)} AS gs
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |sigs AS (SELECT doc_id, ${Oracles.minhashSignature("gs", 16)} AS sig FROM sh),
-         |bnd AS (
-         |  SELECT doc_id, t.band AS band, $bkeys[t.band + 1] AS band_key
-         |  FROM sigs CROSS JOIN (SELECT unnest(range(0, 4)) AS band) t),
-         |b AS (SELECT band, band_key, count(*) AS n FROM bnd GROUP BY 1, 2)
-         |SELECT CAST(band AS INT) AS band, CAST(count(*) AS BIGINT) AS n_buckets,
-         |  CAST(sum(n) AS BIGINT) AS n_rows, CAST(max(n) AS BIGINT) AS max_bucket,
-         |  CAST(sum(n * (n - 1) // 2) AS BIGINT) AS candidate_pairs
-         |FROM b GROUP BY band ORDER BY band""".stripMargin
-    },
-
-    "text_search_or" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks
-         |  WHERE term IN ('dup', 'vector', 'merge') GROUP BY 1, 2)
-         |SELECT doc_id, CAST(count(*) AS INT) AS n_matched,
-         |  CAST(sum(tf) AS BIGINT) AS tf_sum
-         |FROM tf GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "text_search_msm" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks
-         |  WHERE term IN ('dup', 'vector', 'merge') GROUP BY 1, 2)
-         |SELECT doc_id, CAST(count(*) AS INT) AS n_matched,
-         |  CAST(sum(tf) AS BIGINT) AS tf_sum
-         |FROM tf GROUP BY doc_id HAVING count(*) >= 2 ORDER BY doc_id""".stripMargin,
-
-    "text_search_not" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks
-         |  WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
-         |hits AS (
-         |  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS tf_sum
-         |  FROM tf GROUP BY doc_id HAVING count(*) = 2)
-         |SELECT doc_id, tf_sum FROM hits
-         |WHERE doc_id NOT IN (
-         |  SELECT DISTINCT doc_id FROM toks WHERE term = 'merge')
-         |ORDER BY doc_id""".stripMargin,
-
-    "tfidf_terms" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-         |dfreq AS (
-         |  SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |scored AS (
-         |  SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-         |    round(tf.tf * ln(CAST((SELECT count(*) FROM documents) AS DOUBLE) / dfreq.df), 4) AS tfidf
-         |  FROM tf JOIN dfreq ON tf.term = dfreq.term),
-         |r AS (
-         |  SELECT *, row_number() OVER (
-         |    PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rank
-         |  FROM scored)
-         |SELECT doc_id, rank, term, tf, df, tfidf
-         |FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-
-    // identical replay to tfidf_terms (df and nDocs over the FULL corpus
-    // — what the persisted index holds) restricted to the delta docs
-    "tfidf_terms_incr" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-         |dfreq AS (
-         |  SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |scored AS (
-         |  SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-         |    round(tf.tf * ln(CAST((SELECT count(*) FROM documents) AS DOUBLE) / dfreq.df), 4) AS tfidf
-         |  FROM tf JOIN dfreq ON tf.term = dfreq.term
-         |  WHERE tf.doc_id % 50 = 0),
-         |r AS (
-         |  SELECT *, row_number() OVER (
-         |    PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rank
-         |  FROM scored)
-         |SELECT doc_id, rank, term, tf, df, tfidf
-         |FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin,
-
-    "stream_window_agg" ->
-      """SELECT CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS day_start, event_type,
-        |  count(*) AS n_events, round(sum(value), 2) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "stream_sessions" ->
-      // new session only when the gap STRICTLY exceeds the timeout:
-      // Spark's session_window merges adjacent (touching) windows
-      """WITH e AS (
-        |  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS tss FROM events),
-        |m AS (
-        |  SELECT user_id, event_id, tss,
-        |    CASE WHEN lag(tss) OVER (PARTITION BY user_id ORDER BY tss, event_id) IS NULL
-        |         OR tss - lag(tss) OVER (PARTITION BY user_id ORDER BY tss, event_id) > 1800
-        |    THEN 1 ELSE 0 END AS new_s
-        |  FROM e),
-        |g AS (
-        |  SELECT *, sum(new_s) OVER (PARTITION BY user_id ORDER BY tss, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS sid FROM m)
-        |SELECT user_id, min(tss) AS session_start, max(tss) + 1800 AS session_end,
-        |  count(*) AS n_events, min(event_id) AS first_event, max(event_id) AS last_event
-        |FROM g GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
-
-    "stream_dedup" ->
-      """SELECT event_id, user_id, event_type, value
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "stream_incr_dedup" ->
-      s"""WITH mx AS (SELECT max(doc_id) // 2 AS mid FROM documents),
-         |hist AS (
-         |  SELECT DISTINCT ${Oracles.polyHash("text")} AS fingerprint
-         |  FROM documents WHERE doc_id <= (SELECT mid FROM mx)),
-         |delta AS (
-         |  SELECT DISTINCT ${Oracles.polyHash("text")} AS fingerprint
-         |  FROM documents WHERE doc_id > (SELECT mid FROM mx))
-         |SELECT fingerprint FROM delta
-         |WHERE fingerprint NOT IN (SELECT fingerprint FROM hist)
-         |ORDER BY fingerprint""".stripMargin,
-
-    "stream_topk" ->
-      """WITH e AS (
-        |  SELECT event_id, value,
-        |    CAST(epoch(date_trunc('day', ts)) AS BIGINT) AS day_start
-        |  FROM events),
-        |r AS (
-        |  SELECT day_start, event_id, value, row_number() OVER (
-        |    PARTITION BY day_start ORDER BY value DESC, event_id) AS rank
-        |  FROM e)
-        |SELECT day_start, rank, event_id, round(value, 2) AS value
-        |FROM r WHERE rank <= 3 ORDER BY day_start, rank""".stripMargin,
-
-    // duplicates in the doubled stream carry identical event times, so
-    // the within-watermark dedup catches every one of them
-    "stream_dedup_wm" ->
-      """SELECT event_id, user_id, event_type, value
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "window_range" ->
-      """WITH e AS (
-        |  SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS tss, value
-        |  FROM events)
-        |SELECT event_id, user_id, tss, round(value, 2) AS value,
-        |  round(sum(value) OVER w, 2) AS trailing_7d_sum,
-        |  count(*) OVER w AS trailing_7d_n
-        |FROM e
-        |WINDOW w AS (PARTITION BY user_id ORDER BY tss
-        |  RANGE BETWEEN 604800 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    "ntile_quartiles" ->
-      """WITH q AS (
-        |  SELECT o_custkey, o_totalprice,
-        |    ntile(4) OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice, o_orderkey) AS quartile
-        |  FROM orders)
-        |SELECT quartile, count(*) AS n, round(avg(o_totalprice), 2) AS avg_price,
-        |  round(sum(o_totalprice), 2) AS sum_price
-        |FROM q GROUP BY quartile ORDER BY quartile""".stripMargin,
-
-    "train_mix" -> {
-      val bucket = Oracles.sampleBucket("CAST(doc_id AS VARCHAR)", 1000)
-      s"""WITH d AS (
-         |  SELECT doc_id, source,
-         |    CAST(len(${Oracles.tokens("text")}) AS BIGINT) AS n_tok
-         |  FROM documents),
-         |c AS (SELECT source, count(*) AS n FROM d GROUP BY source),
-         |t AS (
-         |  SELECT 'src0' AS source, CAST(0.4 AS DOUBLE) AS tgt
-         |  UNION ALL SELECT 'src1', CAST(0.3 AS DOUBLE)
-         |  UNION ALL SELECT 'src2', CAST(0.2 AS DOUBLE)
-         |  UNION ALL SELECT 'src3', CAST(0.08 AS DOUBLE)
-         |  UNION ALL SELECT 'src4', CAST(0.02 AS DOUBLE)),
-         |sc AS (SELECT min(c.n / t.tgt) AS scale
-         |       FROM c JOIN t USING (source) WHERE t.tgt > 0),
-         |f AS (SELECT c.source,
-         |        least(1.0, (SELECT scale FROM sc) * t.tgt / c.n) AS frac
-         |      FROM c JOIN t USING (source)),
-         |kept AS (
-         |  SELECT d.source, d.n_tok FROM d JOIN f USING (source)
-         |  WHERE $bucket < floor(f.frac * 1000))
-         |SELECT source, count(*) AS n_kept, CAST(sum(n_tok) AS BIGINT) AS tok_total
-         |FROM kept GROUP BY source ORDER BY source""".stripMargin
-    },
-
-    "map_functions" ->
-      """WITH c AS (
-        |  SELECT user_id, coalesce(event_type, '') AS event_type,
-        |    count(*) AS n
-        |  FROM events GROUP BY 1, 2)
-        |SELECT user_id,
-        |  CAST(count(*) AS INT) AS n_types,
-        |  max(CASE WHEN event_type = 'click' THEN n END) AS n_click,
-        |  CAST(sum(n) AS BIGINT) AS total,
-        |  string_agg(CASE WHEN n >= 5 THEN event_type || '=' || n END, ','
-        |    ORDER BY event_type) AS frequent
-        |FROM c GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "outer_join_recon" ->
-      """WITH co AS (
-        |  SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY 1)
-        |SELECT c_nationkey, count(*) AS n_keys,
-        |  CAST(sum(CASE WHEN co.o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_without_orders,
-        |  CAST(sum(CASE WHEN c.c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_orphan_orders,
-        |  CAST(coalesce(sum(co.n_orders), 0) AS BIGINT) AS orders_total
-        |FROM customer c FULL OUTER JOIN co ON c.c_custkey = co.o_custkey
-        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-
-    "hopping_windows" ->
-      """WITH e AS (
-        |  SELECT event_type, value, CAST(floor(epoch(ts)) AS BIGINT) AS tss
-        |  FROM events),
-        |w AS (
-        |  SELECT event_type, value,
-        |    unnest(generate_series(
-        |      tss - 1800 - ((tss - 1800) % 1800),
-        |      tss - (tss % 1800), 1800)) AS w_start
-        |  FROM e)
-        |SELECT w_start, event_type, count(*) AS n, round(sum(value), 2) AS total
-        |FROM w GROUP BY w_start, event_type ORDER BY w_start, event_type""".stripMargin,
-
-    // One CTE block per BPE round: argmax pair, gaps-and-islands merge
-    // rewrite (leftmost non-overlapping), renumbered positions.
-    "bpe_merges" -> {
-      val rounds = 3
-      val outRows = (1 to rounds).map { r =>
-        s"""SELECT CAST($r AS INT) AS round, a AS pair_a, b AS pair_b,
-           |  n AS n_pair, (SELECT count(*) FROM tk${r + 1}) AS corpus_tokens_after
-           |FROM top$r""".stripMargin
-      }.mkString("\nUNION ALL\n")
-      s"""WITH ${bpeOracleCtes(rounds)}
-         |$outRows
-         |ORDER BY round""".stripMargin
-    },
-
-    // Re-encode under the 3 learned merges: per-doc token count plus an
-    // order-sensitive poly_hash of the '|'-joined encoded stream.
-    "bpe_encode" -> {
-      val rounds = 3
-      s"""WITH ${bpeOracleCtes(rounds)}
-         |SELECT doc_id, CAST(count(*) AS INT) AS n_tokens,
-         |  ${Oracles.polyHash(s"string_agg(tok, '|' ORDER BY p)")} AS enc_hash
-         |FROM tk${rounds + 1} GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
-
-    // Frozen-vocab delta encode ≡ full train-and-encode restricted to
-    // the delta's documents (per-doc rewriting under a fixed merge list
-    // is independent across docs) — replay everything, filter the output.
-    "bpe_encode_incr" -> {
-      val rounds = 3
-      s"""WITH ${bpeOracleCtes(rounds)}
-         |SELECT doc_id, CAST(count(*) AS INT) AS n_tokens,
-         |  ${Oracles.polyHash(s"string_agg(tok, '|' ORDER BY p)")} AS enc_hash
-         |FROM tk${rounds + 1} WHERE doc_id % 50 = 0
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
-
-    "temperature_mix" -> {
-      val bucket = Oracles.sampleBucket("CAST(doc_id AS VARCHAR)", 1000)
-      s"""WITH d AS (
-         |  SELECT doc_id, source,
-         |    CAST(len(${Oracles.tokens("text")}) AS BIGINT) AS n_tok
-         |  FROM documents),
-         |c AS (SELECT source, count(*) AS n FROM d GROUP BY source),
-         |z AS (SELECT sum(pow(n, 0.5)) AS z FROM c),
-         |t AS (
-         |  SELECT source, round(pow(n, 0.5) / (SELECT z FROM z), 6) AS tgt FROM c),
-         |sc AS (SELECT min(c.n / t.tgt) AS scale
-         |       FROM c JOIN t USING (source) WHERE t.tgt > 0),
-         |f AS (SELECT c.source,
-         |        least(1.0, (SELECT scale FROM sc) * t.tgt / c.n) AS frac
-         |      FROM c JOIN t USING (source)),
-         |kept AS (
-         |  SELECT d.source, d.n_tok FROM d JOIN f USING (source)
-         |  WHERE $bucket < floor(f.frac * 1000))
-         |SELECT source, count(*) AS n_kept, CAST(sum(n_tok) AS BIGINT) AS tok_total
-         |FROM kept GROUP BY source ORDER BY source""".stripMargin
-    },
-
-    "dsir_weights" -> {
-      s"""WITH w AS (${Oracles.dsirWeights(2048)})
-         |SELECT doc_id, is_target, n_feats, log_weight
-         |FROM w ORDER BY doc_id""".stripMargin
-    },
-
-    "dsir_select" -> {
-      val u = "(" + Oracles.sampleBucket(
-        "'dsir:' || CAST(doc_id AS VARCHAR)", 1000000) + " + 0.5) / 1000000.0"
-      s"""WITH w AS (${Oracles.dsirWeights(2048)}),
-         |g AS (
-         |  SELECT doc_id, is_target, log_weight,
-         |    round(-ln(-ln($u)), 6) + 0 AS gumbel
-         |  FROM w)
-         |SELECT doc_id, is_target, log_weight, gumbel,
-         |  log_weight + gumbel AS score
-         |FROM g ORDER BY score DESC, doc_id LIMIT 50""".stripMargin
-    },
-
-    "dsir_apply_incr" -> {
-      s"""WITH w AS (${Oracles.dsirWeights(2048)})
-         |SELECT doc_id, n_feats, log_weight
-         |FROM w WHERE doc_id % 50 = 0 ORDER BY doc_id""".stripMargin
-    },
-
-    // fit-then-select restricted to the delta — the persisted-model
-    // equality claim (Gumbel noise is a pure function of doc_id)
-    "dsir_select_incr" -> {
-      val u = "(" + Oracles.sampleBucket(
-        "'dsir:' || CAST(doc_id AS VARCHAR)", 1000000) + " + 0.5) / 1000000.0"
-      s"""WITH w AS (${Oracles.dsirWeights(2048)}),
-         |g AS (
-         |  SELECT doc_id, log_weight,
-         |    round(-ln(-ln($u)), 6) + 0 AS gumbel
-         |  FROM w WHERE doc_id % 50 = 0)
-         |SELECT doc_id, log_weight, gumbel,
-         |  log_weight + gumbel AS score
-         |FROM g ORDER BY score DESC, doc_id LIMIT 20""".stripMargin
-    },
-
-    "stream_enrich" ->
-      """SELECT c_mktsegment AS segment, count(*) AS n_events,
-        |  round(sum(value), 2) AS total_value
-        |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "stream_join" ->
-      """SELECT c.user_id, c.event_id AS click_id, p.event_id AS purchase_id,
-        |  CAST(floor(epoch(c.ts)) AS BIGINT) AS click_sec,
-        |  CAST(floor(epoch(p.ts)) AS BIGINT) AS purchase_sec
-        |FROM events c JOIN events p
-        |  ON c.user_id = p.user_id
-        |  AND c.event_type = 'click' AND p.event_type = 'purchase'
-        |  AND floor(epoch(p.ts)) >= floor(epoch(c.ts))
-        |  AND floor(epoch(p.ts)) <= floor(epoch(c.ts)) + 3600
-        |ORDER BY click_id, purchase_id""".stripMargin,
-
-    "multimodal_features" ->
-      s"""WITH m AS (
-         |  SELECT doc_id,
-         |    CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
-         |    CAST(length(text) AS INT) AS byte_len,
-         |    ${Oracles.polyHash("text")} AS checksum,
-         |    1000 + (doc_id % 120) * 500 AS duration_ms
-         |  FROM documents)
-         |SELECT doc_id, media_type, byte_len, checksum,
-         |  CAST(64 + checksum % 1024 AS INT) AS width,
-         |  CAST(64 + (checksum // 1024) % 1024 AS INT) AS height,
-         |  CAST(CASE media_type WHEN 'image' THEN 1 WHEN 'audio' THEN 0
-         |       ELSE least(duration_ms // 1000, 8) END AS INT) AS n_frames
-         |FROM m ORDER BY doc_id""".stripMargin,
-
-    // Stride subsampling of the UTF-8 payload == char subsampling on the
-    // ASCII corpus; the checksum replays PolyHash over the kept chars.
-    "multimodal_resize" ->
-      s"""WITH m AS (
-         |  SELECT doc_id, text, CAST(length(text) AS INT) AS in_len
-         |  FROM documents WHERE CAST(doc_id % 3 AS INT) = 0),
-         |s AS (
-         |  SELECT *, greatest(1, (in_len + 255) // 256) AS stride FROM m)
-         |SELECT doc_id, 'image' AS media_type, in_len,
-         |  CAST(stride AS INT) AS stride,
-         |  CAST((in_len + stride - 1) // stride AS INT) AS out_len,
-         |  list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |    list_transform(range(1, CAST(in_len + 1 AS BIGINT), CAST(stride AS BIGINT)),
-         |      i -> CAST(ord(substr(text, CAST(i AS INT), 1)) AS BIGINT))),
-         |    (h, c) -> (h * 31 + c) % ${Oracles.P}) AS out_checksum
-         |FROM s ORDER BY doc_id""".stripMargin,
-
-    // thumbnail dedup replay: 16-byte stride subsample, PolyHash of the
-    // kept characters, dup groups per (type, checksum, out_len)
-    "multimodal_dedup" ->
-      s"""WITH m AS (
-         |  SELECT doc_id, text,
-         |    CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image'
-         |         WHEN 1 THEN 'audio' ELSE 'video' END AS media_type,
-         |    CAST(length(text) AS INT) AS in_len FROM documents),
-         |s AS (SELECT *, greatest(1, (in_len + 15) // 16) AS stride FROM m),
-         |t AS (
-         |  SELECT doc_id, media_type,
-         |    CAST((in_len + stride - 1) // stride AS INT) AS out_len,
-         |    list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |      list_transform(range(1, CAST(in_len + 1 AS BIGINT), CAST(stride AS BIGINT)),
-         |        i -> CAST(ord(substr(text, CAST(i AS INT), 1)) AS BIGINT))),
-         |      (h, c) -> (h * 31 + c) % ${Oracles.P}) AS thumb_checksum
-         |  FROM s)
-         |SELECT media_type, thumb_checksum, out_len,
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  min(doc_id) AS keep_doc, max(doc_id) AS max_doc
-         |FROM t GROUP BY 1, 2, 3 HAVING count(*) > 1
-         |ORDER BY media_type, thumb_checksum""".stripMargin,
-
-    "multimodal_frames" ->
-      """WITH v AS (
-        |  SELECT doc_id, 1000 + (doc_id % 120) * 500 AS duration_ms,
-        |    least((1000 + (doc_id % 120) * 500) // 1000, 8) AS n_frames
-        |  FROM documents WHERE CAST(doc_id % 3 AS INT) = 2)
-        |SELECT doc_id,
-        |  unnest(generate_series(0, n_frames - 1)) AS frame_idx,
-        |  unnest(generate_series(0, n_frames - 1)) * (duration_ms // n_frames) AS frame_offset_ms
-        |FROM v ORDER BY doc_id, frame_idx""".stripMargin,
-
-    "session_stats" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS tss FROM events),
-        |x AS (
-        |  SELECT user_id, event_id, tss,
-        |    CASE WHEN lag(tss) OVER w IS NULL OR tss - lag(tss) OVER w > 1800
-        |      THEN 1 ELSE 0 END AS new_s
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tss, event_id)),
-        |y AS (
-        |  SELECT user_id, event_id, tss,
-        |    sum(new_s) OVER (PARTITION BY user_id ORDER BY tss, event_id
-        |      ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM x),
-        |s AS (
-        |  SELECT user_id, sid, min(tss) AS session_start,
-        |    max(tss) + 1800 AS session_end, count(*) AS n_events
-        |  FROM y GROUP BY user_id, sid)
-        |SELECT n_events, count(*) AS n_sessions,
-        |  round(avg(session_end - session_start), 2) AS avg_duration
-        |FROM s GROUP BY n_events ORDER BY n_events""".stripMargin,
-
-    "cdc_latest" ->
-      """WITH e AS (
-        |  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS tss, event_id,
-        |    event_type, value FROM events),
-        |r AS (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY user_id ORDER BY tss DESC, event_id DESC) AS rn
-        |  FROM e)
-        |SELECT user_id, tss AS last_ts, event_id AS last_event,
-        |  event_type AS last_type, round(value, 2) AS last_value
-        |FROM r WHERE rn = 1 AND event_type <> 'error'
-        |ORDER BY user_id""".stripMargin,
-
-    "scd2_build" ->
-      """WITH e AS (
-        |  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS tss, event_id,
-        |    event_type FROM events),
-        |c AS (
-        |  SELECT *, lag(event_type) OVER (
-        |    PARTITION BY user_id ORDER BY tss, event_id) AS prev
-        |  FROM e),
-        |f AS (
-        |  SELECT user_id, tss, event_id, event_type FROM c
-        |  WHERE prev IS NULL OR prev <> event_type),
-        |v AS (
-        |  SELECT user_id, event_type, tss AS valid_from,
-        |    lead(tss) OVER (PARTITION BY user_id ORDER BY tss, event_id) AS valid_to
-        |  FROM f)
-        |SELECT user_id, event_type, valid_from, valid_to,
-        |  CAST(CASE WHEN valid_to IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_current
-        |FROM v ORDER BY user_id, valid_from""".stripMargin,
-
-    // the incremental merge's oracle IS the batch recompute: the merged
-    // dimension must be row-identical to scd2 over the whole changelog
-    "scd2_merge" ->
-      """WITH e AS (
-        |  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS tss, event_id,
-        |    event_type FROM events),
-        |c AS (
-        |  SELECT *, lag(event_type) OVER (
-        |    PARTITION BY user_id ORDER BY tss, event_id) AS prev
-        |  FROM e),
-        |f AS (
-        |  SELECT user_id, tss, event_id, event_type FROM c
-        |  WHERE prev IS NULL OR prev <> event_type),
-        |v AS (
-        |  SELECT user_id, event_type, tss AS valid_from,
-        |    lead(tss) OVER (PARTITION BY user_id ORDER BY tss, event_id) AS valid_to
-        |  FROM f)
-        |SELECT user_id, event_type, valid_from, valid_to,
-        |  CAST(CASE WHEN valid_to IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_current
-        |FROM v ORDER BY user_id, valid_from""".stripMargin,
-
-    "gap_fill" ->
-      """WITH e AS (
-        |  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS tss, value
-        |  FROM events),
-        |o AS (
-        |  SELECT user_id, tss - tss % 86400 AS bucket,
-        |    round(sum(value), 2) AS v, count(*) AS n_obs
-        |  FROM e GROUP BY 1, 2),
-        |s AS (
-        |  SELECT user_id, min(bucket) AS lo, max(bucket) AS hi
-        |  FROM o GROUP BY 1),
-        |g AS (
-        |  SELECT user_id, unnest(generate_series(lo, hi, 86400)) AS bucket
-        |  FROM s),
-        |f AS (
-        |  SELECT g.user_id, g.bucket, o.v, coalesce(o.n_obs, 0) AS n_obs
-        |  FROM g LEFT JOIN o ON g.user_id = o.user_id AND g.bucket = o.bucket)
-        |SELECT user_id, bucket,
-        |  last_value(v IGNORE NULLS) OVER (
-        |    PARTITION BY user_id ORDER BY bucket
-        |    ROWS UNBOUNDED PRECEDING) AS v_filled,
-        |  n_obs
-        |FROM f ORDER BY user_id, bucket""".stripMargin,
-
-    "sample_split" ->
-      s"""WITH t AS (
-         |  SELECT event_type, user_id,
-         |    CASE WHEN ${Oracles.sampleBucket("CAST(event_id AS VARCHAR)", 1000)} < 800
-         |      THEN 'train' ELSE 'test' END AS split
-         |  FROM events)
-         |SELECT event_type, split, count(*) AS n, count(DISTINCT user_id) AS n_users
-         |FROM t GROUP BY event_type, split ORDER BY event_type, split""".stripMargin,
-
-    "weighted_sample" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, lang, source,
-         |    ${Oracles.sampleBucket("CAST(doc_id AS VARCHAR)", 1000)} AS b,
-         |    CAST(floor(least(1.0, greatest(0.0, n_chars / 600.0)) * 1000) AS BIGINT) AS thr
-         |  FROM documents)
-         |SELECT lang, source, count(*) AS n_kept,
-         |  min(doc_id) AS min_id, max(doc_id) AS max_id
-         |FROM t WHERE b < thr
-         |GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-
-    "sample_stratified" ->
-      s"""WITH t AS (
-         |  SELECT event_type, event_id,
-         |    ${Oracles.sampleBucket("CAST(event_id AS VARCHAR)", 1000)} AS b
-         |  FROM events)
-         |SELECT event_type, count(*) AS n, min(event_id) AS min_id, max(event_id) AS max_id
-         |FROM t
-         |WHERE (event_type = 'click' AND b < 500) OR (event_type = 'view' AND b < 100)
-         |   OR (event_type = 'purchase' AND b < 1000) OR (event_type = 'signup' AND b < 1000)
-         |   OR (event_type = 'error' AND b < 250)
-         |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "range_join" ->
-      """WITH ev AS (
-        |  SELECT event_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec, value FROM events),
-        |inc AS (
-        |  SELECT event_id AS incident_id, sec - 1800 AS start_sec, sec + 1800 AS end_sec
-        |  FROM ev ORDER BY value DESC, event_id LIMIT 50)
-        |SELECT i.incident_id, count(*) AS n_events, round(sum(e.value), 2) AS sum_value
-        |FROM ev e JOIN inc i ON e.sec >= i.start_sec AND e.sec <= i.end_sec
-        |GROUP BY i.incident_id ORDER BY i.incident_id""".stripMargin,
-
-    "asof_join" ->
-      """SELECT l.event_id, l.user_id, l.event_type,
-        |  r.event_id AS signup_event_id, epoch_us(r.ts) AS signup_ts_us
-        |FROM events l
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'signup') r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.event_id""".stripMargin,
-
-    "topk_per_group" ->
-      """SELECT * FROM (
-        |  SELECT p_brand, l_partkey,
-        |    round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
-        |    row_number() OVER (PARTITION BY p_brand
-        |      ORDER BY round(sum(l_extendedprice * (1.0 - l_discount)), 2) DESC, l_partkey) AS rank
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  GROUP BY p_brand, l_partkey)
-        |WHERE rank <= 3 ORDER BY p_brand, rank""".stripMargin,
-
-    "rollup_revenue" ->
-      """SELECT CAST(year(l_shipdate) AS INT) AS ship_year, l_returnflag,
-        |  round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-        |FROM lineitem
-        |GROUP BY ROLLUP (ship_year, l_returnflag)
-        |ORDER BY ship_year, l_returnflag, n""".stripMargin,
-
-    "cube_agg" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_extendedprice), 2) AS sum_price, count(*) AS n,
-        |  CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
-        |FROM lineitem
-        |GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin,
-
-    "grouping_sets_agg" ->
-      """SELECT CAST(year(l_shipdate) AS INT) AS ship_year, l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 2) AS sum_qty, count(*) AS n,
-        |  CAST(GROUPING(ship_year, l_returnflag, l_linestatus) AS BIGINT) AS gid
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((ship_year, l_returnflag), (l_linestatus), ())
-        |ORDER BY gid, ship_year, l_returnflag, l_linestatus""".stripMargin,
-
-    "unpivot_measures" ->
-      """WITH u AS (
-        |  SELECT l_orderkey, 'l_quantity' AS measure, l_quantity AS val FROM lineitem
-        |  UNION ALL
-        |  SELECT l_orderkey, 'l_extendedprice', l_extendedprice FROM lineitem
-        |  UNION ALL
-        |  SELECT l_orderkey, 'l_discount', l_discount FROM lineitem
-        |  UNION ALL
-        |  SELECT l_orderkey, 'l_tax', l_tax FROM lineitem)
-        |SELECT measure, count(*) AS n, round(sum(val), 2) AS total,
-        |  round(avg(val), 4) AS mean
-        |FROM u GROUP BY measure ORDER BY measure""".stripMargin,
-
-    "stats_summary" ->
-      """SELECT l_returnflag, count(*) AS n,
-        |  round(avg(l_quantity), 4) AS avg_qty,
-        |  round(stddev_samp(l_quantity), 4) AS sd_qty,
-        |  round(var_samp(l_quantity), 4) AS var_qty,
-        |  round(corr(l_quantity, l_extendedprice), 4) + 0 AS corr_qty_price,
-        |  round(covar_samp(l_discount, l_tax), 6) + 0 AS cov_disc_tax
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "setop_customers" ->
-      """SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1995
-        |INTERSECT
-        |SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1996
-        |EXCEPT
-        |SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1997
-        |ORDER BY o_custkey""".stripMargin,
-
-    "semi_anti_join" ->
-      """SELECT c_mktsegment, count(*) AS n, 'with_orders' AS kind
-        |FROM customer WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |GROUP BY c_mktsegment
-        |UNION ALL
-        |SELECT c_mktsegment, count(*) AS n, 'without_orders' AS kind
-        |FROM customer WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |GROUP BY c_mktsegment
-        |ORDER BY kind, c_mktsegment""".stripMargin,
-
-    "distinct_agg" ->
-      """SELECT event_type, count(DISTINCT user_id) AS n_users,
-        |  count(*) AS n_events, round(sum(value), 2) AS total_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "heavy_hitters" ->
-      """SELECT event_type, count(*) AS n FROM events
-        |GROUP BY event_type ORDER BY n DESC, event_type""".stripMargin,
-
-    "retention_cohorts" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 604800 AS week
-        |  FROM events),
-        |cohort AS (
-        |  SELECT user_id, min(week) AS cohort_week FROM e
-        |  WHERE event_type = 'signup' GROUP BY user_id),
-        |active AS (SELECT DISTINCT user_id, week FROM e)
-        |SELECT c.cohort_week, a.week - c.cohort_week AS week_offset,
-        |  count(DISTINCT c.user_id) AS n_active
-        |FROM cohort c JOIN active a ON c.user_id = a.user_id
-        |WHERE a.week >= c.cohort_week
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // identical semantics batch (pattern_funnel) and streaming
-    // (stream_pattern) -- one oracle serves both
-    "pattern_funnel" -> patternChainSql,
-    "stream_pattern" -> patternChainSql,
-
-    "funnel_steps" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type, CAST(floor(epoch(ts)) AS BIGINT) AS tss
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id,
-        |    min(CASE WHEN event_type = 'view' THEN tss END) AS t_view,
-        |    min(CASE WHEN event_type = 'click' THEN tss END) AS t_click,
-        |    min(CASE WHEN event_type = 'purchase' THEN tss END) AS t_buy
-        |  FROM e GROUP BY user_id)
-        |SELECT count(*) AS n_users, count(t_view) AS n_view,
-        |  CAST(coalesce(sum(CASE WHEN t_view < t_click THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_view_click,
-        |  CAST(coalesce(sum(CASE WHEN t_view < t_click AND t_click < t_buy THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_full
-        |FROM s""".stripMargin,
-
-    "value_histogram" ->
-      """SELECT
-        |  CASE WHEN value < 0.0 THEN 0 WHEN value >= 600.0 THEN 25
-        |    ELSE CAST(floor(value / 25.0) AS BIGINT) + 1 END AS bucket,
-        |  count(*) AS n, round(sum(value), 2) AS total
-        |FROM events GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    "anomaly_zscore" ->
-      """WITH s AS (
-        |  SELECT event_type, avg(value) AS mu, stddev_samp(value) AS sd
-        |  FROM events GROUP BY 1),
-        |z AS (
-        |  SELECT e.event_type, round((e.value - s.mu) / s.sd, 6) AS z
-        |  FROM events e JOIN s USING (event_type))
-        |SELECT event_type, count(*) AS n,
-        |  CAST(sum(CASE WHEN abs(z) >= 3.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalies,
-        |  round(max(abs(z)), 4) AS max_z
-        |FROM z GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "skew_distinct" ->
-      """SELECT event_type, count(DISTINCT user_id) AS n_distinct
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "incr_agg_merge" ->
-      """SELECT event_type, count(*) AS n,
-        |  round(sum(value), 2) AS total,
-        |  min(value) AS lo, max(value) AS hi,
-        |  round(round(sum(value), 2) / count(*), 4) AS mean
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "json_extract" ->
-      """WITH e AS (
-        |  SELECT CAST(json_extract_string(props, '$.k') AS INT) AS k FROM events)
-        |SELECT k % 10 AS k_bucket, count(*) AS n, min(k) AS min_k, max(k) AS max_k
-        |FROM e GROUP BY 1 ORDER BY k_bucket""".stripMargin,
-
-    "json_variant" ->
-      """WITH e AS (
-        |  SELECT CAST(json_extract_string(props, '$.k') AS INT) AS k FROM events)
-        |SELECT k % 10 AS k_bucket, count(*) AS n, min(k) AS min_k, max(k) AS max_k
-        |FROM e GROUP BY 1 ORDER BY k_bucket""".stripMargin,
-
-    // TRY_CAST(raw AS JSON), not a json_valid() filter: DuckDB may
-    // evaluate a projection before/alongside the filter, so extraction
-    // must itself be total on malformed input.
-    "json_quarantine" ->
-      """WITH r AS (
-        |  SELECT event_id,
-        |    CASE WHEN event_id % 13 = 0 THEN '{bad' || props ELSE props END AS raw
-        |  FROM events),
-        |p AS (
-        |  SELECT CAST(json_extract_string(TRY_CAST(raw AS JSON), '$.k') AS INT) AS k
-        |  FROM r),
-        |valid AS (
-        |  SELECT CAST(k % 10 AS INT) AS k_bucket, count(*) AS n,
-        |    min(k) AS min_k, max(k) AS max_k
-        |  FROM p WHERE k IS NOT NULL GROUP BY 1),
-        |quarantined AS (
-        |  SELECT CAST(-1 AS INT) AS k_bucket, count(*) AS n,
-        |    CAST(NULL AS INT) AS min_k, CAST(NULL AS INT) AS max_k
-        |  FROM p WHERE k IS NULL)
-        |SELECT * FROM valid UNION ALL SELECT * FROM quarantined
-        |ORDER BY k_bucket""".stripMargin,
-
-    "skew_join" ->
-      """WITH t AS (
-        |  SELECT user_id, round(sum(value), 2) AS user_total FROM events GROUP BY user_id)
-        |SELECT e.event_id, e.user_id, t.user_total
-        |FROM events e JOIN t ON e.user_id = t.user_id
-        |ORDER BY e.event_id""".stripMargin,
-
-    "compact_files" ->
-      """SELECT 'after' AS phase, CAST(2 AS BIGINT) AS n_files,
-        |  count(*) AS n_rows, round(sum(value), 2) AS total FROM events
-        |UNION ALL
-        |SELECT 'before', CAST(64 AS BIGINT), count(*), round(sum(value), 2)
-        |FROM events ORDER BY phase""".stripMargin,
-
-    // restatement replay: the final table is every pre-cutoff row plus
-    // the corrected (error-free) rows of the two restated days — exactly
-    // what dynamic overwrite leaves on disk
-    "partition_overwrite" ->
-      """WITH ev AS (
-        |  SELECT strftime(ts, '%Y-%m-%d') AS day, event_type, event_id FROM events),
-        |last2 AS (SELECT DISTINCT day FROM ev ORDER BY day DESC LIMIT 2),
-        |final AS (
-        |  SELECT * FROM ev WHERE day NOT IN (SELECT day FROM last2)
-        |  UNION ALL
-        |  SELECT * FROM ev
-        |  WHERE day IN (SELECT day FROM last2) AND event_type != 'error')
-        |SELECT day, count(*) AS n_events,
-        |  CAST(count(DISTINCT event_type) AS BIGINT) AS n_types,
-        |  CAST(min(event_id) AS BIGINT) AS min_id,
-        |  CAST(max(event_id) AS BIGINT) AS max_id
-        |FROM final GROUP BY day ORDER BY day""".stripMargin,
-
-    "schema_evolution" ->
-      """WITH m AS (
-        |  SELECT o_totalprice, o_orderkey % 2 = 1 AS has_status FROM orders)
-        |SELECT has_status, count(*) AS n, round(sum(o_totalprice), 2) AS total
-        |FROM m GROUP BY has_status ORDER BY has_status""".stripMargin,
-
-    "csv_roundtrip" ->
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "json_roundtrip" ->
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "xml_roundtrip" ->
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "window_running" ->
-      """SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS price,
-        |  round(sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderkey
-        |    ROWS UNBOUNDED PRECEDING), 2) AS running_total,
-        |  round(lag(o_totalprice, 1) OVER (PARTITION BY o_custkey ORDER BY o_orderkey), 2) AS prev_price,
-        |  row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) AS order_rank
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "percentile_stats" ->
-      """SELECT l_returnflag,
-        |  round(quantile_cont(l_quantity, 0.25), 2) AS p25,
-        |  round(quantile_cont(l_quantity, 0.5), 2) AS p50,
-        |  round(quantile_cont(l_quantity, 0.75), 2) AS p75,
-        |  round(avg(l_quantity), 2) AS mean_qty
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "pivot_events" ->
-      """SELECT user_id,
-        |  count(*) FILTER (WHERE event_type = 'click') AS "click",
-        |  count(*) FILTER (WHERE event_type = 'view') AS "view",
-        |  count(*) FILTER (WHERE event_type = 'purchase') AS "purchase",
-        |  count(*) FILTER (WHERE event_type = 'signup') AS "signup",
-        |  count(*) FILTER (WHERE event_type = 'error') AS "error"
-        |FROM events WHERE user_id < 20
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "array_agg" ->
-      """SELECT event_type,
-        |  array_to_string(list_sort(list(DISTINCT user_id)), ',') AS users,
-        |  count(*) AS n
-        |FROM events WHERE user_id < 25
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    // approx_sketches: DuckDB replays only the EXACT side; the tolerance
-    // booleans are constants here because a correct sketch must land inside
-    // them — Spark-side drift fails the hash compare.
-    "approx_sketches" ->
-      """SELECT event_type,
-        |  count(DISTINCT user_id) AS exact_users,
-        |  TRUE AS hll_ok,
-        |  TRUE AS median_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "agg_topk" ->
-      """SELECT * FROM (
-        |  SELECT event_type,
-        |    row_number() OVER (PARTITION BY event_type ORDER BY value DESC, event_id) AS rank,
-        |    event_id, value
-        |  FROM events)
-        |WHERE rank <= 3 ORDER BY event_type, rank""".stripMargin,
-
-    "skyline_users" ->
-      """WITH u AS (
-        |  SELECT user_id, round(sum(value), 2) AS total, count(*) AS n
-        |  FROM events GROUP BY user_id)
-        |SELECT total, n, user_id FROM u a
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM u b
-        |  WHERE b.total >= a.total AND b.n >= a.n
-        |    AND (b.total > a.total OR b.n > a.n))
-        |ORDER BY total DESC, n DESC, user_id""".stripMargin,
-
-    "bucketed_join" ->
-      """SELECT year(o_orderdate) AS order_year, count(*) AS n,
-        |  round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "zorder_prune" ->
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total,
-        |  min(event_id) AS min_id, max(event_id) AS max_id
-        |FROM events
-        |WHERE user_id BETWEEN 10 AND 30 AND value BETWEEN 50.0 AND 150.0
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q5_region_revenue" ->
-      """SELECT r_name, n_name,
-        |  round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
-        |  count(*) AS n_items
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey AND year(o_orderdate) = 1995
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND s_nationkey = c_nationkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name, n_name ORDER BY r_name, n_name""".stripMargin,
-
-    "exists_subquery" ->
-      """SELECT c_mktsegment, count(*) AS n_custs
-        |FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o
-        |              WHERE o.o_custkey = c.c_custkey
-        |                AND year(o.o_orderdate) = 1995)
-        |  AND NOT EXISTS (SELECT 1 FROM orders o2
-        |                  WHERE o2.o_custkey = c.c_custkey
-        |                    AND year(o2.o_orderdate) = 1997)
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "window_ranks" ->
-      """SELECT event_type, event_id, round(value, 2) AS value,
-        |  rank() OVER w AS rnk, dense_rank() OVER w AS drnk,
-        |  round(percent_rank() OVER w, 6) AS prnk,
-        |  round(cume_dist() OVER w, 6) AS cdist
-        |FROM events WHERE user_id < 5
-        |WINDOW w AS (PARTITION BY event_type ORDER BY value DESC, event_id)
-        |ORDER BY event_type, rnk, event_id""".stripMargin,
-
-    "array_analytics" ->
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-        |SELECT vec_id,
-        |  CAST(len(list_filter(v, x -> x > 0)) AS INT) AS n_pos,
-        |  round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-        |    list_transform(v, x -> abs(x))), (a, x) -> a + x), 6) AS l1_norm,
-        |  round(list_max(v), 6) AS max_val,
-        |  len(list_filter(v, x -> x > 0.2)) > 0 AS has_big
-        |FROM e ORDER BY vec_id""".stripMargin,
-
-    "regex_numbers" ->
-      """WITH x AS (
-        |  SELECT event_type,
-        |    CAST(unnest(regexp_extract_all(props, '[0-9]+')) AS BIGINT) AS v
-        |  FROM events)
-        |SELECT event_type, count(*) AS n, CAST(sum(v) AS BIGINT) AS total,
-        |  min(v) AS min_v, max(v) AS max_v
-        |FROM x GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "merge_upsert" ->
-      """WITH ev AS (SELECT event_id, user_id, event_type, value FROM events),
-        |t AS (SELECT * FROM ev WHERE event_id % 3 != 0),
-        |s AS (SELECT event_id, user_id, event_type, value + 100 AS value
-        |      FROM ev WHERE event_id % 2 = 0)
-        |SELECT coalesce(s.event_id, t.event_id) AS event_id,
-        |  CASE WHEN s.event_id IS NOT NULL THEN s.user_id ELSE t.user_id END AS user_id,
-        |  CASE WHEN s.event_id IS NOT NULL THEN s.event_type ELSE t.event_type END AS event_type,
-        |  round(CASE WHEN s.event_id IS NOT NULL THEN s.value ELSE t.value END, 2) AS value,
-        |  CASE WHEN s.event_id IS NOT NULL AND t.event_id IS NOT NULL THEN 'updated'
-        |       WHEN t.event_id IS NULL THEN 'inserted' ELSE 'kept' END AS op
-        |FROM t FULL JOIN s ON t.event_id = s.event_id
-        |WHERE NOT (s.event_id IS NOT NULL AND s.event_type = 'error')
-        |ORDER BY event_id""".stripMargin,
-
-    "text_normalize" ->
-      s"""WITH n AS (
-         |  SELECT doc_id, text,
-         |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'),
-         |      ' +', ' ', 'g')) AS norm
-         |  FROM documents)
-         |SELECT doc_id, length(text) AS raw_len, length(norm) AS norm_len,
-         |  CAST(len(${Oracles.tokens("norm")}) AS INT) AS norm_tokens,
-         |  ${Oracles.polyHash("norm")} AS norm_fp
-         |FROM n ORDER BY doc_id""".stripMargin,
-
-    // the roundtrip is Spark-internal (pack to JSON, parse back, explode);
-    // the oracle computes the same result from the source directly
-    "json_nested" ->
-      """SELECT l_orderkey AS order_id, count(*) AS n_items,
-        |  round(sum(l_quantity), 2) AS sum_qty, max(l_linenumber) AS max_line
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "null_handling" ->
-      """WITH ev AS (
-        |  SELECT event_id, event_type,
-        |    CASE WHEN event_id % 5 = 0 THEN NULL ELSE value END AS v
-        |  FROM events),
-        |x AS (SELECT *, coalesce(v, -1.0) AS v_filled,
-        |        nullif(coalesce(v, -1.0), -1.0) AS v_nz FROM ev)
-        |SELECT event_type, count(*) AS n_rows, count(v) AS n_nonnull,
-        |  CAST(sum(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
-        |  round(sum(v_filled), 2) AS sum_filled,
-        |  round(avg(v_nz), 4) AS avg_nonnull,
-        |  CAST(sum(CASE WHEN v IS NOT DISTINCT FROM NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_nullsafe_eq
-        |FROM x GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "date_functions" ->
-      """WITH o AS (
-        |  SELECT o_orderkey, o_totalprice,
-        |    strftime(date_trunc('month', o_orderdate), '%Y-%m-%d') AS order_month,
-        |    strftime(o_orderdate + INTERVAL 3 MONTH, '%Y-%m-%d') AS plus_quarter,
-        |    strftime(last_day(o_orderdate), '%Y-%m-%d') AS month_end,
-        |    date_diff('day', CAST(o_orderdate AS DATE), DATE '1997-01-01') AS days_to_1997,
-        |    (isodow(o_orderdate) % 7) + 1 AS dow
-        |  FROM orders)
-        |SELECT order_month, count(*) AS n, round(sum(o_totalprice), 2) AS total,
-        |  min(plus_quarter) AS first_plus_q, max(month_end) AS month_end,
-        |  min(days_to_1997) AS min_days_to_1997, count(DISTINCT dow) AS n_dows
-        |FROM o GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "agg_misc" ->
-      """SELECT event_type,
-        |  (max(struct_pack(v := value, id := event_id))).id AS max_event,
-        |  (min(struct_pack(v := value, id := event_id))).id AS min_event,
-        |  CAST(count_if(value > 300) AS BIGINT) AS n_big,
-        |  bool_or(value > 590) AS any_huge,
-        |  bool_and(value >= 0) AS all_nonneg,
-        |  round(median(value), 2) AS med
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "table_diff" ->
-      """WITH v1 AS (SELECT event_id, event_type, value FROM events),
-        |v2 AS (
-        |  SELECT event_id, event_type,
-        |    value + CASE WHEN event_id % 7 = 0 THEN 10.0 ELSE 0.0 END AS value
-        |  FROM events WHERE event_type != 'error'
-        |  UNION ALL
-        |  SELECT event_id + 1000000, 'synthetic', 1.0
-        |  FROM events WHERE event_id % 1000 = 0),
-        |j AS (
-        |  SELECT coalesce(v1.event_id, v2.event_id) AS event_id,
-        |    CASE WHEN v1.event_id IS NULL THEN 'added'
-        |         WHEN v2.event_id IS NULL THEN 'removed'
-        |         WHEN v1.event_type IS DISTINCT FROM v2.event_type
-        |           OR v1.value IS DISTINCT FROM v2.value THEN 'changed'
-        |    END AS op
-        |  FROM v1 FULL JOIN v2 ON v1.event_id = v2.event_id)
-        |SELECT event_id, op FROM j WHERE op IS NOT NULL
-        |ORDER BY event_id""".stripMargin,
-
-    "interval_merge" ->
-      """WITH iv AS (
-        |  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS start_sec,
-        |    CAST(floor(epoch(ts)) AS BIGINT) + 1800 AS end_sec FROM events),
-        |m AS (
-        |  SELECT user_id, start_sec, end_sec,
-        |    max(end_sec) OVER (PARTITION BY user_id ORDER BY start_sec, end_sec
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_end
-        |  FROM iv),
-        |fl AS (SELECT *, CASE WHEN prev_end IS NULL OR start_sec > prev_end
-        |                 THEN 1 ELSE 0 END AS ni FROM m),
-        |isl AS (SELECT *, sum(ni) OVER (PARTITION BY user_id
-        |    ORDER BY start_sec, end_sec ROWS UNBOUNDED PRECEDING) AS island FROM fl)
-        |SELECT user_id, min(start_sec) AS start_sec, max(end_sec) AS end_sec,
-        |  count(*) AS n_merged
-        |FROM isl GROUP BY user_id, island
-        |ORDER BY user_id, start_sec""".stripMargin,
-
-    "markov_transitions" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type, CAST(floor(epoch(ts)) AS BIGINT) AS tss, event_id
-        |  FROM events),
-        |nx AS (
-        |  SELECT event_type AS state,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY tss, event_id) AS next_state
-        |  FROM e),
-        |cnt AS (SELECT state, next_state, count(*) AS n FROM nx
-        |        WHERE next_state IS NOT NULL GROUP BY 1, 2)
-        |SELECT state, next_state, n,
-        |  round(n / sum(n) OVER (PARTITION BY state), 6) AS prob
-        |FROM cnt ORDER BY state, next_state""".stripMargin,
-
-    "bigram_lm" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS t FROM documents),
-         |bg AS (
-         |  SELECT unnest(list_transform(range(1, len(t)),
-         |    i -> struct_pack(w1 := t[i], w2 := t[i+1]))) AS b
-         |  FROM toks WHERE len(t) >= 2),
-         |cnt AS (SELECT b.w1 AS w1, b.w2 AS w2, count(*) AS n FROM bg GROUP BY 1, 2),
-         |nrm AS (
-         |  SELECT w1, w2, n,
-         |    round(n / sum(n) OVER (PARTITION BY w1), 6) AS prob
-         |  FROM cnt)
-         |SELECT w1, w2, n, prob FROM nrm WHERE n >= 5
-         |ORDER BY w1, w2""".stripMargin,
-
-    "lm_perplexity" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS t FROM documents),
-         |bg AS (
-         |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
-         |    i -> struct_pack(w1 := t[i], w2 := t[i+1]))) AS b
-         |  FROM toks WHERE len(t) >= 2),
-         |p AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM bg),
-         |cnt AS (SELECT w1, w2, count(*) AS n FROM p GROUP BY 1, 2),
-         |lm AS (SELECT w1, w2,
-         |         round(n / sum(n) OVER (PARTITION BY w1), 6) AS prob
-         |       FROM cnt),
-         |sc AS (
-         |  SELECT doc_id, count(*) AS n_bigrams, round(avg(ln(prob)), 4) AS avg_ll
-         |  FROM p JOIN lm USING (w1, w2) GROUP BY doc_id)
-         |SELECT doc_id, n_bigrams, avg_ll, round(exp(-avg_ll), 4) AS ppl
-         |FROM sc ORDER BY doc_id""".stripMargin,
-
-    // Streamed admission ≡ batch fit-then-score-then-filter (a
-    // per-document score cannot depend on batch boundaries). History-era
-    // LM; the delta scores under the frozen conditionals with the
-    // Laplace backoff replayed for any bigram the history never saw.
-    "stream_lm_gate" ->
-      s"""WITH htok AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS t FROM documents
-         |  WHERE doc_id % 50 <> 0),
-         |hbg AS (
-         |  SELECT unnest(list_transform(range(1, len(t)),
-         |    i -> struct_pack(w1 := t[i], w2 := t[i+1]))) AS b
-         |  FROM htok WHERE len(t) >= 2),
-         |cnt AS (SELECT b.w1 AS w1, b.w2 AS w2, count(*) AS n FROM hbg GROUP BY 1, 2),
-         |lm AS (SELECT w1, w2,
-         |         round(n / sum(n) OVER (PARTITION BY w1), 6) AS prob
-         |       FROM cnt),
-         |ctx AS (SELECT w1, sum(n) AS tot FROM cnt GROUP BY w1),
-         |v AS (SELECT count(DISTINCT x) AS v FROM (SELECT unnest(t) AS x FROM htok)),
-         |dtok AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS t FROM documents
-         |  WHERE doc_id % 50 = 0),
-         |dbg AS (
-         |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
-         |    i -> struct_pack(w1 := t[i], w2 := t[i+1]))) AS b
-         |  FROM dtok WHERE len(t) >= 2),
-         |p AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM dbg),
-         |sc AS (
-         |  SELECT p.doc_id, count(*) AS n_bigrams,
-         |    round(avg(ln(coalesce(lm.prob,
-         |      CASE WHEN ctx.tot IS NOT NULL
-         |        THEN round(CAST(0.5 AS DOUBLE) /
-         |               (ctx.tot + CAST(0.5 AS DOUBLE) * (SELECT v FROM v)), 6)
-         |        ELSE round(CAST(1.0 AS DOUBLE) / (SELECT v FROM v), 6) END))), 4)
-         |      AS avg_ll
-         |  FROM p LEFT JOIN lm ON p.w1 = lm.w1 AND p.w2 = lm.w2
-         |         LEFT JOIN ctx ON p.w1 = ctx.w1
-         |  GROUP BY p.doc_id)
-         |SELECT doc_id, n_bigrams, avg_ll, round(exp(-avg_ll), 4) AS ppl
-         |FROM sc WHERE round(exp(-avg_ll), 4) <= 31.0 ORDER BY doc_id""".stripMargin,
-
-    // Frozen-LM delta scoring ≡ fit-then-score restricted to the delta
-    // (a doc's score depends only on its own bigrams and the LM; the
-    // Laplace backoff never fires for a corpus-subset delta, so the MLE
-    // conditionals replay exactly).
-    "lm_perplexity_incr" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS t FROM documents),
-         |bg AS (
-         |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
-         |    i -> struct_pack(w1 := t[i], w2 := t[i+1]))) AS b
-         |  FROM toks WHERE len(t) >= 2),
-         |p AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM bg),
-         |cnt AS (SELECT w1, w2, count(*) AS n FROM p GROUP BY 1, 2),
-         |lm AS (SELECT w1, w2,
-         |         round(n / sum(n) OVER (PARTITION BY w1), 6) AS prob
-         |       FROM cnt),
-         |sc AS (
-         |  SELECT doc_id, count(*) AS n_bigrams, round(avg(ln(prob)), 4) AS avg_ll
-         |  FROM p JOIN lm USING (w1, w2) WHERE doc_id % 50 = 0 GROUP BY doc_id)
-         |SELECT doc_id, n_bigrams, avg_ll, round(exp(-avg_ll), 4) AS ppl
-         |FROM sc ORDER BY doc_id""".stripMargin,
-
-    "fuzzy_match" -> {
-      val bk = "CAST(length(name) AS VARCHAR) || '|' || substr(name, 1, 3) " +
-        "|| '|' || substr(name, greatest(length(name) - 2, 1), 3)"
-      s"""WITH titles AS (
-         |  SELECT doc_id AS id, substr(text, 1, 24) AS name FROM documents
-         |  WHERE length(substr(text, 1, 24)) >= 16),
-         |pert AS (
-         |  SELECT id + 1000000 AS id,
-         |    substr(name, 1, 11) || 'x' || substr(name, 13) AS name
-         |  FROM titles WHERE id % 5 = 0),
-         |l AS (SELECT id AS id_a, name AS name_a, $bk AS bk FROM titles),
-         |r AS (SELECT id AS id_b, name AS name_b, $bk AS bk FROM pert)
-         |SELECT id_a, name_a, id_b, name_b,
-         |  levenshtein(name_a, name_b) AS dist
-         |FROM l JOIN r USING (bk)
-         |WHERE id_a != id_b AND levenshtein(name_a, name_b) <= 2
-         |ORDER BY id_a, id_b""".stripMargin
-    },
-
-    "column_profile" -> {
-      def one(c: String) =
-        s"""SELECT '$c' AS column_name, count($c) AS n,
-           |  CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-           |  count(DISTINCT $c) AS ndv,
-           |  CAST(min($c) AS DOUBLE) AS min_val, CAST(max($c) AS DOUBLE) AS max_val,
-           |  round(avg($c), 4) AS avg_val FROM lineitem""".stripMargin
-      Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
-        .map(one).mkString("", "\nUNION ALL\n", "\nORDER BY column_name")
-    },
-
-    "kanon_risk" ->
-      """WITH cls AS (
-        |  SELECT c_nationkey, c_mktsegment, count(*) AS class_size
-        |  FROM customer GROUP BY 1, 2)
-        |SELECT c_nationkey, c_mktsegment, class_size,
-        |  round(class_size / (SELECT CAST(sum(class_size) AS DOUBLE) FROM cls), 6)
-        |    AS risk_share
-        |FROM cls WHERE class_size < 8
-        |ORDER BY c_nationkey, c_mktsegment""".stripMargin,
-
-    "dq_checks" ->
-      """WITH m AS (
-        |  SELECT
-        |    CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS cust_nulls,
-        |    CAST(sum(CASE WHEN o_totalprice < 0 OR o_totalprice > 1000000
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS price_oob,
-        |    CAST(sum(CASE WHEN o_orderstatus NOT IN ('O', 'F', 'P')
-        |      THEN 1 ELSE 0 END) AS BIGINT) AS status_bad,
-        |    CAST(count(o_orderkey) - count(DISTINCT o_orderkey) AS BIGINT) AS key_dups
-        |  FROM orders),
-        |fk AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS orphans FROM orders o
-        |  WHERE o.o_custkey IS NOT NULL AND NOT EXISTS (
-        |    SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)),
-        |rows_out AS (
-        |  SELECT 'not_null' AS check_name, 'o_custkey' AS column_name,
-        |    cust_nulls AS violations FROM m
-        |  UNION ALL
-        |  SELECT 'in_range', 'o_totalprice', price_oob FROM m
-        |  UNION ALL
-        |  SELECT 'accepted_values', 'o_orderstatus', status_bad FROM m
-        |  UNION ALL
-        |  SELECT 'unique', 'o_orderkey', key_dups FROM m
-        |  UNION ALL
-        |  SELECT 'fk_customer', 'o_custkey', orphans FROM fk)
-        |SELECT check_name, column_name, violations, violations = 0 AS passed
-        |FROM rows_out ORDER BY check_name, column_name""".stripMargin,
-
-    "reservoir_group" -> {
-      val rk = s"(${Oracles.polyHash("CAST(event_id AS VARCHAR)")} * " +
-        s"${graft.operators.Sampling.MixA}) % ${Oracles.P}"
-      s"""WITH h AS (
-         |  SELECT event_type, event_id, user_id, value, $rk AS rk FROM events),
-         |r AS (
-         |  SELECT *, row_number() OVER (
-         |    PARTITION BY event_type ORDER BY rk, event_id) AS sample_rank
-         |  FROM h)
-         |SELECT event_type, sample_rank, event_id, user_id,
-         |  round(value, 2) AS value
-         |FROM r WHERE sample_rank <= 3
-         |ORDER BY event_type, sample_rank""".stripMargin
-    },
-
-    // exact SQL: the bloom prefilter provably does not change the result
-    "bloom_decontam" ->
-      s"""WITH b AS (
-         |  SELECT doc_id AS bench_id, unnest(${Oracles.shingleHashes("text", 6)}) AS g
-         |  FROM documents WHERE doc_id % 50 = 0),
-         |t AS (
-         |  SELECT doc_id AS train_id, unnest(${Oracles.shingleHashes("text", 6)}) AS g
-         |  FROM documents WHERE doc_id % 50 <> 0)
-         |SELECT t.train_id, b.bench_id, count(*) AS n_shared
-         |FROM t JOIN b ON t.g = b.g
-         |GROUP BY t.train_id, b.bench_id HAVING count(*) >= 3
-         |ORDER BY t.train_id, b.bench_id""".stripMargin,
-
-    // the roundtrip queries aggregate what was written and read back, so
-    // the oracle aggregates the source table directly
-    "orc_roundtrip" ->
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "partitioned_scan" ->
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total,
-        |  count(DISTINCT user_id) AS n_users
-        |FROM events WHERE event_type IN ('click', 'purchase')
-        |GROUP BY event_type ORDER BY event_type""".stripMargin
-  )
+  /** The declared queries `only` keeps, in [[queries]]' order. */
+  def selected(only: Option[Set[String]]): Seq[(String, (SparkSession, String) => DataFrame)] =
+    queries.toSeq.filter { case (name, _) => only.forall(_.contains(name)) }
 }

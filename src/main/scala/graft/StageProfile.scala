@@ -26,11 +26,14 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     val query = args.headOption.getOrElse("corpus_clean_incr")
     val iters = if (args.length > 1) args(1).toInt else 6
+    val fn = SparkEntry.selected(SparkEntry.queryFilter(query)) match {
+      case Seq((_, f)) => f
+      case _ => throw new IllegalArgumentException(s"StageProfile profiles one query, got '$query'")
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val fn = SparkEntry.queries(query)
 
     // (iteration, stage call-site name, wall millis)
     val rows = new ConcurrentLinkedQueue[(Int, String, Long)]()

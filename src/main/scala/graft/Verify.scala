@@ -24,17 +24,16 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // comma-separated query filter for iterating on a subset locally;
+    // a full run sets nothing and dumps the whole surface
+    val only = SparkEntry.queryFilter(sys.env.getOrElse("SPARK_GRAFT_ONLY", ""))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // comma-separated query filter for iterating on a subset locally;
-    // the driver sets nothing and always dumps the full surface
-    val only = sys.env.get("SPARK_GRAFT_ONLY").filter(_.nonEmpty)
-      .map(_.split(",").map(_.trim).toSet)
     val declared = SparkEntry.queries
-    val toRun = declared.filter { case (name, _) => only.forall(_.contains(name)) }
+    val toRun = SparkEntry.selected(only)
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     toRun.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

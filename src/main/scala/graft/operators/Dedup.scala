@@ -529,7 +529,7 @@ object Dedup {
     * product). Coverage NEVER explodes the spanLen positions per span:
     * overlapping windows are union-merged with the interval trick (running
     * max of span end over a per-doc window ordered by start — the
-    * [[graft.SparkEntry]] interval_merge pattern), so the post-join state
+    * [[graft.queries.RelationalQueries]] interval_merge pattern), so the post-join state
     * is one row per duplicated window, not spanLen.
     */
   def duplicatedSpanCoverage(docs: DataFrame, spanLen: Int): DataFrame = {

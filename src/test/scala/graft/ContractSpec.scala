@@ -29,6 +29,17 @@ class ContractSpec extends AnyFunSuite {
     }
   }
 
+  test("the registry declares 207 distinct queries, each with exactly one oracle") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.size == 207 && names.distinct.size == 207)
+    assert(SparkEntry.queries.keySet == names.toSet)
+    assert(SparkEntry.oracleSql.keySet == names.toSet)
+    SparkEntry.registry.foreach { d =>
+      assert(d.oracle.trim.nonEmpty, d.name)
+      assert(SparkEntry.oracleSql(d.name) eq d.oracle, d.name)
+    }
+  }
+
   test("query names are stable identifiers (lowercase snake_case)") {
     SparkEntry.queries.keys.foreach { name =>
       assert(name.matches("[a-z][a-z0-9_]*"), name)

@@ -1,11 +1,17 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate.
 
-Usage: python3 tools/check.py <sfDir> <verifyOutDir>
+Usage: python3 tools/check.py <sfDir> <verifyOutDir> [NAME ...]
+       python3 tools/check.py --same-as <otherVerifyDir> <verifyOutDir> [NAME ...]
 
 Reads <verifyOutDir>/oracle_sql.json, runs each SQL in DuckDB with the
 parquet tables of <sfDir> registered as views, and compares against the
 parquet the Spark Verify main dumped at <verifyOutDir>/<name>/.
+
+--same-as compares two Verify runs instead (say, of a change and of its
+parent): each query's Spark dump must be bit-identical between the two
+directories under the same comparison, and the two oracle_sql.json maps
+must be equal key for key. No sf directory is read.
 
 Comparison mirrors the driver's pandas-hash gate, which is BIT-exact:
 both sides go through fetchdf / read_parquet into pandas, columns are
@@ -17,7 +23,7 @@ a value-level compare hides:
   * IEEE -0.0 vs +0.0 after round() of a tiny negative -- normalize
     with `+ 0` on both sides.
 """
-import sys, json, glob, os
+import argparse, sys, json, glob, os
 import duckdb
 import numpy as np
 import pandas as pd
@@ -69,9 +75,64 @@ def bit_diff(a, b):
     return None
 
 
+def read_dump(con, d):
+    """A query's Spark dump directory as a pandas frame, or None if absent."""
+    if not glob.glob(f"{d}/*.parquet"):
+        return None
+    return con.execute(f"SELECT * FROM '{d}/*.parquet'").fetchdf()
+
+
+def same_as(a_dir, b_dir, only=()):
+    """Compare two Verify output dirs; returns (report lines, n_differing)."""
+    con = duckdb.connect()
+    lines, n_bad = [], 0
+    names = {n for d in (a_dir, b_dir) for n in os.listdir(d)
+             if os.path.isdir(os.path.join(d, n))}
+    n_same = 0
+    for name in sorted(names):
+        if only and name not in only:
+            continue
+        a = read_dump(con, os.path.join(a_dir, name))
+        b = read_dump(con, os.path.join(b_dir, name))
+        if a is None or b is None:
+            side = a_dir if a is None else b_dir
+            lines.append(f"DIFF {name}: no dump in {side}"); n_bad += 1
+            continue
+        diff = bit_diff(canon(a), canon(b))
+        if diff is None:
+            lines.append(f"SAME {name}: {len(a)} rows"); n_same += 1
+        else:
+            lines.append(f"DIFF {name}: {diff}"); n_bad += 1
+    oa = json.load(open(os.path.join(a_dir, "oracle_sql.json")))
+    ob = json.load(open(os.path.join(b_dir, "oracle_sql.json")))
+    if only:
+        oa = {k: v for k, v in oa.items() if k in only}
+        ob = {k: v for k, v in ob.items() if k in only}
+    for k in sorted(set(oa) | set(ob)):
+        if k not in oa or k not in ob:
+            side = a_dir if k not in oa else b_dir
+            lines.append(f"DIFF oracle {k}: missing in {side}"); n_bad += 1
+        elif oa[k] != ob[k]:
+            lines.append(f"DIFF oracle {k}: SQL differs"); n_bad += 1
+    lines.append(f"== {n_same} dumps bit-identical, oracle_sql.json "
+                 f"{'equal' if oa == ob else 'differs'} ({len(oa)} vs {len(ob)} keys), "
+                 f"{n_bad} differences")
+    return lines, n_bad
+
+
 def main():
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--same-as", metavar="OTHER_VERIFY_DIR")
+    ap.add_argument("first", help="sf dir, or with --same-as a Verify output dir")
+    ap.add_argument("rest", nargs="*", help="Verify output dir (without --same-as), then query names")
+    args = ap.parse_args()
+    if args.same_as:
+        lines, n_bad = same_as(args.same_as, args.first, set(args.rest))
+        print("\n".join(lines))
+        sys.exit(1 if n_bad else 0)
+    if not args.rest:
+        ap.error("the Verify output dir is required")
+    sf_dir, out_dir, only = args.first, args.rest[0], set(args.rest[1:])
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -83,10 +144,9 @@ def main():
         d = os.path.join(out_dir, name)
         if not os.path.isdir(d) or (only and name not in only):
             continue
-        files = glob.glob(f"{d}/*.parquet")
-        if not files:
+        got = read_dump(con, d)
+        if got is None:
             print(f"FAIL {name}: no spark output parquet"); n_fail += 1; continue
-        got = con.execute(f"SELECT * FROM '{d}/*.parquet'").fetchdf()
         if name not in oracle:
             status = "rows-only " + ("PASS" if len(got) > 0 else "FAIL(empty)")
             print(f"{status} {name}: {len(got)} rows (no oracle)")
