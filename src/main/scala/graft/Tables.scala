@@ -1,13 +1,19 @@
 package graft
 
 import java.util.concurrent.ConcurrentHashMap
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeSet, Expression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, unix_micros, unix_timestamp}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Per-table catalog metadata (SURVEY.md §1.1): where the table lives
   * relative to a scale-factor root, and — for append-only tables — the
@@ -23,13 +29,15 @@ final case class TableMeta(name: String, location: String,
   * (`glue_rds_to_redshift.py:28,32,37`) rather than declaring schemas in
   * code; this object is the Spark-native analogue — name ->
   * (schema, location, bookmark key). Schemas are schema-on-read from
-  * parquet footers, resolved once per (sfDir, table) and cached for the
-  * life of the JVM; every [[load]] reads through the cached schema, so
-  * only the first load of a location runs the footer-reading Spark job
-  * (at cluster scale this is the metastore lookup that saves re-reading
-  * a 100 TB directory's footers per query). A location therefore keeps
-  * ONE schema: rewriting a table in place with different columns needs
-  * a new location. All reads go through here so that column
+  * parquet footers, resolved on the driver without a Spark job (see
+  * [[schema]]) once per (sfDir, table) and cached for the life of the
+  * JVM; every [[load]] reads through the cached schema, so no load
+  * starts a job to resolve it, and only a location's first load reads a
+  * footer. A JVM-lifetime cache does not outlive one run of a job that
+  * starts a fresh JVM per run (the reference's Glue job), so that first
+  * footer read is on every production run's path. A location keeps ONE
+  * schema: rewriting a table in place with different columns needs a
+  * new location. All reads go through here so that column
   * pruning / predicate pushdown stay visible in one place, and so
   * incremental readers resolve bookmark keys from the catalog instead of
   * hard-coding them at call sites.
@@ -61,17 +69,57 @@ object Tables {
   private def path(sfDir: String, name: String): String =
     s"$sfDir/${meta.get(name).map(_.location).getOrElse(s"$name.parquet")}"
 
-  /** Scan of `name` under `sfDir` with the cached catalog schema: no
-    * footer read, hence no Spark job, after the location's first load.
+  /** Scan of `name` under `sfDir` with the catalog schema: no Spark job,
+    * and no footer read after the location's first load.
     */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.schema(schema(spark, sfDir, name)).parquet(path(sfDir, name))
 
   private val schemaCache = new ConcurrentHashMap[(String, String), StructType]()
 
-  /** Footer-resolved schema, cached per (sfDir, table). */
+  /** Footer-resolved schema, cached per (sfDir, table): equal to
+    * `spark.read.parquet(location).schema` but resolved without a Spark
+    * job. Spark's own file index lists the location and infers its
+    * partition columns; the one footer Spark's (non-merging) inference
+    * reads — `_common_metadata`, else `_metadata`, else the first data
+    * file by path — is read on the driver and converted by Spark's
+    * converter; the data columns then become nullable and the partition
+    * columns are merged in as `HadoopFsRelation` does. Spark's inference
+    * reads that same single footer, inside a one-task job. A location
+    * with no file fails with Spark's `UNABLE_TO_INFER_SCHEMA`.
+    */
   def schema(spark: SparkSession, sfDir: String, name: String): StructType =
-    schemaCache.computeIfAbsent((sfDir, name), _ => spark.read.parquet(path(sfDir, name)).schema)
+    schemaCache.computeIfAbsent((sfDir, name), _ => footerSchema(spark, path(sfDir, name)))
+
+  private def footerSchema(spark: SparkSession, location: String): StructType = {
+    val (_, fs, _) = fileScan(spark.read.schema(new StructType()).parquet(location).queryExecution.analyzed)
+      .getOrElse(throw new IllegalStateException(s"$location is not a file scan"))
+    val files = fs.location match {
+      case index: PartitioningAwareFileIndex => index.allFiles().sortBy(_.getPath.toString)
+      case other => throw new IllegalStateException(s"unexpected file index ${other.getClass}")
+    }
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE, ParquetFileWriter.PARQUET_METADATA_FILE)
+    val file = summaries.iterator.flatMap(name => files.find(_.getPath.getName == name)).nextOption()
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      .getOrElse(throw new AnalysisException("UNABLE_TO_INFER_SCHEMA", Map("format" -> fs.fileFormat.toString)))
+    val session = fs.sparkSession
+    val input = HadoopInputFile.fromStatus(file, session.sessionState.newHadoopConfWithOptions(fs.options))
+    val footer = new Footer(file.getPath,
+      ParquetFooterReader.readFooter(input, ParquetMetadataConverter.SKIP_ROW_GROUPS))
+    val dataSchema = ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(session.sessionState.conf))
+    fs.copy(dataSchema = nullable(dataSchema).asInstanceOf[StructType])(session).schema
+  }
+
+  /** `t` with every field, element and map value nullable — what Spark's
+    * (package-private) `asNullable` makes of an inferred data schema.
+    */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "orders")
@@ -126,23 +174,8 @@ object Tables {
     * file scan under filters and projections (joins, aggregates, unions,
     * limits, local or bucketed relations).
     */
-  private[graft] def scanPartitions(df: DataFrame): Option[Int] = {
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
-    def scan(p: LogicalPlan, filters: Seq[Expression])
-        : Option[(LogicalRelation, HadoopFsRelation, Seq[Expression])] = p match {
-      case f: Filter => scan(f.child, filters ++ conjuncts(f.condition))
-      case pr: Project => scan(pr.child, filters)
-      case a: SubqueryAlias => scan(a.child, filters)
-      case l: LogicalRelation => l.relation match {
-        case fs: HadoopFsRelation if fs.bucketSpec.isEmpty => Some((l, fs, filters))
-        case _ => None
-      }
-      case _ => None
-    }
-    scan(df.queryExecution.analyzed, Nil).map { case (l, fs, filters) =>
+  private[graft] def scanPartitions(df: DataFrame): Option[Int] =
+    fileScan(df.queryExecution.analyzed).map { case (l, fs, filters) =>
       val spark = fs.sparkSession
       val partCols = AttributeSet(l.resolve(fs.partitionSchema, spark.sessionState.analyzer.resolver))
       val pushable = filters.filter(f => f.deterministic && !SubqueryExpression.hasSubquery(f))
@@ -159,6 +192,28 @@ object Tables {
       }.sortBy(_.length)(Ordering[Long].reverse)
       FilePartition.getFilePartitions(spark, splits, maxSplit).size
     }
+
+  /** The one non-bucketed file relation under filters and projections of
+    * an analyzed plan, with the filters' conjuncts; None for any other
+    * plan.
+    */
+  private def fileScan(plan: LogicalPlan): Option[(LogicalRelation, HadoopFsRelation, Seq[Expression])] = {
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other => Seq(other)
+    }
+    def scan(p: LogicalPlan, filters: Seq[Expression])
+        : Option[(LogicalRelation, HadoopFsRelation, Seq[Expression])] = p match {
+      case f: Filter => scan(f.child, filters ++ conjuncts(f.condition))
+      case pr: Project => scan(pr.child, filters)
+      case a: SubqueryAlias => scan(a.child, filters)
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation if fs.bucketSpec.isEmpty => Some((l, fs, filters))
+        case _ => None
+      }
+      case _ => None
+    }
+    scan(plan, Nil)
   }
 
   /** Epoch-second event time from `events.ts` — the ONE place the engine

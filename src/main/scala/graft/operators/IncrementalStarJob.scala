@@ -26,14 +26,17 @@ import graft.sources.{BookmarkStore, IncrementalReader}
   * the delta — the stats pass and the shared cache — reads the one file
   * listing taken when the delta frame was created, so a file landing
   * mid-run is neither counted nor committed and the next run ingests
-  * it. Catalog-cached schemas make repeat loads of a location job-free,
-  * and the spread guard reads the scan's file listing instead of
-  * planning. Jobs per run: a steady-state run over a 6k-row delta file
-  * of a 600k-row fact starts 10 Spark jobs, all of them the reports
-  * (building the shared cache) and the stats aggregate; a footer job per
-  * table load, a separate max-key aggregate and a trailing count made it
-  * 15. A location's first run adds the footer jobs that fill the schema
-  * cache.
+  * it. The shared cache holds only the columns the reports read
+  * ([[StarPipeline.cachedReportInput]]). The catalog resolves schemas on
+  * the driver and the spread guard reads the scan's file listing, so
+  * neither plans nor starts a job: a location's first run (every run of
+  * a job that starts a fresh JVM per run) starts exactly the jobs of a
+  * rerun. Jobs per run: a steady-state run over a 6k-row delta file of
+  * a 600k-row fact starts 10 Spark jobs, all of them the reports
+  * (building the shared cache) and the stats aggregate
+  * (`IncrementalStarJobSpec` bounds a tick at 10 with a listener); a
+  * footer job per table load, a separate max-key aggregate and a
+  * trailing count made it 15.
   */
 object IncrementalStarJob {
 
@@ -53,8 +56,8 @@ object IncrementalStarJob {
     val reader = new IncrementalReader(spark, sfDir, store)
     val keyCol = Tables.bookmarkKey("lineitem")
     val delta = reader.read("lineitem", ctx)
-    val denorm = StarPipeline.denormalizedFrom(delta,
-      Tables.supplier(spark, sfDir), Tables.part(spark, sfDir)).cache()
+    val denorm = StarPipeline.cachedReportInput(StarPipeline.denormalizedFrom(delta,
+      Tables.supplier(spark, sfDir), Tables.part(spark, sfDir)))
     try {
       val branches = reports.map { case (name, pool, report) =>
         ParallelReports.Branch(name, Some(pool), () => { sink(name, report(denorm)); None })

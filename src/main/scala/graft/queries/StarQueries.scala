@@ -73,7 +73,7 @@ object StarQueries {
     // S6+S11: both reports run concurrently from driver threads over one
     // cached frame, each pinned to its FAIR pool; results union'd.
     QueryDef("parallel_reports", (s, dir) => {
-      val shared = StarPipeline.denormalized(s, dir).cache()
+      val shared = StarPipeline.cachedReportInput(StarPipeline.denormalized(s, dir))
       // materialize once before the fan-out: two threads racing a cold
       // cache would each compute the full join (SURVEY.md §7.3)
       shared.count()

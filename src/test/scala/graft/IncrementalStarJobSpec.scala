@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
@@ -133,5 +134,39 @@ class IncrementalStarJobSpec extends SparkSuite {
     val r2 = IncrementalStarJob.run(spark, dir, store)((_, df) => { df.count(); () })
     assert(r2.rowsRead == full.filter(col("l_orderkey") > cutoff).count())
     assert(store.get("lineitem", "star_job").contains(full.agg(max("l_orderkey")).head().getLong(0)))
+  }
+
+  test("a first run on a fresh location starts as many Spark jobs as a rerun with its schemas cached") {
+    val dir = stagingDir()
+    writeFact(dir, Tables.lineitem(spark, sf))
+    def run() = jobsDuring(IncrementalStarJob.run(spark, dir,
+      new BookmarkStore(Files.createTempDirectory("incr-bm5").toString))((_, df) => { df.count(); () }))
+    val (firstJobs, first) = run()
+    val (rerunJobs, rerun) = run()
+    assert(first == rerun)
+    assert(firstJobs == rerunJobs, "resolving a fresh location's schemas starts no job")
+  }
+
+  test("a steady-state tick starts at most 10 Spark jobs and caches only the report columns") {
+    val dir = stagingDir()
+    val out = Files.createTempDirectory("incr-out").toString
+    val store = new BookmarkStore(Files.createTempDirectory("incr-bm6").toString)
+    val full = Tables.lineitem(spark, sf)
+    val cutoff = 15000L
+    writeFact(dir, full.filter(col("l_orderkey") <= cutoff))
+    IncrementalStarJob.run(spark, dir, store)((_, df) => { df.count(); () })
+    full.filter(col("l_orderkey") > cutoff).coalesce(1)
+      .write.mode("append").parquet(s"$dir/lineitem.parquet")
+
+    var cached = Map.empty[String, Seq[Seq[String]]]
+    val (jobs, r) = jobsDuring(IncrementalStarJob.run(spark, dir, store) { (name, df) =>
+      val widths = df.queryExecution.withCachedData.collect { case m: InMemoryRelation => m.output.map(_.name) }
+      synchronized { cached += name -> widths }
+      df.write.mode("append").parquet(s"$out/$name")
+    })
+    assert(r.rowsRead == full.filter(col("l_orderkey") > cutoff).count())
+    assert(jobs <= 10, s"a steady-state tick started $jobs jobs")
+    assert(cached.keySet == Set("supplier_report", "part_brand_report"))
+    cached.values.foreach(widths => assert(widths == Seq(StarPipeline.reportColumns)))
   }
 }

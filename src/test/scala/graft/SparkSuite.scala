@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
@@ -16,6 +19,21 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterEach {
   lazy val spark: SparkSession =
     GraftSession.builder("local[4]", 4).getOrCreate()
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `body` runs, counted by a listener. */
+  def jobsDuring[T](body: => T): (Int, T) = {
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusDrain(spark.sparkContext)
+      (jobs.get, out)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 
   override protected def afterEach(): Unit = {
     Residue.drain(spark)

@@ -1,32 +1,17 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampNTZType
 
-/** The catalog's job-free repeat loads and the file-index spread guard:
-  * a cached schema makes a location's second load start no Spark job, and
-  * `Tables.spread` decides exactly as `df.rdd.getNumPartitions < cores`
-  * did — without planning, and without starting a job.
+/** The catalog's job-free schema resolution and the file-index spread
+  * guard: `Tables.schema` equals Spark's own inference on every location
+  * shape yet starts no Spark job, and `Tables.spread` decides exactly as
+  * `df.rdd.getNumPartitions < cores` did — without planning, and without
+  * starting a job.
   */
 class TablesSpec extends SparkSuite {
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring[T](body: => T): (Int, T) = {
-    val jobs = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerBusDrain(spark.sparkContext)
-      (jobs.get, out)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   private def par = spark.sparkContext.defaultParallelism
 
@@ -36,13 +21,55 @@ class TablesSpec extends SparkSuite {
     val dir = TempDirs.create("tables-schema")
     Tables.supplier(spark, sf).write.parquet(s"$dir/supplier.parquet")
     val (firstJobs, first) = jobsDuring(Tables.load(spark, dir, "supplier"))
-    assert(firstJobs >= 1, "the first load resolves the schema from the footers")
+    assert(firstJobs == 0, "the first load resolves the schema on the driver")
     val (secondJobs, second) = jobsDuring(Tables.load(spark, dir, "supplier"))
     assert(secondJobs == 0)
     assert(second.schema == first.schema)
     assert(second.schema == spark.read.parquet(s"$dir/supplier.parquet").schema)
     assert(second.collect().toSeq.map(_.toString).sorted ==
       Tables.supplier(spark, sf).collect().toSeq.map(_.toString).sorted)
+  }
+
+  /** `Tables.schema` of `name` under `sfDir`, its Spark job count, and
+    * Spark's own inference over the same location.
+    */
+  private def resolved(sfDir: String, name: String) = {
+    val (jobs, schema) = jobsDuring(Tables.schema(spark, sfDir, name))
+    (jobs, schema, spark.read.parquet(s"$sfDir/${Tables.meta(name).location}").schema)
+  }
+
+  test("the schema of every testdata table equals Spark's inference and starts no Spark job") {
+    // a fresh catalog key over the same files: the resolution runs here
+    val fresh = Files.createTempDirectory("tables-fresh").resolve("sf")
+    Files.createSymbolicLink(fresh, Paths.get(sf))
+    Tables.all.foreach { t =>
+      val (jobs, schema, inferred) = resolved(fresh.toString, t)
+      assert(jobs == 0, t)
+      assert(schema == inferred, t)
+    }
+    assert(Tables.schema(spark, fresh.toString, "events")("ts").dataType == TimestampNTZType)
+  }
+
+  test("the schema of a multi-file location and of a partitioned location equals Spark's inference") {
+    val multi = TempDirs.create("tables-schema-multi")
+    Tables.lineitem(spark, sf).repartition(3).write.parquet(s"$multi/lineitem.parquet")
+    assert(Files.exists(Paths.get(multi, "lineitem.parquet", "_SUCCESS")))
+    val parted = TempDirs.create("tables-schema-parted")
+    Tables.lineitem(spark, sf).write.partitionBy("l_returnflag", "l_linenumber")
+      .parquet(s"$parted/lineitem.parquet")
+    Seq(multi, parted).foreach { dir =>
+      val (jobs, schema, inferred) = resolved(dir, "lineitem")
+      assert(jobs == 0, dir)
+      assert(schema == inferred, dir)
+    }
+  }
+
+  test("an empty location fails with the error class of Spark's inference") {
+    val dir = TempDirs.create("tables-schema-empty")
+    Files.createDirectories(Paths.get(dir, "lineitem.parquet"))
+    val inferred = intercept[AnalysisException](spark.read.parquet(s"$dir/lineitem.parquet").schema)
+    val ours = intercept[AnalysisException](Tables.schema(spark, dir, "lineitem"))
+    assert(ours.getCondition == inferred.getCondition)
   }
 
   test("spread decides as the planned scan's partition count on a single file and a multi-file scan") {
