@@ -123,10 +123,7 @@ object Similarity {
       .join(broadcast(queries.as("q")), col("q.vec_id") =!= col("c.vec_id"))
       .select(col("q.vec_id").as("query_id"), col("c.vec_id").as("neighbor_id"),
         round(cosineSimilarity(col("q.embedding"), col("c.embedding")), 6).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topPerQuery(joined, k)
   }
 
   /** Int8-quantized retrieval: score the WHOLE corpus on int8 codes —
@@ -177,26 +174,11 @@ object Similarity {
         col(s"$p.d") * col(s"$p.q_lo") * col(s"$p.q_lo"))
     val denom = norm("q") * norm("c")
     val qcos = when(denom === 0.0, lit(0.0)).otherwise(num / denom)
-    val wS = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcos").desc, col("neighbor_id"))
-    val shortlisted = cs.as("c")
+    val scored = cs.as("c")
       .join(broadcast(qs.as("q")), col("q.vec_id") =!= col("c.vec_id"))
       .select(col("q.vec_id").as("query_id"),
         col("c.vec_id").as("neighbor_id"), qcos.as("qcos"))
-      .withColumn("srank", row_number().over(wS))
-      .filter(col("srank") <= shortlist)
-      .select("query_id", "neighbor_id")
-    val wK = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    shortlisted
-      .join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("cv")), "neighbor_id")
-      .join(broadcast(queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("qv"))), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosineSimilarity(col("qv"), col("cv")), 6).as("cosine"))
-      .withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= k)
+    shortlistRerank(scored, corpus, queries, k, shortlist, broadcastQueries = true)
   }
 
   /** All `tables` bucket keys of `bits` bits packed into one long —
@@ -289,27 +271,72 @@ object Similarity {
       .orderBy(col("vec_id")).limit(nlist)
       .collect().toSeq
       .map(r => (r.getLong(0), r.getSeq[Float](1)))
-    // per-row scored cells: (cosine, -cell, cell) structs so lexicographic
-    // max/sort = best cosine, ties to the lowest cell id
-    def scored(emb: Column) = seeds.map { case (cid, v) =>
-      struct(cosineSimilarity(emb, typedlit(v)).as("cs"),
-        lit(-cid).as("nc"), lit(cid).as("cell"))
-    }
     val assigned = corpus.select(col("vec_id"), col("embedding"),
-      greatest(scored(col("embedding")): _*).getField("cell").as("cell"))
+      bestCell(seeds, col("embedding")).getField("cell").as("cell"))
     val probes = queries.select(col("vec_id").as("query_id"),
         col("embedding").as("qemb"),
-        explode(slice(reverse(array_sort(array(scored(col("embedding")): _*))),
-          1, nprobe)).as("p"))
+        probedCells(seeds, col("embedding"), nprobe).as("p"))
       .select(col("query_id"), col("qemb"), col("p.cell").as("cell"))
     val cand = assigned.join(broadcast(probes), Seq("cell"))
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(cosineSimilarity(col("qemb"), col("embedding")), 6).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    cand.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topPerQuery(cand, k)
   }
+
+  /** The `k` best rows per query_id by `cosine`, ties to the lower
+    * neighbor_id, numbered in `rank` — the last step of every vector top-k.
+    */
+  private[graft] def topPerQuery(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col("cosine").desc, col("neighbor_id"))))
+      .filter(col("rank") <= k)
+
+  /** The tail of every quantized top-k (int8, PQ, IVF-PQ): keep the
+    * `shortlist` best (query_id, neighbor_id) candidates per query by
+    * approximate `qcos`, re-score only those at full width from the
+    * `corpus` and `queries` embeddings, and keep the [[topPerQuery]] `k`.
+    * The query side is broadcast unless the batch is too large to collect
+    * (`broadcastQueries = false`).
+    */
+  private[graft] def shortlistRerank(scored: DataFrame, corpus: DataFrame, queries: DataFrame,
+                                     k: Int, shortlist: Int,
+                                     broadcastQueries: Boolean): DataFrame = {
+    val wS = Window.partitionBy(col("query_id"))
+      .orderBy(col("qcos").desc, col("neighbor_id"))
+    val rerankQ = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    topPerQuery(scored
+      .withColumn("srank", row_number().over(wS))
+      .filter(col("srank") <= shortlist)
+      .select("query_id", "neighbor_id")
+      .join(corpus.select(col("vec_id").as("neighbor_id"),
+        col("embedding").as("cv")), "neighbor_id")
+      .join(if (broadcastQueries) broadcast(rerankQ) else rerankQ, "query_id")
+      .select(col("query_id"), col("neighbor_id"),
+        round(cosineSimilarity(col("qv"), col("cv")), 6).as("cosine")), k)
+  }
+
+  /** The IVF cell arithmetic, one copy for [[ivfTopK]] and the persisted
+    * [[graft.sources.FrozenCellIndex]] stores, so the oracle replay
+    * carries over unchanged: `emb` scored against every (cell id,
+    * centroid) seed as a (cosine `cs`, -cell `nc`, `cell`) struct, so a
+    * lexicographic max or sort ranks best cosine first, ties to the
+    * lowest cell id.
+    */
+  private def cellScores(seeds: Seq[(Long, Seq[Float])], emb: Column): Seq[Column] =
+    seeds.map { case (cid, v) =>
+      struct(cosineSimilarity(emb, typedlit(v)).as("cs"),
+        lit(-cid).as("nc"), lit(cid).as("cell"))
+    }
+
+  /** The argmax cell struct of `emb`: `cell` assigns, `cs` is its cosine. */
+  private[graft] def bestCell(seeds: Seq[(Long, Seq[Float])], emb: Column): Column =
+    greatest(cellScores(seeds, emb): _*)
+
+  /** The `nprobe` best cell structs of `emb`, exploded one row each. */
+  private[graft] def probedCells(seeds: Seq[(Long, Seq[Float])], emb: Column,
+                                 nprobe: Int): Column =
+    explode(slice(reverse(array_sort(array(cellScores(seeds, emb): _*))), 1, nprobe))
 
   /** [[ivfTopK]] with nlist derived from the corpus size ([[Sizing]]):
     * cell population stays ~cellBudget rows as the corpus grows, so probe
@@ -343,10 +370,7 @@ object Similarity {
       .select(col("q.vec_id").as("query_id"), col("q.cluster").as("query_cluster"),
         col("c.vec_id").as("neighbor_id"), col("c.cluster").as("neighbor_cluster"),
         round(cosineSimilarity(col("q.embedding"), col("c.embedding")), 6).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    joined.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topPerQuery(joined, k)
       .select(col("query_id"), col("query_cluster"), col("rank"),
         col("neighbor_id"), col("neighbor_cluster"), col("cosine"))
   }
@@ -431,9 +455,7 @@ object Similarity {
         col("query_id_emb"), col("neighbor_id_emb"))
     val scored = cand.select(col("query_id"), col("neighbor_id"),
       round(cosineSimilarity(col("query_id_emb"), col("neighbor_id_emb")), 6).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topPerQuery(scored, k)
   }
 
   /** Multi-probe variant of [[hyperplaneTopK]]: each QUERY probes its
@@ -472,9 +494,7 @@ object Similarity {
       // for every duplicate, so max() is just the dedup verb)
       .groupBy(col("query_id"), col("neighbor_id"))
       .agg(max(col("cosine")).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topPerQuery(scored, k)
   }
 
   /** JL sign random projection: adds a `proj` column of `outDims` doubles
@@ -541,9 +561,7 @@ object Similarity {
         col("embedding").as("qv"))), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(cosineSimilarity(col("qv"), col("nv")), 6).as("cosine"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    rer.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    topPerQuery(rer, k)
   }
 
   // ---------------------------------------------------------------- PQ
@@ -742,26 +760,11 @@ object Similarity {
     val qdot = pqQdot(m, codes, col("q.qtab"), col("c.codes"))
     val denom = col("q.qnorm") * col("c.rnorm")
     val qcos = when(denom === 0.0, lit(0.0)).otherwise(qdot / denom)
-    val wS = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcos").desc, col("neighbor_id"))
-    val shortlisted = enc.as("c")
+    val scored = enc.as("c")
       .join(broadcast(qs.as("q")), col("q.vec_id") =!= col("c.vec_id"))
       .select(col("q.vec_id").as("query_id"),
         col("c.vec_id").as("neighbor_id"), qcos.as("qcos"))
-      .withColumn("srank", row_number().over(wS))
-      .filter(col("srank") <= shortlist)
-      .select("query_id", "neighbor_id")
-    val wK = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    shortlisted
-      .join(corpus.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("cv")), "neighbor_id")
-      .join(broadcast(queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("qv"))), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        round(cosineSimilarity(col("qv"), col("cv")), 6).as("cosine"))
-      .withColumn("rank", row_number().over(wK))
-      .filter(col("rank") <= k)
+    shortlistRerank(scored, corpus, queries, k, shortlist, broadcastQueries = true)
   }
 
   /** PQ ANN top-k: train codebooks on the corpus, encode it, scan the

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** The generation-ledger protocol of the persisted stores
   * ([[IvfIndex]], [[PqIndex]], [[IvfPqIndex]], [[InvertedIndex]],
@@ -85,6 +86,15 @@ final class GenerationLedger(spark: SparkSession, val dir: String, ctx: String,
   def readAsOf(base: Long, g: Long): DataFrame =
     spark.read.parquet(GenerationLedger.dirs(base, g, genDir, baseDir): _*)
 
+  /** The committed view as of one consistent capture; refuses an empty
+    * store.
+    */
+  def committedDf: DataFrame = {
+    val (base, g) = view
+    require(g >= 0, "the index is empty")
+    readAsOf(base, g)
+  }
+
   /** Append one generation: a no-op when `batchId` was already applied;
     * otherwise `write(next)`, then the watermark, `extra(next)` and
     * `last_batch` commit in one rename. `extra` runs after the write and
@@ -114,6 +124,20 @@ final class GenerationLedger(spark: SparkSession, val dir: String, ctx: String,
       catch { case _: Exception if bestEffort => () }
     }
   }
+
+  /** [[compact]] by folding the view into one `<base>-<g>` dir
+    * range-clustered and sorted on `cluster`, so a probe's filter on the
+    * leading column prunes row groups by their min/max stats. Values are
+    * byte-identical to the folded generations.
+    */
+  def compactClustered(retire: Boolean, cluster: String*): Unit =
+    compact(retire) { (base, g) =>
+      readAsOf(base, g)
+        .repartitionByRange(cluster.map(col): _*)
+        .sortWithinPartitions(cluster.map(col): _*)
+        .write.mode("overwrite").parquet(baseDir(g))
+      Map.empty
+    }
 
   /** Delete every directory a base at `g` supersedes: each `<tail>-<i>`
     * with i <= g and each `<base>-<j>` with j < g. Listing-based, so it

@@ -5,148 +5,50 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
 
-/** PERSISTED IVF index — the production shape of
-  * [[graft.operators.Similarity.ivfTopK]], which documents the cell
-  * assignment ("every corpus vector goes to its argmax-cosine cell in ONE
-  * map-only pass") but recomputes it per query so the oracle can replay
-  * it. Here the assignment is a real stored table: a 100 TB corpus is
-  * scored against the centroids exactly once, ever; each ingest assigns
-  * ONLY its delta against the FROZEN centroids and appends a generation.
-  *
-  * Frozen centroids are the load-bearing production property: seeds are
-  * derived from the bootstrap corpus and never move afterward, so an
-  * appended vector's cell is a pure function of the vector — existing
-  * assignments stay valid forever and appends are delta-sized. (Retraining
-  * centroids is a REBUILD — a new index directory — never an in-place
-  * mutation, exactly like a new bookmark lineage.)
-  *
-  * Assignment rows live in generation dirs `gen-0..gen-G` committed,
-  * replayed and compacted by the store's [[GenerationLedger]] (watermark
-  * slot `assign`, base slot `base`).
-  *
-  * Compaction here serves a DIFFERENT axis than [[LshBandIndex]]'s: the
-  * ANN probe side (queries × nprobe cells) is tiny and broadcast, so the
-  * stored assignments never shuffle no matter how many generations they
-  * span — there is no exchange for a bucketed layout to remove (the band
-  * index's probe equi-joins two data-sized sides, which is why it
-  * buckets). What DOES grow with ingest history is the scan itself: one
-  * dir per micro-batch whose row groups interleave all cells. [[compact]]
-  * folds the committed view into one cell-clustered base and the probe
-  * pushes its cell set into the scan as an `IN` filter, so row-group
-  * min/max stats skip unprobed cells (r13).
+/** PERSISTED IVF index — the flat-cell [[FrozenCellIndex]]: the
+  * production shape of [[graft.operators.Similarity.ivfTopK]], which
+  * documents the cell assignment ("every corpus vector goes to its
+  * argmax-cosine cell in ONE map-only pass") but recomputes it per query
+  * so the oracle can replay it. Here the assignment is a real stored
+  * table of (vec_id, cell) rows: a 100 TB corpus is scored against the
+  * centroids exactly once, ever; each ingest assigns ONLY its delta
+  * against the frozen centroids and appends a generation (watermark slot
+  * `assign`, base slot `base`). In-cell scoring is exact, so the only
+  * recall knob is nprobe. Frozen seeds, drift guard, operating point,
+  * sweep and maintenance are the base class's.
   */
 final class IvfIndex(spark: SparkSession, dir: String,
-                     val nlist: Int = 16) extends MaintainedStore {
+                     val nlist: Int = 16) extends FrozenCellIndex[IvfIndex](spark, dir) {
 
-  // MaintainedStore — the O(1) ledger surface the fleet walk reads
   def kind: String = "ivf"
-  override def pointSemantics: Boolean = true
-  override def pointGen: Option[Long] = operatingPointGen
-  override def pointProbe: Option[Int] = operatingPoint
+  protected def shortlisted: Boolean = false
 
   protected val ledger = new GenerationLedger(spark, dir, "ivf_index", "assign", "base")
-  private def seedsDir = s"$dir/seeds"
   // stored cell assignments are a function of the frozen seed set;
   // reopening with a different nlist mis-probes — fail at open
   // (FAISS-header rule)
   ledger.validate(Map("nlist" -> nlist))
 
-  /** The frozen centroids, collected as O(nlist) driver metadata — the
-    * same role as a bookmark read: never data-sized. MEMOIZED per index
-    * handle (r17): the centroids are frozen at bootstrap by contract
-    * (retraining is a rebuild into a fresh dir, never an in-place
-    * mutation), so one driver read serves every later probe — the old
-    * per-call re-read cost two scheduler round-trips (parquet job +
-    * collect job) on EVERY topK/driftReport/sweep, which a maintenance
-    * run pays half a dozen times. `lazy` keeps the pre-bootstrap read
-    * failure behavior: a failed initialization is not cached, so the
-    * first read AFTER bootstrap's write still sees the committed seeds.
-    */
-  private lazy val seeds: Seq[(Long, Seq[Float])] = spark.read.parquet(seedsDir)
-    .select(col("cell_id"), col("embedding"))
-    .collect().toSeq
-    .map(r => (r.getLong(0), r.getSeq[Float](1)))
-    .sortBy(_._1)
-
-  /** Per-row scored cells against the frozen seeds: lexicographic
-    * max/sort = best cosine, ties to the lowest cell id — identical
-    * arithmetic to [[Similarity.ivfTopK]] so the oracle replay carries
-    * over unchanged.
-    */
-  private def scored(ss: Seq[(Long, Seq[Float])])(emb: org.apache.spark.sql.Column) =
-    ss.map { case (cid, v) =>
-      struct(graft.functions.GraftFunctions.cosineSimilarity(emb, typedlit(v)).as("cs"),
-        lit(-cid).as("nc"), lit(cid).as("cell"))
-    }
-
-  private def assign(vectors: DataFrame, ss: Seq[(Long, Seq[Float])]): DataFrame =
+  protected def writeGen(g: Long, vectors: DataFrame): Unit =
     vectors.select(col("vec_id"),
-      greatest(scored(ss)(col("embedding")): _*).getField("cell").as("cell"))
-
-  private def writeGen(g: Long, vectors: DataFrame, ss: Seq[(Long, Seq[Float])]): Unit =
-    assign(vectors, ss)
+        Similarity.bestCell(seeds, col("embedding")).getField("cell").as("cell"))
       .select(col("vec_id").cast("long"), col("cell").cast("long"))
       .write.mode("overwrite").parquet(ledger.genDir(g))
 
-  /** First ingest: freeze the `nlist` lowest-vec_id vectors as centroids
-    * (IVF-flat sampled seeds, [[Similarity.ivfTopK]]'s family), assign
-    * every bootstrap vector, commit generation 0. Idempotent.
+  /** First ingest: freeze the seeds, assign every bootstrap vector,
+    * commit generation 0. Idempotent.
     */
   def bootstrap(corpus: DataFrame): Unit = if (committedGen < 0) {
-    corpus.select(col("vec_id").as("cell_id"), col("embedding"))
-      .orderBy(col("cell_id")).limit(nlist)
-      .write.mode("overwrite").parquet(seedsDir)
-    ledger.advance(None, _ => StoreParams.stamp(Map("nlist" -> nlist)))(
-      writeGen(_, corpus, seeds))
+    freezeSeeds(corpus)
+    ledger.advance(None, _ => StoreParams.stamp(Map("nlist" -> nlist)))(writeGen(_, corpus))
   }
 
-  /** DRIFT GUARD — the maintenance policy for frozen centroids under
-    * distribution shift. Frozen centroids keep every append CORRECT (a
-    * vector's cell is its exact argmax-cosine cell forever), but if the
-    * ingest distribution drifts away from the bootstrap corpus, shifted
-    * vectors land far from EVERY centroid: cells skew, probe candidate
-    * lists bloat, and recall decays even though no assignment is wrong.
-    *
-    * The guard measures that directly: the fraction of `delta` whose
-    * best-cell cosine falls below `cosineFloor`. One row out,
-    * O(delta × nlist) multiplies — a map-only pass plus one aggregate,
-    * the same cost shape as the append itself, so it is cheap to run on
-    * EVERY ingest.
-    *
-    * THE RULE (scaladoc'd policy, spec-pinned in `SimilaritySpec`): run
-    * `driftReport` on each delta BEFORE [[append]]; if
-    * `reseed_recommended` (frac_below > maxFracBelow), do NOT keep
-    * appending — REBUILD into a fresh index root re-seeded from the
-    * combined corpus (a new lineage, like a new bookmark context), then
-    * retire the old root. Never mutate centroids in place: readers of
-    * the old root stay consistent until the cutover.
-    *
-    * Empty delta yields n_vectors = 0 with NULL frac/recommendation —
-    * callers gate ingests on non-empty deltas (bookmark semantics).
-    */
-  def driftReport(delta: DataFrame, cosineFloor: Double,
-                  maxFracBelow: Double): DataFrame = {
-    val ss = seeds
-    delta
-      .select(greatest(scored(ss)(col("embedding")): _*)
-        .getField("cs").as("best_cos"))
-      .agg(count(lit(1)).as("n_vectors"),
-        sum(when(col("best_cos") < cosineFloor, 1L).otherwise(0L)).as("n_below"))
-      .select(col("n_vectors"), col("n_below"),
-        round(col("n_below").cast("double") / col("n_vectors"), 6).as("frac_below"),
-        (col("n_below").cast("double") >
-          lit(maxFracBelow) * col("n_vectors").cast("double"))
-          .as("reseed_recommended"))
-  }
-
-  /** The REBUILD half of [[driftReport]]'s maintenance policy: re-seed a
-    * FRESH index lineage at `newDir` from `corpus` (typically the
-    * committed corpus plus the drifted delta) and return its handle.
-    * This index is never mutated — readers of the old root stay
-    * consistent until the caller cuts over and retires it, exactly the
-    * new-bookmark-context discipline the policy scaladoc prescribes.
-    * Cost is one bootstrap over `corpus` — the recompute the frozen-seed
-    * appends amortize away, paid only when the drift guard fires.
+  /** The REBUILD half of the drift guard: re-seed a FRESH lineage at
+    * `newDir` from `corpus` (typically the committed corpus plus the
+    * drifted delta) and return its handle. This store is never mutated —
+    * readers of the old root stay consistent until the caller cuts over
+    * and retires it. Cost is one bootstrap over `corpus`, paid only when
+    * the guard fires.
     */
   def reseedInto(newDir: String, corpus: DataFrame,
                  nlist: Int = this.nlist): IvfIndex = {
@@ -180,186 +82,33 @@ final class IvfIndex(spark: SparkSession, dir: String,
         round(col("max_cell").cast("double") * col("n_cells") / col("n_rows"), 6)
           .as("skew"))
 
-  /** One incremental ingest: assign ONLY `delta` against the frozen
-    * centroids and append it as the next committed generation. Cost is
-    * delta × nlist multiplies — nothing touches the stored corpus.
-    * Maintenance policy: gate each ingest with [[driftReport]] (ingest
-    * drift) and watch [[balanceReport]] (probe-cost skew) — see the
-    * reseed rules there.
+  /** Every committed assignment row (vec_id, cell): the compacted base (if
+    * one exists) plus the generations committed after it.
     */
-  def append(delta: DataFrame): Unit = appendGen(delta, None)
+  def assignmentsDf: DataFrame = ledger.committedDf
 
-  /** Exactly-once streaming ingest: one micro-batch = one committed
-    * generation; a replayed batch id is a no-op ([[GenerationLedger.advance]]).
-    */
-  def appendBatch(delta: DataFrame, batchId: Long): Unit = appendGen(delta, Some(batchId))
-
-  private def appendGen(delta: DataFrame, batchId: Option[Long]): Unit = {
-    require(committedGen >= 0, "append before bootstrap: the index has no centroids")
-    ledger.advance(batchId)(writeGen(_, delta, seeds))
-  }
-
-  /** Every committed assignment row (vec_id, cell): the compacted base
-    * (if one exists) plus the generations committed after it.
-    */
-  def assignmentsDf: DataFrame = {
-    val (base, g) = ledger.view
-    require(g >= 0, "the index is empty")
-    ledger.readAsOf(base, g)
-  }
-
-  /** COMPACTION — fold the committed per-batch generation dirs into one
-    * `base-<g>` dir range-clustered on the cell id, so the probe join's
-    * parquet scan prunes unprobed cells via row-group min/max stats and
-    * directory listing stays O(1) in ingest history. Values are
-    * byte-identical (probes before/after hash-match); commit order and
-    * crash safety are [[GenerationLedger.compact]]'s. Superseded dirs are
-    * retired only on request — in-flight readers own the grace period.
-    */
-  def compact(retireSuperseded: Boolean = false): Unit =
-    ledger.compact(retireSuperseded) { (base, g) =>
-      ledger.readAsOf(base, g)
-        .repartitionByRange(col("cell"), col("vec_id"))
-        .sortWithinPartitions("cell", "vec_id")
-        .write.mode("overwrite").parquet(ledger.baseDir(g))
-      Map.empty
-    }
-
-  /** Commit the probe operating point — [[IvfPqIndex.commitOperatingPoint]]'s
-    * discipline for the flat-IVF store, whose ONLY recall knob is nprobe
-    * (in-cell scoring is exact). Stamped with the generation it was
-    * validated against; recall stored in basis points.
-    */
-  def commitOperatingPoint(nprobe: Int, recall: Double): Unit = {
-    require(nprobe >= 1 && nprobe <= nlist,
-      s"operating point nprobe=$nprobe out of range for nlist=$nlist")
-    ledger.commit(Map(
-      "op.nprobe" -> nprobe.toLong,
-      "op.recall_bp" -> math.rint(recall * 10000).toLong,
-      "op.gen" -> committedGen))
-  }
+  /** Commit the probe operating point ([[FrozenCellIndex.commitPoint]]). */
+  def commitOperatingPoint(nprobe: Int, recall: Double): Unit =
+    commitPoint(nprobe, None, recall)
 
   /** The committed nprobe, if a maintenance run has stamped one. */
-  def operatingPoint: Option[Int] =
-    ledger.get("op.nprobe").map(_.toInt)
-
-  /** Generation the committed point was validated against. */
-  def operatingPointGen: Option[Long] = ledger.get("op.gen")
-
-  /** Generations committed since the point was validated — the
-    * staleness signal a maintenance scheduler acts on
-    * ([[IvfPqIndex.operatingPointLag]]).
-    */
-  def operatingPointLag: Option[Long] = operatingPointGen.map(committedGen - _)
-
-  /** FRESHNESS-GATED probe — the [[operatingPointLag]] CONSUMER (r13
-    * verdict next-round #4: the staleness signal existed but nothing
-    * acted on it). A committed point is a claim about the data it was
-    * validated against; once more than `maxLag` generations land after
-    * the stamp, that claim is stale and serving on it is exactly the
-    * silent-degradation class the maintenance loop exists to kill — so
-    * a production consumer (the e2e pipeline's semantic stage) REFUSES
-    * and names the remedy instead of probing. `maxLag = 0` demands a
-    * point validated against the current committed view.
-    */
-  def topKFresh(corpus: DataFrame, queries: DataFrame, k: Int,
-                maxLag: Long): DataFrame = {
-    val lag = operatingPointLag.getOrElse(throw new IllegalStateException(
-      s"no committed operating point at $dir: run maintain() before serving"))
-    if (lag > maxLag) throw new IllegalStateException(
-      s"operating point at $dir is stale: validated $lag generations ago " +
-        s"(max $maxLag) - run maintain() at the era boundary before serving")
-    topK(corpus, queries, k)
-  }
-
-  /** Probe at the COMMITTED operating point — refuses (never guesses)
-    * when no maintenance run has committed one.
-    */
-  def topK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    val np = operatingPoint.getOrElse(throw new IllegalStateException(
-      s"no committed operating point at $dir: run maintain()/" +
-        "revalidateNprobe + commitOperatingPoint before probing with " +
-        "defaults, or pass nprobe explicitly"))
-    topK(corpus, queries, k, np)
-  }
+  def operatingPoint: Option[Int] = point.map(_.nprobe)
 
   /** MAINTENANCE: re-derive nprobe against the exact scan — the
-    * [[IvfPqIndex.revalidateOperatingPoint]] sweep collapsed to the one
-    * knob the flat store has. In-cell scoring is exact, so recall is
-    * monotone in nprobe and a single ascending phase suffices: the
-    * smallest nprobe whose reported (4-digit) recall clears the floor is
-    * chosen; if none clears, the widest is marked chosen with
-    * `floor_cleared=false` — the reseed signal, never a silent pick.
-    * Ground truth costs one full-width corpus pass with the query sample
-    * broadcast (era-boundary cadence); each swept setting is one stored
-    * probe.
+    * [[FrozenCellIndex.sweep]] with no shortlist phase. One row per
+    * setting: (nprobe, recall, chosen, floor_cleared).
     */
   def revalidateNprobe(corpus: DataFrame, queries: DataFrame,
                        k: Int, recallFloor: Double,
                        nprobes: Seq[Int]): DataFrame = {
-    require(k >= 1 && recallFloor > 0.0 && recallFloor <= 1.0)
-    // cap at the FROZEN seed count, not nlist — bootstrap's limit(nlist)
-    // is an upper bound ([[IvfPqIndex.revalidateOperatingPoint]]'s rule)
-    val np = nprobes.map(math.min(_, seeds.size)).distinct.sorted
-    require(np.nonEmpty, "sweep settings must be non-empty")
-    def sets(df: DataFrame): Map[Long, Set[Long]] =
-      df.select(col("query_id"), col("neighbor_id"))
-        .collect().groupBy(_.getLong(0))
-        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    val exact = sets(graft.operators.Similarity.bruteForceTopK(corpus, queries, k))
-    require(exact.nonEmpty, "no queries to validate against")
-    // settings probe CONCURRENTLY (r17, [[SweepFanout]]): each swept
-    // nprobe is an independent metadata-collect probe of the frozen
-    // index, so serial evaluation only serialized idle stage tails;
-    // values are per-setting deterministic and the emitted grid keeps
-    // `np`'s ascending order
-    val probed = scala.collection.concurrent.TrieMap[Int, Map[Long, Set[Long]]]()
-    SweepFanout.foreach(np)(p => probed.update(p, sets(topK(corpus, queries, k, p))))
-    val grid = np.map { p =>
-      val got = probed(p)
-      val r = exact.map { case (q, ex) =>
-        got.getOrElse(q, Set.empty[Long]).count(ex).toDouble / ex.size
-      }.sum / exact.size
-      (p, math.rint(r * 10000) / 10000)
-    }
-    val chosen = grid.find(_._2 >= recallFloor).map(_._1).getOrElse(np.last)
     import spark.implicits._
-    grid.map { case (p, r) => (p, r, p == chosen, r >= recallFloor) }
+    sweep(corpus, queries, k, recallFloor, nprobes, Nil)
+      .map(s => (s.nprobe, s.recall, s.chosen, s.cleared))
       .toDF("nprobe", "recall", "chosen", "floor_cleared")
   }
 
-  /** The era-boundary lifecycle for the flat store —
-    * [[IvfPqIndex.maintain]]'s policy with the one-knob sweep: drift
-    * guard on the delta, conditional [[reseedInto]] (fresh lineage
-    * serves), nprobe sweep on the serving index, commit gated on the
-    * recall floor (a failed sweep leaves the standing point untouched).
-    *
-    * CAPACITY (r13 verdict #2): with `cellBudget > 0` the loop can
-    * answer corpus GROWTH with capacity, not just probe width. A frozen
-    * nlist makes candidate volume per probe ∝ n/nlist — as the corpus
-    * outgrows its cells, the sweep's only way to clear the floor is
-    * nprobe→nlist, and the "validated operating point" degrades into a
-    * full coarse scan (exactly what the r13 10× rehearsal committed:
-    * nprobe=16 of nlist=16). So a sweep that clears ONLY at
-    * nprobe == nlist — or not at all — is read as a CAPACITY signal: the
-    * reseed branch is forced even when the drift guard is quiet,
-    * rebuilding at [[Similarity.Sizing.ivfNlist]](corpus count,
-    * cellBudget) — the same rule `sim_ivf_auto` oracle-checks — and the
-    * sweep re-runs on the grown lineage (`action = "grow"`). A fired
-    * capacity signal the run cannot act on is never silent health: with
-    * headroom (derived > nlist) but no `reseedDir` it reports
-    * `grow_due`; with NO headroom (derived <= nlist) it reports
-    * `capacity_exhausted` — the budget itself is spent and the remedy
-    * is a bigger `cellBudget` or a lower floor, not a same-size rebuild.
-    * Drift-fired reseeds also size their fresh lineage by the same rule,
-    * so a rebuild never re-freezes yesterday's capacity.
-    *
-    * COMPACTION (r13 verdict next-round #8): with `compactAbove > 0` the
-    * run also owns the read-amplification half — if the serving index's
-    * committed view spans more than `compactAbove` fragment dirs
-    * ([[fragmentCount]]), it is [[compact]]ed and the report says so.
-    * One scheduled call now owns the whole lifecycle: drift, capacity,
-    * probe point, layout.
+  /** The era-boundary lifecycle ([[FrozenCellIndex.maintainLoop]]) with
+    * the one-knob sweep.
     */
   def maintain(corpus: DataFrame, delta: DataFrame, queries: DataFrame,
                k: Int, recallFloor: Double,
@@ -368,70 +117,15 @@ final class IvfIndex(spark: SparkSession, dir: String,
                reseedDir: Option[String] = None,
                cellBudget: Int = 0,
                compactAbove: Int = 0): IvfIndex.Maintenance = {
-    val d = driftReport(delta, cosineFloor, maxFracBelow).collect().head
-    // empty delta → NULL drift columns; treat as "no drift signal"
-    // ([[IvfPqIndex.maintain]]'s rule), never crash the scheduled run
-    val nVec = d.getLong(0)
-    val nBelow = if (d.isNullAt(1)) 0L else d.getLong(1)
-    val frac = if (d.isNullAt(2)) 0.0 else d.getDouble(2)
-    val fired = !d.isNullAt(3) && d.getBoolean(3)
-    // the corpus-tracking nlist (one count, era cadence); 0 = growth off
-    val derived =
-      if (cellBudget > 0) Similarity.Sizing.ivfNlist(corpus.count(), cellBudget)
-      else 0
-    val reseed = fired && reseedDir.isDefined
-    var serving =
-      if (reseed) reseedInto(reseedDir.get, corpus, math.max(nlist, derived))
-      else this
-    def sweepOn(ix: IvfIndex): (Int, Double, Boolean) = {
-      val rows = ix.revalidateNprobe(corpus, queries, k, recallFloor, nprobes)
-        .collect()
-      val c = rows.filter(_.getBoolean(2)).head
-      (c.getInt(0), c.getDouble(1), c.getBoolean(3))
-    }
-    var (np, rec, cleared) = sweepOn(serving)
-    // capacity signal: the floor clears only at the full coarse scan
-    // (nprobe == frozen seed count) or not at all — buying recall
-    // query-side is exhausted; the answer is capacity, not probe width
-    def capacityExhausted = !cleared || np >= serving.seeds.size
-    var action = if (reseed) "reseed"
-      else if (fired) "reseed_due" else "revalidate"
-    if (!reseed && cellBudget > 0 && capacityExhausted) {
-      if (reseedDir.isDefined && derived > serving.nlist) {
-        serving = reseedInto(reseedDir.get, corpus, derived)
-        val g = sweepOn(serving)
-        np = g._1; rec = g._2; cleared = g._3
-        action = "grow"
-      } else if (!fired) {
-        // an unactionable capacity signal is never silent health: with
-        // headroom but no reseedDir the scheduler must supply room to
-        // grow (`grow_due`); with NO headroom (derived <= nlist, r14
-        // ADVICE) growing cannot help — the cell budget itself is
-        // exhausted and the point being served is a (near-)full coarse
-        // scan (`capacity_exhausted`), a distinct remedy: raise the
-        // budget or shrink the floor
-        action = if (derived > serving.nlist) "grow_due" else "capacity_exhausted"
-      }
-      // a fired drift guard outranks the capacity signal in the single
-      // action column: `reseed_due` already demands the rebuild that
-      // would also fix capacity (reseeds size by `derived` when
-      // cellBudget > 0) — overwriting it would hide the drift signal a
-      // scheduler must act on
-    }
-    if (cleared) serving.commitOperatingPoint(np, rec)
-    val compacted = compactAbove > 0 && serving.compactionDue(compactAbove)
-    if (compacted) serving.compact()
-    import spark.implicits._
-    // fired guard + no reseedDir = `reseed_due`, never a silent
-    // "revalidate" ([[IvfPqIndex.maintain]]'s reporting rule); same for
-    // a capacity signal the caller gave no room to act on
-    // (`grow_due`/`capacity_exhausted`)
-    val report = Seq((action,
-        nVec, nBelow, frac, serving.nlist, np, rec, cleared, cleared, compacted))
-      .toDF("action", "n_vectors", "n_below", "frac_below",
-        "nlist", "nprobe", "recall", "floor_cleared", "committed", "compacted")
+    val (serving, report) = maintainLoop(corpus, delta, queries, k, recallFloor,
+      cosineFloor, maxFracBelow, nprobes, Nil, reseedDir, cellBudget, compactAbove)(
+      reseedInto(_, corpus, _))
     IvfIndex.Maintenance(serving, report)
   }
+
+  protected def probe(corpus: DataFrame, queries: DataFrame, k: Int,
+                      nprobe: Int, shortlist: Option[Int]): DataFrame =
+    topK(corpus, queries, k, nprobe)
 
   /** ANN top-k against the stored index: queries score the frozen seeds
     * (driver metadata) to pick `nprobe` cells, the stored assignment scan
@@ -453,65 +147,23 @@ final class IvfIndex(spark: SparkSession, dir: String,
     */
   def topK(corpus: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
            probeBroadcastLimit: Int = IndexProbes.BroadcastRowLimit): DataFrame = {
-    val ss = seeds
-    require(nprobe >= 1 && nprobe <= ss.size)
-    // ONE materialized evaluation of the probe plan, consumed twice (r13
-    // ADVICE): the probed cells become an explicit IN filter on the
-    // stored scan (a join alone injects no row-group pruning on a
-    // non-partition column, so without it the compacted cell-clustered
-    // base is scanned in full) and the SAME materialized rows feed the
-    // candidate join — so both consumers read one evaluation even when
-    // the queries source is non-deterministic. Best-effort under block
-    // loss: see [[IndexProbes]]'s consistency note (a lost executor
-    // recomputes cached partitions from lineage)
-    val probePlan = queries.select(col("vec_id").as("query_id"),
-        col("embedding").as("qemb"),
-        explode(slice(reverse(array_sort(array(scored(ss)(col("embedding")): _*))),
-          1, nprobe)).as("p"))
-      .select(col("query_id"), col("qemb"), col("p.cell").as("cell"))
-    // payload-aware broadcast tier (r15 ADVICE): the row cap alone says
-    // nothing about bytes — a flat-IVF probe row is the query embedding
-    // (4 B/float) plus ids, so the estimate keeps the full row tier here
-    // while the IVF-PQ composition's 16 KB ADC rows cap far lower
-    val (probes, probedCells, bcast) =
-      IndexProbes.localize(spark, probePlan, probeBroadcastLimit,
-        rowBytes = 4L * ss.head._2.size + 48)
-    val candIds =
-      if (bcast)
-        assignmentsDf.filter(col("cell").isInCollection(probedCells))
-          .join(broadcast(probes), Seq("cell"))
-          .filter(col("query_id") =!= col("vec_id"))
-      else
-        // DISTRIBUTED shape ([[IvfPqIndex.topK]]'s rule, measured): the
-        // cell join moves only narrow (query_id, cell) rows — carrying
-        // the full query embedding through it puts |candidates|·Dim
-        // floats into the join's sort (at 8 GB heap the 42k-query
-        // declared batch spilled that sort to a 30 s query). The
-        // per-query embedding attaches AFTER candidate generation via a
-        // shuffle-HASH join on query_id (hash-build over the
-        // |queries|-sized payload; the candidate side streams unsorted),
-        // which also lands the rows on the query_id partitioning the
-        // rank window needs — no further exchange.
-        assignmentsDf.filter(col("cell").isInCollection(probedCells))
-          .join(probes.select(col("query_id"), col("cell")), Seq("cell"))
-          .filter(col("query_id") =!= col("vec_id"))
-          .join(probes.select(col("query_id"), col("qemb"))
-            .dropDuplicates("query_id").hint("shuffle_hash"), Seq("query_id"))
-    val cand = candIds
+    // payload-aware broadcast tier: a flat-IVF probe row is the query
+    // embedding (4 B/float) plus ids, so the estimate keeps the full row
+    // tier here while IVF-PQ's 16 KB ADC rows cap far lower
+    val (candIds, _) = probeJoin(assignmentsDf, queries, nprobe,
+      Seq("qemb" -> col("embedding")), probeBroadcastLimit,
+      rowBytes = 4L * seeds.head._2.size + 48)(identity)
+    Similarity.topPerQuery(candIds
       .join(corpus.select(col("vec_id"), col("embedding")), Seq("vec_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         round(graft.functions.GraftFunctions.cosineSimilarity(
-          col("qemb"), col("embedding")), 6).as("cosine"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    cand.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+          col("qemb"), col("embedding")), 6).as("cosine")), k)
   }
 }
 
 object IvfIndex {
   /** Result of one [[IvfIndex.maintain]] run — the serving lineage and
-    * the one-row decision report ([[IvfPqIndex.Maintenance]]'s shape).
+    * the one-row decision report.
     */
   final case class Maintenance(serving: IvfIndex, report: DataFrame)
 }

@@ -15,7 +15,7 @@ import graft.operators.Similarity
   * vector, 32× narrower than the float embedding it stands in for.
   *
   * Frozen codebooks are the load-bearing production property (the
-  * [[IvfIndex]] frozen-centroid discipline): a vector's codes are a pure
+  * [[FrozenCellIndex]] frozen-seed discipline): a vector's codes are a pure
   * function of the vector, so stored codes stay valid forever and appends
   * are delta-sized. Retraining codebooks is a REBUILD — a new index root,
   * never an in-place mutation.
@@ -42,31 +42,12 @@ final class PqIndex(spark: SparkSession, dir: String,
   def kind: String = "pq"
 
   protected val ledger = new GenerationLedger(spark, dir, "pq_index", "encode", "base")
-  private def booksDir = s"$dir/books"
-  // m/codes shape the stored code rows and the ADC tables: reopening with
-  // different values makes every lookup read codebook entries that were
-  // never trained — fail at open, never mis-score (FAISS-header rule)
-  ledger.validate(Map("m" -> m, "codes" -> codes))
+  private val pq = new PqCodebooks(spark, dir, ledger, Map("m" -> m, "codes" -> codes))
 
-  /** The fit-time hyperparameters STAMPED at bootstrap — see
-    * [[IvfPqIndex.fittedParams]]. Empty for pre-stamp artifacts.
+  /** The fit-time hyperparameters STAMPED at bootstrap
+    * ([[PqCodebooks.fittedParams]]).
     */
-  def fittedParams: Map[String, Long] =
-    Seq("m", "codes").flatMap(k => ledger.get(s"param.$k").map(k -> _)).toMap
-
-  /** The frozen codebooks, collected as O(m·codes·Dim/m) driver
-    * metadata — the seed-table read, never data-sized. MEMOIZED per
-    * index handle (r17, the [[IvfPqIndex]] rule): codebooks are frozen
-    * at bootstrap (retraining is a rebuild into a fresh dir), so one
-    * driver read serves every later probe instead of two scheduler
-    * round-trips per call; `lazy` keeps pre-bootstrap reads failing
-    * un-cached.
-    */
-  private lazy val books: Map[(Int, Int), Seq[Float]] = spark.read.parquet(booksDir)
-    .select(col("sub"), col("code"), col("w"))
-    .collect().toSeq
-    .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2))
-    .toMap
+  def fittedParams: Map[String, Long] = pq.fittedParams
 
   private def writeGen(g: Long, vectors: DataFrame,
                        bks: Map[(Int, Int), Seq[Float]]): Unit =
@@ -85,13 +66,8 @@ final class PqIndex(spark: SparkSession, dir: String,
   def bootstrap(corpus: DataFrame, iters: Int = 2,
                 trainOn: Option[DataFrame] = None): Unit =
     if (committedGen < 0) {
-      val trained = Similarity.pqTrain(trainOn.getOrElse(corpus), m, codes, iters)
-      import spark.implicits._
-      trained.toSeq.map { case ((s, c), w) => (s, c, w) }
-        .toDF("sub", "code", "w")
-        .coalesce(1).write.mode("overwrite").parquet(booksDir)
-      ledger.advance(None, _ => StoreParams.stamp(Map("m" -> m, "codes" -> codes)))(
-        writeGen(_, corpus, trained))
+      val trained = pq.train(trainOn.getOrElse(corpus), iters)
+      ledger.advance(None, _ => pq.stamp)(writeGen(_, corpus, trained))
     }
 
   /** One incremental ingest: encode ONLY `delta` against the frozen
@@ -108,17 +84,13 @@ final class PqIndex(spark: SparkSession, dir: String,
 
   private def appendGen(delta: DataFrame, batchId: Option[Long]): Unit = {
     require(committedGen >= 0, "append before bootstrap: the index has no codebooks")
-    ledger.advance(batchId)(writeGen(_, delta, books))
+    ledger.advance(batchId)(writeGen(_, delta, pq.books))
   }
 
   /** Every committed code row (vec_id, codes): the compacted base (if
     * one exists) plus the generations committed after it.
     */
-  def codesDf: DataFrame = {
-    val (base, g) = ledger.view
-    require(g >= 0, "the index is empty")
-    ledger.readAsOf(base, g)
-  }
+  def codesDf: DataFrame = ledger.committedDf
 
   /** COMPACTION for the flat code store. The ADC scan reads every code
     * row by design (no coarse structure to prune on), so the win here is
@@ -128,13 +100,7 @@ final class PqIndex(spark: SparkSession, dir: String,
     * retirement is opt-in.
     */
   def compact(retireSuperseded: Boolean = false): Unit =
-    ledger.compact(retireSuperseded) { (base, g) =>
-      ledger.readAsOf(base, g)
-        .repartitionByRange(col("vec_id"))
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite").parquet(ledger.baseDir(g))
-      Map.empty
-    }
+    ledger.compactClustered(retireSuperseded, "vec_id")
 
   /** ADC top-k against the stored codes: identical output to
     * [[Similarity.pqTopK]] with the same training corpus — minus the
@@ -144,5 +110,60 @@ final class PqIndex(spark: SparkSession, dir: String,
     */
   def topK(corpus: DataFrame, queries: DataFrame, k: Int,
            shortlist: Int): DataFrame =
-    Similarity.pqAdcTopK(codesDf, corpus, queries, books, m, codes, k, shortlist)
+    Similarity.pqAdcTopK(codesDf, corpus, queries, pq.books, m, codes, k, shortlist)
+}
+
+/** The frozen PQ codebooks of [[PqIndex]] and [[IvfPqIndex]], and the
+  * fit-time `params` (`m`, `codes`, plus IVF-PQ's `nlist`) the store
+  * stamps at bootstrap. The params shape the stored code rows and the
+  * ADC tables: reopening with different values makes every lookup read
+  * codebook entries that were never trained, so a mismatch fails at open
+  * (FAISS-header rule) instead of mis-scoring. Codebooks live at
+  * `dir/books`: m × codes rows of Dim/m floats, driver metadata in the
+  * seed-table pattern.
+  */
+private[sources] final class PqCodebooks(spark: SparkSession, dir: String,
+                                         ledger: GenerationLedger, params: Map[String, Int]) {
+  private val m = params("m")
+  private val codes = params("codes")
+  private def booksDir = s"$dir/books"
+  ledger.validate(params)
+
+  /** The params as bookmark slots, for the bootstrap commit. */
+  def stamp: Map[String, Long] = StoreParams.stamp(params)
+
+  /** The fit-time hyperparameters STAMPED at bootstrap: the authoritative
+    * record of what the stored rows were encoded with. Recall gates and
+    * maintenance sweeps read the declared point from here, never from
+    * re-typed constants that can drift from the stamp. Empty for
+    * pre-stamp artifacts.
+    */
+  def fittedParams: Map[String, Long] =
+    params.keys.toSeq.flatMap(k => ledger.get(s"param.$k").map(k -> _)).toMap
+
+  /** The frozen codebooks, collected as driver metadata and MEMOIZED per
+    * store handle: they never change for a committed dir (retraining is a
+    * rebuild into a fresh root), so one driver read serves every later
+    * probe instead of two scheduler round-trips per call. `lazy` keeps a
+    * pre-bootstrap read failing and uncached, so the first read after
+    * bootstrap sees the committed books.
+    */
+  lazy val books: Map[(Int, Int), Seq[Float]] = spark.read.parquet(booksDir)
+    .select(col("sub"), col("code"), col("w"))
+    .collect().toSeq
+    .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Float](2))
+    .toMap
+
+  /** Train codebooks on `corpus` ([[Similarity.pqTrain]]'s deterministic
+    * Lloyd: seeds are the first-`codes` slices in vec_id order, `iters`
+    * argmin rounds), freeze them at `dir/books`, and return them.
+    */
+  def train(corpus: DataFrame, iters: Int): Map[(Int, Int), Seq[Float]] = {
+    val trained = Similarity.pqTrain(corpus, m, codes, iters)
+    import spark.implicits._
+    trained.toSeq.map { case ((s, c), w) => (s, c, w) }
+      .toDF("sub", "code", "w")
+      .coalesce(1).write.mode("overwrite").parquet(booksDir)
+    trained
+  }
 }

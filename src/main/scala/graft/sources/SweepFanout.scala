@@ -12,10 +12,12 @@ package graft.sources
   * a pure function of the frozen index and the query sample; only the
   * JOB interleaving changes, never a value.
   *
-  * Failure discipline: `Await.result` rethrows the first failed setting
-  * after the pool stops accepting work — a sweep that cannot measure a
+  * Failure discipline: every setting is awaited before the first failed
+  * one (in item order) is rethrown — a sweep that cannot measure a
   * setting fails the maintenance run loudly, exactly as the serial loop
-  * did.
+  * did, and leaves no sibling setting's jobs running behind the error.
+  * No job group is set here: settings inherit the caller's job group and
+  * FAIR pool, so a fleet branch that cancels its group cancels them too.
   */
 private[graft] object SweepFanout {
 
@@ -36,10 +38,10 @@ private[graft] object SweepFanout {
         java.util.concurrent.Executors.newFixedThreadPool(cap.max(1))
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutor(executor)
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          items.map(a => scala.concurrent.Future(run(a)))),
-        scala.concurrent.duration.Duration.Inf): Unit
-      finally executor.shutdown()
+      try {
+        val settings = items.map(a => scala.concurrent.Future(run(a)))
+        settings.foreach(scala.concurrent.Await.ready(_, scala.concurrent.duration.Duration.Inf))
+        settings.foreach(_.value.get.get)
+      } finally executor.shutdown()
     }
 }

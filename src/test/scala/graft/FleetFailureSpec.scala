@@ -6,10 +6,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 import graft.operators.Fleet
-import graft.sources.InvertedIndex
+import graft.sources.{InvertedIndex, SweepFanout}
 
 /** The fleet walk's failure path: a failing maintenance action must not
-  * leave a sibling's Spark job running behind the rethrown error.
+  * leave a sibling's Spark job running behind the rethrown error, and a
+  * failing recall-sweep setting must not leave its siblings running
+  * behind the sweep's rethrown error.
   */
 class FleetFailureSpec extends SparkSuite {
 
@@ -46,5 +48,23 @@ class FleetFailureSpec extends SparkSuite {
       ListenerBusDrain(sc)
       assert(sc.statusTracker.getActiveJobIds.isEmpty)
     }
+  }
+
+  test("a failing sweep setting rethrows only after its sibling settings have finished") {
+    val siblingStarted = new CountDownLatch(1)
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val err = intercept[IllegalStateException] {
+      SweepFanout.foreach(Seq(1, 2)) {
+        case 1 =>
+          siblingStarted.countDown()
+          Thread.sleep(2000)
+          siblingDone.set(true)
+        case _ =>
+          siblingStarted.await()
+          throw new IllegalStateException("setting failed")
+      }
+    }
+    assert(err.getMessage === "setting failed")
+    assert(siblingDone.get, "foreach rethrew while a sibling setting was still running")
   }
 }

@@ -117,6 +117,44 @@ class GenerationLedgerSpec extends SparkSuite {
       assert(listing(dir) === c.dirs)
     }
 
+    if (Seq("ivf", "ivfpq").contains(c.name))
+      test(s"${c.name}: a point committed after the compaction pins its op.* slots; a new handle reads and serves it") {
+        val dir = TempDirs.create(s"ledger-op-${c.name}")
+        val st = c.open(dir)
+        c.bootstrap(st)
+        c.append(st)
+        c.appendBatch(st, identity, 7L)
+        c.compact(st)
+        val queries = vectors.filter(col("vec_id") < 6)
+        // (point, gen, lag) as each store spells it, its explicit-knob
+        // probe at the committed point, and its no-knobs probe
+        def point(s: MaintainedStore): (Any, Option[Long], Option[Long]) = s match {
+          case ix: IvfIndex => (ix.operatingPoint, ix.operatingPointGen, ix.operatingPointLag)
+          case ix: IvfPqIndex => (ix.operatingPoint, ix.operatingPointGen, ix.operatingPointLag)
+        }
+        def served(s: MaintainedStore): Set[org.apache.spark.sql.Row] = (s match {
+          case ix: IvfIndex => ix.topK(vectors, queries, 5)
+          case ix: IvfPqIndex => ix.topK(vectors, queries, 5)
+        }).collect().toSet
+        val (explicit, opSlots) = st match {
+          case ix: IvfIndex =>
+            ix.commitOperatingPoint(2, 0.9)
+            (ix.topK(vectors, queries, 5, 2), Map("op.nprobe" -> "2"))
+          case ix: IvfPqIndex =>
+            ix.commitOperatingPoint(2, 20, 0.9)
+            (ix.topK(vectors, queries, 5, 20, 2), Map("op.nprobe" -> "2", "op.shortlist" -> "20"))
+        }
+        val ctx = if (c.name == "ivf") "ivf_index" else "ivfpq_index"
+        val expected = (opSlots ++ Map("op.recall_bp" -> "9000", "op.gen" -> "2"))
+          .map { case (k, v) => s"$k::$ctx" -> v }
+        assert(slots(dir).filter(_._1.startsWith("op.")) === expected)
+        val reopened = c.open(dir)
+        assert(point(reopened) === point(st))
+        assert(point(reopened)._2 === Some(2L) && point(reopened)._3 === Some(0L))
+        val rows = explicit.collect().toSet
+        assert(rows.nonEmpty && served(reopened) === rows)
+      }
+
     test(s"${c.name}: a batch whose write fails leaves every slot unchanged") {
       val dir = TempDirs.create(s"ledger-fail-${c.name}")
       val st = c.open(dir)
