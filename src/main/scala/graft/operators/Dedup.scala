@@ -578,12 +578,11 @@ object Dedup {
     * pair count is bounded by sum(df^2) <= maxDf * total_fps. Overlap is
     * computed over the PRUNED fingerprint sets.
     */
-  /** The winnowing fingerprint stage of [[winnowPairs]], exposed so the
-    * scale rehearsal can measure the candidate join on the operator's own
-    * intermediate: distinct df-pruned (doc_id, fp) rows.
+  /** The winnowing fingerprint stage of [[winnowPairs]]: distinct
+    * df-pruned (doc_id, fp) rows.
     */
-  def winnowFingerprints(docs: DataFrame, spanLen: Int, window: Int,
-                         maxDf: Int): DataFrame = {
+  private def winnowFingerprints(docs: DataFrame, spanLen: Int, window: Int,
+                                 maxDf: Int): DataFrame = {
     require(spanLen >= 2 && window >= 1 && maxDf >= 1)
     val spans = docs
       .select(col("doc_id"),
@@ -641,25 +640,6 @@ object Dedup {
       .filter(col("n_shared") >= minShared)
   }
 
-  /** Bloom-prefiltered decontamination: the EXACT result of
-    * [[crossOverlapPairs]] at a fraction of its join input.
-    *
-    * Phase 1 sketches the distinct bench grams into a Bloom filter
-    * (~1.2 bytes/gram at 1% fpp — the whole eval suite fits in a few
-    * MB, vs broadcasting the gram rows themselves). Phase 2 drops every
-    * train gram the sketch rules out — map-only, codegen'd, no shuffle;
-    * this is where ~all of a 100 TB corpus' grams die, since
-    * contamination is rare by construction. Phase 3 is the same
-    * broadcast verify join + count as the exact operator, now over
-    * survivors only; Bloom false positives are eliminated here, so the
-    * output is bit-identical to the exact path (spec-pinned), never
-    * approximate.
-    */
-  def crossOverlapPairsBloom(train: DataFrame, bench: DataFrame, n: Int,
-                             minShared: Long, fpp: Double = 0.01): DataFrame =
-    crossOverlapPairsBloomWith(train, bench, n, minShared,
-      gramBloom(bench, n, fpp))
-
   /** The eval suite's gram Bloom filter, built standalone so a
     * long-lived pipeline can build it ONCE and decontaminate every
     * ingest delta against the cached sketch (the eval suite is fixed;
@@ -681,10 +661,20 @@ object Dedup {
     g.stat.bloomFilter("g", nGrams, fpp)
   }
 
-  /** [[crossOverlapPairsBloom]] against a prebuilt `bloom` (which must
-    * have been built over `bench`'s own n-grams — a sketch missing bench
-    * grams would drop true positives in the prefilter). The verify join
-    * stays exact, so output is bit-identical to [[crossOverlapPairs]].
+  /** Bloom-prefiltered decontamination: the EXACT result of
+    * [[crossOverlapPairs]] at a fraction of its join input.
+    *
+    * `bloom` sketches the distinct bench grams ([[gramBloom]], ~1.2
+    * bytes/gram at 1% fpp — the whole eval suite fits in a few MB, vs
+    * broadcasting the gram rows themselves); it must have been built over
+    * `bench`'s own n-grams, since a sketch missing bench grams would drop
+    * true positives in the prefilter. The prefilter drops every train
+    * gram the sketch rules out — map-only, codegen'd, no shuffle; this is
+    * where ~all of a 100 TB corpus' grams die, since contamination is
+    * rare by construction. Then the same broadcast verify join + count
+    * as the exact operator runs over survivors only; Bloom false
+    * positives are eliminated there, so the output is bit-identical to
+    * the exact path (spec-pinned), never approximate.
     */
   def crossOverlapPairsBloomWith(train: DataFrame, bench: DataFrame, n: Int,
                                  minShared: Long,

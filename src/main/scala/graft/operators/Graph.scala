@@ -32,14 +32,12 @@ object Graph {
     * fall back to shuffles that reuse the same src-key partitioning
     * every round.
     */
-  /** The orientation stage of [[triangleCounts]], exposed so the scale
-    * rehearsal can measure wedge volume (the join's true fan-out) on the
-    * operator's own intermediate: undirected edges canonicalized, deduped,
-    * and oriented toward the higher (degree, id) endpoint. Returns
-    * (u, w, dw) with `dw` the head's degree so downstream can order heads
-    * without re-joining the degree table.
+  /** The orientation stage of [[triangleCounts]]: undirected edges
+    * canonicalized, deduped, and oriented toward the higher (degree, id)
+    * endpoint. Returns (u, w, dw) with `dw` the head's degree so
+    * downstream can order heads without re-joining the degree table.
     */
-  def orientByDegree(edges: DataFrame, src: String, dst: String): DataFrame = {
+  private def orientByDegree(edges: DataFrame, src: String, dst: String): DataFrame = {
     val und = edges
       .select(least(col(src), col(dst)).as("a"), greatest(col(src), col(dst)).as("b"))
       .where(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)

@@ -52,7 +52,8 @@ object Similarity {
       * track log2(n); total bits = (maxHamming+1) · lshBits(n). The first
       * auto derivation reused lshBits directly and a 9-bit simhash made
       * hamming<=2 nearly vacuous — 5.9M "near-dup" pairs at 5k docs where
-      * the 30-bit family verifies 482k (measured, ScaleRehearsal). Floor
+      * the 30-bit family verifies 482k (BASELINE.md, "Round-5 scale
+      * rehearsal: derived defaults replace hand-tuned knobs"). Floor
       * 16 keeps the hamming test meaningful on small corpora; cap 30
       * because PolyHash token hashes are 31-bit.
       */

@@ -139,7 +139,7 @@ object IvfQueries {
       // the IVF-PQ reseed's REPORT is coarse-seed arithmetic only (same
       // seed selection, same best-cosine fold), so the replay is identical
       // — PQ codebook retraining has no footprint in this projection and
-      // is pinned by IvfPqIndexSpec + the rehearsal instead
+      // is pinned by IvfPqIndexSpec instead
       ivfReseedOracle),
 
     // The OTHER half of the composition's maintenance policy (r12

@@ -183,7 +183,8 @@ object VectorQueries {
     QueryDef("sim_ann_topk", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       // 8 tables (recall ≈ 1-(1-p)^T doubles vs 4 at linear cost — the
-      // ScaleRehearsal measurement that picked this default)
+      // measured ANN top-5 recall rows of BASELINE.md's scale-rehearsal
+      // table picked this default)
       Similarity.hyperplaneTopK(emb, emb.filter(col("vec_id") < 8), 5,
         tables = 8, bits = 8)
         .orderBy(col("query_id"), col("rank"))

@@ -142,8 +142,8 @@ final class IvfIndex(spark: SparkSession, dir: String,
     * driver: only the distinct cell ids (O(nlist)) are collected for the
     * scan's IN pushdown, and candidate generation becomes a distributed
     * cell-key join against the cached probe frame. Probe cost stays
-    * linear in |queries| (rehearsal-pinned) with the per-query candidate
-    * volume unchanged.
+    * linear in |queries| (measured at 1×/10×, BASELINE.md r16) with the
+    * per-query candidate volume unchanged.
     */
   def topK(corpus: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
            probeBroadcastLimit: Int = IndexProbes.BroadcastRowLimit): DataFrame = {

@@ -143,18 +143,6 @@ final class IvfPqIndex(spark: SparkSession, dir: String,
                       nprobe: Int, shortlist: Option[Int]): DataFrame =
     topK(corpus, queries, k, shortlist.get, nprobe)
 
-  /** The (query_id, neighbor_id) candidate pairs a probe of `nprobe`
-    * cells ADC-scores — the telemetry surface for the scale claim that
-    * candidate volume ≈ nprobe·cellBudget per query, independent of
-    * corpus size when nlist tracks n ([[Similarity.Sizing.ivfNlist]]).
-    * One aggregate-free pass over the stored (cell, vec_id) columns;
-    * embeddings and codes never read.
-    */
-  def candidates(queries: DataFrame, nprobe: Int): DataFrame =
-    // narrow (query_id, cell) rows — the row cap binds
-    probeJoin(rowsDf, queries, nprobe, Nil, IndexProbes.BroadcastRowLimit, rowBytes = 32L)(
-      identity)._1.select(col("query_id"), col("vec_id").as("neighbor_id"))
-
   /** ANN top-k: queries score the frozen seeds to pick `nprobe` cells
     * and carry their ADC lookup table; the stored scan joins the probe
     * set on the cell id and ADC-scores ONLY probed cells' members

@@ -28,12 +28,12 @@ import graft.operators.Dedup
   * Scale shape: the probe join keys on (band, band_key); the per-ingest
   * cost is band(delta) + probe + verify(matched docs) — nothing is
   * proportional to the corpus, and the r7 rehearsal row
-  * (`incr_lsh_indexed`) measures exactly that claim. [[compact]] folds the
-  * generations into ONE bucketed+sorted table on the probe key
-  * ([[BucketedBase]]), after
-  * which the stored side joins with NO exchange at all (spec-asserted) —
-  * only delta-sized data ever crosses the network, the co-located-join
-  * discipline of [[Bucketing]] applied to index maintenance.
+  * (`incr_lsh_indexed`, BASELINE.md) measured exactly that claim.
+  * [[compact]] folds the generations into ONE bucketed+sorted table on
+  * the probe key ([[BucketedBase]]), after which the stored side joins
+  * with NO exchange at all (spec-asserted) — only delta-sized data ever
+  * crosses the network, the co-located-join discipline of [[Bucketing]]
+  * applied to index maintenance.
   */
 final class LshBandIndex(spark: SparkSession, dir: String,
                          n: Int = 3, k: Int = 16, bands: Int = 4)

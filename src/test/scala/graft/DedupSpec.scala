@@ -311,7 +311,8 @@ class DedupSpec extends SparkSuite {
       df.select("train_id", "bench_id", "n_shared")
         .as[(Long, Long, Long)].collect().toSet
     val exact = rows(Dedup.crossOverlapPairs(train, bench, 6, 3L))
-    val bloom = Dedup.crossOverlapPairsBloom(train, bench, 6, 3L)
+    val bloom = Dedup.crossOverlapPairsBloomWith(train, bench, 6, 3L,
+      Dedup.gramBloom(bench, 6))
     assert(rows(bloom) == exact)
     // the prefilter is really in the plan, upstream of the verify join
     val plan = bloom.queryExecution.executedPlan.toString
@@ -323,7 +324,8 @@ class DedupSpec extends SparkSuite {
     val bench = Seq((100L, "the quick brown fox jumps")).toDF("doc_id", "text")
     val train = Seq((1L, "the quick brown fox jumps"),
       (2L, "zzzz yyyy xxxx wwww vvvv")).toDF("doc_id", "text")
-    val got = Dedup.crossOverlapPairsBloom(train, bench, 6, 3L)
+    val got = Dedup.crossOverlapPairsBloomWith(train, bench, 6, 3L,
+        Dedup.gramBloom(bench, 6))
       .select("train_id", "bench_id").as[(Long, Long)].collect().toSet
     assert(got == Set((1L, 100L)))
   }

@@ -403,9 +403,10 @@ class SimilaritySpec extends SparkSuite {
     // gate while ANN quality collapses — recall 0.45 shipped for two
     // rounds that way. This pins result QUALITY, not arithmetic: recall@5
     // of the declared point (m=8, codes=256, iters=2, shortlist=200) vs
-    // the exact scan must clear 0.9 on the fixture corpus. The full
-    // sweep (1x/10x, nprobe x shortlist) lives in ScaleRehearsal; this is
-    // the cheap always-on regression trip.
+    // the exact scan must clear 0.9 on the fixture corpus. The nprobe x
+    // shortlist sweep is the stores' own revalidateOperatingPoint
+    // (IvfPqIndexSpec), its 1x/10x numbers are in BASELINE.md; this is the
+    // cheap always-on regression trip.
     val k = 5
     val q8 = corpus.filter(col("vec_id") < 8)
     def sets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =

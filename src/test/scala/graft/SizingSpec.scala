@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Similarity}
 import graft.operators.Similarity.Sizing
 
-/** Pins the scale-aware knob derivation (r4 verdict item 7): the rehearsal
-  * proved fixed LSH/IVF knobs go quadratic once the corpus outgrows the key
-  * space; these rules ARE now the defaults, so they get their own contract:
+/** Pins the scale-aware knob derivation (r4 verdict item 7): the 10x
+  * rehearsal (BASELINE.md) showed fixed LSH/IVF knobs go quadratic once the
+  * corpus outgrows the key space; these rules ARE now the defaults, and this
+  * spec is where their scale claim is checked:
   * exact values at landmark sizes, the 64-bit pack invariant, and an
   * empirical linearity check — candidate volume under DEFAULT parameters
   * must track corpus growth, not square it.
