@@ -21,7 +21,7 @@ import graft.operators.TextAnalysis
   *
   * The merge table is driver metadata by construction (`rounds` rows —
   * the [[PqIndex]] codebook scale), persisted at `dir/merges` and
-  * committed via the bookmark store's atomic properties-file rename only
+  * committed as the store's one [[GenerationLedger]] generation only
   * after the parquet is fully written: a crashed fit is invisible to
   * readers, and refitting on a drifted corpus is a REBUILD into a fresh
   * root, never an in-place mutation (the [[IvfIndex]]/[[PqIndex]]
@@ -30,16 +30,15 @@ import graft.operators.TextAnalysis
 final class BpeVocabStore(spark: SparkSession, dir: String,
                           rounds: Int = 3) {
 
-  private val store = new BookmarkStore(dir)
-  private val ctx = "bpe_vocab"
+  private val ledger = new GenerationLedger(spark, dir, "bpe_vocab", "fit", "base")
   private def mergesDir = s"$dir/merges"
   // the fitted round count IS the vocabulary version: encoding under a
   // different rounds value than the artifact was trained with silently
   // changes token ids — fail at open (FAISS-header rule)
-  StoreParams.validate(store, ctx, dir, Map("rounds" -> rounds))
+  ledger.validate(Map("rounds" -> rounds))
 
   /** True once a fit has committed. */
-  def committed: Boolean = store.get("fit", ctx).isDefined
+  def committed: Boolean = ledger.committedGen >= 0
 
   /** Learn `rounds` merges on the training corpus and freeze them —
     * idempotent. Production bounds `docs` by corpus sampling first
@@ -47,12 +46,11 @@ final class BpeVocabStore(spark: SparkSession, dir: String,
     * nothing here depends on the trainer seeing every document.
     */
   def fit(docs: DataFrame, text: Column = col("text")): Unit =
-    if (!committed) {
-      TextAnalysis.bpeMergeRounds(docs, rounds, text)
-        .coalesce(1).write.mode("overwrite").parquet(mergesDir)
-      store.commitAll(ctx,
-        Map("fit" -> 0L) ++ StoreParams.stamp(Map("rounds" -> rounds)))
-    }
+    if (!committed)
+      ledger.advance(None, _ => StoreParams.stamp(Map("rounds" -> rounds))) { _ =>
+        TextAnalysis.bpeMergeRounds(docs, rounds, text)
+          .coalesce(1).write.mode("overwrite").parquet(mergesDir)
+      }
 
   /** The frozen merge table — `rounds` rows of
     * (round, pair_a, pair_b, n_pair, corpus_tokens_after).

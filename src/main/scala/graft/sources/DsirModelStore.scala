@@ -18,31 +18,30 @@ import graft.operators.Sampling
   * the smoothed zero-count log-ratio), so a genuinely novel delta scores
   * exactly — no delta⊆corpus feature precondition. Refitting on a
   * drifted reference corpus is a REBUILD into a fresh root, never an
-  * in-place mutation; the commit watermark advances via the bookmark
-  * store's atomic properties-file rename only after the model parquet is
-  * fully written, so a crashed fit is invisible to readers.
+  * in-place mutation. The fit is the store's one [[GenerationLedger]]
+  * generation: its `fit` watermark commits only after the model parquet
+  * is fully written, so a crashed fit is invisible to readers.
   */
 final class DsirModelStore(spark: SparkSession, dir: String,
                            buckets: Int = 2048) {
 
-  private val store = new BookmarkStore(dir)
-  private val ctx = "dsir_model"
+  private val ledger = new GenerationLedger(spark, dir, "dsir_model", "fit", "base")
   private def modelDir = s"$dir/model"
   // the fitted bucket count is load-bearing: applying with a different B
   // re-hashes features past the stored rows and the join silently drops
   // them — reopening with a drifted value must fail, not mis-score
-  StoreParams.validate(store, ctx, dir, Map("buckets" -> buckets))
+  ledger.validate(Map("buckets" -> buckets))
 
   /** True once a fit has committed. */
-  def committed: Boolean = store.get("fit", ctx).isDefined
+  def committed: Boolean = ledger.committedGen >= 0
 
   /** Fit on the reference corpus and freeze — idempotent. */
   def fit(docs: DataFrame, isTarget: Column,
           text: Column = col("text")): Unit = if (!committed) {
-    Sampling.dsirModel(docs, isTarget, buckets, text)
-      .coalesce(1).write.mode("overwrite").parquet(modelDir)
-    store.commitAll(ctx,
-      Map("fit" -> 0L) ++ StoreParams.stamp(Map("buckets" -> buckets)))
+    ledger.advance(None, _ => StoreParams.stamp(Map("buckets" -> buckets))) { _ =>
+      Sampling.dsirModel(docs, isTarget, buckets, text)
+        .coalesce(1).write.mode("overwrite").parquet(modelDir)
+    }
   }
 
   /** The frozen B-row (f, lrq) model — broadcast-sized by construction. */

@@ -1,25 +1,31 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
-/** The generation-ledger protocol of the persisted stores
-  * ([[IvfIndex]], [[PqIndex]], [[IvfPqIndex]], [[InvertedIndex]],
-  * [[LshBandIndex]] and the [[graft.streaming.StreamSink]] parquet sink):
-  * the job bookmark (SURVEY §2 S1) applied to a store's own data.
+/** The generation-ledger protocol: the job bookmark (SURVEY §2 S1)
+  * applied to a store's own data, and the one commit path of every file
+  * store — the index stores ([[IvfIndex]], [[PqIndex]], [[IvfPqIndex]],
+  * [[InvertedIndex]], [[LshBandIndex]]), the fit-once model stores
+  * ([[LmStore]], [[DsirModelStore]], [[BpeVocabStore]]), the
+  * [[graft.streaming.StreamSink]] parquet sink and the
+  * [[graft.streaming.MaterializedAgg]] view state.
   *
   * One ledger owns a store root's [[BookmarkStore]] handle in one `ctx`,
   * with two per-store slot names: the committed WATERMARK (the highest
   * visible generation) and the compacted BASE (the generation the last
-  * compaction folded through). Data lives in `<tail>-<g>` generation dirs
-  * and `<base>-<g>` fold dirs under the root.
+  * compaction folded through). Data lives in `<tail><g>` generation dirs
+  * and `<base><g>` fold dirs under the root (prefixes `gen-` and `base-`
+  * unless the store names its own).
   *
   *   - APPEND ([[advance]]): write generation `g + 1` first, then commit
   *     the watermark, the store's extra slots and the applied batch id in
   *     ONE atomic rename. A crashed write leaves an uncommitted dir that
   *     readers never list and the retry overwrites; a batch id at or
   *     below the committed `last_batch` is a foreachBatch redelivery and
-  *     a no-op.
+  *     a no-op. A fit-once store is the one-generation case: its fit is
+  *     generation 0, its watermark slot is `fit`.
   *   - READ ([[view]]): capture the base BEFORE the watermark. The two
   *     slots are separate file reads; base-first can only yield a
   *     stale-but-safe base, never one ahead of the captured watermark.
@@ -37,16 +43,19 @@ import org.apache.spark.sql.functions.col
   * A batch-keyed ledger (watermark slot `last_batch`, the parquet sink)
   * names each generation by its batch id instead of `g + 1`: its
   * generations are sparse, and it lists its tail rather than counting it.
+  *
+  * The session is by-name: it is resolved only when a read, fold or
+  * retirement needs it, so slot reads work without one.
   */
-final class GenerationLedger(spark: SparkSession, val dir: String, ctx: String,
+final class GenerationLedger(spark: => SparkSession, val dir: String, ctx: String,
                              watermark: String, baseSlot: String,
-                             tailPrefix: String = "gen", basePrefix: String = "base") {
+                             tailPrefix: String = "gen-", basePrefix: String = "base-") {
   import GenerationLedger.LastBatch
 
   private val store = new BookmarkStore(dir)
 
-  def genDir(g: Long): String = s"$dir/$tailPrefix-$g"
-  def baseDir(g: Long): String = s"$dir/$basePrefix-$g"
+  def genDir(g: Long): String = s"$dir/$tailPrefix$g"
+  def baseDir(g: Long): String = s"$dir/$basePrefix$g"
 
   /** A store-owned slot in this ledger's ctx (fit params, stats, points). */
   def get(slot: String): Option[Long] = store.get(slot, ctx)
@@ -82,9 +91,19 @@ final class GenerationLedger(spark: SparkSession, val dir: String, ctx: String,
   def compactionDue(maxFragments: Int): Boolean =
     maxFragments >= 1 && fragmentCount > maxFragments
 
-  /** Exactly the committed view as of a captured `(base, g)`. */
+  /** Exactly the committed view as of a captured `(base, g)`. A
+    * batch-keyed ledger's tail is sparse, so it lists the root and keeps
+    * the batch dirs in `(base, g]`: a crashed batch's partial dir (above
+    * `g`) and a crashed compact's orphan base are never read.
+    */
   def readAsOf(base: Long, g: Long): DataFrame =
-    spark.read.parquet(GenerationLedger.dirs(base, g, genDir, baseDir): _*)
+    spark.read.parquet((
+      if (watermark != LastBatch) GenerationLedger.dirs(base, g, genDir, baseDir)
+      // the base alone (`base > g` still refused), then the listed tail
+      else GenerationLedger.dirs(base, base min g, genDir, baseDir) ++
+        listing.flatMap(p => GenerationLedger.idOf(tailPrefix, p.getName))
+          .filter(b => b > base && b <= g).sorted.map(genDir)
+    ): _*)
 
   /** The committed view as of one consistent capture; refuses an empty
     * store.
@@ -125,7 +144,7 @@ final class GenerationLedger(spark: SparkSession, val dir: String, ctx: String,
     }
   }
 
-  /** [[compact]] by folding the view into one `<base>-<g>` dir
+  /** [[compact]] by folding the view into one `<base><g>` dir
     * range-clustered and sorted on `cluster`, so a probe's filter on the
     * leading column prunes row groups by their min/max stats. Values are
     * byte-identical to the folded generations.
@@ -139,20 +158,21 @@ final class GenerationLedger(spark: SparkSession, val dir: String, ctx: String,
       Map.empty
     }
 
-  /** Delete every directory a base at `g` supersedes: each `<tail>-<i>`
-    * with i <= g and each `<base>-<j>` with j < g. Listing-based, so it
+  /** Delete every directory a base at `g` supersedes: each `<tail><i>`
+    * with i <= g and each `<base><j>` with j < g. Listing-based, so it
     * also sweeps dirs earlier compacts left behind; names are parsed in
     * full, so a `gen-3-bak` or `regen-7` sibling is never touched.
     */
-  def retireThrough(g: Long): Unit = {
-    val root = new org.apache.hadoop.fs.Path(dir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).map(_.getPath).foreach { p =>
-      val n = p.getName
-      if (GenerationLedger.idOf(tailPrefix, n).exists(_ <= g) ||
-          GenerationLedger.idOf(basePrefix, n).exists(_ < g)) fs.delete(p, true)
+  def retireThrough(g: Long): Unit =
+    listing.foreach { p =>
+      if (GenerationLedger.idOf(tailPrefix, p.getName).exists(_ <= g) ||
+          GenerationLedger.idOf(basePrefix, p.getName).exists(_ < g)) fs.delete(p, true)
     }
-  }
+
+  private def fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Every entry directly under the root, in one listing. */
+  private def listing: Seq[Path] = fs.listStatus(new Path(dir)).toSeq.map(_.getPath)
 }
 
 object GenerationLedger {
@@ -175,10 +195,26 @@ object GenerationLedger {
       ((base + 1) to g).map(genDir)
   }
 
-  /** The id of a `<prefix>-<id>` directory name, parsed in full. */
-  def idOf(prefix: String, name: String): Option[Long] =
-    if (name.startsWith(prefix + "-")) name.stripPrefix(prefix + "-").toLongOption
+  /** The id of a `<prefix><id>` directory name, parsed in full: the rest
+    * of the name must be all digits.
+    */
+  private def idOf(prefix: String, name: String): Option[Long] = {
+    val id = name.stripPrefix(prefix)
+    if (name.startsWith(prefix) && id.nonEmpty && id.forall(_.isDigit)) id.toLongOption
     else None
+  }
+
+  /** 64-bit FNV-1a of a string — the one fingerprint that turns a string
+    * identity (a sink's checkpoint lineage, a sweep's run key) into a
+    * [[BookmarkStore]] slot, since slots hold longs. Over the full string,
+    * so two distinct keys share a value only by a 64-bit collision.
+    */
+  def fingerprint(s: String): Long = {
+    var acc = 0xcbf29ce484222325L
+    var i = 0
+    while (i < s.length) { acc = (acc ^ (s.charAt(i) & 0xffffL)) * 0x100000001b3L; i += 1 }
+    acc
+  }
 }
 
 /** The text stores' fold layout ([[InvertedIndex]], [[LshBandIndex]]): a
@@ -238,7 +274,7 @@ private[sources] final class BucketedBase(spark: SparkSession, ledger: Generatio
     */
   def fold(rows: DataFrame, g: Long, n: Int): Map[String, Long] = {
     spark.sql(s"DROP TABLE IF EXISTS $tableName")
-    val target = new org.apache.hadoop.fs.Path(ledger.baseDir(g))
+    val target = new Path(ledger.baseDir(g))
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(target)) fs.delete(target, true)
     rows.write.mode("overwrite").format("parquet")

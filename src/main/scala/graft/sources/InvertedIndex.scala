@@ -40,7 +40,7 @@ final class InvertedIndex(spark: SparkSession, dir: String)
   def kind: String = "inverted"
 
   protected val ledger = new GenerationLedger(spark, dir, "inverted_index",
-    "postings", "compacted", basePrefix = "compacted")
+    "postings", "compacted", basePrefix = "compacted-")
 
   private val postingSchema = StructType(Seq(
     StructField("term", StringType), StructField("doc_id", LongType),

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.file.{Files, Paths}
-import java.sql.DriverManager
+import java.sql.{Connection, DriverManager}
 import java.util.Properties
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SaveMode}
@@ -30,13 +30,7 @@ object JdbcSink {
   def writeWithPreactions(df: DataFrame, url: String, table: String,
                           preactions: Seq[String] = Nil,
                           props: Properties = new Properties()): Unit = {
-    if (preactions.nonEmpty) {
-      val conn = DriverManager.getConnection(url, props)
-      try {
-        val st = conn.createStatement()
-        try preactions.foreach(st.execute) finally st.close()
-      } finally conn.close()
-    }
+    if (preactions.nonEmpty) withPreactions(url, props, preactions)(_ => ())
     df.write.mode(SaveMode.Append).jdbc(url, table, props)
   }
 
@@ -58,42 +52,14 @@ object JdbcSink {
     *
     * Returns the number of part files loaded.
     */
-  /** Staged part files under `stagingDir`, sorted for deterministic load
-    * order. Materializes (and closes) the directory stream.
-    */
-  private def listParts(stagingDir: String): Seq[String] = {
-    val stream = Files.list(Paths.get(stagingDir))
-    try stream.iterator().asScala
-      .filter { p =>
-        val n = p.getFileName.toString
-        n.startsWith("part-") && n.endsWith(".csv")
-      }
-      .map(_.toAbsolutePath.toString).toSeq.sorted
-    finally stream.close()
-  }
-
   def stagedBulkLoad(df: DataFrame, url: String, table: String,
                      stagingDir: String,
                      copySql: (String, String) => String,
                      preactions: Seq[String] = Nil,
                      props: Properties = new Properties()): Int = {
     df.write.mode(SaveMode.Overwrite).csv(stagingDir)
-    val parts = listParts(stagingDir)
-    val conn = DriverManager.getConnection(url, props)
-    try {
-      val st = conn.createStatement()
-      try {
-        preactions.foreach(st.execute)
-        conn.setAutoCommit(false)
-        try {
-          parts.foreach(p => st.execute(copySql(table, p)))
-          conn.commit()
-        } catch {
-          case t: Throwable => conn.rollback(); throw t
-        }
-      } finally st.close()
-    } finally conn.close()
-    parts.size
+    withPreactions(url, props, preactions)(conn =>
+      transaction(conn)(copyParts(conn, table, stagingDir, copySql)))
   }
 
   /** Ledger DDL for [[stagedBulkLoadExactlyOnce]]; warehouse-idempotent
@@ -109,13 +75,13 @@ object JdbcSink {
     * (`medium/transaction_by_subscription_report_messed.jpeg` — ids
     * 12004/12006/12008/12011 each loaded twice).
     *
-    * A run ledger row and the COPY statements commit in ONE warehouse
-    * transaction keyed by `runId` (e.g. the bookmark watermark of the
-    * extract). A re-delivered run sees its ledger row and returns 0
-    * WITHOUT re-staging — redelivery is a metadata no-op, never a
-    * recompute. A racing concurrent delivery is backstopped by the
-    * ledger's primary key: the second transaction's ledger insert fails
-    * and everything it copied rolls back.
+    * Staging and the COPY statements run inside [[ledgered]], the one
+    * warehouse-ledger transaction both exactly-once sinks share, keyed by
+    * `runId` (e.g. the bookmark watermark of the extract). A re-delivered
+    * run sees its ledger row and returns 0 WITHOUT re-staging —
+    * redelivery is a metadata no-op, never a recompute. A failed staging
+    * write or COPY rolls back and surfaces its own exception, leaving no
+    * ledger row, so a retry under the same run id delivers.
     *
     * `preactions` (caller-idempotent DDL) run on every call, before the
     * ledger check — they must be safe under redelivery just as on the
@@ -130,38 +96,88 @@ object JdbcSink {
                                 runId: String,
                                 ledgerTable: String = "load_ledger",
                                 preactions: Seq[String] = Nil,
-                                props: Properties = new Properties()): Int = {
-    val conn = DriverManager.getConnection(url, props)
-    try {
-      if (preactions.nonEmpty) {
-        val st = conn.createStatement()
-        try preactions.foreach(st.execute) finally st.close()
-      }
-      conn.setAutoCommit(false)
-      val check = conn.prepareStatement(
-        s"SELECT 1 FROM $ledgerTable WHERE run_id = ?")
-      val delivered = try {
-        check.setString(1, runId)
-        val rs = check.executeQuery()
-        try rs.next() finally rs.close()
-      } finally check.close()
+                                props: Properties = new Properties()): Int =
+    withPreactions(url, props, preactions)(conn =>
+      ledgered(conn, ledgerTable, Seq("run_id" -> runId)) {
+        df.write.mode(SaveMode.Overwrite).csv(stagingDir)
+        copyParts(conn, table, stagingDir, copySql)
+      })
+
+  /** The warehouse-ledger transaction of both exactly-once sinks
+    * ([[stagedBulkLoadExactlyOnce]], key `run_id`;
+    * [[graft.streaming.StreamSink.exactlyOnceJdbc]], key
+    * `(query_id, batch_id)`): on the caller's connection, look the key up
+    * in `ledgerTable`. A delivered key rolls back (releasing the read)
+    * and returns 0; otherwise `deliver` runs and the ledger row and
+    * everything `deliver` wrote commit in ONE transaction. On any throw
+    * the transaction rolls back and the original exception surfaces. A
+    * racing duplicate delivery is backstopped by the ledger's primary
+    * key: the second commit's ledger insert fails and rolls it back.
+    */
+  private[graft] def ledgered(conn: Connection, ledgerTable: String, key: Seq[(String, Any)])
+                             (deliver: => Int): Int = {
+    def bound(sql: String) = {
+      val ps = conn.prepareStatement(sql)
+      key.zipWithIndex.foreach { case ((_, v), i) => ps.setObject(i + 1, v) }
+      ps
+    }
+    val cols = key.map(_._1)
+    transaction(conn) {
+      val check = bound(s"SELECT 1 FROM $ledgerTable WHERE ${cols.map(_ + " = ?").mkString(" AND ")}")
+      // closing the statement closes its result set
+      val delivered = try check.executeQuery().next() finally check.close()
       if (delivered) { conn.rollback(); 0 }
       else {
-        df.write.mode(SaveMode.Overwrite).csv(stagingDir)
-        val parts = listParts(stagingDir)
-        val st = conn.createStatement()
-        try {
-          parts.foreach(p => st.execute(copySql(table, p)))
-          val ledger = conn.prepareStatement(
-            s"INSERT INTO $ledgerTable VALUES (?)")
-          try { ledger.setString(1, runId); ledger.executeUpdate() }
-          finally ledger.close()
-          conn.commit()
-        } catch {
-          case t: Throwable => conn.rollback(); throw t
-        } finally st.close()
-        parts.size
+        val n = deliver
+        val ins = bound(s"INSERT INTO $ledgerTable (${cols.mkString(", ")}) " +
+          s"VALUES (${cols.map(_ => "?").mkString(", ")})")
+        try ins.executeUpdate() finally ins.close()
+        n
       }
+    }
+  }
+
+  /** Run `body` as one transaction on `conn`: commit after it returns; on
+    * any throw roll back (a failed rollback is swallowed) and rethrow the
+    * original exception, so the caller's close never meets an open
+    * transaction.
+    */
+  private def transaction[T](conn: Connection)(body: => T): T = {
+    conn.setAutoCommit(false)
+    try { val r = body; conn.commit(); r }
+    catch {
+      case t: Throwable =>
+        try conn.rollback() catch { case _: Throwable => () }
+        throw t
+    }
+  }
+
+  /** Open one connection, run `preactions` on it (autocommit), then `body`. */
+  private def withPreactions[T](url: String, props: Properties, preactions: Seq[String])
+                               (body: Connection => T): T = {
+    val conn = DriverManager.getConnection(url, props)
+    try {
+      val st = conn.createStatement()
+      try preactions.foreach(st.execute) finally st.close()
+      body(conn)
     } finally conn.close()
+  }
+
+  /** One `copySql(table, part)` statement per staged part file under
+    * `stagingDir`, in sorted (deterministic) order; returns the part count.
+    */
+  private def copyParts(conn: Connection, table: String, stagingDir: String,
+                        copySql: (String, String) => String): Int = {
+    val stream = Files.list(Paths.get(stagingDir))
+    val parts = try stream.iterator().asScala
+      .filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("part-") && n.endsWith(".csv")
+      }
+      .map(_.toAbsolutePath.toString).toSeq.sorted
+    finally stream.close()
+    val st = conn.createStatement()
+    try parts.foreach(p => st.execute(copySql(table, p))) finally st.close()
+    parts.size
   }
 }

@@ -20,10 +20,11 @@ import graft.operators.TextAnalysis
   * broadcastable), the per-context totals (w1, tot) at `dir/ctx` for the
   * unseen-bigram backoff, and the vocabulary size V in a bookmark slot
   * (an O(1) scalar, the [[InvertedIndex]] corpus-stats idiom — a scorer
-  * never scans the corpus to learn its size). The commit watermark
-  * advances via the bookmark store's atomic properties-file rename only
-  * after both parquet roots are fully written; refitting on a drifted
-  * corpus is a REBUILD into a fresh root, never an in-place mutation.
+  * never scans the corpus to learn its size). The fit is the store's
+  * one [[GenerationLedger]] generation: V and the `fit` watermark commit
+  * in one rename only after both parquet roots are fully written;
+  * refitting on a drifted corpus is a REBUILD into a fresh root, never
+  * an in-place mutation.
   *
   * Scoring is COMPLETE over any delta ([[TextAnalysis.perplexityUnder]]):
   * seen bigrams score their exact MLE conditional — the fit-then-score
@@ -33,13 +34,12 @@ import graft.operators.TextAnalysis
   */
 final class LmStore(spark: SparkSession, dir: String) {
 
-  private val store = new BookmarkStore(dir)
-  private val ctx = "bigram_lm"
+  private val ledger = new GenerationLedger(spark, dir, "bigram_lm", "fit", "base")
   private def lmDir = s"$dir/lm"
   private def ctxDir = s"$dir/ctx"
 
   /** True once a fit has committed. */
-  def committed: Boolean = store.get("fit", ctx).isDefined
+  def committed: Boolean = ledger.committedGen >= 0
 
   /** Fit the MLE bigram LM on the reference corpus and freeze it —
     * idempotent. The vocabulary size (distinct lowercased tokens) is one
@@ -47,14 +47,14 @@ final class LmStore(spark: SparkSession, dir: String) {
     */
   def fit(docs: DataFrame, text: Column = col("text")): Unit =
     if (!committed) {
-      val lm = TextAnalysis.lmTable(docs, text)
-      lm.write.mode("overwrite").parquet(lmDir)
-      TextAnalysis.lmContextTotals(spark.read.parquet(lmDir))
-        .write.mode("overwrite").parquet(ctxDir)
-      val v = docs.select(explode(GraftFunctions.tokens(lower(text))).as("t"))
-        .agg(count_distinct(col("t"))).head().getLong(0)
-      store.commit("vocab", ctx, v)
-      store.commit("fit", ctx, 0L)
+      val vocab = (_: Long) => Map("vocab" ->
+        docs.select(explode(GraftFunctions.tokens(lower(text))).as("t"))
+          .agg(count_distinct(col("t"))).head().getLong(0))
+      ledger.advance(None, vocab) { _ =>
+        TextAnalysis.lmTable(docs, text).write.mode("overwrite").parquet(lmDir)
+        TextAnalysis.lmContextTotals(spark.read.parquet(lmDir))
+          .write.mode("overwrite").parquet(ctxDir)
+      }
     }
 
   /** The frozen LM table — (w1, w2, n, prob). */
@@ -67,7 +67,7 @@ final class LmStore(spark: SparkSession, dir: String) {
   def ctxDf: DataFrame = spark.read.parquet(ctxDir)
 
   /** Vocabulary size V — an O(1) committed scalar. */
-  def vocabSize: Long = store.get("vocab", ctx).getOrElse(0L)
+  def vocabSize: Long = ledger.get("vocab").getOrElse(0L)
 
   /** Score a delta's pseudo-perplexity under the frozen LM —
     * delta-sized cost, complete over unseen bigrams.

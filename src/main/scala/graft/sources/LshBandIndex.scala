@@ -45,7 +45,7 @@ final class LshBandIndex(spark: SparkSession, dir: String,
   def kind: String = "lsh"
 
   protected val ledger = new GenerationLedger(spark, dir, "lsh_band_index",
-    "bands", "compacted", basePrefix = "compacted")
+    "bands", "compacted", basePrefix = "compacted-")
   // stored band keys are a pure function of (n, k, bands): probing with
   // drifted values finds no (or wrong) collisions — fail at open
   // (FAISS-header rule)
@@ -155,7 +155,8 @@ final class LshBandIndex(spark: SparkSession, dir: String,
     *
     * `runKey` (optional) makes the APPEND idempotent under whole-ingest
     * replay: a nonempty key is committed atomically with the band
-    * watermark, and a later call carrying an already-committed key still
+    * watermark (slot `run_<hex>` of its 64-bit
+    * [[GenerationLedger.fingerprint]]), and a later call carrying an already-committed key still
     * sweeps and sinks (at-least-once sink, closed by idempotent sinks —
     * same window as the star job) but skips re-appending the delta's
     * bands. Without it, a replayed ingest — a bench warm run re-executing
@@ -224,7 +225,7 @@ final class LshBandIndex(spark: SparkSession, dir: String,
     // (skipped when this ingest's runKey is already committed: the append
     // already happened and re-appending would duplicate the generation)
     val runSlot = if (runKey.isEmpty) "" else
-      "run_" + java.lang.Integer.toHexString(runKey.hashCode)
+      "run_" + java.lang.Long.toHexString(GenerationLedger.fingerprint(runKey))
     val replayed = runKey.nonEmpty && ledger.get(runSlot).isDefined
     if (!replayed)
       ledger.advance(None, _ => if (runKey.isEmpty) Map.empty else Map(runSlot -> 1L))(

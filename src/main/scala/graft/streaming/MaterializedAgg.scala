@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.IncrementalAgg
+import graft.sources.GenerationLedger
 
 /** Streaming materialized view: per-key aggregate state maintained from a
   * stream, one merge per micro-batch — the streaming twin of the batch
@@ -12,32 +10,32 @@ import graft.operators.IncrementalAgg
   * costs O(batch + keys), never O(history); the raw stream is read
   * exactly once in total.
   *
-  * Exactly-once without a warehouse: state versions are immutable
-  * parquet directories (`v0, v1, ...`), and a pointer file records
-  * `(version, lastAppliedBatchId)`, committed by atomic rename AFTER the
-  * new version is fully written. A crash between version write and
-  * pointer swap leaves the pointer on the old consistent version; the
-  * re-delivered batch rebuilds the orphaned directory and swaps again. A
-  * batch re-delivered after a successful swap sees its id in the pointer
-  * and is a no-op ([[StreamSink]]'s ledger, done with files). Readers
-  * resolve the pointer and only ever see a fully-committed version.
+  * Exactly-once without a warehouse: each applied batch writes the
+  * merged state as an immutable generation `v<g>` through a
+  * [[graft.sources.GenerationLedger]], which commits the generation and
+  * the applied batch id in one rename AFTER the write. A crash before the
+  * commit leaves the previous generation current and the redelivered
+  * batch overwrites the orphan; a batch redelivered after the commit is
+  * a no-op. Readers resolve the committed generation and only ever see a
+  * fully written state. Generations older than the previous one are
+  * retired after each commit (the previous stays for readers that
+  * resolved it just before the commit).
   */
 final class MaterializedAgg(stateDir: String, keyCols: Seq[String], valueCol: String) {
 
-  private val pointer = Paths.get(stateDir, "CURRENT")
+  private val ledger = new GenerationLedger(SparkSession.active, stateDir,
+    "materialized_agg", "version", "base", tailPrefix = "v")
 
-  /** (version, lastAppliedBatchId), or None before the first commit. */
+  /** (committed generation, last applied batch id), or None before the
+    * first commit.
+    */
   def currentPointer(): Option[(Long, Long)] =
-    if (!Files.exists(pointer)) None
-    else {
-      val parts = new String(Files.readAllBytes(pointer), StandardCharsets.UTF_8)
-        .trim.split("\\s+")
-      Some((parts(0).toLong, parts(1).toLong))
-    }
+    Some(ledger.committedGen).filter(_ >= 0)
+      .map((_, ledger.get(GenerationLedger.LastBatch).get))
 
   /** The committed state (mergeable columns; see IncrementalAgg). */
   def current(spark: SparkSession): Option[DataFrame] =
-    currentPointer().map { case (v, _) => spark.read.parquet(s"$stateDir/v$v") }
+    currentPointer().map { case (v, _) => spark.read.parquet(ledger.genDir(v)) }
 
   /** The read-time view with derived columns. */
   def view(spark: SparkSession): Option[DataFrame] =
@@ -45,31 +43,11 @@ final class MaterializedAgg(stateDir: String, keyCols: Seq[String], valueCol: St
 
   /** `foreachBatch` function folding each micro-batch into the state. */
   def sink: (DataFrame, Long) => Unit = { (batch: DataFrame, batchId: Long) =>
-    val spark = batch.sparkSession
-    Files.createDirectories(Paths.get(stateDir))
-    val cur = currentPointer()
-    if (!cur.exists(_._2 >= batchId)) {
+    ledger.advance(Some(batchId)) { g =>
       val delta = IncrementalAgg.aggregate(batch, keyCols, valueCol)
-      val merged = current(spark) match {
-        case Some(state) => IncrementalAgg.merge(state, delta, keyCols)
-        case None => delta
-      }
-      val nextV = cur.map(_._1 + 1).getOrElse(0L)
-      merged.write.mode("overwrite").parquet(s"$stateDir/v$nextV")
-      val tmp = Paths.get(stateDir, s".CURRENT.$batchId.tmp")
-      Files.write(tmp, s"$nextV $batchId\n".getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-      // prune superseded versions so a long-running stream doesn't leak
-      // one full state copy per batch; the immediately-previous version
-      // is retained for readers that resolved the pointer mid-swap
-      (0L until nextV - 1).foreach { v =>
-        val d = Paths.get(stateDir, s"v$v")
-        if (Files.exists(d)) {
-          Files.walk(d).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(p => Files.deleteIfExists(p))
-        }
-      }
+      current(batch.sparkSession).fold(delta)(IncrementalAgg.merge(_, delta, keyCols))
+        .write.mode("overwrite").parquet(ledger.genDir(g))
     }
+    ledger.retireThrough(ledger.committedGen - 2)
   }
 }

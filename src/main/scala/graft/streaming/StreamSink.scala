@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.DriverManager
 import java.util.Properties
 import org.apache.spark.sql.DataFrame
+import graft.sources.{GenerationLedger, JdbcSink}
 
 /** Exactly-once streaming delivery into a JDBC warehouse.
   *
@@ -21,7 +22,9 @@ import org.apache.spark.sql.DataFrame
   * JDBC writes each open their own transaction and cannot be atomic with
   * it. For data-sized streams, stage the batch to object storage and
   * COPY + ledger in one transaction instead
-  * ([[graft.sources.JdbcSink.stagedBulkLoad]] is that verb for batch).
+  * ([[graft.sources.JdbcSink.stagedBulkLoadExactlyOnce]] is that verb
+  * for batch). Both run the one ledger transaction,
+  * [[graft.sources.JdbcSink.ledgered]].
   */
 object StreamSink {
 
@@ -36,47 +39,25 @@ object StreamSink {
     *
     * `insertSql` is the parameterized INSERT for one output row (e.g.
     * `INSERT INTO t VALUES (?, ?)`); `bind` sets its parameters from a
-    * Row. The batch's rows and the ledger entry commit atomically.
+    * Row. The batch's rows and the `(query_id, batch_id)` ledger entry
+    * commit atomically ([[graft.sources.JdbcSink.ledgered]]). The batch
+    * is collected only AFTER the ledger check: crash-redelivery (the case
+    * this sink exists for) is a metadata no-op, not a recompute. Bounded:
+    * aggregate output rows only (see above).
     */
   def exactlyOnceJdbc(url: String, insertSql: String, ledgerTable: String,
                       queryId: String, props: Properties = new Properties())
                      (bind: (java.sql.PreparedStatement, org.apache.spark.sql.Row) => Unit)
   : (DataFrame, Long) => Unit = { (batch: DataFrame, batchId: Long) =>
     val conn = DriverManager.getConnection(url, props)
-    try {
-      conn.setAutoCommit(false)
-      val check = conn.prepareStatement(
-        s"SELECT 1 FROM $ledgerTable WHERE query_id = ? AND batch_id = ?")
-      val delivered = try {
-        check.setString(1, queryId); check.setLong(2, batchId)
-        val rs = check.executeQuery()
-        try rs.next() finally rs.close()
-      } finally check.close()
-      if (!delivered) {
-        // collect only AFTER the ledger check: crash-redelivery (the case
-        // this sink exists for) must be a metadata no-op, not a full
-        // recompute of the batch. Bounded: aggregate output rows only
-        // (see scaladoc). A racing duplicate delivery is backstopped by
-        // the ledger's primary key — the second commit fails and rolls
-        // back.
-        val rows = batch.collect()
-        val ins = conn.prepareStatement(insertSql)
-        try {
-          rows.foreach { r => bind(ins, r); ins.addBatch() }
-          ins.executeBatch()
-        } finally ins.close()
-        val ledger = conn.prepareStatement(
-          s"INSERT INTO $ledgerTable VALUES (?, ?)")
-        try { ledger.setString(1, queryId); ledger.setLong(2, batchId); ledger.executeUpdate() }
-        finally ledger.close()
-        conn.commit()
-      } else {
-        conn.rollback() // nothing to do; release the read
-      }
-    } catch {
-      case t: Throwable =>
-        try conn.rollback() catch { case _: Throwable => () }
-        throw t
+    try JdbcSink.ledgered(conn, ledgerTable, Seq("query_id" -> queryId, "batch_id" -> batchId)) {
+      val rows = batch.collect()
+      val ins = conn.prepareStatement(insertSql)
+      try {
+        rows.foreach { r => bind(ins, r); ins.addBatch() }
+        ins.executeBatch()
+      } finally ins.close()
+      rows.length
     } finally conn.close()
   }
 
@@ -111,7 +92,7 @@ object StreamSink {
                          lineage: String): Unit = {
     require(lineage.nonEmpty, "lineage must name the checkpoint lifetime")
     val ledger = sinkLedger(batch.sparkSession, outDir)
-    val h = lineageHash(lineage)
+    val h = GenerationLedger.fingerprint(lineage)
     // foreach, not get: pre-stamp artifacts stay writable and are stamped
     // on their next commit (the StoreParams validation discipline)
     ledger.get("lineage").foreach { prev =>
@@ -126,19 +107,8 @@ object StreamSink {
   }
 
   private def sinkLedger(spark: org.apache.spark.sql.SparkSession, outDir: String) =
-    new graft.sources.GenerationLedger(spark, outDir, "parquet_sink",
-      graft.sources.GenerationLedger.LastBatch, "base", tailPrefix = "batch")
-
-  /** 64-bit FNV-1a of the lineage string — [[graft.sources.BookmarkStore]]
-    * slots hold longs, so the identity is stamped as a hash; a collision
-    * only weakens the refuse-on-mismatch guard, never correctness.
-    */
-  private def lineageHash(s: String): Long = {
-    var acc = 0xcbf29ce484222325L
-    var i = 0
-    while (i < s.length) { acc = (acc ^ (s.charAt(i) & 0xffffL)) * 0x100000001b3L; i += 1 }
-    acc
-  }
+    new GenerationLedger(spark, outDir, "parquet_sink",
+      GenerationLedger.LastBatch, "base", tailPrefix = "batch-")
 
   /** Every COMMITTED batch of an [[exactlyOnceParquet]] sink: the
     * compacted base (if [[compactParquet]] has run) plus batch
@@ -150,30 +120,10 @@ object StreamSink {
     */
   def committedParquet(spark: org.apache.spark.sql.SparkSession,
                        outDir: String): DataFrame = {
-    val (base, last) = sinkLedger(spark, outDir).view
+    val ledger = sinkLedger(spark, outDir)
+    val (base, last) = ledger.view
     require(last >= 0, s"no committed batches under $outDir")
-    committedUpTo(spark, outDir, base, last)
-  }
-
-  /** The committed view bounded to CAPTURED watermarks — what
-    * [[compactParquet]] folds from: re-deriving `last_batch` at scan
-    * time would race a live query committing a batch between the fold's
-    * capture and its read, folding that batch into the base while
-    * readers still list its dir (permanent double-read).
-    */
-  private def committedUpTo(spark: org.apache.spark.sql.SparkSession,
-                            outDir: String, base: Long, w: Long): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(outDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs =
-      (if (base >= 0) Seq(new org.apache.hadoop.fs.Path(outDir, s"base-$base"))
-       else Seq.empty) ++
-        fs.listStatus(path).toSeq.map(_.getPath)
-          // FULL-NAME parse: an unanchored match would read a stray
-          // `batch-3-bak` or `rebatch-7` dir as committed data
-          .filter(p => graft.sources.GenerationLedger.idOf("batch", p.getName)
-            .exists(b => b > base && b <= w))
-    spark.read.parquet(dirs.map(_.toString): _*)
+    ledger.readAsOf(base, last)
   }
 
   /** COMPACTION for the parquet ledger sink: one directory per
@@ -191,8 +141,12 @@ object StreamSink {
   def compactParquet(spark: org.apache.spark.sql.SparkSession,
                      outDir: String, retireSuperseded: Boolean = false): Unit = {
     val ledger = sinkLedger(spark, outDir)
+    // the fold reads the CAPTURED (base, w) view: re-deriving the
+    // watermark at scan time would race a live query committing a batch
+    // between the capture and the read, folding that batch into the base
+    // while readers still list its dir (permanent double-read)
     ledger.compact(retireSuperseded) { (base, w) =>
-      committedUpTo(spark, outDir, base, w).write.mode("overwrite").parquet(ledger.baseDir(w))
+      ledger.readAsOf(base, w).write.mode("overwrite").parquet(ledger.baseDir(w))
       Map.empty
     }
   }

@@ -84,7 +84,7 @@ class GenerationLedgerSpec extends SparkSuite {
       s => s.asInstanceOf[LshBandIndex].compact(buckets = 2),
       slots = Seq("bands::lsh_band_index", "compacted::lsh_band_index",
         "compacted_buckets_2::lsh_band_index", "param.bands::lsh_band_index",
-        "param.k::lsh_band_index", "param.n::lsh_band_index", "run_37::lsh_band_index"),
+        "param.k::lsh_band_index", "param.n::lsh_band_index", "run_af63aa4c86019796::lsh_band_index"),
       dirs = Seq("bookmarks.properties", "compacted-2")))
 
   private def slots(dir: String): Map[String, String] = {

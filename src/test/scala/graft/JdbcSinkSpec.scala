@@ -128,6 +128,35 @@ class JdbcSinkSpec extends SparkSuite {
       .option("url", url).option("dbtable", "eo_rb").load().count() == 2)
   }
 
+  test("exactly-once staged load: a failed staging write surfaces its own error and leaves no ledger row") {
+    val ddl = Seq("CREATE TABLE eo_st (k INT, total DOUBLE)",
+      JdbcSink.loadLedgerDdl("eo_st_ledger"))
+    val boom = org.apache.spark.sql.functions.udf((k: Int) => {
+      if (k == 1) throw new IllegalStateException("staging write failed"); k
+    })
+    val df = Seq((1, 1.0), (2, 2.0)).toDF("k", "total")
+    val ex = intercept[Exception] {
+      JdbcSink.stagedBulkLoadExactlyOnce(df.withColumn("k", boom($"k")), url, "eo_st",
+        Files.createTempDirectory("eost1").toString, derbyCopy,
+        runId = "run-S", ledgerTable = "eo_st_ledger", preactions = ddl)
+    }
+    val chain = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).toSeq
+    // Derby's "cannot close a connection while a transaction is still
+    // active" (SQLState 25001) must not replace the job's own failure
+    assert(!chain.exists {
+      case e: java.sql.SQLException => e.getSQLState == "25001"
+      case _ => false
+    }, s"the close error hid the staging failure: $ex")
+    assert(chain.exists(e => String.valueOf(e.getMessage).contains("staging write failed")), ex.toString)
+    def count(table: String): Long = spark.read.format("jdbc")
+      .option("url", url).option("dbtable", table).load().count()
+    assert(count("eo_st_ledger") == 0, "a failed delivery must not be marked delivered")
+    assert(JdbcSink.stagedBulkLoadExactlyOnce(df, url, "eo_st",
+      Files.createTempDirectory("eost2").toString, derbyCopy,
+      runId = "run-S", ledgerTable = "eo_st_ledger") >= 1)
+    assert(count("eo_st") == 2 && count("eo_st_ledger") == 1)
+  }
+
   test("failed preaction aborts before any write") {
     val df = Seq((1, 10.0)).toDF("k", "total")
     intercept[java.sql.SQLException] {

@@ -40,6 +40,20 @@ class LshBandIndexSpec extends SparkSuite {
       Dedup.minhashBands(universe, 3, 16, 4).count())
   }
 
+  test("run keys that share a 32-bit String.hashCode each append once; replaying either is a no-op") {
+    assert("Aa".hashCode === "BB".hashCode)
+    val idx = new LshBandIndex(spark, TempDirs.create("lsh-idx-runkey"))
+    idx.bootstrap(oldDocs)
+    def sweep(key: String): Unit = idx.sweepAndAppend(universe, delta, 0.6, runKey = key)(_ => ())
+    sweep("Aa")
+    assert(idx.committedGen === 1L)
+    sweep("BB")
+    assert(idx.committedGen === 2L, "a distinct run key must append its bands")
+    sweep("Aa")
+    sweep("BB")
+    assert(idx.committedGen === 2L, "a replayed run key must not append again")
+  }
+
   test("commit-after-sink: a failed sink appends nothing; the retry sweeps the same delta") {
     val idx = new LshBandIndex(spark, TempDirs.create("lsh-idx-spec2"))
     idx.bootstrap(oldDocs)
