@@ -223,10 +223,14 @@ object Bench {
     (fromVerdict.toSeq ++ fromArtifacts).maxOption.map(_ + 1)
   }
 
-  // escapes control characters too (Verify's rule): a leak description
-  // carries an RDD name, which for a cached DataFrame is a multi-line
-  // PLAN string — raw newlines in it corrupted a committed bench file
-  private def jstr(s: String): String =
+  /** The mains' one JSON string literal: escapes the quote, the backslash
+    * and ALL control chars (< 0x20). A tab or CR in hand-written oracle
+    * SQL would otherwise make a reader's `json.load` fail, and a
+    * leak description carries an RDD name, which for a cached DataFrame is
+    * a multi-line PLAN string — raw newlines in it corrupted a committed
+    * bench file.
+    */
+  private[graft] def jstr(s: String): String =
     "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -693,13 +697,9 @@ object Bench {
     // no startup delete, so the file never transits a deleted state a
     // mid-run `git add -A` could commit (r11 verdict #7); readers check
     // `written_at_epoch_ms` for staleness instead of existence.
-    if (only.isEmpty) {
-      val tmp = Paths.get("BENCH_SUMMARY.json.tmp")
-      Files.write(tmp, (summaryJson + "\n").getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, Paths.get("BENCH_SUMMARY.json"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (only.isEmpty)
+      graft.sources.AtomicFile.publish(Paths.get("BENCH_SUMMARY.json"))(
+        _.write((summaryJson + "\n").getBytes(StandardCharsets.UTF_8)))
     // stop FIRST, then print: Spark's async daemons (e.g. the state-store
     // maintenance thread) can log a stack trace during shutdown, and a
     // trace landing AFTER the summary would displace it as the process's

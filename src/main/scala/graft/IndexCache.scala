@@ -28,11 +28,11 @@ import org.apache.spark.sql.SparkSession
   * Results are unchanged by construction — the cached object is the same
   * index the query would have rebuilt, probed through the same committed
   * watermark (replayed ingests skip their append via
-  * [[graft.sources.LshBandIndex.sweepAndAppend]]'s `runKey` ledger slot).
+  * [[graft.sources.LshBandIndex.sweepAndAppend]]'s batch id).
   *
   * Keyed by `applicationId` so a leaked JVM-global can never serve a stale
   * index to a different session (scratch dirs die with the JVM anyway —
-  * [[Scratch]]'s shutdown hook). A stopped session's entries are evicted
+  * [[TempDirs]]' shutdown hook). A stopped session's entries are evicted
   * by a per-application `SparkListenerApplicationEnd` hook, so a
   * long-lived multi-session JVM (the test suite) does not accumulate dead
   * handles. Values are built inside `computeIfAbsent`: two threads racing
@@ -59,7 +59,7 @@ object IndexCache {
     * contamination). Cost is one driver-side recursive LIST per call —
     * metadata-sized on any filesystem, the price of snapshot-correct
     * caching. Entries for superseded versions stay until application
-    * end (their scratch dirs die with the JVM — [[Scratch]]).
+    * end (their scratch dirs die with the JVM — [[TempDirs]]).
     */
   def getOrBuildVersioned[T <: AnyRef](spark: SparkSession, key: String,
                                        dataDir: String)(build: => T): T =

@@ -27,7 +27,7 @@ object ParallelReports {
                               build: DataFrame => DataFrame)
 
   /** One driver-thread branch of [[fanOut]]: `work` runs with its Spark
-    * jobs in FAIR pool `pool` (None: the default pool).
+    * jobs in FAIR pool `pool` (None: the calling thread's pool).
     */
   final case class Branch[+T](name: String, pool: Option[String], work: () => T)
 
@@ -44,12 +44,28 @@ object ParallelReports {
   /** Driver threads [[fanOut]] may use however few cores the JVM reports. */
   private val MinDriverThreads = 8
 
+  private val PoolKey = "spark.scheduler.pool"
+
   /** Run every branch on a driver thread; returns their results in
-    * branch order. All branches share one cancellable job group: when any
-    * branch fails, the group's running AND not-yet-submitted jobs are
-    * cancelled and every sibling is awaited before the first failure is
-    * rethrown, so no branch's job outlives the call — none can race the
-    * caller's cleanup (e.g. an unpersist in the caller's finally).
+    * branch order. The caller's pool and job group are read once, on the
+    * calling thread, and two rules make a nested fan-out (a sweep inside a
+    * fleet branch) safe:
+    *
+    *   - A branch with `pool = None` runs in the CALLER's pool (the default
+    *     pool when the caller has none), so a nested fan-out stays in the
+    *     FAIR pool its enclosing branch was pinned to.
+    *   - A fan-out cancels only a job group it created. From a thread with
+    *     no job group (the star tick, [[Fleet.maintainAll]]) the branches
+    *     share a fresh cancellable group: when any branch fails, the
+    *     group's running AND not-yet-submitted jobs are cancelled and
+    *     every sibling is awaited before the first failure is rethrown, so
+    *     no branch's job outlives the call — none can race the caller's
+    *     cleanup (e.g. an unpersist in the caller's finally). From a thread
+    *     that already carries a group (a fleet branch), the branches run in
+    *     THAT group and a failure awaits every sibling and rethrows without
+    *     cancelling: the enclosing fan-out's cancel still reaches the
+    *     nested jobs, and a nested failure never cancels the outer
+    *     siblings, whose cancellation errors would otherwise mask it.
     *
     * The pool holds min(branches, session parallelism,
     * max(driver cores, [[MinDriverThreads]])) threads: more in-flight jobs
@@ -63,28 +79,30 @@ object ParallelReports {
     * waves.
     */
   def fanOut[T](spark: SparkSession, branches: Seq[Branch[T]]): Seq[T] = {
-    val threads = Seq(branches.size, spark.sparkContext.defaultParallelism,
+    val sc = spark.sparkContext
+    val callerPool = Option(sc.getLocalProperty(PoolKey))
+    val callerGroup = Option(sc.getLocalProperty("spark.jobGroup.id"))
+    val groupId = callerGroup.getOrElse("graft-reports-" + java.util.UUID.randomUUID())
+    val threads = Seq(branches.size, sc.defaultParallelism,
       math.max(Runtime.getRuntime.availableProcessors, MinDriverThreads)).min
     val executor = Executors.newFixedThreadPool(math.max(threads, 1))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(executor)
-    val sc = spark.sparkContext
-    val groupId = "graft-reports-" + java.util.UUID.randomUUID()
     try {
       val futures = branches.map { b =>
         Future {
-          sc.setLocalProperty("spark.scheduler.pool", b.pool.orNull)
+          sc.setLocalProperty(PoolKey, b.pool.orElse(callerPool).orNull)
           sc.setJobGroup(groupId, s"graft report ${b.name}", interruptOnCancel = true)
           try b.work()
           finally {
             sc.clearJobGroup()
-            sc.setLocalProperty("spark.scheduler.pool", null)
+            sc.setLocalProperty(PoolKey, null)
           }
         }
       }
       try Await.result(Future.sequence(futures), Duration.Inf)
       catch {
         case t: Throwable =>
-          sc.cancelJobGroupAndFutureJobs(groupId)
+          if (callerGroup.isEmpty) sc.cancelJobGroupAndFutureJobs(groupId)
           futures.foreach(Await.ready(_, Duration.Inf))
           throw t
       }

@@ -166,20 +166,20 @@ object CorpusQueries {
     // the committed index and time the per-ingest work — band(delta),
     // probe, verify, sink, report — which is what production pays per
     // run (the incr_lsh_indexed rehearsal rows in BASELINE.md measured
-    // that probe staying corpus-independent). The runKey makes the
-    // replayed ingest's append a no-op, so warm runs don't grow the
-    // index; the oracle is byte-identical to corpus_clean_incr's, which
-    // IS the claim: the indexed composition is indistinguishable from the
-    // re-signing one.
+    // that probe staying corpus-independent). The cached index takes one
+    // keyed ingest (batch 0), so a replayed ingest's append is a no-op and
+    // warm runs don't grow the index; the oracle is byte-identical to
+    // corpus_clean_incr's, which IS the claim: the indexed composition is
+    // indistinguishable from the re-signing one.
     QueryDef("corpus_clean_incr_indexed", (s, dir) => {
       val (hist, deltaSole) = corpusCleanSidesStored(s, dir)
       val idx = cciIndex(s, dir)
-      val out = Scratch.create(s, "graft-cci-sweep")
+      val out = TempDirs.create(s, "graft-cci-sweep")
       idx.sweepAndAppend(
         hist.select(col("doc_id"), col("text"))
           .unionByName(deltaSole.select(col("doc_id"), col("text"))),
         deltaSole.select(col("doc_id"), col("text")),
-        threshold = 0.8, runKey = s"cci|$dir") { pairs =>
+        threshold = 0.8, batchId = Some(0L)) { pairs =>
         pairs.write.mode("overwrite").parquet(out)
       }
       val dropIds = s.read.parquet(out)
@@ -204,21 +204,21 @@ object CorpusQueries {
     // index, postings, cell assignments) is persisted and probed, never
     // recomputed — the indexes are session-cached (IndexCache) exactly as
     // production holds them open, and all appends are replay-idempotent
-    // (runKey / batch ledger). Output = the packed shard manifest, whose
+    // (batch ledgers). Output = the packed shard manifest, whose
     // hash pins the whole chain end-to-end against the DuckDB replay.
     QueryDef("pipeline_e2e_incr", (s, dir) => {
       val (hist, deltaSole) = corpusCleanSidesStored(s, dir)
 
       // near-dup vs history + delta-delta via the persisted band index
-      // (same cached index + ingest runKey as corpus_clean_incr_indexed:
+      // (same cached index + ingest batch as corpus_clean_incr_indexed:
       // it IS the same ingest, so whichever query runs first appends)
       val lsh = cciIndex(s, dir)
-      val out = Scratch.create(s, "graft-pipe-sweep")
+      val out = TempDirs.create(s, "graft-pipe-sweep")
       lsh.sweepAndAppend(
         hist.select(col("doc_id"), col("text"))
           .unionByName(deltaSole.select(col("doc_id"), col("text"))),
         deltaSole.select(col("doc_id"), col("text")),
-        threshold = 0.8, runKey = s"cci|$dir") { pairs =>
+        threshold = 0.8, batchId = Some(0L)) { pairs =>
         pairs.write.mode("overwrite").parquet(out)
       }
       val nearDrop = s.read.parquet(out)
@@ -229,7 +229,7 @@ object CorpusQueries {
       // admitted delta's postings (exactly-once batch ledger), then the
       // probe reads ONLY the banned term's posting — never document text
       val inv = IndexCache.getOrBuildVersioned(s, s"pipe-inv|$dir", dir) {
-        val i = new graft.sources.InvertedIndex(s, Scratch.create(s, "graft-pipe-inv"))
+        val i = new graft.sources.InvertedIndex(s, TempDirs.create(s, "graft-pipe-inv"))
         i.bootstrap(hist.select(col("doc_id"), col("text")))
         i.compact(buckets = 8)
         i
@@ -273,7 +273,7 @@ object CorpusQueries {
       val refEmb = emb.filter(col("vec_id") % 10 =!= 0)
       val ivf = IndexCache.getOrBuildVersioned(s, s"pipe-ivf|$dir", dir) {
         val i = new graft.sources.IvfIndex(
-          s, Scratch.create(s, "graft-pipe-ivf"), nlist = 16)
+          s, TempDirs.create(s, "graft-pipe-ivf"), nlist = 16)
         i.bootstrap(refEmb)
         i.maintain(refEmb, refEmb.limit(0), emb.filter(col("vec_id") < 8),
           k = 5, recallFloor = 0.9, cosineFloor = 0.22, maxFracBelow = 1.0,
@@ -484,7 +484,7 @@ object CorpusQueries {
       import org.apache.spark.sql.{Dataset, Row}
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val store = IndexCache.getOrBuildVersioned(s, s"lm-gate|$dir", dir) {
-        val st = new graft.sources.LmStore(s, Scratch.create(s, "graft-lm-gate"))
+        val st = new graft.sources.LmStore(s, TempDirs.create(s, "graft-lm-gate"))
         st.fit(docs.filter(col("doc_id") % 50 =!= 0))
         st
       }
@@ -803,7 +803,7 @@ object CorpusQueries {
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val store = IndexCache.getOrBuildVersioned(s, s"bpe-vocab|$dir", dir) {
         val st = new graft.sources.BpeVocabStore(
-          s, Scratch.create(s, "graft-bpe-vocab"), rounds = 3)
+          s, TempDirs.create(s, "graft-bpe-vocab"), rounds = 3)
         st.fit(docs)
         st
       }
@@ -1018,7 +1018,7 @@ object CorpusQueries {
     QueryDef("lm_perplexity_incr", (s, dir) => {
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val store = IndexCache.getOrBuildVersioned(s, s"bigram-lm|$dir", dir) {
-        val st = new graft.sources.LmStore(s, Scratch.create(s, "graft-lm"))
+        val st = new graft.sources.LmStore(s, TempDirs.create(s, "graft-lm"))
         st.fit(docs)
         st
       }
@@ -1113,7 +1113,7 @@ object CorpusQueries {
 
   private def corpusCleanHistStored(s: SparkSession, dir: String): DataFrame = {
     val path = IndexCache.getOrBuildVersioned(s, s"cci-hist|$dir", dir) {
-      val p = Scratch.create(s, "graft-cci-hist")
+      val p = TempDirs.create(s, "graft-cci-hist")
       corpusCleanHist(s, dir).write.mode("overwrite").parquet(p)
       p
     }
@@ -1122,12 +1122,12 @@ object CorpusQueries {
 
   /** The persisted band index over the stored clean history that
     * `corpus_clean_incr_indexed` and `pipeline_e2e_incr` both sweep: the
-    * same ingest under the same runKey, so whichever runs first appends.
+    * same ingest under batch id 0, so whichever runs first appends.
     */
   private def cciIndex(s: SparkSession, dir: String): graft.sources.LshBandIndex =
     IndexCache.getOrBuildVersioned(s, s"cci-idx|$dir", dir) {
       val i = new graft.sources.LshBandIndex(
-        s, Scratch.create(s, "graft-cci-idx"), n = 3, k = 16, bands = 4)
+        s, TempDirs.create(s, "graft-cci-idx"), n = 3, k = 16, bands = 4)
       i.bootstrap(corpusCleanHistStored(s, dir).select(col("doc_id"), col("text")))
       i.compact(buckets = 8)
       i
@@ -1139,7 +1139,7 @@ object CorpusQueries {
   private def dsirModel(s: SparkSession, dir: String): graft.sources.DsirModelStore =
     IndexCache.getOrBuildVersioned(s, s"dsir-model|$dir", dir) {
       val st = new graft.sources.DsirModelStore(
-        s, Scratch.create(s, "graft-dsir-model"), buckets = 2048)
+        s, TempDirs.create(s, "graft-dsir-model"), buckets = 2048)
       st.fit(Tables.documents(s, dir).select(col("doc_id"), col("lang"), col("text")),
         col("lang") === "en")
       st

@@ -230,13 +230,13 @@ object DedupQueries {
       // write/read it; the watermark properties file is driver-side O(1)
       // state on shared storage, same contract as the job bookmark)
       val idx = new graft.sources.LshBandIndex(
-        s, Scratch.create(s, "graft-lsh-idx"), n = 3, k = 16, bands = 4)
+        s, TempDirs.create(s, "graft-lsh-idx"), n = 3, k = 16, bands = 4)
       idx.bootstrap(universe.filter(col("doc_id") % 50 =!= 0))
       // compacted = the steady-state production layout: the stored side of
       // the probe is a bucketed scan with NO exchange (LshBandIndexSpec);
       // output is spec-identical to the generation layout
       idx.compact(buckets = 8)
-      val out = Scratch.create(s, "graft-lsh-sweep")
+      val out = TempDirs.create(s, "graft-lsh-sweep")
       idx.sweepAndAppend(universe, universe.filter(col("doc_id") % 50 === 0),
         threshold = 0.6) { pairs =>
         pairs.write.mode("overwrite").parquet(out)
@@ -256,20 +256,21 @@ object DedupQueries {
     // banding theorem (a pair is lost only if stopped buckets were its
     // ONLY agreeing bands) and the oracle replays the exclusion exactly.
     // Index build + stop list are session-cached; the warm runs time the
-    // capped delta sweep alone. runKey makes the replayed append a no-op.
+    // capped delta sweep alone. Each cached index takes one keyed ingest
+    // (batch 0), so the replayed append is a no-op.
     QueryDef("dedup_lsh_capped", (s, dir) => {
       val universe = Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
         .select(col("doc_id"), col("text"))
       val idx = IndexCache.getOrBuildVersioned(s, s"lsh-cap|$dir", dir) {
         val i = new graft.sources.LshBandIndex(
-          s, Scratch.create(s, "graft-lsh-cap"), n = 3, k = 16, bands = 4)
+          s, TempDirs.create(s, "graft-lsh-cap"), n = 3, k = 16, bands = 4)
         i.bootstrap(universe.filter(col("doc_id") % 50 =!= 0))
         i.compact(buckets = 8)
         i
       }
-      val out = Scratch.create(s, "graft-lsh-cap-sweep")
+      val out = TempDirs.create(s, "graft-lsh-cap-sweep")
       idx.sweepAndAppend(universe, universe.filter(col("doc_id") % 50 === 0),
-        threshold = 0.6, runKey = s"cap|$dir",
+        threshold = 0.6, batchId = Some(0L),
         stopBands = Some(idx.stopBands(cap = 4))) { pairs =>
         pairs.write.mode("overwrite").parquet(out)
       }
@@ -321,7 +322,7 @@ object DedupQueries {
     QueryDef("lsh_band_stats", (s, dir) => {
       val idx = IndexCache.getOrBuildVersioned(s, s"lsh-stats|$dir", dir) {
         val i = new graft.sources.LshBandIndex(
-          s, Scratch.create(s, "graft-lsh-stats"), n = 3, k = 16, bands = 4)
+          s, TempDirs.create(s, "graft-lsh-stats"), n = 3, k = 16, bands = 4)
         i.bootstrap(Tables.documents(s, dir).filter(col("doc_id") % 10 === 0)
           .select(col("doc_id"), col("text")))
         i.compact(buckets = 8)

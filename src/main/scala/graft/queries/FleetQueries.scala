@@ -128,7 +128,7 @@ object FleetQueries {
       val delta = emb.filter(col("vec_id") % 50 === 0)
       val queries = emb.filter(col("vec_id") < 8)
       val stale = new graft.sources.IvfIndex(
-        s, Scratch.create(s, "graft-fleet-mt-ivf"), nlist = 16)
+        s, TempDirs.create(s, "graft-fleet-mt-ivf"), nlist = 16)
       stale.bootstrap(hist)
       // cheap gen-0 stamp: the one-setting full-coarse-scan sweep
       // (nprobe == nlist reads every cell → recall 1.0 clears any
@@ -141,7 +141,7 @@ object FleetQueries {
         cosineFloor = 0.22, maxFracBelow = 1.0, nprobes = Seq(16))
       stale.append(delta)
       val inv = new graft.sources.InvertedIndex(
-        s, Scratch.create(s, "graft-fleet-mt-inv"))
+        s, TempDirs.create(s, "graft-fleet-mt-inv"))
       fleetInvBuild(s, dir, inv)
       val fresh = freshIvfStore(s, dir)
       graft.operators.Fleet.maintainAll(s,

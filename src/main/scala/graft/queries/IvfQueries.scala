@@ -50,7 +50,7 @@ object IvfQueries {
       val emb = Tables.embeddings(s, dir)
       val idx = IndexCache.getOrBuildVersioned(s, s"ivfpq-cmp|$dir", dir) {
         val i = new graft.sources.IvfPqIndex(
-          s, Scratch.create(s, "graft-ivfpq-cmp"), nlist = 16, m = 8, codes = 256)
+          s, TempDirs.create(s, "graft-ivfpq-cmp"), nlist = 16, m = 8, codes = 256)
         i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
         i.appendBatch(emb.filter(col("vec_id") % 100 === 0), batchId = 0L)
         i.appendBatch(emb.filter(col("vec_id") % 100 === 50), batchId = 1L)
@@ -80,7 +80,7 @@ object IvfQueries {
       import org.apache.spark.sql.{Dataset, Row}
       val emb = Tables.embeddings(s, dir)
       val idx = new graft.sources.IvfPqIndex(
-        s, Scratch.create(s, "graft-ivfpq-stream"), nlist = 16, m = 8, codes = 256)
+        s, TempDirs.create(s, "graft-ivfpq-stream"), nlist = 16, m = 8, codes = 256)
       idx.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
       val q = graft.streaming.Streaming.embeddings(s, dir)
         .filter(col("vec_id") % 50 === 0)
@@ -120,12 +120,12 @@ object IvfQueries {
       val delta = emb.filter(col("vec_id") % 50 === 0)
       val old = IndexCache.getOrBuildVersioned(s, s"ivfpq-rs-old|$dir", dir) {
         val i = new graft.sources.IvfPqIndex(
-          s, Scratch.create(s, "graft-ivfpq-rs-old"), nlist = 16, m = 8, codes = 256)
+          s, TempDirs.create(s, "graft-ivfpq-rs-old"), nlist = 16, m = 8, codes = 256)
         i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
         i
       }
       val fresh = IndexCache.getOrBuildVersioned(s, s"ivfpq-rs-new|$dir", dir) {
-        old.reseedInto(Scratch.create(s, "graft-ivfpq-rs-new"), emb)
+        old.reseedInto(TempDirs.create(s, "graft-ivfpq-rs-new"), emb)
       }
       old.driftReport(delta, cosineFloor = 0.22, maxFracBelow = 0.25)
         .select(lit("old").as("phase"), col("n_vectors"), col("n_below"),
@@ -199,7 +199,7 @@ object IvfQueries {
       val emb = Tables.embeddings(s, dir)
       val idx = {
         val i = new graft.sources.IvfPqIndex(
-          s, Scratch.create(s, "graft-ivfpq-maint"), nlist = 16, m = 8, codes = 256)
+          s, TempDirs.create(s, "graft-ivfpq-maint"), nlist = 16, m = 8, codes = 256)
         i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
         i.append(emb.filter(col("vec_id") % 50 === 0))
         i
@@ -208,7 +208,7 @@ object IvfQueries {
         emb.filter(col("vec_id") < 8), k = 5, recallFloor = 0.9,
         cosineFloor = 0.22, maxFracBelow = 0.7,
         nprobes = Seq(2, 8), shortlists = Seq(20, 200),
-        reseedDir = Some(Scratch.create(s, "graft-ivfpq-maint-rs")),
+        reseedDir = Some(TempDirs.create(s, "graft-ivfpq-maint-rs")),
         cellBudget = 256, compactAbove = 1).report
     },
       // drift arithmetic + grid choice + commit decision in one row; the
@@ -332,7 +332,7 @@ object IvfQueries {
     QueryDef("sim_ivf_indexed", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val idx = new graft.sources.IvfIndex(
-        s, Scratch.create(s, "graft-ivf-idx"), nlist = 16)
+        s, TempDirs.create(s, "graft-ivf-idx"), nlist = 16)
       idx.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
       idx.append(emb.filter(col("vec_id") % 50 === 0))
       idx.topK(emb, emb.filter(col("vec_id") < 8), 5, nprobe = 4)
@@ -359,7 +359,7 @@ object IvfQueries {
       val emb = Tables.embeddings(s, dir)
       val idx = IndexCache.getOrBuildVersioned(s, s"ivf-cm|$dir", dir) {
         val i = new graft.sources.IvfIndex(
-          s, Scratch.create(s, "graft-ivf-cm"), nlist = 16)
+          s, TempDirs.create(s, "graft-ivf-cm"), nlist = 16)
         i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
         i.append(emb.filter(col("vec_id") % 50 === 0))
         i
@@ -432,7 +432,7 @@ object IvfQueries {
       val emb = Tables.embeddings(s, dir)
       val idx = IndexCache.getOrBuildVersioned(s, s"ivfpq-batch|$dir", dir) {
         val i = new graft.sources.IvfPqIndex(
-          s, Scratch.create(s, "graft-ivfpq-batch"), nlist = 16, m = 8, codes = 256)
+          s, TempDirs.create(s, "graft-ivfpq-batch"), nlist = 16, m = 8, codes = 256)
         i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
         i.append(emb.filter(col("vec_id") % 50 === 0))
         i
@@ -474,7 +474,7 @@ object IvfQueries {
       val emb = Tables.embeddings(s, dir)
       val idx = IndexCache.getOrBuildVersioned(s, s"ivf-grow|$dir", dir) {
         val i = new graft.sources.IvfIndex(
-          s, Scratch.create(s, "graft-ivf-grow"), nlist = 2)
+          s, TempDirs.create(s, "graft-ivf-grow"), nlist = 2)
         i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
         i.append(emb.filter(col("vec_id") % 50 === 0))
         i
@@ -485,7 +485,7 @@ object IvfQueries {
         emb.filter(col("vec_id") < 8), k = 5, recallFloor = 0.9,
         cosineFloor = 0.22, maxFracBelow = 1.0,
         nprobes = Seq(1, 2, 4, 8, 16),
-        reseedDir = Some(Scratch.create(s, "graft-ivf-grow-new")),
+        reseedDir = Some(TempDirs.create(s, "graft-ivf-grow-new")),
         cellBudget = 64).report
     },
       // the capacity decision end to end: both sweep grids, the capacity
@@ -517,7 +517,7 @@ object IvfQueries {
       val emb = Tables.embeddings(s, dir)
       val idx = IndexCache.getOrBuildVersioned(s, s"ivfpq-grow|$dir", dir) {
         val i = new graft.sources.IvfPqIndex(
-          s, Scratch.create(s, "graft-ivfpq-grow"), nlist = 2, m = 8, codes = 16)
+          s, TempDirs.create(s, "graft-ivfpq-grow"), nlist = 2, m = 8, codes = 16)
         i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
         i.append(emb.filter(col("vec_id") % 50 === 0))
         i
@@ -526,7 +526,7 @@ object IvfQueries {
         emb.filter(col("vec_id") < 8), k = 5, recallFloor = 0.9,
         cosineFloor = 0.22, maxFracBelow = 1.0,
         nprobes = Seq(1, 2, 4, 8), shortlists = Seq(20, 200),
-        reseedDir = Some(Scratch.create(s, "graft-ivfpq-grow-new")),
+        reseedDir = Some(TempDirs.create(s, "graft-ivfpq-grow-new")),
         cellBudget = 64).report
     },
       // the composition's grow-taken replay: both sweep grids (pre-grow
@@ -550,7 +550,7 @@ object IvfQueries {
       import org.apache.spark.sql.{Dataset, Row}
       val emb = Tables.embeddings(s, dir)
       val idx = new graft.sources.IvfIndex(
-        s, Scratch.create(s, "graft-ivf-stream"), nlist = 16)
+        s, TempDirs.create(s, "graft-ivf-stream"), nlist = 16)
       idx.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
       val q = graft.streaming.Streaming.embeddings(s, dir)
         .filter(col("vec_id") % 50 === 0)
@@ -584,12 +584,12 @@ object IvfQueries {
       val delta = emb.filter(col("vec_id") % 50 === 0)
       val old = IndexCache.getOrBuildVersioned(s, s"ivf-rs-old|$dir", dir) {
         val i = new graft.sources.IvfIndex(
-          s, Scratch.create(s, "graft-ivf-rs-old"), nlist = 16)
+          s, TempDirs.create(s, "graft-ivf-rs-old"), nlist = 16)
         i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
         i
       }
       val fresh = IndexCache.getOrBuildVersioned(s, s"ivf-rs-new|$dir", dir) {
-        old.reseedInto(Scratch.create(s, "graft-ivf-rs-new"), emb)
+        old.reseedInto(TempDirs.create(s, "graft-ivf-rs-new"), emb)
       }
       old.driftReport(delta, cosineFloor = 0.22, maxFracBelow = 0.25)
         .select(lit("old").as("phase"), col("n_vectors"), col("n_below"),
@@ -615,7 +615,7 @@ object IvfQueries {
     QueryDef("ivf_drift", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val idx = new graft.sources.IvfIndex(
-        s, Scratch.create(s, "graft-ivf-drift"), nlist = 16)
+        s, TempDirs.create(s, "graft-ivf-drift"), nlist = 16)
       idx.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
       idx.driftReport(emb.filter(col("vec_id") % 50 === 0),
         cosineFloor = 0.22, maxFracBelow = 0.25)
@@ -644,7 +644,7 @@ object IvfQueries {
     QueryDef("ivf_balance", (s, dir) => {
       val emb = Tables.embeddings(s, dir)
       val idx = new graft.sources.IvfIndex(
-        s, Scratch.create(s, "graft-ivf-bal"), nlist = 16)
+        s, TempDirs.create(s, "graft-ivf-bal"), nlist = 16)
       idx.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
       idx.append(emb.filter(col("vec_id") % 50 === 0))
       idx.balanceReport
@@ -680,7 +680,7 @@ object IvfQueries {
     IndexCache.getOrBuildVersioned(s, s"ivfpq-idx|$dir", dir) {
       val emb = Tables.embeddings(s, dir)
       val i = new graft.sources.IvfPqIndex(
-        s, Scratch.create(s, "graft-ivfpq-idx"), nlist = 16, m = 8, codes = 256)
+        s, TempDirs.create(s, "graft-ivfpq-idx"), nlist = 16, m = 8, codes = 256)
       i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
       i.append(emb.filter(col("vec_id") % 50 === 0))
       i
@@ -693,7 +693,7 @@ object IvfQueries {
     IndexCache.getOrBuildVersioned(s, s"ivf-batch|$dir", dir) {
       val emb = Tables.embeddings(s, dir)
       val i = new graft.sources.IvfIndex(
-        s, Scratch.create(s, "graft-ivf-batch"), nlist = 16)
+        s, TempDirs.create(s, "graft-ivf-batch"), nlist = 16)
       i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
       i.append(emb.filter(col("vec_id") % 50 === 0))
       i

@@ -299,7 +299,7 @@ object LayoutQueries {
     QueryDef("partition_overwrite", (s, dir) => {
       val ev = Tables.events(s, dir)
         .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-      val out = Scratch.create(s, "graft-dynpart")
+      val out = TempDirs.create(s, "graft-dynpart")
       val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
       try {
         s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -108,7 +108,7 @@ object SearchQueries {
       val idx = IndexCache.getOrBuildVersioned(s, s"inv-incr|$dir", dir) {
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         val cut = 250L
-        val i = new graft.sources.InvertedIndex(s, Scratch.create(s, "graft-inv-idx-incr"))
+        val i = new graft.sources.InvertedIndex(s, TempDirs.create(s, "graft-inv-idx-incr"))
         i.bootstrap(docs.filter(col("doc_id") < cut))
         i.compact(buckets = 8)
         i.append(docs.filter(col("doc_id") >= cut))
@@ -130,7 +130,7 @@ object SearchQueries {
       import org.apache.spark.sql.{Dataset, Row}
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val mid = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
-      val idx = new graft.sources.InvertedIndex(s, Scratch.create(s, "graft-inv-stream"))
+      val idx = new graft.sources.InvertedIndex(s, TempDirs.create(s, "graft-inv-stream"))
       idx.bootstrap(docs.filter(col("doc_id") <= mid))
       idx.compact(buckets = 8)
       val q = graft.streaming.Streaming.documents(s, dir)
@@ -177,7 +177,7 @@ object SearchQueries {
       val idx = IndexCache.getOrBuildVersioned(s, s"inv-asof|$dir", dir) {
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
         val cut = 250L
-        val i = new graft.sources.InvertedIndex(s, Scratch.create(s, "graft-inv-idx-ao"))
+        val i = new graft.sources.InvertedIndex(s, TempDirs.create(s, "graft-inv-idx-ao"))
         i.bootstrap(docs.filter(col("doc_id") < cut))
         i.append(docs.filter(col("doc_id") >= cut))
         i
@@ -217,7 +217,7 @@ object SearchQueries {
     QueryDef("inverted_stats", (s, dir) => {
       val idx = IndexCache.getOrBuildVersioned(s, s"inv-uncompacted|$dir", dir) {
         val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
-        val i = new graft.sources.InvertedIndex(s, Scratch.create(s, "graft-inv-idx-st"))
+        val i = new graft.sources.InvertedIndex(s, TempDirs.create(s, "graft-inv-idx-st"))
         i.bootstrap(docs)
         i
       }
@@ -407,7 +407,7 @@ object SearchQueries {
       val emb = Tables.embeddings(s, dir)
       val idx = IndexCache.getOrBuildVersioned(s, s"ivf-full|$dir", dir) {
         val i = new graft.sources.IvfIndex(
-          s, Scratch.create(s, "graft-ivf-full"), nlist = 16)
+          s, TempDirs.create(s, "graft-ivf-full"), nlist = 16)
         i.bootstrap(emb)
         i
       }
@@ -542,7 +542,7 @@ object SearchQueries {
       val emb = Tables.embeddings(s, dir)
       val idx = IndexCache.getOrBuildVersioned(s, s"ivfpq-hy|$dir", dir) {
         val i = new graft.sources.IvfPqIndex(
-          s, Scratch.create(s, "graft-ivfpq-hy"), nlist = 16, m = 8, codes = 256)
+          s, TempDirs.create(s, "graft-ivfpq-hy"), nlist = 16, m = 8, codes = 256)
         i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
         i.append(emb.filter(col("vec_id") % 50 === 0))
         i
@@ -845,7 +845,7 @@ object SearchQueries {
     */
   private def fullInvIndex(s: SparkSession, dir: String): graft.sources.InvertedIndex =
     IndexCache.getOrBuildVersioned(s, s"inv-full|$dir", dir) {
-      val idx = new graft.sources.InvertedIndex(s, Scratch.create(s, "graft-inv-idx"))
+      val idx = new graft.sources.InvertedIndex(s, TempDirs.create(s, "graft-inv-idx"))
       idx.bootstrap(Tables.documents(s, dir).select(col("doc_id"), col("text")))
       idx.compact(buckets = 8)
       idx

@@ -94,12 +94,12 @@ object StarQueries {
       // public unpersist and accumulate across runs (r5: warm runs
       // degraded 4.4s -> 8s -> 11.6s from exactly that), while the
       // read-back union is a dimension-sized scan independent of `shared`.
-      // Sinks live under the spark-visible Scratch root (r6 ADVICE: a
+      // Sinks live under the spark-visible TempDirs root (r6 ADVICE: a
       // java.io.tmpdir sink is driver-local and leaks across runs) and are
       // deleted at JVM exit — the returned frame still reads them lazily,
       // so eager deletion inside the query would be wrong
       val results = ParallelReports.run(s, shared, specs) { df =>
-        val sink = Scratch.create(s, "graft-report")
+        val sink = TempDirs.create(s, "graft-report")
         df.write.mode("overwrite").parquet(sink)
         s.read.parquet(sink)
       }

@@ -138,7 +138,7 @@ object VectorQueries {
       val emb = Tables.embeddings(s, dir)
       val idx = IndexCache.getOrBuildVersioned(s, s"pq-idx|$dir", dir) {
         val i = new graft.sources.PqIndex(
-          s, Scratch.create(s, "graft-pq-idx"), m = 8, codes = 256)
+          s, TempDirs.create(s, "graft-pq-idx"), m = 8, codes = 256)
         i.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
         i.append(emb.filter(col("vec_id") % 50 === 0))
         i

@@ -60,15 +60,31 @@ final class BookmarkStore(stateDir: String) {
   def commitAll(ctx: String, entries: Map[String, Long]): Unit = synchronized {
     val p = load()
     entries.foreach { case (table, v) => p.setProperty(slot(table, ctx), v.toString) }
-    Files.createDirectories(file.getParent)
-    val tmp = Files.createTempFile(file.getParent, "bookmarks", ".tmp")
-    val out = Files.newOutputStream(tmp)
-    try p.store(out, "graft bookmark state") finally out.close()
-    Files.move(tmp, file, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    AtomicFile.publish(file)(p.store(_, "graft bookmark state"))
   }
 
   def clear(): Unit = Files.deleteIfExists(file)
+}
+
+/** The one temp-then-rename file publish: the bookmark commit and the
+  * mains' repo-root summaries. `write` fills a temp file in the target's
+  * own directory (so the rename never crosses a filesystem), which then
+  * replaces the target in one atomic move: a reader sees the old file or
+  * the new one, never a torn one. A failed write leaves the target as it
+  * was and no temp file behind.
+  */
+private[graft] object AtomicFile {
+  def publish(target: Path)(write: java.io.OutputStream => Unit): Unit = {
+    val dir = target.toAbsolutePath.getParent
+    Files.createDirectories(dir)
+    val tmp = Files.createTempFile(dir, target.getFileName.toString, ".tmp")
+    try {
+      val out = Files.newOutputStream(tmp)
+      try write(out) finally out.close()
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
+  }
 }
 
 /** FAISS-header discipline for the persisted stores (r11 advice): a

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity
+import graft.operators.{ParallelReports, Similarity}
 
 /** The frozen-cell ANN store: the persisted production shape of
   * [[Similarity.ivfTopK]], and the one owner of everything its two
@@ -276,8 +276,13 @@ abstract class FrozenCellIndex[S <: FrozenCellIndex[S]](spark: SparkSession, dir
     * choice. If NO setting clears, the widest is marked chosen with
     * `cleared = false` — the signal that buying recall query-side is
     * exhausted, never a silent pick. Settings of a phase probe
-    * concurrently ([[SweepFanout]]); each is a pure function of the
-    * frozen store, and a memo guarantees one probe per setting.
+    * concurrently, one [[ParallelReports.fanOut]] branch each on the
+    * store's session with `pool = None`: inside a fleet branch they stay
+    * in its FAIR pool and job group, so the fleet's cancel reaches them.
+    * Each is a pure function of the frozen store — only the job
+    * interleaving changes, never a value — and a memo guarantees one
+    * probe per setting. A failing setting is rethrown once every sibling
+    * has ended.
     */
   protected final def sweep(corpus: DataFrame, queries: DataFrame, k: Int,
                             recallFloor: Double, nprobes: Seq[Int],
@@ -303,7 +308,11 @@ abstract class FrozenCellIndex[S <: FrozenCellIndex[S]](spark: SparkSession, dir
         math.rint(r * 10000) / 10000
       })
     val widest = sl.lastOption
-    SweepFanout.foreach(np)(p => { recallAt(p, widest); () })
+    def probeAll(settings: Seq[(Int, Option[Int])]): Unit =
+      ParallelReports.fanOut(spark, settings.map { case (p, s) =>
+        ParallelReports.Branch(s"sweep nprobe=$p shortlist=$s", None, () => recallAt(p, s))
+      })
+    probeAll(np.map(_ -> widest))
     val phase1 = np.map(p => (p, widest, recallAt(p, widest)))
     val cleared1 = phase1.find(_._3 >= recallFloor)
     val chosenNp = cleared1.fold(np.last)(_._1)
@@ -314,8 +323,7 @@ abstract class FrozenCellIndex[S <: FrozenCellIndex[S]](spark: SparkSession, dir
       if (sl.isEmpty) Nil
       else if (cleared1.isEmpty) Seq((chosenNp, widest, recallAt(chosenNp, widest)))
       else {
-        SweepFanout.foreach(sl.filterNot(s => memo.contains((chosenNp, Some(s)))))(
-          s => { recallAt(chosenNp, Some(s)); () })
+        probeAll(sl.map(s => (chosenNp, Some(s))).filterNot(memo.contains))
         sl.map(s => (chosenNp, Some(s), recallAt(chosenNp, Some(s))))
       }
     val chosenSl = phase2.find(_._3 >= recallFloor).fold(widest)(_._2)

@@ -205,8 +205,8 @@ object GenerationLedger {
   }
 
   /** 64-bit FNV-1a of a string — the one fingerprint that turns a string
-    * identity (a sink's checkpoint lineage, a sweep's run key) into a
-    * [[BookmarkStore]] slot, since slots hold longs. Over the full string,
+    * identity (a sink's checkpoint lineage, a bucketed store's root) into
+    * a [[BookmarkStore]] slot or a catalog name. Over the full string,
     * so two distinct keys share a value only by a 64-bit collision.
     */
   def fingerprint(s: String): Long = {
@@ -230,9 +230,11 @@ private[sources] final class BucketedBase(spark: SparkSession, ledger: Generatio
                                           schema: org.apache.spark.sql.types.StructType,
                                           keys: Seq[String]) {
   /** Catalog identity, deterministic from the store root so a fresh
-    * session re-finds it.
+    * session re-finds it: the root's 64-bit fingerprint, so two roots
+    * share a table only by a 64-bit collision.
     */
-  val tableName: String = tablePrefix + java.lang.Integer.toHexString(ledger.dir.hashCode)
+  val tableName: String =
+    tablePrefix + java.lang.Long.toHexString(GenerationLedger.fingerprint(ledger.dir))
 
   private def buckets(g: Long): Int =
     ledger.get(s"compacted_buckets_$g").getOrElse(8L).toInt

@@ -153,19 +153,19 @@ final class LshBandIndex(spark: SparkSession, dir: String,
     * [[graft.operators.Dedup.minhashLshPairsIncremental]]'s: exactly the
     * full sweep's pairs involving a delta doc.
     *
-    * `runKey` (optional) makes the APPEND idempotent under whole-ingest
-    * replay: a nonempty key is committed atomically with the band
-    * watermark (slot `run_<hex>` of its 64-bit
-    * [[GenerationLedger.fingerprint]]), and a later call carrying an already-committed key still
-    * sweeps and sinks (at-least-once sink, closed by idempotent sinks —
-    * same window as the star job) but skips re-appending the delta's
-    * bands. Without it, a replayed ingest — a bench warm run re-executing
-    * the same declared query against an [[graft.IndexCache]]-cached index
-    * — would grow the index by one duplicate generation per run. The
-    * sweep RESULT is replay-invariant either way: a delta doc's own
-    * committed bands are excluded by the `doc_id` inequality, and
-    * delta-vs-delta pairs are already produced by the delta-side probe,
-    * so the distinct'd pair set is identical before and after the append.
+    * `batchId` (optional) makes the APPEND idempotent under whole-ingest
+    * replay, like every other store's `appendBatch`: the append goes
+    * through [[GenerationLedger.advance]], so a batch id at or below the
+    * committed `last_batch` still sweeps and sinks (at-least-once sink,
+    * closed by idempotent sinks — same window as the star job) but skips
+    * re-appending the delta's bands. Without it, a replayed ingest — a
+    * bench warm run re-executing the same declared query against an
+    * [[graft.IndexCache]]-cached index — would grow the index by one
+    * duplicate generation per run. The sweep RESULT is replay-invariant
+    * either way: a delta doc's own committed bands are excluded by the
+    * `doc_id` inequality, and delta-vs-delta pairs are already produced by
+    * the delta-side probe, so the distinct'd pair set is identical before
+    * and after the append.
     *
     * `stopBands` (optional, see [[stopBands]]) excludes the listed
     * (band, band_key) buckets from candidate generation: the DELTA side
@@ -177,7 +177,7 @@ final class LshBandIndex(spark: SparkSession, dir: String,
     * without re-shingling history.
     */
   def sweepAndAppend(corpusText: DataFrame, delta: DataFrame,
-                     threshold: Double, runKey: String = "",
+                     threshold: Double, batchId: Option[Long] = None,
                      stopBands: Option[DataFrame] = None)
                     (sink: DataFrame => Unit): Unit = {
     // the delta's bands feed the probe AND the post-sink append — pin so
@@ -222,13 +222,7 @@ final class LshBandIndex(spark: SparkSession, dir: String,
       .filter(col("jaccard") >= threshold)
     sink(pairs)
     // sink succeeded -> append the delta's bands and advance the watermark
-    // (skipped when this ingest's runKey is already committed: the append
-    // already happened and re-appending would duplicate the generation)
-    val runSlot = if (runKey.isEmpty) "" else
-      "run_" + java.lang.Long.toHexString(GenerationLedger.fingerprint(runKey))
-    val replayed = runKey.nonEmpty && ledger.get(runSlot).isDefined
-    if (!replayed)
-      ledger.advance(None, _ => if (runKey.isEmpty) Map.empty else Map(runSlot -> 1L))(
-        writeGen(_, dBandsAll))
+    // (a no-op for an already-applied batch id)
+    ledger.advance(batchId)(writeGen(_, dBandsAll))
   }
 }

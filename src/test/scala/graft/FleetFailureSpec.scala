@@ -5,8 +5,8 @@ import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
-import graft.operators.Fleet
-import graft.sources.{InvertedIndex, SweepFanout}
+import graft.operators.{Fleet, ParallelReports}
+import graft.sources.InvertedIndex
 
 /** The fleet walk's failure path: a failing maintenance action must not
   * leave a sibling's Spark job running behind the rethrown error, and a
@@ -54,15 +54,16 @@ class FleetFailureSpec extends SparkSuite {
     val siblingStarted = new CountDownLatch(1)
     val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
     val err = intercept[IllegalStateException] {
-      SweepFanout.foreach(Seq(1, 2)) {
-        case 1 =>
+      ParallelReports.fanOut(spark, Seq(
+        ParallelReports.Branch("1", None, () => {
           siblingStarted.countDown()
           Thread.sleep(2000)
           siblingDone.set(true)
-        case _ =>
+        }),
+        ParallelReports.Branch("2", None, () => {
           siblingStarted.await()
           throw new IllegalStateException("setting failed")
-      }
+        })))
     }
     assert(err.getMessage === "setting failed")
     assert(siblingDone.get, "foreach rethrew while a sibling setting was still running")

@@ -1,8 +1,7 @@
 package graft
 
-import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
-import graft.operators.Fleet
+import graft.operators.{Fleet, ParallelReports}
 import graft.sources.{InvertedIndex, IvfIndex, IvfPqIndex, LshBandIndex, PqIndex}
 
 /** The fleet maintenance walk (r14 verdict next-round #5) must carry the
@@ -203,24 +202,10 @@ class FleetSpec extends SparkSuite {
       s"fleet fan-out ran ${maxSeen.get} actions concurrently on a $par-core session")
     // the sweep fan-out follows the same cap discipline
     inflight.set(0); maxSeen.set(0)
-    graft.sources.SweepFanout.foreach(1 to par + 2)(_ => { act(); () })
+    ParallelReports.fanOut(spark,
+      (1 to par + 2).map(i => ParallelReports.Branch(s"s$i", None, () => act())))
     assert(maxSeen.get >= 1 && maxSeen.get <= par,
       s"sweep fan-out ran ${maxSeen.get} settings concurrently on a $par-core session")
-  }
-
-  test("SweepFanout runs every item from a thread with no active or default session") {
-    val ran = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    var failure: Option[Throwable] = None
-    val caller = new Thread(() =>
-      try {
-        org.apache.spark.sql.SparkSession.clearActiveSession()
-        graft.sources.SweepFanout.foreach(1 to 3)(i => { ran.add(i); () })
-      } catch { case t: Throwable => failure = Some(t) })
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try { caller.start(); caller.join() }
-    finally org.apache.spark.sql.SparkSession.setDefaultSession(spark)
-    assert(failure.isEmpty, s"sessionless sweep threw $failure")
-    assert(ran.asScala.toSeq.sorted == Seq(1, 2, 3))
   }
 
   test("inverted/lsh fragment arithmetic matches the generational layout") {

@@ -72,7 +72,7 @@ class GenerationLedgerSpec extends SparkSuite {
         "postings::inverted_index", "total_len_0::inverted_index",
         "total_len_1::inverted_index", "total_len_2::inverted_index"),
       dirs = Seq("bookmarks.properties", "compacted-2")),
-    // the band index's batch id is its sweep's runKey; the sinks drop the
+    // the band index's batch id is its sweep's batchId; the sinks drop the
     // pairs unread, so a poisoned delta first fails in the band append
     Case("lsh", new LshBandIndex(spark, _),
       s => s.asInstanceOf[LshBandIndex].bootstrap(third(docs, "doc_id", 0)),
@@ -80,11 +80,11 @@ class GenerationLedgerSpec extends SparkSuite {
         .sweepAndAppend(docs, third(docs, "doc_id", 1), 0.6)(_ => ()),
       (s, f, id) => s.asInstanceOf[LshBandIndex]
         .sweepAndAppend(docs, f(third(docs, "doc_id", 2)), 0.6,
-          runKey = id.toString)(_ => ()),
+          batchId = Some(id))(_ => ()),
       s => s.asInstanceOf[LshBandIndex].compact(buckets = 2),
       slots = Seq("bands::lsh_band_index", "compacted::lsh_band_index",
-        "compacted_buckets_2::lsh_band_index", "param.bands::lsh_band_index",
-        "param.k::lsh_band_index", "param.n::lsh_band_index", "run_af63aa4c86019796::lsh_band_index"),
+        "compacted_buckets_2::lsh_band_index", "last_batch::lsh_band_index",
+        "param.bands::lsh_band_index", "param.k::lsh_band_index", "param.n::lsh_band_index"),
       dirs = Seq("bookmarks.properties", "compacted-2")))
 
   private def slots(dir: String): Map[String, String] = {

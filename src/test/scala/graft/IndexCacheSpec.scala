@@ -56,7 +56,7 @@ class IndexCacheSpec extends SparkSuite {
     assert(builds == 2)
   }
 
-  test("replayed sweepAndAppend with a runKey does not grow the index") {
+  test("replayed sweepAndAppend with a batch id does not grow the index") {
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     val docs = Seq(
@@ -69,17 +69,17 @@ class IndexCacheSpec extends SparkSuite {
     val gen0 = idx.committedGen
     var first: Set[(Long, Long)] = Set.empty
     idx.sweepAndAppend(docs.unionByName(delta), delta, threshold = 0.5,
-      runKey = "spec-run") { p =>
+      batchId = Some(0L)) { p =>
       first = p.select(col("id_a"), col("id_b")).as[(Long, Long)].collect().toSet
     }
     val gen1 = idx.committedGen
     assert(gen1 == gen0 + 1)
-    // replay: same runKey -> sweep + sink run again, append is a no-op,
+    // replay: same batch id -> sweep + sink run again, append is a no-op,
     // and the pair set is unchanged (the appended delta bands only add
     // pairs the delta-side probe already produced, minus self-pairs)
     var second: Set[(Long, Long)] = Set.empty
     idx.sweepAndAppend(docs.unionByName(delta), delta, threshold = 0.5,
-      runKey = "spec-run") { p =>
+      batchId = Some(0L)) { p =>
       second = p.select(col("id_a"), col("id_b")).as[(Long, Long)].collect().toSet
     }
     assert(idx.committedGen == gen1)

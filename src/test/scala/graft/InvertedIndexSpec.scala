@@ -117,6 +117,23 @@ class InvertedIndexSpec extends SparkSuite {
       idx.postingsOf(docs.filter(col("doc_id") >= 250)).count())
   }
 
+  test("roots whose paths share a 32-bit String.hashCode keep their own catalog tables") {
+    val tmp = TempDirs.create("inv-idx-names")
+    assert(s"$tmp/Aa".hashCode === s"$tmp/BB".hashCode)
+    val a = new InvertedIndex(spark, s"$tmp/Aa")
+    val b = new InvertedIndex(spark, s"$tmp/BB")
+    a.bootstrap(docs.filter(col("doc_id") < 250))
+    b.bootstrap(docs.filter(col("doc_id") >= 250))
+    a.compact(buckets = 2)
+    b.compact(buckets = 2)
+    def ids(idx: InvertedIndex): Set[Long] =
+      idx.postingsDf.select(col("doc_id")).distinct().collect()
+        .map(_.getAs[Number](0).longValue).toSet
+    assert(ids(a).nonEmpty && ids(a).forall(_ < 250))
+    assert(ids(b).nonEmpty && ids(b).forall(_ >= 250))
+    assert(a.tableName !== b.tableName)
+  }
+
   test("a query's term filter is pushed into the compacted parquet scan") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     val idx = new InvertedIndex(spark, TempDirs.create("inv-idx-prune"))

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 import graft.sources.LshBandIndex
@@ -40,18 +41,38 @@ class LshBandIndexSpec extends SparkSuite {
       Dedup.minhashBands(universe, 3, 16, 4).count())
   }
 
-  test("run keys that share a 32-bit String.hashCode each append once; replaying either is a no-op") {
-    assert("Aa".hashCode === "BB".hashCode)
-    val idx = new LshBandIndex(spark, TempDirs.create("lsh-idx-runkey"))
+  private def sweepBatch(idx: LshBandIndex, b: Long): Unit =
+    idx.sweepAndAppend(universe, delta, 0.6, batchId = Some(b))(_ => ())
+
+  test("distinct batch ids each append once; replaying either is a no-op") {
+    val idx = new LshBandIndex(spark, TempDirs.create("lsh-idx-batch"))
     idx.bootstrap(oldDocs)
-    def sweep(key: String): Unit = idx.sweepAndAppend(universe, delta, 0.6, runKey = key)(_ => ())
-    sweep("Aa")
+    sweepBatch(idx, 0L)
     assert(idx.committedGen === 1L)
-    sweep("BB")
-    assert(idx.committedGen === 2L, "a distinct run key must append its bands")
-    sweep("Aa")
-    sweep("BB")
-    assert(idx.committedGen === 2L, "a replayed run key must not append again")
+    sweepBatch(idx, 1L)
+    assert(idx.committedGen === 2L, "a distinct batch id must append its bands")
+    sweepBatch(idx, 0L)
+    sweepBatch(idx, 1L)
+    assert(idx.committedGen === 2L, "a replayed batch id must not append again")
+  }
+
+  test("keyed ingests leave a fixed set of slots: 5 batch ids commit the slot names 1 does") {
+    def slotNames(dir: String): Set[String] = {
+      val p = new java.util.Properties()
+      val in = java.nio.file.Files.newInputStream(java.nio.file.Paths.get(dir, "bookmarks.properties"))
+      try p.load(in) finally in.close()
+      p.stringPropertyNames().asScala.toSet
+    }
+    val one = TempDirs.create("lsh-idx-slots1")
+    val five = TempDirs.create("lsh-idx-slots5")
+    val a = new LshBandIndex(spark, one)
+    val b = new LshBandIndex(spark, five)
+    a.bootstrap(oldDocs)
+    b.bootstrap(oldDocs)
+    sweepBatch(a, 0L)
+    (0L until 5L).foreach(sweepBatch(b, _))
+    assert(b.committedGen === 5L)
+    assert(slotNames(five) === slotNames(one))
   }
 
   test("commit-after-sink: a failed sink appends nothing; the retry sweeps the same delta") {

@@ -73,4 +73,72 @@ class ParallelReportsSpec extends SparkSuite {
       assert(sc.statusTracker.getActiveJobIds.isEmpty)
     }
   }
+
+  test("a nested fan-out's None branches keep the enclosing branch's pool") {
+    val sc = spark.sparkContext
+    val seen = ParallelReports.fanOut(spark, Seq(
+      ParallelReports.Branch("outer", Some("fleet-x"), () =>
+        ParallelReports.fanOut(spark, Seq("i1", "i2").map(n =>
+          ParallelReports.Branch(n, None, () => sc.getLocalProperty("spark.scheduler.pool")))))))
+    assert(seen.flatten === Seq("fleet-x", "fleet-x"))
+    assert(sc.getLocalProperty("spark.scheduler.pool") == null)
+  }
+
+  private def slowJob(): Long = spark.sparkContext.parallelize(1 to 4, 4)
+    .map { i => Thread.sleep(30000); i }.count()
+
+  private def drained(): Unit = eventually(timeout(1.second)) {
+    ListenerBusDrain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+  }
+
+  private def awaitActiveJob(): Unit = eventually(timeout(10.seconds)) {
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.nonEmpty)
+  }
+
+  test("an outer failure cancels the jobs of a nested fan-out, which runs in the outer group") {
+    val innerStarted = new CountDownLatch(1)
+    val t0 = System.nanoTime()
+    val err = intercept[IllegalStateException] {
+      ParallelReports.fanOut(spark, Seq(
+        ParallelReports.Branch("a", Some("1"), () => {
+          ParallelReports.fanOut(spark, Seq(ParallelReports.Branch("a-inner", None, () => {
+            innerStarted.countDown()
+            slowJob()
+          })))
+          ()
+        }),
+        ParallelReports.Branch("b", Some("2"), () => {
+          innerStarted.await()
+          awaitActiveJob() // fail only once the nested job is really running
+          throw new IllegalStateException("outer sibling failed")
+        })))
+    }
+    assert(err.getMessage === "outer sibling failed")
+    // the nested tasks would sleep 30 s: returning well before that means
+    // the outer cancel reached the nested job
+    assert((System.nanoTime() - t0) / 1e9 < 20.0)
+    drained()
+  }
+
+  test("a nested failure surfaces as the root cause, not as an outer sibling's cancellation") {
+    val siblingStarted = new CountDownLatch(1)
+    val err = intercept[IllegalStateException] {
+      ParallelReports.fanOut(spark, Seq(
+        ParallelReports.Branch("a", Some("1"), () => {
+          siblingStarted.await()
+          awaitActiveJob()
+          ParallelReports.fanOut(spark, Seq(ParallelReports.Branch("a-inner", None, () =>
+            throw new IllegalStateException("nested branch failed"))))
+          ()
+        }),
+        ParallelReports.Branch("b", Some("2"), () => {
+          siblingStarted.countDown()
+          slowJob()
+          ()
+        })))
+    }
+    assert(err.getMessage === "nested branch failed")
+    drained()
+  }
 }

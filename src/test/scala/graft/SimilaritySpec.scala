@@ -228,7 +228,7 @@ class SimilaritySpec extends SparkSuite {
     // guard's exact 0.0 against EVERY cell — the maximal shift) reports
     // frac_below 1.0 and recommends the rebuild-into-new-lineage path.
     val idx = new graft.sources.IvfIndex(
-      spark, Scratch.create(spark, "spec-ivf-drift"), nlist = 16)
+      spark, TempDirs.create(spark, "spec-ivf-drift"), nlist = 16)
     val boot = corpus.filter(col("vec_id") % 50 =!= 0)
     idx.bootstrap(boot)
     // delta drawn from the centroids themselves: best-cell cosine is ~1
