@@ -13,7 +13,11 @@ object Explain {
     // comma-separated query filter, same contract as Verify
     val toExplain =
       SparkEntry.selected(SparkEntry.queryFilter(sys.env.getOrElse("SPARK_GRAFT_ONLY", "")))
-    val spark = GraftSession.builder("local[4]", 4).getOrCreate()
+    // sized like Verify/Bench: Tables.spread compares scan splits with
+    // defaultParallelism, so a plan dumped at another core count can
+    // show another spread decision than the run it explains
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     toExplain.foreach { case (name, fn) =>

@@ -244,9 +244,9 @@ object GraftFunctions {
     Bridge.column(HyperplaneBuckets(Bridge.expression(emb), tables, bits))
 
   /** JL sign random projection to `outDims` doubles, codegen'd
-    * ([[RandomProjection]]; planes `first..first+outDims-1` of the shared
+    * ([[RandomProjection]]; planes `0..outDims-1` of the shared
     * deterministic ±1 family).
     */
-  def randomProjection(emb: Column, outDims: Int, first: Int = 0): Column =
-    Bridge.column(RandomProjection(Bridge.expression(emb), outDims, first))
+  def randomProjection(emb: Column, outDims: Int): Column =
+    Bridge.column(RandomProjection(Bridge.expression(emb), outDims))
 }

@@ -184,7 +184,7 @@ case class HyperplaneBuckets(child: Expression, tables: Int, bits: Int)
 
 /** Johnson–Lindenstrauss sign random projection of a float-array vector:
   * element j of the result is the strict left-fold sum
-  * Σ_d v[d] · sign(first + j, d) over the SAME deterministic ±1 family as
+  * Σ_d v[d] · sign(j, d) over the SAME deterministic ±1 family as
   * the LSH planes ([[graft.operators.Similarity.hyperplaneSign]] — one
   * sign source of truth for buckets, projections, and the oracle SQL).
   *
@@ -199,16 +199,16 @@ case class HyperplaneBuckets(child: Expression, tables: Int, bits: Int)
   * rows; the full vectors are re-fetched only for the per-query candidate
   * set at re-rank ([[graft.operators.Similarity.projectedTopK]]).
   */
-case class RandomProjection(child: Expression, outDims: Int, first: Int)
+case class RandomProjection(child: Expression, outDims: Int)
   extends UnaryExpression {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
 
   override def nullSafeEval(input: Any): Any =
-    RandomProjection.compute(input.asInstanceOf[ArrayData], outDims, first)
+    RandomProjection.compute(input.asInstanceOf[ArrayData], outDims)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"graft.functions.RandomProjection.compute($c, $outDims, $first)")
+      s"graft.functions.RandomProjection.compute($c, $outDims)")
 
   override protected def withNewChildInternal(newChild: Expression): RandomProjection =
     copy(child = newChild)
@@ -217,13 +217,13 @@ case class RandomProjection(child: Expression, outDims: Int, first: Int)
 
 object RandomProjection {
   /** Lockstep with Similarity.hyperplaneSign / Oracles.projections. */
-  def compute(arr: ArrayData, outDims: Int, first: Int): ArrayData = {
+  def compute(arr: ArrayData, outDims: Int): ArrayData = {
     val dim = graft.operators.Similarity.Dim
     val n = math.min(arr.numElements(), dim)
     val out = new Array[Double](outDims)
     var j = 0
     while (j < outDims) {
-      val plane = (first + j).toLong
+      val plane = j.toLong
       var acc = 0.0
       var d = 0
       while (d < n) {

@@ -141,6 +141,21 @@ object Dedup {
     */
   def ngramJaccardPairsPruned(docs: DataFrame, n: Int, threshold: Double,
                               maxDf: Int): DataFrame = {
+    val (cand, sets) = rareShingleCandidates(docs, n, maxDf)
+    jaccardVerify(cand, sets, threshold)
+  }
+
+  /** Candidate pairs (id_a < id_b) sharing a "rare" n-gram shingle
+    * (document frequency <= `maxDf`), with the shingle sets (doc_id, gs)
+    * of the docs they involve — the candidate stage of
+    * [[ngramJaccardPairsPruned]] and [[containmentPairs]]. Both frames
+    * are pinned: the candidates feed several verify branches
+    * (pair-id-sized), and the sets are restricted to candidate-involved
+    * docs BEFORE the kernel runs, so the corpus's shingle arrays are
+    * never materialized whole (the sweepAndAppend lesson).
+    */
+  private def rareShingleCandidates(docs: DataFrame, n: Int,
+                                    maxDf: Int): (DataFrame, DataFrame) = {
     val grams = docs.select(col("doc_id"),
       explode(shingleHashes(col("text"), n)).as("g"))
     // the STOP set (df > maxDf) is small by construction — at most
@@ -153,20 +168,31 @@ object Dedup {
     val stop = grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf).select(col("g"))
     val rareGrams = grams.join(broadcast(stop), Seq("g"), "left_anti")
-    // cand feeds several verify branches — pinned (pair-id-sized); the
-    // verify shingle table is restricted to candidate-involved docs
-    // BEFORE the kernel runs, then pinned, so the corpus's shingle
-    // arrays are never materialized whole (the sweepAndAppend lesson)
     val cand = graft.Residue.pin(rareGrams.as("a")
       .join(rareGrams.as("b"),
         col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
       .distinct())
+    (cand, graft.Residue.pin(involvedSets(cand, docs, n)))
+  }
+
+  /** Shingle sets (doc_id, gs) of the `docs` that appear on either side
+    * of a candidate pair in `cand(id_a, id_b)` — a semi-join, so text is
+    * read and shingled only for matched docs.
+    */
+  private[graft] def involvedSets(cand: DataFrame, docs: DataFrame, n: Int): DataFrame = {
     val involved = cand.select(col("id_a").as("doc_id"))
       .union(cand.select(col("id_b").as("doc_id"))).distinct()
-    val sets = graft.Residue.pin(docs
-      .join(involved, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), shingleHashes(col("text"), n).as("gs")))
+    docs.join(involved, Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), shingleHashes(col("text"), n).as("gs"))
+  }
+
+  /** Exact verify of candidate pairs `cand(id_a, id_b)` against shingle
+    * sets `sets(doc_id, gs)`: (id_a, id_b, jaccard) with the full-set
+    * Jaccard |A∩B| / |A∪B| rounded to 6 places, kept at >= `threshold`.
+    */
+  private[graft] def jaccardVerify(cand: DataFrame, sets: DataFrame,
+                                   threshold: Double): DataFrame =
     cand
       .join(sets.as("ga"), col("id_a") === col("ga.doc_id"))
       .join(sets.as("gb"), col("id_b") === col("gb.doc_id"))
@@ -174,7 +200,6 @@ object Dedup {
         round(size(array_intersect(col("ga.gs"), col("gb.gs"))).cast("double") /
           size(array_union(col("ga.gs"), col("gb.gs"))), 6).as("jaccard"))
       .filter(col("jaccard") >= threshold)
-  }
 
   /** Asymmetric near-dup: document CONTAINMENT `|A∩B| / |A|` over hashed
     * n-gram shingle sets — the quote/subset-duplicate signal Jaccard
@@ -186,32 +211,16 @@ object Dedup {
     * each gated by `threshold` on its own contained side.
     *
     * Candidate generation and skew discipline are exactly
-    * [[ngramJaccardPairsPruned]]'s (df-pruned shingle equi-join,
-    * broadcast stop set, map-side-combined df counts): candidates are
-    * symmetric; only the score is directional, so both directions come
-    * from ONE verify join — no second pass over the corpus. A
-    * zero-shingle document never reaches the shingle join, so the
-    * contained-side denominator is always positive.
+    * [[ngramJaccardPairsPruned]]'s ([[rareShingleCandidates]]: df-pruned
+    * shingle equi-join, broadcast stop set, map-side-combined df
+    * counts): candidates are symmetric; only the score is directional,
+    * so both directions come from ONE verify join — no second pass
+    * over the corpus. A zero-shingle document never reaches the shingle
+    * join, so the contained-side denominator is always positive.
     */
   def containmentPairs(docs: DataFrame, n: Int, threshold: Double,
                        maxDf: Int): DataFrame = {
-    val grams = docs.select(col("doc_id"),
-      explode(shingleHashes(col("text"), n)).as("g"))
-    val stop = grams.groupBy(col("g")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf).select(col("g"))
-    val rareGrams = grams.join(broadcast(stop), Seq("g"), "left_anti")
-    // same pin + involved-restriction discipline as
-    // [[ngramJaccardPairsPruned]] (see the rationale there)
-    val cand = graft.Residue.pin(rareGrams.as("a")
-      .join(rareGrams.as("b"),
-        col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct())
-    val involved = cand.select(col("id_a").as("doc_id"))
-      .union(cand.select(col("id_b").as("doc_id"))).distinct()
-    val sets = graft.Residue.pin(docs
-      .join(involved, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), shingleHashes(col("text"), n).as("gs")))
+    val (cand, sets) = rareShingleCandidates(docs, n, maxDf)
     val scored = cand
       .join(sets.as("ga"), col("id_a") === col("ga.doc_id"))
       .join(sets.as("gb"), col("id_b") === col("gb.doc_id"))
@@ -264,14 +273,8 @@ object Dedup {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
       .distinct()
-    val grams = docs.select(col("doc_id"), shingleHashes(col("text"), n).as("gs"))
-    cand
-      .join(grams.as("ga"), col("id_a") === col("ga.doc_id"))
-      .join(grams.as("gb"), col("id_b") === col("gb.doc_id"))
-      .select(col("id_a"), col("id_b"),
-        round(size(array_intersect(col("ga.gs"), col("gb.gs"))).cast("double") /
-          size(array_union(col("ga.gs"), col("gb.gs"))), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    jaccardVerify(cand,
+      docs.select(col("doc_id"), shingleHashes(col("text"), n).as("gs")), threshold)
   }
 
   /** Incremental MinHash-LSH sweep: the near-dup pairs INVOLVING at least
@@ -311,18 +314,7 @@ object Dedup {
       .select(least(col("x.doc_id"), col("y.doc_id")).as("id_a"),
         greatest(col("x.doc_id"), col("y.doc_id")).as("id_b"))
       .distinct()
-    val involved = cand.select(col("id_a").as("doc_id"))
-      .union(cand.select(col("id_b").as("doc_id"))).distinct()
-    val grams = oldDocs.unionByName(deltaDocs)
-      .join(involved, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), shingleHashes(col("text"), n).as("gs"))
-    cand
-      .join(grams.as("ga"), col("id_a") === col("ga.doc_id"))
-      .join(grams.as("gb"), col("id_b") === col("gb.doc_id"))
-      .select(col("id_a"), col("id_b"),
-        round(size(array_intersect(col("ga.gs"), col("gb.gs"))).cast("double") /
-          size(array_union(col("ga.gs"), col("gb.gs"))), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    jaccardVerify(cand, involvedSets(cand, oldDocs.unionByName(deltaDocs), n), threshold)
   }
 
   /** SimHash near-dup pairs: `bits`-bit simhash over whitespace-token
@@ -359,13 +351,12 @@ object Dedup {
 
   /** [[simhashPairs]] with the key width derived from the corpus size
     * ([[Similarity.Sizing.simhashBits]]): the hamming trick's collision
-    * unit is the CHUNK (bits/(maxHamming+1) wide), so chunk width tracks
-    * log2(n) — a fixed 16-bit family's ~5-bit chunks saturate past ~10^5
+    * unit is the CHUNK (bits/3 wide at the fixed hamming budget of 2),
+    * so chunk width tracks log2(n) — a fixed 16-bit family's ~5-bit chunks saturate past ~10^5
     * docs and candidates go quadratic no matter how clean the data is.
     */
-  def simhashPairsAuto(docs: DataFrame, maxHamming: Int = 2): DataFrame =
-    simhashPairs(docs,
-      Similarity.Sizing.simhashBits(docs.count(), maxHamming), maxHamming)
+  def simhashPairsAuto(docs: DataFrame): DataFrame =
+    simhashPairs(docs, Similarity.Sizing.simhashBits(docs.count()), 2)
 
   /** Connected components over near-dup pairs: every doc that appears in
     * a pair gets `cluster_id` = min doc_id of its component (the cluster
@@ -650,15 +641,14 @@ object Dedup {
     * Size by the INSTANCE count and feed non-distinct grams: Bloom
     * insertion is idempotent, so a distinct() exchange before the build
     * buys nothing, and over-provisioning by the duplication factor only
-    * widens the (eval-suite-sized) filter while tightening its fpp. One
+    * widens the (eval-suite-sized) filter while tightening its 1% fpp. One
     * cheap count over the rows + one shuffle-free aggregate replaces
     * distinct + count + build.
     */
-  def gramBloom(bench: DataFrame, n: Int,
-                fpp: Double = 0.01): org.apache.spark.util.sketch.BloomFilter = {
+  def gramBloom(bench: DataFrame, n: Int): org.apache.spark.util.sketch.BloomFilter = {
     val g = bench.select(explode(shingleHashes(col("text"), n)).as("g"))
     val nGrams = math.max(1L, g.count())
-    g.stat.bloomFilter("g", nGrams, fpp)
+    g.stat.bloomFilter("g", nGrams, 0.01)
   }
 
   /** Bloom-prefiltered decontamination: the EXACT result of

@@ -14,32 +14,21 @@ import org.apache.spark.sql.functions._
   * and the score/degree sides stay node-sized.
   *
   * Determinism for the oracle: per-node contributions sum in shuffle
-  * order, so each round's score is rounded to `roundTo` decimals on
+  * order, so each round's score is rounded to 9 decimals on
   * BOTH engines before feeding the next round — the carried state is
   * bit-identical, and only the final low-order digit of a fresh sum
-  * could ever disagree (probability ~ ulp / 10^-roundTo per node).
+  * could ever disagree (probability ~ ulp / 10^-9 per node).
   */
 object Graph {
 
-  /** `iters` rounds of PageRank over directed `edges(src, dst)`.
-    * Every node must appear as a src (symmetrize the edge list for
-    * undirected graphs) so there are no dangling-mass corrections.
-    * Returns (node, out_deg, score).
-    */
-  /** When `broadcastNodes` (default): the node-sized score/degree sides
-    * ship as broadcasts, so each round is one edge-side shuffle (the
-    * group-sum). Disable for node sets past broadcast limits — the joins
-    * fall back to shuffles that reuse the same src-key partitioning
-    * every round.
-    */
   /** The orientation stage of [[triangleCounts]]: undirected edges
     * canonicalized, deduped, and oriented toward the higher (degree, id)
     * endpoint. Returns (u, w, dw) with `dw` the head's degree so
     * downstream can order heads without re-joining the degree table.
     */
-  private def orientByDegree(edges: DataFrame, src: String, dst: String): DataFrame = {
+  private def orientByDegree(edges: DataFrame): DataFrame = {
     val und = edges
-      .select(least(col(src), col(dst)).as("a"), greatest(col(src), col(dst)).as("b"))
+      .select(least(col("id_a"), col("id_b")).as("a"), greatest(col("id_a"), col("id_b")).as("b"))
       .where(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
       .distinct()
     val deg = und.select(explode(array(col("a"), col("b"))).as("v"))
@@ -78,9 +67,8 @@ object Graph {
     * candidate pairs (here: a whole MinHash-LSH pipeline) three times per
     * action; the pin is freed at the end-of-query drain.
     */
-  def triangleCounts(edges: DataFrame, src: String = "id_a",
-                     dst: String = "id_b"): DataFrame = {
-    val e = graft.Residue.pin(orientByDegree(edges, src, dst))
+  def triangleCounts(edges: DataFrame): DataFrame = {
+    val e = graft.Residue.pin(orientByDegree(edges))
     val wedges = e.as("e1").join(e.as("e2"),
         col("e1.u") === col("e2.u") &&
           struct(col("e1.dw"), col("e1.w")) < struct(col("e2.dw"), col("e2.w")))
@@ -92,9 +80,15 @@ object Graph {
       .groupBy(col("node")).agg(count(lit(1)).as("n_triangles"))
   }
 
-  def pagerank(edges: DataFrame, iters: Int, damping: Double = 0.85,
-               teleport: Double = 0.15, roundTo: Int = 9,
-               broadcastNodes: Boolean = true): DataFrame = {
+  /** `iters` rounds of PageRank over directed `edges(src, dst)` with
+    * damping 0.85 and teleport mass 0.15, each round's scores rounded to
+    * 9 decimals. Every node must appear as a src (symmetrize the edge
+    * list for undirected graphs) so there are no dangling-mass
+    * corrections. The node-sized score side ships as a broadcast, so each
+    * round is one edge-side shuffle (the group-sum).
+    * Returns (node, out_deg, score).
+    */
+  def pagerank(edges: DataFrame, iters: Int): DataFrame = {
     // materialize the edge list and degree table ONCE: without the tracked
     // pin each iteration's join re-derives them from source (at 100 TB that
     // is `iters` full scans of the input instead of one); both pins are
@@ -107,18 +101,16 @@ object Graph {
       .groupBy("src").agg(count(lit(1)).as("out_deg")))
     val e = graft.Residue.pin(edges.select(col("src"), col("dst"))
       .join(deg, "src"))
-    val bc: DataFrame => DataFrame =
-      if (broadcastNodes) broadcast(_) else identity
     val nodes = deg.select(col("src").as("node"), col("out_deg"))
     // O(1) driver scalar, same pattern as the tf-idf corpus size
     val n = nodes.count()
     var scores = nodes.select(col("node"), lit(1.0 / n).as("score"))
     for (_ <- 1 to iters) {
       scores = e
-        .join(bc(scores.withColumnRenamed("node", "src")), "src")
+        .join(broadcast(scores.withColumnRenamed("node", "src")), "src")
         .groupBy(col("dst").as("node"))
-        .agg(round(lit(teleport / n) +
-          lit(damping) * sum(col("score") / col("out_deg")), roundTo).as("score"))
+        .agg(round(lit(0.15 / n) +
+          lit(0.85) * sum(col("score") / col("out_deg")), 9).as("score"))
     }
     nodes.join(scores, "node").select("node", "out_deg", "score")
   }

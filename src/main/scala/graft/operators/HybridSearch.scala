@@ -40,16 +40,17 @@ object HybridSearch {
       row_number().over(Window.orderBy(score.desc, col("doc_id")))
         .as(rankName))
 
-  /** Fuse two ranked arms by RRF. `text` carries (doc_id, r_text),
-    * `vector` (doc_id, r_vec); emits the top `k` of
+  /** One arm's RRF term 1 / (60 + rank), 0 when the arm missed. */
+  private def contrib(r: Column): Column =
+    coalesce(lit(1.0) / (lit(60) + r), lit(0.0))
+
+  /** Fuse two ranked arms by RRF with the fixed k0 = 60. `text` carries
+    * (doc_id, r_text), `vector` (doc_id, r_vec); emits the top `k` of
     * (doc_id, r_text, r_vec, rrf) — absent-arm ranks stay NULL (the
     * contribution is 0), the auditor-readable form.
     */
-  def rrf2(text: DataFrame, vector: DataFrame, k: Int,
-           k0: Int = 60): DataFrame = {
-    require(k >= 1 && k0 >= 1)
-    val contrib = (r: Column) =>
-      coalesce(lit(1.0) / (lit(k0) + r), lit(0.0))
+  def rrf2(text: DataFrame, vector: DataFrame, k: Int): DataFrame = {
+    require(k >= 1)
     text.join(vector, Seq("doc_id"), "full_outer")
       .select(col("doc_id"), col("r_text"), col("r_vec"),
         round(contrib(col("r_text")) + contrib(col("r_vec")), 6).as("rrf"))
@@ -77,11 +78,8 @@ object HybridSearch {
     * RRF arithmetic and fixed text+vector addition order as [[rrf2]],
     * so a batch of one query fuses identically to the single-query path.
     */
-  def rrf2Batch(text: DataFrame, vector: DataFrame, k: Int,
-                k0: Int = 60): DataFrame = {
-    require(k >= 1 && k0 >= 1)
-    val contrib = (r: Column) =>
-      coalesce(lit(1.0) / (lit(k0) + r), lit(0.0))
+  def rrf2Batch(text: DataFrame, vector: DataFrame, k: Int): DataFrame = {
+    require(k >= 1)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("rrf").desc, col("doc_id"))
     text.join(vector, Seq("query_id", "doc_id"), "full_outer")

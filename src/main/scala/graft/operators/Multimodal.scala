@@ -84,15 +84,15 @@ object Multimodal {
     }
   }
 
-  /** Frame sampling for video payloads: up to `maxFrames` evenly-spaced
+  /** Frame sampling for video payloads: up to 8 evenly-spaced
     * frame offsets from the metadata duration. Pure column expressions —
     * map-only, no decode required, the payload column is never touched
     * (column pruning drops it from the scan).
     */
-  def sampleFrames(mediaDf: DataFrame, maxFrames: Int = 8): DataFrame = {
+  def sampleFrames(mediaDf: DataFrame): DataFrame = {
     // integer arithmetic only (DIV, not /): float division then cast
     // truncates in Spark but rounds in DuckDB — DIV agrees in both
-    val n = least(expr("meta.duration_ms DIV 1000"), lit(maxFrames)).cast("int")
+    val n = least(expr("meta.duration_ms DIV 1000"), lit(8)).cast("int")
     mediaDf.filter(col("media_type") === "video")
       .select(col("doc_id"), col("meta.duration_ms").as("duration_ms"), n.as("n_frames"))
       .select(col("doc_id"), col("duration_ms"), col("n_frames"),

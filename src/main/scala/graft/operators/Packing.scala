@@ -88,9 +88,9 @@ object Packing {
     * SQL oracle and invariant under repartitioning.
     */
   def packSequences(docs: DataFrame, idCol: String, nTokCol: String,
-                    seqLen: Long, ranges: Int = 32): DataFrame = {
-    require(seqLen >= 1 && ranges >= 1)
-    pieces(withGlobalPrefix(docs, idCol, nTokCol, ranges),
+                    seqLen: Long): DataFrame = {
+    require(seqLen >= 1)
+    pieces(withGlobalPrefix(docs, idCol, nTokCol, 32),
       idCol, nTokCol, seqLen)
   }
 
@@ -109,10 +109,9 @@ object Packing {
     * [[graft.sources.IvfIndex]] exist for their operators).
     */
   def packSequencesIncremental(delta: DataFrame, idCol: String, nTokCol: String,
-                               seqLen: Long, priorTokens: Long,
-                               ranges: Int = 32): DataFrame = {
-    require(seqLen >= 1 && ranges >= 1 && priorTokens >= 0)
-    pieces(withGlobalPrefix(delta, idCol, nTokCol, ranges)
+                               seqLen: Long, priorTokens: Long): DataFrame = {
+    require(seqLen >= 1 && priorTokens >= 0)
+    pieces(withGlobalPrefix(delta, idCol, nTokCol, 32)
         .withColumn("_start", col("_start") + lit(priorTokens)),
       idCol, nTokCol, seqLen)
   }

@@ -29,30 +29,31 @@ object Sampling {
     */
   val MixA: Long = 2654435761L % graft.functions.PolyHash.P
 
+  /** Bucket count of the sampling operators: rates resolve to 1/1000. */
+  private val Buckets = 1000
+
   /** Hash bucket in [0, buckets) of a sampling key. */
-  def hashBucket(key: Column, buckets: Int = 1000): Column =
+  def hashBucket(key: Column, buckets: Int): Column =
     pmod((poly_hash(key.cast("string")) * lit(MixA)) % lit(graft.functions.PolyHash.P),
       lit(buckets))
 
   /** Keep ~`fraction` of rows, deterministically by key. */
-  def deterministicSample(df: DataFrame, key: Column, fraction: Double,
-                          buckets: Int = 1000): DataFrame = {
+  def deterministicSample(df: DataFrame, key: Column, fraction: Double): DataFrame = {
     require(fraction >= 0 && fraction <= 1)
-    df.filter(hashBucket(key, buckets) < math.round(fraction * buckets))
+    df.filter(hashBucket(key, Buckets) < math.round(fraction * Buckets))
   }
 
   /** Tag every row "train" or "test" with ~`trainPct` going to train —
     * disjoint and exhaustive by construction (one hash, one threshold).
     */
-  def trainTestSplit(df: DataFrame, key: Column, trainPct: Double,
-                     buckets: Int = 1000): DataFrame =
+  def trainTestSplit(df: DataFrame, key: Column, trainPct: Double): DataFrame =
     df.withColumn("split",
-      when(hashBucket(key, buckets) < math.round(trainPct * buckets), lit("train"))
+      when(hashBucket(key, Buckets) < math.round(trainPct * Buckets), lit("train"))
         .otherwise(lit("test")))
 
   /** Per-row WEIGHTED deterministic sampling — the importance/quality
     * resampling verb ("keep each document with probability ∝ its quality
-    * score"): a row survives iff `hashBucket(key) < floor(w · buckets)`,
+    * score"): a row survives iff `hashBucket(key) < floor(w · 1000)`,
     * with `w` any column clamped to [0,1]. Still map-only and a pure
     * function of (key, weight), so re-runs, repartitions, engine swaps,
     * and incremental appends reproduce the identical sample. The
@@ -62,10 +63,9 @@ object Sampling {
     * membership moves, so curriculum re-weighting between training runs
     * perturbs the corpus minimally instead of resampling it wholesale.
     */
-  def weightedSample(df: DataFrame, key: Column, weight: Column,
-                     buckets: Int = 1000): DataFrame =
-    df.filter(hashBucket(key, buckets) <
-      floor(least(lit(1.0), greatest(lit(0.0), weight.cast("double"))) * buckets))
+  def weightedSample(df: DataFrame, key: Column, weight: Column): DataFrame =
+    df.filter(hashBucket(key, Buckets) <
+      floor(least(lit(1.0), greatest(lit(0.0), weight.cast("double"))) * Buckets))
 
   /** Leakage-safe train/test split: near-dup cluster members ALWAYS land
     * in the same split. A plain per-doc hash split leaks evaluation data —
@@ -83,10 +83,8 @@ object Sampling {
     * majority short-circuits through the coalesce); the split itself is
     * the same map-only portable hash as [[trainTestSplit]].
     */
-  def leakageSafeSplit(docs: DataFrame, pairs: DataFrame, trainPct: Double,
-                       buckets: Int = 1000): DataFrame =
-    trainTestSplit(withClusterKey(docs, pairs), col("cluster_id"),
-      trainPct, buckets)
+  def leakageSafeSplit(docs: DataFrame, pairs: DataFrame, trainPct: Double): DataFrame =
+    trainTestSplit(withClusterKey(docs, pairs), col("cluster_id"), trainPct)
 
   /** Leakage-safe K-FOLD assignment — [[leakageSafeSplit]]'s invariant
     * generalized from one train/test cut to cross-validation: the fold is
@@ -145,11 +143,10 @@ object Sampling {
     * round, so any SQL engine replays the arithmetic bit-identically.
     */
   def rebalanceMix(df: DataFrame, stratumCol: String, key: Column,
-                   targets: Map[String, Double],
-                   buckets: Int = 1000): DataFrame =
+                   targets: Map[String, Double]): DataFrame =
     rebalanceMixCounted(df, stratumCol, key, targets,
       df.groupBy(col(stratumCol)).count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap, buckets)
+        .map(r => r.getString(0) -> r.getLong(1)).toMap)
 
   /** [[rebalanceMix]] with the per-stratum counts supplied by a caller
     * that already aggregated them ([[temperatureMix]] derives its targets
@@ -158,8 +155,7 @@ object Sampling {
     */
   private def rebalanceMixCounted(df: DataFrame, stratumCol: String,
                                   key: Column, targets: Map[String, Double],
-                                  counts: Map[String, Long],
-                                  buckets: Int): DataFrame = {
+                                  counts: Map[String, Long]): DataFrame = {
     require(targets.values.forall(_ >= 0))
     val scale = targets.collect {
       case (s, t) if t > 0 && counts.getOrElse(s, 0L) > 0 => counts(s).toDouble / t
@@ -169,9 +165,9 @@ object Sampling {
       case (s, t) if counts.getOrElse(s, 0L) > 0 =>
         s -> math.min(1.0, scale.min * t / counts(s).toDouble)
     }
-    val bucket = hashBucket(key, buckets)
+    val bucket = hashBucket(key, Buckets)
     val keep = fractions.foldLeft(lit(false)) { case (acc, (s, f)) =>
-      acc || (col(stratumCol) === s && bucket < math.floor(f * buckets).toLong)
+      acc || (col(stratumCol) === s && bucket < math.floor(f * Buckets).toLong)
     }
     df.filter(keep)
   }
@@ -187,10 +183,10 @@ object Sampling {
     * correctly rounded across engines and the normalizer sums floats in
     * engine order, so the oracle's shares could drift by ulps — at 6
     * decimals the drift vanishes while bucket thresholds (granularity
-    * 1/buckets) are unaffected.
+    * 1/1000) are unaffected.
     */
   def temperatureMix(df: DataFrame, stratumCol: String, key: Column,
-                     alpha: Double, buckets: Int = 1000): DataFrame = {
+                     alpha: Double): DataFrame = {
     require(alpha >= 0 && alpha <= 1)
     val counts = df.groupBy(col(stratumCol)).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toSeq.sortBy(_._1)
@@ -199,18 +195,17 @@ object Sampling {
     val targets = powed.map { case (s, p) =>
       s -> BigDecimal(p / z).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     }.toMap
-    rebalanceMixCounted(df, stratumCol, key, targets, counts.toMap, buckets)
+    rebalanceMixCounted(df, stratumCol, key, targets, counts.toMap)
   }
 
   /** Per-stratum sampling rates (e.g. downsample boilerplate classes,
     * keep all rare ones). Strata absent from `fractions` are dropped.
     */
   def stratifiedSample(df: DataFrame, key: Column, stratum: Column,
-                       fractions: Map[String, Double],
-                       buckets: Int = 1000): DataFrame = {
-    val bucket = hashBucket(key, buckets)
+                       fractions: Map[String, Double]): DataFrame = {
+    val bucket = hashBucket(key, Buckets)
     val keep = fractions.foldLeft(lit(false)) { case (acc, (s, f)) =>
-      acc || (stratum === s && bucket < math.round(f * buckets))
+      acc || (stratum === s && bucket < math.round(f * Buckets))
     }
     df.filter(keep)
   }
@@ -242,12 +237,11 @@ object Sampling {
     * the exact micro-nat sum divided by 1e6, unrounded (see the inline
     * note on why a presentation round would break cross-engine parity).
     */
-  def dsirLogWeights(docs: DataFrame, isTarget: Column, buckets: Int,
-                     text: Column = col("text")): DataFrame = {
+  def dsirLogWeights(docs: DataFrame, isTarget: Column, buckets: Int): DataFrame = {
     // tokenized exactly once per consumer chain; blocks freed by the
     // end-of-query drain (the tfIdfTopTerms materialization discipline)
     val feats = graft.Residue.pin(
-      dsirFeatureCounts(docs, buckets, text, Some(isTarget)))
+      dsirFeatureCounts(docs, buckets, Some(isTarget)))
     val model = dsirModelFromCounts(feats, buckets)
     feats.join(broadcast(model), "f")
       .groupBy(col("doc_id"), col("is_target"))
@@ -267,14 +261,14 @@ object Sampling {
   /** Per-document hashed-feature counts: (doc_id[, is_target], f, c) —
     * map-only off the codegen'd token kernels, counts combined map-side.
     */
-  private def dsirFeatureCounts(docs: DataFrame, buckets: Int, text: Column,
+  private def dsirFeatureCounts(docs: DataFrame, buckets: Int,
                                 isTarget: Option[Column]): DataFrame = {
     require(buckets >= 2)
     val tagged = isTarget.map(t => docs.withColumn("is_target",
       t.cast("boolean"))).getOrElse(docs)
     val keys = Seq(col("doc_id")) ++
       isTarget.map(_ => col("is_target")).toSeq
-    val base = tagged.select(keys :+ lower(text).as("_t"): _*)
+    val base = tagged.select(keys :+ lower(col("text")).as("_t"): _*)
     val uni = base.select(keys :+ explode(tokens(col("_t"))).as("term"): _*)
     val bi = base.select(keys :+ explode(tokenNgrams(col("_t"), 2)).as("term"): _*)
     uni.unionByName(bi)
@@ -315,10 +309,9 @@ object Sampling {
   }
 
   /** Fit a DSIR model on `docs` — the B-row (f, lrq) ratio table. */
-  def dsirModel(docs: DataFrame, isTarget: Column, buckets: Int,
-                text: Column = col("text")): DataFrame =
+  def dsirModel(docs: DataFrame, isTarget: Column, buckets: Int): DataFrame =
     dsirModelFromCounts(
-      dsirFeatureCounts(docs, buckets, text, Some(isTarget)), buckets)
+      dsirFeatureCounts(docs, buckets, Some(isTarget)), buckets)
 
   /** Score `docs` under an already-fitted model — the per-ingest path.
     * One map-only feature pass over the delta, one broadcast join against
@@ -330,9 +323,8 @@ object Sampling {
     * buckets carry the smoothed zero-count ratio, so the inner join
     * never drops a feature).
     */
-  def dsirApply(docs: DataFrame, model: DataFrame, buckets: Int,
-                text: Column = col("text")): DataFrame =
-    dsirFeatureCounts(docs, buckets, text, None)
+  def dsirApply(docs: DataFrame, model: DataFrame, buckets: Int): DataFrame =
+    dsirFeatureCounts(docs, buckets, None)
       .join(broadcast(model), "f")
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_feats"),
@@ -353,13 +345,12 @@ object Sampling {
     * Selection is orderBy+limit — TakeOrdered (per-partition top-k, then
     * a k-sized merge on the driver), never a global sort.
     */
-  def dsirSelect(docs: DataFrame, isTarget: Column, buckets: Int, k: Int,
-                 text: Column = col("text")): DataFrame = {
+  def dsirSelect(docs: DataFrame, isTarget: Column, buckets: Int, k: Int): DataFrame = {
     // gumbel keeps a round(., 6): it absorbs the engines' ln ULP
     // disagreement, and its values are NOT boundary-dense (see
     // dsirLogWeights). score is a raw sum of two bit-identical doubles —
     // any further rounding would reintroduce the dense-boundary class.
-    dsirLogWeights(docs, isTarget, buckets, text)
+    dsirLogWeights(docs, isTarget, buckets)
       .withColumn("gumbel", dsirGumbel)
       .withColumn("score", col("log_weight") + col("gumbel"))
       .orderBy(col("score").desc, col("doc_id")).limit(k)
@@ -387,9 +378,8 @@ object Sampling {
     * TakeOrdered (per-partition top-k, k-sized driver merge), never a
     * global sort.
     */
-  def dsirSelectApplied(docs: DataFrame, model: DataFrame, buckets: Int,
-                        k: Int, text: Column = col("text")): DataFrame =
-    dsirApply(docs, model, buckets, text)
+  def dsirSelectApplied(docs: DataFrame, model: DataFrame, buckets: Int, k: Int): DataFrame =
+    dsirApply(docs, model, buckets)
       .withColumn("gumbel", dsirGumbel)
       .withColumn("score", col("log_weight") + col("gumbel"))
       .orderBy(col("score").desc, col("doc_id")).limit(k)

@@ -18,26 +18,24 @@ import org.apache.spark.sql.functions._
   */
 object Sessionize {
 
-  /** Sessions per `userCol` over integer-second `tsSecCol`, events
-    * ordered (ts, id). Output: user, session_start, session_end,
+  /** Sessions per `user_id` over integer-second `tss`, events ordered
+    * (tss, event_id). Output: user_id, session_start, session_end,
     * n_events, first_event, last_event.
     */
-  def batch(events: DataFrame, gapSec: Long,
-            userCol: String = "user_id", tsSecCol: String = "tss",
-            idCol: String = "event_id"): DataFrame = {
-    val w = Window.partitionBy(userCol).orderBy(tsSecCol, idCol)
+  def batch(events: DataFrame, gapSec: Long): DataFrame = {
+    val w = Window.partitionBy("user_id").orderBy("tss", "event_id")
     events
-      .withColumn("_prev", lag(col(tsSecCol), 1).over(w))
+      .withColumn("_prev", lag(col("tss"), 1).over(w))
       .withColumn("_new",
-        when(col("_prev").isNull || col(tsSecCol) - col("_prev") > gapSec, 1)
+        when(col("_prev").isNull || col("tss") - col("_prev") > gapSec, 1)
           .otherwise(0))
       .withColumn("_sid", sum(col("_new"))
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col(userCol), col("_sid"))
-      .agg(min(col(tsSecCol)).as("session_start"),
-        (max(col(tsSecCol)) + gapSec).as("session_end"),
+      .groupBy(col("user_id"), col("_sid"))
+      .agg(min(col("tss")).as("session_start"),
+        (max(col("tss")) + gapSec).as("session_end"),
         count(lit(1)).as("n_events"),
-        min(col(idCol)).as("first_event"), max(col(idCol)).as("last_event"))
+        min(col("event_id")).as("first_event"), max(col("event_id")).as("last_event"))
       .drop("_sid")
   }
 }

@@ -57,16 +57,16 @@ object Similarity {
       * 16 keeps the hamming test meaningful on small corpora; cap 30
       * because PolyHash token hashes are 31-bit.
       */
-    def simhashBits(n: Long, maxHamming: Int = 2, perBucket: Int = 16): Int =
-      math.min(30, math.max(16, (maxHamming + 1) * lshBits(n, perBucket)))
+    def simhashBits(n: Long, maxHamming: Int = 2): Int =
+      math.min(30, math.max(16, (maxHamming + 1) * lshBits(n)))
 
     /** Table count that keeps the packed first-collision fingerprint in
-      * one 64-bit word: min(requested, 64/bits). Past that point recall
-      * is bought with multi-probe (query-side-only cost,
+      * one 64-bit word: min(8, 64/bits). Past that point recall is
+      * bought with multi-probe (query-side-only cost,
       * [[hyperplaneTopKMultiProbe]]) — never with more corpus state.
       */
-    def lshTables(bits: Int, requested: Int = 8): Int =
-      math.max(1, math.min(requested, 64 / bits))
+    def lshTables(bits: Int): Int =
+      math.max(1, math.min(8, 64 / bits))
 
     /** IVF cell count for an n-row corpus: nlist ≈ n/cellBudget keeps the
       * probed candidate set ~cellBudget·nprobe rows independent of corpus
@@ -243,9 +243,9 @@ object Similarity {
     * keeping candidate volume linear where a fixed family would go
     * quadratic past 2^bits rows.
     */
-  def hyperplaneCandidatesAuto(emb: DataFrame, requestedTables: Int = 8): DataFrame = {
+  def hyperplaneCandidatesAuto(emb: DataFrame): DataFrame = {
     val bits = Sizing.lshBits(emb.count())
-    hyperplaneCandidates(emb, Sizing.lshTables(bits, requestedTables), bits)
+    hyperplaneCandidates(emb, Sizing.lshTables(bits), bits)
   }
 
   /** IVF-style ANN top-k — the inverted-file complement to the LSH path.
@@ -380,8 +380,8 @@ object Similarity {
     * the dense-embedding paths, via a document-frequency-pruned inverted
     * index (the classic posting-list self-join, never a cross join).
     *
-    * Weights are tf·ln(N/df) quantized to integers (`scale` fixed-point
-    * steps), so every dot product and squared norm is exact 64-bit
+    * Weights are tf·ln(N/df) quantized to integers (steps of 1/1000),
+    * so every dot product and squared norm is exact 64-bit
     * integer arithmetic — order-independent under any shuffle, hence
     * bit-replayable in the SQL oracle; floats appear only in the final
     * sqrt/divide, which is a deterministic IEEE computation per pair.
@@ -399,7 +399,7 @@ object Similarity {
     * cosine.
     */
   def sparseTopK(docs: DataFrame, nDocs: Long, isQuery: Column, k: Int,
-                 maxDf: Long, scale: Int = 1000,
+                 maxDf: Long,
                  terms: Column = tokens(lower(col("text")))): DataFrame = {
     // tf feeds postings AND document frequency — the tracked pin tokenizes
     // once and is freed at the end-of-query drain
@@ -412,7 +412,7 @@ object Similarity {
     // aggregation as grouping keys — no separate norm table, no re-join
     val post = tf.join(broadcast(dfreq), "term")
       .withColumn("w",
-        round(col("tf") * log(lit(nDocs.toDouble) / col("df")) * scale).cast("long"))
+        round(col("tf") * log(lit(nDocs.toDouble) / col("df")) * 1000).cast("long"))
       .withColumn("nsq",
         sum(col("w") * col("w")).over(Window.partitionBy(col("doc_id"))))
     val qpost = post.where(isQuery)
@@ -499,14 +499,14 @@ object Similarity {
   }
 
   /** JL sign random projection: adds a `proj` column of `outDims` doubles
-    * (planes `first..first+outDims-1` of the shared ±1 family,
+    * (planes `0..outDims-1` of the shared ±1 family,
     * [[graft.functions.RandomProjection]]). Map-only and codegen'd; no
     * shuffle, no state. The unscaled sums preserve cosine ordering in
     * expectation (the 1/√outDims JL factor cancels in every ratio), and
     * every output double is exactly replayable by the oracle's left-fold.
     */
-  def randomProject(emb: DataFrame, outDims: Int, first: Int = 0): DataFrame =
-    emb.withColumn("proj", randomProjection(col("embedding"), outDims, first))
+  def randomProject(emb: DataFrame, outDims: Int): DataFrame =
+    emb.withColumn("proj", randomProjection(col("embedding"), outDims))
 
   /** Strict left-fold cosine over two small DOUBLE-array columns of known
     * length `dim` — the projected-space scoring kernel. Expanded to `dim`
@@ -694,15 +694,14 @@ object Similarity {
     * trained contribute 0 (they are never assigned either).
     */
   private[graft] def pqRnorm(books: Map[(Int, Int), Seq[Float]],
-                             m: Int, codes: Int,
-                             codesCol: Column = col("codes")): Column = {
+                             m: Int, codes: Int): Column = {
     val cnorm2 = (0 until m).map { s =>
       typedlit((0 until codes).map(c =>
         books.get((s, c))
           .map(w => w.map(x => x.toDouble * x.toDouble).sum).getOrElse(0.0)))
     }
     sqrt((0 until m).map(s =>
-      element_at(cnorm2(s), element_at(codesCol, s + 1) + 1)).reduce(_ + _))
+      element_at(cnorm2(s), element_at(col("codes"), s + 1) + 1)).reduce(_ + _))
   }
 
   /** The per-QUERY ADC lookup table: qtab[s·codes + c] = dot(q_subspace_s,

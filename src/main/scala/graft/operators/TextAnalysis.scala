@@ -88,13 +88,12 @@ object TextAnalysis {
     * `nDocs` is the corpus size, an O(1) driver scalar like the
     * bookmark max-key.
     */
-  def tfIdfTopTerms(docs: DataFrame, nDocs: Long, k: Int,
-                    text: Column = col("text")): DataFrame = {
+  def tfIdfTopTerms(docs: DataFrame, nDocs: Long, k: Int): DataFrame = {
     // tf feeds both the scored main side and dfreq — the tracked pin
     // tokenizes the corpus once instead of once per consumer, and unlike a
     // localCheckpoint its blocks are freed at the end-of-query drain
     val tf = Residue.pin(docs
-      .select(col("doc_id"), explode(tokens(lower(text))).as("term"))
+      .select(col("doc_id"), explode(tokens(lower(col("text")))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val scored = tf.join(broadcast(dfreq), "term")
@@ -113,11 +112,10 @@ object TextAnalysis {
     * output proportional to input. `chunk_hash` fingerprints the chunk
     * text so dedup/lineage can track chunks without carrying them.
     */
-  def chunks(docs: DataFrame, chunkSize: Int, stride: Int,
-             text: Column = col("text")): DataFrame = {
+  def chunks(docs: DataFrame, chunkSize: Int, stride: Int): DataFrame = {
     require(chunkSize >= 1 && stride >= 1)
     docs
-      .withColumn("_toks", tokens(text))
+      .withColumn("_toks", tokens(col("text")))
       .withColumn("n_tok", size(col("_toks")))
       .where(col("n_tok") > 0)
       .select(col("doc_id"), col("n_tok"), col("_toks"),
@@ -144,12 +142,12 @@ object TextAnalysis {
     * Counting runs on the same partially-scrubbed string the replacement
     * sees, so counts and redactions agree pattern-by-pattern.
     */
-  def piiScrub(docs: DataFrame, text: Column = col("text")): DataFrame = {
+  def piiScrub(docs: DataFrame): DataFrame = {
     // each stage lands in its own projected column so the (non-cheap)
     // replacement chain is evaluated once per pattern, not once per
     // downstream count (CollapseProject keeps them un-duplicated)
     val staged = piiPatterns.zipWithIndex.foldLeft(
-        docs.withColumn("_s0", text)) {
+        docs.withColumn("_s0", col("text"))) {
       case (df, ((name, re, repl), i)) =>
         df.withColumn(s"n_$name",
             size(regexp_extract_all(col(s"_s$i"), lit(re), lit(0))))
@@ -167,9 +165,8 @@ object TextAnalysis {
     * selected with orderBy+limit (TakeOrdered — per-partition top-k then
     * a k-sized merge, never a global sort) and joins back as a broadcast.
     */
-  def vocabOov(docs: DataFrame, vocabSize: Int,
-               text: Column = col("text")): DataFrame = {
-    val toks = docs.select(col("doc_id"), explode(tokens(lower(text))).as("term"))
+  def vocabOov(docs: DataFrame, vocabSize: Int): DataFrame = {
+    val toks = docs.select(col("doc_id"), explode(tokens(lower(col("text")))).as("term"))
     val vocab = toks.groupBy("term").agg(count(lit(1)).as("tf"))
       .orderBy(col("tf").desc, col("term")).limit(vocabSize)
       .select(col("term"), lit(1).as("in_vocab"))
@@ -188,8 +185,8 @@ object TextAnalysis {
     * gram count reuses the codegen'd shingle kernel — no explode, no
     * shuffle, output one row per input row.
     */
-  def repetition(docs: DataFrame, n: Int = 5,
-                 text: Column = col("text")): DataFrame = {
+  def repetition(docs: DataFrame, n: Int = 5): DataFrame = {
+    val text = col("text")
     // each measure lands in its own projected column so the shingle/token
     // kernels run once, not once per ratio referencing them
     val arr = docs
@@ -220,7 +217,8 @@ object TextAnalysis {
     * space. Same results bit-for-bit (spec-pinned vs the composed
     * formulation).
     */
-  def stats(docs: DataFrame, text: Column = col("text")): DataFrame = {
+  def stats(docs: DataFrame): DataFrame = {
+    val text = col("text")
     val arr = docs.withColumn("_st", textStats(text))
     val nTokens = col("_st.n_tokens")
     val nChars = length(text)
@@ -276,12 +274,11 @@ object TextAnalysis {
     * ([[graft.operators.Sampling]]), which changes nothing structurally
     * here.
     */
-  def bpeMergeRounds(docs: DataFrame, rounds: Int,
-                     text: Column = col("text")): DataFrame = {
+  def bpeMergeRounds(docs: DataFrame, rounds: Int): DataFrame = {
     val spark = docs.sparkSession
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val (learned, state) = bpeTrain(docs, rounds, text)
+    val (learned, state) = bpeTrain(docs, rounds)
     // the result is built from the driver-side merge table, so the last
     // tokenized generation is dead the moment the loop exits
     state.free()
@@ -307,11 +304,10 @@ object TextAnalysis {
     * ([[graft.Residue.cut]]): consume it, then `Residue.drain` frees the
     * blocks (lineage recomputes any later re-read).
     */
-  def bpeEncode(docs: DataFrame, rounds: Int,
-                text: Column = col("text")): DataFrame =
-    bpeTrain(docs, rounds, text)._2.df
+  def bpeEncode(docs: DataFrame, rounds: Int): DataFrame =
+    bpeTrain(docs, rounds)._2.df
 
-  private def bpeTrain(docs: DataFrame, rounds: Int, text: Column)
+  private def bpeTrain(docs: DataFrame, rounds: Int)
       : (Seq[(Int, String, String, Long, Long)], Residue.Cut) = {
     require(rounds >= 1)
     // Residue.cut: each round's rewrite would otherwise nest the previous
@@ -320,7 +316,7 @@ object TextAnalysis {
     // materialized its successor — peak state is two tokenized-corpus
     // generations, zero session residue.
     var state = Residue.cut(docs
-      .select(col("doc_id"), tokens(lower(text)).as("toks"))
+      .select(col("doc_id"), tokens(lower(col("text"))).as("toks"))
       .where(size(col("toks")) >= 2))
     val learned = Seq.newBuilder[(Int, String, String, Long, Long)]
     var exhausted = false
@@ -365,16 +361,15 @@ object TextAnalysis {
     * `minCount` output filter, so probabilities are true conditionals,
     * not renormalized survivors.
     */
-  def bigramLm(docs: DataFrame, minCount: Long,
-               text: Column = col("text")): DataFrame =
-    lmProbs(bigramPairs(docs, text)).where(col("n") >= minCount)
+  def bigramLm(docs: DataFrame, minCount: Long): DataFrame =
+    lmProbs(bigramPairs(docs)).where(col("n") >= minCount)
       .select(col("w1"), col("w2"), col("n"), col("prob"))
 
   /** (doc_id, w1, w2) bigram occurrences — map-only explode of the token
     * list zipped with its own tail.
     */
-  private def bigramPairs(docs: DataFrame, text: Column): DataFrame = {
-    val t = tokens(lower(text))
+  private def bigramPairs(docs: DataFrame): DataFrame = {
+    val t = tokens(lower(col("text")))
     docs.select(col("doc_id"), t.as("_t"))
       .where(size(col("_t")) >= 2)
       .select(col("doc_id"), explode(zip_with(
@@ -397,8 +392,8 @@ object TextAnalysis {
     * distributed table, which is why [[perplexityUnder]] joins it by
     * shuffle on (w1, w2) instead of collecting it.
     */
-  def lmTable(docs: DataFrame, text: Column = col("text")): DataFrame =
-    lmProbs(bigramPairs(docs, text))
+  def lmTable(docs: DataFrame): DataFrame =
+    lmProbs(bigramPairs(docs))
 
   /** Per-context bigram totals (w1, tot) — the smoothing denominators a
     * held-out scorer needs for bigrams the fitted corpus never saw.
@@ -425,13 +420,13 @@ object TextAnalysis {
     * n_bigrams for genuinely novel ingests).
     */
   def perplexityUnder(delta: DataFrame, lm: DataFrame, ctxTot: DataFrame,
-                      vocab: Long, text: Column = col("text")): DataFrame = {
+                      vocab: Long): DataFrame = {
     require(vocab > 0, "a fitted LM has a non-empty vocabulary")
     val pUsed = coalesce(col("prob"),
       when(col("tot").isNotNull,
         round(lit(0.5) / (col("tot") + lit(0.5) * vocab), 6))
         .otherwise(round(lit(1.0) / vocab, 6)))
-    bigramPairs(delta, text)
+    bigramPairs(delta)
       .join(lm.select(col("w1"), col("w2"), col("prob")), Seq("w1", "w2"), "left")
       .join(ctxTot, Seq("w1"), "left")
       .withColumn("p_used", pUsed)
@@ -495,11 +490,11 @@ object TextAnalysis {
           (col("c_a") * col("c_b"))), 4).as("pmi"))
   }
 
-  def perplexity(docs: DataFrame, text: Column = col("text")): DataFrame = {
+  def perplexity(docs: DataFrame): DataFrame = {
     // pin, not cut: A/B-measured 1.06 s vs 1.36 s warm at sf0.1 — columnar
     // InMemoryRelation encodes the string-heavy bigram stream cheaper than
     // the Row-serialized RDD path, and nothing here iterates
-    val pairs = Residue.pin(bigramPairs(docs, text))
+    val pairs = Residue.pin(bigramPairs(docs))
     pairs.join(lmProbs(pairs), Seq("w1", "w2"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),

@@ -77,21 +77,13 @@ object IvfQueries {
     // index's: assignment and codes are pure functions of the vector
     // against frozen state, so batch boundaries cannot change a row.
     QueryDef("stream_ivfpq_ingest", (s, dir) => {
-      import org.apache.spark.sql.{Dataset, Row}
       val emb = Tables.embeddings(s, dir)
       val idx = new graft.sources.IvfPqIndex(
         s, TempDirs.create(s, "graft-ivfpq-stream"), nlist = 16, m = 8, codes = 256)
       idx.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-      val q = graft.streaming.Streaming.embeddings(s, dir)
-        .filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id"), col("embedding"))
-        .writeStream
-        .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-          idx.appendBatch(batch.toDF(), batchId))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", graft.TempDirs.create("graft-ivfpq-ingest-ckpt"))
-        .start()
-      q.awaitTermination()
+      graft.streaming.Streaming.drainBatches(graft.streaming.Streaming.embeddings(s, dir)
+          .filter(col("vec_id") % 50 === 0).select(col("vec_id"), col("embedding")),
+        graft.TempDirs.create("graft-ivfpq-ingest-ckpt"))(idx.appendBatch)
       idx.topK(emb, emb.filter(col("vec_id") < 8),
           k = 5, shortlist = 200, nprobe = 8)
         .orderBy(col("query_id"), col("rank"))
@@ -547,21 +539,13 @@ object IvfQueries {
     // sim_ivf_indexed oracle: streaming and batch ingest are
     // indistinguishable to a reader.
     QueryDef("stream_ivf_ingest", (s, dir) => {
-      import org.apache.spark.sql.{Dataset, Row}
       val emb = Tables.embeddings(s, dir)
       val idx = new graft.sources.IvfIndex(
         s, TempDirs.create(s, "graft-ivf-stream"), nlist = 16)
       idx.bootstrap(emb.filter(col("vec_id") % 50 =!= 0))
-      val q = graft.streaming.Streaming.embeddings(s, dir)
-        .filter(col("vec_id") % 50 === 0)
-        .select(col("vec_id"), col("embedding"))
-        .writeStream
-        .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-          idx.appendBatch(batch.toDF(), batchId))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", graft.TempDirs.create("graft-ivf-ingest-ckpt"))
-        .start()
-      q.awaitTermination()
+      graft.streaming.Streaming.drainBatches(graft.streaming.Streaming.embeddings(s, dir)
+          .filter(col("vec_id") % 50 === 0).select(col("vec_id"), col("embedding")),
+        graft.TempDirs.create("graft-ivf-ingest-ckpt"))(idx.appendBatch)
       idx.topK(emb, emb.filter(col("vec_id") < 8), 5, nprobe = 4)
         .orderBy(col("query_id"), col("rank"))
     },

@@ -127,21 +127,14 @@ object SearchQueries {
     // batch-built full-corpus text_search oracle: streaming ingest and
     // batch ingest are indistinguishable to a reader.
     QueryDef("stream_index_ingest", (s, dir) => {
-      import org.apache.spark.sql.{Dataset, Row}
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       val mid = docs.agg(max(col("doc_id"))).head().getLong(0) / 2
       val idx = new graft.sources.InvertedIndex(s, TempDirs.create(s, "graft-inv-stream"))
       idx.bootstrap(docs.filter(col("doc_id") <= mid))
       idx.compact(buckets = 8)
-      val q = graft.streaming.Streaming.documents(s, dir)
-        .filter(col("doc_id") > mid).select(col("doc_id"), col("text"))
-        .writeStream
-        .foreachBatch((batch: Dataset[Row], batchId: Long) =>
-          idx.appendBatch(batch.toDF(), batchId))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", graft.TempDirs.create("graft-inv-ingest-ckpt"))
-        .start()
-      q.awaitTermination()
+      graft.streaming.Streaming.drainBatches(graft.streaming.Streaming.documents(s, dir)
+          .filter(col("doc_id") > mid).select(col("doc_id"), col("text")),
+        graft.TempDirs.create("graft-inv-ingest-ckpt"))(idx.appendBatch)
       idx.conjunctive(Seq("dup", "vector")).orderBy(col("doc_id"))
     },
       // streaming ingest must be indistinguishable from the batch build

@@ -235,21 +235,15 @@ object StarQueries {
           ps.setString(1, r.getString(0)); ps.setLong(2, r.getLong(1))
           ps.setDouble(3, r.getDouble(2))
       }
-      val q = Streaming.events(s, dir)
-        .select(col("event_type"), col("value"))
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          // bounded per-batch partial aggregate (unrounded: the consumer
-          // re-aggregates, rounding once at the end)
-          val partial = batch.groupBy(col("event_type"))
-            .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-          sink(partial, id)
-          sink(partial, id) // forced duplicate delivery of every batch
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", s"$tmp/ckpt")
-        .start()
-      q.awaitTermination()
+      Streaming.drainBatches(Streaming.events(s, dir).select(col("event_type"), col("value")),
+          s"$tmp/ckpt") { (batch, id) =>
+        // bounded per-batch partial aggregate (unrounded: the consumer
+        // re-aggregates, rounding once at the end)
+        val partial = batch.groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
+        sink(partial, id)
+        sink(partial, id) // forced duplicate delivery of every batch
+      }
       s.read.format("jdbc").option("url", url).option("dbtable", "stream_rpt").load()
         .groupBy(col("event_type").as("event_type"))
         .agg(sum(col("n")).cast("long").as("n"),

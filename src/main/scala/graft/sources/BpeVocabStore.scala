@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
@@ -45,10 +45,10 @@ final class BpeVocabStore(spark: SparkSession, dir: String,
     * ([[graft.operators.Sampling]] — the BPE bound-the-corpus rule);
     * nothing here depends on the trainer seeing every document.
     */
-  def fit(docs: DataFrame, text: Column = col("text")): Unit =
+  def fit(docs: DataFrame): Unit =
     if (!committed)
       ledger.advance(None, _ => StoreParams.stamp(Map("rounds" -> rounds))) { _ =>
-        TextAnalysis.bpeMergeRounds(docs, rounds, text)
+        TextAnalysis.bpeMergeRounds(docs, rounds)
           .coalesce(1).write.mode("overwrite").parquet(mergesDir)
       }
 
@@ -79,9 +79,9 @@ final class BpeVocabStore(spark: SparkSession, dir: String,
     * [[TextAnalysis.bpeEncode]] contract). One map-only pass per merge
     * rule; no shuffle anywhere.
     */
-  def encode(delta: DataFrame, text: Column = col("text")): DataFrame = {
+  def encode(delta: DataFrame): DataFrame = {
     val base = delta
-      .select(col("doc_id"), GraftFunctions.tokens(lower(text)).as("toks"))
+      .select(col("doc_id"), GraftFunctions.tokens(lower(col("text"))).as("toks"))
       .where(size(col("toks")) >= 2)
     mergeRules.foldLeft(base) { case (df, (a, b)) =>
       df.select(col("doc_id"),

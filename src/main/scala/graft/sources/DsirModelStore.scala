@@ -36,10 +36,9 @@ final class DsirModelStore(spark: SparkSession, dir: String,
   def committed: Boolean = ledger.committedGen >= 0
 
   /** Fit on the reference corpus and freeze — idempotent. */
-  def fit(docs: DataFrame, isTarget: Column,
-          text: Column = col("text")): Unit = if (!committed) {
+  def fit(docs: DataFrame, isTarget: Column): Unit = if (!committed) {
     ledger.advance(None, _ => StoreParams.stamp(Map("buckets" -> buckets))) { _ =>
-      Sampling.dsirModel(docs, isTarget, buckets, text)
+      Sampling.dsirModel(docs, isTarget, buckets)
         .coalesce(1).write.mode("overwrite").parquet(modelDir)
     }
   }
@@ -51,14 +50,13 @@ final class DsirModelStore(spark: SparkSession, dir: String,
   }
 
   /** Score a delta against the frozen model — delta-sized cost. */
-  def applyTo(delta: DataFrame, text: Column = col("text")): DataFrame =
-    Sampling.dsirApply(delta, modelDf, buckets, text)
+  def applyTo(delta: DataFrame): DataFrame =
+    Sampling.dsirApply(delta, modelDf, buckets)
 
   /** Gumbel-top-k selection over a delta against the frozen model —
     * identical sample to fit-then-select on the same delta
     * ([[Sampling.dsirSelectApplied]]).
     */
-  def selectFrom(delta: DataFrame, k: Int,
-                 text: Column = col("text")): DataFrame =
-    Sampling.dsirSelectApplied(delta, modelDf, buckets, k, text)
+  def selectFrom(delta: DataFrame, k: Int): DataFrame =
+    Sampling.dsirSelectApplied(delta, modelDf, buckets, k)
 }

@@ -211,9 +211,9 @@ final class InvertedIndex(spark: SparkSession, dir: String)
     * pruned-scan + single-aggregation shape as [[conjunctive]] — the OR
     * is just the filter dropped.
     */
-  def disjunctive(terms: Seq[String], asOf: Option[Long] = None): DataFrame = {
+  def disjunctive(terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "disjunctive query needs at least one term")
-    asOf.map(postingsAsOf).getOrElse(postingsDf)
+    postingsDf
       .filter(col("term").isin(terms: _*))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("term")).cast("int").as("n_matched"),
@@ -364,7 +364,7 @@ final class InvertedIndex(spark: SparkSession, dir: String)
     * partitions — measured: a 42k-query two-term batch put ~168M scored
     * pairs through TWO tasks, 223 s and 1.9 GB page allocations. The
     * query side salts on hash(query_id) and the posting side replicates
-    * each (term, doc) contribution across the `saltBuckets` via
+    * each (term, doc) contribution across 32 salt buckets via
     * explode — posting replication is corpus-term-sized (cheap), join
     * output is unchanged, and the work spreads across terms×buckets
     * partitions. After the join ONE exchange on query_id serves both
@@ -373,9 +373,9 @@ final class InvertedIndex(spark: SparkSession, dir: String)
     */
   def bm25Batch(queryTerms: DataFrame, k: Int,
                 broadcastLimit: Int = 4096,
-                termPushdownLimit: Int = 1024,
-                saltBuckets: Int = 32): DataFrame = {
-    require(k >= 1 && saltBuckets >= 1)
+                termPushdownLimit: Int = 1024): DataFrame = {
+    require(k >= 1)
+    val saltBuckets = 32
     val (nDocs, totalLen) = corpusStats
     val avgdl = totalLen.toDouble / nDocs.toDouble
     // one evaluation, two consumers (the term IN-list and the join) —
@@ -490,13 +490,12 @@ final class InvertedIndex(spark: SparkSession, dir: String)
     * once ingested — so scoring before the append degrades gracefully to
     * self-counting df instead of quietly dropping the term.
     */
-  def tfIdfTopTermsDelta(delta: DataFrame, k: Int,
-                         text: org.apache.spark.sql.Column = col("text")): DataFrame = {
+  def tfIdfTopTermsDelta(delta: DataFrame, k: Int): DataFrame = {
     val (nDocs, _) = corpusStats
     require(nDocs > 0, "the index is empty")
     val tf = graft.Residue.pin(delta
       .select(col("doc_id"),
-        explode(graft.functions.GraftFunctions.tokens(lower(text))).as("term"))
+        explode(graft.functions.GraftFunctions.tokens(lower(col("text")))).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
     val terms = tf.select(col("term")).distinct()
     val dfreq = postingsDf.select(col("term"))

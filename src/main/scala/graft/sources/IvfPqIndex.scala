@@ -64,15 +64,12 @@ final class IvfPqIndex(spark: SparkSession, dir: String,
 
   /** First ingest: freeze the coarse seeds and train+freeze the PQ
     * codebooks (both on the bootstrap corpus), then assign+encode every
-    * bootstrap vector as generation 0. Idempotent. `trainOn` optionally
-    * bounds the codebook TRAINING corpus (sample-bounded Lloyd, the
-    * [[PqIndex.bootstrap]] rule).
+    * bootstrap vector as generation 0. Idempotent.
     */
-  def bootstrap(corpus: DataFrame, iters: Int = 2,
-                trainOn: Option[DataFrame] = None): Unit =
+  def bootstrap(corpus: DataFrame, iters: Int = 2): Unit =
     if (committedGen < 0) {
       freezeSeeds(corpus)
-      val trained = pq.train(trainOn.getOrElse(corpus), iters)
+      val trained = pq.train(corpus, iters)
       ledger.advance(None, _ => pq.stamp)(encodeGen(_, corpus, trained))
     }
 
@@ -88,13 +85,12 @@ final class IvfPqIndex(spark: SparkSession, dir: String,
     * shifted mass as badly as the old seeds assign it. The fresh root
     * commits atomically through its own bootstrap; the OLD root is never
     * touched and stays readable until the caller cuts over and retires
-    * it. `trainOn` bounds the codebook training corpus.
+    * it.
     */
-  def reseedInto(newDir: String, corpus: DataFrame, iters: Int = 2,
-                 trainOn: Option[DataFrame] = None,
+  def reseedInto(newDir: String, corpus: DataFrame,
                  nlist: Int = this.nlist): IvfPqIndex = {
     val fresh = new IvfPqIndex(spark, newDir, nlist, m, codes)
-    fresh.bootstrap(corpus, iters, trainOn)
+    fresh.bootstrap(corpus)
     fresh
   }
 
@@ -122,20 +118,18 @@ final class IvfPqIndex(spark: SparkSession, dir: String,
     point.map(p => (p.nprobe, p.shortlist.get))
 
   /** The era-boundary lifecycle ([[FrozenCellIndex.maintainLoop]]) with
-    * the two-phase sweep; reseeds retrain seeds AND codebooks, on
-    * `trainOn` when given.
+    * the two-phase sweep; reseeds retrain seeds AND codebooks on `corpus`.
     */
   def maintain(corpus: DataFrame, delta: DataFrame, queries: DataFrame,
                k: Int, recallFloor: Double,
                cosineFloor: Double, maxFracBelow: Double,
                nprobes: Seq[Int], shortlists: Seq[Int],
                reseedDir: Option[String] = None,
-               trainOn: Option[DataFrame] = None,
                cellBudget: Int = 0,
                compactAbove: Int = 0): IvfPqIndex.Maintenance = {
     val (serving, report) = maintainLoop(corpus, delta, queries, k, recallFloor,
       cosineFloor, maxFracBelow, nprobes, shortlists, reseedDir, cellBudget, compactAbove)(
-      (d, n) => reseedInto(d, corpus, trainOn = trainOn, nlist = n))
+      (d, n) => reseedInto(d, corpus, n))
     IvfPqIndex.Maintenance(serving, report)
   }
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
@@ -45,13 +45,13 @@ final class LmStore(spark: SparkSession, dir: String) {
     * idempotent. The vocabulary size (distinct lowercased tokens) is one
     * extra map-side-combined aggregation, paid once at fit time.
     */
-  def fit(docs: DataFrame, text: Column = col("text")): Unit =
+  def fit(docs: DataFrame): Unit =
     if (!committed) {
       val vocab = (_: Long) => Map("vocab" ->
-        docs.select(explode(GraftFunctions.tokens(lower(text))).as("t"))
+        docs.select(explode(GraftFunctions.tokens(lower(col("text")))).as("t"))
           .agg(count_distinct(col("t"))).head().getLong(0))
       ledger.advance(None, vocab) { _ =>
-        TextAnalysis.lmTable(docs, text).write.mode("overwrite").parquet(lmDir)
+        TextAnalysis.lmTable(docs).write.mode("overwrite").parquet(lmDir)
         TextAnalysis.lmContextTotals(spark.read.parquet(lmDir))
           .write.mode("overwrite").parquet(ctxDir)
       }
@@ -72,6 +72,6 @@ final class LmStore(spark: SparkSession, dir: String) {
   /** Score a delta's pseudo-perplexity under the frozen LM —
     * delta-sized cost, complete over unseen bigrams.
     */
-  def scoreDelta(delta: DataFrame, text: Column = col("text")): DataFrame =
-    TextAnalysis.perplexityUnder(delta, lmDf, ctxDf, vocabSize, text)
+  def scoreDelta(delta: DataFrame): DataFrame =
+    TextAnalysis.perplexityUnder(delta, lmDf, ctxDf, vocabSize)
 }

@@ -207,20 +207,8 @@ final class LshBandIndex(spark: SparkSession, dir: String,
     // caller's end-of-query drain
     val cand = Residue.pin(
       probe(bandsDf).unionByName(probe(dBands)).distinct())
-    val involved = cand.select(col("id_a").as("doc_id"))
-      .union(cand.select(col("id_b").as("doc_id"))).distinct()
-    val grams = Residue.pin(corpusText
-      .join(involved, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        graft.functions.GraftFunctions.shingleHashes(col("text"), n).as("gs")))
-    val pairs = cand
-      .join(grams.as("ga"), col("id_a") === col("ga.doc_id"))
-      .join(grams.as("gb"), col("id_b") === col("gb.doc_id"))
-      .select(col("id_a"), col("id_b"),
-        round(size(array_intersect(col("ga.gs"), col("gb.gs"))).cast("double") /
-          size(array_union(col("ga.gs"), col("gb.gs"))), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-    sink(pairs)
+    val grams = Residue.pin(Dedup.involvedSets(cand, corpusText, n))
+    sink(Dedup.jaccardVerify(cand, grams, threshold))
     // sink succeeded -> append the delta's bands and advance the watermark
     // (a no-op for an already-applied batch id)
     ledger.advance(batchId)(writeGen(_, dBandsAll))

@@ -1,10 +1,10 @@
 package graft.streaming
 
 import java.util.UUID
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 
 /** Structured Streaming over the `events` table.
   *
@@ -21,31 +21,27 @@ import org.apache.spark.sql.types._
   * 100 TB stream accumulates unbounded session/window state). All
   * timestamps are second-truncated (`unix_timestamp`, floor semantics)
   * so results replay exactly in the DuckDB oracle — the raw column is
-  * parquet TIMESTAMP(MICROS) without timezone, declared TIMESTAMP_NTZ
-  * here to match what the batch reader infers from the footer (the
-  * session timezone is pinned UTC, see GraftSession, so epoch math
-  * agrees with DuckDB's epoch()).
+  * parquet TIMESTAMP(MICROS) without timezone, read as TIMESTAMP_NTZ
+  * through the same catalog schema the batch reader uses (the session
+  * timezone is pinned UTC, see GraftSession, so epoch math agrees with
+  * DuckDB's epoch()).
   */
 object Streaming {
 
-  val eventsSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampNTZType), // micros-precision wall clock (UTC)
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  /** Event stream with an `event_ts` second-truncated event-time column.
-    * File-source stream over the parquet table (schema must be declared —
-    * streaming sources don't infer).
+  /** File-source stream over the parquet table `name` with the catalog's
+    * footer schema ([[graft.Tables.schema]]; streaming sources don't
+    * infer one).
     */
-  def events(spark: SparkSession, sfDir: String): DataFrame =
-    spark.readStream.schema(eventsSchema)
+  private def fileStream(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    spark.readStream.schema(graft.Tables.schema(spark, sfDir, name))
       // the table is a single parquet FILE: a non-glob path makes
       // FileStreamSource force basePath to the file itself, which the file
       // index rejects — a glob keeps basePath at the parent directory
-      .parquet(s"$sfDir/events.parque*")
+      .parquet(s"$sfDir/$name.parque*")
+
+  /** Event stream with an `event_ts` second-truncated event-time column. */
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    fileStream(spark, sfDir, "events")
       // second-truncate through the same floor the batch side and the
       // oracle use (graft.Tables.eventSeconds); the result is an instant
       // (TimestampType), which the watermark/window operators expect
@@ -59,22 +55,21 @@ object Streaming {
     * holds every window's state proportionally longer for zero semantic
     * gain — the same sizing rule as [[clickToPurchase]].
     */
-  def dailyTypeCounts(stream: DataFrame,
-                      disorder: String = "30 minutes"): DataFrame = stream
-    .withWatermark("event_ts", disorder)
+  def dailyTypeCounts(stream: DataFrame): DataFrame = stream
+    .withWatermark("event_ts", "30 minutes")
     .groupBy(window(col("event_ts"), "1 day").as("w"), col("event_type"))
     .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("total_value"))
     .select(unix_timestamp(col("w.start")).as("day_start"),
       col("event_type"), col("n_events"), col("total_value"))
 
-  /** Per-user session windows with a 30-minute inactivity gap: built-in
-    * session_window event-time aggregation (integer aggregates only, so the
-    * result is order-insensitive and exactly oracle-replayable).
+  /** Per-user session windows with a 30-minute inactivity gap and a
+    * 30-minute watermark: built-in session_window event-time aggregation
+    * (integer aggregates only, so the result is order-insensitive and
+    * exactly oracle-replayable).
     */
-  def userSessions(stream: DataFrame, gap: String = "30 minutes",
-                   disorder: String = "30 minutes"): DataFrame = stream
-    .withWatermark("event_ts", disorder)
-    .groupBy(session_window(col("event_ts"), gap).as("s"), col("user_id"))
+  def userSessions(stream: DataFrame): DataFrame = stream
+    .withWatermark("event_ts", "30 minutes")
+    .groupBy(session_window(col("event_ts"), "30 minutes").as("s"), col("user_id"))
     .agg(count(lit(1)).as("n_events"),
       min(col("event_id")).as("first_event"), max(col("event_id")).as("last_event"))
     .select(col("user_id"),
@@ -82,27 +77,13 @@ object Streaming {
       unix_timestamp(col("s.end")).as("session_end"),
       col("n_events"), col("first_event"), col("last_event"))
 
-  val documentsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
   /** Document stream — the delta side of a streaming ingest pipeline. */
   def documents(spark: SparkSession, sfDir: String): DataFrame =
-    spark.readStream.schema(documentsSchema)
-      .parquet(s"$sfDir/documents.parque*")
-
-  val embeddingsSchema: StructType = StructType(Seq(
-    StructField("vec_id", LongType),
-    StructField("embedding", ArrayType(FloatType)),
-    StructField("label", IntegerType)))
+    fileStream(spark, sfDir, "documents")
 
   /** Embedding stream — the delta side of a streaming vector-index ingest. */
   def embeddings(spark: SparkSession, sfDir: String): DataFrame =
-    spark.readStream.schema(embeddingsSchema)
-      .parquet(s"$sfDir/embeddings.parque*")
+    fileStream(spark, sfDir, "embeddings")
 
   /** Streaming incremental dedup against a STORED fingerprint store —
     * [[graft.operators.Dedup.incrementalExact]] as a continuous pipeline:
@@ -135,9 +116,8 @@ object Streaming {
     * event exactly once — the streaming fix for the reference's
     * duplicate-reload failure mode (medium/..._messed.jpeg).
     */
-  def dedupEvents(stream: DataFrame,
-                  disorder: String = "30 minutes"): DataFrame = stream
-    .withWatermark("event_ts", disorder)
+  def dedupEvents(stream: DataFrame): DataFrame = stream
+    .withWatermark("event_ts", "30 minutes")
     .dropDuplicates("event_id")
     .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
 
@@ -162,9 +142,8 @@ object Streaming {
     * regardless of stream volume, where a window+rank formulation would
     * have to buffer every event of the day.
     */
-  def dailyTopK(stream: DataFrame, k: Int,
-                disorder: String = "30 minutes"): DataFrame = stream
-    .withWatermark("event_ts", disorder)
+  def dailyTopK(stream: DataFrame, k: Int): DataFrame = stream
+    .withWatermark("event_ts", "30 minutes")
     .groupBy(window(col("event_ts"), "1 day").as("w"))
     .agg(graft.functions.GraftFunctions.top_k(col("event_id"), col("value"), k).as("topk"))
     .select(unix_timestamp(col("w.start")).as("day_start"), posexplode(col("topk")))
@@ -184,9 +163,28 @@ object Streaming {
     */
   @volatile var lastStateRows: Option[(Long, Long, Long)] = None
 
+  /** Start `writer` with `Trigger.AvailableNow`, checkpointed at
+    * `checkpoint`, and wait for it: AvailableNow processes all available
+    * input in (possibly many) micro-batches, then stops.
+    */
+  private def drain(writer: DataStreamWriter[Row], checkpoint: String): StreamingQuery = {
+    val q = writer.trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint)
+      .start()
+    q.awaitTermination()
+    q
+  }
+
+  /** Drain a bounded stream into `sink`, called once per micro-batch with
+    * the batch and its id; returns when the input is exhausted. The
+    * stream's progress lives in `checkpoint`, so a restarted drain
+    * resumes where the last one committed.
+    */
+  def drainBatches(df: DataFrame, checkpoint: String)(sink: (DataFrame, Long) => Unit): Unit =
+    drain(df.writeStream.foreachBatch(sink), checkpoint)
+
   /** Run a (bounded) streaming frame to completion through a memory sink
-    * and return the materialized result. AvailableNow processes all
-    * available input in (possibly many) micro-batches, then stops.
+    * and return the materialized result ([[drain]]).
     */
   def runToCompletion(df: DataFrame, mode: OutputMode,
                       statePartitions: Option[Int] = None): DataFrame = {
@@ -203,14 +201,8 @@ object Streaming {
     val prev = spark.conf.get(key)
     statePartitions.foreach(n => spark.conf.set(key, n.toString))
     try {
-      val q = df.writeStream
-        .format("memory").queryName(name)
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation",
-          graft.TempDirs.create("graft-ckpt"))
-        .start()
-      q.awaitTermination()
+      val q = drain(df.writeStream.format("memory").queryName(name).outputMode(mode),
+        graft.TempDirs.create("graft-ckpt"))
       lastStateRows = q.recentProgress.reverseIterator
         .find(_.stateOperators.nonEmpty)
         .map(p => (p.stateOperators.map(_.numRowsTotal).sum,
@@ -348,13 +340,12 @@ object Streaming {
     * sorted per key before folding so results don't depend on shuffle
     * order; open sessions ride in GroupState between batches and close via
     * event-time timeout at `gapSec` past the last event once the watermark
-    * passes it.
+    * (30 minutes behind the latest event time) passes it.
     */
-  def sessionize(events: Dataset[Event], gapSec: Long,
-                 disorder: String = "30 minutes"): Dataset[Session] = {
+  def sessionize(events: Dataset[Event], gapSec: Long): Dataset[Session] = {
     import events.sparkSession.implicits._
     events
-      .withWatermark("event_ts", disorder)
+      .withWatermark("event_ts", "30 minutes")
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, Session](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {

@@ -14,15 +14,20 @@ class SchemaContractSpec extends SparkSuite {
   test("events.ts is TIMESTAMP_NTZ (micros wall-clock) in the real testdata") {
     val dt = Tables.events(spark, sf).schema("ts").dataType
     assert(dt == TimestampNTZType,
-      s"events.ts is $dt — update Tables.eventSeconds/eventMicros and " +
-        "Streaming.eventsSchema to the new encoding")
+      s"events.ts is $dt — update Tables.eventSeconds/eventMicros to the new encoding")
   }
 
-  test("streaming read schema matches the batch-inferred events schema") {
-    val batch = Tables.events(spark, sf).schema
-    assert(graft.streaming.Streaming.eventsSchema == batch,
-      s"Streaming.eventsSchema drifted from the parquet footer: " +
-        s"stream=${graft.streaming.Streaming.eventsSchema} batch=$batch")
+  test("streaming read schemas match the batch-inferred events, documents and embeddings schemas") {
+    import graft.streaming.Streaming
+    Seq(
+      "events" -> Streaming.events(spark, sf).drop("event_ts"),
+      "documents" -> Streaming.documents(spark, sf),
+      "embeddings" -> Streaming.embeddings(spark, sf)
+    ).foreach { case (t, stream) =>
+      val batch = spark.read.parquet(s"$sf/$t.parquet").schema
+      assert(stream.schema == batch,
+        s"the $t stream schema drifted from the parquet footer: stream=${stream.schema} batch=$batch")
+    }
   }
 
   test("eventSeconds floors to DuckDB epoch() semantics on the real data") {

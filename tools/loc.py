@@ -24,64 +24,77 @@ DEFAULT_TREES = ["src/main/scala", "src/test/scala"]
 _CHAR_LIT = re.compile(r"'(?:\\u[0-9a-fA-F]{4}|\\.|[^\\'\n])'")
 
 
-def code_lines(text):
-    """Number of lines of `text` holding Scala code outside comments."""
-    counted = set()
-    line = 0
+def mask(text):
+    """`text` with each comment character blanked to a space and each
+    non-space character of a string or character literal replaced by `_`.
+    Newlines, quote marks and the code inside `${...}` splices stay, so
+    the result has the same lines and columns and only code punctuation."""
+    out = list(text)
     # stack of open contexts: "block" (comment, nests), (quote,
     # interpolated) (string), "splice" (code inside ${...}, tracking
     # its own braces)
     stack = []
     braces = []
+
+    def blank(a, b, fill):
+        for j in range(a, min(b, n)):
+            if out[j] != "\n" and (fill == " " or not out[j].isspace()):
+                out[j] = fill
+
     i, n = 0, len(text)
     while i < n:
         c = text[i]
         top = stack[-1] if stack else None
         if c == "\n":
-            line += 1
             i += 1
             continue
         if top == "block":
             if text.startswith("*/", i):
                 stack.pop()
+                blank(i, i + 2, " ")
                 i += 2
             elif text.startswith("/*", i):
                 stack.append("block")
+                blank(i, i + 2, " ")
                 i += 2
             else:
+                blank(i, i + 1, " ")
                 i += 1
             continue
         if isinstance(top, tuple):
             quote, interpolated = top
-            if not c.isspace():
-                counted.add(line)
             if quote == '"' and c == "\\":
+                blank(i, i + 2, "_")
                 i += 2
             elif text.startswith(quote, i) and not (quote == '"""' and text.startswith('""""', i)):
                 stack.pop()
                 i += len(quote)
             elif interpolated and text.startswith("$$", i):
+                blank(i, i + 2, "_")
                 i += 2
             elif interpolated and text.startswith("${", i):
                 stack.append("splice")
                 braces.append(0)
                 i += 2
             else:
+                blank(i, i + 1, "_")
                 i += 1
             continue
         # code (top level or inside a splice)
         if text.startswith("//", i):
-            while i < n and text[i] != "\n":
-                i += 1
+            j = text.find("\n", i)
+            j = n if j < 0 else j
+            blank(i, j, " ")
+            i = j
             continue
         if text.startswith("/*", i):
             stack.append("block")
+            blank(i, i + 2, " ")
             i += 2
             continue
         if c.isspace():
             i += 1
             continue
-        counted.add(line)
         if c == '"':
             quote = '"""' if text.startswith('"""', i) else '"'
             interpolated = i > 0 and (text[i - 1].isalnum() or text[i - 1] == "_")
@@ -89,7 +102,11 @@ def code_lines(text):
             i += len(quote)
         elif c == "'":
             m = _CHAR_LIT.match(text, i)
-            i = m.end() if m else i + 1
+            if m:
+                blank(i + 1, m.end() - 1, "_")
+                i = m.end()
+            else:
+                i += 1
         elif top == "splice" and c == "{":
             braces[-1] += 1
             i += 1
@@ -102,7 +119,12 @@ def code_lines(text):
             i += 1
         else:
             i += 1
-    return len(counted)
+    return "".join(out)
+
+
+def code_lines(text):
+    """Number of lines of `text` holding Scala code outside comments."""
+    return sum(1 for line in mask(text).split("\n") if line.strip())
 
 
 def _git(args):
