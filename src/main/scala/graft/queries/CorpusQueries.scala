@@ -20,40 +20,16 @@ object CorpusQueries {
     QueryDef("text_stats", (s, dir) =>
       TextAnalysis.stats(Tables.documents(s, dir).select(col("doc_id"), col("text")))
         .drop("text")
-        .orderBy(col("doc_id")), {
-      val markers = graft.operators.TextAnalysis.langMarkers
-      def inList(words: Seq[String]) = words.map(w => s"'$w'").mkString("[", ", ", "]")
-      val counts = markers.map { case (lang, ms) =>
-        s"len(list_filter(ltoks, x -> list_contains(${inList(ms)}, x))) AS c_$lang"
-      }.mkString(",\n    ")
-      val best = s"greatest(${markers.map("c_" + _._1).mkString(", ")})"
-      val langCase = markers.map { case (lang, _) =>
-        s"WHEN c_$lang = $best THEN '$lang'"
-      }.mkString(" ")
-      s"""WITH t AS (
-         |  SELECT doc_id, text,
-         |    ${Oracles.tokens("text")} AS toks,
-         |    ${Oracles.tokens("lower(text)")} AS ltoks,
-         |    length(text) AS nc
-         |  FROM documents),
-         |f AS (
-         |  SELECT doc_id,
-         |    len(toks) AS n_tokens, nc AS n_chars_measured,
-         |    nc - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS punct,
-         |    len(list_filter(ltoks, x -> list_contains(${inList(markers.flatMap(_._2))}, x))) AS stop,
-         |    $counts,
-         |    len(list_filter(string_split_regex(text, '[^A-Za-z0-9]+'), x -> x != '')) AS bpe_tokens,
-         |    ${Oracles.polyHash("text")} AS fingerprint
-         |  FROM t)
-         |SELECT doc_id, n_tokens, n_chars_measured,
-         |  round(CASE WHEN n_tokens > 0 THEN CAST(n_chars_measured - (n_tokens - 1) AS DOUBLE) / n_tokens ELSE 0.0 END, 4) AS avg_token_len,
-         |  round(CASE WHEN n_chars_measured > 0 THEN CAST(punct AS DOUBLE) / n_chars_measured ELSE 0.0 END, 4) AS punct_ratio,
+        .orderBy(col("doc_id")),
+      s"""WITH ${textStatsCtes("")}
+         |SELECT doc_id, n_tokens, nc AS n_chars_measured,
+         |  round(CASE WHEN n_tokens > 0 THEN CAST(nc - (n_tokens - 1) AS DOUBLE) / n_tokens ELSE 0.0 END, 4) AS avg_token_len,
+         |  round(CASE WHEN nc > 0 THEN CAST(punct AS DOUBLE) / nc ELSE 0.0 END, 4) AS punct_ratio,
          |  round(CASE WHEN n_tokens > 0 THEN CAST(stop AS DOUBLE) / n_tokens ELSE 0.0 END, 4) AS stopword_ratio,
-         |  round(least(1.0, CASE WHEN n_tokens > 0 THEN 0.5 + CAST(stop AS DOUBLE) / n_tokens - CAST(punct AS DOUBLE) / greatest(n_chars_measured, 1) ELSE 0.0 END), 4) AS quality_score,
-         |  CASE WHEN $best <= 0 THEN 'und' $langCase ELSE 'und' END AS lang_pred,
+         |  $qualityScore AS quality_score,
+         |  $langPred AS lang_pred,
          |  bpe_tokens, fingerprint
-         |FROM f ORDER BY doc_id""".stripMargin
-    }),
+         |FROM f ORDER BY doc_id""".stripMargin),
 
     // End-to-end corpus cleaning — the composition a training-data
     // pipeline actually runs: one map-only stats pass -> quality/lang/
@@ -94,7 +70,7 @@ object CorpusQueries {
             .cast("double") / count(lit(1)) / 10000.0, 4).as("avg_quality"))
         .orderBy(col("lang_pred"), col("source"))
     }, {
-      s"""WITH ${cleanGateCtes()},
+      s"""WITH ${cleanGateCtes("")},
          |sole AS (
          |  SELECT * FROM (
          |    SELECT *, row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
@@ -321,14 +297,7 @@ object CorpusQueries {
           min(col("doc_id")).as("first_doc"), max(col("doc_id")).as("last_doc"))
         .orderBy(col("shard_id"))
     },
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    CAST(len(${Oracles.tokens("lower(text)")}) AS BIGINT) AS n_tok
-         |  FROM documents),
-         |c AS (
-         |  SELECT doc_id, n_tok, CAST(coalesce(sum(n_tok) OVER (
-         |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS pre
-         |  FROM d)
+      s"""WITH $docTokenPrefix
          |SELECT pre // 4096 AS shard_id, count(*) AS n_docs,
          |  CAST(sum(n_tok) AS BIGINT) AS n_tokens, min(doc_id) AS first_doc, max(doc_id) AS last_doc
          |FROM c GROUP BY 1 ORDER BY 1""".stripMargin),
@@ -345,22 +314,7 @@ object CorpusQueries {
       Packing.packSequences(docs, "doc_id", "n_tok", 512L)
         .orderBy(col("doc_id"), col("seq_id"))
     },
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    CAST(len(${Oracles.tokens("lower(text)")}) AS BIGINT) AS n_tok
-         |  FROM documents),
-         |c AS (
-         |  SELECT doc_id, n_tok, CAST(coalesce(sum(n_tok) OVER (
-         |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS s
-         |  FROM d),
-         |p AS (
-         |  SELECT doc_id, n_tok, s,
-         |    unnest(generate_series(s // 512, (s + n_tok - 1) // 512)) AS seq_id
-         |  FROM c WHERE n_tok > 0)
-         |SELECT doc_id, seq_id,
-         |  GREATEST(s, seq_id * 512) - seq_id * 512 AS off_in_seq,
-         |  LEAST((seq_id + 1) * 512, s + n_tok) - GREATEST(s, seq_id * 512) AS piece_len
-         |FROM p ORDER BY doc_id, seq_id""".stripMargin),
+      packOracle("")),
 
     // Bookmark-incremental packing: pack ONLY the last-50-doc delta,
     // continuing from the prior corpus's total token count (an O(1)
@@ -380,24 +334,7 @@ object CorpusQueries {
     },
       // the oracle is the FULL repack filtered to the delta docs — the
       // incremental path must be indistinguishable from it
-      s"""WITH d AS (
-         |  SELECT doc_id,
-         |    CAST(len(${Oracles.tokens("lower(text)")}) AS BIGINT) AS n_tok
-         |  FROM documents),
-         |c AS (
-         |  SELECT doc_id, n_tok, CAST(coalesce(sum(n_tok) OVER (
-         |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS s
-         |  FROM d),
-         |p AS (
-         |  SELECT doc_id, n_tok, s,
-         |    unnest(generate_series(s // 512, (s + n_tok - 1) // 512)) AS seq_id
-         |  FROM c WHERE n_tok > 0)
-         |SELECT doc_id, seq_id,
-         |  GREATEST(s, seq_id * 512) - seq_id * 512 AS off_in_seq,
-         |  LEAST((seq_id + 1) * 512, s + n_tok) - GREATEST(s, seq_id * 512) AS piece_len
-         |FROM p
-         |WHERE doc_id >= (SELECT max(doc_id) - 49 FROM documents)
-         |ORDER BY doc_id, seq_id""".stripMargin),
+      packOracle("WHERE doc_id >= (SELECT max(doc_id) - 49 FROM documents)")),
 
     // Length-bucketed batch assembly for PADDED training: 16-token-wide
     // length classes, 8-doc batches in id order within each class,
@@ -718,30 +655,12 @@ object CorpusQueries {
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_kept"), sum(col("n_tok")).as("tok_total"))
         .orderBy(col("source"))
-    }, {
-      val bucket = Oracles.sampleBucket("CAST(doc_id AS VARCHAR)", 1000)
-      s"""WITH d AS (
-         |  SELECT doc_id, source,
-         |    CAST(len(${Oracles.tokens("text")}) AS BIGINT) AS n_tok
-         |  FROM documents),
-         |c AS (SELECT source, count(*) AS n FROM d GROUP BY source),
-         |t AS (
-         |  SELECT 'src0' AS source, CAST(0.4 AS DOUBLE) AS tgt
-         |  UNION ALL SELECT 'src1', CAST(0.3 AS DOUBLE)
-         |  UNION ALL SELECT 'src2', CAST(0.2 AS DOUBLE)
-         |  UNION ALL SELECT 'src3', CAST(0.08 AS DOUBLE)
-         |  UNION ALL SELECT 'src4', CAST(0.02 AS DOUBLE)),
-         |sc AS (SELECT min(c.n / t.tgt) AS scale
-         |       FROM c JOIN t USING (source) WHERE t.tgt > 0),
-         |f AS (SELECT c.source,
-         |        least(1.0, (SELECT scale FROM sc) * t.tgt / c.n) AS frac
-         |      FROM c JOIN t USING (source)),
-         |kept AS (
-         |  SELECT d.source, d.n_tok FROM d JOIN f USING (source)
-         |  WHERE $bucket < floor(f.frac * 1000))
-         |SELECT source, count(*) AS n_kept, CAST(sum(n_tok) AS BIGINT) AS tok_total
-         |FROM kept GROUP BY source ORDER BY source""".stripMargin
-    }),
+    }, mixOracle(
+      """SELECT 'src0' AS source, CAST(0.4 AS DOUBLE) AS tgt
+        |  UNION ALL SELECT 'src1', CAST(0.3 AS DOUBLE)
+        |  UNION ALL SELECT 'src2', CAST(0.2 AS DOUBLE)
+        |  UNION ALL SELECT 'src3', CAST(0.08 AS DOUBLE)
+        |  UNION ALL SELECT 'src4', CAST(0.02 AS DOUBLE)""".stripMargin)),
 
     // BPE merge-rule learning: 3 rounds of most-frequent-pair merges
     // with the corpus rewritten between rounds; output is the learned
@@ -827,27 +746,7 @@ object CorpusQueries {
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_kept"), sum(col("n_tok")).as("tok_total"))
         .orderBy(col("source"))
-    }, {
-      val bucket = Oracles.sampleBucket("CAST(doc_id AS VARCHAR)", 1000)
-      s"""WITH d AS (
-         |  SELECT doc_id, source,
-         |    CAST(len(${Oracles.tokens("text")}) AS BIGINT) AS n_tok
-         |  FROM documents),
-         |c AS (SELECT source, count(*) AS n FROM d GROUP BY source),
-         |z AS (SELECT sum(pow(n, 0.5)) AS z FROM c),
-         |t AS (
-         |  SELECT source, round(pow(n, 0.5) / (SELECT z FROM z), 6) AS tgt FROM c),
-         |sc AS (SELECT min(c.n / t.tgt) AS scale
-         |       FROM c JOIN t USING (source) WHERE t.tgt > 0),
-         |f AS (SELECT c.source,
-         |        least(1.0, (SELECT scale FROM sc) * t.tgt / c.n) AS frac
-         |      FROM c JOIN t USING (source)),
-         |kept AS (
-         |  SELECT d.source, d.n_tok FROM d JOIN f USING (source)
-         |  WHERE $bucket < floor(f.frac * 1000))
-         |SELECT source, count(*) AS n_kept, CAST(sum(n_tok) AS BIGINT) AS tok_total
-         |FROM kept GROUP BY source ORDER BY source""".stripMargin
-    }),
+    }, mixOracle(temperatureTargets(""))),
 
     // DSIR importance weights (Xie et al. 2023): every document scored
     // by how target-like (target = the English sub-corpus) its hashed
@@ -983,22 +882,7 @@ object CorpusQueries {
       TextAnalysis.perplexity(
           Tables.documents(s, dir).select(col("doc_id"), col("text")))
         .orderBy(col("doc_id")),
-      s"""WITH toks AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS t FROM documents),
-         |bg AS (
-         |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
-         |    i -> struct_pack(w1 := t[i], w2 := t[i+1]))) AS b
-         |  FROM toks WHERE len(t) >= 2),
-         |p AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM bg),
-         |cnt AS (SELECT w1, w2, count(*) AS n FROM p GROUP BY 1, 2),
-         |lm AS (SELECT w1, w2,
-         |         round(n / sum(n) OVER (PARTITION BY w1), 6) AS prob
-         |       FROM cnt),
-         |sc AS (
-         |  SELECT doc_id, count(*) AS n_bigrams, round(avg(ln(prob)), 4) AS avg_ll
-         |  FROM p JOIN lm USING (w1, w2) GROUP BY doc_id)
-         |SELECT doc_id, n_bigrams, avg_ll, round(exp(-avg_ll), 4) AS ppl
-         |FROM sc ORDER BY doc_id""".stripMargin),
+      perplexityOracle("")),
 
     // The quality filter's per-ingest path: the bigram LM fitted once on
     // the reference corpus (session-cached LmStore — the persisted-index
@@ -1023,23 +907,30 @@ object CorpusQueries {
       // (a doc's score depends only on its own bigrams and the LM; the
       // Laplace backoff never fires for a corpus-subset delta, so the MLE
       // conditionals replay exactly).
-      s"""WITH toks AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS t FROM documents),
-         |bg AS (
-         |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
-         |    i -> struct_pack(w1 := t[i], w2 := t[i+1]))) AS b
-         |  FROM toks WHERE len(t) >= 2),
-         |p AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM bg),
-         |cnt AS (SELECT w1, w2, count(*) AS n FROM p GROUP BY 1, 2),
-         |lm AS (SELECT w1, w2,
-         |         round(n / sum(n) OVER (PARTITION BY w1), 6) AS prob
-         |       FROM cnt),
-         |sc AS (
-         |  SELECT doc_id, count(*) AS n_bigrams, round(avg(ln(prob)), 4) AS avg_ll
-         |  FROM p JOIN lm USING (w1, w2) WHERE doc_id % 50 = 0 GROUP BY doc_id)
-         |SELECT doc_id, n_bigrams, avg_ll, round(exp(-avg_ll), 4) AS ppl
-         |FROM sc ORDER BY doc_id""".stripMargin)
+      perplexityOracle("WHERE doc_id % 50 = 0"))
   )
+
+  /** The bigram LM (MLE conditionals rounded to 6) fitted on every
+    * document, and the perplexity of the documents `where` keeps under it
+    * (TextAnalysis.perplexity).
+    */
+  private def perplexityOracle(where: String): String =
+    s"""WITH toks AS (
+       |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS t FROM documents),
+       |bg AS (
+       |  SELECT doc_id, unnest(list_transform(range(1, len(t)),
+       |    i -> struct_pack(w1 := t[i], w2 := t[i+1]))) AS b
+       |  FROM toks WHERE len(t) >= 2),
+       |p AS (SELECT doc_id, b.w1 AS w1, b.w2 AS w2 FROM bg),
+       |cnt AS (SELECT w1, w2, count(*) AS n FROM p GROUP BY 1, 2),
+       |lm AS (SELECT w1, w2,
+       |         round(n / sum(n) OVER (PARTITION BY w1), 6) AS prob
+       |       FROM cnt),
+       |sc AS (
+       |  SELECT doc_id, count(*) AS n_bigrams, round(avg(ln(prob)), 4) AS avg_ll
+       |  FROM p JOIN lm USING (w1, w2) $where GROUP BY doc_id)
+       |SELECT doc_id, n_bigrams, avg_ll, round(exp(-avg_ll), 4) AS ppl
+       |FROM sc ORDER BY doc_id""".stripMargin
 
   /** Shared construction for corpus_clean_incr and its persisted-index
     * twin: (history fingerprint-sole frame, gated exact-deduped delta),
@@ -1160,24 +1051,7 @@ object CorpusQueries {
     * rests on).
     */
   private def corpusCleanIncrOracle: String =
-    s"""WITH ${cleanGateCtes("WHERE doc_id % 10 = 0")},
-       |cut AS (SELECT max(doc_id) - 499 AS c FROM documents WHERE doc_id % 10 = 0),
-       |hist AS (
-       |  SELECT doc_id, text, fingerprint FROM (
-       |    SELECT doc_id, text, fingerprint,
-       |      row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
-       |    FROM kept WHERE doc_id < (SELECT c FROM cut)) WHERE rn = 1),
-       |dsole AS (
-       |  SELECT doc_id, text, source, n_tokens, quality_score, lang_pred FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
-       |    FROM kept
-       |    WHERE doc_id >= (SELECT c FROM cut)
-       |      AND fingerprint NOT IN (SELECT fingerprint FROM hist)) WHERE rn = 1),
-       |u AS (SELECT doc_id, text FROM hist UNION ALL SELECT doc_id, text FROM dsole),
-       |${DedupQueries.minhashPairsCtesOver("u", 0.8)},
-       |dropped AS (
-       |  SELECT DISTINCT id_b AS doc_id FROM mh_pairs
-       |  WHERE id_b >= (SELECT c FROM cut))
+    s"""WITH $cleanIncrCtes
        |SELECT lang_pred, source, count(*) AS n_docs,
        |  CAST(sum(n_tokens) AS BIGINT) AS tok_total,
        |  round(CAST(sum(CAST(round(quality_score * 10000) AS BIGINT)) AS DOUBLE)
@@ -1185,34 +1059,16 @@ object CorpusQueries {
        |FROM dsole WHERE doc_id NOT IN (SELECT doc_id FROM dropped)
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  /** End-to-end pipeline oracle: corpusCleanIncrOracle's gate/dedup/LSH
+  /** End-to-end pipeline oracle: [[cleanIncrCtes]]'s gate/dedup/LSH
     * chain, then banned-term policy (token membership == the inverted
     * index probe), exact 8-gram eval overlap (== the bloom path, which is
     * exact by construction), the IVF probe replay (frozen seeds = 16
-    * lowest reference vec_ids, nprobe 2, cosine >= 0.3 on the 6-rounded
-    * value), the temperature-mix replay (alpha 0.5) and the
-    * prefix-sum shard packing (budget 128).
+    * lowest reference vec_ids, cosine >= 0.3 on the 6-rounded value) at
+    * the store's committed nprobe, the temperature-mix replay (alpha 0.5)
+    * and the prefix-sum shard packing (budget 128).
     */
-  private def pipelineE2eOracle: String = {
-    val bucket = Oracles.sampleBucket("CAST(doc_id AS VARCHAR)", 1000)
-    s"""WITH ${cleanGateCtes("WHERE doc_id % 10 = 0")},
-       |cut AS (SELECT max(doc_id) - 499 AS c FROM documents WHERE doc_id % 10 = 0),
-       |hist AS (
-       |  SELECT doc_id, text, fingerprint FROM (
-       |    SELECT doc_id, text, fingerprint,
-       |      row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
-       |    FROM kept WHERE doc_id < (SELECT c FROM cut)) WHERE rn = 1),
-       |dsole AS (
-       |  SELECT doc_id, text, source, n_tokens, quality_score, lang_pred FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
-       |    FROM kept
-       |    WHERE doc_id >= (SELECT c FROM cut)
-       |      AND fingerprint NOT IN (SELECT fingerprint FROM hist)) WHERE rn = 1),
-       |u AS (SELECT doc_id, text FROM hist UNION ALL SELECT doc_id, text FROM dsole),
-       |${DedupQueries.minhashPairsCtesOver("u", 0.8)},
-       |dropped AS (
-       |  SELECT DISTINCT id_b AS doc_id FROM mh_pairs
-       |  WHERE id_b >= (SELECT c FROM cut)),
+  private def pipelineE2eOracle: String =
+    s"""WITH $cleanIncrCtes,
        |admitted AS (
        |  SELECT * FROM dsole WHERE doc_id NOT IN (SELECT doc_id FROM dropped)),
        |pol AS (
@@ -1233,115 +1089,153 @@ object CorpusQueries {
        |    GROUP BY 1, 2 HAVING count(*) >= 100)),
        |decont AS (
        |  SELECT * FROM policed WHERE doc_id NOT IN (SELECT train_id FROM cont)),
-       |ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM ev
-       |  WHERE vec_id % 10 != 0 ORDER BY vec_id LIMIT 16),
-       |ref AS (SELECT vec_id, v FROM ev WHERE vec_id % 10 != 0),
-       |rscored AS (
-       |  SELECT r.vec_id, r.v, s.cell_id, ${Oracles.cosine("r.v", "s.cv", 64)} AS cs
-       |  FROM ref r CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, v, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM rscored) WHERE rnk = 1),
+       |${Oracles.vectors},
+       |ref AS (SELECT vec_id, v FROM e WHERE vec_id % 10 != 0),
+       |${Oracles.ivfSeeds("", "ref", "16")},
+       |${Oracles.ivfCells("g", "ref", "seeds")},
        |-- the semantic stage's probe width is the store's COMMITTED
-       |-- operating point (r13 verdict #3/#4), re-derived here as the
-       |-- replayed k=5 nprobe sweep over the reference corpus: recall@5
-       |-- per width vs the exact scan for the 8-query sample, smallest
-       |-- width clearing 0.9 — a constant in neither the pipeline nor
-       |-- this SQL
-       |gq AS (SELECT vec_id, v FROM ev WHERE vec_id < 8),
-       |gqs AS (
-       |  SELECT q.vec_id, q.v, s.cell_id, ${Oracles.cosine("q.v", "s.cv", 64)} AS cs
-       |  FROM gq q CROSS JOIN seeds s),
-       |gprobes AS (
-       |  SELECT vec_id AS query_id, v AS qv, cell_id, rnk AS prnk FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM gqs) WHERE rnk <= 16),
-       |gst AS (SELECT * FROM (VALUES (1), (2), (4), (8), (16)) AS t(np)),
-       |gcand AS (
-       |  SELECT gst.np, p.query_id, a.vec_id AS neighbor_id,
-       |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-       |  FROM gst JOIN gprobes p ON p.prnk <= gst.np
-       |  JOIN assign a ON a.cell_id = p.cell_id AND p.query_id != a.vec_id),
-       |gannk AS (
-       |  SELECT np, query_id, neighbor_id FROM (
-       |    SELECT np, query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY np, query_id
-       |        ORDER BY cosine DESC, neighbor_id) AS rank
-       |    FROM gcand) WHERE rank <= 5),
-       |gexact AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC,
-       |          c.vec_id) AS rank
-       |    FROM ref c JOIN gq q ON q.vec_id != c.vec_id) WHERE rank <= 5),
-       |ghits AS (
-       |  SELECT gst.np, ex.query_id, count(a.neighbor_id) AS nhit
-       |  FROM gst CROSS JOIN gexact ex
-       |  LEFT JOIN gannk a ON a.np = gst.np
-       |    AND a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-       |  GROUP BY 1, 2),
-       |ggrid AS (
-       |  SELECT np, round(avg(nhit / CAST(5 AS DOUBLE)), 4) AS recall
-       |  FROM ghits GROUP BY 1),
-       |gcnp AS (SELECT coalesce((SELECT min(np) FROM ggrid WHERE recall >= 0.9),
-       |  (SELECT max(np) FROM ggrid)) AS npv),
-       |qv AS (SELECT d.doc_id, e.v FROM decont d JOIN ev e ON e.vec_id = d.doc_id),
-       |qscored AS (
-       |  SELECT q.doc_id, q.v, s.cell_id, ${Oracles.cosine("q.v", "s.cv", 64)} AS cs
-       |  FROM qv q CROSS JOIN seeds s),
-       |probes AS (
-       |  SELECT doc_id, v, cell_id FROM (
-       |    SELECT doc_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY doc_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM qscored) WHERE rnk <= (SELECT npv FROM gcnp)),
+       |-- operating point, re-derived here as the replayed k=5 nprobe sweep
+       |-- over the reference corpus: recall@5 per width vs the exact scan
+       |-- for the 8-query sample, smallest width clearing 0.9 — a constant
+       |-- in neither the pipeline nor this SQL
+       |${Oracles.exactTopK("gexact", "ref", 5)},
+       |${Oracles.ivfFlatSweep("g", "seeds", "gexact", 5, 0.9, Seq(1, 2, 4, 8, 16), None)},
+       |dq AS (SELECT d.doc_id AS vec_id, e.v FROM decont d JOIN e ON e.vec_id = d.doc_id),
+       |${Oracles.ivfProbes("d", "dq", "seeds", "(SELECT v FROM gcnp)")},
        |semdrop AS (
-       |  SELECT DISTINCT p.doc_id
-       |  FROM probes p JOIN assign a ON a.cell_id = p.cell_id
-       |  WHERE round(${Oracles.cosine("p.v", "a.v", 64)}, 6) >= 0.3),
+       |  SELECT DISTINCT p.query_id AS doc_id
+       |  FROM dprobes p JOIN gassign a ON a.cell_id = p.cell_id
+       |  WHERE round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) >= 0.3),
        |surv AS (
        |  SELECT * FROM decont WHERE doc_id NOT IN (SELECT doc_id FROM semdrop)),
-       |mc AS (SELECT source, count(*) AS n FROM surv GROUP BY source),
-       |mz AS (SELECT sum(pow(n, 0.5)) AS z FROM mc),
-       |mt AS (
-       |  SELECT source, round(pow(n, 0.5) / (SELECT z FROM mz), 6) AS tgt FROM mc),
-       |msc AS (SELECT min(c.n / t.tgt) AS scale
-       |        FROM mc c JOIN mt t USING (source) WHERE t.tgt > 0),
-       |mf AS (SELECT c.source,
-       |         least(1.0, (SELECT scale FROM msc) * t.tgt / c.n) AS frac
-       |       FROM mc c JOIN mt t USING (source)),
-       |kept2 AS (
-       |  SELECT s.doc_id, CAST(s.n_tokens AS BIGINT) AS n_tok
-       |  FROM surv s JOIN mf USING (source)
-       |  WHERE $bucket < floor(mf.frac * 1000)),
-       |pc AS (
-       |  SELECT doc_id, n_tok, CAST(coalesce(sum(n_tok) OVER (
-       |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS pre
-       |  FROM kept2)
+       |${mixCtes("m", "surv", temperatureTargets("m"))},
+       |${tokenPrefix("pc", "(SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tok FROM mmixed)")}
        |SELECT pre // 128 AS shard_id, count(*) AS n_docs,
        |  CAST(sum(n_tok) AS BIGINT) AS n_tokens,
        |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
        |FROM pc GROUP BY 1 ORDER BY 1""".stripMargin
-  }
+
+  /** The incremental clean chain shared by the corpus_clean_incr and
+    * pipeline oracles: the quality gate over the %10 sample, the cut
+    * between history and delta (the last 500 doc ids), per-side exact
+    * dedup by fingerprint (`hist`, the delta's sole survivors `dsole`),
+    * and the delta docs the 0.8 MinHash-LSH pairs drop (`dropped`).
+    */
+  private def cleanIncrCtes: String =
+    s"""${cleanGateCtes("WHERE doc_id % 10 = 0")},
+       |cut AS (SELECT max(doc_id) - 499 AS c FROM documents WHERE doc_id % 10 = 0),
+       |hist AS (
+       |  SELECT doc_id, text, fingerprint FROM (
+       |    SELECT doc_id, text, fingerprint,
+       |      row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
+       |    FROM kept WHERE doc_id < (SELECT c FROM cut)) WHERE rn = 1),
+       |dsole AS (
+       |  SELECT doc_id, text, source, n_tokens, quality_score, lang_pred FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY fingerprint ORDER BY doc_id) AS rn
+       |    FROM kept
+       |    WHERE doc_id >= (SELECT c FROM cut)
+       |      AND fingerprint NOT IN (SELECT fingerprint FROM hist)) WHERE rn = 1),
+       |u AS (SELECT doc_id, text FROM hist UNION ALL SELECT doc_id, text FROM dsole),
+       |${DedupQueries.minhashPairsCtesOver("u", 0.8)},
+       |dropped AS (
+       |  SELECT DISTINCT id_b AS doc_id FROM mh_pairs
+       |  WHERE id_b >= (SELECT c FROM cut))""".stripMargin
+
+  /** `$name` (doc_id, n_tok, pre): each `rows` (doc_id, n_tok) row with
+    * the token count of every lower doc id — Packing's two-level prefix
+    * sum, replayed as one global window.
+    */
+  private def tokenPrefix(name: String, rows: String): String =
+    s"""$name AS (
+       |  SELECT doc_id, n_tok, CAST(coalesce(sum(n_tok) OVER (
+       |    ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+       |    AS BIGINT) AS pre
+       |  FROM $rows)""".stripMargin
+
+  /** Per-document token counts `d` and their [[tokenPrefix]] `c`. */
+  private lazy val docTokenPrefix: String =
+    s"""d AS (
+       |  SELECT doc_id,
+       |    CAST(len(${Oracles.tokens("lower(text)")}) AS BIGINT) AS n_tok
+       |  FROM documents),
+       |${tokenPrefix("c", "d")}""".stripMargin
+
+  /** Replays Packing.packSequences at 512-token sequences over
+    * [[docTokenPrefix]]; `where` filters the emitted pieces.
+    */
+  private def packOracle(where: String): String =
+    s"""WITH $docTokenPrefix,
+       |p AS (
+       |  SELECT doc_id, n_tok, pre,
+       |    unnest(generate_series(pre // 512, (pre + n_tok - 1) // 512)) AS seq_id
+       |  FROM c WHERE n_tok > 0)
+       |SELECT doc_id, seq_id,
+       |  GREATEST(pre, seq_id * 512) - seq_id * 512 AS off_in_seq,
+       |  LEAST((seq_id + 1) * 512, pre + n_tok) - GREATEST(pre, seq_id * 512) AS piece_len
+       |FROM p $where
+       |ORDER BY doc_id, seq_id""".stripMargin
+
+  /** Hash-membership sampling toward per-source targets (Sampling's mix
+    * rule): `${pre}c` (source, n) counts `rows`, `targets` selects
+    * (source, tgt) and may read `${pre}c`, and `${pre}mixed` keeps each
+    * row whose doc_id bucket falls under its source's fraction — the
+    * largest uniform scale no target exceeds.
+    */
+  private def mixCtes(pre: String, rows: String, targets: String): String =
+    s"""${pre}c AS (SELECT source, count(*) AS n FROM $rows GROUP BY source),
+       |${pre}t AS ($targets),
+       |${pre}sc AS (SELECT min(c.n / t.tgt) AS scale
+       |  FROM ${pre}c c JOIN ${pre}t t USING (source) WHERE t.tgt > 0),
+       |${pre}f AS (
+       |  SELECT c.source, least(1.0, (SELECT scale FROM ${pre}sc) * t.tgt / c.n) AS frac
+       |  FROM ${pre}c c JOIN ${pre}t t USING (source)),
+       |${pre}mixed AS (
+       |  SELECT r.* FROM $rows r JOIN ${pre}f f USING (source)
+       |  WHERE ${Oracles.sampleBucket("CAST(r.doc_id AS VARCHAR)", 1000)}
+       |    < floor(f.frac * 1000))""".stripMargin
+
+  /** Temperature targets ∝ n^0.5 over `${pre}c` (Sampling.temperatureMix
+    * at alpha 0.5), rounded to 6 digits as the engine rounds them.
+    */
+  private def temperatureTargets(pre: String): String =
+    s"""SELECT source, round(pow(n, 0.5) / (SELECT sum(pow(n, 0.5)) FROM ${pre}c), 6)
+       |    AS tgt
+       |  FROM ${pre}c""".stripMargin
+
+  /** The per-source kept counts of a mix over all documents. */
+  private def mixOracle(targets: String): String =
+    s"""WITH d AS (
+       |  SELECT doc_id, source,
+       |    CAST(len(${Oracles.tokens("text")}) AS BIGINT) AS n_tok
+       |  FROM documents),
+       |${mixCtes("", "d", targets)}
+       |SELECT source, count(*) AS n_kept, CAST(sum(n_tok) AS BIGINT) AS tok_total
+       |FROM mixed GROUP BY source ORDER BY source""".stripMargin
 
   /** CTE chain t → f → g → kept replaying TextAnalysis.stats plus the
     * cleaning quality gate over `documents` (optionally filtered) —
     * shared by the corpus_clean and corpus_clean_incr oracles.
     */
-  private def cleanGateCtes(where: String = ""): String = {
-    val markers = graft.operators.TextAnalysis.langMarkers
+  private def cleanGateCtes(where: String): String =
+    s"""${textStatsCtes(where)},
+       |g AS (
+       |  SELECT doc_id, text, source, n_tokens, fingerprint,
+       |    $qualityScore AS quality_score, $langPred AS lang_pred
+       |  FROM f),
+       |kept AS (
+       |  SELECT * FROM g WHERE quality_score >= 0.55 AND lang_pred <> 'und'
+       |    AND n_tokens BETWEEN 5 AND 5000)""".stripMargin
+
+  /** CTEs `t` → `f` replaying TextAnalysis.stats over the `documents`
+    * rows `where` keeps: per doc (doc_id, text, source, nc, n_tokens,
+    * punct, stop, one marker count `c_<lang>` per language, bpe_tokens,
+    * fingerprint).
+    */
+  private def textStatsCtes(where: String): String = {
     def inList(words: Seq[String]) = words.map(w => s"'$w'").mkString("[", ", ", "]")
-    val counts = markers.map { case (lang, ms) =>
+    val counts = TextAnalysis.langMarkers.map { case (lang, ms) =>
       s"len(list_filter(ltoks, x -> list_contains(${inList(ms)}, x))) AS c_$lang"
     }.mkString(",\n    ")
-    val best = s"greatest(${markers.map("c_" + _._1).mkString(", ")})"
-    val langCase = markers.map { case (lang, _) =>
-      s"WHEN c_$lang = $best THEN '$lang'"
-    }.mkString(" ")
     s"""t AS (
        |  SELECT doc_id, text, source,
        |    ${Oracles.tokens("text")} AS toks,
@@ -1352,18 +1246,27 @@ object CorpusQueries {
        |  SELECT doc_id, text, source, nc,
        |    len(toks) AS n_tokens,
        |    nc - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS punct,
-       |    len(list_filter(ltoks, x -> list_contains(${inList(markers.flatMap(_._2))}, x))) AS stop,
+       |    len(list_filter(ltoks, x -> list_contains(${inList(TextAnalysis.langMarkers.flatMap(_._2))}, x))) AS stop,
        |    $counts,
+       |    len(list_filter(string_split_regex(text, '[^A-Za-z0-9]+'), x -> x != '')) AS bpe_tokens,
        |    ${Oracles.polyHash("text")} AS fingerprint
-       |  FROM t),
-       |g AS (
-       |  SELECT doc_id, text, source, n_tokens, fingerprint,
-       |    round(least(1.0, CASE WHEN n_tokens > 0 THEN 0.5 + CAST(stop AS DOUBLE) / n_tokens - CAST(punct AS DOUBLE) / greatest(nc, 1) ELSE 0.0 END), 4) AS quality_score,
-       |    CASE WHEN $best <= 0 THEN 'und' $langCase ELSE 'und' END AS lang_pred
-       |  FROM f),
-       |kept AS (
-       |  SELECT * FROM g WHERE quality_score >= 0.55 AND lang_pred <> 'und'
-       |    AND n_tokens BETWEEN 5 AND 5000)""".stripMargin
+       |  FROM t)""".stripMargin
+  }
+
+  /** TextAnalysis.stats' quality score over [[textStatsCtes]]' `f`. */
+  private lazy val qualityScore: String =
+    "round(least(1.0, CASE WHEN n_tokens > 0 THEN 0.5 + CAST(stop AS DOUBLE) / n_tokens" +
+      " - CAST(punct AS DOUBLE) / greatest(nc, 1) ELSE 0.0 END), 4)"
+
+  /** TextAnalysis.stats' language: the marker set with the most hits,
+    * ties to the first, 'und' when none hit.
+    */
+  private def langPred: String = {
+    val best = s"greatest(${TextAnalysis.langMarkers.map("c_" + _._1).mkString(", ")})"
+    val cases = TextAnalysis.langMarkers.map { case (lang, _) =>
+      s"WHEN c_$lang = $best THEN '$lang'"
+    }
+    s"CASE WHEN $best <= 0 THEN 'und' ${cases.mkString(" ")} ELSE 'und' END"
   }
 
   /** Shared CTE chain for the BPE oracles: tokenize (tk1), then per round

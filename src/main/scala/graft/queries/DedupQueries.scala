@@ -124,23 +124,9 @@ object DedupQueries {
       Dedup.ngramJaccardPairsPruned(
         Tables.documents(s, dir).filter(col("doc_id") % 10 === 0), 3, 0.6, maxDf = 40)
         .orderBy(col("id_a"), col("id_b")),
-      s"""WITH sh AS (
-         |  SELECT doc_id, ${Oracles.shingleHashes("text", 3)} AS gs
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |g AS (SELECT doc_id, unnest(gs) AS g FROM sh),
-         |rare AS (SELECT g FROM g GROUP BY g HAVING count(*) <= 40),
-         |rg AS (SELECT doc_id, g.g FROM g JOIN rare USING (g)),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM rg a JOIN rg b ON a.g = b.g AND a.doc_id < b.doc_id)
-         |SELECT * FROM (
-         |  SELECT c.id_a, c.id_b,
-         |    round(CAST(len(list_intersect(ga.gs, gb.gs)) AS DOUBLE)
-         |      / len(list_distinct(ga.gs || gb.gs)), 6) AS jaccard
-         |  FROM cand c
-         |  JOIN sh ga ON c.id_a = ga.doc_id
-         |  JOIN sh gb ON c.id_b = gb.doc_id)
-         |WHERE jaccard >= 0.6 ORDER BY id_a, id_b""".stripMargin),
+      s"""WITH ${rareShingleCands(3)},
+         |${jaccardPairs(0.6)}
+         |SELECT * FROM mh_pairs ORDER BY id_a, id_b""".stripMargin),
 
     // Directed containment |A∩B|/|A| >= 0.5 over the same df-pruned
     // shingle join — catches a short doc quoted inside a long one, which
@@ -155,15 +141,7 @@ object DedupQueries {
         Tables.documents(s, dir).filter(col("doc_id") % 10 === 0),
         n = 5, threshold = 0.5, maxDf = 40)
         .orderBy(col("src_id"), col("dst_id")),
-      s"""WITH sh AS (
-         |  SELECT doc_id, ${Oracles.shingleHashes("text", 5)} AS gs
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |g AS (SELECT doc_id, unnest(gs) AS g FROM sh),
-         |rare AS (SELECT g FROM g GROUP BY g HAVING count(*) <= 40),
-         |rg AS (SELECT doc_id, g.g FROM g JOIN rare USING (g)),
-         |cand AS (
-         |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-         |  FROM rg a JOIN rg b ON a.g = b.g AND a.doc_id < b.doc_id),
+      s"""WITH ${rareShingleCands(5)},
          |scored AS (
          |  SELECT c.id_a, c.id_b,
          |    CAST(len(list_intersect(ga.gs, gb.gs)) AS DOUBLE) AS inter,
@@ -282,14 +260,7 @@ object DedupQueries {
       // generation, then the usual delta-probe + jaccard verify. Filtering
       // the delta side alone is exact: a row at a stopped key can only
       // pair with a delta row at the same (now absent) key.
-      val bkeys = (0 until 4).map(bi => Oracles.bandKey("sig", bi, 4)).mkString("[", ", ", "]")
-      s"""WITH sh AS (
-         |  SELECT doc_id, ${Oracles.shingleHashes("text", 3)} AS gs
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |sigs AS (SELECT doc_id, ${Oracles.minhashSignature("gs", 16)} AS sig FROM sh),
-         |bnd AS (
-         |  SELECT doc_id, t.band AS band, $bkeys[t.band + 1] AS band_key
-         |  FROM sigs CROSS JOIN (SELECT unnest(range(0, 4)) AS band) t),
+      s"""WITH ${minhashBandCtes(sampleDocs)},
          |stop AS (
          |  SELECT band, band_key FROM bnd WHERE doc_id % 50 != 0
          |  GROUP BY 1, 2 HAVING count(*) > 4),
@@ -302,15 +273,9 @@ object DedupQueries {
          |    greatest(x.doc_id, y.doc_id) AS id_b
          |  FROM dbnd x JOIN bnd y
          |    ON x.band = y.band AND x.band_key = y.band_key
-         |      AND x.doc_id != y.doc_id)
-         |SELECT * FROM (
-         |  SELECT c.id_a, c.id_b,
-         |    round(CAST(len(list_intersect(ga.gs, gb.gs)) AS DOUBLE)
-         |      / len(list_distinct(ga.gs || gb.gs)), 6) AS jaccard
-         |  FROM cand c
-         |  JOIN sh ga ON c.id_a = ga.doc_id
-         |  JOIN sh gb ON c.id_b = gb.doc_id)
-         |WHERE jaccard >= 0.6 ORDER BY id_a, id_b""".stripMargin
+         |      AND x.doc_id != y.doc_id),
+         |${jaccardPairs(0.6)}
+         |SELECT * FROM mh_pairs ORDER BY id_a, id_b""".stripMargin
     }),
 
     // Band-index maintenance telemetry: per band, bucket count / rows /
@@ -330,14 +295,7 @@ object DedupQueries {
       }
       idx.bandStats.orderBy(col("band"))
     }, {
-      val bkeys = (0 until 4).map(bi => Oracles.bandKey("sig", bi, 4)).mkString("[", ", ", "]")
-      s"""WITH sh AS (
-         |  SELECT doc_id, ${Oracles.shingleHashes("text", 3)} AS gs
-         |  FROM documents WHERE doc_id % 10 = 0),
-         |sigs AS (SELECT doc_id, ${Oracles.minhashSignature("gs", 16)} AS sig FROM sh),
-         |bnd AS (
-         |  SELECT doc_id, t.band AS band, $bkeys[t.band + 1] AS band_key
-         |  FROM sigs CROSS JOIN (SELECT unnest(range(0, 4)) AS band) t),
+      s"""WITH ${minhashBandCtes(sampleDocs)},
          |b AS (SELECT band, band_key, count(*) AS n FROM bnd GROUP BY 1, 2)
          |SELECT CAST(band AS INT) AS band, CAST(count(*) AS BIGINT) AS n_buckets,
          |  CAST(sum(n) AS BIGINT) AS n_rows, CAST(max(n) AS BIGINT) AS max_bucket,
@@ -353,18 +311,8 @@ object DedupQueries {
           Tables.documents(s, dir).filter(col("doc_id") % 10 === 0),
           n = 3, k = 16, bands = 4, threshold = 0.6))
         .orderBy(col("doc_id")),
-      s"""WITH RECURSIVE $minhashPairsCtes,
-         |edges AS (
-         |  SELECT id_a AS a, id_b AS b FROM mh_pairs
-         |  UNION SELECT id_b, id_a FROM mh_pairs
-         |  UNION SELECT id_a, id_a FROM mh_pairs
-         |  UNION SELECT id_b, id_b FROM mh_pairs),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)
-         |SELECT a AS doc_id, min(b) AS cluster_id
-         |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin),
+      s"""WITH RECURSIVE $clusterCtes
+         |SELECT * FROM cl ORDER BY doc_id""".stripMargin),
 
     // Quality-aware retention: in each LSH near-dup cluster keep the
     // longest member (ties to smallest doc_id) — the retention policy a
@@ -381,20 +329,10 @@ object DedupQueries {
     },
       // replays the cluster CTE, then keep-best = row_number over
       // (n_chars DESC, doc_id) per cluster
-      s"""WITH RECURSIVE $minhashPairsCtes,
-         |edges AS (
-         |  SELECT id_a AS a, id_b AS b FROM mh_pairs
-         |  UNION SELECT id_b, id_a FROM mh_pairs
-         |  UNION SELECT id_a, id_a FROM mh_pairs
-         |  UNION SELECT id_b, id_b FROM mh_pairs),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         |clu AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a),
+      s"""WITH RECURSIVE $clusterCtes,
          |j AS (
          |  SELECT c.cluster_id, c.doc_id, d.n_chars
-         |  FROM clu c JOIN documents d USING (doc_id)),
+         |  FROM cl c JOIN documents d USING (doc_id)),
          |r AS (
          |  SELECT cluster_id, doc_id, n_chars,
          |    row_number() OVER (
@@ -431,19 +369,11 @@ object DedupQueries {
     QueryDef("dedup_embedding", (s, dir) =>
       Dedup.embeddingPairs(Tables.embeddings(s, dir), 0.3, bucketed = true)
         .orderBy(col("id_a"), col("id_b")),
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |bk AS (SELECT vec_id, v, ${Oracles.hyperplaneBits("v", 64, 64)} AS bits FROM e),
-         |keyed AS (
-         |  SELECT vec_id, v, t.tbl AS tbl, ${Oracles.bucketFromBits("bits", "t.tbl", 8)} AS bucket
-         |  FROM bk CROSS JOIN (SELECT unnest(range(0, 8)) AS tbl) t),
-         |cand AS (
-         |  SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b, x.v AS va, y.v AS vb
-         |  FROM keyed x JOIN keyed y
-         |    ON x.tbl = y.tbl AND x.bucket = y.bucket AND x.vec_id < y.vec_id)
-         |SELECT * FROM (
-         |  SELECT id_a, id_b, round(${Oracles.cosine("va", "vb", 64)}, 6) AS cosine
-         |  FROM cand)
-         |WHERE cosine >= 0.3 ORDER BY id_a, id_b""".stripMargin),
+      bucketPairsOracle(
+        s"""bk AS (SELECT vec_id, v, ${Oracles.hyperplaneBits("v", "64", 64)} AS bits FROM e),
+           |keyed AS (
+           |  SELECT vec_id, v, t.tbl AS tbl, ${Oracles.bucketFromBits("bits", "t.tbl", "8")} AS bucket
+           |  FROM bk CROSS JOIN (SELECT unnest(range(0, 8)) AS tbl) t)""".stripMargin)),
 
     // The Sizing-derived LSH family AS a declared query (the LSH twin of
     // sim_ivf_auto): bits = clamp(ceil(log2 n), 8, 30) and tables =
@@ -462,27 +392,19 @@ object DedupQueries {
       // mirrors Sizing.lshBits(n, perBucket=1) / lshTables exactly, then
       // gates the plane count, the key width, and the table fan-out, so a
       // drifted derivation breaks the hash
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |nl AS (SELECT GREATEST(8, LEAST(30,
-         |  CAST(ceil(log2(CAST(count(*) AS DOUBLE))) AS BIGINT))) AS bits FROM e),
-         |tb AS (SELECT bits, GREATEST(1, LEAST(8, 64 // bits)) AS tables FROM nl),
-         |bk AS (SELECT vec_id, v, bits,
-         |  ${Oracles.hyperplaneBitsDyn("v", "bits*tables", 64)} AS bl
-         |  FROM e CROSS JOIN tb),
-         |ke AS (SELECT vec_id, v, bits, bl,
-         |  unnest(range(0, (SELECT tables FROM tb))) AS tbl FROM bk),
-         |keyed AS (
-         |  SELECT vec_id, v, tbl,
-         |    ${Oracles.bucketFromBitsDyn("bl", "tbl", "bits")} AS bucket
-         |  FROM ke),
-         |cand AS (
-         |  SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b, x.v AS va, y.v AS vb
-         |  FROM keyed x JOIN keyed y
-         |    ON x.tbl = y.tbl AND x.bucket = y.bucket AND x.vec_id < y.vec_id)
-         |SELECT * FROM (
-         |  SELECT id_a, id_b, round(${Oracles.cosine("va", "vb", 64)}, 6) AS cosine
-         |  FROM cand)
-         |WHERE cosine >= 0.3 ORDER BY id_a, id_b""".stripMargin),
+      bucketPairsOracle(
+        s"""nl AS (SELECT GREATEST(8, LEAST(30,
+           |  CAST(ceil(log2(CAST(count(*) AS DOUBLE))) AS BIGINT))) AS bits FROM e),
+           |tb AS (SELECT bits, GREATEST(1, LEAST(8, 64 // bits)) AS tables FROM nl),
+           |bk AS (SELECT vec_id, v, bits,
+           |  ${Oracles.hyperplaneBits("v", "bits*tables", 64)} AS bl
+           |  FROM e CROSS JOIN tb),
+           |ke AS (SELECT vec_id, v, bits, bl,
+           |  unnest(range(0, (SELECT tables FROM tb))) AS tbl FROM bk),
+           |keyed AS (
+           |  SELECT vec_id, v, tbl,
+           |    ${Oracles.bucketFromBits("bl", "tbl", "bits")} AS bucket
+           |  FROM ke)""".stripMargin)),
 
     // SemDeDup-style semantic near-dup pairs: k-means clusters as the
     // candidate prefilter (same deterministic 2-round/8-centroid family as
@@ -617,25 +539,9 @@ object DedupQueries {
       // hash-threshold — hash-comparing every (doc_id, cluster_id, split)
       // row checks the zero-cross-split-leakage invariant by construction,
       // since any near-dup pair shares cluster_id and therefore split
-      s"""WITH RECURSIVE $minhashPairsCtes,
-         |edges AS (
-         |  SELECT id_a AS a, id_b AS b FROM mh_pairs
-         |  UNION SELECT id_b, id_a FROM mh_pairs
-         |  UNION SELECT id_a, id_a FROM mh_pairs
-         |  UNION SELECT id_b, id_b FROM mh_pairs),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         |cl AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a),
-         |d AS (
-         |  SELECT d0.doc_id, coalesce(cl.cluster_id, d0.doc_id) AS cluster_id
-         |  FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 0) d0
-         |  LEFT JOIN cl ON cl.doc_id = d0.doc_id)
-         |SELECT doc_id, cluster_id,
-         |  CASE WHEN ${Oracles.sampleBucket("CAST(cluster_id AS VARCHAR)", 1000)} < 800
-         |    THEN 'train' ELSE 'test' END AS split
-         |FROM d ORDER BY doc_id""".stripMargin),
+      clusterKeyOracle(
+        s"""CASE WHEN ${Oracles.sampleBucket("CAST(cluster_id AS VARCHAR)", 1000)} < 800
+           |    THEN 'train' ELSE 'test' END AS split""".stripMargin)),
 
     // Leakage-safe K-FOLD: the same cluster-representative key hashed
     // into 5 folds — no fold's held-out set has a near-dup in another
@@ -650,24 +556,8 @@ object DedupQueries {
     },
       // Same recursive-component chain as leakage_split; the fold is the
       // cluster representative hashed mod 5.
-      s"""WITH RECURSIVE $minhashPairsCtes,
-         |edges AS (
-         |  SELECT id_a AS a, id_b AS b FROM mh_pairs
-         |  UNION SELECT id_b, id_a FROM mh_pairs
-         |  UNION SELECT id_a, id_a FROM mh_pairs
-         |  UNION SELECT id_b, id_b FROM mh_pairs),
-         |reach(a, b) AS (
-         |  SELECT a, b FROM edges
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-         |cl AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a),
-         |d AS (
-         |  SELECT d0.doc_id, coalesce(cl.cluster_id, d0.doc_id) AS cluster_id
-         |  FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 0) d0
-         |  LEFT JOIN cl ON cl.doc_id = d0.doc_id)
-         |SELECT doc_id, cluster_id,
-         |  ${Oracles.sampleBucket("CAST(cluster_id AS VARCHAR)", 5)} AS fold
-         |FROM d ORDER BY doc_id""".stripMargin),
+      clusterKeyOracle(
+        s"${Oracles.sampleBucket("CAST(cluster_id AS VARCHAR)", 5)} AS fold")),
 
     // Bloom-prefiltered decontamination: bench grams sketched into a
     // Bloom filter (codegen'd might_contain prefilter, map-only), exact
@@ -712,24 +602,73 @@ object DedupQueries {
          |ORDER BY t.train_id, b.bench_id""".stripMargin)
   )
 
-  /** MinHash(16)/4-band LSH pair CTEs over an arbitrary (doc_id, text)
-    * CTE `src`, verified at `threshold` — the parametrized sibling of
-    * [[minhashPairsCtes]] (which stays fixed to the %10 documents sample
-    * its eight consumers replay). Emits sh/sigs/bnd/cand/mh_pairs.
+  /** The %10 documents sample every MinHash oracle bands. */
+  private final val sampleDocs =
+    "(SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0)"
+
+  /** Every %10-sample doc with its near-dup cluster representative (a
+    * singleton is its own) and the `assignment` column hashed from it —
+    * a near-dup pair shares its cluster, so it can never straddle two
+    * splits or folds.
     */
-  private[queries] def minhashPairsCtesOver(src: String, threshold: Double): String = {
+  private def clusterKeyOracle(assignment: String): String =
+    s"""WITH RECURSIVE $clusterCtes,
+       |d AS (
+       |  SELECT d0.doc_id, coalesce(cl.cluster_id, d0.doc_id) AS cluster_id
+       |  FROM $sampleDocs d0 LEFT JOIN cl ON cl.doc_id = d0.doc_id)
+       |SELECT doc_id, cluster_id, $assignment
+       |FROM d ORDER BY doc_id""".stripMargin
+
+  /** Embedding pairs sharing an LSH bucket (Dedup.embeddingPairs,
+    * bucketed) with 6-rounded cosine >= 0.3; `keyedCtes` defines `keyed`
+    * (vec_id, v, tbl, bucket) over `e`.
+    */
+  private def bucketPairsOracle(keyedCtes: String): String =
+    s"""WITH ${Oracles.vectors},
+       |$keyedCtes,
+       |cand AS (
+       |  SELECT DISTINCT x.vec_id AS id_a, y.vec_id AS id_b, x.v AS va, y.v AS vb
+       |  FROM keyed x JOIN keyed y
+       |    ON x.tbl = y.tbl AND x.bucket = y.bucket AND x.vec_id < y.vec_id)
+       |SELECT * FROM (
+       |  SELECT id_a, id_b, round(${Oracles.cosine("va", "vb", 64)}, 6) AS cosine
+       |  FROM cand)
+       |WHERE cosine >= 0.3 ORDER BY id_a, id_b""".stripMargin
+
+  /** `sh` (doc_id, gs): the hashed `n`-gram shingles of the %10 sample;
+    * `cand` (id_a < id_b): its pairs sharing a shingle that at most 40
+    * documents hold (Dedup's rare-shingle candidates).
+    */
+  private def rareShingleCands(n: Int): String =
+    s"""sh AS (
+       |  SELECT doc_id, ${Oracles.shingleHashes("text", n)} AS gs FROM $sampleDocs),
+       |g AS (SELECT doc_id, unnest(gs) AS g FROM sh),
+       |rare AS (SELECT g FROM g GROUP BY g HAVING count(*) <= 40),
+       |rg AS (SELECT doc_id, g.g FROM g JOIN rare USING (g)),
+       |cand AS (
+       |  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+       |  FROM rg a JOIN rg b ON a.g = b.g AND a.doc_id < b.doc_id)""".stripMargin
+
+  /** MinHash(16) of the 3-char shingles of the (doc_id, text) source
+    * `src`, banded 4 x 4 (Dedup.minhashBands): `sh` (doc_id, gs), `sigs`
+    * and `bnd` (doc_id, band, band_key).
+    */
+  private def minhashBandCtes(src: String): String = {
     val bkeys = (0 until 4).map(bi => Oracles.bandKey("sig", bi, 4)).mkString("[", ", ", "]")
     s"""sh AS (
        |  SELECT doc_id, ${Oracles.shingleHashes("text", 3)} AS gs FROM $src),
        |sigs AS (SELECT doc_id, ${Oracles.minhashSignature("gs", 16)} AS sig FROM sh),
        |bnd AS (
        |  SELECT doc_id, t.band AS band, $bkeys[t.band + 1] AS band_key
-       |  FROM sigs CROSS JOIN (SELECT unnest(range(0, 4)) AS band) t),
-       |cand AS (
-       |  SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-       |  FROM bnd x JOIN bnd y
-       |    ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
-       |mh_pairs AS (
+       |  FROM sigs CROSS JOIN (SELECT unnest(range(0, 4)) AS band) t)""".stripMargin
+  }
+
+  /** `mh_pairs` (id_a, id_b, jaccard): the candidate pairs `cand` kept
+    * where their exact shingle Jaccard over `sh`, rounded to 6 first,
+    * reaches `threshold` (Dedup's shared verify).
+    */
+  private def jaccardPairs(threshold: Double): String =
+    s"""mh_pairs AS (
        |  SELECT * FROM (
        |    SELECT c.id_a, c.id_b,
        |      round(CAST(len(list_intersect(ga.gs, gb.gs)) AS DOUBLE)
@@ -738,34 +677,41 @@ object DedupQueries {
        |    JOIN sh ga ON c.id_a = ga.doc_id
        |    JOIN sh gb ON c.id_b = gb.doc_id)
        |  WHERE jaccard >= $threshold)""".stripMargin
-  }
 
-  /** Shared CTE chain producing `mh_pairs` — the MinHash-LSH near-dup
-    * pairs the dedup_minhash_lsh and dedup_clusters oracles both consume.
+  /** MinHash-LSH near-dup pairs `mh_pairs` of the (doc_id, text) source
+    * `src` at `threshold`: [[minhashBandCtes]], band-collision candidates
+    * and [[jaccardPairs]].
     */
-  private[queries] def minhashPairsCtes: String = {
-    val bkeys = (0 until 4).map(bi => Oracles.bandKey("sig", bi, 4)).mkString("[", ", ", "]")
-    s"""sh AS (
-       |  SELECT doc_id, ${Oracles.shingleHashes("text", 3)} AS gs
-       |  FROM documents WHERE doc_id % 10 = 0),
-       |sigs AS (SELECT doc_id, ${Oracles.minhashSignature("gs", 16)} AS sig FROM sh),
-       |bnd AS (
-       |  SELECT doc_id, t.band AS band, $bkeys[t.band + 1] AS band_key
-       |  FROM sigs CROSS JOIN (SELECT unnest(range(0, 4)) AS band) t),
+  private[queries] def minhashPairsCtesOver(src: String, threshold: Double): String =
+    s"""${minhashBandCtes(src)},
        |cand AS (
        |  SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
        |  FROM bnd x JOIN bnd y
        |    ON x.band = y.band AND x.band_key = y.band_key AND x.doc_id < y.doc_id),
-       |mh_pairs AS (
-       |  SELECT * FROM (
-       |    SELECT c.id_a, c.id_b,
-       |      round(CAST(len(list_intersect(ga.gs, gb.gs)) AS DOUBLE)
-       |        / len(list_distinct(ga.gs || gb.gs)), 6) AS jaccard
-       |    FROM cand c
-       |    JOIN sh ga ON c.id_a = ga.doc_id
-       |    JOIN sh gb ON c.id_b = gb.doc_id)
-       |  WHERE jaccard >= 0.6)""".stripMargin
-  }
+       |${jaccardPairs(threshold)}""".stripMargin
+
+  /** The 0.6 pairs of the %10 sample that dedup_minhash_lsh, the
+    * incremental sweeps and every cluster consumer replay.
+    */
+  private[queries] def minhashPairsCtes: String = minhashPairsCtesOver(sampleDocs, 0.6)
+
+  /** Near-dup components over [[minhashPairsCtes]]
+    * (Dedup.nearDupClusters): `edges` both ways plus self loops, the
+    * recursive `reach`, and `cl` (doc_id, cluster_id = the least
+    * reachable id). Its WITH must be RECURSIVE.
+    */
+  private def clusterCtes: String =
+    s"""$minhashPairsCtes,
+       |edges AS (
+       |  SELECT id_a AS a, id_b AS b FROM mh_pairs
+       |  UNION SELECT id_b, id_a FROM mh_pairs
+       |  UNION SELECT id_a, id_a FROM mh_pairs
+       |  UNION SELECT id_b, id_b FROM mh_pairs),
+       |reach(a, b) AS (
+       |  SELECT a, b FROM edges
+       |  UNION
+       |  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+       |cl AS (SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a)""".stripMargin
 
   /** MinHash-LSH pairs with a delta member (doc_id % 50 = 0): both the
     * re-signing and the persisted-index sweeps return exactly these.

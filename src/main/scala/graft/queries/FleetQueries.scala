@@ -36,7 +36,7 @@ object FleetQueries {
       // stamp records op.gen = 0, the later append advances the watermark
       // to gen 1, so lag = 1 - 0 and the gate fires
       s"""WITH $ivfStaleGridCtes
-         |SELECT CAST(gcnp.npv AS INTEGER) AS nprobe,
+         |SELECT CAST(gcnp.v AS INTEGER) AS nprobe,
          |  CAST(0 AS BIGINT) AS op_gen, CAST(1 AS BIGINT) AS committed_gen,
          |  CAST(1 - 0 AS BIGINT) AS lag, (1 - 0) > 0 AS maintenance_due
          |FROM gcnp""".stripMargin),
@@ -85,14 +85,14 @@ object FleetQueries {
          |    CAST(0 AS BIGINT) AS committed_gen,
          |    CAST(-1 AS BIGINT) AS compacted_through,
          |    CAST(1 AS BIGINT) AS fragments, CAST(0 AS BIGINT) AS op_gen,
-         |    CAST(0 AS BIGINT) AS lag, CAST(gcnp.npv AS INTEGER) AS nprobe,
+         |    CAST(0 AS BIGINT) AS lag, CAST(gcnp.v AS INTEGER) AS nprobe,
          |    0 > 0 AS point_stale, 1 > 1 AS compaction_due,
          |    (0 > 0) OR (1 > 1) AS maintenance_due
          |  FROM gcnp
          |  UNION ALL
          |  SELECT 'sem-ivf-stale', 'ivf', CAST(1 AS BIGINT),
          |    CAST(-1 AS BIGINT), CAST(2 AS BIGINT), CAST(0 AS BIGINT),
-         |    CAST(1 - 0 AS BIGINT), CAST(gcnp.npv AS INTEGER),
+         |    CAST(1 - 0 AS BIGINT), CAST(gcnp.v AS INTEGER),
          |    (1 - 0) > 0, 2 > 1, ((1 - 0) > 0) OR (2 > 1)
          |  FROM gcnp
          |  UNION ALL
@@ -173,51 +173,10 @@ object FleetQueries {
       // the max of the same declared sweep list, not a free constant; the
       // text row's fragment fold is re-derived from count(DISTINCT source)
       s"""WITH $ivfStaleGridCtes,
-         |fscored AS (
-         |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-         |  FROM e CROSS JOIN seeds s),
-         |fassign AS (
-         |  SELECT vec_id, v, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM fscored) WHERE rnk = 1),
-         |fprobes AS (
-         |  SELECT vec_id AS query_id, v AS qv, cell_id, rnk AS prnk FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM fscored WHERE vec_id < 8) WHERE rnk <= 16),
-         |fst AS (SELECT * FROM (VALUES (1), (2), (4), (8), (16)) AS t(np)),
-         |fcand AS (
-         |  SELECT fst.np, p.query_id, a.vec_id AS neighbor_id,
-         |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-         |  FROM fst JOIN fprobes p ON p.prnk <= fst.np
-         |  JOIN fassign a ON a.cell_id = p.cell_id AND p.query_id != a.vec_id),
-         |fannk AS (
-         |  SELECT np, query_id, neighbor_id FROM (
-         |    SELECT np, query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY np, query_id
-         |        ORDER BY cosine DESC, neighbor_id) AS rank
-         |    FROM fcand) WHERE rank <= 5),
-         |fexact AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC,
-         |          c.vec_id) AS rank
-         |    FROM e c JOIN (SELECT * FROM e WHERE vec_id < 8) q
-         |      ON q.vec_id != c.vec_id) WHERE rank <= 5),
-         |fhits AS (
-         |  SELECT fst.np, ex.query_id, count(a.neighbor_id) AS nhit
-         |  FROM fst CROSS JOIN fexact ex
-         |  LEFT JOIN fannk a ON a.np = fst.np
-         |    AND a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-         |  GROUP BY 1, 2),
-         |fgrid AS (
-         |  SELECT np, round(avg(nhit / CAST(5 AS DOUBLE)), 4) AS recall
-         |  FROM fhits GROUP BY 1),
+         |${Oracles.ivfCells("f", "e", "seeds")},
+         |${Oracles.exactTopK("fexact", "e", 5)},
+         |${Oracles.ivfFlatSweep("f", "seeds", "fexact", 5, 0.9, Seq(1, 2, 4, 8, 16), None)},
          |fcl AS (SELECT EXISTS(SELECT 1 FROM fgrid WHERE recall >= 0.9) AS ok),
-         |fcnp AS (SELECT coalesce((SELECT min(np) FROM fgrid WHERE recall >= 0.9),
-         |  (SELECT max(np) FROM fgrid)) AS fnp),
          |src AS (SELECT CAST(count(DISTINCT source) AS BIGINT) AS nsrc
          |  FROM documents WHERE doc_id % 10 = 0)
          |SELECT * FROM (
@@ -226,14 +185,14 @@ object FleetQueries {
          |    CAST(0 AS BIGINT) AS lag_before, CAST(0 AS BIGINT) AS lag_after,
          |    CAST(1 AS BIGINT) AS fragments_before,
          |    CAST(1 AS BIGINT) AS fragments_after,
-         |    CAST(gcnp.npv AS INTEGER) AS nprobe, false AS due_after
+         |    CAST(gcnp.v AS INTEGER) AS nprobe, false AS due_after
          |  FROM gcnp
          |  UNION ALL
          |  SELECT 'sem-ivf-stale', 'ivf', true,
          |    CAST(1 AS BIGINT),
          |    CASE WHEN fcl.ok THEN CAST(0 AS BIGINT) ELSE CAST(1 AS BIGINT) END,
          |    CAST(2 AS BIGINT), CAST(1 AS BIGINT),
-         |    CAST(CASE WHEN fcl.ok THEN fcnp.fnp
+         |    CAST(CASE WHEN fcl.ok THEN fcnp.v
          |         ELSE (SELECT max(np) FROM fst) END AS INTEGER),
          |    NOT fcl.ok
          |  FROM fcl, fcnp
@@ -320,61 +279,17 @@ object FleetQueries {
   /** The stale-IVF fixture's sweep replay — seeds from the bootstrap
     * history, flat-IVF recall grid over nprobes {1,2,4,8,16} at k=5 vs
     * the exact scan, smallest-clearing choice at floor 0.9 as the scalar
-    * CTE `gcnp(npv)` — shared by the `index_staleness_gate` and
+    * CTE `gcnp(v)` — shared by the `index_staleness_gate` and
     * `fleet_report` oracles (both fixtures stamp the identical sweep on
     * the identical history corpus, so one grid serves every committed-
     * nprobe column).
     */
   private lazy val ivfStaleGridCtes: String =
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |hist AS (SELECT vec_id, v FROM e WHERE vec_id % 50 != 0),
-       |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM hist
-       |  ORDER BY vec_id LIMIT 16),
-       |scored AS (
-       |  SELECT h.vec_id, h.v, s.cell_id, ${Oracles.cosine("h.v", "s.cv", 64)} AS cs
-       |  FROM hist h CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, v, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM scored) WHERE rnk = 1),
-       |gq AS (SELECT vec_id, v FROM e WHERE vec_id < 8),
-       |gqs AS (
-       |  SELECT q.vec_id, q.v, s.cell_id, ${Oracles.cosine("q.v", "s.cv", 64)} AS cs
-       |  FROM gq q CROSS JOIN seeds s),
-       |gprobes AS (
-       |  SELECT vec_id AS query_id, v AS qv, cell_id, rnk AS prnk FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM gqs) WHERE rnk <= 16),
-       |gst AS (SELECT * FROM (VALUES (1), (2), (4), (8), (16)) AS t(np)),
-       |gcand AS (
-       |  SELECT gst.np, p.query_id, a.vec_id AS neighbor_id,
-       |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-       |  FROM gst JOIN gprobes p ON p.prnk <= gst.np
-       |  JOIN assign a ON a.cell_id = p.cell_id AND p.query_id != a.vec_id),
-       |gannk AS (
-       |  SELECT np, query_id, neighbor_id FROM (
-       |    SELECT np, query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY np, query_id
-       |        ORDER BY cosine DESC, neighbor_id) AS rank
-       |    FROM gcand) WHERE rank <= 5),
-       |gexact AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC,
-       |          c.vec_id) AS rank
-       |    FROM hist c JOIN gq q ON q.vec_id != c.vec_id) WHERE rank <= 5),
-       |ghits AS (
-       |  SELECT gst.np, ex.query_id, count(a.neighbor_id) AS nhit
-       |  FROM gst CROSS JOIN gexact ex
-       |  LEFT JOIN gannk a ON a.np = gst.np
-       |    AND a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-       |  GROUP BY 1, 2),
-       |ggrid AS (
-       |  SELECT np, round(avg(nhit / CAST(5 AS DOUBLE)), 4) AS recall
-       |  FROM ghits GROUP BY 1),
-       |gcnp AS (SELECT coalesce((SELECT min(np) FROM ggrid WHERE recall >= 0.9),
-       |  (SELECT max(np) FROM ggrid)) AS npv)""".stripMargin
+    s"""${Oracles.vectors},
+       |hist AS ${IvfQueries.bootSlice},
+       |${Oracles.ivfSeeds("", "hist", "16")},
+       |${Oracles.ivfCells("g", "hist", "seeds")},
+       |${Oracles.exactTopK("gexact", "hist", 5)},
+       |${Oracles.ivfFlatSweep("g", "seeds", "gexact", 5, 0.9, Seq(1, 2, 4, 8, 16),
+           None)}""".stripMargin
 }

@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 import graft.streaming.Streaming
@@ -31,8 +31,7 @@ object IvfQueries {
       idx.topK(emb, emb.filter(col("vec_id") < 8),
           k = 5, shortlist = 200, nprobe = 8)
         .orderBy(col("query_id"), col("rank"))
-    }, ivfPqOracle(nlist = 16, nprobe = 8, m = 8,
-      codes = 256, shortlist = 200, k = 5)),
+    }, ivfPqOracle),
 
     // COMPACTION — the read-amplification half of index maintenance
     // (r13; reseed retrains, revalidate retunes, compact reorganizes).
@@ -64,8 +63,7 @@ object IvfQueries {
       // compaction folds dirs, never rows: the probe over the compacted
       // (and retired-source) store must replay identically to the
       // fragment-dir store — same corpus, same oracle
-      ivfPqOracle(nlist = 16, nprobe = 8, m = 8,
-      codes = 256, shortlist = 200, k = 5)),
+      ivfPqOracle),
 
     // Streaming ingest into the PERSISTED IVF-PQ composition (the
     // stream_ivf_ingest twin for the 100 TB ANN shape): bootstrap
@@ -91,8 +89,7 @@ object IvfQueries {
       // streamed appendBatch ≡ batch append: assignment and ADC codes are
       // pure functions of the vector against the frozen seeds/codebooks,
       // so the oracle is the identical end-to-end replay
-      ivfPqOracle(nlist = 16, nprobe = 8, m = 8,
-      codes = 256, shortlist = 200, k = 5)),
+      ivfPqOracle),
 
     // The composition's MAINTENANCE POLICY as a declared query (r11
     // verdict #5, the ivf_reseed twin): drift guard + reseed cutover for
@@ -119,14 +116,7 @@ object IvfQueries {
       val fresh = IndexCache.getOrBuildVersioned(s, s"ivfpq-rs-new|$dir", dir) {
         old.reseedInto(TempDirs.create(s, "graft-ivfpq-rs-new"), emb)
       }
-      old.driftReport(delta, cosineFloor = 0.22, maxFracBelow = 0.25)
-        .select(lit("old").as("phase"), col("n_vectors"), col("n_below"),
-          col("frac_below"), col("reseed_recommended"))
-        .unionByName(
-          fresh.driftReport(delta, cosineFloor = 0.22, maxFracBelow = 0.25)
-            .select(lit("new").as("phase"), col("n_vectors"), col("n_below"),
-              col("frac_below"), col("reseed_recommended")))
-        .orderBy(col("phase"))
+      driftPhases(old, fresh, delta)
     },
       // the IVF-PQ reseed's REPORT is coarse-seed arithmetic only (same
       // seed selection, same best-cosine fold), so the replay is identical
@@ -152,8 +142,8 @@ object IvfQueries {
       idx.revalidateOperatingPoint(emb, emb.filter(col("vec_id") < 8),
           k = 5, recallFloor = 0.9, nprobes = Seq(2, 8), shortlists = Seq(20, 200))
         .orderBy(col("phase"), col("nprobe"), col("shortlist"))
-    }, ivfPqRevalidateOracle(nlist = 16, m = 8,
-      codes = 256, k = 5, floor = 0.9, nps = Seq(2, 8), sls = Seq(20, 200))),
+    }, ivfPqRevalidateOracle(nlist = 16, codes = 256, k = 5, floor = 0.9,
+      nps = Seq(2, 8), sls = Seq(20, 200))),
 
     // r12 made the sweep executable; this closes the LOOP (r13): the
     // whole era-boundary lifecycle — drift guard on the delta,
@@ -205,8 +195,8 @@ object IvfQueries {
     },
       // drift arithmetic + grid choice + commit decision in one row; the
       // replay covers the revalidate branch (see the query's scaladoc)
-      ivfPqMaintainOracle(nlist = 16, m = 8, codes = 256,
-      k = 5, floor = 0.9, cosFloor = 0.22, maxFracBelow = 0.7,
+      ivfPqMaintainOracle(nlist = 16, codes = 256,
+      k = 5, floor = 0.9, maxFracBelow = 0.7,
       nps = Seq(2, 8), sls = Seq(20, 200), cellBudget = 256,
       fragments = 2, compactAbove = 1)),
 
@@ -234,8 +224,8 @@ object IvfQueries {
     },
       // the probe point comes from the replayed grid's scalar CTEs, never
       // a hardcoded constant — mirroring the operator's committed default
-      ivfPqCommittedProbeOracle(nlist = 16, m = 8,
-      codes = 256, k = 5, floor = 0.9, nps = Seq(2, 8), sls = Seq(20, 200))),
+      ivfPqCommittedProbeOracle(nlist = 16, codes = 256, k = 5, floor = 0.9,
+      nps = Seq(2, 8), sls = Seq(20, 200))),
 
     // IVF-style ANN: deterministic seed centroids, map-only argmax-cosine
     // cell assignment, nprobe-cell probing, exact re-rank of candidates.
@@ -244,30 +234,7 @@ object IvfQueries {
       Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 8), 5, nlist = 16, nprobe = 4)
         .orderBy(col("query_id"), col("rank"))
     },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e ORDER BY vec_id LIMIT 16),
-         |scored AS (
-         |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-         |  FROM e CROSS JOIN seeds s),
-         |assign AS (
-         |  SELECT vec_id, v, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM scored) WHERE rnk = 1),
-         |probes AS (
-         |  SELECT vec_id AS query_id, v AS qv, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM scored WHERE vec_id < 8) WHERE rnk <= 4),
-         |cand AS (
-         |  SELECT p.query_id, a.vec_id AS neighbor_id,
-         |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-         |  FROM assign a JOIN probes p ON a.cell_id = p.cell_id AND p.query_id != a.vec_id)
-         |SELECT * FROM (
-         |  SELECT query_id, neighbor_id, cosine,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-         |  FROM cand)
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+      flatProbeOracle("e")),
 
     // The Sizing-derived variant AS a declared query (r6 verdict item 7):
     // nlist comes from corpus.count()/cellBudget — and the ORACLE replays
@@ -283,36 +250,14 @@ object IvfQueries {
       // nlist is DERIVED inside the oracle — greatest(2, least(4096,
       // count/64)) mirrors Sizing.ivfNlist exactly, then gates the seed set
       // and probe fan-out, so a drifted derivation breaks the hash
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |nl AS (SELECT GREATEST(2, LEAST(4096, CAST(count(*) AS BIGINT) // 64)) AS nlist FROM e),
-         |seeds AS (
-         |  SELECT cell_id, cv FROM (
-         |    SELECT vec_id AS cell_id, v AS cv,
-         |      row_number() OVER (ORDER BY vec_id) AS rn FROM e)
-         |  WHERE rn <= (SELECT nlist FROM nl)),
-         |scored AS (
-         |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-         |  FROM e CROSS JOIN seeds s),
-         |assign AS (
-         |  SELECT vec_id, v, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM scored) WHERE rnk = 1),
-         |probes AS (
-         |  SELECT vec_id AS query_id, v AS qv, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM scored WHERE vec_id < 8)
-         |  WHERE rnk <= LEAST(4, (SELECT nlist FROM nl))),
-         |cand AS (
-         |  SELECT p.query_id, a.vec_id AS neighbor_id,
-         |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-         |  FROM assign a JOIN probes p ON a.cell_id = p.cell_id AND p.query_id != a.vec_id)
-         |SELECT * FROM (
-         |  SELECT query_id, neighbor_id, cosine,
-         |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-         |  FROM cand)
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+      s"""WITH ${Oracles.vectors},
+         |nl AS (SELECT GREATEST(2, LEAST(4096, CAST(count(*) AS BIGINT) // 64)) AS nl FROM e),
+         |${Oracles.ivfSeeds("", "e", "(SELECT nl FROM nl)")},
+         |${Oracles.ivfCells("", "e", "seeds")},
+         |${Oracles.ivfFlatProbe("", Oracles.querySample, "seeds", 5, Seq(4), Some("nl"),
+             selfExclude = true)}
+         |SELECT query_id, neighbor_id, cosine, rank FROM ann
+         |ORDER BY query_id, rank""".stripMargin),
 
     // The PERSISTED-index production shape of IVF ANN: run 0 bootstraps
     // frozen centroids + corpus cell assignments as a stored parquet
@@ -334,7 +279,7 @@ object IvfQueries {
       // the BOOTSTRAP corpus (vec_id % 50 != 0) and are frozen across the
       // delta append — the assignment formula itself is unchanged, which is
       // exactly the frozen-centroid invariant the oracle pins
-      ivfIndexedOracle),
+      flatProbeOracle(bootSlice)),
 
     // The committed-operating-point discipline for the FLAT IVF store
     // (r13): the production hybrid's vector arm probes this index, and
@@ -442,8 +387,7 @@ object IvfQueries {
       // the IVF-PQ twin (r15 verdict #2): per-base ADC arithmetic replayed
       // once and expanded — the distributed probe's narrow-cell-join +
       // shuffle-hash ADC attach must be row-identical to the broadcast path
-      ivfPqBatchOracle(nlist = 16, nprobe = 4, m = 8,
-      codes = 256, shortlist = 50, k = 5)),
+      ivfPqBatchOracle),
 
     // CAPACITY-ADAPTIVE MAINTENANCE (r14, closing r13 verdict #2): a
     // frozen nlist makes candidate volume ∝ n/nlist, so once the corpus
@@ -484,7 +428,7 @@ object IvfQueries {
       // signal, the count-derived target nlist, and the post-grow chosen
       // point are all re-derived in SQL — a constant in neither side
       ivfGrowMaintainOracle(oldNlist = 2, k = 5,
-      floor = 0.9, cosFloor = 0.22, maxFracBelow = 1.0,
+      floor = 0.9, maxFracBelow = 1.0,
       nps = Seq(1, 2, 4, 8, 16), cellBudget = 64)),
 
     // The IVF-PQ twin of ivf_maintain_grow (r15, r14 verdict #2's done
@@ -527,8 +471,8 @@ object IvfQueries {
       // all through the same generator the keep-branch oracle uses.
       // fragments = 1: when grow is taken the SERVING lineage is the fresh
       // bootstrap-only root; compactAbove = 0 = compaction off this run
-      ivfPqMaintainOracle(nlist = 2, m = 8,
-      codes = 16, k = 5, floor = 0.9, cosFloor = 0.22, maxFracBelow = 1.0,
+      ivfPqMaintainOracle(nlist = 2, codes = 16,
+      k = 5, floor = 0.9, maxFracBelow = 1.0,
       nps = Seq(1, 2, 4, 8), sls = Seq(20, 200), cellBudget = 64,
       fragments = 1, compactAbove = 0)),
 
@@ -551,7 +495,7 @@ object IvfQueries {
     },
       // the streaming ingest must be indistinguishable from the batch
       // append — one oracle pins both
-      ivfIndexedOracle),
+      flatProbeOracle(bootSlice)),
 
     // The reseed CUTOVER the drift guard's policy prescribes, as a
     // declared query: the old lineage (bootstrapped without the drifted
@@ -575,14 +519,7 @@ object IvfQueries {
       val fresh = IndexCache.getOrBuildVersioned(s, s"ivf-rs-new|$dir", dir) {
         old.reseedInto(TempDirs.create(s, "graft-ivf-rs-new"), emb)
       }
-      old.driftReport(delta, cosineFloor = 0.22, maxFracBelow = 0.25)
-        .select(lit("old").as("phase"), col("n_vectors"), col("n_below"),
-          col("frac_below"), col("reseed_recommended"))
-        .unionByName(
-          fresh.driftReport(delta, cosineFloor = 0.22, maxFracBelow = 0.25)
-            .select(lit("new").as("phase"), col("n_vectors"), col("n_below"),
-              col("frac_below"), col("reseed_recommended")))
-        .orderBy(col("phase"))
+      driftPhases(old, fresh, delta)
     },
       // drift guard replay: same frozen bootstrap seeds as sim_ivf_indexed,
       // best-cell cosine via the shared left-fold arithmetic (identical
@@ -604,20 +541,10 @@ object IvfQueries {
       idx.driftReport(emb.filter(col("vec_id") % 50 === 0),
         cosineFloor = 0.22, maxFracBelow = 0.25)
     },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-         |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT 16),
-         |best AS (
-         |  SELECT d.vec_id, max(${Oracles.cosine("d.v", "s.cv", 64)}) AS best_cos
-         |  FROM (SELECT vec_id, v FROM e WHERE vec_id % 50 = 0) d
-         |  CROSS JOIN seeds s GROUP BY d.vec_id)
-         |SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-         |  CAST(sum(CASE WHEN best_cos < 0.22 THEN 1 ELSE 0 END) AS BIGINT) AS n_below,
-         |  round(CAST(sum(CASE WHEN best_cos < 0.22 THEN 1 ELSE 0 END) AS DOUBLE)
-         |    / count(*), 6) + 0 AS frac_below,
-         |  CAST(sum(CASE WHEN best_cos < 0.22 THEN 1 ELSE 0 END) AS DOUBLE)
-         |    > 0.25 * count(*) AS reseed_recommended
-         |FROM best""".stripMargin),
+      s"""WITH ${Oracles.vectors},
+         |${Oracles.ivfSeeds("", bootSlice, "16")},
+         |delta AS (SELECT vec_id, v FROM e WHERE vec_id % 50 = 0)
+         |${driftReport("seeds")}""".stripMargin),
 
     // The index's probe-cost telemetry: occupied-cell count, stored rows,
     // hottest cell, and skew (max/mean occupied cell) over the SAME
@@ -637,17 +564,9 @@ object IvfQueries {
       // the frozen bootstrap seeds (the invariant sim_ivf_indexed pins), so
       // the oracle assigns the WHOLE corpus in one pass and aggregates
       // per-cell occupancy; integer counts cast to BIGINT for the dtype gate
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-         |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT 16),
-         |scored AS (
-         |  SELECT e.vec_id, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-         |  FROM e CROSS JOIN seeds s),
-         |assign AS (
-         |  SELECT vec_id, cell_id FROM (
-         |    SELECT vec_id, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM scored) WHERE rnk = 1),
+      s"""WITH ${Oracles.vectors},
+         |${Oracles.ivfSeeds("", bootSlice, "16")},
+         |${Oracles.ivfCells("", "e", "seeds")},
          |per AS (SELECT cell_id, count(*) AS sz FROM assign GROUP BY cell_id)
          |SELECT CAST(count(*) AS BIGINT) AS n_cells,
          |  CAST(sum(sz) AS BIGINT) AS n_rows,
@@ -683,189 +602,205 @@ object IvfQueries {
       i
     }
 
-  /** The IVF-PQ replay: coarse cells + PQ codes both trained/seeded on
-    * the bootstrap slice (vec_id % 50 != 0), whole corpus assigned and
-    * encoded (frozen-state purity, the sim_ivf_indexed/sim_pq_indexed
-    * invariant), candidates = probed cells' members only, ADC-scored,
-    * shortlisted, exact-re-ranked.
+  /** Both drift phases of a reseed cutover, one row each: the old
+    * lineage's report on `delta` and the fresh lineage's, at the
+    * declared floor 0.22 and fraction 0.25.
     */
-  private def ivfPqOracle(nlist: Int, nprobe: Int, m: Int, codes: Int,
-                          shortlist: Int, k: Int): String = {
-    val adcSum = VectorQueries.pqAdcSum(m, "p.qv")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |et AS (SELECT vec_id, v FROM e WHERE vec_id % 50 != 0),
-       |${VectorQueries.pqTrainEncodeCtes(m, codes)},
-       |${VectorQueries.pqEncjCte(m)},
-       |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-       |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT $nlist),
-       |cscored AS (
-       |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-       |  FROM e CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, cell_id FROM (
-       |    SELECT vec_id, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM cscored) WHERE rnk = 1),
-       |probes AS (
-       |  SELECT vec_id AS query_id, v AS qv, ${Oracles.l2("v", 64)} AS qnorm,
-       |    cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM cscored WHERE vec_id < 8) WHERE rnk <= $nprobe),
-       |sc AS (
-       |  SELECT p.query_id, r.vec_id AS neighbor_id,
-       |    CASE WHEN p.qnorm * r.rnorm = 0 THEN 0.0
-       |         ELSE $adcSum / (p.qnorm * r.rnorm) END AS qcos
-       |  FROM assign a
-       |  JOIN probes p ON a.cell_id = p.cell_id AND p.query_id != a.vec_id
-       |  JOIN encj r ON r.vec_id = a.vec_id),
-       |sl AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY query_id
-       |        ORDER BY qcos DESC, neighbor_id) AS srank
-       |    FROM sc) WHERE srank <= $shortlist),
-       |rer AS (
-       |  SELECT query_id, neighbor_id, cosine,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM (
-       |    SELECT sl.query_id, sl.neighbor_id,
-       |      round(${Oracles.cosine("qe.v", "ne.v", 64)}, 6) AS cosine
-       |    FROM sl JOIN e ne ON ne.vec_id = sl.neighbor_id
-       |    JOIN e qe ON qe.vec_id = sl.query_id))
-       |SELECT query_id, rank, neighbor_id, cosine
-       |FROM rer WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
+  private def driftPhases(old: graft.sources.FrozenCellIndex[_],
+                          fresh: graft.sources.FrozenCellIndex[_],
+                          delta: DataFrame): DataFrame = {
+    def phase(idx: graft.sources.FrozenCellIndex[_], name: String) =
+      idx.driftReport(delta, cosineFloor = 0.22, maxFracBelow = 0.25)
+        .select(lit(name).as("phase"), col("n_vectors"), col("n_below"),
+          col("frac_below"), col("reseed_recommended"))
+    phase(old, "old").unionByName(phase(fresh, "new")).orderBy(col("phase"))
   }
 
-  /** The CTE chain shared by every oracle that replays the operating-
-    * point sweep ([[ivfPqRevalidateOracle]], the maintain decision, the
-    * committed-point probe): the recall GRID over the IVF-PQ replay
-    * arithmetic (train/assign/encode once, probe per setting), then the
-    * two-phase smallest-clearing choice as scalar CTEs `cnp`/`csl` —
-    * everything after `WITH ` and before the consumer's final SELECT.
-    */
-  private[queries] def ivfPqGridCtes(nlist: Int, m: Int, codes: Int, k: Int,
-                            floor: Double, nps: Seq[Int],
-                            sls: Seq[Int]): String =
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |et AS (SELECT vec_id, v FROM e WHERE vec_id % 50 != 0),
-       |exact AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC,
-       |          c.vec_id) AS rank
-       |    FROM e c JOIN (SELECT * FROM e WHERE vec_id < 8) q
-       |      ON q.vec_id != c.vec_id) WHERE rank <= $k),
-       |${ivfPqGridArm(m, codes, k, floor, nps, sls, pre = "",
-           seedsSql = s"SELECT vec_id AS cell_id, v AS cv FROM e" +
-             s" WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT $nlist",
-           trainCte = "et", npClamp = None)}""".stripMargin
+  /** The bootstrap slice (vec_id % 50 != 0) the frozen lineages seed on. */
+  private[queries] final val bootSlice = "(SELECT vec_id, v FROM e WHERE vec_id % 50 != 0)"
 
-  /** One complete IVF-PQ sweep-grid ARM — seeds → assign → probe → ADC →
-    * shortlist → exact re-rank → recall grid → two-phase smallest-
-    * clearing choice — with every generated CTE name prefixed by `pre`,
-    * so the maintain oracle can replay TWO independently seeded/trained
-    * grids (the serving index's and the grown lineage's, r14 verdict #2)
-    * in one statement. `seedsSql` supplies the coarse seed rows (the
-    * bootstrap-slice LIMIT for the frozen chain; a count-derived dynamic
-    * top-N for the grown one), `trainCte` the codebook training corpus
-    * (`reseedInto` retrains on the FULL corpus), and `npClamp` an
-    * optional CTE name carrying a one-row `nl` column the swept nprobes
-    * fold onto — the operator clamps sweep settings to the frozen seed
-    * count, and the grown arm's capacity is count-derived so its clamp
-    * must be too. Requires `e` and `exact` from the shared block.
+  /** PQ subspaces of every IVF-PQ store the oracles replay. */
+  private final val PqM = 8
+
+  /** The drift guard's counts (FrozenCellIndex.driftReport at cosine
+    * floor 0.22) for the CTE `delta` against `seeds`: each vector's
+    * best-seed cosine, counted below the floor.
     */
-  private def ivfPqGridArm(m: Int, codes: Int, k: Int, floor: Double,
-                           nps: Seq[Int], sls: Seq[Int], pre: String,
-                           seedsSql: String, trainCte: String,
-                           npClamp: Option[String]): String = {
-    // VectorQueries.pqAdcSum addresses codeword lists through the join alias `r`, so
-    // it is prefix-independent
-    val adcSum = VectorQueries.pqAdcSum(m, "p.qv")
-    val maxNp = nps.max
-    val maxSl = sls.max
-    val settings = (for { p <- nps; s <- sls } yield s"($p, $s)").mkString(", ")
-    val stCte = npClamp match {
-      case Some(c) =>
-        s"""${pre}st AS (SELECT DISTINCT least(t.np, $c.nl) AS np, t.slim
-           |  FROM (VALUES $settings) AS t(np, slim), $c)""".stripMargin
-      case None => s"${pre}st AS (SELECT * FROM (VALUES $settings) AS t(np, slim))"
-    }
-    s"""${VectorQueries.pqTrainEncodeCtes(m, codes, pre, trainCte)},
-       |${VectorQueries.pqEncjCte(m, pre)},
-       |${pre}seeds AS ($seedsSql),
-       |${pre}cscored AS (
-       |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-       |  FROM e CROSS JOIN ${pre}seeds s),
-       |${pre}assign AS (
-       |  SELECT vec_id, cell_id FROM (
-       |    SELECT vec_id, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM ${pre}cscored) WHERE rnk = 1),
-       |${pre}probes AS (
-       |  SELECT vec_id AS query_id, v AS qv, ${Oracles.l2("v", 64)} AS qnorm,
-       |    cell_id, rnk AS prnk FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM ${pre}cscored WHERE vec_id < 8) WHERE rnk <= $maxNp),
+  private def driftRow(seeds: String): String =
+    s"""SELECT CAST(count(*) AS BIGINT) AS n_vectors,
+       |  CAST(sum(CASE WHEN best_cos < 0.22 THEN 1 ELSE 0 END) AS BIGINT) AS n_below,
+       |  round(CAST(sum(CASE WHEN best_cos < 0.22 THEN 1 ELSE 0 END) AS DOUBLE)
+       |    / count(*), 6) + 0 AS frac_below
+       |FROM (
+       |  SELECT d.vec_id, max(${Oracles.cosine("d.v", "s.cv", 64)}) AS best_cos
+       |  FROM delta d CROSS JOIN $seeds s GROUP BY d.vec_id)""".stripMargin
+
+  /** [[driftRow]] plus the recommendation at the 0.25 fraction. */
+  private def driftReport(seeds: String): String =
+    s"""SELECT *, CAST(n_below AS DOUBLE) > 0.25 * n_vectors AS reseed_recommended
+       |FROM (${driftRow(seeds)})""".stripMargin
+
+  /** The top-5 flat-IVF probe of the 8-query sample at nprobe 4 over 16
+    * seeds drawn from `pool`: `sim_ivf_topk` seeds on the whole corpus,
+    * the persisted stores on the bootstrap slice. Assignment is a pure
+    * function of the vector against the frozen seeds, so batch and
+    * streamed appends replay alike.
+    */
+  private def flatProbeOracle(pool: String): String =
+    s"""WITH ${Oracles.vectors},
+       |${Oracles.ivfSeeds("", pool, "16")},
+       |${Oracles.ivfCells("", "e", "seeds")},
+       |${Oracles.ivfFlatProbe("", Oracles.querySample, "seeds", 5, Seq(4), None,
+           selfExclude = true)}
+       |SELECT query_id, neighbor_id, cosine, rank FROM ann
+       |ORDER BY query_id, rank""".stripMargin
+
+  /** The final SELECT of the batch-probe oracles: `ann` was ranked once
+    * per base vector (no self-exclusion: query ids live in a disjoint
+    * space) and expands to the replicated ids 1,000,000 + base·21 + rep.
+    * Replicas of one embedding must rank identically, so any per-replica
+    * divergence in the distributed probe path is a hash mismatch.
+    */
+  private lazy val batchReplicas =
+    """SELECT 1000000 + b.query_id * 21 + t.r AS query_id, b.rank, b.neighbor_id,
+      |  b.cosine
+      |FROM ann b CROSS JOIN (SELECT unnest(range(0, 21)) AS r) t
+      |ORDER BY query_id, rank""".stripMargin
+
+  /** Replays `sim_ivf_batch`: the persisted flat store's probe
+    * ([[flatProbeOracle]]'s arithmetic) for every base vector.
+    */
+  private lazy val ivfBatchOracle: String =
+    s"""WITH ${Oracles.vectors},
+       |${Oracles.ivfSeeds("", bootSlice, "16")},
+       |${Oracles.ivfCells("", "e", "seeds")},
+       |${Oracles.ivfFlatProbe("", "e", "seeds", 5, Seq(4), None, selfExclude = false)}
+       |$batchReplicas""".stripMargin
+
+  /** One IVF-PQ lineage probed at every swept (nprobe, shortlist) —
+    * IvfPqIndex.topK: coarse seeds (the `nlist` lowest vec_ids of
+    * `pool`) and codebooks both trained on `pool`, the whole corpus `e`
+    * assigned and encoded (frozen-state purity), each query's probed-cell
+    * members ADC-scored, shortlisted, and exact-re-ranked into `${pre}ann`
+    * (np, slim, query_id, neighbor_id, cosine, rank <= k). `npClamp` as
+    * in [[Oracles.sweepSettings]].
+    */
+  private def ivfPqProbeCtes(pre: String, codes: Int, k: Int, queries: String,
+                             nps: Seq[Int], sls: Seq[Int], pool: String,
+                             nlist: String, npClamp: Option[String],
+                             selfExclude: Boolean): String = {
+    // pqAdcSum addresses codeword lists through the join alias `r`, so it
+    // is prefix-independent
+    val adcSum = VectorQueries.pqAdcSum(PqM, "p.qv")
+    val exclude = if (selfExclude) " AND p.query_id != a.vec_id" else ""
+    val settings = for { p <- nps; s <- sls } yield Seq(p, s)
+    s"""${VectorQueries.pqTrainEncodeCtes(PqM, codes, pre, pool)},
+       |${VectorQueries.pqEncjCte(PqM, pre)},
+       |${Oracles.ivfSeeds(pre, pool, nlist)},
+       |${Oracles.ivfCells(pre, "e", s"${pre}seeds")},
+       |${Oracles.ivfProbes(pre, queries, s"${pre}seeds", nps.max.toString)},
        |${pre}sc AS (
        |  SELECT p.query_id, p.prnk, r.vec_id AS neighbor_id,
        |    CASE WHEN p.qnorm * r.rnorm = 0 THEN 0.0
        |         ELSE $adcSum / (p.qnorm * r.rnorm) END AS qcos
        |  FROM ${pre}assign a
-       |  JOIN ${pre}probes p ON a.cell_id = p.cell_id AND p.query_id != a.vec_id
+       |  JOIN (SELECT *, ${Oracles.l2("qv", 64)} AS qnorm FROM ${pre}probes) p
+       |    ON a.cell_id = p.cell_id$exclude
        |  JOIN ${pre}encj r ON r.vec_id = a.vec_id),
-       |$stCte,
-       |${pre}scs AS (
-       |  SELECT st.np, st.slim, s.query_id, s.neighbor_id,
-       |    row_number() OVER (PARTITION BY st.np, st.slim, s.query_id
-       |      ORDER BY s.qcos DESC, s.neighbor_id) AS srank
-       |  FROM ${pre}st st JOIN ${pre}sc s ON s.prnk <= st.np),
-       |${pre}shl AS (SELECT np, slim, query_id, neighbor_id FROM ${pre}scs
+       |${Oracles.sweepSettings(pre, Seq("np", "slim"), settings, npClamp)},
+       |${pre}shl AS (
+       |  SELECT * FROM (
+       |    SELECT st.np, st.slim, s.query_id, s.neighbor_id,
+       |      row_number() OVER (PARTITION BY st.np, st.slim, s.query_id
+       |        ORDER BY s.qcos DESC, s.neighbor_id) AS srank
+       |    FROM ${pre}st st JOIN ${pre}sc s ON s.prnk <= st.np)
        |  WHERE srank <= slim),
-       |${pre}rer AS (
-       |  SELECT np, slim, query_id, neighbor_id,
-       |    row_number() OVER (PARTITION BY np, slim, query_id
-       |      ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM (
-       |    SELECT x.np, x.slim, x.query_id, x.neighbor_id,
-       |      round(${Oracles.cosine("qe.v", "ne.v", 64)}, 6) AS cosine
-       |    FROM ${pre}shl x JOIN e ne ON ne.vec_id = x.neighbor_id
-       |    JOIN e qe ON qe.vec_id = x.query_id)),
-       |${pre}ann AS (SELECT np, slim, query_id, neighbor_id FROM ${pre}rer
-       |  WHERE rank <= $k),
-       |${pre}hits AS (
-       |  SELECT st.np, st.slim, ex.query_id, count(a.neighbor_id) AS nhit
-       |  FROM ${pre}st st CROSS JOIN exact ex
-       |  LEFT JOIN ${pre}ann a ON a.np = st.np AND a.slim = st.slim
-       |    AND a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-       |  GROUP BY 1, 2, 3),
-       |${pre}grid AS (
-       |  SELECT np, slim, round(avg(nhit / CAST($k AS DOUBLE)), 4) AS recall
-       |  FROM ${pre}hits GROUP BY 1, 2),
-       |${pre}p1 AS (SELECT np, recall FROM ${pre}grid WHERE slim = $maxSl),
-       |${pre}cnp AS (SELECT coalesce(
-       |  (SELECT min(np) FROM ${pre}p1 WHERE recall >= $floor),
-       |  (SELECT max(np) FROM ${pre}p1)) AS v),
+       |${pre}ann AS (
+       |  SELECT * FROM (
+       |    SELECT np, slim, query_id, neighbor_id, cosine,
+       |      row_number() OVER (PARTITION BY np, slim, query_id
+       |        ORDER BY cosine DESC, neighbor_id) AS rank
+       |    FROM (
+       |      SELECT x.np, x.slim, x.query_id, x.neighbor_id,
+       |        round(${Oracles.cosine("qe.v", "ne.v", 64)}, 6) AS cosine
+       |      FROM ${pre}shl x JOIN e ne ON ne.vec_id = x.neighbor_id
+       |      JOIN e qe ON qe.vec_id = x.query_id))
+       |  WHERE rank <= $k)""".stripMargin
+  }
+
+  /** The IVF-PQ replay of `sim_ivfpq_topk` and its compacted and
+    * streamed twins: the store bootstrapped on the slice `et`, probed at
+    * nprobe 8, shortlist 200, top-5.
+    */
+  private lazy val ivfPqOracle: String =
+    s"""WITH ${Oracles.vectors},
+       |et AS $bootSlice,
+       |${ivfPqProbeCtes("", 256, 5, Oracles.querySample, Seq(8), Seq(200), "et", "16", None,
+           selfExclude = true)}
+       |SELECT query_id, rank, neighbor_id, cosine FROM ann
+       |ORDER BY query_id, rank""".stripMargin
+
+  /** Replays `sim_ivfpq_batch`: [[ivfPqOracle]]'s store probed at
+    * nprobe 4, shortlist 50 for every base vector, then expanded.
+    */
+  private lazy val ivfPqBatchOracle: String =
+    s"""WITH ${Oracles.vectors},
+       |et AS $bootSlice,
+       |${ivfPqProbeCtes("", 256, 5, "e", Seq(4), Seq(50), "et", "16", None,
+           selfExclude = false)}
+       |$batchReplicas""".stripMargin
+
+  /** One complete IVF-PQ sweep ARM: [[ivfPqProbeCtes]] over the 8-query
+    * sample, the recall grid against `exact`, and the two-phase choice
+    * (OperatingPoint) — the smallest clearing nprobe at the widest
+    * shortlist (`${pre}cnp`), the smallest clearing shortlist at that
+    * nprobe (`${pre}csl`), whether phase 1 cleared at all (`${pre}p1ok`)
+    * and the chosen grid row (`${pre}chosen`). The maintain oracle
+    * replays TWO arms in one statement: the serving lineage's and the
+    * grown one's (seeds at the count-derived nlist, codebooks retrained
+    * on the full corpus — `reseedInto`'s rule).
+    */
+  private def ivfPqGridArm(pre: String, codes: Int, k: Int, floor: Double,
+                           nps: Seq[Int], sls: Seq[Int], pool: String,
+                           nlist: String, npClamp: Option[String]): String =
+    s"""${ivfPqProbeCtes(pre, codes, k, Oracles.querySample, nps, sls, pool, nlist, npClamp,
+           selfExclude = true)},
+       |${Oracles.recallGrid(pre, Seq("np", "slim"), "exact", k)},
+       |${pre}p1 AS (SELECT np, recall FROM ${pre}grid WHERE slim = ${sls.max}),
+       |${Oracles.smallestClearing(s"${pre}cnp", "np", s"${pre}p1", floor)},
        |${pre}p2 AS (SELECT slim, recall FROM ${pre}grid, ${pre}cnp cnp
        |  WHERE np = cnp.v),
-       |${pre}csl AS (SELECT coalesce(
-       |  (SELECT min(slim) FROM ${pre}p2 WHERE recall >= $floor),
-       |  (SELECT max(slim) FROM ${pre}p2)) AS v),
+       |${Oracles.smallestClearing(s"${pre}csl", "slim", s"${pre}p2", floor)},
        |${pre}p1ok AS (SELECT CAST(max(CASE WHEN recall >= $floor THEN 1 ELSE 0 END)
-       |  AS INTEGER) AS ok FROM ${pre}p1)""".stripMargin
-  }
+       |  AS INTEGER) AS ok FROM ${pre}p1),
+       |${pre}chosen AS (
+       |  SELECT cnp.v AS np, csl.v AS slim, g.recall
+       |  FROM ${pre}cnp cnp CROSS JOIN ${pre}csl csl CROSS JOIN ${pre}grid g
+       |  WHERE g.np = cnp.v AND g.slim = csl.v)""".stripMargin
+
+  /** The CTE chain shared by every oracle that replays the IVF-PQ
+    * operating-point sweep (revalidate, maintain, the committed-point
+    * probes): `e`, the bootstrap slice `et`, the exact ground truth and
+    * the serving lineage's [[ivfPqGridArm]] — everything after `WITH `
+    * and before the consumer's final SELECT. At the committed point
+    * (cnp, csl) the arm's `ann` rows ARE the probe the store serves.
+    */
+  private[queries] def ivfPqGridCtes(nlist: Int, codes: Int, k: Int,
+                                     floor: Double, nps: Seq[Int],
+                                     sls: Seq[Int]): String =
+    s"""${Oracles.vectors},
+       |et AS $bootSlice,
+       |${Oracles.exactTopK("exact", "e", k)},
+       |${ivfPqGridArm("", codes, k, floor, nps, sls, "et", nlist.toString, None)}""".stripMargin
 
   /** Replays [[graft.sources.IvfPqIndex.revalidateOperatingPoint]] — the
     * full grid ([[ivfPqGridCtes]]) emitted as the operator's sweep rows.
     */
-  private def ivfPqRevalidateOracle(nlist: Int, m: Int, codes: Int, k: Int,
+  private def ivfPqRevalidateOracle(nlist: Int, codes: Int, k: Int,
                                     floor: Double, nps: Seq[Int],
                                     sls: Seq[Int]): String = {
     val maxSl = sls.max
-    s"""WITH ${ivfPqGridCtes(nlist, m, codes, k, floor, nps, sls)}
+    s"""WITH ${ivfPqGridCtes(nlist, codes, k, floor, nps, sls)}
        |SELECT phase, nprobe, shortlist, recall, chosen, floor_cleared FROM (
        |  SELECT 'nprobe' AS phase, CAST(np AS INTEGER) AS nprobe,
        |    CAST($maxSl AS INTEGER) AS shortlist, recall,
@@ -883,44 +818,27 @@ object IvfQueries {
 
   /** Replays [[graft.sources.IvfPqIndex.maintain]]'s one-row decision:
     * the drift fraction of the delta against the frozen bootstrap seeds
-    * (the guard's arithmetic — [[ivfReseedOracle]]'s `old` phase), the
-    * action it implies at `maxFracBelow`, the serving grid's two-phase
-    * choice from [[ivfPqGridCtes]] — and (r15, closing r14 verdict #2)
-    * the FULL GROW ARM: a second grid ([[ivfPqGridArm]] prefix `n`)
-    * re-seeded at the count-derived nlist and re-trained on the FULL
-    * corpus replays the post-grow sweep (ADC included), so the replay is
-    * exact on BOTH capacity branches at any corpus size. The r14 version
-    * emitted the pre-grow grid unconditionally and was exact only under
-    * cellBudget·nlist vectors — past that a CORRECT grow decision
-    * flipped the hard gate red. The drift-reseed branch stays
+    * ([[driftRow]]), the action it implies at `maxFracBelow`, the
+    * serving grid's two-phase choice from [[ivfPqGridCtes]] — and the
+    * FULL GROW ARM: a second grid ([[ivfPqGridArm]] prefix `n`) re-seeded
+    * at the count-derived nlist and re-trained on the FULL corpus replays
+    * the post-grow sweep (ADC included), so the replay is exact on BOTH
+    * capacity branches at any corpus size. The drift-reseed branch stays
     * spec-pinned (IvfPqIndexSpec, shifted delta); a fixture drifting
     * past the threshold — or declared without a reseedDir (`grow_due`)
     * — mismatches loudly on the action column, the safe direction.
     */
-  private def ivfPqMaintainOracle(nlist: Int, m: Int, codes: Int, k: Int,
-                                  floor: Double, cosFloor: Double,
-                                  maxFracBelow: Double, nps: Seq[Int],
-                                  sls: Seq[Int], cellBudget: Int,
+  private def ivfPqMaintainOracle(nlist: Int, codes: Int, k: Int,
+                                  floor: Double, maxFracBelow: Double,
+                                  nps: Seq[Int], sls: Seq[Int], cellBudget: Int,
                                   fragments: Int, compactAbove: Int): String = {
     // the operator clamps sweep settings to the frozen seed count — the
     // base arm's capacity is the static nlist, so clamp in Scala; the
     // grown arm's is count-derived, so it clamps in SQL (npClamp)
     val baseNps = nps.map(math.min(_, nlist)).distinct.sorted
-    s"""WITH ${ivfPqGridCtes(nlist, m, codes, k, floor, baseNps, sls)},
+    s"""WITH ${ivfPqGridCtes(nlist, codes, k, floor, baseNps, sls)},
        |delta AS (SELECT vec_id, v FROM e WHERE vec_id % 50 = 0),
-       |drift AS (
-       |  SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-       |    CAST(sum(CASE WHEN best_cos < $cosFloor THEN 1 ELSE 0 END) AS BIGINT)
-       |      AS n_below,
-       |    round(CAST(sum(CASE WHEN best_cos < $cosFloor THEN 1 ELSE 0 END)
-       |      AS DOUBLE) / count(*), 6) + 0 AS frac_below
-       |  FROM (
-       |    SELECT d.vec_id, max(${Oracles.cosine("d.v", "s.cv", 64)}) AS best_cos
-       |    FROM delta d CROSS JOIN seeds s GROUP BY d.vec_id)),
-       |chosen AS (
-       |  SELECT cnp.v AS np, csl.v AS slim, g.recall
-       |  FROM cnp CROSS JOIN csl CROSS JOIN grid g
-       |  WHERE g.np = cnp.v AND g.slim = csl.v),
+       |drift AS (${driftRow("seeds")}),
        |-- the corpus-tracking nlist (Sizing.ivfNlist replayed from the
        |-- corpus count: clamp(n / cellBudget, 2, 4096)) and the CAPACITY
        |-- signal (the sweep cleared only at the full coarse scan, or not
@@ -932,17 +850,9 @@ object IvfQueries {
        |-- the GROW ARM: seeds = the derived number of lowest vec_ids of
        |-- the FULL corpus (reseedInto/bootstrap's rule), codebooks
        |-- re-trained on the full corpus, sweep settings clamped to the
-       |-- count-derived capacity — identical arithmetic to the serving
-       |-- arm via the shared generator, only the lineage differs
-       |${ivfPqGridArm(m, codes, k, floor, nps, sls, pre = "n",
-           seedsSql = "SELECT vec_id AS cell_id, v AS cv FROM" +
-             " (SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn" +
-             " FROM e), nlg WHERE rn <= nlg.nl",
-           trainCte = "e", npClamp = Some("nlg"))},
-       |nchosen AS (
-       |  SELECT cnp.v AS np, csl.v AS slim, g.recall
-       |  FROM ncnp cnp CROSS JOIN ncsl csl CROSS JOIN ngrid g
-       |  WHERE g.np = cnp.v AND g.slim = csl.v)
+       |-- count-derived capacity
+       |${ivfPqGridArm("n", codes, k, floor, nps, sls, "e", "(SELECT nl FROM nlg)",
+           Some("nlg"))}
        |SELECT
        |  CASE WHEN d.n_below > $maxFracBelow * d.n_vectors THEN 'reseed'
        |       WHEN dec.grow THEN 'grow'
@@ -962,10 +872,9 @@ object IvfQueries {
        |  CASE WHEN dec.grow THEN nc.recall ELSE c.recall END >= $floor
        |    AS committed,
        |  -- compaction decision replay: the query-private fixture store is
-       |  -- rebuilt per execution (r14 ADVICE #3), so its committed view
-       |  -- spans exactly $fragments dirs (bootstrap + appends) every run
-       |  -- — due iff compaction is enabled and over threshold, a pure
-       |  -- function of the fixture now
+       |  -- rebuilt per execution, so its committed view spans exactly
+       |  -- $fragments dirs (bootstrap + appends) every run — due iff
+       |  -- compaction is enabled and over threshold
        |  CAST(($compactAbove > 0) AND ($fragments > $compactAbove)
        |    AS BOOLEAN) AS compacted
        |FROM drift d, chosen c, nchosen nc, nlg, cap, dec""".stripMargin
@@ -973,405 +882,97 @@ object IvfQueries {
 
   /** Replays a probe of [[graft.sources.IvfPqIndex.topK]] at the
     * COMMITTED operating point: the grid choice CTEs derive (cnp, csl)
-    * and the probe consumes them as scalar subqueries — the oracle never
+    * and the probe is the arm's `ann` at that setting — the oracle never
     * hardcodes the point, exactly as the operator no longer does.
     */
-  private def ivfPqCommittedProbeOracle(nlist: Int, m: Int, codes: Int,
-                                        k: Int, floor: Double, nps: Seq[Int],
+  private def ivfPqCommittedProbeOracle(nlist: Int, codes: Int, k: Int,
+                                        floor: Double, nps: Seq[Int],
                                         sls: Seq[Int]): String =
-    s"""WITH ${ivfPqGridCtes(nlist, m, codes, k, floor, nps, sls)},
-       |pf AS (
-       |  SELECT s.query_id, s.neighbor_id, s.qcos
-       |  FROM sc s, cnp WHERE s.prnk <= cnp.v),
-       |slc AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY query_id
-       |        ORDER BY qcos DESC, neighbor_id) AS srank
-       |    FROM pf), csl WHERE srank <= csl.v),
-       |rerc AS (
-       |  SELECT query_id, neighbor_id, cosine,
-       |    row_number() OVER (PARTITION BY query_id
-       |      ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM (
-       |    SELECT x.query_id, x.neighbor_id,
-       |      round(${Oracles.cosine("qe.v", "ne.v", 64)}, 6) AS cosine
-       |    FROM slc x JOIN e ne ON ne.vec_id = x.neighbor_id
-       |    JOIN e qe ON qe.vec_id = x.query_id))
+    s"""WITH ${ivfPqGridCtes(nlist, codes, k, floor, nps, sls)}
        |SELECT query_id, rank, neighbor_id, cosine
-       |FROM rerc WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
+       |FROM ann, cnp, csl WHERE ann.np = cnp.v AND ann.slim = csl.v
+       |ORDER BY query_id, rank""".stripMargin
 
   /** Shared replay for ivf_reseed and ivfpq_reseed: drift report over
     * the old (bootstrap-only) seeds vs the re-seeded (full-corpus)
     * seeds — the report never touches codes, so one SQL serves both
     * index families.
     */
-  private lazy val ivfReseedOracle: String = {
-    def report(seedCte: String, phase: String) =
-      s"""SELECT '$phase' AS phase, CAST(count(*) AS BIGINT) AS n_vectors,
-         |  CAST(sum(CASE WHEN best_cos < 0.22 THEN 1 ELSE 0 END) AS BIGINT) AS n_below,
-         |  round(CAST(sum(CASE WHEN best_cos < 0.22 THEN 1 ELSE 0 END) AS DOUBLE)
-         |    / count(*), 6) + 0 AS frac_below,
-         |  CAST(sum(CASE WHEN best_cos < 0.22 THEN 1 ELSE 0 END) AS DOUBLE)
-         |    > 0.25 * count(*) AS reseed_recommended
-         |FROM (
-         |  SELECT d.vec_id, max(${Oracles.cosine("d.v", "s.cv", 64)}) AS best_cos
-         |  FROM d CROSS JOIN $seedCte s GROUP BY d.vec_id)""".stripMargin
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |oseeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-       |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT 16),
-       |nseeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-       |  ORDER BY vec_id LIMIT 16),
-       |d AS (SELECT vec_id, v FROM e WHERE vec_id % 50 = 0)
-       |${report("oseeds", "old")}
+  private lazy val ivfReseedOracle: String =
+    s"""WITH ${Oracles.vectors},
+       |${Oracles.ivfSeeds("o", bootSlice, "16")},
+       |${Oracles.ivfSeeds("n", "e", "16")},
+       |delta AS (SELECT vec_id, v FROM e WHERE vec_id % 50 = 0)
+       |SELECT 'old' AS phase, * FROM (${driftReport("oseeds")})
        |UNION ALL
-       |${report("nseeds", "new")}
+       |SELECT 'new', * FROM (${driftReport("nseeds")})
        |ORDER BY phase""".stripMargin
-  }
-
-  /** The IVF indexed-probe replay, shared by `sim_ivf_indexed` (batch
-    * append) and `stream_ivf_ingest` (exactly-once streaming append):
-    * assignment is a pure function of the vector against the frozen
-    * bootstrap seeds, so both ingest paths must produce this result.
-    */
-  private lazy val ivfIndexedOracle: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-       |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT 16),
-       |scored AS (
-       |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-       |  FROM e CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, v, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM scored) WHERE rnk = 1),
-       |probes AS (
-       |  SELECT vec_id AS query_id, v AS qv, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM scored WHERE vec_id < 8) WHERE rnk <= 4),
-       |cand AS (
-       |  SELECT p.query_id, a.vec_id AS neighbor_id,
-       |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-       |  FROM assign a JOIN probes p ON a.cell_id = p.cell_id AND p.query_id != a.vec_id)
-       |SELECT * FROM (
-       |  SELECT query_id, neighbor_id, cosine,
-       |    row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM cand)
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-
-  /** Replays `sim_ivf_batch`: [[ivfIndexedOracle]]'s persisted-IVF probe
-    * arithmetic computed ONCE per base corpus vector, then expanded to
-    * the replicated query-id space. Replicas of the same embedding MUST
-    * rank identically — the property that makes the expansion valid, and
-    * that turns any per-replica divergence in the operator's distributed
-    * probe path (a dropped candidate, a probe/IN-filter disagreement)
-    * into a hash mismatch. Query ids live in a disjoint space
-    * (1,000,000 + base*21 + rep), so no self-exclusion applies on either
-    * side.
-    */
-  private lazy val ivfBatchOracle: String =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-       |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT 16),
-       |scored AS (
-       |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-       |  FROM e CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, v, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM scored) WHERE rnk = 1),
-       |probes AS (
-       |  SELECT vec_id AS qbase, v AS qv, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM scored) WHERE rnk <= 4),
-       |based AS (
-       |  SELECT qbase, neighbor_id, cosine,
-       |    row_number() OVER (PARTITION BY qbase
-       |      ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM (
-       |    SELECT p.qbase, a.vec_id AS neighbor_id,
-       |      round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-       |    FROM assign a JOIN probes p ON a.cell_id = p.cell_id)),
-       |reps AS (SELECT unnest(range(0, 21)) AS r)
-       |SELECT 1000000 + b.qbase * 21 + t.r AS query_id, b.rank, b.neighbor_id,
-       |  b.cosine
-       |FROM based b CROSS JOIN reps t WHERE b.rank <= 5
-       |ORDER BY query_id, rank""".stripMargin
-
-  /** Replays `sim_ivfpq_batch`: [[ivfPqOracle]]'s persisted-composition
-    * arithmetic — coarse seeds + PQ codebooks trained on the bootstrap
-    * slice, whole corpus assigned and encoded, probed cells' members
-    * ADC-scored, shortlisted, exact-re-ranked — computed ONCE per base
-    * corpus vector, then expanded to the replicated query-id space
-    * ([[ivfBatchOracle]]'s construction). No self-exclusion on either
-    * side: query ids live at 1,000,000 + base·21 + rep, disjoint from
-    * every corpus vec_id, so the operator's query_id != vec_id filter is
-    * a no-op by construction and the base vector may rank itself.
-    */
-  private def ivfPqBatchOracle(nlist: Int, nprobe: Int, m: Int, codes: Int,
-                               shortlist: Int, k: Int): String = {
-    val adcSum = VectorQueries.pqAdcSum(m, "p.qv")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |et AS (SELECT vec_id, v FROM e WHERE vec_id % 50 != 0),
-       |${VectorQueries.pqTrainEncodeCtes(m, codes)},
-       |${VectorQueries.pqEncjCte(m)},
-       |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-       |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT $nlist),
-       |cscored AS (
-       |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-       |  FROM e CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, cell_id FROM (
-       |    SELECT vec_id, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM cscored) WHERE rnk = 1),
-       |probes AS (
-       |  SELECT vec_id AS qbase, v AS qv, ${Oracles.l2("v", 64)} AS qnorm,
-       |    cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM cscored) WHERE rnk <= $nprobe),
-       |sc AS (
-       |  SELECT p.qbase, r.vec_id AS neighbor_id,
-       |    CASE WHEN p.qnorm * r.rnorm = 0 THEN 0.0
-       |         ELSE $adcSum / (p.qnorm * r.rnorm) END AS qcos
-       |  FROM assign a
-       |  JOIN probes p ON a.cell_id = p.cell_id
-       |  JOIN encj r ON r.vec_id = a.vec_id),
-       |sl AS (
-       |  SELECT qbase, neighbor_id FROM (
-       |    SELECT qbase, neighbor_id,
-       |      row_number() OVER (PARTITION BY qbase
-       |        ORDER BY qcos DESC, neighbor_id) AS srank
-       |    FROM sc) WHERE srank <= $shortlist),
-       |based AS (
-       |  SELECT qbase, neighbor_id, cosine,
-       |    row_number() OVER (PARTITION BY qbase
-       |      ORDER BY cosine DESC, neighbor_id) AS rank
-       |  FROM (
-       |    SELECT sl.qbase, sl.neighbor_id,
-       |      round(${Oracles.cosine("qe.v", "ne.v", 64)}, 6) AS cosine
-       |    FROM sl JOIN e ne ON ne.vec_id = sl.neighbor_id
-       |    JOIN e qe ON qe.vec_id = sl.qbase)),
-       |reps AS (SELECT unnest(range(0, 21)) AS r)
-       |SELECT 1000000 + b.qbase * 21 + t.r AS query_id, b.rank, b.neighbor_id,
-       |  b.cosine
-       |FROM based b CROSS JOIN reps t WHERE b.rank <= $k
-       |ORDER BY query_id, rank""".stripMargin
-  }
 
   /** Replays `sim_ivf_committed`: the flat-IVF sweep grid (recall@k per
     * nprobe vs the exact scan, reported 4 digits), the smallest-clearing
     * choice as the scalar CTE `cnp`, and the probe AT that derived
-    * nprobe — [[ivfIndexedOracle]]'s arithmetic with the probe width
+    * nprobe — [[flatProbeOracle]]'s arithmetic with the probe width
     * coming from the replayed sweep instead of a constant.
     */
   private def ivfCommittedProbeOracle(nlist: Int, k: Int, floor: Double,
-                                      nps: Seq[Int]): String = {
-    val maxNp = nps.max
-    val settings = nps.map(p => s"($p)").mkString(", ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-       |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT $nlist),
-       |scored AS (
-       |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-       |  FROM e CROSS JOIN seeds s),
-       |assign AS (
-       |  SELECT vec_id, v, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM scored) WHERE rnk = 1),
-       |probes AS (
-       |  SELECT vec_id AS query_id, v AS qv, cell_id, rnk AS prnk FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM scored WHERE vec_id < 8) WHERE rnk <= $maxNp),
-       |st AS (SELECT * FROM (VALUES $settings) AS t(np)),
-       |cand AS (
-       |  SELECT st.np, p.query_id, a.vec_id AS neighbor_id,
-       |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-       |  FROM st JOIN probes p ON p.prnk <= st.np
-       |  JOIN assign a ON a.cell_id = p.cell_id AND p.query_id != a.vec_id),
-       |annk AS (
-       |  SELECT np, query_id, neighbor_id, cosine, rank FROM (
-       |    SELECT np, query_id, neighbor_id, cosine,
-       |      row_number() OVER (PARTITION BY np, query_id
-       |        ORDER BY cosine DESC, neighbor_id) AS rank
-       |    FROM cand) WHERE rank <= $k),
-       |exact AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC,
-       |          c.vec_id) AS rank
-       |    FROM e c JOIN (SELECT * FROM e WHERE vec_id < 8) q
-       |      ON q.vec_id != c.vec_id) WHERE rank <= $k),
-       |hits AS (
-       |  SELECT st.np, ex.query_id, count(a.neighbor_id) AS nhit
-       |  FROM st CROSS JOIN exact ex
-       |  LEFT JOIN annk a ON a.np = st.np
-       |    AND a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-       |  GROUP BY 1, 2),
-       |grid AS (
-       |  SELECT np, round(avg(nhit / CAST($k AS DOUBLE)), 4) AS recall
-       |  FROM hits GROUP BY 1),
-       |cnp AS (SELECT coalesce((SELECT min(np) FROM grid WHERE recall >= $floor),
-       |  (SELECT max(np) FROM grid)) AS v)
+                                      nps: Seq[Int]): String =
+    s"""WITH ${Oracles.vectors},
+       |${Oracles.ivfSeeds("", bootSlice, nlist.toString)},
+       |${Oracles.ivfCells("", "e", "seeds")},
+       |${Oracles.exactTopK("exact", "e", k)},
+       |${Oracles.ivfFlatSweep("", "seeds", "exact", k, floor, nps, None)}
        |SELECT query_id, rank, neighbor_id, cosine
-       |FROM annk, cnp WHERE annk.np = cnp.v ORDER BY query_id, rank""".stripMargin
-  }
+       |FROM ann, cnp WHERE ann.np = cnp.v ORDER BY query_id, rank""".stripMargin
 
   /** Replays `ivf_maintain_grow` — the CAPACITY-adaptive maintenance run
-    * (r13 verdict #2) end to end, every decision re-derived in SQL:
-    * (1) the drift report over the undersized index's frozen seeds (the
-    * guard stays quiet at maxFracBelow=1.0 — the point is that capacity
-    * fires WITHOUT drift); (2) the nprobe sweep grid on the OLD
-    * `oldNlist`-cell index and the capacity signal — the floor clears
-    * only at nprobe == nlist (a full coarse scan) or not at all; (3) the
-    * corpus-tracking target nlist, Sizing.ivfNlist replayed as
-    * clamp(count / cellBudget, 2, 4096) — a CONSTANT in neither the
-    * operator nor this SQL; (4) the re-sweep on the GROWN index (seeds =
-    * the derived number of lowest vec_ids of the full corpus, the
-    * reseedInto/bootstrap rule) with the same sweep list clamped to the
-    * new capacity; (5) the one-row report with the grown nlist, the
-    * post-grow chosen nprobe (< nlist — the committed point is a real
-    * pruned probe again, not the institutionalized full scan the r13 10×
-    * rehearsal shipped) and its recall. Both grids are emitted through
-    * identical arithmetic so a store that grew to a different capacity,
-    * swept a different grid, or committed a different point than its own
-    * decision rule hash-mismatches here.
+    * end to end, every decision re-derived in SQL: (1) the drift report
+    * over the undersized index's frozen seeds (the guard stays quiet at
+    * maxFracBelow=1.0 — the point is that capacity fires WITHOUT drift);
+    * (2) the nprobe sweep grid on the OLD `oldNlist`-cell index and the
+    * capacity signal — the floor clears only at nprobe == nlist (a full
+    * coarse scan) or not at all; (3) the corpus-tracking target nlist,
+    * Sizing.ivfNlist replayed as clamp(count / cellBudget, 2, 4096) — a
+    * CONSTANT in neither the operator nor this SQL; (4) the re-sweep on
+    * the GROWN index (seeds = the derived number of lowest vec_ids of the
+    * full corpus, the reseedInto/bootstrap rule) with the same sweep list
+    * clamped to the new capacity; (5) the one-row report with the grown
+    * nlist, the post-grow chosen nprobe (< nlist — the committed point is
+    * a real pruned probe again) and its recall. Both grids go through
+    * [[Oracles.ivfFlatSweep]], so a store that grew to a different
+    * capacity, swept a different grid, or committed a different point
+    * than its own decision rule hash-mismatches here.
     */
   private def ivfGrowMaintainOracle(oldNlist: Int, k: Int, floor: Double,
-                                    cosFloor: Double, maxFracBelow: Double,
-                                    nps: Seq[Int], cellBudget: Int): String = {
-    val oldSettings = nps.map(math.min(_, oldNlist)).distinct.sorted
-      .map(p => s"($p)").mkString(", ")
-    val rawSettings = nps.map(p => s"($p)").mkString(", ")
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |boot AS (SELECT vec_id, v FROM e WHERE vec_id % 50 != 0),
+                                    maxFracBelow: Double, nps: Seq[Int],
+                                    cellBudget: Int): String = {
+    val oldNps = nps.map(math.min(_, oldNlist)).distinct.sorted
+    def recallAt(pre: String) = s"(SELECT recall FROM ${pre}grid, ${pre}cnp WHERE np = ${pre}cnp.v)"
+    val recall = s"CASE WHEN dec.grow THEN ${recallAt("n")} ELSE ${recallAt("o")} END"
+    s"""WITH ${Oracles.vectors},
        |delta AS (SELECT vec_id, v FROM e WHERE vec_id % 50 = 0),
-       |oseeds AS (SELECT vec_id AS cell_id, v AS cv FROM boot
-       |  ORDER BY vec_id LIMIT $oldNlist),
-       |drift AS (
-       |  SELECT CAST(count(*) AS BIGINT) AS n_vectors,
-       |    CAST(sum(CASE WHEN best_cos < $cosFloor THEN 1 ELSE 0 END) AS BIGINT)
-       |      AS n_below,
-       |    round(CAST(sum(CASE WHEN best_cos < $cosFloor THEN 1 ELSE 0 END)
-       |      AS DOUBLE) / count(*), 6) + 0 AS frac_below
-       |  FROM (
-       |    SELECT d.vec_id, max(${Oracles.cosine("d.v", "s.cv", 64)}) AS best_cos
-       |    FROM delta d CROSS JOIN oseeds s GROUP BY d.vec_id)),
-       |exact AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.vec_id
-       |        ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC,
-       |          c.vec_id) AS rank
-       |    FROM e c JOIN (SELECT * FROM e WHERE vec_id < 8) q
-       |      ON q.vec_id != c.vec_id) WHERE rank <= $k),
-       |oscored AS (
-       |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-       |  FROM e CROSS JOIN oseeds s),
-       |oassign AS (
-       |  SELECT vec_id, v, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM oscored) WHERE rnk = 1),
-       |oprobes AS (
-       |  SELECT vec_id AS query_id, v AS qv, cell_id, rnk AS prnk FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM oscored WHERE vec_id < 8) WHERE rnk <= $oldNlist),
-       |ost AS (SELECT * FROM (VALUES $oldSettings) AS t(np)),
-       |ocand AS (
-       |  SELECT ost.np, p.query_id, a.vec_id AS neighbor_id,
-       |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-       |  FROM ost JOIN oprobes p ON p.prnk <= ost.np
-       |  JOIN oassign a ON a.cell_id = p.cell_id AND p.query_id != a.vec_id),
-       |oannk AS (
-       |  SELECT np, query_id, neighbor_id FROM (
-       |    SELECT np, query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY np, query_id
-       |        ORDER BY cosine DESC, neighbor_id) AS rank
-       |    FROM ocand) WHERE rank <= $k),
-       |ohits AS (
-       |  SELECT ost.np, ex.query_id, count(a.neighbor_id) AS nhit
-       |  FROM ost CROSS JOIN exact ex
-       |  LEFT JOIN oannk a ON a.np = ost.np
-       |    AND a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-       |  GROUP BY 1, 2),
-       |ogrid AS (
-       |  SELECT np, round(avg(nhit / CAST($k AS DOUBLE)), 4) AS recall
-       |  FROM ohits GROUP BY 1),
-       |ocnp AS (SELECT coalesce((SELECT min(np) FROM ogrid WHERE recall >= $floor),
-       |  (SELECT max(np) FROM ogrid)) AS v),
+       |${Oracles.ivfSeeds("o", bootSlice, oldNlist.toString)},
+       |drift AS (${driftRow("oseeds")}),
+       |${Oracles.exactTopK("exact", "e", k)},
+       |${Oracles.ivfCells("o", "e", "oseeds")},
+       |${Oracles.ivfFlatSweep("o", "oseeds", "exact", k, floor, oldNps, None)},
        |ook AS (SELECT CAST(max(CASE WHEN recall >= $floor THEN 1 ELSE 0 END)
        |  AS INTEGER) AS ok FROM ogrid),
        |nlg AS (SELECT CAST(greatest(2, least(4096, count(*) // $cellBudget))
        |  AS INTEGER) AS nl FROM e),
        |cap AS (SELECT (ook.ok = 0 OR ocnp.v >= $oldNlist) AS x FROM ook, ocnp),
        |dec AS (SELECT (cap.x AND nlg.nl > $oldNlist) AS grow FROM cap, nlg),
-       |nseeds AS (
-       |  SELECT vec_id AS cell_id, v AS cv FROM (
-       |    SELECT vec_id, v, row_number() OVER (ORDER BY vec_id) AS rn FROM e), nlg
-       |  WHERE rn <= nlg.nl),
-       |nscored AS (
-       |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-       |  FROM e CROSS JOIN nseeds s),
-       |nassign AS (
-       |  SELECT vec_id, v, cell_id FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM nscored) WHERE rnk = 1),
-       |nst AS (SELECT DISTINCT least(t.np, nlg.nl) AS np
-       |  FROM (VALUES $rawSettings) AS t(np), nlg),
-       |npro AS (
-       |  SELECT vec_id AS query_id, v AS qv, cell_id, rnk AS prnk FROM (
-       |    SELECT vec_id, v, cell_id,
-       |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-       |    FROM nscored WHERE vec_id < 8)
-       |  WHERE rnk <= (SELECT max(np) FROM nst)),
-       |ncand AS (
-       |  SELECT nst.np, p.query_id, a.vec_id AS neighbor_id,
-       |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-       |  FROM nst JOIN npro p ON p.prnk <= nst.np
-       |  JOIN nassign a ON a.cell_id = p.cell_id AND p.query_id != a.vec_id),
-       |nannk AS (
-       |  SELECT np, query_id, neighbor_id FROM (
-       |    SELECT np, query_id, neighbor_id,
-       |      row_number() OVER (PARTITION BY np, query_id
-       |        ORDER BY cosine DESC, neighbor_id) AS rank
-       |    FROM ncand) WHERE rank <= $k),
-       |nhits AS (
-       |  SELECT nst.np, ex.query_id, count(a.neighbor_id) AS nhit
-       |  FROM nst CROSS JOIN exact ex
-       |  LEFT JOIN nannk a ON a.np = nst.np
-       |    AND a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-       |  GROUP BY 1, 2),
-       |ngrid AS (
-       |  SELECT np, round(avg(nhit / CAST($k AS DOUBLE)), 4) AS recall
-       |  FROM nhits GROUP BY 1),
-       |ncnp AS (SELECT coalesce((SELECT min(np) FROM ngrid WHERE recall >= $floor),
-       |  (SELECT max(np) FROM ngrid)) AS v)
+       |${Oracles.ivfSeeds("n", "e", "(SELECT nl FROM nlg)")},
+       |${Oracles.ivfCells("n", "e", "nseeds")},
+       |${Oracles.ivfFlatSweep("n", "nseeds", "exact", k, floor, nps, Some("nlg"))}
        |SELECT
        |  CASE WHEN d.n_below > $maxFracBelow * d.n_vectors THEN 'reseed'
        |       WHEN dec.grow THEN 'grow' ELSE 'revalidate' END AS action,
        |  d.n_vectors, d.n_below, d.frac_below,
        |  CAST(CASE WHEN dec.grow THEN nlg.nl ELSE $oldNlist END AS INTEGER) AS nlist,
        |  CAST(CASE WHEN dec.grow THEN ncnp.v ELSE ocnp.v END AS INTEGER) AS nprobe,
-       |  CASE WHEN dec.grow THEN (SELECT recall FROM ngrid, ncnp WHERE np = ncnp.v)
-       |       ELSE (SELECT recall FROM ogrid, ocnp WHERE np = ocnp.v)
-       |  END AS recall,
-       |  CASE WHEN dec.grow THEN (SELECT recall FROM ngrid, ncnp WHERE np = ncnp.v)
-       |       ELSE (SELECT recall FROM ogrid, ocnp WHERE np = ocnp.v)
-       |  END >= $floor AS floor_cleared,
-       |  CASE WHEN dec.grow THEN (SELECT recall FROM ngrid, ncnp WHERE np = ncnp.v)
-       |       ELSE (SELECT recall FROM ogrid, ocnp WHERE np = ocnp.v)
-       |  END >= $floor AS committed,
+       |  $recall AS recall,
+       |  $recall >= $floor AS floor_cleared,
+       |  $recall >= $floor AS committed,
        |  CAST(false AS BOOLEAN) AS compacted
        |FROM drift d, dec, nlg, ocnp, ncnp""".stripMargin
   }

@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.Multimodal
 
@@ -140,10 +140,7 @@ object LayoutQueries {
         .groupBy((col("k") % 10).as("k_bucket"))
         .agg(count(lit(1)).as("n"), min(col("k")).as("min_k"), max(col("k")).as("max_k"))
         .orderBy(col("k_bucket")),
-      """WITH e AS (
-        |  SELECT CAST(json_extract_string(props, '$.k') AS INT) AS k FROM events)
-        |SELECT k % 10 AS k_bucket, count(*) AS n, min(k) AS min_k, max(k) AS max_k
-        |FROM e GROUP BY 1 ORDER BY k_bucket""".stripMargin),
+      propsKOracle),
 
     // The same extraction through Spark 4's VARIANT type: parse once into
     // the binary semi-structured encoding, path-extract with variant_get
@@ -161,10 +158,7 @@ object LayoutQueries {
         .groupBy((col("k") % 10).as("k_bucket"))
         .agg(count(lit(1)).as("n"), min(col("k")).as("min_k"), max(col("k")).as("max_k"))
         .orderBy(col("k_bucket")),
-      """WITH e AS (
-        |  SELECT CAST(json_extract_string(props, '$.k') AS INT) AS k FROM events)
-        |SELECT k % 10 AS k_bucket, count(*) AS n, min(k) AS min_k, max(k) AS max_k
-        |FROM e GROUP BY 1 ORDER BY k_bucket""".stripMargin),
+      propsKOracle),
 
     // Bad-record routing: parse with a schema, aggregate the valid rows,
     // quarantine the rest with a count (k_bucket = -1) — corrupt input
@@ -218,12 +212,9 @@ object LayoutQueries {
       s.read.option("header", "true")
         .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE")
         .csv(tmp)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-        .orderBy(col("event_type"))
+        .transform(typeTotals())
     },
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+      typeTotalsOracle("", "")),
 
     // Spark 4's built-in XML source, same lossless-roundtrip contract as
     // the CSV/JSON/ORC twins: write with a rowTag, read back with an
@@ -237,12 +228,9 @@ object LayoutQueries {
       s.read.option("rowTag", "event")
         .schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE")
         .format("xml").load(tmp)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-        .orderBy(col("event_type"))
+        .transform(typeTotals())
     },
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+      typeTotalsOracle("", "")),
 
     // Small-file compaction: 64 trickle-ingested shards rewritten into 2
     // range-clustered, size-targeted files; row count and value checksum
@@ -374,12 +362,9 @@ object LayoutQueries {
         .write.mode("overwrite").json(tmp)
       s.read.schema("event_id LONG, user_id LONG, event_type STRING, value DOUBLE")
         .json(tmp)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-        .orderBy(col("event_type"))
+        .transform(typeTotals())
     },
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+      typeTotalsOracle("", "")),
 
     // Bucketed co-located join: both sides written bucketed+sorted on the
     // join key, so the fact-fact join reads co-located buckets (the
@@ -414,16 +399,11 @@ object LayoutQueries {
         tmp, 8, 500000L, 4, col("user_id"), col("value"))
       s.read.parquet(tmp)
         .where(col("user_id").between(10, 30) && col("value").between(50.0, 150.0))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"),
-          min(col("event_id")).as("min_id"), max(col("event_id")).as("max_id"))
-        .orderBy(col("event_type"))
+        .transform(typeTotals(min(col("event_id")).as("min_id"),
+          max(col("event_id")).as("max_id")))
     },
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total,
-        |  min(event_id) AS min_id, max(event_id) AS max_id
-        |FROM events
-        |WHERE user_id BETWEEN 10 AND 30 AND value BETWEEN 50.0 AND 150.0
-        |GROUP BY event_type ORDER BY event_type""".stripMargin),
+      typeTotalsOracle(", min(event_id) AS min_id, max(event_id) AS max_id",
+        "WHERE user_id BETWEEN 10 AND 30 AND value BETWEEN 50.0 AND 150.0")),
 
     // Nested-JSON roundtrip: per-order line items packed into a JSON
     // document (sorted array of structs), parsed back with a declared
@@ -459,14 +439,11 @@ object LayoutQueries {
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .write.mode("overwrite").orc(tmp)
       s.read.orc(tmp)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))
-        .orderBy(col("event_type"))
+        .transform(typeTotals())
     },
       // the roundtrip queries aggregate what was written and read back, so
       // the oracle aggregates the source table directly
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+      typeTotalsOracle("", "")),
 
     // Hive-style partitioned layout: write events partitioned by type,
     // read back two partitions — the filter prunes directories, so the
@@ -479,15 +456,35 @@ object LayoutQueries {
         .write.mode("overwrite").partitionBy("event_type").parquet(tmp)
       s.read.parquet(tmp)
         .where(col("event_type").isin("click", "purchase"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"),
-          countDistinct(col("user_id")).as("n_users"))
-        .orderBy(col("event_type"))
+        .transform(typeTotals(countDistinct(col("user_id")).as("n_users")))
     },
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total,
-        |  count(DISTINCT user_id) AS n_users
-        |FROM events WHERE event_type IN ('click', 'purchase')
-        |GROUP BY event_type ORDER BY event_type""".stripMargin)
+      typeTotalsOracle(", count(DISTINCT user_id) AS n_users",
+        "WHERE event_type IN ('click', 'purchase')"))
   )
 
+  /** `$.k` of the events' JSON props bucketed by k % 10: what the struct
+    * and VARIANT extractions both return (a malformed or non-numeric
+    * payload yields NULL, its own bucket).
+    */
+  private lazy val propsKOracle: String =
+    """WITH e AS (
+      |  SELECT CAST(json_extract_string(props, '$.k') AS INT) AS k FROM events)
+      |SELECT k % 10 AS k_bucket, count(*) AS n, min(k) AS min_k, max(k) AS max_k
+      |FROM e GROUP BY 1 ORDER BY k_bucket""".stripMargin
+
+  /** Per-type event count `n` and 2-digit value `total`, then `extra`
+    * aggregates: the check every events round trip and layout query
+    * reads back.
+    */
+  private def typeTotals(extra: Column*)(df: DataFrame): DataFrame =
+    df.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total") +: extra: _*)
+      .orderBy(col("event_type"))
+
+  /** [[typeTotals]] over the `events` rows `where` keeps, with the
+    * `extra` aggregate columns.
+    */
+  private[queries] def typeTotalsOracle(extra: String, where: String): String =
+    s"""SELECT event_type, count(*) AS n, round(sum(value), 2) AS total$extra
+       |FROM events $where GROUP BY event_type ORDER BY event_type""".stripMargin
 }

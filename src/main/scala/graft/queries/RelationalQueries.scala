@@ -1,6 +1,7 @@
 package graft
 package queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 import graft.operators.{AsOfJoin, Cdc, Dedup, Graph, IncrementalAgg, Intervals, Merge, RangeJoin, Resample, Sampling, Sessionize, SkewAgg, Transitions}
@@ -38,14 +39,8 @@ object RelationalQueries {
     // 3-iteration PageRank over the bipartite part<->supplier graph from
     // lineitem (ids namespaced even/odd); per-round rounding keeps the
     // carried state bit-identical between engines.
-    QueryDef("pagerank", (s, dir) => {
-      val pairs = Tables.lineitem(s, dir)
-        .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
-      val edges = pairs
-        .select((col("p") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
-        .union(pairs.select((col("sk") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
-      Graph.pagerank(edges, iters = 3).orderBy(col("node"))
-    }, {
+    QueryDef("pagerank", (s, dir) =>
+      Graph.pagerank(partSupplierEdges(s, dir), iters = 3).orderBy(col("node")), {
       val iters = 3
       val rounds = (1 to iters).map { i =>
         s"""r$i AS (
@@ -55,9 +50,7 @@ object RelationalQueries {
            |  JOIN deg d ON e.src = d.src
            |  GROUP BY e.dst)""".stripMargin
       }.mkString(",\n")
-      s"""WITH pairs AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem),
-         |edges AS (SELECT p*2 AS src, sk*2+1 AS dst FROM pairs
-         |          UNION ALL SELECT sk*2+1, p*2 FROM pairs),
+      s"""WITH $partSupplierEdgeCtes,
          |deg AS (SELECT src, count(*) AS out_deg FROM edges GROUP BY src),
          |nn AS (SELECT count(*) AS n FROM deg),
          |r0 AS (SELECT src AS node, CAST(1.0 AS DOUBLE) / (SELECT n FROM nn) AS score
@@ -72,38 +65,11 @@ object RelationalQueries {
     // runs, repartitioning, and engines): one walk per node over the
     // part-supplier bipartite graph, 3 steps, each step one
     // frontier-vs-adjacency join on the same key.
-    QueryDef("graph_walks", (s, dir) => {
-      val pairs = Tables.lineitem(s, dir)
-        .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
-      val edges = pairs
-        .select((col("p") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
-        .union(pairs.select((col("sk") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
-      Graph.deterministicWalks(edges, steps = 3)
-        .orderBy(col("start"), col("step"))
-    }, {
-      // walk replay: unrolled steps, each choosing
-      // nbrs[poly_hash(start:t:cur) % degree] over the sorted neighbor list
-      def hop(t: Int) =
-        s"""SELECT w${t - 1}.start,
-           |    a.nbrs[CAST(${Oracles.polyHash(s"(w${t - 1}.start || ':' || $t || ':' || w${t - 1}.cur)")} % length(a.nbrs) AS INT) + 1] AS cur
-           |  FROM w${t - 1} JOIN adj a ON w${t - 1}.cur = a.node""".stripMargin
-      s"""WITH p AS (
-         |  SELECT DISTINCT l_partkey AS pk, l_suppkey AS sk FROM lineitem),
-         |e AS (
-         |  SELECT pk * 2 AS src, sk * 2 + 1 AS dst FROM p
-         |  UNION ALL SELECT sk * 2 + 1, pk * 2 FROM p),
-         |ed AS (SELECT DISTINCT src, dst FROM e),
-         |adj AS (SELECT src AS node, list(dst ORDER BY dst) AS nbrs FROM ed GROUP BY 1),
-         |w0 AS (SELECT node AS start, node AS cur FROM adj),
-         |w1 AS (${hop(1)}),
-         |w2 AS (${hop(2)}),
-         |w3 AS (${hop(3)})
-         |SELECT start, CAST(0 AS INT) AS step, cur AS node FROM w0
-         |UNION ALL SELECT start, 1, cur FROM w1
-         |UNION ALL SELECT start, 2, cur FROM w2
-         |UNION ALL SELECT start, 3, cur FROM w3
-         |ORDER BY start, step""".stripMargin
-    }),
+    QueryDef("graph_walks", (s, dir) =>
+      Graph.deterministicWalks(partSupplierEdges(s, dir), steps = 3)
+        .orderBy(col("start"), col("step")),
+      walkOracle(s"""$partSupplierEdgeCtes,
+        |ed AS (SELECT DISTINCT src, dst FROM edges)""".stripMargin)),
 
     // Walks over a DIRECTED acyclic graph with real dead ends (r8 verdict
     // #7): nodes 0..200, edges hop forward by 1..37 capped at 200, so the
@@ -120,31 +86,13 @@ object RelationalQueries {
         .filter(col("dst") <= 200).distinct()
       Graph.deterministicWalks(edges, steps = 3)
         .orderBy(col("start"), col("step"))
-    }, {
-      // directed-walk replay with dead ends: each hop CTE inner-joins the
-      // adjacency, so a walker at a sink simply stops contributing rows —
-      // exactly the left-join-freeze semantics of deterministicWalks
-      // (frozen walkers emit no further steps)
-      def hop(t: Int) =
-        s"""SELECT w${t - 1}.start,
-           |    a.nbrs[CAST(${Oracles.polyHash(s"(w${t - 1}.start || ':' || $t || ':' || w${t - 1}.cur)")} % length(a.nbrs) AS INT) + 1] AS cur
-           |  FROM w${t - 1} JOIN adj a ON w${t - 1}.cur = a.node""".stripMargin
-      s"""WITH e AS (
-         |  SELECT DISTINCT l_partkey % 200 AS src,
-         |    (l_partkey % 200) + (l_suppkey % 37) + 1 AS dst
-         |  FROM lineitem
-         |  WHERE (l_partkey % 200) + (l_suppkey % 37) + 1 <= 200),
-         |adj AS (SELECT src AS node, list(dst ORDER BY dst) AS nbrs FROM e GROUP BY 1),
-         |w0 AS (SELECT node AS start, node AS cur FROM adj),
-         |w1 AS (${hop(1)}),
-         |w2 AS (${hop(2)}),
-         |w3 AS (${hop(3)})
-         |SELECT start, CAST(0 AS INT) AS step, cur AS node FROM w0
-         |UNION ALL SELECT start, 1, cur FROM w1
-         |UNION ALL SELECT start, 2, cur FROM w2
-         |UNION ALL SELECT start, 3, cur FROM w3
-         |ORDER BY start, step""".stripMargin
-    }),
+    },
+      // dead ends included: see walkOracle
+      walkOracle("""ed AS (
+        |  SELECT DISTINCT l_partkey % 200 AS src,
+        |    (l_partkey % 200) + (l_suppkey % 37) + 1 AS dst
+        |  FROM lineitem
+        |  WHERE (l_partkey % 200) + (l_suppkey % 37) + 1 <= 200)""".stripMargin)),
 
     // Triangle participation per node over the near-dup candidate graph
     // (density signal for dedup clusters): two vertex-key equi-joins,
@@ -704,11 +652,8 @@ object RelationalQueries {
         Seq("event_type"))
       IncrementalAgg.finish(state).orderBy(col("event_type"))
     },
-      """SELECT event_type, count(*) AS n,
-        |  round(sum(value), 2) AS total,
-        |  min(value) AS lo, max(value) AS hi,
-        |  round(round(sum(value), 2) / count(*), 4) AS mean
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+      LayoutQueries.typeTotalsOracle(", min(value) AS lo, max(value) AS hi," +
+        " round(round(sum(value), 2) / count(*), 4) AS mean", "")),
 
     // Salted skew join: per-user totals joined back to events with the hot
     // key spread over 8 salt buckets — result identical to a plain join.
@@ -1120,7 +1065,7 @@ object RelationalQueries {
           round(array_max(col("embedding")).cast("double"), 6).as("max_val"),
           exists(col("embedding"), x => x > 0.2).as("has_big"))
         .orderBy(col("vec_id")),
-      """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
+      s"""WITH ${Oracles.vectors}
         |SELECT vec_id,
         |  CAST(len(list_filter(v, x -> x > 0)) AS INT) AS n_pos,
         |  round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
@@ -1503,4 +1448,45 @@ object RelationalQueries {
       |SELECT user_id, event_type, valid_from, valid_to,
       |  CAST(CASE WHEN valid_to IS NULL THEN 1 ELSE 0 END AS BIGINT) AS is_current
       |FROM v ORDER BY user_id, valid_from""".stripMargin
+
+  /** The part<->supplier bipartite graph of lineitem: parts at even ids,
+    * suppliers at odd, one edge each way per distinct pair.
+    */
+  private def partSupplierEdges(s: SparkSession, dir: String): DataFrame = {
+    val pairs = Tables.lineitem(s, dir)
+      .select(col("l_partkey").as("p"), col("l_suppkey").as("sk")).distinct()
+    pairs.select((col("p") * 2).as("src"), (col("sk") * 2 + 1).as("dst"))
+      .union(pairs.select((col("sk") * 2 + 1).as("src"), (col("p") * 2).as("dst")))
+  }
+
+  /** [[partSupplierEdges]] as the CTEs `pairs` and `edges` (src, dst). */
+  private lazy val partSupplierEdgeCtes =
+    """pairs AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS sk FROM lineitem),
+      |edges AS (SELECT p*2 AS src, sk*2+1 AS dst FROM pairs
+      |          UNION ALL SELECT sk*2+1, p*2 FROM pairs)""".stripMargin
+
+  /** Replays Graph.deterministicWalks for 3 steps over the distinct
+    * (src, dst) edges `ed` that `edgeCtes` defines: step t moves to
+    * nbrs[poly_hash(start:t:cur) % degree] of the sorted neighbor list.
+    * Each hop inner-joins the adjacency, so a walker at a sink stops
+    * contributing rows — the operator's left-join freeze (frozen walkers
+    * emit no further steps).
+    */
+  private def walkOracle(edgeCtes: String): String = {
+    def hop(t: Int) =
+      s"""SELECT w${t - 1}.start,
+         |    a.nbrs[CAST(${Oracles.polyHash(s"(w${t - 1}.start || ':' || $t || ':' || w${t - 1}.cur)")} % length(a.nbrs) AS INT) + 1] AS cur
+         |  FROM w${t - 1} JOIN adj a ON w${t - 1}.cur = a.node""".stripMargin
+    s"""WITH $edgeCtes,
+       |adj AS (SELECT src AS node, list(dst ORDER BY dst) AS nbrs FROM ed GROUP BY 1),
+       |w0 AS (SELECT node AS start, node AS cur FROM adj),
+       |w1 AS (${hop(1)}),
+       |w2 AS (${hop(2)}),
+       |w3 AS (${hop(3)})
+       |SELECT start, CAST(0 AS INT) AS step, cur AS node FROM w0
+       |UNION ALL SELECT start, 1, cur FROM w1
+       |UNION ALL SELECT start, 2, cur FROM w2
+       |UNION ALL SELECT start, 3, cur FROM w3
+       |ORDER BY start, step""".stripMargin
+  }
 }

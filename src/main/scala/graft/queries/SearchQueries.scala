@@ -1,7 +1,7 @@
 package graft
 package queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Similarity, TextAnalysis}
 
@@ -76,7 +76,7 @@ object SearchQueries {
       fullInvIndex(s, dir).conjunctive(Seq("dup", "vector")).orderBy(col("doc_id")),
       // conjunctive index search replay: tf per (doc, query term), AND =
       // both terms present, rank = summed tf
-      dupVectorSearchOracle),
+      dupVectorSearchOracle("")),
 
     // Adjacency phrase search ("key order") from the SAME index: position
     // lists make the phrase an |shift(pos_a) ∩ pos_b| intersection of two
@@ -86,13 +86,7 @@ object SearchQueries {
       fullInvIndex(s, dir).phrase("key", "order").orderBy(col("doc_id")),
       // adjacency phrase replay: 1-based token positions via range() over
       // the token list, adjacency = a.pos + 1 = b.pos
-      s"""WITH tok AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS tk FROM documents),
-         |px AS (
-         |  SELECT doc_id, tk, unnest(range(1, length(tk) + 1)) AS pos FROM tok),
-         |terms AS (
-         |  SELECT doc_id, CAST(pos AS INT) AS pos, tk[CAST(pos AS INT)] AS term
-         |  FROM px)
+      s"""WITH $termPositions
          |SELECT a.doc_id, CAST(count(*) AS INT) AS n_occurrences
          |FROM terms a JOIN terms b
          |  ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
@@ -117,7 +111,7 @@ object SearchQueries {
       idx.conjunctive(Seq("dup", "vector")).orderBy(col("doc_id"))
     },
       // incremental ingest must be exactly the full-corpus search result
-      dupVectorSearchOracle),
+      dupVectorSearchOracle("")),
 
     // Continuous index maintenance: the second half of the corpus arrives
     // as a document STREAM; each micro-batch lands as one committed index
@@ -138,7 +132,7 @@ object SearchQueries {
       idx.conjunctive(Seq("dup", "vector")).orderBy(col("doc_id"))
     },
       // streaming ingest must be indistinguishable from the batch build
-      dupVectorSearchOracle),
+      dupVectorSearchOracle("")),
 
     // Proximity (NEAR) search from the same index: "key" followed by
     // "order" within 3 tokens — the adjacency kernel with the gap
@@ -147,13 +141,7 @@ object SearchQueries {
       fullInvIndex(s, dir).near("key", "order", maxGap = 3).orderBy(col("doc_id")),
       // proximity replay: each 'key' occurrence counted once when some
       // 'order' follows within 3 tokens
-      s"""WITH tok AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS tk FROM documents),
-         |px AS (
-         |  SELECT doc_id, tk, unnest(range(1, length(tk) + 1)) AS pos FROM tok),
-         |terms AS (
-         |  SELECT doc_id, CAST(pos AS INT) AS pos, tk[CAST(pos AS INT)] AS term
-         |  FROM px),
+      s"""WITH $termPositions,
          |hits AS (
          |  SELECT DISTINCT a.doc_id, a.pos
          |  FROM terms a JOIN terms b
@@ -178,27 +166,14 @@ object SearchQueries {
       idx.conjunctive(Seq("dup", "vector"), asOf = Some(0L)).orderBy(col("doc_id"))
     },
       // the generation-0 snapshot is exactly the bootstrap half
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents WHERE doc_id < 250),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks
-         |  WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
-         |hit AS (
-         |  SELECT doc_id, count(DISTINCT term) AS m, sum(tf) AS s
-         |  FROM tf GROUP BY 1)
-         |SELECT doc_id, CAST(s AS BIGINT) AS tf_sum FROM hit
-         |WHERE m = 2 ORDER BY doc_id""".stripMargin),
+      dupVectorSearchOracle("WHERE doc_id < 250")),
 
     // Prefix term browse ('s*'): StartsWith pushes into the parquet scan,
     // and the term-sorted compaction makes a prefix a CONTIGUOUS
     // row-group range — index-seek pruning for wildcard queries.
     QueryDef("text_prefix", (s, dir) =>
       fullInvIndex(s, dir).prefix("s").orderBy(col("term")),
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2)
+      s"""WITH ${termTfCtes("", "")}
          |SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS total_tf
          |FROM tf WHERE term LIKE 's%' GROUP BY 1 ORDER BY term""".stripMargin),
 
@@ -216,10 +191,7 @@ object SearchQueries {
       }
       idx.termStats.orderBy(col("df").desc, col("term"))
     },
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2)
+      s"""WITH ${termTfCtes("", "")}
          |SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS total_tf,
          |  CAST(max(tf) AS INT) AS max_tf
          |FROM tf GROUP BY 1 ORDER BY df DESC, term""".stripMargin),
@@ -234,7 +206,7 @@ object SearchQueries {
         .orderBy(col("doc_id")),
       // same replay as text_search: the lead-rarest plan must be
       // result-identical to the aggregation plan
-      dupVectorSearchOracle),
+      dupVectorSearchOracle("")),
 
     // BM25 ranked retrieval from the persisted index: reads ONLY the two
     // query terms' postings (pruned scan) plus the O(1) committed corpus
@@ -257,15 +229,7 @@ object SearchQueries {
     QueryDef("text_search_or", (s, dir) =>
       fullInvIndex(s, dir).disjunctive(Seq("dup", "vector", "merge"))
         .orderBy(col("doc_id")),
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks
-         |  WHERE term IN ('dup', 'vector', 'merge') GROUP BY 1, 2)
-         |SELECT doc_id, CAST(count(*) AS INT) AS n_matched,
-         |  CAST(sum(tf) AS BIGINT) AS tf_sum
-         |FROM tf GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+      anyTermOracle("")),
 
     // Minimum-should-match (Lucene mm): docs matching >= 2 of 3 terms —
     // the recall/precision middle ground between AND and OR; identical
@@ -273,15 +237,7 @@ object SearchQueries {
     QueryDef("text_search_msm", (s, dir) =>
       fullInvIndex(s, dir).minShouldMatch(Seq("dup", "vector", "merge"), 2)
         .orderBy(col("doc_id")),
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks
-         |  WHERE term IN ('dup', 'vector', 'merge') GROUP BY 1, 2)
-         |SELECT doc_id, CAST(count(*) AS INT) AS n_matched,
-         |  CAST(sum(tf) AS BIGINT) AS tf_sum
-         |FROM tf GROUP BY doc_id HAVING count(*) >= 2 ORDER BY doc_id""".stripMargin),
+      anyTermOracle("HAVING count(*) >= 2")),
 
     // Boolean AND NOT: docs with both include terms and NEITHER exclude
     // term — the exclusion is a doc-set anti-join on pruned postings,
@@ -289,12 +245,7 @@ object SearchQueries {
     QueryDef("text_search_not", (s, dir) =>
       fullInvIndex(s, dir).conjunctiveNot(Seq("dup", "vector"), Seq("merge"))
         .orderBy(col("doc_id")),
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks
-         |  WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
+      s"""WITH ${termTfCtes("", "WHERE term IN ('dup', 'vector')")},
          |hits AS (
          |  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS tf_sum
          |  FROM tf GROUP BY doc_id HAVING count(*) = 2)
@@ -322,45 +273,20 @@ object SearchQueries {
     // where the indexes bound it. Rank-only fusion needs no score
     // calibration across the two incomparable scales.
     QueryDef("hybrid_search_rrf", (s, dir) => {
-      val textArm = graft.operators.HybridSearch.rankArm(
-        fullInvIndex(s, dir).bm25(Seq("dup", "vector"), 30),
-        col("score"), "r_text")
       val emb = Tables.embeddings(s, dir)
       val vecArm = Similarity
         .bruteForceTopK(emb, emb.filter(col("vec_id") === 0), 30)
         .select(col("neighbor_id").as("doc_id"), col("rank").as("r_vec"))
-      graft.operators.HybridSearch.rrf2(textArm, vecArm, k = 20)
+      graft.operators.HybridSearch.rrf2(bm25TextArm(s, dir), vecArm, k = 20)
     },
       // RRF fusion: replay the BM25 arm (same CTEs as text_bm25, top-30,
       // ranked by the 4-digit presentation score — the engine ranks the
       // returned list the same way), the exact-cosine arm (sim_topk's
       // arithmetic, query = vec 0, top-30), then the rank-only fusion with
       // the reciprocal terms added in the engine's fixed order.
-      s"""WITH tok AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS tk FROM documents),
-         |meta AS (
-         |  SELECT count(*) AS n, CAST(sum(length(tk)) AS DOUBLE) / count(*) AS avgdl
-         |  FROM tok),
-         |toks AS (
-         |  SELECT doc_id, length(tk) AS doc_len, unnest(tk) AS term FROM tok),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf, any_value(doc_len) AS doc_len
-         |  FROM toks WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
-         |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |scored AS (
-         |  SELECT tf.doc_id,
-         |    sum(CAST(floor(ln(1.0 + (meta.n - dfreq.df + 0.5) / (dfreq.df + 0.5)) *
-         |        ((tf.tf * 2.2) /
-         |         (tf.tf + 1.2 * (0.25 + 0.75 * (tf.doc_len / meta.avgdl)))) *
-         |        1000000.0 + 0.5) AS BIGINT)) AS su
-         |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN meta
-         |  GROUP BY 1),
-         |ttop AS (SELECT doc_id, su FROM scored ORDER BY su DESC, doc_id LIMIT 30),
-         |tarm AS (
-         |  SELECT doc_id, CAST(row_number() OVER (
-         |    ORDER BY round(su / 1000000.0, 4) DESC, doc_id) AS INT) AS r_text
-         |  FROM ttop),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH $bm25Corpus,
+         |${bm25RankArm("t", Seq("dup", "vector"))},
+         |${Oracles.vectors},
          |q AS (SELECT * FROM e WHERE vec_id = 0),
          |varm AS (
          |  SELECT doc_id, r_vec FROM (
@@ -369,13 +295,9 @@ object SearchQueries {
          |        c.vec_id) AS INT) AS r_vec
          |    FROM e c JOIN q ON q.vec_id != c.vec_id)
          |  WHERE r_vec <= 30),
-         |f AS (
-         |  SELECT coalesce(t.doc_id, v.doc_id) AS doc_id, t.r_text, v.r_vec,
-         |    round(coalesce(CAST(1.0 AS DOUBLE) / (60 + t.r_text), 0.0) +
-         |          coalesce(CAST(1.0 AS DOUBLE) / (60 + v.r_vec), 0.0), 6) AS rrf
-         |  FROM tarm t FULL OUTER JOIN varm v ON t.doc_id = v.doc_id)
-         |SELECT doc_id, r_text, r_vec, rrf FROM f
-         |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin),
+         |${rrfFusion("tarm", Nil)}
+         |SELECT doc_id, r_text, r_vec, rrf FROM fused
+         |ORDER BY rrf DESC, doc_id""".stripMargin),
 
     // The PRODUCTION hybrid (r11 verdict #2): BOTH arms ride persisted
     // indexes — BM25 over the inverted index (pruned posting scan + O(1)
@@ -394,9 +316,6 @@ object SearchQueries {
     // re-derives the same nprobe from the replayed sweep grid as a
     // scalar CTE — a constant in neither the operator nor the SQL.
     QueryDef("hybrid_search_rrf_indexed", (s, dir) => {
-      val textArm = graft.operators.HybridSearch.rankArm(
-        fullInvIndex(s, dir).bm25(Seq("dup", "vector"), 30),
-        col("score"), "r_text")
       val emb = Tables.embeddings(s, dir)
       val idx = IndexCache.getOrBuildVersioned(s, s"ivf-full|$dir", dir) {
         val i = new graft.sources.IvfIndex(
@@ -413,7 +332,7 @@ object SearchQueries {
           nprobes = Seq(1, 2, 4, 8, 16)).serving
       val vecArm = served.topK(emb, emb.filter(col("vec_id") === 0), 30)
         .select(col("neighbor_id").as("doc_id"), col("rank").as("r_vec"))
-      graft.operators.HybridSearch.rrf2(textArm, vecArm, k = 20)
+      graft.operators.HybridSearch.rrf2(bm25TextArm(s, dir), vecArm, k = 20)
     },
       // the production hybrid: same BM25-arm replay, but the vector arm is
       // the persisted IVF probe — full-corpus seeds (lowest-16 vec_ids),
@@ -422,97 +341,19 @@ object SearchQueries {
       // replayed as a grid, the smallest width clearing 0.85 as scalar CTE
       // `cnp` — r13 verdict #3: no probe-width constant in either side),
       // top-30 of the probed cells' members, then identical rank-only fusion
-      s"""WITH tok AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS tk FROM documents),
-         |meta AS (
-         |  SELECT count(*) AS n, CAST(sum(length(tk)) AS DOUBLE) / count(*) AS avgdl
-         |  FROM tok),
-         |toks AS (
-         |  SELECT doc_id, length(tk) AS doc_len, unnest(tk) AS term FROM tok),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf, any_value(doc_len) AS doc_len
-         |  FROM toks WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
-         |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |tscored AS (
-         |  SELECT tf.doc_id,
-         |    sum(CAST(floor(ln(1.0 + (meta.n - dfreq.df + 0.5) / (dfreq.df + 0.5)) *
-         |        ((tf.tf * 2.2) /
-         |         (tf.tf + 1.2 * (0.25 + 0.75 * (tf.doc_len / meta.avgdl)))) *
-         |        1000000.0 + 0.5) AS BIGINT)) AS su
-         |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN meta
-         |  GROUP BY 1),
-         |ttop AS (SELECT doc_id, su FROM tscored ORDER BY su DESC, doc_id LIMIT 30),
-         |tarm AS (
-         |  SELECT doc_id, CAST(row_number() OVER (
-         |    ORDER BY round(su / 1000000.0, 4) DESC, doc_id) AS INT) AS r_text
-         |  FROM ttop),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |seeds AS (SELECT vec_id AS cell_id, v AS cv FROM e ORDER BY vec_id LIMIT 16),
-         |cscored AS (
-         |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-         |  FROM e CROSS JOIN seeds s),
-         |assign AS (
-         |  SELECT vec_id, v, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM cscored) WHERE rnk = 1),
-         |sprobes AS (
-         |  SELECT vec_id AS query_id, v AS qv, cell_id, rnk AS prnk FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM cscored WHERE vec_id < 8) WHERE rnk <= 16),
-         |st AS (SELECT * FROM (VALUES (1), (2), (4), (8), (16)) AS t(np)),
-         |scand AS (
-         |  SELECT st.np, p.query_id, a.vec_id AS neighbor_id,
-         |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-         |  FROM st JOIN sprobes p ON p.prnk <= st.np
-         |  JOIN assign a ON a.cell_id = p.cell_id AND p.query_id != a.vec_id),
-         |sannk AS (
-         |  SELECT np, query_id, neighbor_id FROM (
-         |    SELECT np, query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY np, query_id
-         |        ORDER BY cosine DESC, neighbor_id) AS rank
-         |    FROM scand) WHERE rank <= 30),
-         |exact AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC,
-         |          c.vec_id) AS rank
-         |    FROM e c JOIN (SELECT * FROM e WHERE vec_id < 8) q
-         |      ON q.vec_id != c.vec_id) WHERE rank <= 30),
-         |hits AS (
-         |  SELECT st.np, ex.query_id, count(a.neighbor_id) AS nhit
-         |  FROM st CROSS JOIN exact ex
-         |  LEFT JOIN sannk a ON a.np = st.np
-         |    AND a.query_id = ex.query_id AND a.neighbor_id = ex.neighbor_id
-         |  GROUP BY 1, 2),
-         |grid AS (
-         |  SELECT np, round(avg(nhit / CAST(30 AS DOUBLE)), 4) AS recall
-         |  FROM hits GROUP BY 1),
-         |cnp AS (SELECT coalesce((SELECT min(np) FROM grid WHERE recall >= 0.85),
-         |  (SELECT max(np) FROM grid)) AS npv),
-         |probes AS (
-         |  SELECT vec_id AS query_id, v AS qv, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM cscored WHERE vec_id = 0), cnp WHERE rnk <= cnp.npv),
-         |cand AS (
-         |  SELECT p.query_id, a.vec_id AS neighbor_id,
-         |    round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) AS cosine
-         |  FROM assign a JOIN probes p ON a.cell_id = p.cell_id AND p.query_id != a.vec_id),
+      s"""WITH $bm25Corpus,
+         |${bm25RankArm("t", Seq("dup", "vector"))},
+         |${Oracles.vectors},
+         |${Oracles.ivfSeeds("", "e", "16")},
+         |${Oracles.ivfCells("", "e", "seeds")},
+         |${Oracles.exactTopK("exact", "e", 30)},
+         |${Oracles.ivfFlatSweep("", "seeds", "exact", 30, 0.85, Seq(1, 2, 4, 8, 16), None)},
          |varm AS (
-         |  SELECT neighbor_id AS doc_id, r_vec FROM (
-         |    SELECT neighbor_id, CAST(row_number() OVER (
-         |      ORDER BY cosine DESC, neighbor_id) AS INT) AS r_vec
-         |    FROM cand) WHERE r_vec <= 30),
-         |f AS (
-         |  SELECT coalesce(t.doc_id, v.doc_id) AS doc_id, t.r_text, v.r_vec,
-         |    round(coalesce(CAST(1.0 AS DOUBLE) / (60 + t.r_text), 0.0) +
-         |          coalesce(CAST(1.0 AS DOUBLE) / (60 + v.r_vec), 0.0), 6) AS rrf
-         |  FROM tarm t FULL OUTER JOIN varm v ON t.doc_id = v.doc_id)
-         |SELECT doc_id, r_text, r_vec, rrf FROM f
-         |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin),
+         |  SELECT neighbor_id AS doc_id, CAST(rank AS INT) AS r_vec
+         |  FROM ann, cnp WHERE ann.np = cnp.v AND query_id = 0),
+         |${rrfFusion("tarm", Nil)}
+         |SELECT doc_id, r_text, r_vec, rrf FROM fused
+         |ORDER BY rrf DESC, doc_id""".stripMargin),
 
     // The 100 TB refinement of the production hybrid (r12 verdict #5):
     // the vector arm rides the IVF-PQ COMPOSITION instead of flat IVF.
@@ -529,9 +370,6 @@ object SearchQueries {
     // re-derives the same (nprobe, shortlist) from the replayed
     // two-phase grid as scalar CTEs — constants in neither side.
     QueryDef("hybrid_search_rrf_ivfpq", (s, dir) => {
-      val textArm = graft.operators.HybridSearch.rankArm(
-        fullInvIndex(s, dir).bm25(Seq("dup", "vector"), 30),
-        col("score"), "r_text")
       val emb = Tables.embeddings(s, dir)
       val idx = IndexCache.getOrBuildVersioned(s, s"ivfpq-hy|$dir", dir) {
         val i = new graft.sources.IvfPqIndex(
@@ -547,7 +385,7 @@ object SearchQueries {
           nprobes = Seq(2, 4, 8, 16), shortlists = Seq(50, 200)).serving
       val vecArm = served.topK(emb, emb.filter(col("vec_id") === 0), 30)
         .select(col("neighbor_id").as("doc_id"), col("rank").as("r_vec"))
-      graft.operators.HybridSearch.rrf2(textArm, vecArm, k = 20)
+      graft.operators.HybridSearch.rrf2(bm25TextArm(s, dir), vecArm, k = 20)
     },
       // the IVF-PQ hybrid: same BM25-arm replay, vector arm = the full
       // IVF-PQ composition for query 0 (train slice vec_id % 50 != 0,
@@ -556,59 +394,16 @@ object SearchQueries {
       // is replayed as the grid chain and the probe consumes (cnp, csl) as
       // scalar CTEs — r13 verdict #3: no (nprobe, shortlist) constant in
       // either the operator or this SQL. Identical rank-only fusion.
-      s"""WITH tok AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS tk FROM documents),
-         |meta AS (
-         |  SELECT count(*) AS n, CAST(sum(length(tk)) AS DOUBLE) / count(*) AS avgdl
-         |  FROM tok),
-         |toks AS (
-         |  SELECT doc_id, length(tk) AS doc_len, unnest(tk) AS term FROM tok),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf, any_value(doc_len) AS doc_len
-         |  FROM toks WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
-         |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |tscored AS (
-         |  SELECT tf.doc_id,
-         |    sum(CAST(floor(ln(1.0 + (meta.n - dfreq.df + 0.5) / (dfreq.df + 0.5)) *
-         |        ((tf.tf * 2.2) /
-         |         (tf.tf + 1.2 * (0.25 + 0.75 * (tf.doc_len / meta.avgdl)))) *
-         |        1000000.0 + 0.5) AS BIGINT)) AS su
-         |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN meta
-         |  GROUP BY 1),
-         |ttop AS (SELECT doc_id, su FROM tscored ORDER BY su DESC, doc_id LIMIT 30),
-         |tarm AS (
-         |  SELECT doc_id, CAST(row_number() OVER (
-         |    ORDER BY round(su / 1000000.0, 4) DESC, doc_id) AS INT) AS r_text
-         |  FROM ttop),
-         |${IvfQueries.ivfPqGridCtes(16, 8, 256, 30, 0.8, Seq(2, 4, 8, 16), Seq(50, 200))},
-         |pf AS (
-         |  SELECT s.query_id, s.neighbor_id, s.qcos
-         |  FROM sc s, cnp WHERE s.prnk <= cnp.v),
-         |slc AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT query_id, neighbor_id,
-         |      row_number() OVER (PARTITION BY query_id
-         |        ORDER BY qcos DESC, neighbor_id) AS srank
-         |    FROM pf), csl WHERE srank <= csl.v),
-         |rerc AS (
-         |  SELECT query_id, neighbor_id, cosine,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY cosine DESC, neighbor_id) AS rank
-         |  FROM (
-         |    SELECT x.query_id, x.neighbor_id,
-         |      round(${Oracles.cosine("qe.v", "ne.v", 64)}, 6) AS cosine
-         |    FROM slc x JOIN e ne ON ne.vec_id = x.neighbor_id
-         |    JOIN e qe ON qe.vec_id = x.query_id)),
+      s"""WITH $bm25Corpus,
+         |${bm25RankArm("t", Seq("dup", "vector"))},
+         |${IvfQueries.ivfPqGridCtes(16, 256, 30, 0.8, Seq(2, 4, 8, 16), Seq(50, 200))},
          |varm AS (
          |  SELECT neighbor_id AS doc_id, CAST(rank AS INT) AS r_vec
-         |  FROM rerc WHERE query_id = 0 AND rank <= 30),
-         |f AS (
-         |  SELECT coalesce(t.doc_id, v.doc_id) AS doc_id, t.r_text, v.r_vec,
-         |    round(coalesce(CAST(1.0 AS DOUBLE) / (60 + t.r_text), 0.0) +
-         |          coalesce(CAST(1.0 AS DOUBLE) / (60 + v.r_vec), 0.0), 6) AS rrf
-         |  FROM tarm t FULL OUTER JOIN varm v ON t.doc_id = v.doc_id)
-         |SELECT doc_id, r_text, r_vec, rrf FROM f
-         |ORDER BY rrf DESC, doc_id LIMIT 20""".stripMargin),
+         |  FROM ann, cnp, csl
+         |  WHERE ann.np = cnp.v AND ann.slim = csl.v AND query_id = 0),
+         |${rrfFusion("tarm", Nil)}
+         |SELECT doc_id, r_text, r_vec, rrf FROM fused
+         |ORDER BY rrf DESC, doc_id""".stripMargin),
 
     // BATCH-SCALE HYBRID (r16, r15 verdict #7): the production hybrid's
     // remaining single-query assumptions removed — a 5x-replicated
@@ -668,94 +463,27 @@ object SearchQueries {
       // list with the engine's fixed text+vector addition order, then the
       // 5x expansion to the replicated query-id space. Any per-replica
       // divergence in either batch arm or the fusion is a hash mismatch.
-      s"""WITH tok AS (
-         |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS tk FROM documents),
-         |meta AS (
-         |  SELECT count(*) AS n, CAST(sum(length(tk)) AS DOUBLE) / count(*) AS avgdl
-         |  FROM tok),
-         |toks AS (
-         |  SELECT doc_id, length(tk) AS doc_len, unnest(tk) AS term FROM tok),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf, any_value(doc_len) AS doc_len
-         |  FROM toks WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
-         |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |tscored AS (
-         |  SELECT tf.doc_id,
-         |    sum(CAST(floor(ln(1.0 + (meta.n - dfreq.df + 0.5) / (dfreq.df + 0.5)) *
-         |        ((tf.tf * 2.2) /
-         |         (tf.tf + 1.2 * (0.25 + 0.75 * (tf.doc_len / meta.avgdl)))) *
-         |        1000000.0 + 0.5) AS BIGINT)) AS su
-         |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN meta
-         |  GROUP BY 1),
-         |ttop AS (SELECT doc_id, su FROM tscored ORDER BY su DESC, doc_id LIMIT 30),
-         |tarm AS (
-         |  SELECT doc_id, CAST(row_number() OVER (
-         |    ORDER BY round(su / 1000000.0, 4) DESC, doc_id) AS INT) AS r_text
-         |  FROM ttop),
-         |tfB AS (
-         |  SELECT doc_id, term, count(*) AS tf, any_value(doc_len) AS doc_len
-         |  FROM toks WHERE term IN ('dup', 'stream') GROUP BY 1, 2),
-         |dfreqB AS (SELECT term, count(*) AS df FROM tfB GROUP BY 1),
-         |tscoredB AS (
-         |  SELECT tfB.doc_id,
-         |    sum(CAST(floor(ln(1.0 + (meta.n - dfreqB.df + 0.5) / (dfreqB.df + 0.5)) *
-         |        ((tfB.tf * 2.2) /
-         |         (tfB.tf + 1.2 * (0.25 + 0.75 * (tfB.doc_len / meta.avgdl)))) *
-         |        1000000.0 + 0.5) AS BIGINT)) AS su
-         |  FROM tfB JOIN dfreqB ON tfB.term = dfreqB.term CROSS JOIN meta
-         |  GROUP BY 1),
-         |ttopB AS (SELECT doc_id, su FROM tscoredB ORDER BY su DESC, doc_id LIMIT 30),
-         |tarmB AS (
-         |  SELECT doc_id, CAST(row_number() OVER (
-         |    ORDER BY round(su / 1000000.0, 4) DESC, doc_id) AS INT) AS r_text
-         |  FROM ttopB),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |vseeds AS (SELECT vec_id AS cell_id, v AS cv FROM e
-         |  WHERE vec_id % 50 != 0 ORDER BY vec_id LIMIT 16),
-         |vscored AS (
-         |  SELECT e.vec_id, e.v, s.cell_id, ${Oracles.cosine("e.v", "s.cv", 64)} AS cs
-         |  FROM e CROSS JOIN vseeds s),
-         |vassign AS (
-         |  SELECT vec_id, v, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM vscored) WHERE rnk = 1),
-         |vprobes AS (
-         |  SELECT vec_id AS qbase, v AS qv, cell_id FROM (
-         |    SELECT vec_id, v, cell_id,
-         |      row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cell_id) AS rnk
-         |    FROM vscored) WHERE rnk <= 4),
+      s"""WITH $bm25Corpus,
+         |${bm25RankArm("t", Seq("dup", "vector"))},
+         |${bm25RankArm("u", Seq("dup", "stream"))},
+         |${Oracles.vectors},
+         |${Oracles.ivfSeeds("v", IvfQueries.bootSlice, "16")},
+         |${Oracles.ivfCells("v", "e", "vseeds")},
+         |${Oracles.ivfFlatProbe("v", "e", "vseeds", 30, Seq(4), None, selfExclude = false)},
          |varm AS (
-         |  SELECT qbase, neighbor_id AS doc_id, r_vec FROM (
-         |    SELECT p.qbase, a.vec_id AS neighbor_id,
-         |      CAST(row_number() OVER (PARTITION BY p.qbase
-         |        ORDER BY round(${Oracles.cosine("p.qv", "a.v", 64)}, 6) DESC,
-         |          a.vec_id) AS INT) AS r_vec
-         |    FROM vassign a JOIN vprobes p ON a.cell_id = p.cell_id)
-         |  WHERE r_vec <= 30),
+         |  SELECT query_id AS qbase, neighbor_id AS doc_id, CAST(rank AS INT) AS r_vec
+         |  FROM vann),
          |bases AS (SELECT DISTINCT vec_id AS qbase FROM e),
          |texp AS (
          |  SELECT b.qbase, t.doc_id, t.r_text
          |  FROM bases b JOIN tarm t ON b.qbase % 2 = 0
          |  UNION ALL
          |  SELECT b.qbase, t.doc_id, t.r_text
-         |  FROM bases b JOIN tarmB t ON b.qbase % 2 = 1),
-         |f AS (
-         |  SELECT coalesce(tx.qbase, v.qbase) AS qbase,
-         |    coalesce(tx.doc_id, v.doc_id) AS doc_id, tx.r_text, v.r_vec,
-         |    round(coalesce(CAST(1.0 AS DOUBLE) / (60 + tx.r_text), 0.0) +
-         |          coalesce(CAST(1.0 AS DOUBLE) / (60 + v.r_vec), 0.0), 6) AS rrf
-         |  FROM texp tx FULL OUTER JOIN varm v
-         |    ON tx.qbase = v.qbase AND tx.doc_id = v.doc_id),
-         |rk AS (
-         |  SELECT qbase, doc_id, r_text, r_vec, rrf,
-         |    CAST(row_number() OVER (PARTITION BY qbase
-         |      ORDER BY rrf DESC, doc_id) AS INT) AS rank
-         |  FROM f),
-         |reps AS (SELECT unnest(range(0, 5)) AS r)
-         |SELECT 1000000 + rk.qbase * 5 + t.r AS query_id, rk.doc_id,
-         |  rk.r_text, rk.r_vec, rk.rrf, rk.rank
-         |FROM rk CROSS JOIN reps t WHERE rk.rank <= 20
+         |  FROM bases b JOIN uarm t ON b.qbase % 2 = 1),
+         |${rrfFusion("texp", Seq("qbase"))}
+         |SELECT 1000000 + f.qbase * 5 + t.r AS query_id, f.doc_id,
+         |  f.r_text, f.r_vec, f.rrf, f.rank
+         |FROM fused f CROSS JOIN (SELECT unnest(range(0, 5)) AS r) t
          |ORDER BY query_id, rank""".stripMargin),
 
     // Top TF-IDF terms per document: map-side-combined (doc, term)
@@ -770,23 +498,7 @@ object SearchQueries {
       TextAnalysis.tfIdfTopTerms(docs, fullInvIndex(s, dir).corpusStats._1, 3)
         .orderBy(col("doc_id"), col("rank"))
     },
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-         |dfreq AS (
-         |  SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |scored AS (
-         |  SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-         |    round(tf.tf * ln(CAST((SELECT count(*) FROM documents) AS DOUBLE) / dfreq.df), 4) AS tfidf
-         |  FROM tf JOIN dfreq ON tf.term = dfreq.term),
-         |r AS (
-         |  SELECT *, row_number() OVER (
-         |    PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rank
-         |  FROM scored)
-         |SELECT doc_id, rank, term, tf, df, tfidf
-         |FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin),
+      tfidfOracle("")),
 
     // The per-ingest production shape (r11 verdict #6): score ONLY the
     // delta's terms against the PERSISTED index's df and O(1) corpus
@@ -804,24 +516,7 @@ object SearchQueries {
     },
       // identical replay to tfidf_terms (df and nDocs over the FULL corpus
       // — what the persisted index holds) restricted to the delta docs
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-         |  FROM documents),
-         |tf AS (
-         |  SELECT doc_id, term, count(*) AS tf FROM toks GROUP BY 1, 2),
-         |dfreq AS (
-         |  SELECT term, count(*) AS df FROM tf GROUP BY 1),
-         |scored AS (
-         |  SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
-         |    round(tf.tf * ln(CAST((SELECT count(*) FROM documents) AS DOUBLE) / dfreq.df), 4) AS tfidf
-         |  FROM tf JOIN dfreq ON tf.term = dfreq.term
-         |  WHERE tf.doc_id % 50 = 0),
-         |r AS (
-         |  SELECT *, row_number() OVER (
-         |    PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rank
-         |  FROM scored)
-         |SELECT doc_id, rank, term, tf, df, tfidf
-         |FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin)
+      tfidfOracle("WHERE tf.doc_id % 50 = 0"))
   )
 
   /** The session's full-corpus compacted inverted index, built ONCE per
@@ -844,51 +539,151 @@ object SearchQueries {
       idx
     }
 
-  /** BM25 oracle (k1=1.2, b=0.75) over `documents` for `terms`, top `k`.
-    * The per-(term, doc) score replays InvertedIndex.bm25's expression
-    * tree verbatim and is snapped to integer micro-units before the
-    * per-doc sum, so the compare is bit-exact at any term count.
+  /** The hybrids' lexical arm: BM25 of (dup, vector) over the shared
+    * index, top 30, ranked by score into `r_text`.
     */
-  private def bm25OracleSql(terms: Seq[String], k: Int): String = {
-    val inList = terms.map(t => s"'$t'").mkString(", ")
-    s"""WITH tok AS (
-       |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS tk FROM documents),
+  private def bm25TextArm(s: SparkSession, dir: String): DataFrame =
+    graft.operators.HybridSearch.rankArm(
+      fullInvIndex(s, dir).bm25(Seq("dup", "vector"), 30), col("score"), "r_text")
+
+  /** BM25 CTEs `tok`, `meta` (n, avgdl) and `toks` (doc_id, doc_len,
+    * term): the lowercased whitespace tokens of `documents`.
+    */
+  private lazy val bm25Corpus: String =
+    s"""$tokLists,
        |meta AS (
        |  SELECT count(*) AS n, CAST(sum(length(tk)) AS DOUBLE) / count(*) AS avgdl
        |  FROM tok),
        |toks AS (
-       |  SELECT doc_id, length(tk) AS doc_len, unnest(tk) AS term FROM tok),
-       |tf AS (
+       |  SELECT doc_id, length(tk) AS doc_len, unnest(tk) AS term FROM tok)""".stripMargin
+
+  /** BM25 (k1=1.2, b=0.75) of `terms` over [[bm25Corpus]]: `${pre}scored`
+    * (doc_id, su) and its `k` best `${pre}top`. The per-(term, doc) score
+    * replays InvertedIndex.bm25's expression tree verbatim and is snapped
+    * to integer micro-units before the per-doc sum, so the compare is
+    * bit-exact at any term count.
+    */
+  private def bm25Ctes(pre: String, terms: Seq[String], k: Int): String =
+    s"""${pre}tf AS (
        |  SELECT doc_id, term, count(*) AS tf, any_value(doc_len) AS doc_len
-       |  FROM toks WHERE term IN ($inList) GROUP BY 1, 2),
-       |dfreq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-       |scored AS (
+       |  FROM toks WHERE term IN (${terms.map(t => s"'$t'").mkString(", ")})
+       |  GROUP BY 1, 2),
+       |${pre}dfreq AS (SELECT term, count(*) AS df FROM ${pre}tf GROUP BY 1),
+       |${pre}scored AS (
        |  SELECT tf.doc_id,
        |    sum(CAST(floor(ln(1.0 + (meta.n - dfreq.df + 0.5) / (dfreq.df + 0.5)) *
        |        ((tf.tf * 2.2) /
        |         (tf.tf + 1.2 * (0.25 + 0.75 * (tf.doc_len / meta.avgdl)))) *
        |        1000000.0 + 0.5) AS BIGINT)) AS su
-       |  FROM tf JOIN dfreq ON tf.term = dfreq.term CROSS JOIN meta
+       |  FROM ${pre}tf tf JOIN ${pre}dfreq dfreq ON tf.term = dfreq.term
+       |  CROSS JOIN meta
        |  GROUP BY 1),
-       |top AS (
-       |  SELECT doc_id, su FROM scored ORDER BY su DESC, doc_id LIMIT $k)
-       |SELECT doc_id, round(su / 1000000.0, 4) AS score FROM top
-       |ORDER BY doc_id""".stripMargin
+       |${pre}top AS (
+       |  SELECT doc_id, su FROM ${pre}scored ORDER BY su DESC, doc_id LIMIT $k)""".stripMargin
+
+  /** `${pre}arm` (doc_id, r_text): the hybrids' BM25 arm — the top 30 of
+    * [[bm25Ctes]] ranked by the 4-digit presentation score, as
+    * HybridSearch.rankArm ranks the returned list.
+    */
+  private def bm25RankArm(pre: String, terms: Seq[String]): String =
+    s"""${bm25Ctes(pre, terms, 30)},
+       |${pre}arm AS (
+       |  SELECT doc_id, CAST(row_number() OVER (
+       |    ORDER BY round(su / 1000000.0, 4) DESC, doc_id) AS INT) AS r_text
+       |  FROM ${pre}top)""".stripMargin
+
+  /** `fused` (keys, doc_id, r_text, r_vec, rrf, rank <= 20): rank-only
+    * reciprocal-rank fusion (HybridSearch.rrf2, k0 = 60) of `textArm`
+    * with the vector arm `varm`, full-outer-joined per `keys` and doc,
+    * the reciprocal terms added text first as the engine adds them.
+    */
+  private def rrfFusion(textArm: String, keys: Seq[String]): String = {
+    val ids = keys :+ "doc_id"
+    val part = if (keys.isEmpty) "" else keys.mkString("PARTITION BY ", ", ", " ")
+    s"""f AS (
+       |  SELECT ${ids.map(c => s"coalesce(t.$c, v.$c) AS $c").mkString(", ")},
+       |    t.r_text, v.r_vec,
+       |    round(coalesce(CAST(1.0 AS DOUBLE) / (60 + t.r_text), 0.0) +
+       |          coalesce(CAST(1.0 AS DOUBLE) / (60 + v.r_vec), 0.0), 6) AS rrf
+       |  FROM $textArm t FULL OUTER JOIN varm v
+       |    ON ${ids.map(c => s"t.$c = v.$c").mkString(" AND ")}),
+       |fused AS (
+       |  SELECT * FROM (
+       |    SELECT *, CAST(row_number() OVER (${part}ORDER BY rrf DESC, doc_id)
+       |      AS INT) AS rank
+       |    FROM f) WHERE rank <= 20)""".stripMargin
   }
 
-  /** Docs holding both `dup` and `vector`, by summed tf: every ingest path
-    * and plan of the conjunctive search returns these rows.
+  /** BM25 oracle over `documents` for `terms`, top `k` ([[bm25Ctes]]). */
+  private def bm25OracleSql(terms: Seq[String], k: Int): String =
+    s"""WITH $bm25Corpus,
+       |${bm25Ctes("", terms, k)}
+       |SELECT doc_id, round(su / 1000000.0, 4) AS score FROM top
+       |ORDER BY doc_id""".stripMargin
+
+  /** `tok` (doc_id, tk): each document's lowercased token list. */
+  private lazy val tokLists: String =
+    s"""tok AS (
+       |  SELECT doc_id, ${Oracles.tokens("lower(text)")} AS tk FROM documents)""".stripMargin
+
+  /** [[tokLists]] and `terms` (doc_id, pos, term): every token with its
+    * 1-based position, the index's position lists.
     */
-  private lazy val dupVectorSearchOracle: String =
-    s"""WITH toks AS (
+  private lazy val termPositions: String =
+    s"""$tokLists,
+       |px AS (
+       |  SELECT doc_id, tk, unnest(range(1, length(tk) + 1)) AS pos FROM tok),
+       |terms AS (
+       |  SELECT doc_id, CAST(pos AS INT) AS pos, tk[CAST(pos AS INT)] AS term
+       |  FROM px)""".stripMargin
+
+  /** `toks` (doc_id, term): the tokens of the `documents` rows `docs`
+    * keeps; `tf` (doc_id, term, tf): their counts for the terms `terms`
+    * keeps. Both filters are SQL WHERE clauses or empty.
+    */
+  private def termTfCtes(docs: String, terms: String): String =
+    s"""toks AS (
        |  SELECT doc_id, unnest(${Oracles.tokens("lower(text)")}) AS term
-       |  FROM documents),
-       |tf AS (
-       |  SELECT doc_id, term, count(*) AS tf FROM toks
-       |  WHERE term IN ('dup', 'vector') GROUP BY 1, 2),
+       |  FROM documents $docs),
+       |tf AS (SELECT doc_id, term, count(*) AS tf FROM toks $terms GROUP BY 1, 2)""".stripMargin
+
+  /** Docs holding both `dup` and `vector` among the documents `docs`
+    * keeps, by summed tf: every ingest path and plan of the conjunctive
+    * search returns these rows (a snapshot read: only its generations).
+    */
+  private def dupVectorSearchOracle(docs: String): String =
+    s"""WITH ${termTfCtes(docs, "WHERE term IN ('dup', 'vector')")},
        |hit AS (
        |  SELECT doc_id, count(DISTINCT term) AS m, sum(tf) AS s
        |  FROM tf GROUP BY 1)
        |SELECT doc_id, CAST(s AS BIGINT) AS tf_sum FROM hit
        |WHERE m = 2 ORDER BY doc_id""".stripMargin
+
+  /** Docs matching any of dup/vector/merge, with matched-term count and
+    * tf mass, kept by `having` (the OR, or minimum-should-match).
+    */
+  private def anyTermOracle(having: String): String =
+    s"""WITH ${termTfCtes("", "WHERE term IN ('dup', 'vector', 'merge')")}
+       |SELECT doc_id, CAST(count(*) AS INT) AS n_matched,
+       |  CAST(sum(tf) AS BIGINT) AS tf_sum
+       |FROM tf GROUP BY doc_id $having ORDER BY doc_id""".stripMargin
+
+  /** Top-3 TF-IDF terms per document (df and nDocs over the full
+    * corpus), for the documents `where` keeps.
+    */
+  private def tfidfOracle(where: String): String =
+    s"""WITH ${termTfCtes("", "")},
+       |dfreq AS (
+       |  SELECT term, count(*) AS df FROM tf GROUP BY 1),
+       |scored AS (
+       |  SELECT tf.doc_id, tf.term, tf.tf, dfreq.df,
+       |    round(tf.tf * ln(CAST((SELECT count(*) FROM documents) AS DOUBLE) / dfreq.df), 4) AS tfidf
+       |  FROM tf JOIN dfreq ON tf.term = dfreq.term
+       |  $where),
+       |r AS (
+       |  SELECT *, row_number() OVER (
+       |    PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rank
+       |  FROM scored)
+       |SELECT doc_id, rank, term, tf, df, tfidf
+       |FROM r WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin
 }

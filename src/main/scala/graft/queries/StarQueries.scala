@@ -252,9 +252,7 @@ object StarQueries {
     },
       // warehouse state after every batch was delivered twice through the
       // ledger sink == the aggregate computed once from parquet
-      """SELECT event_type, count(*) AS n, round(sum(value), 2) AS total
-        |FROM events GROUP BY event_type
-        |ORDER BY event_type""".stripMargin),
+      LayoutQueries.typeTotalsOracle("", "")),
 
     // S1 incremental scan: bookmark = floor(max(event_id)/2) committed to a
     // real BookmarkStore, then a second "run" reads strictly beyond it with

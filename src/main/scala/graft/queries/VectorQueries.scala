@@ -30,15 +30,9 @@ object VectorQueries {
       Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8), 5)
         .orderBy(col("query_id"), col("rank"))
     },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |q AS (SELECT * FROM e WHERE vec_id < 8)
-         |SELECT * FROM (
-         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    round(${Oracles.cosine("q.v", "c.v", 64)}, 6) AS cosine,
-         |    row_number() OVER (PARTITION BY q.vec_id
-         |      ORDER BY round(${Oracles.cosine("q.v", "c.v", 64)}, 6) DESC, c.vec_id) AS rank
-         |  FROM e c JOIN q ON q.vec_id != c.vec_id)
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+      s"""WITH ${Oracles.vectors},
+         |${Oracles.exactTopK("top", "e", 5)}
+         |SELECT * FROM top ORDER BY query_id, rank""".stripMargin),
 
     // Int8-quantized retrieval: whole-corpus scan on int8 codes (one
     // integer dot product per pair + four per-vector scalars), top-20
@@ -92,7 +86,7 @@ object VectorQueries {
          |        c.vec_id) AS srank
          |    FROM st c JOIN st q ON q.vec_id < 8 AND q.vec_id != c.vec_id)
          |  WHERE srank <= 20),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
+         |${Oracles.vectors}
          |SELECT * FROM (
          |  SELECT sl.query_id, sl.neighbor_id,
          |    round(${Oracles.cosine("qe.v", "ce.v", 64)}, 6) AS cosine,
@@ -120,9 +114,7 @@ object VectorQueries {
           k = 5, shortlist = 200, m = 8, codes = 256)
         .orderBy(col("query_id"), col("rank"))
     },
-      s"""WITH ${pqCtes(m = 8, codes = 256, shortlist = 200)}
-         |SELECT query_id, rank, neighbor_id, cosine
-         |FROM rer WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+      pqOracle("")),
 
     // The PERSISTED-index production shape of PQ ANN (the sim_ivf_indexed
     // discipline for codebooks): run 0 trains codebooks on the bootstrap
@@ -148,10 +140,7 @@ object VectorQueries {
     },
       // trains on the bootstrap slice, encodes the whole corpus — the
       // frozen-codebook purity invariant sim_pq_indexed pins
-      s"""WITH ${pqCtes(m = 8, codes = 256, shortlist = 200,
-             trainWhere = "WHERE vec_id % 50 != 0")}
-         |SELECT query_id, rank, neighbor_id, cosine
-         |FROM rer WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+      pqOracle("WHERE vec_id % 50 != 0")),
 
     // Sample-bounded PQ training (the BPE bound-the-corpus rule applied
     // to Lloyd): codebooks fit on a deterministic ~half hash-sample of
@@ -172,11 +161,8 @@ object VectorQueries {
     },
       // the training corpus is the hash-sampled half; encoding and scoring
       // cover the whole corpus — the sample derivation itself is replayed
-      s"""WITH ${pqCtes(m = 8, codes = 256, shortlist = 200,
-             trainWhere = "WHERE " + Oracles.sampleBucket(
-               "'pqs:' || CAST(vec_id AS VARCHAR)", 1000) + " < 500")}
-         |SELECT query_id, rank, neighbor_id, cosine
-         |FROM rer WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+      pqOracle("WHERE " + Oracles.sampleBucket(
+        "'pqs:' || CAST(vec_id AS VARCHAR)", 1000) + " < 500")),
 
     // ANN top-5 via 4x8-bit random-hyperplane LSH, exact re-rank of
     // candidates only.
@@ -189,24 +175,7 @@ object VectorQueries {
         tables = 8, bits = 8)
         .orderBy(col("query_id"), col("rank"))
     },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |bk AS (SELECT vec_id, v, ${Oracles.hyperplaneBits("v", 64, 64)} AS bits FROM e),
-         |keyed AS (
-         |  SELECT vec_id, v, t.tbl AS tbl, ${Oracles.bucketFromBits("bits", "t.tbl", 8)} AS bucket
-         |  FROM bk CROSS JOIN (SELECT unnest(range(0, 8)) AS tbl) t),
-         |cand AS (
-         |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    q.v AS qv, c.v AS cv
-         |  FROM keyed c JOIN keyed q
-         |    ON c.tbl = q.tbl AND c.bucket = q.bucket
-         |    AND q.vec_id < 8 AND q.vec_id != c.vec_id)
-         |SELECT * FROM (
-         |  SELECT query_id, neighbor_id,
-         |    round(${Oracles.cosine("qv", "cv", 64)}, 6) AS cosine,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY round(${Oracles.cosine("qv", "cv", 64)}, 6) DESC, neighbor_id) AS rank
-         |  FROM cand)
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+      hyperplaneOracle(tables = 8, masks = Seq(0))),
 
     // Multi-probe ANN: 1-bit-flip probes buy recall on the QUERY side only
     // (9 probes/table here) — half the tables of sim_ann_topk with corpus
@@ -219,28 +188,7 @@ object VectorQueries {
     },
       // same hyperplane family, 4 tables; query buckets additionally probe
       // every 1-bit flip (xor with 0 and each power of two)
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |bk AS (SELECT vec_id, v, ${Oracles.hyperplaneBits("v", 32, 64)} AS bits FROM e),
-         |keyed AS (
-         |  SELECT vec_id, v, t.tbl AS tbl, ${Oracles.bucketFromBits("bits", "t.tbl", 8)} AS bucket
-         |  FROM bk CROSS JOIN (SELECT unnest(range(0, 4)) AS tbl) t),
-         |qprobe AS (
-         |  SELECT vec_id, v, tbl, xor(bucket, m.m) AS bucket
-         |  FROM keyed CROSS JOIN (SELECT unnest([0, 1, 2, 4, 8, 16, 32, 64, 128]) AS m) m
-         |  WHERE vec_id < 8),
-         |cand AS (
-         |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |    q.v AS qv, c.v AS cv
-         |  FROM keyed c JOIN qprobe q
-         |    ON c.tbl = q.tbl AND c.bucket = q.bucket
-         |    AND q.vec_id != c.vec_id)
-         |SELECT * FROM (
-         |  SELECT query_id, neighbor_id,
-         |    round(${Oracles.cosine("qv", "cv", 64)}, 6) AS cosine,
-         |    row_number() OVER (PARTITION BY query_id
-         |      ORDER BY round(${Oracles.cosine("qv", "cv", 64)}, 6) DESC, neighbor_id) AS rank
-         |  FROM cand)
-         |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+      hyperplaneOracle(tables = 4, masks = 0 +: (0 until 8).map(1 << _))),
 
     // JL sign random projection to 8 dims: the map-only codegen'd kernel
     // that shrinks every downstream candidate scan/shuffle 8x. Raw sums
@@ -251,7 +199,7 @@ object VectorQueries {
         (0 until 8).map(j => round(element_at(col("proj"), j + 1), 6).as(s"p$j")): _*)
         .orderBy(col("vec_id"))
     },
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH ${Oracles.vectors},
          |pr AS (SELECT vec_id, ${Oracles.projections("v", 8, 64)} AS pv FROM e)
          |SELECT vec_id, ${(0 until 8).map(j => s"round(pv[${j + 1}], 6) AS p$j").mkString(", ")}
          |FROM pr ORDER BY vec_id""".stripMargin),
@@ -269,7 +217,7 @@ object VectorQueries {
       // two-stage replay: projected-space candidate rank (crank <= 30 with
       // the engine's exact tie-break), then full-space exact re-rank —
       // identical doubles at both stages by the shared left-fold arithmetic
-      s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      s"""WITH ${Oracles.vectors},
          |pr AS (SELECT vec_id, ${Oracles.projections("v", 16, 64)} AS pv FROM e),
          |cand AS (
          |  SELECT query_id, neighbor_id FROM (
@@ -346,16 +294,47 @@ object VectorQueries {
          |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin)
   )
 
+  /** Replays the random-hyperplane ANN top-5 of the 8-query sample
+    * (Similarity.hyperplaneTopK): `tables` hash tables of 8 sign bits
+    * each; a query probes its own bucket xor every mask of `masks` (0
+    * alone is the plain probe, the 1-bit flips are multi-probe), and the
+    * candidates are exact-re-ranked.
+    */
+  private def hyperplaneOracle(tables: Int, masks: Seq[Int]): String =
+    s"""WITH ${Oracles.vectors},
+       |bk AS (
+       |  SELECT vec_id, v, ${Oracles.hyperplaneBits("v", s"${tables * 8}", 64)} AS bits
+       |  FROM e),
+       |keyed AS (
+       |  SELECT vec_id, v, t.tbl AS tbl, ${Oracles.bucketFromBits("bits", "t.tbl", "8")} AS bucket
+       |  FROM bk CROSS JOIN (SELECT unnest(range(0, $tables)) AS tbl) t),
+       |qprobe AS (
+       |  SELECT vec_id, v, tbl, xor(bucket, m.m) AS bucket
+       |  FROM keyed CROSS JOIN (SELECT unnest(${masks.mkString("[", ", ", "]")}) AS m) m
+       |  WHERE vec_id < 8),
+       |cand AS (
+       |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |    q.v AS qv, c.v AS cv
+       |  FROM keyed c JOIN qprobe q
+       |    ON c.tbl = q.tbl AND c.bucket = q.bucket
+       |    AND q.vec_id != c.vec_id)
+       |SELECT * FROM (
+       |  SELECT query_id, neighbor_id,
+       |    round(${Oracles.cosine("qv", "cv", 64)}, 6) AS cosine,
+       |    row_number() OVER (PARTITION BY query_id
+       |      ORDER BY round(${Oracles.cosine("qv", "cv", 64)}, 6) DESC, neighbor_id) AS rank
+       |  FROM cand)
+       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+
   /** PQ train+encode CTE chain. `pre` prefixes every generated CTE name
     * so a second, independently-trained chain can coexist in one WITH
     * list (the grow-arm replay trains its codebooks on the FULL corpus
     * at the era boundary, exactly as `reseedInto` does); `trainCte`
     * names the training-corpus CTE (`et` = the bootstrap slice for the
-    * frozen-at-bootstrap chain, `e` for a full-corpus retrain). Default
-    * arguments reproduce the historical unprefixed chain byte-for-byte.
+    * frozen-at-bootstrap chain, `e` for a full-corpus retrain).
     */
-  private[queries] def pqTrainEncodeCtes(m: Int, codes: Int, pre: String = "",
-                                trainCte: String = "et"): String = {
+  private[queries] def pqTrainEncodeCtes(m: Int, codes: Int, pre: String,
+                                         trainCte: String): String = {
     val subDim = 64 / m
     (0 until m).map { s =>
       val lo = s * subDim + 1
@@ -402,7 +381,7 @@ object VectorQueries {
     * squared norms added in subspace order (Similarity.pqRnorm's fold).
     * `pre` selects which [[pqTrainEncodeCtes]] chain it reads.
     */
-  private[queries] def pqEncjCte(m: Int, pre: String = ""): String = {
+  private[queries] def pqEncjCte(m: Int, pre: String): String = {
     val subDim = 64 / m
     val reconJoin = (0 until m).map(s =>
       s"JOIN ${pre}a2_$s a$s ON a$s.vec_id = e.vec_id " +
@@ -426,25 +405,24 @@ object VectorQueries {
     }.mkString("(", " + ", ")")
   }
 
-  /** PQ replay CTEs ending in `rer` (ranked exact-re-ranked rows).
-    * Training (seeds + one Lloyd mean update + final codebooks cf_s)
-    * runs over `et` = e filtered by `trainWhere` (empty = the whole
-    * corpus — sim_pq_topk); ENCODING (a2_s) always covers the whole
-    * corpus — a vector's codes are a pure function of the vector under
-    * frozen codebooks, which is exactly the PqIndex bootstrap/append
-    * invariant sim_pq_indexed pins. Scoring replays ADC: the approximate
-    * score is sum over subspaces of dot(q_slice_s, codeword_s), divided
-    * by qnorm * sqrt(sum of codeword squared norms) — partial sums added
-    * in subspace order, left-associated, matching Similarity.pqAdcTopK's
-    * reduce fold bit for bit.
+  /** The PQ replay (m=8, 256 codes, shortlist 200, top-5) of the
+    * 8-query sample. Training (seeds + one Lloyd mean update + final
+    * codebooks cf_s) runs over `et` = e filtered by `trainWhere` (empty =
+    * the whole corpus — sim_pq_topk); ENCODING (a2_s) always covers the
+    * whole corpus — a vector's codes are a pure function of the vector
+    * under frozen codebooks, which is exactly the PqIndex
+    * bootstrap/append invariant sim_pq_indexed pins. Scoring replays ADC:
+    * the approximate score is sum over subspaces of dot(q_slice_s,
+    * codeword_s), divided by qnorm * sqrt(sum of codeword squared norms)
+    * — partial sums added in subspace order, left-associated, matching
+    * Similarity.pqAdcTopK's reduce fold bit for bit.
     */
-  private def pqCtes(m: Int, codes: Int, shortlist: Int,
-                     trainWhere: String = ""): String = {
-    val adcSum = pqAdcSum(m, "q.v")
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+  private def pqOracle(trainWhere: String): String = {
+    val adcSum = pqAdcSum(8, "q.v")
+    s"""WITH ${Oracles.vectors},
        |et AS (SELECT vec_id, v FROM e $trainWhere),
-       |${pqTrainEncodeCtes(m, codes)},
-       |${pqEncjCte(m)},
+       |${pqTrainEncodeCtes(8, 256, "", "et")},
+       |${pqEncjCte(8, "")},
        |q AS (SELECT vec_id, v, ${Oracles.l2("v", 64)} AS qnorm FROM e WHERE vec_id < 8),
        |sc AS (
        |  SELECT q.vec_id AS query_id, r.vec_id AS neighbor_id,
@@ -456,7 +434,7 @@ object VectorQueries {
        |    SELECT query_id, neighbor_id,
        |      row_number() OVER (PARTITION BY query_id
        |        ORDER BY qcos DESC, neighbor_id) AS srank
-       |    FROM sc) WHERE srank <= $shortlist),
+       |    FROM sc) WHERE srank <= 200),
        |rer AS (
        |  SELECT query_id, neighbor_id, cosine,
        |    row_number() OVER (PARTITION BY query_id
@@ -465,7 +443,9 @@ object VectorQueries {
        |    SELECT sl.query_id, sl.neighbor_id,
        |      round(${Oracles.cosine("qe.v", "ne.v", 64)}, 6) AS cosine
        |    FROM sl JOIN e ne ON ne.vec_id = sl.neighbor_id
-       |    JOIN e qe ON qe.vec_id = sl.query_id))""".stripMargin
+       |    JOIN e qe ON qe.vec_id = sl.query_id))
+       |SELECT query_id, rank, neighbor_id, cosine
+       |FROM rer WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
   }
 
   /** Shared CTE chain replaying the deterministic 2-round k-means of
@@ -474,7 +454,7 @@ object VectorQueries {
     * kmeans_assign and hard_negatives oracles.
     */
   private[queries] def kmeansCtes: String =
-    s"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+    s"""${Oracles.vectors},
        |seeds AS (
        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS c, v
        |  FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 8)),

@@ -40,6 +40,43 @@ class ContractSpec extends AnyFunSuite {
     }
   }
 
+  /** The CTE names of `sql`'s top-level WITH list, in order. String
+    * literals and line comments are blanked and every parenthesised
+    * region (CTE bodies, nested subqueries and their own WITH lists)
+    * collapses to `()`, so only depth-0 names count.
+    */
+  private def topLevelCtes(sql: String): Seq[String] = {
+    val text = sql.replaceAll("'[^']*'", "''").replaceAll("--[^\n]*", " ")
+    val flat = new StringBuilder
+    var depth = 0
+    text.foreach {
+      case '(' => if (depth == 0) flat += '('; depth += 1
+      case ')' => depth -= 1; if (depth == 0) flat += ')'
+      case c => if (depth == 0) flat += c
+    }
+    "(?is)^\\s*WITH\\s+(?:RECURSIVE\\s+)?(.*?)\\bSELECT\\b".r
+      .findFirstMatchIn(flat.toString).toSeq.flatMap { m =>
+        "(?i)(\\w+)\\s*(?:\\(\\))?\\s*AS\\s*\\(\\)".r
+          .findAllMatchIn(m.group(1)).map(_.group(1).toLowerCase)
+      }
+  }
+
+  test("no oracle's top-level WITH list declares the same CTE name twice") {
+    // DuckDB rejects a repeated name ("Duplicate CTE name") only when the
+    // oracle runs; composed prefixed builders make the repeat easy
+    assert(topLevelCtes("WITH a AS (WITH a AS (SELECT 1) SELECT * FROM a), " +
+      "r(x) AS (SELECT ')(' AS s) SELECT * FROM a, r") == Seq("a", "r"))
+    assert(topLevelCtes("WITH a AS (SELECT 1),\n-- b AS (\nA AS (SELECT 2) SELECT 1") ==
+      Seq("a", "a"))
+    assert(topLevelCtes("SELECT x FROM (WITH a AS (SELECT 1) SELECT * FROM a)").isEmpty)
+    SparkEntry.oracleSql.foreach { case (name, sql) =>
+      val ctes = topLevelCtes(sql)
+      val repeated = ctes.diff(ctes.distinct).distinct
+      assert(repeated.isEmpty, s"$name repeats CTE names: ${repeated.mkString(", ")}")
+    }
+    assert(SparkEntry.oracleSql.values.count(topLevelCtes(_).size >= 2) > 100)
+  }
+
   test("query names are stable identifiers (lowercase snake_case)") {
     SparkEntry.queries.keys.foreach { name =>
       assert(name.matches("[a-z][a-z0-9_]*"), name)

@@ -8,10 +8,17 @@ Reads <verifyOutDir>/oracle_sql.json, runs each SQL in DuckDB with the
 parquet tables of <sfDir> registered as views, and compares against the
 parquet the Spark Verify main dumped at <verifyOutDir>/<name>/.
 
+The checked names are the declared ones -- the oracle_sql.json keys,
+narrowed to the NAMEs given -- never the dump directories found. A
+declared name without a dump fails, and so does a name the run's
+VERIFY_SELF.json lists under `failures`, even when a stale dump
+directory from an earlier run is still there.
+
 --same-as compares two Verify runs instead (say, of a change and of its
-parent): each query's Spark dump must be bit-identical between the two
-directories under the same comparison, and the two oracle_sql.json maps
-must be equal key for key. No sf directory is read.
+parent): each query the other run declares must have a dump in both
+directories, bit-identical under the same comparison, and be listed as
+failed by neither run; the two oracle_sql.json maps must be equal key for
+key. No sf directory is read.
 
 Comparison mirrors the driver's pandas-hash gate, which is BIT-exact:
 both sides go through fetchdf / read_parquet into pandas, columns are
@@ -82,15 +89,34 @@ def read_dump(con, d):
     return con.execute(f"SELECT * FROM '{d}/*.parquet'").fetchdf()
 
 
+def declared(out_dir, only):
+    """A Verify run's oracle map and its declared names, narrowed to `only`."""
+    with open(os.path.join(out_dir, "oracle_sql.json")) as f:
+        oracle = json.load(f)
+    return oracle, sorted(n for n in oracle if not only or n in only)
+
+
+def failures(out_dir):
+    """The names a Verify run's VERIFY_SELF.json lists as failed, with messages."""
+    p = os.path.join(out_dir, "VERIFY_SELF.json")
+    if not os.path.exists(p):
+        return {}
+    with open(p) as f:
+        return json.load(f).get("failures", {})
+
+
 def same_as(a_dir, b_dir, only=()):
     """Compare two Verify output dirs; returns (report lines, n_differing)."""
     con = duckdb.connect()
     lines, n_bad = [], 0
-    names = {n for d in (a_dir, b_dir) for n in os.listdir(d)
-             if os.path.isdir(os.path.join(d, n))}
+    oa, names = declared(a_dir, only)
+    ob, _ = declared(b_dir, only)
+    failed = {d: failures(d) for d in (a_dir, b_dir)}
     n_same = 0
-    for name in sorted(names):
-        if only and name not in only:
+    for name in names:
+        bad_run = next((d for d in (a_dir, b_dir) if name in failed[d]), None)
+        if bad_run is not None:
+            lines.append(f"DIFF {name}: Verify failed in {bad_run}"); n_bad += 1
             continue
         a = read_dump(con, os.path.join(a_dir, name))
         b = read_dump(con, os.path.join(b_dir, name))
@@ -103,8 +129,6 @@ def same_as(a_dir, b_dir, only=()):
             lines.append(f"SAME {name}: {len(a)} rows"); n_same += 1
         else:
             lines.append(f"DIFF {name}: {diff}"); n_bad += 1
-    oa = json.load(open(os.path.join(a_dir, "oracle_sql.json")))
-    ob = json.load(open(os.path.join(b_dir, "oracle_sql.json")))
     if only:
         oa = {k: v for k, v in oa.items() if k in only}
         ob = {k: v for k, v in ob.items() if k in only}
@@ -138,20 +162,17 @@ def main():
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    oracle, names = declared(out_dir, only)
+    failed = failures(out_dir)
     n_pass = n_fail = 0
-    for name in sorted(os.listdir(out_dir)):
-        d = os.path.join(out_dir, name)
-        if not os.path.isdir(d) or (only and name not in only):
-            continue
-        got = read_dump(con, d)
+    for name in sorted(only - set(oracle)):
+        print(f"FAIL {name}: not declared in oracle_sql.json"); n_fail += 1
+    for name in names:
+        if name in failed:
+            print(f"FAIL {name}: Verify failed: {failed[name]}"); n_fail += 1; continue
+        got = read_dump(con, os.path.join(out_dir, name))
         if got is None:
             print(f"FAIL {name}: no spark output parquet"); n_fail += 1; continue
-        if name not in oracle:
-            status = "rows-only " + ("PASS" if len(got) > 0 else "FAIL(empty)")
-            print(f"{status} {name}: {len(got)} rows (no oracle)")
-            n_pass += len(got) > 0; n_fail += len(got) == 0
-            continue
         try:
             exp = con.execute(oracle[name]).fetchdf()
         except Exception as e:
